@@ -433,7 +433,7 @@ def _rt_tokens_compacted(spark, sf_dir):
     from parquet_python_spark.engine import (
         compact_blocks,
         decode_blocks_files,
-        encode_table_files,
+        encode_table_files_native,
         list_input_files,
     )
 
@@ -441,7 +441,7 @@ def _rt_tokens_compacted(spark, sf_dir):
     inp = f"{work}/inp"
     _derived_tokens(spark, sf_dir).repartition(6).write.parquet(inp)
     bdir = f"{work}/blocks"
-    encode_table_files(spark, inp, snapshot_id="drv").write.parquet(bdir)
+    encode_table_files_native(spark, inp, bdir, snapshot_id="drv").count()
     n_before = len(list_input_files(bdir))
     compact_blocks(spark, bdir, target_bytes=1 << 30)
     assert len(list_input_files(bdir)) < n_before

@@ -7,11 +7,11 @@ Build the artifact, then submit:
     spark-submit --master <cluster-or-local[N]> \
         --py-files dist/parquet_python_spark.zip \
         jobs/encode_job.py --input /path/tokens --output /path/encoded \
-        [--mode narrow|grouped] [--target-tokens N] [--verify]
+        [--with-ref-baseline] [--verify]
 
 The job is resumable: re-submitting after a failure skips every partition
-already recorded in <output>/metrics for the same input snapshot
-(engine.encode_job anti-joins the completed part_ids).
+already recorded in <output>/metrics whose input file is unchanged
+(engine.encode_job skips the completed part_ids).
 
 `--verify` runs a distributed round-trip check after encoding: decode the
 blocks table and compare row count, token count, and an order-independent
@@ -33,17 +33,6 @@ def main() -> None:
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--input", required=True, help="tokens table parquet dir")
     p.add_argument("--output", required=True, help="output dir (blocks/ + metrics/)")
-    p.add_argument(
-        "--mode",
-        default="files",
-        choices=["files", "narrow", "narrow-ipc", "grouped"],
-        help="files: python-native scan + worker-native block writes "
-        "(fastest); narrow: zero-shuffle mapInArrow over the JVM scan; "
-        "narrow-ipc: python-native scan, JVM block writer; "
-        "grouped: salted-shuffle source-pure chunks",
-    )
-    p.add_argument("--target-tokens", type=int, default=None,
-                   help="tokens per chunk for grouped-mode salt planning")
     p.add_argument("--with-ref-baseline", action="store_true",
                    help="also record the reference RLE/dict wire size per chunk")
     p.add_argument("--verify", action="store_true",
@@ -58,7 +47,6 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from parquet_python_spark.engine import (
-        TARGET_TOKENS_PER_PART,
         current_blocks,
         decode_blocks,
         encode_job,
@@ -66,12 +54,7 @@ def main() -> None:
 
     t0 = time.perf_counter()
     stats = encode_job(
-        spark,
-        args.input,
-        args.output,
-        target_tokens=args.target_tokens or TARGET_TOKENS_PER_PART,
-        with_ref_baseline=args.with_ref_baseline,
-        mode=args.mode,
+        spark, args.input, args.output, with_ref_baseline=args.with_ref_baseline
     )
     stats["wall_s"] = round(time.perf_counter() - t0, 3)
 
@@ -88,9 +71,7 @@ def main() -> None:
         # filter to the input's current state: blocks/ accumulates history
         # (incremental encodes, removed files), which would otherwise fail
         # the round-trip comparison spuriously
-        blocks = current_blocks(
-            spark, args.input, args.output + "/blocks", args.mode
-        )
+        blocks = current_blocks(spark, args.input, args.output + "/blocks")
         dec = content_agg(decode_blocks(blocks))
         stats["verify_ok"] = (
             src["rows"] == dec["rows"]

@@ -2,24 +2,21 @@
 reference's single-threaded row-group walk (SURVEY.md §3).
 
 Mapping (SURVEY.md §1.3):
-    row group      -> DataFrame partition   (repartition on (source, salt))
+    row group      -> one encode task (an input file or row-group range)
     column chunk   -> one row of the blocks table
-    page decode    -> vectorized numpy kernels inside applyInPandas
+    page decode    -> vectorized numpy kernels inside mapInArrow
     row pivot      -> never (Arrow-columnar end to end)
 
 Scale design notes (targets a 1000-executor cluster; local[32] here):
-  * Default "files" mode is ZERO-shuffle end to end: one task per input
-    file / row-group range, workers read parquet via pyarrow and write their
-    own block files — token payloads never cross the JVM<->python Arrow IPC
+  * encode_job is ZERO-shuffle end to end: one task per input file /
+    row-group range, workers read parquet via pyarrow and write their own
+    block files — token payloads never cross the JVM<->python Arrow IPC
     boundary or an exchange.  decode_blocks_files mirrors it on the way back.
-  * "grouped" mode (salted shuffle) exists for source-pure chunk layouts:
-    per-source token totals are tiny aggregates; the salt count per source
-    is sized so each (source, salt) bucket holds ~TARGET_TOKENS_PER_PART
-    tokens — the dominant source (60% of rows in the generator) fans out
-    across the cluster instead of hot-spotting one task.  In files mode the
-    same skew is bounded by row-group-range task splitting instead.
+  * Skew is bounded by task planning, not salting: a file larger than
+    max_task_bytes splits into row-group ranges (_plan_file_tasks), so a
+    dominant source simply spans more tasks.
   * Checkpoint/resume: completed part_ids live in the metrics table; resume
-    anti-joins them (broadcast — the completed list is one row per partition,
+    skips them driver-side (the completed list is one row per partition,
     i.e. metadata-sized even at 10^12 sequences with ~1e5 partitions).
   * Lineage: every block row carries (snapshot_id, part_id, codec, bytes,
     crc32 checksum); the metrics table is the per-partition rollup.
@@ -32,10 +29,8 @@ import json
 import os
 import time
 import zlib
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -47,8 +42,6 @@ from .codecs import (
     params_from_json,
     params_to_json,
 )
-
-TARGET_TOKENS_PER_PART = 4_000_000  # ~16 MB of raw int32 tokens per task
 
 BLOCKS_SCHEMA = T.StructType(
     [
@@ -132,47 +125,6 @@ METRICS_SCHEMA = T.StructType(
 )
 
 
-# --------------------------------------------------------------- salting
-
-def plan_salts(df: DataFrame, target_tokens: int = TARGET_TOKENS_PER_PART) -> dict:
-    """Per-source salt counts from per-source token totals.
-
-    One tiny aggregate (rows == #distinct sources); the result is broadcast
-    into the salt expression.  This is the explicit skew-handling mandated
-    by the north rule: an oversized source gets ceil(total/target) salts.
-    """
-    totals = df.groupBy("source").agg(F.sum("n_tok").alias("total")).collect()
-    return {
-        r["source"]: max(1, -(-int(r["total"]) // target_tokens)) for r in totals
-    }
-
-
-def with_partition_id(df: DataFrame, salt_map: dict) -> DataFrame:
-    """Add deterministic (salt, part_id) from a broadcastable salt map.
-
-    Salt = crc32(doc_id) % n_salts(source) — content-addressed, so the
-    assignment is stable across reruns/parallelism (checkpoint-safe).
-
-    The salt counts join in via a BROADCAST map join, not a chained
-    per-source F.when expression: a when-chain is an expression tree that
-    grows with source cardinality (at 10^4 sources, a plan bomb); the
-    broadcast hash join is O(1) plan size at any cardinality.
-    """
-    spark = df.sparkSession
-    salt_df = spark.createDataFrame(
-        [(str(s), int(n)) for s, n in salt_map.items()],
-        "source string, n_salts int",
-    )
-    df = df.join(F.broadcast(salt_df), "source", "left")
-    df = df.withColumn(
-        "salt",
-        F.pmod(F.crc32(F.col("doc_id")), F.coalesce("n_salts", F.lit(1))).cast("int"),
-    ).drop("n_salts")
-    return df.withColumn(
-        "part_id", F.concat_ws("#", F.col("source"), F.col("salt").cast("string"))
-    )
-
-
 # --------------------------------------------------------------- encode
 
 _COLUMNS = ("tokens", "n_tok", "doc_id", "source")
@@ -182,20 +134,17 @@ def _encode_partition_table(
     tbl: "pa.Table",
     snapshot_id: str,
     with_ref_baseline: bool,
-    part_id: str | None = None,
-    presorted: bool = False,
+    part_id: str,
 ) -> "pa.Table":
-    """Encode one (source, salt) bucket into one blocks row per column.
+    """Encode one source chunk into one blocks row per column.
 
     Arrow-native: the tokens list column's values buffer IS the flattened
     token vector (zero-copy via arrow_io.list_column_flat); strings encode
     from their (offsets, data) buffers.  No per-row Python anywhere.
 
-    The doc_id sort canonicalizes row order so the encoded payload is
-    deterministic regardless of upstream arrival order (shuffle in grouped
-    mode) — required for idempotent resume.  Callers that already sorted
-    pass presorted=True (the narrow path sorts once per split, not per
-    source chunk).
+    ``tbl`` arrives sorted by doc_id (_encode_split_by_source sorts once per
+    split), so the encoded payload is deterministic regardless of upstream
+    arrival order — required for idempotent resume.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -203,10 +152,6 @@ def _encode_partition_table(
     from .codecs.arrow_io import encode_str_column, list_column_flat
 
     t0 = time.perf_counter()
-    if not presorted:
-        order = pc.sort_indices(tbl.column("doc_id"))
-        tbl = tbl.take(order)
-    part_id = part_id or tbl.column("part_id")[0].as_py()
     source = tbl.column("source")[0].as_py()
     n_rows = tbl.num_rows
 
@@ -263,47 +208,21 @@ def _encode_partition_table(
     return pa.Table.from_pylist(rows, schema=_BLOCKS_ARROW_SCHEMA)
 
 
-def encode_table(
-    df: DataFrame,
-    snapshot_id: str = "",
-    salt_map: dict | None = None,
-    target_tokens: int = TARGET_TOKENS_PER_PART,
-    with_ref_baseline: bool = False,
-) -> DataFrame:
-    """tokens DataFrame -> blocks DataFrame (one row per (partition, column)).
-
-    Single shuffle: repartition on (source, salt); then applyInPandas runs
-    the numpy encode kernels per bucket.
-    """
-    salt_map = salt_map or plan_salts(df, target_tokens)
-    with_pid = with_partition_id(df, salt_map)
-
-    def enc(tbl):
-        return _encode_partition_table(tbl, snapshot_id, with_ref_baseline)
-
-    # groupBy().applyInArrow hash-partitions on part_id — that IS the one
-    # shuffle of the pipeline (an explicit repartition first would double it).
-    return with_pid.groupBy("part_id").applyInArrow(enc, schema=BLOCKS_SCHEMA)
-
-
 def encode_table_narrow(
     df: DataFrame,
     snapshot_id: str = "",
     with_ref_baseline: bool = False,
-    skip_parts: frozenset | None = None,
     part_prefix: str = "",
 ) -> DataFrame:
-    """Zero-shuffle encode: mapInArrow over the scan, one chunk per
-    (source, input split).
+    """DataFrame-in encode: mapInArrow over the scan, one chunk per
+    (source, input split), zero shuffle.
 
-    The scale path.  Encoding is source-local work, so shuffling every
-    token byte to co-locate sources (encode_table) buys nothing that
-    splitting each scan batch by source doesn't — and at 100 TB the saved
-    shuffle IS the job.  Skew needs no salting here: input splits are
+    For inputs that are not a flat local parquet dir or an iceberg-lite
+    table (encode_job's file-direct path): streaming micro-batches and
+    derived DataFrames.  Skew needs no salting: input splits are
     size-bounded by spark.sql.files.maxPartitionBytes, so a dominant
     source simply spans more splits.  part_id = f"{source}#{split_id}" is
-    deterministic for a fixed input layout + reader config, which keeps
-    checkpoint/resume stable across reruns.
+    deterministic for a fixed input layout + reader config.
     """
 
     def enc(batches):
@@ -314,12 +233,9 @@ def encode_table_narrow(
         batch_list = list(batches)
         if not batch_list:
             return
-        # ONE canonical sort per split, then zero-copy source slices —
-        # replaces the old per-source filter passes (5 full scans) and
-        # per-chunk doc_id sorts.
         tbl = pa.Table.from_batches(batch_list)
         yield from _encode_split_by_source(
-            tbl, split_id, snapshot_id, with_ref_baseline, skip_parts, part_prefix
+            tbl, split_id, snapshot_id, with_ref_baseline, None, part_prefix
         )
 
     return df.mapInArrow(enc, schema=BLOCKS_SCHEMA)
@@ -328,7 +244,7 @@ def encode_table_narrow(
 def file_key(path: str) -> str:
     """Content-addressed file id (64-bit hash of name:size:mtime_ns) —
     stable across snapshots and listing order; keys incremental encode +
-    resume in files mode.  mtime_ns is folded in so a file rewritten IN
+    resume.  mtime_ns is folded in so a file rewritten IN
     PLACE with unchanged name+size gets a new key and re-encodes (Iceberg
     data files are immutable, but the bare-parquet-dir fallback makes no
     such promise).  64 bits, not crc32: at ~10^5 files a 32-bit key has
@@ -374,55 +290,6 @@ def _read_task_table(path: str, rg_start: int, rg_end: int):
     )
 
 
-def encode_table_files(
-    spark: SparkSession,
-    input_path: str,
-    snapshot_id: str = "",
-    with_ref_baseline: bool = False,
-    skip_parts: frozenset | None = None,
-    part_prefix: str = "",
-    files: list[str] | None = None,
-    max_task_bytes: int = 256 * 1024 * 1024,
-) -> DataFrame:
-    """Fastest scale path: one task per input file, workers read parquet via
-    pyarrow directly.
-
-    Rationale: the encode job is UDF-dominated — with mapInArrow over a JVM
-    scan every token is decoded by the JVM parquet reader, serialized to
-    Arrow IPC, and deserialized in the python worker before the kernels even
-    start.  Reading the file in the worker (the standard python-native-scan
-    pattern for UDF-heavy Spark pipelines) eliminates both extra passes; at
-    32 workers on one box that traffic is the scaling bottleneck.  Spark
-    still owns scheduling/retries; files on shared storage make this
-    cluster-valid.  part_id = f"{source}#{file_key(path)}" (sha1 of
-    name:size:mtime_ns) — content-addressed per FILE, so resume keys
-    survive re-snapshots: when an Iceberg-lite table gains files and is
-    re-snapshotted, only the new files encode (incremental processing),
-    and an in-place rewrite changes the key and re-encodes.
-    """
-    files = files if files is not None else resolve_input_files(input_path)
-    tasks = _plan_file_tasks(files, max_task_bytes)
-    # JVM-native range dispatch, one partition per task; tasks resolve
-    # from the closure list (same rationale + sizing note as
-    # _decode_files_df: no exchange, no python-RDD hop)
-    tasks_local = list(tasks)
-    paths_df = spark.range(
-        len(tasks_local), numPartitions=max(len(tasks_local), 1)
-    )
-
-    def enc(batches):
-        for batch in batches:
-            for i in batch.column("id").to_pylist():
-                tkey, path, rg_start, rg_end = tasks_local[int(i)]
-                tbl = _read_task_table(path, rg_start, rg_end)
-                yield from _encode_split_by_source(
-                    tbl, tkey, snapshot_id, with_ref_baseline,
-                    skip_parts, part_prefix,
-                )
-
-    return paths_df.mapInArrow(enc, schema=BLOCKS_SCHEMA)
-
-
 def encode_table_files_native(
     spark: SparkSession,
     input_path: str,
@@ -434,7 +301,16 @@ def encode_table_files_native(
     files: list[str] | None = None,
     max_task_bytes: int = 256 * 1024 * 1024,
 ) -> DataFrame:
-    """files-mode encode with WORKER-NATIVE block writes.
+    """File-direct encode with WORKER-NATIVE block writes (encode_job's path).
+
+    One task per input file (or row-group range, _plan_file_tasks); workers
+    read parquet via pyarrow directly.  The encode is UDF-dominated: over a
+    JVM scan every token would be decoded by the JVM parquet reader,
+    serialized to Arrow IPC and deserialized in the python worker before
+    the kernels start.  Spark still owns scheduling/retries; files on
+    shared storage make this cluster-valid.  part_id =
+    f"{source}#{task_key}" is content-addressed per FILE (file_key), so
+    resume keys survive re-snapshots and an in-place rewrite re-encodes.
 
     Each task writes its own parquet block file (pyarrow) under blocks_dir —
     the encoded payloads never cross the python->JVM Arrow IPC boundary nor
@@ -600,7 +476,8 @@ def _encode_split_by_source(
     tbl, split_id, snapshot_id, with_ref_baseline, skip_parts, part_prefix
 ):
     """Sort one split's table by (source, doc_id) and encode each source run
-    as one partition chunk (shared by the narrow and files paths)."""
+    as one partition chunk (shared by encode_table_narrow and the files
+    path)."""
     import numpy as np
     import pyarrow.compute as pc
 
@@ -621,8 +498,7 @@ def _encode_split_by_source(
         if skip_parts and pid in skip_parts:
             continue  # checkpoint/resume: this chunk is already encoded
         out = _encode_partition_table(
-            tbl.slice(s, e - s), snapshot_id, with_ref_baseline,
-            part_id=pid, presorted=True,
+            tbl.slice(s, e - s), snapshot_id, with_ref_baseline, pid
         )
         yield from out.to_batches()
 
@@ -690,6 +566,43 @@ def _decode_part_table(tbl) -> "pa.Table":
     )
 
 
+def local_parquet_scan_files(df: DataFrame) -> list[str] | None:
+    """Sorted local paths of the files behind ``df`` when it is a bare,
+    unfiltered scan of a plain parquet relation — else None.
+
+    The one gate of both file-direct readers (decode_blocks' fast path and
+    generic_codec's round-trip): the optimized plan must be the
+    LogicalRelation itself (any caller filter/projection/join/cache falls
+    back), its file format exactly ParquetFileFormat (a subclass such as
+    Delta's applies deletion vectors a raw pyarrow read would skip), and
+    every file local.  ``file:`` URIs are percent-decoded, so a directory
+    whose name holds a space or ``%`` still resolves."""
+    from urllib.parse import unquote, urlparse
+
+    try:
+        plan = df._jdf.queryExecution().optimizedPlan()
+        if plan.getClass().getSimpleName() != "LogicalRelation":
+            return None
+        fmt = plan.relation().fileFormat().getClass().getSimpleName()
+        if fmt != "ParquetFileFormat":
+            return None
+        files = list(df.inputFiles())
+    except Exception:  # noqa: BLE001 - internal API drift: use the safe path
+        return None
+    if not files:
+        return None
+    paths: list[str] = []
+    for f in files:
+        u = urlparse(f)
+        if u.scheme == "file":
+            paths.append(unquote(u.path))
+        elif u.scheme:
+            return None  # non-local filesystem: keep the generic path
+        else:
+            paths.append(f)
+    return sorted(paths)
+
+
 def _engine_block_files_of_scan(blocks: DataFrame) -> list[str] | None:
     """Local file list when ``blocks`` is a bare, unfiltered scan of
     engine-written block files — else None.
@@ -700,37 +613,25 @@ def _engine_block_files_of_scan(blocks: DataFrame) -> list[str] | None:
     content-addressed name, atomic rename — re-runs overwrite, never
     duplicate).  cmp-* files are EXCLUDED even though compact_blocks
     preserves run contiguity: compaction concatenates whatever .parquet
-    files a directory holds, and a directory that ever saw the JVM-append
-    encode modes (part-* files) can carry crash-window duplicate part
-    rows — folded into cmp files, the same part then appears as multiple
-    runs, which the grouped path collapses (by_col last-wins) but a
-    per-run decode would double (round-6 review finding, reproduced).
-    Anything else — a filtered/joined/cached blocks DataFrame, part-*
-    files, non-local storage, a mid-compaction directory (sidecar/tmp
-    present) — also falls back to the general shuffle path, which assumes
-    nothing about layout."""
-    try:
-        plan = blocks._jdf.queryExecution().optimizedPlan()
-        if plan.getClass().getSimpleName() != "LogicalRelation":
-            return None
-        files = list(blocks.inputFiles())
-    except Exception:  # noqa: BLE001 - internal API drift: use the safe path
-        return None
-    if not files:
+    files a directory holds, and JVM-written part-* files (for example
+    the streaming sink's appends of encode_table_narrow output, which a
+    replayed micro-batch can repeat) can carry duplicate part rows —
+    folded into cmp files, the same part then appears as multiple runs,
+    which the grouped path collapses (by_col last-wins) but a per-run
+    decode would double.  Anything else — a filtered/joined/cached blocks
+    DataFrame, part-* files, non-local storage, a mid-compaction directory
+    (sidecar/tmp present) — also falls back to the general shuffle path,
+    which assumes nothing about layout."""
+    files = local_parquet_scan_files(blocks)
+    if files is None:
         return None
     if set(blocks.columns) != {f.name for f in BLOCKS_SCHEMA.fields}:
         return None
-    out: list[str] = []
     dirs: set[str] = set()
     for f in files:
-        if f.startswith("file:"):
-            f = "/" + f.split(":", 1)[1].lstrip("/")
-        elif "://" in f:
-            return None  # non-local filesystem: keep the generic path
         name = os.path.basename(f)
         if not (name.endswith(".parquet") and name.startswith("blk-")):
             return None
-        out.append(f)
         dirs.add(os.path.dirname(f))
     for d in dirs:
         try:
@@ -741,7 +642,7 @@ def _engine_block_files_of_scan(blocks: DataFrame) -> list[str] | None:
             n.endswith(".srcs.json") or n.endswith(".inprogress") for n in names
         ):
             return None  # interrupted compaction: the generic path is safe
-    return sorted(out)
+    return files
 
 
 def _decode_files_df(spark: SparkSession, files: list[str]) -> DataFrame:
@@ -916,25 +817,25 @@ def decode_blocks_files_pruned(
     return _pruned_residual(decoded, column, lo, hi)
 
 
+def _file_key_of_part(part_id):
+    """file_key of a part_id column: f"{source}#{file_key}[.rgN]" -> file_key."""
+    return F.substring_index(F.substring_index(part_id, "#", -1), ".", 1)
+
+
 def current_blocks(
-    spark: SparkSession, input_path: str, blocks_path: str, mode: str = "files"
+    spark: SparkSession, input_path: str, blocks_path: str
 ) -> DataFrame:
-    """Blocks rows belonging to the input's CURRENT state.
+    """Blocks rows belonging to the input's CURRENT file set.
 
     blocks/ accumulates history (incremental encodes, old snapshots of
     since-removed files); consumers that must mirror the input exactly —
     e.g. the encode job's --verify round-trip — filter through this.
     """
     _repair_compaction(blocks_path, conservative=True)
-    blocks = spark.read.parquet(blocks_path)
-    if mode in ("files", "narrow-ipc"):
-        keys = [file_key(f) for f in resolve_input_files(input_path)]
-        return blocks.filter(
-            F.substring_index(
-                F.substring_index(F.col("part_id"), "#", -1), ".", 1
-            ).isin(keys)
-        )
-    return blocks.filter(F.col("snapshot_id") == snapshot_of(input_path))
+    keys = [file_key(f) for f in resolve_input_files(input_path)]
+    return spark.read.parquet(blocks_path).filter(
+        _file_key_of_part(F.col("part_id")).isin(keys)
+    )
 
 
 def decode_blocks_files(spark: SparkSession, blocks_path: str) -> DataFrame:
@@ -1156,149 +1057,74 @@ def encode_job(
     spark: SparkSession,
     input_path: str,
     output_path: str,
-    target_tokens: int = TARGET_TOKENS_PER_PART,
     with_ref_baseline: bool = False,
-    mode: str = "files",
 ) -> dict:
     """Resumable encode job: skip partitions already in the metrics table.
 
-    mode="files" (default): zero-shuffle, python-native scan — one task per
-    input file, workers read parquet via pyarrow (no JVM decode / Arrow IPC
-    double pass) — the fastest scale path.
-    mode="narrow": zero-shuffle mapInArrow over the JVM scan, one chunk per
-    (source, input split).
-    mode="grouped": salted-shuffle encode (one chunk per (source, salt)) for
-    source-pure chunk layouts sized independently of the input split plan.
+    Zero-shuffle, python-native scan (encode_table_files_native): one task
+    per input file or row-group range, workers read parquet via pyarrow and
+    write their own blk-*.parquet — no JVM decode / Arrow IPC double pass.
 
     Layout under output_path:
-        blocks/   parquet, appended per run
+        blocks/   parquet, one blk-<task key>.parquet per task (+ cmp-* after
+                  compact_blocks), committed as an iceberg-lite snapshot
         metrics/  parquet, rebuilt per run (completed part_ids live here)
     """
+    from .sources.iceberg_lite import write_snapshot
+
     blocks_path = os.path.join(output_path, "blocks")
     metrics_path = os.path.join(output_path, "metrics")
     snapshot_id = snapshot_of(input_path)
-
-    cur_keys: set[str] | None = None
-    if mode in ("files", "narrow-ipc"):
-        cur_files = resolve_input_files(input_path)
-        cur_keys = {file_key(f) for f in cur_files}
-    else:
-        df = spark.read.parquet(input_path)
+    cur_files = resolve_input_files(input_path)
+    cur_keys = {file_key(f) for f in cur_files}
+    # finish any compaction bin whose rename landed before its source
+    # deletes: the snapshot and the rollup below then see each block row
+    # exactly once (every block file here is an atomic, content-addressed
+    # blk-*/cmp-* write, so this is the only duplicate-row window)
+    _repair_compaction(blocks_path, conservative=True)
 
     done: set[str] = set()
     if os.path.isdir(metrics_path):
-        prev = spark.read.parquet(metrics_path)
-        if mode in ("files", "narrow-ipc"):
-            # files-mode part_ids are content-addressed per file, so any
-            # previously encoded partition stays done across snapshots
-            # (incremental encode: only new files run)
-            prev_f = prev
-        else:
-            prev_f = prev.filter(F.col("snapshot_id") == snapshot_id)
-        done = {
-            r["part_id"]
-            for r in prev_f.select("part_id").distinct().collect()
-        }
-        if mode == "files":
-            # a metrics row is only trustworthy if its backing rows still
-            # exist: either the task's own blk file, or — after
-            # compact_blocks folded it away — a cmp file holding its task
-            # key.  A crash between stale-generation cleanup and re-encode
-            # would otherwise let a later run skip the partition and commit
-            # a snapshot with those rows missing; conversely, re-encoding a
-            # compacted partition would DOUBLE its rows.
-            cmp_keys = _task_keys_in_compacted(blocks_path)
-            done = {
-                p
-                for p in done
-                if os.path.exists(
-                    os.path.join(
-                        blocks_path, f"blk-{p.split('#')[-1]}.parquet"
-                    )
-                )
-                or p.split("#")[-1] in cmp_keys
-            }
+        # part_ids are content-addressed per file, so any previously encoded
+        # partition stays done across snapshots (incremental encode: only
+        # new files run).  A metrics row is only trustworthy if its backing
+        # rows still exist: either the task's own blk file, or — after
+        # compact_blocks folded it away — a cmp file holding its task key.
+        # A crash between stale-generation cleanup and re-encode would
+        # otherwise let a later run skip the partition and commit a
+        # snapshot with those rows missing; conversely, re-encoding a
+        # compacted partition would DOUBLE its rows.
+        cmp_keys = _task_keys_in_compacted(blocks_path)
+        prev = spark.read.parquet(metrics_path).select("part_id").distinct()
+        for r in prev.collect():
+            tkey = r["part_id"].split("#")[-1]
+            if tkey in cmp_keys or os.path.exists(
+                os.path.join(blocks_path, f"blk-{tkey}.parquet")
+            ):
+                done.add(r["part_id"])
 
-    if mode == "grouped":
-        salt_map = plan_salts(df, target_tokens)
-        with_pid = with_partition_id(df, salt_map)
-        if done:
-            # anti-join against the completed set (broadcast; metadata-sized)
-            done_df = spark.createDataFrame([(p,) for p in done], ["part_id"])
-            with_pid = with_pid.join(F.broadcast(done_df), "part_id", "left_anti")
-
-        def enc(tbl):
-            return _encode_partition_table(tbl, snapshot_id, with_ref_baseline)
-
-        blocks = with_pid.groupBy("part_id").applyInArrow(enc, schema=BLOCKS_SCHEMA)
-        blocks.write.mode("append").parquet(blocks_path)
-    elif mode == "narrow":
-        blocks = encode_table_narrow(
-            df, snapshot_id, with_ref_baseline,
-            skip_parts=frozenset(done) if done else None,
-        )
-        blocks.write.mode("append").parquet(blocks_path)
-    elif mode == "narrow-ipc":
-        # files-mode encode that returns payloads through the JVM writer
-        # (kept for DataFrame-API composition; the default files mode below
-        # writes blocks worker-natively, which measures faster and steadier)
-        blocks = encode_table_files(
-            spark, input_path, snapshot_id, with_ref_baseline,
-            skip_parts=frozenset(done) if done else None,
-            files=cur_files,
-        )
-        blocks.write.mode("append").parquet(blocks_path)
-    else:
-        meta = encode_table_files_native(
-            spark, input_path, blocks_path, snapshot_id, with_ref_baseline,
-            skip_parts=frozenset(done) if done else None,
-            files=cur_files,
-        )
-        meta.count()  # execute: workers write blk-*.parquet themselves
-        from .sources.iceberg_lite import write_snapshot
-
-        write_snapshot(blocks_path)  # commit the blocks dir as a snapshot
-
-    # Idempotent rollup: metrics := aggregate of everything in blocks/.
-    # Parquet column pruning keeps the payload column unread here, so this
-    # scans metadata-sized data even at 10^12-sequence scale.
-    # The per-chunk groupBy-max heals the crash window between a committed
-    # blocks write and the metrics write: a rerun re-appends identical
-    # blocks (encode is deterministic over sorted content), and max over
-    # byte-identical duplicate rows collapses them exactly as the former
-    # dropDuplicates pass did — without carrying every column through a
-    # dedicated deduplication exchange first.
-    all_blocks = spark.read.parquet(blocks_path).select(
-        "part_id", "source", "snapshot_id", "column", "codec",
-        "n_values", "n_rows", "raw_bytes", "enc_bytes", "checksum", "encode_ms",
+    meta = encode_table_files_native(
+        spark, input_path, blocks_path, snapshot_id, with_ref_baseline,
+        skip_parts=frozenset(done) if done else None,
+        files=cur_files,
     )
-    per_chunk = all_blocks.groupBy(
-        "part_id", "source", "snapshot_id", "column"
-    ).agg(
-        F.max("n_values").alias("n_values"),
-        F.max("n_rows").alias("n_rows"),
-        F.max("raw_bytes").alias("raw_bytes"),
-        F.max("enc_bytes").alias("enc_bytes"),
-        F.max("codec").alias("codec"),
-        F.max("checksum").alias("checksum"),
-        F.max("encode_ms").alias("encode_ms"),
-    )
+    meta.count()  # execute: workers write blk-*.parquet themselves
+    write_snapshot(blocks_path)  # commit the blocks dir as a snapshot
+
+    # Idempotent rollup: metrics := aggregate of everything in blocks/, one
+    # row per part.  Parquet column pruning keeps the payload column unread
+    # here, so this scans metadata-sized data even at 10^12-sequence scale.
+    tokens = F.col("column") == "tokens"
     metrics = (
-        per_chunk
+        spark.read.parquet(blocks_path)
         .groupBy("part_id", "source", "snapshot_id")
         .agg(
             F.max("n_rows").alias("n_rows"),
-            F.max(F.when(F.col("column") == "tokens", F.col("n_values"))).alias(
-                "n_tokens"
-            ),
+            F.max(F.when(tokens, F.col("n_values"))).alias("n_tokens"),
             F.sum("raw_bytes").alias("raw_bytes"),
             F.sum("enc_bytes").alias("enc_bytes"),
-            F.max(F.when(F.col("column") == "tokens", F.col("codec"))).alias(
-                "tokens_codec"
-            ),
-            F.max(F.when(F.col("column") == "tokens", F.col("checksum"))).alias(
-                "checksum"
-            ),
+            F.max(F.when(tokens, F.col("codec"))).alias("tokens_codec"),
+            F.max(F.when(tokens, F.col("checksum"))).alias("checksum"),
             F.max("encode_ms").alias("encode_ms"),
         )
     )
@@ -1320,25 +1146,21 @@ def encode_job(
 
             shutil.rmtree(metrics_path + "_old", ignore_errors=True)
 
-        m = metrics  # cached; byte-equal to what metrics_path now holds
-        if mode in ("files", "narrow-ipc"):
-            # report over the CURRENT snapshot's file set: partitions
-            # encoded under earlier snapshots count if their file is still
-            # in the table; partitions of removed files do not
-            m = m.filter(
-                F.substring_index(
-                    F.substring_index(F.col("part_id"), "#", -1), ".", 1
-                ).isin(list(cur_keys))
+        # report over the CURRENT snapshot's file set: partitions encoded
+        # under earlier snapshots count if their file is still in the
+        # table; partitions of removed files do not
+        current = _file_key_of_part(F.col("part_id")).isin(list(cur_keys))
+        agg = (
+            metrics.filter(current)
+            .agg(
+                F.count("*").alias("parts"),
+                F.sum("n_rows").alias("rows"),
+                F.sum("n_tokens").alias("tokens"),
+                F.sum("raw_bytes").alias("raw"),
+                F.sum("enc_bytes").alias("enc"),
             )
-        else:
-            m = m.filter(F.col("snapshot_id") == snapshot_id)
-        agg = m.agg(
-            F.count("*").alias("parts"),
-            F.sum("n_rows").alias("rows"),
-            F.sum("n_tokens").alias("tokens"),
-            F.sum("raw_bytes").alias("raw"),
-            F.sum("enc_bytes").alias("enc"),
-        ).collect()[0]
+            .collect()[0]
+        )
     finally:
         # a failed write/swap/report must not pin the cache for the
         # session's lifetime
@@ -1350,11 +1172,7 @@ def encode_job(
         "tokens": int(agg["tokens"] or 0),
         "raw_bytes": int(agg["raw"] or 0),
         "enc_bytes": int(agg["enc"] or 0),
-        "resumed_skipped": (
-            len({p for p in done if p.split("#")[-1].split(".")[0] in cur_keys})
-            if mode in ("files", "narrow-ipc")
-            else len(done)
+        "resumed_skipped": len(
+            {p for p in done if p.split("#")[-1].split(".")[0] in cur_keys}
         ),
-        "mode": mode,
-        "salt_map": json.dumps(salt_map) if mode == "grouped" else None,
     }

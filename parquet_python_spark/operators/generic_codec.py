@@ -47,6 +47,7 @@ from ..codecs.arrow_io import (
     list_column_flat,
     string_array_from_lens_blob,
 )
+from ..engine import local_parquet_scan_files
 
 BLOCKS_SCHEMA = T.StructType(
     [
@@ -2103,8 +2104,10 @@ def _fast_scan_type_ok(t: pa.DataType) -> bool:
     """Arrow types whose values are identical whether they arrive through
     Spark's scan->Arrow conversion or a direct pyarrow.parquet read.
     Timestamps are excluded (Spark applies session-timezone semantics in
-    its Arrow conversion); decimals, halffloat, uint64 and nested
-    struct/map types are excluded conservatively."""
+    its Arrow conversion), and so are dates (Spark rebases legacy-calendar
+    files julian->proleptic on read: 1500-01-01 written in LEGACY mode
+    reads as 1500-01-10 through pyarrow); decimals, halffloat, uint64 and
+    nested struct/map types are excluded conservatively."""
 
     def scalar_ok(s: pa.DataType) -> bool:
         return (
@@ -2116,7 +2119,6 @@ def _fast_scan_type_ok(t: pa.DataType) -> bool:
             or pa.types.is_binary(s)
             or pa.types.is_large_binary(s)
             or pa.types.is_fixed_size_binary(s)
-            or s == pa.date32()
         )
 
     if scalar_ok(t):
@@ -2131,31 +2133,15 @@ def _bare_local_parquet_units(df: DataFrame, needed: list[str]):
     parquet files whose ``needed`` columns all exist in every file with
     value-stable Arrow types (_fast_scan_type_ok) — else None.
 
-    Mirrors engine._engine_block_files_of_scan: the optimized plan must be
-    the LogicalRelation itself (any caller filter/projection/join/cache
-    falls back), every file must be local, and the footers are validated
-    on the driver — a non-parquet relation fails the footer read and falls
-    back too.  units are (file_idx, row_group_idx, n_rows, n_bytes) for
+    The scan gate is engine.local_parquet_scan_files (shared with the
+    engine's decode fast path); the footers are then validated on the
+    driver.  units are (file_idx, row_group_idx, n_rows, n_bytes) for
     every non-empty row group."""
     import pyarrow.parquet as pq
 
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan()
-        if plan.getClass().getSimpleName() != "LogicalRelation":
-            return None
-        files = list(df.inputFiles())
-    except Exception:  # noqa: BLE001 - internal API drift: use the safe path
+    paths = local_parquet_scan_files(df)
+    if paths is None or len(paths) > _FAST_SCAN_MAX_FILES:
         return None
-    if not files or len(files) > _FAST_SCAN_MAX_FILES:
-        return None
-    paths: list[str] = []
-    for f in files:
-        if f.startswith("file:"):
-            f = "/" + f.split(":", 1)[1].lstrip("/")
-        elif "://" in f:
-            return None  # non-local filesystem: keep the generic path
-        paths.append(f)
-    paths.sort()
     units: list[tuple[int, int, int, int]] = []
     first_types: dict[str, pa.DataType] = {}
     try:

@@ -923,7 +923,7 @@ def stratified_sample(
     row is kept or dropped at any parallelism, any partitioning, any rerun
     — re-sampling a grown corpus keeps the previously kept rows, so
     downstream caches stay valid).  The per-stratum rates join in via a
-    BROADCAST map (same pattern as engine.with_partition_id): plan size is
+    BROADCAST map join rather than a per-stratum F.when chain: plan size is
     O(1) in stratum cardinality, and the filter is a narrow map — no
     shuffle anywhere.  All JVM built-ins (md5/instr/substring), so the
     DuckDB oracle reproduces it bit-for-bit."""

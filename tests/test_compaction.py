@@ -12,7 +12,7 @@ from parquet_python_spark.engine import (
     compact_blocks,
     decode_blocks_files,
     decode_blocks_files_pruned,
-    encode_table_files,
+    encode_table_files_native,
     list_input_files,
 )
 from parquet_python_spark.tokengen import generate_tokens_df
@@ -34,7 +34,7 @@ def blocks_dir(spark, tmp_path):
     inp = str(tmp_path / "inp")
     df.repartition(8).write.parquet(inp)
     bdir = str(tmp_path / "blocks")
-    encode_table_files(spark, inp, snapshot_id="t").write.parquet(bdir)
+    encode_table_files_native(spark, inp, bdir, snapshot_id="t").count()
     return inp, bdir
 
 
@@ -54,7 +54,7 @@ def test_compact_preserves_zone_map_pruning(spark, tmp_path):
     inp = str(tmp_path / "inp")
     df.repartitionByRange(6, "n_tok").write.parquet(inp)
     bdir = str(tmp_path / "blocks")
-    encode_table_files(spark, inp, snapshot_id="t").write.parquet(bdir)
+    encode_table_files_native(spark, inp, bdir, snapshot_id="t").count()
     want = _rows(df.filter(F.col("n_tok").between(16, 32)))
     compact_blocks(spark, bdir, target_bytes=1 << 30)
     got = _rows(decode_blocks_files_pruned(spark, bdir, "n_tok", 16, 32))
@@ -121,7 +121,7 @@ def test_stale_generation_rewritten_inside_compacted(spark, tmp_path):
     inp = str(tmp_path / "inp")
     df.repartition(4).write.parquet(inp)
     out = str(tmp_path / "enc")
-    encode_job(spark, inp, out, mode="files")
+    encode_job(spark, inp, out)
     bdir = os.path.join(out, "blocks")
     compact_blocks(spark, bdir, target_bytes=1 << 30)
 
@@ -133,13 +133,13 @@ def test_stale_generation_rewritten_inside_compacted(spark, tmp_path):
     _time.sleep(0.01)
     os.utime(vpath)
 
-    encode_job(spark, inp, out, mode="files")
+    encode_job(spark, inp, out)
     # the rewritten file's old generation is history (new file key); the
     # CURRENT view must hold exactly one generation of every row, including
     # rows that now live inside cmp files
     from parquet_python_spark.engine import decode_blocks
 
-    cur = current_blocks(spark, inp, bdir, mode="files")
+    cur = current_blocks(spark, inp, bdir)
     assert _rows(decode_blocks(cur)) == _rows(df)
     n_rows_cur = cur.filter(F.col("column") == "doc_id").agg(
         F.sum("n_rows")
@@ -156,11 +156,50 @@ def test_resume_after_compaction_skips_everything(spark, tmp_path):
     inp = str(tmp_path / "inp")
     df.repartition(4).write.parquet(inp)
     out = str(tmp_path / "enc")
-    m1 = encode_job(spark, inp, out, mode="files")
+    m1 = encode_job(spark, inp, out)
     bdir = os.path.join(out, "blocks")
     compact_blocks(spark, bdir, target_bytes=1 << 30)
-    m2 = encode_job(spark, inp, out, mode="files")
+    m2 = encode_job(spark, inp, out)
     assert m2["resumed_skipped"] == m1["partitions"]
+    assert _rows(decode_blocks_files(spark, bdir)) == _rows(df)
+
+
+def test_encode_job_rerun_repairs_interrupted_bin(spark, tmp_path):
+    """A crash between a compaction bin's rename and its source deletes
+    leaves the cmp file, its sidecar and its blk sources all visible.  A
+    re-run of encode_job must repair that state before it commits and rolls
+    up: nothing re-encodes, and every part is counted exactly once."""
+    import shutil
+
+    from parquet_python_spark.engine import encode_job
+
+    df = generate_tokens_df(spark, N_ROWS, SEED)
+    inp = str(tmp_path / "inp")
+    df.repartition(4).write.parquet(inp)
+    out = str(tmp_path / "enc")
+    m1 = encode_job(spark, inp, out)
+    bdir = os.path.join(out, "blocks")
+    saved = str(tmp_path / "saved")
+    os.makedirs(saved)
+    srcs = [os.path.basename(f) for f in list_input_files(bdir)]
+    for name in srcs:
+        shutil.copy(os.path.join(bdir, name), saved)
+    compact_blocks(spark, bdir, target_bytes=1 << 30)
+    (cmp_file,) = list_input_files(bdir)
+    # the crash window: sources back in place, sidecar still naming them
+    for name in srcs:
+        shutil.copy(os.path.join(saved, name), bdir)
+    with open(cmp_file + ".srcs.json", "w") as f:
+        json.dump(srcs, f)
+
+    m2 = encode_job(spark, inp, out)
+    assert m2["rows"] == N_ROWS
+    assert m2["resumed_skipped"] == m2["partitions"] == m1["partitions"]
+    assert m2["raw_bytes"] == m1["raw_bytes"]
+    assert m2["enc_bytes"] == m1["enc_bytes"]
+    metrics = spark.read.parquet(os.path.join(out, "metrics"))
+    assert metrics.count() == metrics.select("part_id").distinct().count()
+    assert list_input_files(bdir) == [cmp_file]
     assert _rows(decode_blocks_files(spark, bdir)) == _rows(df)
 
 

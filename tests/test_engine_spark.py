@@ -1,5 +1,6 @@
 """End-to-end Spark engine tests: encode -> blocks -> decode bit-identity,
-skew salting, checkpoint/resume, size gate (north-rule correctness gates)."""
+skew task splitting, checkpoint/resume, size gate (north-rule correctness
+gates)."""
 
 import os
 
@@ -10,9 +11,8 @@ from pyspark.sql import functions as F
 from parquet_python_spark.engine import (
     decode_blocks,
     encode_job,
-    encode_table,
-    plan_salts,
-    with_partition_id,
+    encode_table_narrow,
+    encode_table_files_native,
 )
 from parquet_python_spark.tokengen import generate_tokens_df
 
@@ -25,6 +25,11 @@ def tokens_df(spark):
     df = generate_tokens_df(spark, N_ROWS, SEED).cache()
     df.count()
     return df
+
+
+def _one_chunk_per_source(tokens_df, **kw):
+    """blocks DataFrame with exactly one chunk per source (one input split)."""
+    return encode_table_narrow(tokens_df.coalesce(1), snapshot_id="t", **kw)
 
 
 def _as_sorted_rows(df):
@@ -50,7 +55,7 @@ def test_tokengen_invariants(tokens_df):
 def test_encode_decode_bit_identity(spark, tokens_df):
     """North-rule gate: engine encode -> decode reproduces every token array
     bit-identically."""
-    blocks = encode_table(tokens_df, snapshot_id="t", with_ref_baseline=True)
+    blocks = _one_chunk_per_source(tokens_df, with_ref_baseline=True)
     blocks = blocks.cache()
     decoded = decode_blocks(blocks)
     assert _as_sorted_rows(decoded) == _as_sorted_rows(tokens_df)
@@ -60,7 +65,7 @@ def test_size_gate_vs_reference_dict(spark, tokens_df):
     """Compressed tokens size <= the reference's RLE/dict output on every
     partition (ref_dict_bytes is the reference wire format size computed on
     the identical values)."""
-    blocks = encode_table(tokens_df, snapshot_id="t", with_ref_baseline=True)
+    blocks = _one_chunk_per_source(tokens_df, with_ref_baseline=True)
     rows = blocks.filter(F.col("column") == "tokens").select(
         "part_id", "codec", "enc_bytes", "ref_dict_bytes"
     ).collect()
@@ -73,9 +78,7 @@ def test_size_gate_vs_reference_dict(spark, tokens_df):
 
 def test_selector_matches_profiles(spark, tokens_df):
     """Codec auto-selection per source matches FIXTURES.md expectations."""
-    blocks = encode_table(
-        tokens_df, snapshot_id="t", target_tokens=10_000_000
-    )
+    blocks = _one_chunk_per_source(tokens_df)
     picks = {
         r["source"]: r["codec"]
         for r in blocks.filter(F.col("column") == "tokens")
@@ -89,62 +92,47 @@ def test_selector_matches_profiles(spark, tokens_df):
     assert picks["texty"] in ("fsst", "dict")
 
 
-def test_salting_splits_skewed_source(spark, tokens_df):
-    salt_map = plan_salts(tokens_df, target_tokens=20_000)
-    # 'random' holds ~60% of rows -> must fan out over multiple salts
-    assert salt_map["random"] > 1
-    pid = with_partition_id(tokens_df, salt_map)
-    per_part = (
-        pid.filter(F.col("source") == "random")
-        .groupBy("part_id")
-        .agg(F.sum("n_tok").alias("t"))
-        .collect()
-    )
-    assert len(per_part) == salt_map["random"]
-    # no empty buckets and rough balance (within 4x of each other)
-    totals = [r["t"] for r in per_part]
-    assert min(totals) > 0 and max(totals) / min(totals) < 4
-
-
 def test_encode_narrow_bit_identity(spark, tokens_df):
-    """Zero-shuffle narrow mode must round-trip bit-identically too."""
-    from parquet_python_spark.engine import encode_table_narrow
-
+    """The DataFrame-in encoder, one chunk per (source, split), must
+    round-trip bit-identically too."""
     blocks = encode_table_narrow(tokens_df, snapshot_id="t")
     decoded = decode_blocks(blocks)
     assert _as_sorted_rows(decoded) == _as_sorted_rows(tokens_df)
 
 
 def test_encode_files_and_decode_files_bit_identity(spark, tokens_df, tmp_path):
-    """files mode (python-native scan) + shuffle-free decode round-trip."""
-    from parquet_python_spark.engine import decode_blocks_files, encode_table_files
+    """File-direct encode (python-native scan) + shuffle-free decode
+    round-trip."""
+    from parquet_python_spark.engine import decode_blocks_files
 
     inp = str(tmp_path / "ftokens")
     tokens_df.repartition(5).write.parquet(inp)
     blocks_dir = str(tmp_path / "fblocks")
-    encode_table_files(spark, inp, snapshot_id="t").write.parquet(blocks_dir)
+    encode_table_files_native(spark, inp, blocks_dir, snapshot_id="t").count()
 
-    # general (shuffling) decode and the shuffle-free file decode agree
-    decoded_g = decode_blocks(spark.read.parquet(blocks_dir))
+    # general (shuffling) decode — a filtered scan is not a bare one — and
+    # the shuffle-free file decode agree
+    decoded_g = decode_blocks(
+        spark.read.parquet(blocks_dir).filter(F.col("n_rows") >= 0)
+    )
     decoded_f = decode_blocks_files(spark, blocks_dir)
     want = _as_sorted_rows(spark.read.parquet(inp))
     assert _as_sorted_rows(decoded_f) == want
     assert _as_sorted_rows(decoded_g) == want
 
 
-@pytest.mark.parametrize("mode", ["files", "narrow", "grouped"])
-def test_encode_job_resume(spark, tokens_df, tmp_path, mode):
+def test_encode_job_resume(spark, tokens_df, tmp_path):
     """Checkpoint/resume: a second run over the same snapshot encodes zero
     new partitions; blocks stay complete and decodable."""
     inp = str(tmp_path / "input")
     out = str(tmp_path / "encoded")
     tokens_df.write.parquet(inp)
 
-    m1 = encode_job(spark, inp, out, target_tokens=50_000, mode=mode)
+    m1 = encode_job(spark, inp, out)
     assert m1["resumed_skipped"] == 0
     assert m1["rows"] == N_ROWS
 
-    m2 = encode_job(spark, inp, out, target_tokens=50_000, mode=mode)
+    m2 = encode_job(spark, inp, out)
     assert m2["resumed_skipped"] == m1["partitions"]
     assert m2["rows"] == N_ROWS  # no duplicates from the rerun
 
@@ -169,7 +157,7 @@ def test_metrics_lineage_columns(spark, tokens_df, tmp_path):
 
 
 def test_decode_detects_corruption(spark, tokens_df):
-    blocks = encode_table(tokens_df, snapshot_id="t")
+    blocks = _one_chunk_per_source(tokens_df)
     tampered = blocks.withColumn(
         "payload",
         F.when(F.col("column") == "tokens", F.concat(F.col("payload"), F.lit(b"x")))
@@ -180,12 +168,7 @@ def test_decode_detects_corruption(spark, tokens_df):
 def test_files_mode_splits_large_files_by_row_group(spark, tmp_path):
     """Skew defense: a file bigger than max_task_bytes becomes several
     row-group-range tasks with content-addressed sub-keys."""
-    from parquet_python_spark.engine import (
-        _plan_file_tasks,
-        decode_blocks,
-        encode_table_files,
-        list_input_files,
-    )
+    from parquet_python_spark.engine import _plan_file_tasks, list_input_files
     from parquet_python_spark.tokengen import generate_tokens_df
 
     inp = str(tmp_path / "big")
@@ -198,10 +181,13 @@ def test_files_mode_splits_large_files_by_row_group(spark, tmp_path):
     assert len(tasks) > 1
     assert all(t[0].count(".rg") == 1 for t in tasks)
 
-    blocks = encode_table_files(
-        spark, inp, snapshot_id="t", max_task_bytes=96 * 1024
-    )
-    decoded = decode_blocks(blocks)
+    blocks_dir = str(tmp_path / "blocks")
+    encode_table_files_native(
+        spark, inp, blocks_dir, snapshot_id="t", max_task_bytes=96 * 1024
+    ).count()
+    # every row-group-range task wrote its own block file
+    assert len(list_input_files(blocks_dir)) == len(tasks)
+    decoded = decode_blocks(spark.read.parquet(blocks_dir))
     src = spark.read.parquet(inp)
     assert _as_sorted_rows(decoded) == _as_sorted_rows(src)
 
@@ -211,7 +197,7 @@ def test_files_mode_splits_large_files_by_row_group(spark, tmp_path):
 
 def test_block_stats_present(spark, tokens_df):
     """Every int-column block row carries min/max zone-map stats."""
-    blocks = encode_table(tokens_df, snapshot_id="t")
+    blocks = _one_chunk_per_source(tokens_df)
     rows = blocks.filter(F.col("column").isin("tokens", "n_tok")).select(
         "column", "stat_min", "stat_max"
     ).collect()
@@ -229,10 +215,8 @@ def clustered_blocks(spark, tokens_df, tmp_path_factory):
     base = tmp_path_factory.mktemp("pruned")
     inp = str(base / "inp")
     tokens_df.repartitionByRange(6, "n_tok").write.parquet(inp)
-    from parquet_python_spark.engine import encode_table_files
-
     blocks_dir = str(base / "blocks")
-    encode_table_files(spark, inp, snapshot_id="t").write.parquet(blocks_dir)
+    encode_table_files_native(spark, inp, blocks_dir, snapshot_id="t").count()
     return inp, blocks_dir
 
 
@@ -319,3 +303,24 @@ def test_decode_blocks_fast_path_zero_payload_shuffle(spark, tokens_df, tmp_path
     assert "FlatMapGroupsInArrow" in generic_plan  # fallback engaged
 
     assert _as_sorted_rows(fast) == _as_sorted_rows(generic)
+
+
+def test_decode_blocks_fast_path_percent_decodes_paths(spark, tokens_df, tmp_path):
+    """Spark lists files as percent-encoded file: URIs; a blocks dir whose
+    path holds a space must still resolve to local files and take the
+    shuffle-free path."""
+    from parquet_python_spark.engine import local_parquet_scan_files
+
+    inp = str(tmp_path / "tok")
+    tokens_df.repartition(3).write.parquet(inp)
+    blocks_dir = str(tmp_path / "blocks dir%20x")
+    encode_table_files_native(spark, inp, blocks_dir, snapshot_id="t").count()
+    blocks = spark.read.parquet(blocks_dir)
+    files = local_parquet_scan_files(blocks)
+    assert files and all(os.path.isfile(f) for f in files)
+    assert all(os.path.dirname(f) == blocks_dir for f in files)
+
+    fast = decode_blocks(blocks)
+    plan = fast._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInArrow" not in plan
+    assert _as_sorted_rows(fast) == _as_sorted_rows(spark.read.parquet(inp))

@@ -237,6 +237,14 @@ def test_roundtrip_file_direct_fallbacks(spark):
         ).write.parquet(f"{d}/ts_table")
         ts_df = spark.read.parquet(f"{d}/ts_table")
         assert _bare_local_parquet_units(ts_df, ["l_orderkey", "ts"]) is None
+        # the shared scan gate refuses any relation whose file format is
+        # not exactly ParquetFileFormat, before a footer is ever opened
+        from parquet_python_spark.engine import local_parquet_scan_files
+
+        li.select("l_orderkey").write.orc(f"{d}/orc_table")
+        orc_df = spark.read.orc(f"{d}/orc_table")
+        assert local_parquet_scan_files(orc_df) is None
+        assert local_parquet_scan_files(ts_df) is not None
         # ...but a timestamp column NOT requested by the round-trip is fine
         units = _bare_local_parquet_units(ts_df, ["l_orderkey"])
         assert units is not None
@@ -259,14 +267,42 @@ def test_roundtrip_file_direct_row_group_split(spark, tmp_path):
     old = gc.TARGET_ROWS_PER_PART
     gc.TARGET_ROWS_PER_PART = 1000  # force splitting on the small fixture
     try:
+        _paths, units = gc._bare_local_parquet_units(back, ["k", "v"])
+        assert len(units) == 1  # one file, one row group
+        parallelism = spark.sparkContext.defaultParallelism
+        assert len(gc._file_direct_tasks(units, parallelism)) > 1
         rt = gc.roundtrip(back, "k", {"k": "int", "v": "int"})
-        n_tasks = rt._jdf.queryExecution().executedPlan().toString().count(
-            "Range"
-        )
-        assert n_tasks >= 1
         assert _sorted(rt) == _sorted(back.select("k", "v"))
     finally:
         gc.TARGET_ROWS_PER_PART = old
+
+
+def test_file_direct_refuses_legacy_dates(spark, tmp_path):
+    """Dates written in Spark's LEGACY (julian) calendar are rebased by
+    Spark's scan but not by a raw pyarrow read, so the file-direct path
+    must refuse date columns and leave them to the scan-fed path."""
+    import datetime
+
+    import pyarrow.parquet as pq
+
+    from parquet_python_spark.operators.generic_codec import (
+        _bare_local_parquet_units,
+    )
+
+    path = str(tmp_path / "legacy_dates")
+    key = "spark.sql.parquet.datetimeRebaseModeInWrite"
+    spark.conf.set(key, "LEGACY")
+    try:
+        df = spark.sql("SELECT 1L AS k, DATE '1500-01-01' AS d")
+        df.coalesce(1).write.parquet(path)
+    finally:
+        spark.conf.unset(key)
+    back = spark.read.parquet(path)
+    want = datetime.date(1500, 1, 1)
+    assert back.collect()[0]["d"] == want
+    assert pq.read_table(path).column("d")[0].as_py() != want  # no rebase
+    assert _bare_local_parquet_units(back, ["d"]) is None
+    assert _bare_local_parquet_units(back, ["k"]) is not None
 
 
 def test_encode_sort_skip_byte_identical(spark):

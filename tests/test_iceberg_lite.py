@@ -46,13 +46,13 @@ def test_snapshot_idempotent_and_chained(spark, table):
 def test_encode_job_uses_snapshot_id_and_pinned_files(spark, table, tmp_path):
     s1 = write_snapshot(table)
     out = str(tmp_path / "enc")
-    m = encode_job(spark, table, out, mode="files")
+    m = encode_job(spark, table, out)
     assert m["snapshot_id"] == s1
     rows_s1 = m["rows"]
 
     # rows appended but NOT snapshotted are invisible to the encode job
     generate_tokens_df(spark, 50, 8, partitions=1).write.mode("append").parquet(table)
-    m_again = encode_job(spark, table, out, mode="files")
+    m_again = encode_job(spark, table, out)
     assert m_again["snapshot_id"] == s1
     assert m_again["rows"] == rows_s1
     assert m_again["resumed_skipped"] == m["partitions"]  # full resume skip
@@ -60,7 +60,7 @@ def test_encode_job_uses_snapshot_id_and_pinned_files(spark, table, tmp_path):
     # snapshot the append -> new snapshot id, only new data is encoded:
     # every partition of the old files is skipped (content-addressed ids)
     s2 = write_snapshot(table)
-    m2 = encode_job(spark, table, out, mode="files")
+    m2 = encode_job(spark, table, out)
     assert m2["snapshot_id"] == s2
     assert m2["rows"] == rows_s1 + 50
     assert m2["resumed_skipped"] == m["partitions"]
@@ -85,12 +85,12 @@ def test_current_blocks_mirrors_evolving_input(spark, table, tmp_path):
 
     out = str(tmp_path / "enc")
     write_snapshot(table)
-    encode_job(spark, table, out, mode="files")
+    encode_job(spark, table, out)
     generate_tokens_df(spark, 50, 8, partitions=1).write.mode("append").parquet(table)
     write_snapshot(table)
-    encode_job(spark, table, out, mode="files")
+    encode_job(spark, table, out)
 
-    blocks = current_blocks(spark, table, os.path.join(out, "blocks"), "files")
+    blocks = current_blocks(spark, table, os.path.join(out, "blocks"))
     dec = decode_blocks(blocks)
     src = spark.read.parquet(table)
     assert dec.count() == src.count()

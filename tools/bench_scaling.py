@@ -60,7 +60,7 @@ def src_fingerprint() -> str:
 def child(cpus: int, tokens_path: str) -> None:
     """One parallelism level, isolated JVM.
 
-    Measures the engine pipeline (scan -> salted shuffle -> encode kernels ->
+    Measures the engine pipeline (file-direct scan -> encode kernels ->
     blocks -> decode kernels) with compute isolated from the sandbox's single
     virtual disk: shuffle dirs on /dev/shm, input pre-warmed into the page
     cache, blocks held in memory.  On a real cluster the skipped I/O scales
@@ -72,7 +72,6 @@ def child(cpus: int, tokens_path: str) -> None:
 
     from pyspark.sql import functions as F
 
-    from parquet_python_spark.engine import decode_blocks, encode_table
     from parquet_python_spark.session import get_spark
 
     # Emulate a true N-core cluster: bind this process (and the JVM + python
@@ -118,7 +117,6 @@ def child(cpus: int, tokens_path: str) -> None:
             encode_table_files_native,
         )
 
-        _ = (encode_table, decode_blocks)  # grouped/shuffle paths exist
         df = spark.read.parquet(tokens_path)
         n_tokens = int(df.agg(F.sum("n_tok")).collect()[0][0])
 
