@@ -9,9 +9,10 @@ Build the artifact, then submit:
         jobs/encode_job.py --input /path/tokens --output /path/encoded \
         [--with-ref-baseline] [--verify]
 
-The job is resumable: re-submitting after a failure skips every partition
-already recorded in <output>/metrics whose input file is unchanged
-(engine.encode_job skips the completed part_ids).
+The job is resumable: re-submitting after a failure skips every task whose
+block file is already committed under <output>/blocks (its blk-*.parquet
+exists, or compaction folded its rows into a cmp-*.parquet) and whose input
+file is unchanged; only the missing tasks encode.
 
 `--verify` runs a distributed round-trip check after encoding: decode the
 blocks table and compare row count, token count, and an order-independent

@@ -15,11 +15,13 @@ Scale design notes (targets a 1000-executor cluster; local[32] here):
   * Skew is bounded by task planning, not salting: a file larger than
     max_task_bytes splits into row-group ranges (_plan_file_tasks), so a
     dominant source simply spans more tasks.
-  * Checkpoint/resume: completed part_ids live in the metrics table; resume
-    skips them driver-side (the completed list is one row per partition,
-    i.e. metadata-sized even at 10^12 sequences with ~1e5 partitions).
+  * Checkpoint/resume: the block files are the commit record.  A task is
+    done when its atomically renamed blk-<task key>.parquet exists or its
+    rows sit inside a cmp-* file; encode_table_files_native drops such
+    tasks driver-side before any input is read.
   * Lineage: every block row carries (snapshot_id, part_id, codec, bytes,
-    crc32 checksum); the metrics table is the per-partition rollup.
+    crc32 checksum); the metrics table is the per-partition rollup, a
+    derived report the engine never reads back.
 """
 
 from __future__ import annotations
@@ -235,7 +237,7 @@ def encode_table_narrow(
             return
         tbl = pa.Table.from_batches(batch_list)
         yield from _encode_split_by_source(
-            tbl, split_id, snapshot_id, with_ref_baseline, None, part_prefix
+            tbl, split_id, snapshot_id, with_ref_baseline, part_prefix
         )
 
     return df.mapInArrow(enc, schema=BLOCKS_SCHEMA)
@@ -296,8 +298,6 @@ def encode_table_files_native(
     blocks_dir: str,
     snapshot_id: str = "",
     with_ref_baseline: bool = False,
-    skip_parts: frozenset | None = None,
-    part_prefix: str = "",
     files: list[str] | None = None,
     max_task_bytes: int = 256 * 1024 * 1024,
 ) -> DataFrame:
@@ -317,16 +317,26 @@ def encode_table_files_native(
     the JVM parquet writer (measured here: that write-back path is both the
     wide-core bottleneck and the dominant variance source).  Commit protocol:
     deterministic per-task file names (blk-<task_key>.parquet) written to a
-    temp name and atomically renamed, so retries/re-runs are idempotent; the
+    temp name and atomically renamed, so an existing output proves its task
+    finished.  Tasks whose output is committed — the blk file exists, or
+    compact_blocks folded its rows into a cmp-* file — are skipped before
+    any input is read: a re-run encodes only what is missing and never
+    writes a row twice, and a retried attempt overwrites in place.  The
     caller snapshots blocks_dir (iceberg_lite.write_snapshot) to commit.
 
-    Returns the blocks *metadata* DataFrame (all columns except payload) —
-    consuming it drives the job.
+    Returns the blocks *metadata* DataFrame (all columns except payload) of
+    the tasks this run encodes — consuming it drives the job.
     """
     files = files if files is not None else resolve_input_files(input_path)
     os.makedirs(blocks_dir, exist_ok=True)
     tasks = _plan_file_tasks(files, max_task_bytes)
     _remove_stale_generations(blocks_dir, tasks)
+    committed = _task_keys_in_compacted(blocks_dir)
+    tasks = [
+        t for t in tasks
+        if t[0] not in committed
+        and not os.path.exists(os.path.join(blocks_dir, f"blk-{t[0]}.parquet"))
+    ]
     # JVM-native range dispatch, one partition per task; tasks resolve
     # from the closure list (same rationale + sizing note as
     # _decode_files_df: no exchange, no python-RDD hop)
@@ -346,8 +356,7 @@ def encode_table_files_native(
                 tbl = _read_task_table(path, rg_start, rg_end)
                 out_batches = list(
                     _encode_split_by_source(
-                        tbl, tkey, snapshot_id, with_ref_baseline,
-                        skip_parts, part_prefix,
+                        tbl, tkey, snapshot_id, with_ref_baseline
                     )
                 )
                 if not out_batches:
@@ -430,8 +439,12 @@ def _rewrite_compacted_without_stale(
     if kept.num_rows == 0:
         os.remove(path)
         return
-    tmp = path + ".rewrite"
-    pq.write_table(kept, tmp)
+    # dot prefix: Spark's file index never lists the temp, so a crash
+    # before the rename cannot serve its rows next to the original's
+    tmp = os.path.join(
+        os.path.dirname(path), f".{os.path.basename(path)}.rewrite"
+    )
+    pq.write_table(kept, tmp, compression=_BLK_COMPRESSION)
     os.rename(tmp, path)
 
 
@@ -473,7 +486,7 @@ def _plan_file_tasks(files: list[str], max_task_bytes: int) -> list[tuple]:
 
 
 def _encode_split_by_source(
-    tbl, split_id, snapshot_id, with_ref_baseline, skip_parts, part_prefix
+    tbl, split_id, snapshot_id, with_ref_baseline, part_prefix=""
 ):
     """Sort one split's table by (source, doc_id) and encode each source run
     as one partition chunk (shared by encode_table_narrow and the files
@@ -495,8 +508,6 @@ def _encode_split_by_source(
     for s, e in zip(bounds[:-1], bounds[1:]):
         src = names[idx[s]]
         pid = f"{part_prefix}{src}#{split_id}"
-        if skip_parts and pid in skip_parts:
-            continue  # checkpoint/resume: this chunk is already encoded
         out = _encode_partition_table(
             tbl.slice(s, e - s), snapshot_id, with_ref_baseline, pid
         )
@@ -610,8 +621,8 @@ def _engine_block_files_of_scan(blocks: DataFrame) -> list[str] | None:
     The zero-shuffle decode below is only sound when every partition's
     rows form exactly one contiguous run in exactly one file.  blk-*
     files guarantee that by construction (one encode task's output,
-    content-addressed name, atomic rename — re-runs overwrite, never
-    duplicate).  cmp-* files are EXCLUDED even though compact_blocks
+    content-addressed name, atomic rename — re-runs skip a committed task,
+    never duplicate it).  cmp-* files are EXCLUDED even though compact_blocks
     preserves run contiguity: compaction concatenates whatever .parquet
     files a directory holds, and JVM-written part-* files (for example
     the streaming sink's appends of encode_table_narrow output, which a
@@ -645,10 +656,46 @@ def _engine_block_files_of_scan(blocks: DataFrame) -> list[str] | None:
     return files
 
 
-def _decode_files_df(spark: SparkSession, files: list[str]) -> DataFrame:
+def _zone_map_keep(path: str, column: str, lo: int, hi: int) -> set[str]:
+    """part_ids of one block file that may hold a ``column`` value in
+    [lo, hi]: read only the stats columns (parquet's columnar layout leaves
+    the payload bytes untouched) and keep parts whose stats range
+    intersects it, plus legacy parts with no stats row for ``column``."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    meta = pq.read_table(
+        path,
+        columns=["part_id", "column", "stat_min", "stat_max"],
+        use_threads=False,
+    )
+    pids = meta.column("part_id")
+    with_stats = pc.and_(
+        pc.equal(meta.column("column"), column),
+        pc.is_valid(meta.column("stat_min")),
+    )
+    hit = pc.and_(
+        with_stats,
+        pc.and_(
+            pc.greater_equal(meta.column("stat_max"), lo),
+            pc.less_equal(meta.column("stat_min"), hi),
+        ),
+    )
+    keep = set(pc.filter(pids, hit).to_pylist())
+    legacy = set(pids.to_pylist()) - set(pc.filter(pids, with_stats).to_pylist())
+    return keep | legacy
+
+
+def _decode_files_df(
+    spark: SparkSession,
+    files: list[str],
+    prune: tuple[str, int, int] | None = None,
+) -> DataFrame:
     """mapInArrow decode over an explicit block-file list (one task per
     file; a part never spans files) — the shared body of
-    decode_blocks_files and decode_blocks' fast path.
+    decode_blocks_files, decode_blocks' fast path and
+    decode_blocks_files_pruned.  With ``prune=(column, lo, hi)`` each task
+    decodes only the parts _zone_map_keep keeps.
 
     Task dispatch is a JVM-native spark.range with one partition per file;
     each task resolves its file from the list shipped in the function
@@ -667,16 +714,19 @@ def _decode_files_df(spark: SparkSession, files: list[str]) -> DataFrame:
 
         for batch in batches:
             for i in batch.column("id").to_pylist():
-                tbl = pq.read_table(files_local[int(i)], use_threads=False)
-                if tbl.num_rows == 0:
-                    continue
+                path = files_local[int(i)]
+                keep = None if prune is None else _zone_map_keep(path, *prune)
+                if keep is not None and not keep:
+                    continue  # payload never read
+                tbl = pq.read_table(path, use_threads=False)
                 pids = tbl.column("part_id").to_pylist()
                 start = 0
                 for j in range(1, len(pids) + 1):
                     if j == len(pids) or pids[j] != pids[start]:
-                        yield from _decode_part_table(
-                            tbl.slice(start, j - start)
-                        ).to_batches()
+                        if keep is None or pids[start] in keep:
+                            yield from _decode_part_table(
+                                tbl.slice(start, j - start)
+                            ).to_batches()
                         start = j
 
     return idx_df.mapInArrow(dec, schema=DECODED_SCHEMA)
@@ -760,60 +810,9 @@ def decode_blocks_files_pruned(
     table and scanning the matching slice.
     """
     _repair_compaction(blocks_path, conservative=True)
-    files = list_input_files(blocks_path)
-    files_local = list(files)
-    paths_df = spark.range(
-        len(files_local), numPartitions=max(len(files_local), 1)
+    decoded = _decode_files_df(
+        spark, list_input_files(blocks_path), prune=(column, lo, hi)
     )
-
-    def dec(batches):
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        for batch in batches:
-            for path in (
-                files_local[int(i)] for i in batch.column("id").to_pylist()
-            ):
-                meta = pq.read_table(
-                    path,
-                    columns=["part_id", "column", "stat_min", "stat_max"],
-                    use_threads=False,
-                )
-                if meta.num_rows == 0:
-                    continue
-                is_col = pc.equal(meta.column("column"), column)
-                has_stats = pc.is_valid(meta.column("stat_min"))
-                hit = pc.and_(
-                    pc.and_(is_col, has_stats),
-                    pc.and_(
-                        pc.greater_equal(meta.column("stat_max"), lo),
-                        pc.less_equal(meta.column("stat_min"), hi),
-                    ),
-                )
-                keep = set(
-                    pc.filter(meta.column("part_id"), hit).to_pylist()
-                )
-                # legacy parts with no stats row for `column`: keep
-                stats_parts = set(
-                    pc.filter(
-                        meta.column("part_id"), pc.and_(is_col, has_stats)
-                    ).to_pylist()
-                )
-                keep |= set(meta.column("part_id").to_pylist()) - stats_parts
-                if not keep:
-                    continue  # payload never read
-                tbl = pq.read_table(path, use_threads=False)
-                pids = tbl.column("part_id").to_pylist()
-                start = 0
-                for i in range(1, len(pids) + 1):
-                    if i == len(pids) or pids[i] != pids[start]:
-                        if pids[start] in keep:
-                            yield from _decode_part_table(
-                                tbl.slice(start, i - start)
-                            ).to_batches()
-                        start = i
-
-    decoded = paths_df.mapInArrow(dec, schema=DECODED_SCHEMA)
     return _pruned_residual(decoded, column, lo, hi)
 
 
@@ -874,8 +873,9 @@ def compact_blocks(
     files concatenate in order, decode_blocks_files' invariant — a part
     never spans files, its rows stay contiguous — is preserved, and the
     stat_min/stat_max zone maps ride along so pruned decode keeps working.
-    current_blocks / resume are unaffected: both key on part_id VALUES,
-    never on file names.
+    current_blocks keys on part_id VALUES, never on file names; resume
+    finds a compacted task's key inside its cmp file
+    (_task_keys_in_compacted) and still skips it.
 
     Crash safety: each bin writes a ``.srcs.json`` sidecar listing its
     source files before renaming the compacted file visible, then deletes
@@ -1059,16 +1059,22 @@ def encode_job(
     output_path: str,
     with_ref_baseline: bool = False,
 ) -> dict:
-    """Resumable encode job: skip partitions already in the metrics table.
+    """Resumable encode job: encode the tasks whose blocks are not yet
+    committed, then snapshot blocks/ and rebuild metrics/.
 
     Zero-shuffle, python-native scan (encode_table_files_native): one task
     per input file or row-group range, workers read parquet via pyarrow and
     write their own blk-*.parquet — no JVM decode / Arrow IPC double pass.
+    Resume needs no record of its own: a task whose blk file exists or whose
+    rows sit in a cmp-* file is skipped by the writer, so a re-run after a
+    crash at any point encodes exactly the missing tasks.
 
     Layout under output_path:
         blocks/   parquet, one blk-<task key>.parquet per task (+ cmp-* after
-                  compact_blocks), committed as an iceberg-lite snapshot
-        metrics/  parquet, rebuilt per run (completed part_ids live here)
+                  compact_blocks), committed as an iceberg-lite snapshot;
+                  the files themselves are the resume record
+        metrics/  parquet, the per-part lineage report rebuilt from blocks/
+                  each run (never read back by the engine)
     """
     from .sources.iceberg_lite import write_snapshot
 
@@ -1076,39 +1082,21 @@ def encode_job(
     metrics_path = os.path.join(output_path, "metrics")
     snapshot_id = snapshot_of(input_path)
     cur_files = resolve_input_files(input_path)
-    cur_keys = {file_key(f) for f in cur_files}
+    cur_keys = [file_key(f) for f in cur_files]
     # finish any compaction bin whose rename landed before its source
     # deletes: the snapshot and the rollup below then see each block row
     # exactly once (every block file here is an atomic, content-addressed
     # blk-*/cmp-* write, so this is the only duplicate-row window)
     _repair_compaction(blocks_path, conservative=True)
 
-    done: set[str] = set()
-    if os.path.isdir(metrics_path):
-        # part_ids are content-addressed per file, so any previously encoded
-        # partition stays done across snapshots (incremental encode: only
-        # new files run).  A metrics row is only trustworthy if its backing
-        # rows still exist: either the task's own blk file, or — after
-        # compact_blocks folded it away — a cmp file holding its task key.
-        # A crash between stale-generation cleanup and re-encode would
-        # otherwise let a later run skip the partition and commit a
-        # snapshot with those rows missing; conversely, re-encoding a
-        # compacted partition would DOUBLE its rows.
-        cmp_keys = _task_keys_in_compacted(blocks_path)
-        prev = spark.read.parquet(metrics_path).select("part_id").distinct()
-        for r in prev.collect():
-            tkey = r["part_id"].split("#")[-1]
-            if tkey in cmp_keys or os.path.exists(
-                os.path.join(blocks_path, f"blk-{tkey}.parquet")
-            ):
-                done.add(r["part_id"])
-
     meta = encode_table_files_native(
         spark, input_path, blocks_path, snapshot_id, with_ref_baseline,
-        skip_parts=frozenset(done) if done else None,
         files=cur_files,
     )
-    meta.count()  # execute: workers write blk-*.parquet themselves
+    # execute: workers write blk-*.parquet themselves; the returned part
+    # ids are the parts this run encoded (part_ids are content-addressed
+    # per file, so parts of unchanged files stay committed across snapshots)
+    written = {r[0] for r in meta.select("part_id").collect()}
     write_snapshot(blocks_path)  # commit the blocks dir as a snapshot
 
     # Idempotent rollup: metrics := aggregate of everything in blocks/, one
@@ -1137,7 +1125,7 @@ def encode_job(
     try:
         tmp_metrics = metrics_path + "_tmp"
         metrics.write.mode("overwrite").parquet(tmp_metrics)
-        # atomic-ish swap: a crash mid-write never corrupts the resume state
+        # atomic-ish swap: a crash mid-write never leaves a partial report
         if os.path.isdir(metrics_path):
             os.rename(metrics_path, metrics_path + "_old")
         os.rename(tmp_metrics, metrics_path)
@@ -1149,7 +1137,7 @@ def encode_job(
         # report over the CURRENT snapshot's file set: partitions encoded
         # under earlier snapshots count if their file is still in the
         # table; partitions of removed files do not
-        current = _file_key_of_part(F.col("part_id")).isin(list(cur_keys))
+        current = _file_key_of_part(F.col("part_id")).isin(cur_keys)
         agg = (
             metrics.filter(current)
             .agg(
@@ -1172,7 +1160,5 @@ def encode_job(
         "tokens": int(agg["tokens"] or 0),
         "raw_bytes": int(agg["raw"] or 0),
         "enc_bytes": int(agg["enc"] or 0),
-        "resumed_skipped": len(
-            {p for p in done if p.split("#")[-1].split(".")[0] in cur_keys}
-        ),
+        "resumed_skipped": agg["parts"] - len(written),
     }

@@ -1,6 +1,6 @@
 """End-to-end Spark engine tests: encode -> blocks -> decode bit-identity,
-skew task splitting, checkpoint/resume, size gate (north-rule correctness
-gates)."""
+skew task splitting, resume from committed block files, size gate
+(north-rule correctness gates)."""
 
 import os
 
@@ -140,6 +140,54 @@ def test_encode_job_resume(spark, tokens_df, tmp_path):
     decoded = decode_blocks(blocks)
     src = spark.read.parquet(inp)
     assert _as_sorted_rows(decoded) == _as_sorted_rows(src)
+
+
+def test_encode_job_resumes_from_block_files(spark, tokens_df, tmp_path):
+    """The block files are the resume record.  A crash after every task
+    committed its blk file but before the snapshot and metrics were written
+    re-runs without encoding anything; a lost blk file re-encodes only its
+    own task's parts."""
+    import pyarrow.parquet as pq
+
+    from parquet_python_spark.engine import (
+        decode_blocks_files,
+        list_input_files,
+        snapshot_of,
+    )
+
+    inp = str(tmp_path / "input")
+    out = str(tmp_path / "encoded")
+    tokens_df.repartition(4).write.parquet(inp)
+    bdir = os.path.join(out, "blocks")
+    encode_table_files_native(spark, inp, bdir, snapshot_id=snapshot_of(inp)).count()
+
+    def mtimes():
+        return {f: os.stat(f).st_mtime_ns for f in list_input_files(bdir)}
+
+    before = mtimes()
+    m1 = encode_job(spark, inp, out)
+    assert m1["rows"] == N_ROWS
+    assert m1["resumed_skipped"] == m1["partitions"] > 0
+    assert mtimes() == before  # no blk file rewritten
+    metrics = spark.read.parquet(os.path.join(out, "metrics"))
+    assert metrics.count() == m1["partitions"]
+    assert metrics.select("part_id").distinct().count() == m1["partitions"]
+
+    lost = sorted(before)[0]
+    lost_parts = set(
+        pq.read_table(lost, columns=["part_id"]).column("part_id").to_pylist()
+    )
+    os.remove(lost)
+    m2 = encode_job(spark, inp, out)
+    assert m2["partitions"] == m1["partitions"]
+    assert m2["resumed_skipped"] == m1["partitions"] - len(lost_parts)
+    after = mtimes()
+    assert after.keys() == before.keys()
+    assert {f: t for f, t in after.items() if f != lost} == {
+        f: t for f, t in before.items() if f != lost
+    }
+    decoded = decode_blocks_files(spark, bdir)
+    assert _as_sorted_rows(decoded) == _as_sorted_rows(spark.read.parquet(inp))
 
 
 def test_metrics_lineage_columns(spark, tokens_df, tmp_path):

@@ -1,6 +1,6 @@
 """End-to-end `spark-submit --py-files` packaging test (north rule: the job
 must run via spark-submit with the engine shipped as a zip, and must resume
-from the metrics checkpoint on re-submit)."""
+from its committed block files on re-submit)."""
 
 from __future__ import annotations
 
@@ -60,7 +60,7 @@ def test_spark_submit_pyfiles_roundtrip_and_resume(spark, tmp_path):
     assert stats["tokens"] > 0
     assert stats["resumed_skipped"] == 0
 
-    # Re-submit: every partition is already in the metrics checkpoint, so the
+    # Re-submit: every task's block file is already committed, so the
     # second run must skip them all and still verify bit-identical.
     stats2 = _submit(pyfiles, "--input", tokens, "--output", out, "--verify")
     assert stats2["resumed_skipped"] == stats["partitions"] > 0

@@ -121,8 +121,7 @@ def child(cpus: int, tokens_path: str) -> None:
         n_tokens = int(df.agg(F.sum("n_tok")).collect()[0][0])
 
         def run_encode():
-            # worker-native block writes (the default encode_job path):
-            # deterministic file names make re-runs overwrite in place
+            # worker-native block writes (the default encode_job path)
             encode_table_files_native(
                 spark, tokens_path, blocks_dir, snapshot_id="bench"
             ).count()
@@ -135,6 +134,9 @@ def child(cpus: int, tokens_path: str) -> None:
 
         enc_times = []
         for _i in range(3):
+            # untimed: the writer skips every task whose blk file exists, so
+            # an encode over the previous pass's blocks would encode nothing
+            shutil.rmtree(blocks_dir, ignore_errors=True)
             t0 = time.perf_counter()
             run_encode()
             enc_times.append(time.perf_counter() - t0)

@@ -65,7 +65,8 @@ def main() -> None:
                 blocks_path = os.path.join(out_path, "blocks")
                 snapshot_id = snapshot_of(tokens_path)
                 t(f"[{rep}] total encode_job", lambda: encode_job(spark, tokens_path, out_path + "_full"))
-                # piecewise re-run
+                # piecewise re-run into this rep's own, still empty blocks
+                # dir (the writer skips tasks whose blk file already exists)
                 meta = encode_table_files_native(
                     spark, tokens_path, blocks_path, snapshot_id, files=files
                 )
