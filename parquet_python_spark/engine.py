@@ -20,8 +20,9 @@ Scale design notes (targets a 1000-executor cluster; local[32] here):
     rows sit inside a cmp-* file; encode_table_files_native drops such
     tasks driver-side before any input is read.
   * Lineage: every block row carries (snapshot_id, part_id, codec, bytes,
-    crc32 checksum); the metrics table is the per-partition rollup, a
-    derived report the engine never reads back.
+    crc32 checksum); metrics/ is the per-partition rollup of those
+    metadata columns, built on the driver with pyarrow after the encode
+    job (the payload is never read) and never read back by the engine.
 """
 
 from __future__ import annotations
@@ -111,18 +112,19 @@ DECODED_SCHEMA = T.StructType(
     ]
 )
 
-METRICS_SCHEMA = T.StructType(
+# metrics/: one lineage row per part (_lineage_rollup)
+METRICS_SCHEMA = pa.schema(
     [
-        T.StructField("part_id", T.StringType(), False),
-        T.StructField("source", T.StringType(), False),
-        T.StructField("snapshot_id", T.StringType(), False),
-        T.StructField("n_rows", T.LongType(), False),
-        T.StructField("n_tokens", T.LongType(), False),
-        T.StructField("raw_bytes", T.LongType(), False),
-        T.StructField("enc_bytes", T.LongType(), False),
-        T.StructField("tokens_codec", T.StringType(), False),
-        T.StructField("checksum", T.LongType(), False),
-        T.StructField("encode_ms", T.DoubleType(), False),
+        ("part_id", pa.string()),
+        ("source", pa.string()),
+        ("snapshot_id", pa.string()),
+        ("n_rows", pa.int64()),
+        ("n_tokens", pa.int64()),
+        ("raw_bytes", pa.int64()),
+        ("enc_bytes", pa.int64()),
+        ("tokens_codec", pa.string()),
+        ("checksum", pa.int64()),
+        ("encode_ms", pa.float64()),
     ]
 )
 
@@ -330,8 +332,7 @@ def encode_table_files_native(
     files = files if files is not None else resolve_input_files(input_path)
     os.makedirs(blocks_dir, exist_ok=True)
     tasks = _plan_file_tasks(files, max_task_bytes)
-    _remove_stale_generations(blocks_dir, tasks)
-    committed = _task_keys_in_compacted(blocks_dir)
+    committed = _remove_stale_generations(blocks_dir, tasks)
     tasks = [
         t for t in tasks
         if t[0] not in committed
@@ -389,8 +390,9 @@ def encode_table_files_native(
     return paths_df.mapInArrow(enc, schema=meta_schema)
 
 
-def _remove_stale_generations(blocks_dir: str, tasks: list[tuple]) -> None:
-    """Drop block files from an older task-boundary generation.
+def _remove_stale_generations(blocks_dir: str, tasks: list[tuple]) -> set[str]:
+    """Drop block files from an older task-boundary generation; return the
+    task keys whose rows the surviving cmp-* files hold (committed tasks).
 
     Task keys embed max_task_bytes-dependent row-group boundaries
     (fk vs fk.rgN); re-running encode with a different max_task_bytes
@@ -398,9 +400,12 @@ def _remove_stale_generations(blocks_dir: str, tasks: list[tuple]) -> None:
     and current_blocks' file-key-prefix filter would double-count those
     rows.  Driver-side (race-free: before any task runs): for every file
     key in the CURRENT plan, delete blk files whose task key is not in the
-    plan.  Blocks of files no longer in the input are untouched (history)."""
+    plan.  Blocks of files no longer in the input are untouched (history).
+    One part_id-column read per cmp file; compaction keeps their count
+    small by construction, so this stays metadata-cheap."""
     planned = {t[0] for t in tasks}
     fks = {k.split(".")[0] for k in planned}
+    in_compacted: set[str] = set()
     for name in os.listdir(blocks_dir):
         if not name.endswith(".parquet"):
             continue
@@ -414,31 +419,35 @@ def _remove_stale_generations(blocks_dir: str, tasks: list[tuple]) -> None:
         elif name.startswith("cmp-"):
             # compacted files hold many task keys: rewrite in place without
             # the stale generation's rows (maintenance-path cost, driver-side)
-            _rewrite_compacted_without_stale(
+            in_compacted |= _rewrite_compacted_without_stale(
                 os.path.join(blocks_dir, name), fks, planned
             )
+    return in_compacted
 
 
 def _rewrite_compacted_without_stale(
     path: str, fks: set[str], planned: set[str]
-) -> None:
+) -> set[str]:
+    """Rewrite one cmp file without its stale rows; return the task keys
+    of the rows it keeps."""
     import pyarrow.parquet as pq
 
     try:
         pids = pq.read_table(path, columns=["part_id"], use_threads=False)
     except OSError:
-        return
+        return set()
     keys = [p.rsplit("#", 1)[-1] for p in pids.column("part_id").to_pylist()]
     stale = np.array(
         [k.split(".")[0] in fks and k not in planned for k in keys]
     )
+    kept_keys = {k for k, s in zip(keys, stale) if not s}
     if not stale.any():
-        return
+        return kept_keys
     tbl = pq.read_table(path, use_threads=False)
     kept = tbl.filter(pa.array(~stale))
     if kept.num_rows == 0:
         os.remove(path)
-        return
+        return kept_keys
     # dot prefix: Spark's file index never lists the temp, so a crash
     # before the rename cannot serve its rows next to the original's
     tmp = os.path.join(
@@ -446,6 +455,7 @@ def _rewrite_compacted_without_stale(
     )
     pq.write_table(kept, tmp, compression=_BLK_COMPRESSION)
     os.rename(tmp, path)
+    return kept_keys
 
 
 def _plan_file_tasks(files: list[str], max_task_bytes: int) -> list[tuple]:
@@ -875,13 +885,15 @@ def compact_blocks(
     stat_min/stat_max zone maps ride along so pruned decode keeps working.
     current_blocks keys on part_id VALUES, never on file names; resume
     finds a compacted task's key inside its cmp file
-    (_task_keys_in_compacted) and still skips it.
+    (_remove_stale_generations) and still skips it.
 
-    Crash safety: each bin writes a ``.srcs.json`` sidecar listing its
-    source files before renaming the compacted file visible, then deletes
-    sources, then the sidecar.  A crash between rename and source deletion
-    would duplicate rows; ``_repair_compaction`` (run at the start of every
-    compact_blocks) finishes the deletes from the sidecar instead.
+    Crash safety: each bin writes a ``.cmp-<id>.parquet.srcs.json`` sidecar
+    listing its source files before renaming the compacted file visible,
+    then deletes sources, then the sidecar.  The tmp and the sidecar are
+    dot-prefixed, so Spark's file index never lists an in-flight bin.  A
+    crash between rename and source deletion would duplicate rows;
+    ``_repair_compaction`` (run at the start of every compact_blocks)
+    finishes the deletes from the sidecar instead.
     """
     _repair_compaction(blocks_path)
     files = [
@@ -926,8 +938,8 @@ def compact_blocks(
                     ).encode()
                 ).hexdigest()[:16]
                 final = os.path.join(blocks_path, f"cmp-{cid}.parquet")
-                sidecar = final + ".srcs.json"
-                tmp = final + ".inprogress"
+                sidecar = os.path.join(blocks_path, f".cmp-{cid}.parquet.srcs.json")
+                tmp = os.path.join(blocks_path, f".cmp-{cid}.parquet.inprogress")
                 # same payload-uncompressed policy as the blk writer
                 pq.write_table(out, tmp, compression=_BLK_COMPRESSION)
                 with open(sidecar, "w") as f:
@@ -979,7 +991,9 @@ def _repair_compaction(blocks_path: str, conservative: bool = False) -> None:
         if not name.endswith(".srcs.json"):
             continue
         sidecar = os.path.join(blocks_path, name)
-        final = sidecar[: -len(".srcs.json")]
+        # .cmp-<id>.parquet.srcs.json -> cmp-<id>.parquet (lstrip also
+        # resolves the undotted sidecars of older writers)
+        final = os.path.join(blocks_path, name[: -len(".srcs.json")].lstrip("."))
         if os.path.exists(final):
             try:
                 with open(sidecar) as f:
@@ -995,35 +1009,6 @@ def _repair_compaction(blocks_path: str, conservative: bool = False) -> None:
             os.remove(sidecar)
         except OSError:
             pass
-
-
-def _task_keys_in_compacted(blocks_path: str) -> set[str]:
-    """Task keys whose block rows live inside cmp-*.parquet files (one
-    part_id-column read per compacted file; compaction keeps file counts
-    small by construction, so this stays metadata-cheap)."""
-    keys: set[str] = set()
-    try:
-        names = os.listdir(blocks_path)
-    except OSError:
-        return keys
-    import pyarrow.parquet as pq
-
-    for name in names:
-        if not (name.startswith("cmp-") and name.endswith(".parquet")):
-            continue
-        try:
-            pids = pq.read_table(
-                os.path.join(blocks_path, name),
-                columns=["part_id"],
-                use_threads=False,
-            )
-        except OSError:
-            continue
-        keys.update(
-            p.rsplit("#", 1)[-1]
-            for p in set(pids.column("part_id").to_pylist())
-        )
-    return keys
 
 
 # ----------------------------------------------------- job with resume
@@ -1053,6 +1038,52 @@ def snapshot_of(path: str) -> str:
     return h.hexdigest()[:16]
 
 
+def _lineage_rollup(blocks_path: str, metrics_path: str) -> "pa.Table":
+    """Rebuild metrics/ on the driver: one row per (part_id, source,
+    snapshot_id) over the metadata columns of every block file (the payload
+    is never read), written as one parquet file through a dot-prefixed temp
+    and an atomic replace.  Older report files are removed after the
+    replace, so metrics/ holds exactly one report.  Returns the report."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    keys = ["part_id", "source", "snapshot_id"]
+    plain = ["n_rows", "raw_bytes", "enc_bytes", "encode_ms"]
+    blocks = ds.dataset(
+        list_input_files(blocks_path), schema=_BLOCKS_ARROW_SCHEMA, format="parquet"
+    ).to_table(columns=keys + plain + ["column", "codec", "n_values", "checksum"])
+    tokens = pc.equal(blocks["column"], "tokens")
+
+    def of_tokens(col):
+        return pc.if_else(tokens, blocks[col], pa.scalar(None, blocks[col].type))
+
+    aggs = {
+        "n_rows": "max", "n_tokens": "max", "raw_bytes": "sum",
+        "enc_bytes": "sum", "tokens_codec": "max", "checksum": "max",
+        "encode_ms": "max",
+    }
+    report = (
+        blocks.select(keys + plain)
+        .append_column("n_tokens", of_tokens("n_values"))
+        .append_column("tokens_codec", of_tokens("codec"))
+        .append_column("checksum", of_tokens("checksum"))
+        .group_by(keys, use_threads=False)
+        .aggregate(list(aggs.items()))
+        .select(keys + [f"{c}_{a}" for c, a in aggs.items()])
+        .rename_columns(METRICS_SCHEMA.names)
+        .cast(METRICS_SCHEMA)
+    )
+    os.makedirs(metrics_path, exist_ok=True)
+    tmp = os.path.join(metrics_path, ".lineage.parquet.inprogress")
+    pq.write_table(report, tmp)
+    os.replace(tmp, os.path.join(metrics_path, "lineage.parquet"))
+    for name in os.listdir(metrics_path):
+        if name.endswith(".parquet") and name != "lineage.parquet":
+            os.remove(os.path.join(metrics_path, name))
+    return report
+
+
 def encode_job(
     spark: SparkSession,
     input_path: str,
@@ -1060,29 +1091,32 @@ def encode_job(
     with_ref_baseline: bool = False,
 ) -> dict:
     """Resumable encode job: encode the tasks whose blocks are not yet
-    committed, then snapshot blocks/ and rebuild metrics/.
+    committed, then snapshot blocks/ and rebuild metrics/ — one Spark job.
 
     Zero-shuffle, python-native scan (encode_table_files_native): one task
     per input file or row-group range, workers read parquet via pyarrow and
     write their own blk-*.parquet — no JVM decode / Arrow IPC double pass.
     Resume needs no record of its own: a task whose blk file exists or whose
     rows sit in a cmp-* file is skipped by the writer, so a re-run after a
-    crash at any point encodes exactly the missing tasks.
+    crash at any point encodes exactly the missing tasks.  The commit runs
+    on the driver: write_snapshot, then _lineage_rollup reads the blocks'
+    metadata columns with pyarrow, and the returned totals come from that
+    report.
 
     Layout under output_path:
         blocks/   parquet, one blk-<task key>.parquet per task (+ cmp-* after
                   compact_blocks), committed as an iceberg-lite snapshot;
                   the files themselves are the resume record
-        metrics/  parquet, the per-part lineage report rebuilt from blocks/
-                  each run (never read back by the engine)
+        metrics/  lineage.parquet, the per-part lineage report rebuilt from
+                  blocks/ each run (never read back by the engine)
     """
+    import pyarrow.compute as pc
+
     from .sources.iceberg_lite import write_snapshot
 
     blocks_path = os.path.join(output_path, "blocks")
-    metrics_path = os.path.join(output_path, "metrics")
     snapshot_id = snapshot_of(input_path)
     cur_files = resolve_input_files(input_path)
-    cur_keys = [file_key(f) for f in cur_files]
     # finish any compaction bin whose rename landed before its source
     # deletes: the snapshot and the rollup below then see each block row
     # exactly once (every block file here is an atomic, content-addressed
@@ -1098,67 +1132,29 @@ def encode_job(
     # per file, so parts of unchanged files stay committed across snapshots)
     written = {r[0] for r in meta.select("part_id").collect()}
     write_snapshot(blocks_path)  # commit the blocks dir as a snapshot
+    report = _lineage_rollup(blocks_path, os.path.join(output_path, "metrics"))
 
-    # Idempotent rollup: metrics := aggregate of everything in blocks/, one
-    # row per part.  Parquet column pruning keeps the payload column unread
-    # here, so this scans metadata-sized data even at 10^12-sequence scale.
-    tokens = F.col("column") == "tokens"
-    metrics = (
-        spark.read.parquet(blocks_path)
-        .groupBy("part_id", "source", "snapshot_id")
-        .agg(
-            F.max("n_rows").alias("n_rows"),
-            F.max(F.when(tokens, F.col("n_values"))).alias("n_tokens"),
-            F.sum("raw_bytes").alias("raw_bytes"),
-            F.sum("enc_bytes").alias("enc_bytes"),
-            F.max(F.when(tokens, F.col("codec"))).alias("tokens_codec"),
-            F.max(F.when(tokens, F.col("checksum"))).alias("checksum"),
-            F.max("encode_ms").alias("encode_ms"),
+    # totals over the CURRENT file set: parts encoded under earlier
+    # snapshots count if their file is still in the table; parts of
+    # removed files do not (part_id = f"{source}#{file_key}[.rgN]")
+    cur_keys = {file_key(f) for f in cur_files}
+    current = report.filter(
+        pa.array(
+            [p.rsplit("#", 1)[-1].split(".")[0] in cur_keys
+             for p in report["part_id"].to_pylist()],
+            pa.bool_(),
         )
     )
-    # persist before the write so the final report aggregates the cached
-    # rows instead of re-reading the parquet it just wrote (one fewer
-    # scan+job per encode run; content is identical by construction)
-    from pyspark import StorageLevel
 
-    metrics = metrics.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        tmp_metrics = metrics_path + "_tmp"
-        metrics.write.mode("overwrite").parquet(tmp_metrics)
-        # atomic-ish swap: a crash mid-write never leaves a partial report
-        if os.path.isdir(metrics_path):
-            os.rename(metrics_path, metrics_path + "_old")
-        os.rename(tmp_metrics, metrics_path)
-        if os.path.isdir(metrics_path + "_old"):
-            import shutil
+    def total(col):
+        return int(pc.sum(current[col]).as_py() or 0)
 
-            shutil.rmtree(metrics_path + "_old", ignore_errors=True)
-
-        # report over the CURRENT snapshot's file set: partitions encoded
-        # under earlier snapshots count if their file is still in the
-        # table; partitions of removed files do not
-        current = _file_key_of_part(F.col("part_id")).isin(cur_keys)
-        agg = (
-            metrics.filter(current)
-            .agg(
-                F.count("*").alias("parts"),
-                F.sum("n_rows").alias("rows"),
-                F.sum("n_tokens").alias("tokens"),
-                F.sum("raw_bytes").alias("raw"),
-                F.sum("enc_bytes").alias("enc"),
-            )
-            .collect()[0]
-        )
-    finally:
-        # a failed write/swap/report must not pin the cache for the
-        # session's lifetime
-        metrics.unpersist(blocking=False)
     return {
         "snapshot_id": snapshot_id,
-        "partitions": agg["parts"],
-        "rows": int(agg["rows"] or 0),
-        "tokens": int(agg["tokens"] or 0),
-        "raw_bytes": int(agg["raw"] or 0),
-        "enc_bytes": int(agg["enc"] or 0),
-        "resumed_skipped": agg["parts"] - len(written),
+        "partitions": current.num_rows,
+        "rows": total("n_rows"),
+        "tokens": total("n_tokens"),
+        "raw_bytes": total("raw_bytes"),
+        "enc_bytes": total("enc_bytes"),
+        "resumed_skipped": current.num_rows - len(written),
     }

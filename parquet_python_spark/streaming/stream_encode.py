@@ -2,7 +2,7 @@
 
 The reference is strictly batch (file-at-a-time, SURVEY.md §2.4 'Streaming:
 none'); this is new engine surface.  Design: readStream over the input dir ->
-foreachBatch(narrow encode -> append blocks + metrics).  foreachBatch (rather
+foreachBatch(narrow encode -> append blocks).  foreachBatch (rather
 than a row-wise sink) keeps the whole batch path identical to the batch
 engine — same kernels, same blocks schema, same lineage — and Structured
 Streaming's checkpoint gives exactly-once per micro-batch on top of the

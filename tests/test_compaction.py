@@ -1,6 +1,7 @@
 """Blocks-directory compaction (the Iceberg "rewrite data files" analog):
 bin-packing, decode equivalence, zone-map preservation, crash repair,
-stale-generation rewrite inside compacted files, and resume over them."""
+in-flight bins hidden from Spark, stale-generation rewrite inside
+compacted files, and resume over them."""
 
 import json
 import os
@@ -26,6 +27,18 @@ def _rows(df):
     return sorted(
         ((r["doc_id"], tuple(r["tokens"]), r["n_tok"], r["source"]) for r in rows)
     )
+
+
+def _sidecar(cmp_path):
+    """Path of a compaction bin's source-list sidecar."""
+    d, name = os.path.split(cmp_path)
+    return os.path.join(d, f".{name}.srcs.json")
+
+
+def _tmp(cmp_path):
+    """Path of a compaction bin's in-progress temp."""
+    d, name = os.path.split(cmp_path)
+    return os.path.join(d, f".{name}.inprogress")
 
 
 @pytest.fixture()
@@ -86,7 +99,7 @@ def test_repair_finishes_interrupted_bin(spark, blocks_dir):
     import shutil
 
     shutil.copy(cmp_files[0], leftover)
-    with open(cmp_files[0] + ".srcs.json", "w") as f:
+    with open(_sidecar(cmp_files[0]), "w") as f:
         json.dump([os.path.basename(leftover)], f)
     # next compaction repairs first: leftover source removed, rows not doubled
     compact_blocks(spark, bdir, target_bytes=1 << 30)
@@ -100,13 +113,13 @@ def test_repair_rolls_back_invisible_bin(spark, blocks_dir):
     want = _rows(decode_blocks_files(spark, bdir))
     srcs = [os.path.basename(f) for f in list_input_files(bdir)[:2]]
     ghost = os.path.join(bdir, "cmp-deadbeef.parquet")
-    with open(ghost + ".srcs.json", "w") as f:
+    with open(_sidecar(ghost), "w") as f:
         json.dump(srcs, f)
-    with open(ghost + ".inprogress", "w") as f:
+    with open(_tmp(ghost), "w") as f:
         f.write("junk")
     compact_blocks(spark, bdir, target_bytes=1 << 30)
-    assert not os.path.exists(ghost + ".srcs.json")
-    assert not os.path.exists(ghost + ".inprogress")
+    assert not os.path.exists(_sidecar(ghost))
+    assert not os.path.exists(_tmp(ghost))
     assert _rows(decode_blocks_files(spark, bdir)) == want
 
 
@@ -254,7 +267,7 @@ def test_encode_job_rerun_repairs_interrupted_bin(spark, tmp_path):
     # the crash window: sources back in place, sidecar still naming them
     for name in srcs:
         shutil.copy(os.path.join(saved, name), bdir)
-    with open(cmp_file + ".srcs.json", "w") as f:
+    with open(_sidecar(cmp_file), "w") as f:
         json.dump(srcs, f)
 
     m2 = encode_job(spark, inp, out)
@@ -286,15 +299,15 @@ def test_read_path_repair_is_conservative(spark, blocks_dir):
 
     # simulate a LIVE compactor mid-bin: tmp + sidecar, no final yet
     ghost = os.path.join(bdir, "cmp-feedface.parquet")
-    with open(ghost + ".srcs.json", "w") as f:
+    with open(_sidecar(ghost), "w") as f:
         json.dump([os.path.basename(list_input_files(bdir)[0])], f)
-    with open(ghost + ".inprogress", "w") as f:
+    with open(_tmp(ghost), "w") as f:
         f.write("live")
 
     # and a completed bin whose source deletes were interrupted
     leftover = os.path.join(bdir, "blk-leftover2.parquet")
     shutil.copy(cmp_files[0], leftover)
-    with open(cmp_files[0] + ".srcs.json", "w") as f:
+    with open(_sidecar(cmp_files[0]), "w") as f:
         json.dump([os.path.basename(leftover)], f)
 
     got = _rows(decode_blocks_files(spark, bdir))
@@ -302,12 +315,70 @@ def test_read_path_repair_is_conservative(spark, blocks_dir):
     assert got == want
     assert not os.path.exists(leftover)
     # in-flight bin untouched by the read path
-    assert os.path.exists(ghost + ".inprogress")
-    assert os.path.exists(ghost + ".srcs.json")
+    assert os.path.exists(_tmp(ghost))
+    assert os.path.exists(_sidecar(ghost))
     # the maintenance path (full repair) then rolls it back
     compact_blocks(spark, bdir, target_bytes=1 << 30)
-    assert not os.path.exists(ghost + ".inprogress")
-    assert not os.path.exists(ghost + ".srcs.json")
+    assert not os.path.exists(_tmp(ghost))
+    assert not os.path.exists(_sidecar(ghost))
+
+
+class _InProcessSession:
+    """Runs compact_blocks' bin tasks in this process (its
+    ``range(n).mapInArrow(fn).collect()``), where monkeypatch reaches them."""
+
+    def range(self, n, numPartitions=None):
+        import pyarrow as pa
+
+        self.ids = pa.record_batch({"id": pa.array(range(n), pa.int64())})
+        return self
+
+    def mapInArrow(self, fn, schema):
+        self.fn = fn
+        return self
+
+    def collect(self):
+        return [r for b in self.fn(iter([self.ids])) for r in b.to_pylist()]
+
+
+def test_inflight_bin_stays_invisible(spark, tmp_path, monkeypatch):
+    """A compactor stopped after writing a bin's complete tmp and its
+    sidecar, before the rename: no Spark reader of the blocks dir lists
+    either file, so every row is counted once, the current view decodes to
+    the input and encode_job commits over it."""
+    from parquet_python_spark.engine import current_blocks, decode_blocks, encode_job
+
+    df = generate_tokens_df(spark, N_ROWS, SEED)
+    inp = str(tmp_path / "inp")
+    df.repartition(4).write.parquet(inp)
+    out = str(tmp_path / "enc")
+    encode_job(spark, inp, out)
+    bdir = os.path.join(out, "blocks")
+
+    real_rename = os.rename
+
+    def crash_on_cmp(src, dst):
+        if os.path.basename(dst).startswith("cmp-"):
+            raise OSError("simulated crash before the bin's rename")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_on_cmp)
+    with pytest.raises(OSError, match="simulated crash"):
+        compact_blocks(_InProcessSession(), bdir, target_bytes=1 << 30)
+    monkeypatch.undo()
+
+    def inflight():
+        return sorted(
+            n for n in os.listdir(bdir)
+            if n.endswith(".inprogress") or n.endswith(".srcs.json")
+        )
+
+    planted = inflight()
+    assert len(planted) == 2  # the bin's tmp and its sidecar
+    assert _visible_rows(spark, bdir) == N_ROWS
+    assert _rows(decode_blocks(current_blocks(spark, inp, bdir))) == _rows(df)
+    assert encode_job(spark, inp, out)["rows"] == N_ROWS
+    assert inflight() == planted  # the read path leaves in-flight state alone
 
 
 def test_compact_preserves_chunk_stats_and_bloom(spark, tmp_path):

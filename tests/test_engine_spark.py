@@ -1,6 +1,7 @@
 """End-to-end Spark engine tests: encode -> blocks -> decode bit-identity,
-skew task splitting, resume from committed block files, size gate
-(north-rule correctness gates)."""
+skew task splitting, resume from committed block files, the lineage
+report and encode_job's single Spark job, size gate (north-rule
+correctness gates)."""
 
 import os
 
@@ -202,6 +203,94 @@ def test_metrics_lineage_columns(spark, tokens_df, tmp_path):
         "raw_bytes", "enc_bytes", "tokens_codec", "checksum", "encode_ms",
     } <= cols
     assert m.filter(F.col("snapshot_id") == "").count() == 0
+
+
+def _metrics_oracle(blocks):
+    """The per-part rollup as a Spark groupBy over every block row (the
+    lineage report's definition)."""
+    tokens = F.col("column") == "tokens"
+    return blocks.groupBy("part_id", "source", "snapshot_id").agg(
+        F.max("n_rows").alias("n_rows"),
+        F.max(F.when(tokens, F.col("n_values"))).alias("n_tokens"),
+        F.sum("raw_bytes").alias("raw_bytes"),
+        F.sum("enc_bytes").alias("enc_bytes"),
+        F.max(F.when(tokens, F.col("codec"))).alias("tokens_codec"),
+        F.max(F.when(tokens, F.col("checksum"))).alias("checksum"),
+        F.max("encode_ms").alias("encode_ms"),
+    )
+
+
+def test_metrics_match_spark_rollup(spark, tokens_df, tmp_path):
+    """metrics/ equals the Spark groupBy over blocks/ row for row on all ten
+    columns, across compaction, an appended input file and the history rows
+    of a rewritten one; an older report in metrics/ is replaced, not
+    appended to."""
+    import time
+
+    from parquet_python_spark.engine import compact_blocks
+
+    inp = str(tmp_path / "input")
+    out = str(tmp_path / "encoded")
+    bdir = os.path.join(out, "blocks")
+    mdir = os.path.join(out, "metrics")
+    tokens_df.repartition(4).write.parquet(inp)
+    encode_job(spark, inp, out)
+    compact_blocks(spark, bdir, target_bytes=1 << 30)
+    _metrics_oracle(spark.read.parquet(bdir)).write.mode("overwrite").parquet(mdir)
+
+    first = sorted(f for f in os.listdir(inp) if f.endswith(".parquet"))[0]
+    tokens_df.limit(50).write.mode("append").parquet(inp)
+    time.sleep(0.01)
+    os.utime(os.path.join(inp, first))  # new file key: old rows are history
+    m = encode_job(spark, inp, out)
+
+    cols = [
+        "part_id", "source", "snapshot_id", "n_rows", "n_tokens",
+        "raw_bytes", "enc_bytes", "tokens_codec", "checksum", "encode_ms",
+    ]
+    got = spark.read.parquet(mdir)
+    assert got.columns == cols
+    want = sorted(tuple(r) for r in _metrics_oracle(spark.read.parquet(bdir)).collect())
+    assert sorted(tuple(r) for r in got.collect()) == want
+    assert len({r[2] for r in want}) >= 2  # rows of more than one snapshot
+    assert m["rows"] == N_ROWS + 50
+    assert m["partitions"] < len(want)  # history rows are reported, not totalled
+
+
+def test_encode_job_is_one_spark_job(spark, tokens_df, tmp_path):
+    """A fresh encode and a no-op resume each run at most one Spark job:
+    the snapshot and the lineage report are committed on the driver."""
+    import time
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    inp = str(tmp_path / "input")
+    out = str(tmp_path / "encoded")
+    tokens_df.repartition(4).write.parquet(inp)
+
+    def jobs_of(group):
+        sc.setJobGroup(group, group)
+        try:
+            encode_job(spark, inp, out)
+        finally:
+            # a marker job after the call: the listener bus delivers events
+            # in order, so once the marker is seen finished, so is the group
+            sc.setJobGroup(group + "-marker", "marker")
+            sc.parallelize([0], 1).count()
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        deadline = time.monotonic() + 10
+        while time.monotonic() < deadline:
+            marker = [
+                tracker.getJobInfo(j)
+                for j in tracker.getJobIdsForGroup(group + "-marker")
+            ]
+            if marker and all(i is not None and i.status == "SUCCEEDED" for i in marker):
+                break
+            time.sleep(0.05)
+        return list(tracker.getJobIdsForGroup(group))
+
+    assert len(jobs_of("encode-fresh")) == 1
+    assert len(jobs_of("encode-resume")) <= 1
 
 
 def test_decode_detects_corruption(spark, tokens_df):

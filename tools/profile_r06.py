@@ -33,6 +33,7 @@ def main() -> None:
     n_rows = int(os.environ.get("BENCH_TOKEN_ROWS", "120000")) * 10
 
     from parquet_python_spark.engine import (
+        _lineage_rollup,
         decode_blocks,
         decode_blocks_files,
         encode_table_files_native,
@@ -75,28 +76,10 @@ def main() -> None:
 
                 t(f"[{rep}] write_snapshot", lambda: write_snapshot(blocks_path))
 
-                def rollup():
-                    all_blocks = spark.read.parquet(blocks_path).select(
-                        "part_id", "source", "snapshot_id", "column", "codec",
-                        "n_values", "n_rows", "raw_bytes", "enc_bytes", "checksum", "encode_ms",
-                    ).dropDuplicates(["part_id", "column", "snapshot_id"])
-                    metrics = (
-                        all_blocks.groupBy("part_id", "source", "snapshot_id")
-                        .agg(
-                            F.max("n_rows").alias("n_rows"),
-                            F.max(F.when(F.col("column") == "tokens", F.col("n_values"))).alias("n_tokens"),
-                            F.sum("raw_bytes").alias("raw_bytes"),
-                            F.sum("enc_bytes").alias("enc_bytes"),
-                            F.max(F.when(F.col("column") == "tokens", F.col("codec"))).alias("tokens_codec"),
-                            F.max(F.when(F.col("column") == "tokens", F.col("checksum"))).alias("checksum"),
-                            F.max("encode_ms").alias("encode_ms"),
-                        )
-                    )
-                    metrics.write.mode("overwrite").parquet(os.path.join(out_path, "metrics"))
-
-                t(f"[{rep}] metrics rollup+write", rollup)
-                t(f"[{rep}] final agg", lambda: spark.read.parquet(os.path.join(out_path, "metrics")).agg(
-                    F.count("*"), F.sum("n_rows"), F.sum("n_tokens")).collect())
+                t(
+                    f"[{rep}] lineage rollup+write",
+                    lambda: _lineage_rollup(blocks_path, os.path.join(out_path, "metrics")),
+                )
 
         if "decode" in phases:
             print("decode phases:")
