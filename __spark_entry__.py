@@ -310,8 +310,9 @@ def _rt_lineitem_pruned(spark, sf_dir):
         li, "l_orderkey", kinds, "l_orderkey", 1234
     ).select(F.lit("eq").alias("mode"), "*")
     # mode='multi' (round 5): conjunctive pruning — keep sets intersect
-    # across predicates (chained broadcast semi joins), page ranges
-    # intersect inside surviving chunks; selectivities multiply
+    # across predicates (planned on the driver from one metadata read,
+    # applied as a pushed part_id filter), page ranges intersect inside
+    # surviving chunks; selectivities multiply
     multi = roundtrip_filtered_multi(
         li, "l_orderkey", kinds,
         [
@@ -320,8 +321,8 @@ def _rt_lineitem_pruned(spark, sf_dir):
             ("notnull", "l_partkey"),
         ],
     ).select(F.lit("multi").alias("mode"), "*")
-    # mode='any' (round 5): disjunctive pruning — keep sets UNION (one
-    # semi join), page ranges union; IN-list rides as per-value [v, v]
+    # mode='any' (round 5): disjunctive pruning — keep sets UNION on the
+    # driver, page ranges union; IN-list rides as per-value [v, v]
     any_ = roundtrip_filtered_any(
         li, "l_orderkey", kinds,
         [

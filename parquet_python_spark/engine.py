@@ -666,19 +666,13 @@ def _engine_block_files_of_scan(blocks: DataFrame) -> list[str] | None:
     return files
 
 
-def _zone_map_keep(path: str, column: str, lo: int, hi: int) -> set[str]:
-    """part_ids of one block file that may hold a ``column`` value in
-    [lo, hi]: read only the stats columns (parquet's columnar layout leaves
-    the payload bytes untouched) and keep parts whose stats range
-    intersects it, plus legacy parts with no stats row for ``column``."""
+def _zone_map_keep(meta: pa.Table, column: str, lo: int, hi: int) -> set[str]:
+    """part_ids of the blocks metadata ``meta`` (part_id, column,
+    stat_min, stat_max) that may hold a ``column`` value in [lo, hi]:
+    parts whose stats range intersects it, plus legacy parts with no
+    stats row for ``column``."""
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
-    meta = pq.read_table(
-        path,
-        columns=["part_id", "column", "stat_min", "stat_max"],
-        use_threads=False,
-    )
     pids = meta.column("part_id")
     with_stats = pc.and_(
         pc.equal(meta.column("column"), column),
@@ -694,6 +688,9 @@ def _zone_map_keep(path: str, column: str, lo: int, hi: int) -> set[str]:
     keep = set(pc.filter(pids, hit).to_pylist())
     legacy = set(pids.to_pylist()) - set(pc.filter(pids, with_stats).to_pylist())
     return keep | legacy
+
+
+_ZONE_MAP_COLS = ["part_id", "column", "stat_min", "stat_max"]
 
 
 def _decode_files_df(
@@ -725,7 +722,11 @@ def _decode_files_df(
         for batch in batches:
             for i in batch.column("id").to_pylist():
                 path = files_local[int(i)]
-                keep = None if prune is None else _zone_map_keep(path, *prune)
+                # the stats columns alone: the payload bytes stay unread
+                keep = None if prune is None else _zone_map_keep(
+                    pq.read_table(path, columns=_ZONE_MAP_COLS, use_threads=False),
+                    *prune,
+                )
                 if keep is not None and not keep:
                     continue  # payload never read
                 tbl = pq.read_table(path, use_threads=False)
@@ -784,26 +785,19 @@ def decode_blocks_pruned(
 ) -> DataFrame:
     """Zone-map-pruned decode: only partitions whose `column` stats range
     intersects [lo, hi] are shuffled + decoded; the exact predicate is
-    re-applied on the decoded rows.  Blocks written before stats existed
+    re-applied on the decoded rows.  The keep set is planned on the
+    driver from the blocks' stats columns (_zone_map_keep, shared with
+    the file-direct reader) and reaches the blocks scan as a part_id
+    filter.  Blocks written before stats existed
     (stat_min null) are never pruned — correctness over savings."""
     if "stat_min" not in blocks.columns:
         # a blocks table written entirely before stats existed has no
         # stat columns at all (not just null values): the docstring's
         # never-prune promise means decode everything
         return _pruned_residual(decode_blocks(blocks), column, lo, hi)
-    with_stats = blocks.filter(
-        (F.col("column") == column) & F.col("stat_min").isNotNull()
-    ).select("part_id", "stat_min", "stat_max")
-    keep = with_stats.filter(
-        (F.col("stat_max") >= lo) & (F.col("stat_min") <= hi)
-    ).select("part_id")
-    # parts lacking stats rows entirely (legacy blocks) must survive
-    no_stats = blocks.select("part_id").distinct().join(
-        with_stats.select("part_id"), "part_id", "left_anti"
-    )
-    surviving = blocks.join(
-        F.broadcast(keep.union(no_stats)), "part_id", "left_semi"
-    )
+    meta = blocks.select(*_ZONE_MAP_COLS).toArrow()
+    keep = _zone_map_keep(meta, column, lo, hi)
+    surviving = blocks.filter(F.col("part_id").isin(sorted(keep)))
     return _pruned_residual(decode_blocks(surviving), column, lo, hi)
 
 

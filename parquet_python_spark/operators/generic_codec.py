@@ -29,6 +29,7 @@ constant, so the same code holds at 100x the input.
 
 from __future__ import annotations
 
+import functools
 import zlib
 
 import numpy as np
@@ -1187,11 +1188,12 @@ def decode_df_pruned(
     """Decode only the partitions whose [stat_min, stat_max] for
     ``pred_col`` intersects [lo, hi] — min/max block skipping, the thing
     the reference parses from parquet Statistics but never does
-    (parquet.thrift:198-206).  The stats filter pushes down to the blocks
-    parquet scan (Catalyst sees plain column predicates), and the surviving
-    part_ids broadcast into a semi join, so non-qualifying payloads are
-    never read, shuffled, or decoded.  Callers re-apply the exact row
-    predicate after decode (block stats are a superset filter).
+    (parquet.thrift:198-206).  The driver plans the keep set from one
+    read of the chunk statistics, and the surviving part_ids reach the
+    blocks scan as a plain ``part_id IN (...)`` filter, so
+    non-qualifying payloads are never shuffled or decoded.  Callers
+    re-apply the exact row predicate after decode (block stats are a
+    superset filter).
 
     ``pred_col`` may be an int/int96_ts column (exact chunk bounds + the
     intra-chunk page skip), a float column with numeric bounds (exact
@@ -1206,108 +1208,287 @@ def decode_df_pruned(
     )
 
 
+# the chunk statistics every prune plans on: no payload, bitset or page
+# blob ever reaches the driver
+_META_COLS = (
+    "part_id", "column", "n_rows", "n_nulls",
+    "stat_min", "stat_max", "stat_min_str", "stat_max_str",
+)
+
+
+def _chunk_meta(
+    blocks: DataFrame, col_kinds: dict[str, str], cols, hits=()
+) -> pa.Table:
+    """The chunk-statistics rows of ``cols`` (plus the ``hits`` columns,
+    executor-side Bloom tests) as one driver-side Arrow table — the one
+    Spark job a pruned call spends on planning.  The column filter
+    pushes to the blocks scan.
+
+    Loud-fails when a predicate column was never encoded into a
+    NON-EMPTY blocks table: its keep set would otherwise be empty (an
+    AND returns a definitive-looking empty result, an OR silently drops
+    that member's rows, a metadata count returns 0).  An empty blocks
+    table (empty input) is legitimate, so the emptiness probe runs only
+    when the metadata has no rows at all.  Unknown and list kinds have
+    no chunk rows under their own name and are not checked: the
+    predicate dispatch raises the precise kind error for those."""
+    cols = sorted(set(cols))
+    meta = (
+        blocks.filter(F.col("column").isin(cols))
+        .select(*_META_COLS, *hits)
+        .toArrow()
+    )
+    present = set(pc.unique(meta.column("column")).to_pylist())
+    missing = [
+        c for c in cols
+        if c not in present and col_kinds.get(c) not in (None, *_LIST_KINDS)
+    ]
+    if missing and (meta.num_rows or not blocks.select("part_id").isEmpty()):
+        raise ValueError(
+            f"column {missing[0]!r} has no chunks in this blocks table "
+            "(encoded with different col_kinds?)"
+        )
+    return meta
+
+
+def _all(*masks):
+    """Kleene AND: a NULL comparison stays NULL, and _parts drops it,
+    exactly as a Spark filter drops a NULL predicate."""
+    return functools.reduce(pc.and_kleene, masks)
+
+
+def _parts(meta: pa.Table, mask) -> set[int]:
+    """part_ids of the metadata rows whose mask is true (NULL drops)."""
+    return set(pc.filter(meta.column("part_id"), mask).to_pylist())
+
+
+def _keep_parts(blocks: DataFrame, keep: set[int]) -> DataFrame:
+    """The block rows of the kept parts: a literal IN-list that pushes to
+    the blocks scan (no join, nothing to broadcast)."""
+    return blocks.filter(F.col("part_id").isin(sorted(keep)))
+
+
+def _check_int64(values) -> None:
+    """Reject int bounds/values no int64 stat can hold, by name (a Spark
+    literal of one fails deep inside the JVM)."""
+    for v in values:
+        if isinstance(v, int) and not -(2**63) <= v < 2**63:
+            raise ValueError(
+                f"int pred_col bound {v} is outside the int64 range"
+            )
+
+
 def _range_keep(
-    kind: str | None, pred_col: str, lo, hi
+    kind: str | None, meta: pa.Table, pred_col: str, lo, hi
 ) -> tuple:
-    """(overlap keep predicate, page-prune tuple or None, containment
-    predicate) for a range predicate — the kind dispatch shared by the
-    single-/multi-predicate prunes AND the metadata-only count, so the
-    bound normalization (±0 widening, truncated string semantics) lives
-    in exactly one place.  Containment = every present value provably in
+    """(overlap mask, page-prune tuple, containment mask) over the
+    ``meta`` rows for a range predicate — the kind dispatch shared by the
+    pruned decodes AND the metadata aggregates, so the bound
+    normalization (±0 widening, truncated string semantics) lives in
+    exactly one place.  Containment = every present value provably in
     [lo, hi] (an unbounded truncated string upper never claims it)."""
+    col_rows = pc.equal(meta.column("column"), pred_col)
     if kind == "str":
         if not (isinstance(lo, str) and isinstance(hi, str)):
             raise ValueError("str pred_col needs str bounds")
-        keep_pred = (
-            (F.col("column") == pred_col)
-            & (F.col("stat_max_str").isNull() | (F.col("stat_max_str") >= lo))
-            & (F.col("stat_min_str") <= hi)
+        smin = meta.column("stat_min_str")
+        smax = meta.column("stat_max_str")
+        overlap = _all(
+            col_rows,
+            pc.or_kleene(pc.is_null(smax), pc.greater_equal(smax, lo)),
+            pc.less_equal(smin, hi),
+        )
+        # stat_min_str is a PREFIX of the min (>= lo proves min >= lo);
+        # every value sorts <= stat_max_str (truncated successor)
+        contained = _all(
+            col_rows,
+            pc.is_valid(smin), pc.greater_equal(smin, lo),
+            pc.is_valid(smax), pc.less_equal(smax, hi),
         )
         # surviving chunks additionally skip pages via the per-page
         # truncated string bounds (str twin of the int page stats)
-        page_prune = (pred_col, lo, hi)
-        # stat_min_str is a PREFIX of the min (>= lo proves min >= lo);
-        # every value sorts <= stat_max_str (truncated successor)
-        contained = (
-            (F.col("column") == pred_col)
-            & F.col("stat_min_str").isNotNull()
-            & (F.col("stat_min_str") >= lo)
-            & F.col("stat_max_str").isNotNull()
-            & (F.col("stat_max_str") <= hi)
-        )
-    elif kind in ("float64", "float32"):
+        return overlap, (pred_col, lo, hi), contained
+    if kind in ("float64", "float32", "int", "int96_ts"):
         if any(
             isinstance(b, bool) or not isinstance(b, (int, float))
             for b in (lo, hi)
         ):
-            raise ValueError("float pred_col needs numeric bounds")
+            # a str bound would compare as NULL against the int64 stats
+            # and silently prune EVERYTHING — loud-fail instead
+            family = "float" if kind.startswith("float") else "int"
+            raise ValueError(f"{family} pred_col needs numeric bounds")
+    else:
+        # stats exist only for int/float/str kinds; a NULL-stat comparison
+        # would prune EVERYTHING — a silent wrong answer, so reject loudly
+        raise ValueError(
+            f"pred_col {pred_col!r} has kind {kind!r}; "
+            "min/max pruning needs an int, int96_ts, float or str column"
+        )
+    if kind.startswith("float"):
         # same monotone bits transform as encode: compare in int64 space.
         # The transform distinguishes -0.0 (< +0.0) while IEEE/Spark
         # comparison does not, so widen zero bounds to the ±0 pair's outer
         # edge — otherwise a chunk whose max is -0.0 would be pruned for
         # lo=0.0 even though -0.0 >= 0.0 is true row-side (the widening is
         # equally sound for containment: IEEE equates the pair)
-        olo = _float_ordered_scalar(-0.0 if lo == 0 else lo)
-        ohi = _float_ordered_scalar(+0.0 if hi == 0 else hi)
-        keep_pred = (
-            (F.col("column") == pred_col)
-            & (F.col("stat_max") >= olo)
-            & (F.col("stat_min") <= ohi)
-        )
-        page_prune = (pred_col, olo, ohi)
-        contained = (
-            (F.col("column") == pred_col)
-            & (F.col("stat_min") >= olo)
-            & (F.col("stat_max") <= ohi)
-        )
-    elif kind in ("int", "int96_ts"):
-        if any(
-            isinstance(b, bool) or not isinstance(b, (int, float))
-            for b in (lo, hi)
-        ):
-            # a str bound would cast to NULL against the bigint stats and
-            # silently prune EVERYTHING — same loud-fail policy as the
-            # str/float branches
-            raise ValueError("int pred_col needs numeric bounds")
-        keep_pred = (
-            (F.col("column") == pred_col)
-            & (F.col("stat_max") >= lo)
-            & (F.col("stat_min") <= hi)
-        )
-        page_prune = (pred_col, lo, hi)
-        contained = (
-            (F.col("column") == pred_col)
-            & (F.col("stat_min") >= lo)
-            & (F.col("stat_max") <= hi)
-        )
+        lo = _float_ordered_scalar(-0.0 if lo == 0 else lo)
+        hi = _float_ordered_scalar(+0.0 if hi == 0 else hi)
     else:
-        # stats exist only for int/str kinds; a NULL-stat comparison would
-        # prune EVERYTHING — a silent wrong answer, so reject loudly
+        _check_int64((lo, hi))
+    smin, smax = meta.column("stat_min"), meta.column("stat_max")
+    overlap = _all(
+        col_rows, pc.greater_equal(smax, lo), pc.less_equal(smin, hi)
+    )
+    contained = _all(
+        col_rows, pc.greater_equal(smin, lo), pc.less_equal(smax, hi)
+    )
+    return overlap, (pred_col, lo, hi), contained
+
+
+@F.pandas_udf(T.BooleanType())
+def _bloom_hit(bloom: pd.Series, probes: pd.Series) -> pd.Series:
+    """Executor-side Bloom test of each metadata row: may ANY probe be in
+    the chunk (IN-list semantics; a single probe is the eq case)?  A
+    missing filter (high-cardinality chunk) conservatively admits.
+    Bitsets are tested where the metadata rows live — never on the
+    driver.  (A DataType, not a DDL string, as the return type: workers
+    import this module without a SparkContext to parse one.)"""
+    return pd.Series(
+        [
+            b is None or any(bloom_might_contain(bytes(b), int(p)) for p in ps)
+            for b, ps in zip(bloom, probes)
+        ],
+        dtype=bool,
+    )
+
+
+def _bloom_hit_col(col_kinds: dict[str, str], pred: tuple):
+    """The metadata-job column holding one eq/IN predicate's Bloom test,
+    or None for the vacuous empty IN.  Validates the kind and the values
+    at plan time, before any job runs (SQL `IN (..., NULL)` is a common
+    source of a bad value)."""
+    op, pred_col = pred[0], pred[1]
+    values = [pred[2]] if op == "eq" else pred[2]
+    if not values:
+        return None
+    kind = col_kinds.get(pred_col)
+    if kind == "str":
+        if not all(isinstance(v, str) for v in values):
+            raise ValueError("str pred_col needs a str value")
+        # the SAME JVM hash the encode used; Catalyst folds it to a
+        # constant
+        probes = [F.xxhash64(F.lit(v)) for v in values]
+    elif kind in ("int", "int96_ts"):
+        if not all(
+            isinstance(v, int) and not isinstance(v, bool) for v in values
+        ):
+            raise ValueError("int pred_col needs int values")
+        _check_int64(values)
+        probes = [F.lit(v).cast("long") for v in values]
+    else:
         raise ValueError(
             f"pred_col {pred_col!r} has kind {kind!r}; "
-            "min/max pruning needs an int, int96_ts, float or str column"
+            "bloom pruning needs an int, int96_ts or str column"
         )
-    return keep_pred, page_prune, contained
+    return F.when(
+        F.col("column") == pred_col, _bloom_hit(F.col("bloom"), F.array(*probes))
+    )
 
 
-def _bloom_keep_udf(probes: tuple):
-    """Executor-side Bloom membership test over the metadata rows — a
-    factory so each predicate binds its own probes (a loop-shared closure
-    would late-bind to the last probes at pickle time).  Admits the
-    partition when ANY probe may be present (IN-list semantics; a single
-    probe is the eq case).  A missing filter (high-cardinality chunk)
-    conservatively keeps the partition; bitsets are deserialized and
-    tested where the metadata rows already live — never on the driver."""
+def _pred_keeps(
+    blocks: DataFrame, col_kinds: dict[str, str], preds: list[tuple]
+) -> list[tuple]:
+    """(keep part_id set, page bound tuples) per predicate, planned on the
+    driver from ONE metadata read (each eq/IN predicate adds its Bloom
+    test as one more column of that read)."""
+    hits = {
+        i: _bloom_hit_col(col_kinds, p)
+        for i, p in enumerate(preds)
+        if p[0] in ("eq", "in")
+    }
+    meta = _chunk_meta(
+        blocks, col_kinds, [p[1] for p in preds],
+        [h.alias(f"_hit{i}") for i, h in hits.items() if h is not None],
+    )
+    return [
+        _pred_keep(col_kinds, meta, p, f"_hit{i}")
+        for i, p in enumerate(preds)
+    ]
 
-    @F.pandas_udf("boolean")
-    def _might_contain(bloom: pd.Series) -> pd.Series:
-        return bloom.map(
-            lambda b: True
-            if b is None
-            else any(bloom_might_contain(bytes(b), p) for p in probes)
+
+def _pred_keep(
+    col_kinds: dict[str, str], meta: pa.Table, pred: tuple, hit: str
+) -> tuple:
+    """(keep part_id set, page bound tuples) for one predicate.
+
+    The page bounds are a list of (col, lo, hi) whose UNION covers every
+    row the predicate can match (range -> one tuple, eq/in -> one [v, v]
+    per value, [] for the vacuous empty IN); null predicates bound pages
+    with the sentinel (col, None, want_null), which routes to the
+    per-page null counts inside decode_df.  ``hit`` names the predicate's
+    Bloom column in ``meta`` (eq/in only)."""
+    op, pred_col = pred[0], pred[1]
+    kind = col_kinds.get(pred_col)
+    col_rows = pc.equal(meta.column("column"), pred_col)
+    if op == "range":
+        overlap, page_prune, _ = _range_keep(kind, meta, pred_col, *pred[2:4])
+        return _parts(meta, overlap), [page_prune]
+    if op in ("eq", "in"):
+        # eq is the single-value IN: both prune a partition when ANY
+        # probe value may be present (stats OR'd per value, Bloom
+        # membership any-of), and page-skip via the UNION of each
+        # value's degenerate range [v, v]
+        values = [pred[2]] if op == "eq" else pred[2]
+        if not values:
+            return set(), []  # x IN () is vacuously false: decode nothing
+        if kind == "str":
+            smin = meta.column("stat_min_str")
+            smax = meta.column("stat_max_str")
+            per_val = [
+                _all(
+                    pc.is_valid(smin),
+                    pc.less_equal(smin, v),
+                    pc.or_kleene(pc.is_null(smax), pc.greater_equal(smax, v)),
+                )
+                for v in values
+            ]
+        else:
+            smin, smax = meta.column("stat_min"), meta.column("stat_max")
+            # a NULL stat keeps the row (legacy chunks encoded without
+            # stats), EXCEPT when the chunk is all-null: NULL never equals
+            # a probe value, so those chunks can never match (ADVICE r5)
+            present = pc.less(meta.column("n_nulls"), meta.column("n_rows"))
+            per_val = [
+                _all(
+                    pc.or_kleene(
+                        pc.is_null(smin),
+                        _all(pc.less_equal(smin, v), pc.greater_equal(smax, v)),
+                    ),
+                    present,
+                )
+                for v in values
+            ]
+        stats = functools.reduce(pc.or_kleene, per_val)
+        return (
+            _parts(meta, _all(col_rows, stats, meta.column(hit))),
+            [(pred_col, v, v) for v in values],
         )
-
-    return _might_contain
+    if op in ("isnull", "notnull"):
+        if kind is None or kind in _LIST_KINDS:
+            # list columns reject nulls at encode, so a null predicate
+            # on one is a caller bug — fail loudly
+            raise ValueError(
+                f"pred_col {pred_col!r} has kind {kind!r}; "
+                "null-count pruning needs a scalar column"
+            )
+        n_nulls = meta.column("n_nulls")
+        has = (
+            pc.greater(n_nulls, 0)
+            if op == "isnull"
+            else pc.less(n_nulls, meta.column("n_rows"))
+        )
+        return _parts(meta, _all(col_rows, has)), [(pred_col, None, op == "isnull")]
+    raise ValueError(f"unknown predicate op {op!r}")
 
 
 def decode_df_pruned_multi(
@@ -1324,148 +1505,24 @@ def decode_df_pruned_multi(
 
     ``preds`` entries: ``("range", col, lo, hi)``, ``("eq", col, value)``,
     ``("in", col, [v1, ...])``, ``("isnull", col)``, ``("notnull", col)``.
-    Chunk level: each predicate's keep set is a plain pushed-down
-    metadata filter (plus the executor-side Bloom UDF for eq/in) feeding
-    a broadcast left-semi join — chained joins intersect the sets without
-    moving payloads.  Page level: int/str equality rides the zone maps as
-    the degenerate range [v, v], IN-lists as the UNION of their values'
-    ranges, and null predicates skip pages through the per-page null
-    counts (null-free pages for IS NULL, all-null pages for IS NOT NULL).
+    Chunk level: one metadata read (plus the executor-side Bloom test
+    for eq/in) gives each predicate's keep set on the driver; the sets
+    intersect there and reach the decode as a pushed part_id filter.
+    Page level: int/str equality rides the zone maps as the degenerate
+    range [v, v], IN-lists as the UNION of their values' ranges, and
+    null predicates skip pages through the per-page null counts
+    (null-free pages for IS NULL, all-null pages for IS NOT NULL).
     Output is a SUPERSET of matching rows — callers re-apply the exact
     row predicate, same contract as every other pruned decode."""
-    preds = _normalize_preds(preds)
-    for c in sorted({p[1] for p in preds}):
-        # a predicate column with no chunk rows would silently produce an
-        # empty keep set (an empty result presented as definitive);
-        # unknown/list kinds skip the probe — the op dispatch raises the
-        # precise kind error for those
-        if col_kinds.get(c) is None or col_kinds.get(c) in _LIST_KINDS:
-            continue
-        _require_encoded_column(blocks, blocks.filter(F.col("column") == c), c)
-    pruned = blocks
-    page_prunes: list = []
-    for pred in preds:
-        keep_df, page_tuples = _pred_keep(blocks, col_kinds, pred)
-        if page_tuples:
-            page_prunes.append(
-                page_tuples[0] if len(page_tuples) == 1 else page_tuples
-            )
-        pruned = pruned.join(F.broadcast(keep_df), "part_id", "left_semi")
+    planned = _pred_keeps(blocks, col_kinds, _normalize_preds(preds))
+    keep = set.intersection(*(k for k, _ in planned))
+    page_prunes = [
+        pages[0] if len(pages) == 1 else pages for _, pages in planned if pages
+    ]
     return decode_df(
-        pruned, key_col, col_kinds, out_schema,
+        _keep_parts(blocks, keep), key_col, col_kinds, out_schema,
         prune=page_prunes or None,
     )
-
-
-def _pred_keep(blocks: DataFrame, col_kinds: dict[str, str], pred: tuple):
-    """(keep part_id DataFrame, page bound tuples) for one predicate.
-
-    The page bounds are a list of (col, lo, hi) whose UNION covers every
-    row the predicate can match (range -> one tuple, eq/in -> one [v, v]
-    per value, [] for the vacuous empty IN); None means the predicate has
-    no page-level bound (null predicates — chunks only)."""
-    op, pred_col = pred[0], pred[1]
-    kind = col_kinds.get(pred_col)
-    if op == "range":
-        keep_pred, page_prune, _ = _range_keep(kind, pred_col, *pred[2:4])
-        return (
-            blocks.filter(keep_pred).select("part_id").distinct(),
-            # a kind with no page bound (None per _range_keep's contract)
-            # means chunks-only, same as the null predicates — never wrap
-            # None in a list (it would unpack inside the Arrow decode)
-            [page_prune] if page_prune is not None else None,
-        )
-    if op in ("eq", "in"):
-        # eq is the single-value IN: both prune a partition when ANY
-        # probe value may be present (stats OR'd per value, Bloom
-        # membership any-of), and page-skip via the UNION of each
-        # value's degenerate range [v, v]
-        values = [pred[2]] if op == "eq" else list(pred[2])
-        if op == "in" and not values:
-            # x IN () is vacuously false: decode nothing
-            return blocks.select("part_id").limit(0), []
-        if kind == "str":
-            if not all(isinstance(v, str) for v in values):
-                raise ValueError("str pred_col needs a str value")
-            # hash the literals through the SAME JVM function used at
-            # encode (metadata-sized one-row job for the whole list)
-            hrow = (
-                blocks.sparkSession.range(1)
-                .select(
-                    *[
-                        F.xxhash64(F.lit(v)).alias(f"h{i}")
-                        for i, v in enumerate(values)
-                    ]
-                )
-                .first()
-            )
-            probes = tuple(int(hrow[f"h{i}"]) for i in range(len(values)))
-            per_val = [
-                F.col("stat_min_str").isNotNull()
-                & (F.col("stat_min_str") <= v)
-                & (
-                    F.col("stat_max_str").isNull()
-                    | (F.col("stat_max_str") >= v)
-                )
-                for v in values
-            ]
-        elif kind in ("int", "int96_ts"):
-            if not all(
-                isinstance(v, int) and not isinstance(v, bool)
-                for v in values
-            ):
-                # fail at plan time, not inside the executor-side
-                # Bloom UDF (SQL `IN (..., NULL)` is a common source)
-                raise ValueError("int pred_col needs int values")
-            probes = tuple(values)
-            # a NULL stat keeps the row (legacy chunks encoded without
-            # stats), EXCEPT when the chunk is all-null: NULL never equals
-            # a probe value, so those chunks can never match (ADVICE r5)
-            per_val = [
-                (
-                    F.col("stat_min").isNull()
-                    | ((F.col("stat_min") <= v) & (F.col("stat_max") >= v))
-                )
-                & (F.col("n_nulls") < F.col("n_rows"))
-                for v in values
-            ]
-        else:
-            raise ValueError(
-                f"pred_col {pred_col!r} has kind {kind!r}; "
-                "bloom pruning needs an int, int96_ts or str column"
-            )
-        stats_pred = per_val[0]
-        for c in per_val[1:]:
-            stats_pred = stats_pred | c
-        keep_df = (
-            blocks.filter(F.col("column") == pred_col)
-            # stats prune first (free, JVM, pushes to the blocks scan)
-            .filter(stats_pred)
-            .filter(_bloom_keep_udf(probes)(F.col("bloom")))
-            .select("part_id")
-            .distinct()
-        )
-        return keep_df, [(pred_col, v, v) for v in values]
-    if op in ("isnull", "notnull"):
-        if kind is None or kind in _LIST_KINDS:
-            # list columns reject nulls at encode, so a null predicate
-            # on one is a caller bug — fail loudly
-            raise ValueError(
-                f"pred_col {pred_col!r} has kind {kind!r}; "
-                "null-count pruning needs a scalar column"
-            )
-        keep_pred = (F.col("column") == pred_col) & (
-            F.col("n_nulls") > 0
-            if op == "isnull"
-            else F.col("n_nulls") < F.col("n_rows")
-        )
-        # page bound: the sentinel (col, None, want_null) routes to the
-        # per-page null counts inside decode_df
-        return (
-            blocks.filter(keep_pred).select("part_id").distinct(),
-            [(pred_col, None, op == "isnull")],
-        )
-    raise ValueError(f"unknown predicate op {op!r}")
 
 
 def decode_df_pruned_any(
@@ -1476,39 +1533,22 @@ def decode_df_pruned_any(
     preds: list[tuple],
 ) -> DataFrame:
     """Disjunctive (OR) predicate pruning: a partition decodes when ANY
-    predicate admits it (union of the per-predicate keep sets — one
-    unionAll + distinct, still metadata-only, one broadcast semi join),
-    and surviving chunks decode the UNION of every predicate's page row
-    ranges (one union group); null members contribute their per-page
-    null-count bounds to the same union, so a chunk admitted only by an
-    IS NULL member still page-skips its null-free pages.  Same pred
-    grammar as decode_df_pruned_multi; same superset-then-re-filter
-    contract.  With decode_df_pruned_multi this completes the predicate
-    algebra: arbitrary AND-of-atoms and OR-of-atoms prunes (compose
-    row-side for deeper nesting)."""
-    preds = _normalize_preds(preds)
-    for c in sorted({p[1] for p in preds}):
-        # an unencoded member would silently DROP the rows only it admits
-        # — a wrong superset, worse than the AND case's empty result;
-        # unknown/list kinds fall through to the op dispatch's kind error
-        if col_kinds.get(c) is None or col_kinds.get(c) in _LIST_KINDS:
-            continue
-        _require_encoded_column(blocks, blocks.filter(F.col("column") == c), c)
-    keep = None
-    union_tuples: list = []
-    page_ok = True
-    for pred in preds:
-        keep_df, page_tuples = _pred_keep(blocks, col_kinds, pred)
-        keep = keep_df if keep is None else keep.unionAll(keep_df)
-        if page_tuples is None:
-            page_ok = False
-        else:
-            union_tuples.extend(page_tuples)
-    pruned = blocks.join(
-        F.broadcast(keep.distinct()), "part_id", "left_semi"
+    predicate admits it (the union of the per-predicate keep sets, from
+    the same one metadata read), and surviving chunks decode the UNION
+    of every predicate's page row ranges (one union group); null members
+    contribute their per-page null-count bounds to the same union, so a
+    chunk admitted only by an IS NULL member still page-skips its
+    null-free pages.  Same pred grammar as decode_df_pruned_multi; same
+    superset-then-re-filter contract.  With decode_df_pruned_multi this
+    completes the predicate algebra: arbitrary AND-of-atoms and
+    OR-of-atoms prunes (compose row-side for deeper nesting)."""
+    planned = _pred_keeps(blocks, col_kinds, _normalize_preds(preds))
+    keep = set().union(*(k for k, _ in planned))
+    union_tuples = [t for _, pages in planned for t in pages]
+    return decode_df(
+        _keep_parts(blocks, keep), key_col, col_kinds, out_schema,
+        prune=[union_tuples] if union_tuples else None,
     )
-    prune = [union_tuples] if (page_ok and union_tuples) else None
-    return decode_df(pruned, key_col, col_kinds, out_schema, prune=prune)
 
 
 def decode_df_pruned_eq(
@@ -1524,13 +1564,14 @@ def decode_df_pruned_eq(
     (zone maps only help range predicates; a point lookup on a
     non-clustered column prunes nothing through min/max).
 
-    Scale shape: the stats prune is a plain pushed-down column predicate;
-    the bloom membership test runs EXECUTOR-side (vectorized pandas UDF
-    over the metadata rows) so bitsets — up to ~80 KB/chunk — never move
-    to the driver at any chunk count.  Only the surviving part_ids flow
-    into the broadcast semi-join prune, exactly like the stats path.
-    Callers re-apply the exact predicate after decode (Bloom filters
-    admit false positives, never false negatives).
+    Scale shape: the bloom membership test runs EXECUTOR-side (a
+    vectorized pandas UDF column of the one metadata read) so bitsets —
+    up to ~80 KB/chunk — never move to the driver at any chunk count;
+    the driver sees one boolean per chunk, ANDs it with the stats test
+    and hands the surviving part_ids to the decode as a pushed filter,
+    exactly like the stats path.  Callers re-apply the exact predicate
+    after decode (Bloom filters admit false positives, never false
+    negatives).
 
     ``pred_col`` may be int/int96_ts (bloom over the values) or str
     (bloom over JVM-side xxhash64 of the values — the query literal is
@@ -1558,9 +1599,9 @@ def decode_df_pruned_null(
     chunks with at least one present value.  Exact counts (not min/max
     bounds), so the skip is airtight for every scalar kind — callers
     still re-apply the row predicate because surviving chunks hold a mix.
-    Same scale shape as the stats prune: a plain pushed-down column
-    predicate feeds a broadcast semi join; skipped payloads are never
-    read, shuffled, or decoded."""
+    Same scale shape as the stats prune: the driver plans the keep set
+    from the metadata read and the decode's part_id filter pushes to the
+    blocks scan; skipped payloads are never shuffled or decoded."""
     return decode_df_pruned_multi(
         blocks, key_col, col_kinds, out_schema,
         [("isnull" if want_null else "notnull", pred_col)],
@@ -1735,58 +1776,56 @@ def count_filtered_meta(
     of the min (stat_min_str >= lo proves min >= lo) and every value
     sorts <= stat_max_str (truncated-successor), so stat_max_str <= hi
     proves containment; a NULL (unbounded) truncated upper bound never
-    claims containment.  Returns a 1-row DataFrame (``cnt`` long) — no
-    driver-side arithmetic."""
+    claims containment.  Returns a 1-row DataFrame (``cnt`` long): the
+    driver sums the contained chunks, and with no boundary chunk the
+    answer is a literal row."""
     kind = col_kinds.get(pred_col)
+    meta = _chunk_meta(blocks, col_kinds, [pred_col])
     # ONE source of truth for the bound normalization (±0 widening,
-    # truncated string semantics, float-bound validation): the same
-    # dispatch every pruned decode uses
-    overlap, page_prune, contained = _range_keep(kind, pred_col, lo, hi)
-    meta = blocks.filter(F.col("column") == pred_col)
-    _require_encoded_column(blocks, meta, pred_col)
-    contained = contained & (F.col("n_nulls") == 0)
-    # metadata-only branch: fully-contained chunks contribute n_rows
-    meta_cnt = meta.filter(contained).agg(
-        F.coalesce(F.sum("n_rows"), F.lit(0)).alias("cnt")
-    )
-    # boundary branch: overlapping-but-not-contained chunks decode
-    # (page-pruned) and count the exact predicate
-    boundary_keep = (
-        meta.filter(overlap & ~contained).select("part_id").distinct()
-    )
-    # semi-join the single pred_col's chunk rows (decode reads nothing
-    # else; the full blocks table would ship every column's payload blobs
-    # through the shuffle to decode one column)
-    boundary_blocks = meta.join(
-        F.broadcast(boundary_keep), "part_id", "left_semi"
-    )
-    pred_kinds = {pred_col: kind}
-    out_schema = T.StructType(
-        [
-            T.StructField(
-                pred_col,
-                {
-                    "int": T.LongType(),
-                    "int96_ts": T.LongType(),
-                    "float64": T.DoubleType(),
-                    "float32": T.FloatType(),
-                    "str": T.StringType(),
-                }[kind],
-                True,
-            )
-        ]
-    )
-    boundary_cnt = (
-        decode_df(
-            boundary_blocks, pred_col, pred_kinds, out_schema,
-            prune=page_prune,
-        )
+    # truncated string semantics, bound validation): the same dispatch
+    # every pruned decode uses
+    overlap, page_prune, contained = _range_keep(kind, meta, pred_col, lo, hi)
+    contained = pc.and_kleene(contained, pc.equal(meta.column("n_nulls"), 0))
+    cnt = pc.sum(pc.filter(meta.column("n_rows"), contained)).as_py() or 0
+    boundary = _parts(meta, pc.and_kleene(overlap, pc.invert(contained)))
+    if not boundary:
+        return _literal_row(blocks, cnt=cnt)
+    return (
+        _decode_col(blocks, pred_col, kind, boundary, page_prune)
         .filter((F.col(pred_col) >= lo) & (F.col(pred_col) <= hi))
-        .agg(F.count("*").alias("cnt"))
+        .agg((F.count("*") + F.lit(cnt)).cast("long").alias("cnt"))
     )
-    return meta_cnt.unionAll(boundary_cnt).agg(
-        F.sum("cnt").cast("long").alias("cnt")
+
+
+def _literal_row(blocks: DataFrame, **values: int | None) -> DataFrame:
+    """A one-row DataFrame of long columns holding an answer the driver
+    already has from the metadata: an inline VALUES table is a local
+    relation, so collecting it runs no Spark job."""
+    cells = ", ".join(f"CAST(:{c} AS BIGINT)" for c in values)
+    return blocks.sparkSession.sql(
+        f"SELECT * FROM VALUES ({cells}) AS t({', '.join(values)})",
+        args=values,
     )
+
+
+_SCALAR_TYPES = {
+    "int": T.LongType(),
+    "int96_ts": T.LongType(),
+    "float64": T.DoubleType(),
+    "float32": T.FloatType(),
+    "str": T.StringType(),
+}
+
+
+def _decode_col(
+    blocks: DataFrame, col: str, kind: str, parts: set[int], prune
+) -> DataFrame:
+    """Decode only ``col``'s chunk rows of ``parts`` (page-pruned by
+    ``prune``): the metadata aggregates need nothing else, and the full
+    blocks rows would ship every column's payload through the shuffle."""
+    rows = _keep_parts(blocks, parts).filter(F.col("column") == col)
+    out_schema = T.StructType([T.StructField(col, _SCALAR_TYPES[kind], True)])
+    return decode_df(rows, col, {col: kind}, out_schema, prune=prune)
 
 
 def minmax_filtered_meta(
@@ -1816,40 +1855,26 @@ def minmax_filtered_meta(
             f"pred_col {pred_col!r} has kind {kind!r}; "
             "metadata min/max needs an int or int96_ts column"
         )
-    overlap, page_prune, contained = _range_keep(kind, pred_col, lo, hi)
-    meta = blocks.filter(F.col("column") == pred_col)
-    _require_encoded_column(blocks, meta, pred_col)
-    # metadata candidates (conditional aggregation over the chunk stats)
-    cand = meta.agg(
-        F.min(
-            F.when(overlap & (F.col("stat_min") >= lo), F.col("stat_min"))
-        ).alias("mn"),
-        F.max(
-            F.when(overlap & (F.col("stat_max") <= hi), F.col("stat_max"))
-        ).alias("mx"),
-    )
+    meta = _chunk_meta(blocks, col_kinds, [pred_col])
+    overlap, page_prune, contained = _range_keep(kind, meta, pred_col, lo, hi)
+    smin, smax = meta.column("stat_min"), meta.column("stat_max")
+    mn = pc.min(pc.filter(smin, _all(overlap, pc.greater_equal(smin, lo))))
+    mx = pc.max(pc.filter(smax, _all(overlap, pc.less_equal(smax, hi))))
+    mn, mx = mn.as_py(), mx.as_py()
     # chunks straddling a bound (overlapping but not contained — the SAME
     # classifier count_filtered_meta uses) decode page-pruned for the
     # exact extremes of their in-range values
-    straddle = (
-        meta.filter(overlap & ~contained).select("part_id").distinct()
-    )
-    dec_blocks = meta.join(F.broadcast(straddle), "part_id", "left_semi")
-    out_schema = T.StructType([T.StructField(pred_col, T.LongType(), True)])
-    dec = (
-        decode_df(
-            dec_blocks, pred_col, {pred_col: kind}, out_schema,
-            prune=page_prune,
-        )
+    straddle = _parts(meta, pc.and_kleene(overlap, pc.invert(contained)))
+    if not straddle:
+        return _literal_row(blocks, mn=mn, mx=mx)
+    # least/greatest skip NULLs, so an empty side never masks the other
+    return (
+        _decode_col(blocks, pred_col, kind, straddle, page_prune)
         .filter((F.col(pred_col) >= lo) & (F.col(pred_col) <= hi))
         .agg(
-            F.min(pred_col).alias("mn"), F.max(pred_col).alias("mx")
+            F.least(F.min(pred_col), F.lit(mn).cast("long")).alias("mn"),
+            F.greatest(F.max(pred_col), F.lit(mx).cast("long")).alias("mx"),
         )
-    )
-    # min/max skip NULLs, so an empty branch never masks the other
-    return cand.unionAll(dec).agg(
-        F.min("mn").cast("long").alias("mn"),
-        F.max("mx").cast("long").alias("mx"),
     )
 
 
@@ -1869,18 +1894,14 @@ def topk_filtered_meta(
     values proves the k smallest values are all <= B = that prefix's
     largest stat_max (the prefix alone contains >= k values <= B).  Only
     chunks with stat_min <= B can contribute, so the rest never decode.
-    Descending mirrors with stat_min / >=.  The walk is a window over the
-    METADATA rows (one per chunk — metadata-sized by construction, so the
-    single-partition window is fine); B is materialized once (a
-    metadata-sized job) and reaches the chunk keep filter and the page
-    prune as a literal, so BOUNDARY chunks page-skip everything provably
-    beyond it.  If the table holds fewer than k present values B is NULL
-    and every chunk decodes (the correct degenerate).  Int kinds only
-    (float stats live in ordered-bits space; string bounds are
-    truncated, not attainable).  Ties at the k-th value are broken
+    Descending mirrors with stat_min / >=.  The walk is a cumulative sum
+    over the metadata rows on the driver (one row per chunk); B reaches
+    the page prune as a literal, so BOUNDARY chunks page-skip everything
+    provably beyond it.  If the table holds fewer than k present values
+    there is no B and every chunk decodes (the correct degenerate).  Int
+    kinds only (float stats live in ordered-bits space; string bounds
+    are truncated, not attainable).  Ties at the k-th value are broken
     arbitrarily, exactly like Spark's own orderBy().limit()."""
-    from pyspark.sql import Window
-
     kind = col_kinds.get(col)
     if kind not in ("int", "int96_ts"):
         raise ValueError(
@@ -1889,89 +1910,29 @@ def topk_filtered_meta(
         )
     if k <= 0:
         raise ValueError("k must be positive")
-    meta0 = blocks.filter(F.col("column") == col)
-    _require_encoded_column(blocks, meta0, col)
+    meta = _chunk_meta(blocks, col_kinds, [col])
     # all-null chunks (NULL stats) hold no present values: not candidates
-    meta = meta0.filter(F.col("stat_min").isNotNull())
-    # The bound B and the keep set are derived from a checkpointed NARROW
-    # stats projection (no payload column): with an unpersisted blocks
-    # DataFrame the window action would otherwise re-execute the entire
-    # encode lineage once for B and again for the keep semi-join (ADVICE
-    # r5).  The decode itself still executes the lineage once when the
-    # result is consumed — callers that reuse blocks should persist them,
-    # as the round-trip helpers do.
-    stats_meta = meta.select(
-        "part_id", "stat_min", "stat_max", "n_rows", "n_nulls"
-    ).localCheckpoint(eager=False)
+    meta = meta.filter(pc.is_valid(meta.column("stat_min")))
     edge, cmp_col = (
         ("stat_max", "stat_min") if ascending else ("stat_min", "stat_max")
     )
-    order = F.col(edge).asc() if ascending else F.col(edge).desc()
-    w = Window.orderBy(order, F.col("part_id")).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    acc = stats_meta.withColumn(
-        "cum", F.sum(F.col("n_rows") - F.col("n_nulls")).over(w)
-    )
-    # materialize B ONCE (metadata-sized job — the encoded-column guard
-    # above already runs actions) and feed it to the keep filter and the
-    # page prune as a literal: routing it through a broadcast join would
-    # re-evaluate the window (and an unpersisted encode lineage) a second
-    # time when the result is consumed
-    b_row = (
-        acc.filter(F.col("cum") >= k)
-        .agg((F.min(edge) if ascending else F.max(edge)).alias("b"))
-        .first()
-    )
-    b_val = None if b_row["b"] is None else int(b_row["b"])
-    if b_val is None:
-        keep = stats_meta.select("part_id").distinct()
-        prune = None
+    walk = meta.sort_by([(edge, "ascending" if ascending else "descending")])
+    present = pc.subtract(walk.column("n_rows"), walk.column("n_nulls"))
+    reach = np.flatnonzero(np.cumsum(present.to_numpy()) >= k)
+    if reach.size == 0:
+        keep, prune = set(meta.column("part_id").to_pylist()), None
     else:
-        keep = (
-            stats_meta.filter(
-                (F.col(cmp_col) <= b_val)
-                if ascending
-                else (F.col(cmp_col) >= b_val)
-            )
-            .select("part_id")
-            .distinct()
-        )
+        b = walk.column(edge)[int(reach[0])].as_py()
+        cmp = pc.less_equal if ascending else pc.greater_equal
+        keep = _parts(meta, cmp(meta.column(cmp_col), b))
         # boundary chunks page-skip everything provably beyond B
-        prune = (
-            (col, -(2**63), b_val) if ascending else (col, b_val, 2**63 - 1)
-        )
-    # semi-join the SINGLE target column's chunk rows (decode only needs
-    # them — shipping every column's payload blobs through the shuffle
-    # would multiply the decoded-side bytes by the table's width)
-    pruned = meta.join(F.broadcast(keep), "part_id", "left_semi")
-    out_schema = T.StructType([T.StructField(col, T.LongType(), True)])
-    dec = decode_df(pruned, col, {col: kind}, out_schema, prune=prune)
+        prune = (col, -(2**63), b) if ascending else (col, b, 2**63 - 1)
+    dec = _decode_col(blocks, col, kind, keep, prune)
     return (
         dec.filter(F.col(col).isNotNull())
         .orderBy(F.col(col).asc() if ascending else F.col(col).desc())
         .limit(k)
     )
-
-
-def _require_encoded_column(
-    blocks: DataFrame, meta: DataFrame, pred_col: str
-) -> None:
-    """Loud-fail when ``pred_col`` was never encoded into a NON-EMPTY
-    blocks table: a metadata count over a missing column would otherwise
-    return a definitive-looking 0 for both IS NULL and IS NOT NULL.  An
-    empty blocks table (empty input) is legitimate — 0 is the truth.
-    Metadata-sized check (pushed filter + limit 1)."""
-    # probe on a single narrow column: take(1) on the full schema would
-    # ship a chunk payload blob to the driver just to test emptiness
-    if (
-        meta.select("part_id").isEmpty()
-        and not blocks.select("part_id").isEmpty()
-    ):
-        raise ValueError(
-            f"column {pred_col!r} has no chunks in this blocks table "
-            "(encoded with different col_kinds?)"
-        )
 
 
 def count_null_meta(
@@ -1991,14 +1952,10 @@ def count_null_meta(
             f"pred_col {pred_col!r} has kind {kind!r}; "
             "null counting needs a scalar column"
         )
-    meta = blocks.filter(F.col("column") == pred_col)
-    _require_encoded_column(blocks, meta, pred_col)
-    term = (
-        F.col("n_nulls") if want_null else F.col("n_rows") - F.col("n_nulls")
-    )
-    return meta.agg(
-        F.coalesce(F.sum(term), F.lit(0)).cast("long").alias("cnt")
-    )
+    meta = _chunk_meta(blocks, col_kinds, [pred_col])
+    nulls = pc.sum(meta.column("n_nulls")).as_py() or 0
+    rows = pc.sum(meta.column("n_rows")).as_py() or 0
+    return _literal_row(blocks, cnt=nulls if want_null else rows - nulls)
 
 
 def _encode_persisted(df, key_col, col_kinds, n_parts):

@@ -6,6 +6,8 @@ The reference parses parquet Statistics{min,max} but never consults them
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -184,29 +186,48 @@ def test_bloom_pruned_equality_roundtrip(spark):
     assert len(admitted) < len(meta), (len(admitted), len(meta))
 
 
-def test_bloom_prune_is_executor_side():
+def test_bloom_prune_is_executor_side(spark, monkeypatch):
     """The driver must never hold bloom bitsets: the membership test runs
-    in a pandas UDF over the metadata rows, and the only driver-visible
-    artifact is the broadcast part_id set.  Structural guard: no .collect(
-    anywhere in decode_df_pruned_eq."""
-    import inspect
+    in a pandas UDF over the metadata rows, so the driver-side metadata
+    table of an eq plan and of an IN plan holds one boolean per chunk and
+    predicate, and no binary column."""
+    import pyarrow as pa
 
-    from parquet_python_spark.operators.generic_codec import (
-        _bloom_keep_udf,
-        _pred_keep,
-        decode_df_pruned_eq,
-        decode_df_pruned_multi,
-    )
+    from parquet_python_spark.operators import generic_codec as gc
 
-    src = (
-        inspect.getsource(decode_df_pruned_eq)
-        + inspect.getsource(decode_df_pruned_multi)
-        + inspect.getsource(_pred_keep)
+    df = spark.range(10_000).select(
+        F.col("id").alias("k"),
+        (F.col("id") * 3 % 500).alias("v"),
+        F.concat(F.lit("s"), (F.col("id") % 300).cast("string")).alias("s"),
     )
-    assert ".collect(" not in src
-    # membership evaluated executor-side via the factory-bound pandas UDF
-    assert "_bloom_keep_udf" in src
-    assert "pandas_udf" in inspect.getsource(_bloom_keep_udf)
+    kinds = {"k": "int", "v": "int", "s": "str"}
+    blocks = gc.encode_df(df, "k", kinds, n_parts=4).cache()
+    # the bitsets exist on the blocks side
+    assert blocks.filter(
+        F.col("column").isin("v", "s") & F.col("bloom").isNotNull()
+    ).count() == 8
+    seen = []
+    real = gc._chunk_meta
+
+    def spy(*args, **kwargs):
+        seen.append(real(*args, **kwargs))
+        return seen[-1]
+
+    monkeypatch.setattr(gc, "_chunk_meta", spy)
+    out_schema = gc._arrow_safe_schema(df.select(*kinds).schema, kinds)
+    gc.decode_df_pruned_eq(blocks, "k", kinds, out_schema, "v", 42)
+    gc.decode_df_pruned_multi(
+        blocks, "k", kinds, out_schema,
+        [("in", "s", ["s1", "s2"]), ("in", "v", [3, 6])],
+    )
+    assert [m.num_rows for m in seen] == [4, 8]
+    for meta, n_hits in zip(seen, (1, 2)):
+        types = [f.type for f in meta.schema]
+        assert not any(
+            pa.types.is_binary(t) or pa.types.is_large_binary(t) for t in types
+        ), meta.schema
+        assert sum(pa.types.is_boolean(t) for t in types) == n_hits
+    blocks.unpersist()
 
 
 def test_bloom_build_flag_off_and_conservative_decode(spark):
@@ -1100,10 +1121,10 @@ def test_union_ranges_kernel():
 
 def test_persisted_blocks_prune_pushes_to_scan(spark, tmp_path):
     """The deployment shape: blocks persisted as a parquet table, pruned
-    decodes reading it back.  The chunk-level keep predicates must reach
-    the blocks scan as PushedFilters (stats prune at STORAGE — payloads
-    of skipped chunks are never read), and results stay exact through the
-    parquet round-trip (n_nulls/page_stats/str bounds survive)."""
+    decodes reading it back.  The driver-planned keep set must reach the
+    blocks scan as a pushed part_id filter, with no join in the decode
+    plan, and results stay exact through the parquet round-trip
+    (n_nulls/page_stats/str bounds survive)."""
     from parquet_python_spark.operators.generic_codec import (
         _arrow_safe_schema,
         decode_df_pruned,
@@ -1127,22 +1148,22 @@ def test_persisted_blocks_prune_pushes_to_scan(spark, tmp_path):
             d._jdf.queryExecution(), "formatted"
         )
 
-    # range prune: stat bounds and the column selector push to the scan
+    # range prune: the driver-planned keep set reaches the blocks scan as
+    # a pushed part_id filter; no join applies it
     dec = decode_df_pruned(blocks, "k", kinds, out_schema, "k", 5_000, 6_000)
     p = plan(dec)
-    assert "PushedFilters" in p
-    assert "GreaterThanOrEqual(stat_max,5000)" in p
-    assert "LessThanOrEqual(stat_min,6000)" in p
-    assert "EqualTo(column,k)" in p
+    assert "Join" not in p
+    assert re.search(r"PushedFilters: \[[^\]]*(EqualTo|In)\(part_id", p), p
     got = sorted(
         r["k"] for r in dec.filter((F.col("k") >= 5_000) & (F.col("k") <= 6_000)).collect()
     )
     assert got == list(range(5_000, 6_001))
 
-    # null prune: the n_nulls predicate pushes too
+    # null prune: the null-count keep set pushes the same way
     dec_n = decode_df_pruned_null(blocks, "k", kinds, out_schema, "w", True)
     p_n = plan(dec_n)
-    assert "GreaterThan(n_nulls,0)" in p_n
+    assert "Join" not in p_n
+    assert re.search(r"PushedFilters: \[[^\]]*(EqualTo|In)\(part_id", p_n), p_n
     got_n = sorted(r["k"] for r in dec_n.filter(F.col("w").isNull()).collect())
     assert got_n == list(range(4_000))
 
@@ -1160,15 +1181,15 @@ def test_persisted_blocks_prune_pushes_to_scan(spark, tmp_path):
     assert got_m == [(i, i) for i in range(5_000, 6_001)]
 
     # metadata-first COUNT over the persisted table: exact, and the
-    # containment bounds push to the blocks scan
+    # boundary decode reads only the predicate column's kept chunks
     from parquet_python_spark.operators.generic_codec import (
         count_filtered_meta,
     )
 
     cnt_df = count_filtered_meta(blocks, kinds, "k", 2_500, 17_499)
     p_c = plan(cnt_df)
-    assert "GreaterThanOrEqual(stat_min,2500)" in p_c
-    assert "LessThanOrEqual(stat_max,17499)" in p_c
+    assert "Join" not in p_c
+    assert "EqualTo(column,k)" in p_c and "In(part_id, [0,3])" in p_c, p_c
     assert cnt_df.first()["cnt"] == 15_000
 
 
@@ -1484,10 +1505,17 @@ def test_minmax_filtered_meta_exact(spark):
     # set (the function's decode branch) is empty — the same classifier
     # the function uses, so a regression that decodes contained chunks
     # would surface here
-    from parquet_python_spark.operators.generic_codec import _range_keep
+    import pyarrow.compute as pc
 
-    overlap, _, contained = _range_keep("int", "k", 0, 10**9)
-    assert blocks.filter(overlap & ~contained).count() == 0
+    from parquet_python_spark.operators.generic_codec import (
+        _chunk_meta,
+        _range_keep,
+    )
+
+    meta = _chunk_meta(blocks, kinds, ["k"])
+    overlap, _, contained = _range_keep("int", meta, "k", 0, 10**9)
+    straddle = pc.and_kleene(overlap, pc.invert(contained))
+    assert meta.num_rows == 8 and not pc.any(straddle).as_py()
     with pytest.raises(ValueError, match="metadata min/max"):
         minmax_filtered_meta(blocks, {"k": "float64"}, "k", 0, 1)
     blocks.unpersist()
@@ -1584,6 +1612,104 @@ def test_pruned_decode_rejects_unencoded_and_str_bounds_on_int(spark):
         )
     with pytest.raises(ValueError, match="numeric bounds"):
         decode_df_pruned(blocks, "k", kinds, out_schema, "k", "a", "z")
+    # int bounds and values outside int64 are rejected by name, not as a
+    # raw JVM error from the literal
+    from parquet_python_spark.operators.generic_codec import (
+        count_filtered_meta,
+        decode_df_pruned_eq,
+        decode_df_pruned_multi,
+    )
+
+    with pytest.raises(ValueError, match=str(2**63)):
+        count_filtered_meta(blocks, kinds, "k", 19_990, 2**63)
+    with pytest.raises(ValueError, match=str(-(2**63) - 1)):
+        decode_df_pruned(blocks, "k", kinds, out_schema, "k", -(2**63) - 1, 5)
+    with pytest.raises(ValueError, match=str(2**64)):
+        decode_df_pruned_eq(blocks, "k", kinds, out_schema, "k", 2**64)
+    with pytest.raises(ValueError, match=str(-(2**63) - 1)):
+        decode_df_pruned_multi(
+            blocks, "k", kinds, out_schema, [("in", "k", [1, -(2**63) - 1])]
+        )
+
+
+def test_pruned_calls_spark_job_counts(spark, tmp_path):
+    """Each pruned call plans on the driver from one metadata read: a row
+    lookup or top-k is the metadata job plus the decode, a count with
+    boundary chunks adds the boundary decode, and a count answered from
+    metadata alone runs only the metadata job."""
+    import time
+
+    from parquet_python_spark.operators.generic_codec import (
+        _arrow_safe_schema,
+        count_filtered_meta,
+        count_null_meta,
+        decode_df_pruned,
+        decode_df_pruned_eq,
+        encode_df,
+        topk_filtered_meta,
+    )
+
+    df = spark.range(20_000).select(
+        F.col("id").alias("k"),
+        (F.col("id") * 7 % 1000).alias("v"),
+        F.when(F.col("id") % 3 == 0, None).otherwise(F.col("id")).alias("w"),
+    )
+    kinds = {"k": "int", "v": "int", "w": "int"}
+    path = str(tmp_path / "blocks")
+    encode_df(df, "k", kinds, n_parts=4, partitioning="range").write.parquet(path)
+    blocks = spark.read.parquet(path)
+    out_schema = _arrow_safe_schema(df.select(*kinds).schema, kinds)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs_of(group, call):
+        sc.setJobGroup(group, group)
+        try:
+            result = call()
+        finally:
+            # a marker job after the call: the listener bus delivers events
+            # in order, so once the marker is seen finished, so is the group
+            sc.setJobGroup(group + "-marker", "marker")
+            sc.parallelize([0], 1).count()
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        deadline = time.monotonic() + 10
+        while time.monotonic() < deadline:
+            marker = [
+                tracker.getJobInfo(j)
+                for j in tracker.getJobIdsForGroup(group + "-marker")
+            ]
+            if marker and all(i is not None and i.status == "SUCCEEDED" for i in marker):
+                break
+            time.sleep(0.05)
+        return len(tracker.getJobIdsForGroup(group)), result
+
+    n, rows = jobs_of("range", lambda: decode_df_pruned(
+        blocks, "k", kinds, out_schema, "k", 5_000, 6_000
+    ).filter(F.col("k").between(5_000, 6_000)).collect())
+    assert len(rows) == 1_001 and n <= 3, n
+    n, rows = jobs_of("eq", lambda: decode_df_pruned_eq(
+        blocks, "k", kinds, out_schema, "v", 7
+    ).filter(F.col("v") == 7).collect())
+    assert len(rows) == 20 and n <= 3, n
+    n, rows = jobs_of("topk", lambda: topk_filtered_meta(
+        blocks, kinds, "k", 5, ascending=False
+    ).collect())
+    assert [r["k"] for r in rows] == [19_999, 19_998, 19_997, 19_996, 19_995]
+    assert n <= 3, n
+    # [2_500, 17_499] contains the two middle parts and cuts the outer two
+    n, cnt = jobs_of("count", lambda: count_filtered_meta(
+        blocks, kinds, "k", 2_500, 17_499
+    ).first()["cnt"])
+    assert cnt == 15_000 and n <= 4, n
+    # [0, 19_999] contains every part: no boundary chunk decodes
+    n, cnt = jobs_of("count-meta", lambda: count_filtered_meta(
+        blocks, kinds, "k", 0, 19_999
+    ).first()["cnt"])
+    assert cnt == 20_000 and n <= 2, n
+    n, cnt = jobs_of("nulls", lambda: count_null_meta(
+        blocks, kinds, "w", True
+    ).first()["cnt"])
+    assert cnt == 6_667 and n <= 2, n
 
 
 def test_page_null_counts_prune_and_exact(spark):

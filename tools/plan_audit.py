@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -20,6 +21,19 @@ def _plan(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
+
+
+def _pruned_by_part_id(p: str) -> bool:
+    """A driver-planned keep set reaches the blocks scan: a part_id entry
+    in a parquet scan's PushedFilters, or in the predicates an in-memory
+    scan prunes its cached batches with; and no join applies it."""
+    parquet = r"PushedFilters: \[[^\]]*(EqualTo|In)\(part_id"
+    in_memory = (
+        r"InMemoryTableScan\nOutput[^\n]*\n"
+        r"Arguments: [^\n]*\], \[[^\n]*part_id#\d+ (=|IN|INSET) "
+    )
+    pushed = re.search(parquet, p) or re.search(in_memory, p)
+    return bool(pushed) and "Join" not in p and "CartesianProduct" not in p
 
 
 def main() -> None:
@@ -117,16 +131,13 @@ def main() -> None:
     ok = "CartesianProduct" not in p and "NestedLoop" not in p
     checks.append(("setop_active_buyers: no cartesian in INTERSECT", ok, p))
 
-    # 12. zone-map-pruned decode: the part_id prune is a BROADCAST semi-join
-    # (a shuffled semi-join would move every payload byte to prune it)
+    # 12. zone-map-pruned decode: the driver plans the keep set from the
+    # stats columns and the part_id filter reaches the blocks scan (no join
+    # moves or broadcasts anything to prune)
     p = _plan(qs["rt_tokens_pruned"](spark, sf_dir))
-    ok = (
-        "LeftSemi" in p
-        and "BroadcastHashJoin" in p
-        and "CartesianProduct" not in p
-    )
+    ok = _pruned_by_part_id(p)
     checks.append(
-        ("rt_tokens_pruned: broadcast left-semi prune of blocks", ok, p)
+        ("rt_tokens_pruned: pushed part_id prune of blocks, no join", ok, p)
     )
 
     # 13. stratified sampler: 100% JVM (no Python eval), broadcast rate map,
@@ -222,17 +233,13 @@ def main() -> None:
          ok, p)
     )
 
-    # 22. bloom point-lookup prune: broadcast left-semi on part_id, and the
-    # bitset membership test stays executor-side (the only Python node in
-    # the plan family is the metadata-sized pandas UDF on the keep branch)
+    # 22. range + bloom point-lookup prune: the keep sets (the bitset
+    # membership test ran executor-side inside the metadata read) reach
+    # the blocks scan as a part_id filter, with no join in the plan
     p = _plan(qs["rt_lineitem_pruned"](spark, sf_dir))
-    ok = (
-        "LeftSemi" in p
-        and "BroadcastHashJoin" in p
-        and "CartesianProduct" not in p
-    )
+    ok = _pruned_by_part_id(p)
     checks.append(
-        ("rt_lineitem_pruned: broadcast left-semi prune (range + bloom eq)", ok, p)
+        ("rt_lineitem_pruned: pushed part_id prune (range + bloom eq), no join", ok, p)
     )
 
     # 23. end-to-end cluster dedup (minhash candidates -> connected
@@ -258,17 +265,12 @@ def main() -> None:
     )
 
     # 24. null-count prune (IS NULL / IS NOT NULL chunk skipping): same
-    # broadcast left-semi shape as the stats prune — the n_nulls predicate
-    # is a plain pushed-down column filter, surviving part_ids broadcast
+    # shape as the stats prune — the keep set planned from the chunk null
+    # counts reaches the blocks scan as a part_id filter, no join
     p = _plan(qs["rt_documents_nulls"](spark, sf_dir))
-    ok = (
-        "LeftSemi" in p
-        and "BroadcastHashJoin" in p
-        and "CartesianProduct" not in p
-        and "n_nulls" in p
-    )
+    ok = _pruned_by_part_id(p)
     checks.append(
-        ("rt_documents_nulls: broadcast left-semi null-count prune", ok, p)
+        ("rt_documents_nulls: pushed part_id null-count prune, no join", ok, p)
     )
 
     n_bad = 0
