@@ -360,9 +360,6 @@ def _rt_fixture_nation(spark, sf_dir):
     )
 
 
-_last_tokens_blocks = None
-
-
 def _derived_tokens(spark, sf_dir):
     """tokens table (BASELINE input shape) derived deterministically from
     `documents` so DuckDB can reproduce every row."""
@@ -399,27 +396,23 @@ def _explode_tokens(dec):
 def _rt_tokens_pruned(spark, sf_dir):
     """Engine-path zone-map-pruned decode: a tokens table (BASELINE input
     shape, derived deterministically from `documents` so DuckDB can
-    reproduce it) is range-clustered by n_tok, encoded zero-shuffle, then
-    decoded through decode_blocks_pruned — blocks whose n_tok [min,max]
-    stats miss [64,128] are never decoded.  Output exploded to scalar rows
-    (driver canonicalizer can't hash arrays)."""
-    global _last_tokens_blocks
-    from pyspark import StorageLevel
-
-    from parquet_python_spark.engine import decode_blocks_pruned, encode_table_narrow
-
-    # clustered layout -> selective stats
-    tok = _derived_tokens(spark, sf_dir).repartitionByRange(8, "n_tok")
-    blocks = encode_table_narrow(tok, snapshot_id="drv").persist(
-        StorageLevel.MEMORY_AND_DISK
+    reproduce it) is range-clustered by n_tok into session-lifetime
+    parquet, encoded zero-shuffle, then decoded through
+    decode_blocks_files_pruned — parts whose n_tok [min,max] stats miss
+    [64,128] are never decoded.  Returns the lazy decode, exploded to
+    scalar rows (driver canonicalizer can't hash arrays)."""
+    from parquet_python_spark.engine import (
+        decode_blocks_files_pruned,
+        encode_table_files_native,
     )
-    if _last_tokens_blocks is not None:
-        try:
-            _last_tokens_blocks.unpersist(blocking=False)
-        except Exception:  # noqa: BLE001 - session may already be gone
-            pass
-    _last_tokens_blocks = blocks
-    return _explode_tokens(decode_blocks_pruned(blocks, "n_tok", 64, 128))
+
+    work = _session_tmpdir("pps_prune_")
+    inp = f"{work}/inp"
+    # clustered layout -> selective stats
+    _derived_tokens(spark, sf_dir).repartitionByRange(8, "n_tok").write.parquet(inp)
+    bdir = f"{work}/blocks"
+    encode_table_files_native(spark, inp, bdir, snapshot_id="drv").count()
+    return _explode_tokens(decode_blocks_files_pruned(spark, bdir, "n_tok", 64, 128))
 
 
 def _rt_tokens_compacted(spark, sf_dir):
@@ -855,8 +848,8 @@ def _stream_encode_rt(spark, sf_dir):
     the derived tokens table replayed availableNow through the
     foreachBatch encode job (streaming/stream_encode.py:
     start_stream_encode; maxFilesPerTrigger=2 forces multiple
-    micro-batches so the append + exactly-once path is exercised), then
-    the appended blocks decode through the batch files-mode reader.  The
+    micro-batches, each committing its files' blk files), then the blocks
+    decode through the batch files-mode reader.  The
     decoded round-trip must be row-identical to the input — the oracle is
     the same derived-tokens SQL as rt_tokens_compacted.  Decoded result
     lands in a parquet the driver reads back lazily (executor-side I/O,

@@ -8,10 +8,14 @@ Mapping (SURVEY.md §1.3):
     row pivot      -> never (Arrow-columnar end to end)
 
 Scale design notes (targets a 1000-executor cluster; local[32] here):
-  * encode_job is ZERO-shuffle end to end: one task per input file /
-    row-group range, workers read parquet via pyarrow and write their own
-    block files — token payloads never cross the JVM<->python Arrow IPC
-    boundary or an exchange.  decode_blocks_files mirrors it on the way back.
+  * One writer: encode_table_files_native is the only tokens encoder
+    (encode_job, the streaming sink and derived tables, which are written
+    to parquet first, all call it).  It is ZERO-shuffle end to end: one
+    task per input file / row-group range, workers read parquet via
+    pyarrow and write their own block files — token payloads never cross
+    the JVM<->python Arrow IPC boundary or an exchange.  Every block file
+    is therefore a blk-* file or a cmp-* concatenation of them, and every
+    reader of a bare blocks directory decodes one task per file.
   * Skew is bounded by task planning, not salting: a file larger than
     max_task_bytes splits into row-group ranges (_plan_file_tasks), so a
     dominant source simply spans more tasks.
@@ -32,6 +36,7 @@ import json
 import os
 import time
 import zlib
+from urllib.parse import unquote, urlparse
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -65,7 +70,7 @@ BLOCKS_SCHEMA = T.StructType(
         # per-block min/max of the column's values (int columns only; the
         # Statistics the reference parses but never uses,
         # /root/reference/parquet/parquet.thrift:198-206) — drive the
-        # zone-map prune in decode_blocks_pruned / decode_blocks_files_pruned
+        # zone-map prune in decode_blocks_files_pruned
         T.StructField("stat_min", T.LongType(), True),
         T.StructField("stat_max", T.LongType(), True),
     ]
@@ -146,9 +151,10 @@ def _encode_partition_table(
     token vector (zero-copy via arrow_io.list_column_flat); strings encode
     from their (offsets, data) buffers.  No per-row Python anywhere.
 
-    ``tbl`` arrives sorted by doc_id (_encode_split_by_source sorts once per
-    split), so the encoded payload is deterministic regardless of upstream
-    arrival order — required for idempotent resume.
+    ``tbl`` is one source's run of one encode task, sorted by doc_id
+    (_encode_split_by_source sorts each task's table once), so the payload
+    depends only on the task's input rows, never on their read order — a
+    re-encode of the same task writes the same bytes.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -210,39 +216,6 @@ def _encode_partition_table(
         add(col, codec, params, payload, len(arr), raw)
 
     return pa.Table.from_pylist(rows, schema=_BLOCKS_ARROW_SCHEMA)
-
-
-def encode_table_narrow(
-    df: DataFrame,
-    snapshot_id: str = "",
-    with_ref_baseline: bool = False,
-    part_prefix: str = "",
-) -> DataFrame:
-    """DataFrame-in encode: mapInArrow over the scan, one chunk per
-    (source, input split), zero shuffle.
-
-    For inputs that are not a flat local parquet dir or an iceberg-lite
-    table (encode_job's file-direct path): streaming micro-batches and
-    derived DataFrames.  Skew needs no salting: input splits are
-    size-bounded by spark.sql.files.maxPartitionBytes, so a dominant
-    source simply spans more splits.  part_id = f"{source}#{split_id}" is
-    deterministic for a fixed input layout + reader config.
-    """
-
-    def enc(batches):
-        import pyarrow as pa
-        from pyspark import TaskContext
-
-        split_id = TaskContext.get().partitionId()
-        batch_list = list(batches)
-        if not batch_list:
-            return
-        tbl = pa.Table.from_batches(batch_list)
-        yield from _encode_split_by_source(
-            tbl, split_id, snapshot_id, with_ref_baseline, part_prefix
-        )
-
-    return df.mapInArrow(enc, schema=BLOCKS_SCHEMA)
 
 
 def file_key(path: str) -> str:
@@ -495,12 +468,9 @@ def _plan_file_tasks(files: list[str], max_task_bytes: int) -> list[tuple]:
     return tasks
 
 
-def _encode_split_by_source(
-    tbl, split_id, snapshot_id, with_ref_baseline, part_prefix=""
-):
-    """Sort one split's table by (source, doc_id) and encode each source run
-    as one partition chunk (shared by encode_table_narrow and the files
-    path)."""
+def _encode_split_by_source(tbl, task_key, snapshot_id, with_ref_baseline):
+    """Sort one task's table by (source, doc_id) and encode each source run
+    as one partition chunk, part_id = f"{source}#{task_key}"."""
     import numpy as np
     import pyarrow.compute as pc
 
@@ -517,7 +487,7 @@ def _encode_split_by_source(
     bounds = np.concatenate(([0], np.flatnonzero(np.diff(idx)) + 1, [len(idx)]))
     for s, e in zip(bounds[:-1], bounds[1:]):
         src = names[idx[s]]
-        pid = f"{part_prefix}{src}#{split_id}"
+        pid = f"{src}#{task_key}"
         out = _encode_partition_table(
             tbl.slice(s, e - s), snapshot_id, with_ref_baseline, pid
         )
@@ -587,6 +557,18 @@ def _decode_part_table(tbl) -> "pa.Table":
     )
 
 
+def local_path(uri: str) -> str:
+    """Local path of a file Spark names: ``file:`` URIs are percent-decoded
+    (a directory whose name holds a space or ``%`` still resolves), bare
+    paths pass through, and any other scheme raises ValueError."""
+    u = urlparse(uri)
+    if u.scheme == "file":
+        return unquote(u.path)
+    if u.scheme:
+        raise ValueError(f"not a local file: {uri}")
+    return uri
+
+
 def local_parquet_scan_files(df: DataFrame) -> list[str] | None:
     """Sorted local paths of the files behind ``df`` when it is a bare,
     unfiltered scan of a plain parquet relation — else None.
@@ -596,10 +578,7 @@ def local_parquet_scan_files(df: DataFrame) -> list[str] | None:
     LogicalRelation itself (any caller filter/projection/join/cache falls
     back), its file format exactly ParquetFileFormat (a subclass such as
     Delta's applies deletion vectors a raw pyarrow read would skip), and
-    every file local.  ``file:`` URIs are percent-decoded, so a directory
-    whose name holds a space or ``%`` still resolves."""
-    from urllib.parse import unquote, urlparse
-
+    every file local (local_path)."""
     try:
         plan = df._jdf.queryExecution().optimizedPlan()
         if plan.getClass().getSimpleName() != "LogicalRelation":
@@ -612,16 +591,10 @@ def local_parquet_scan_files(df: DataFrame) -> list[str] | None:
         return None
     if not files:
         return None
-    paths: list[str] = []
-    for f in files:
-        u = urlparse(f)
-        if u.scheme == "file":
-            paths.append(unquote(u.path))
-        elif u.scheme:
-            return None  # non-local filesystem: keep the generic path
-        else:
-            paths.append(f)
-    return sorted(paths)
+    try:
+        return sorted(local_path(f) for f in files)
+    except ValueError:
+        return None  # non-local filesystem: keep the generic path
 
 
 def _engine_block_files_of_scan(blocks: DataFrame) -> list[str] | None:
@@ -629,20 +602,16 @@ def _engine_block_files_of_scan(blocks: DataFrame) -> list[str] | None:
     engine-written block files — else None.
 
     The zero-shuffle decode below is only sound when every partition's
-    rows form exactly one contiguous run in exactly one file.  blk-*
-    files guarantee that by construction (one encode task's output,
-    content-addressed name, atomic rename — re-runs skip a committed task,
-    never duplicate it).  cmp-* files are EXCLUDED even though compact_blocks
-    preserves run contiguity: compaction concatenates whatever .parquet
-    files a directory holds, and JVM-written part-* files (for example
-    the streaming sink's appends of encode_table_narrow output, which a
-    replayed micro-batch can repeat) can carry duplicate part rows —
-    folded into cmp files, the same part then appears as multiple runs,
-    which the grouped path collapses (by_col last-wins) but a per-run
-    decode would double.  Anything else — a filtered/joined/cached blocks
-    DataFrame, part-* files, non-local storage, a mid-compaction directory
-    (sidecar/tmp present) — also falls back to the general shuffle path,
-    which assumes nothing about layout."""
+    rows form exactly one contiguous run in exactly one file.  That holds
+    because every tokens block file is a blk-* file or a whole-file
+    concatenation of them: encode_table_files_native, the one tokens
+    writer, commits one content-addressed blk-<task key> file per task
+    (a re-run skips a committed task, never duplicates it), and
+    compact_blocks writes cmp-* files by concatenating whole files.
+    Anything else — a filtered/joined/cached blocks DataFrame, files of
+    any other name, non-local storage, a mid-compaction directory
+    (sidecar/tmp present) — falls back to the general shuffle path, which
+    assumes nothing about layout."""
     files = local_parquet_scan_files(blocks)
     if files is None:
         return None
@@ -651,7 +620,7 @@ def _engine_block_files_of_scan(blocks: DataFrame) -> list[str] | None:
     dirs: set[str] = set()
     for f in files:
         name = os.path.basename(f)
-        if not (name.endswith(".parquet") and name.startswith("blk-")):
+        if not (name.endswith(".parquet") and name.startswith(("blk-", "cmp-"))):
             return None
         dirs.add(os.path.dirname(f))
     for d in dirs:
@@ -778,27 +747,6 @@ def _pruned_residual(decoded: DataFrame, column: str, lo: int, hi: int) -> DataF
             F.exists("tokens", lambda t: (t >= lo) & (t <= hi))
         )
     raise ValueError(f"no block stats for column {column!r}")
-
-
-def decode_blocks_pruned(
-    blocks: DataFrame, column: str, lo: int, hi: int
-) -> DataFrame:
-    """Zone-map-pruned decode: only partitions whose `column` stats range
-    intersects [lo, hi] are shuffled + decoded; the exact predicate is
-    re-applied on the decoded rows.  The keep set is planned on the
-    driver from the blocks' stats columns (_zone_map_keep, shared with
-    the file-direct reader) and reaches the blocks scan as a part_id
-    filter.  Blocks written before stats existed
-    (stat_min null) are never pruned — correctness over savings."""
-    if "stat_min" not in blocks.columns:
-        # a blocks table written entirely before stats existed has no
-        # stat columns at all (not just null values): the docstring's
-        # never-prune promise means decode everything
-        return _pruned_residual(decode_blocks(blocks), column, lo, hi)
-    meta = blocks.select(*_ZONE_MAP_COLS).toArrow()
-    keep = _zone_map_keep(meta, column, lo, hi)
-    surviving = blocks.filter(F.col("part_id").isin(sorted(keep)))
-    return _pruned_residual(decode_blocks(surviving), column, lo, hi)
 
 
 def decode_blocks_files_pruned(

@@ -1,12 +1,16 @@
 """Structured Streaming encode: continuously encode token files as they land.
 
 The reference is strictly batch (file-at-a-time, SURVEY.md §2.4 'Streaming:
-none'); this is new engine surface.  Design: readStream over the input dir ->
-foreachBatch(narrow encode -> append blocks).  foreachBatch (rather
-than a row-wise sink) keeps the whole batch path identical to the batch
-engine — same kernels, same blocks schema, same lineage — and Structured
-Streaming's checkpoint gives exactly-once per micro-batch on top of the
-engine's own per-partition resume.
+none'); this is new engine surface.  Design: readStream over the input dir
+selects only each row's source file (_metadata.file_path) ->
+foreachBatch(encode_table_files_native over the batch's distinct files).
+The JVM never decodes a token, and the sink is the batch engine's one
+writer — same kernels, same blk-<file key> commit, same lineage: each
+block row's snapshot_id is stream-<batch id>, and its part_id is
+content-addressed per input file ({source}#{file key}).  Exactly-once
+comes from a replayable source plus an idempotent sink: a micro-batch
+replayed after a crash finds its files' blk files committed and encodes
+nothing.
 """
 
 from __future__ import annotations
@@ -15,7 +19,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-from ..engine import encode_table_narrow
+from ..engine import encode_table_files_native, local_path
 from ..tokengen import SCHEMA
 
 from pyspark.sql import types as T  # noqa: E402
@@ -41,8 +45,9 @@ def start_stream_encode(
     """Start (or run once) the streaming encode job; returns the query.
 
     Blocks land under output_path/blocks, stream checkpoint under
-    output_path/_checkpoint.  part_id = f"{source}#{batch_id}.{split}" keys
-    lineage to the micro-batch.
+    output_path/_checkpoint.  Lineage keys on snapshot_id =
+    f"stream-{batch_id}"; part_id = f"{source}#{file_key}" is
+    content-addressed per input file.  Input files must be local.
     """
     blocks_path = os.path.join(output_path, "blocks")
     checkpoint = os.path.join(output_path, "_checkpoint")
@@ -51,13 +56,17 @@ def start_stream_encode(
         spark.readStream.schema(SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_path)
+        .select("_metadata.file_path")
     )
 
     def sink(batch_df, batch_id: int) -> None:
-        blocks = encode_table_narrow(
-            batch_df, snapshot_id=f"stream-{batch_id}", part_prefix=f"b{batch_id}."
+        paths = sorted(
+            local_path(r[0]) for r in batch_df.distinct().collect()
         )
-        blocks.write.mode("append").parquet(blocks_path)
+        encode_table_files_native(
+            spark, input_path, blocks_path,
+            snapshot_id=f"stream-{batch_id}", files=paths,
+        ).count()
 
     writer = stream.writeStream.foreachBatch(sink).option(
         "checkpointLocation", checkpoint

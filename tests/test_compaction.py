@@ -1,5 +1,6 @@
 """Blocks-directory compaction (the Iceberg "rewrite data files" analog):
-bin-packing, decode equivalence, zone-map preservation, crash repair,
+bin-packing, decode equivalence (per-file decode of a compacted
+directory included), zone-map preservation, crash repair,
 in-flight bins hidden from Spark, stale-generation rewrite inside
 compacted files, and resume over them."""
 
@@ -11,6 +12,7 @@ from pyspark.sql import functions as F
 
 from parquet_python_spark.engine import (
     compact_blocks,
+    decode_blocks,
     decode_blocks_files,
     decode_blocks_files_pruned,
     encode_table_files_native,
@@ -60,6 +62,20 @@ def test_compact_reduces_files_and_preserves_decode(spark, blocks_dir):
     assert stats["bins"] >= 1 and stats["files_removed"] >= 2
     assert n_after < n_before
     assert _rows(decode_blocks_files(spark, bdir)) == want
+
+
+def test_compacted_dir_decodes_per_file(spark, blocks_dir):
+    """decode_blocks over a bare scan of a compacted directory keeps the
+    shuffle-free per-file path: a cmp-* file is a whole-file concatenation
+    of blk-* files, so each part is still one contiguous run."""
+    inp, bdir = blocks_dir
+    compact_blocks(spark, bdir, target_bytes=1 << 30)
+    names = [os.path.basename(f) for f in list_input_files(bdir)]
+    assert any(n.startswith("cmp-") for n in names)
+    decoded = decode_blocks(spark.read.parquet(bdir))
+    plan = decoded._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan and "FlatMapGroupsInArrow" not in plan
+    assert _rows(decoded) == _rows(spark.read.parquet(inp))
 
 
 def test_compact_preserves_zone_map_pruning(spark, tmp_path):

@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 from parquet_python_spark.engine import (
     decode_blocks,
     encode_job,
-    encode_table_narrow,
     encode_table_files_native,
 )
 from parquet_python_spark.tokengen import generate_tokens_df
@@ -28,9 +27,18 @@ def tokens_df(spark):
     return df
 
 
-def _one_chunk_per_source(tokens_df, **kw):
-    """blocks DataFrame with exactly one chunk per source (one input split)."""
-    return encode_table_narrow(tokens_df.coalesce(1), snapshot_id="t", **kw)
+@pytest.fixture(scope="module")
+def source_blocks(spark, tokens_df, tmp_path_factory):
+    """Blocks with exactly one chunk per source: the table written as one
+    input file, encoded once (with the reference size baseline)."""
+    base = tmp_path_factory.mktemp("one_file")
+    inp = str(base / "inp")
+    tokens_df.coalesce(1).write.parquet(inp)
+    blocks_dir = str(base / "blocks")
+    encode_table_files_native(
+        spark, inp, blocks_dir, snapshot_id="t", with_ref_baseline=True
+    ).count()
+    return spark.read.parquet(blocks_dir)
 
 
 def _as_sorted_rows(df):
@@ -53,21 +61,18 @@ def test_tokengen_invariants(tokens_df):
     assert sources == {"lowcard", "runny", "narrow", "texty", "random"}
 
 
-def test_encode_decode_bit_identity(spark, tokens_df):
+def test_encode_decode_bit_identity(tokens_df, source_blocks):
     """North-rule gate: engine encode -> decode reproduces every token array
     bit-identically."""
-    blocks = _one_chunk_per_source(tokens_df, with_ref_baseline=True)
-    blocks = blocks.cache()
-    decoded = decode_blocks(blocks)
+    decoded = decode_blocks(source_blocks)
     assert _as_sorted_rows(decoded) == _as_sorted_rows(tokens_df)
 
 
-def test_size_gate_vs_reference_dict(spark, tokens_df):
+def test_size_gate_vs_reference_dict(source_blocks):
     """Compressed tokens size <= the reference's RLE/dict output on every
     partition (ref_dict_bytes is the reference wire format size computed on
     the identical values)."""
-    blocks = _one_chunk_per_source(tokens_df, with_ref_baseline=True)
-    rows = blocks.filter(F.col("column") == "tokens").select(
+    rows = source_blocks.filter(F.col("column") == "tokens").select(
         "part_id", "codec", "enc_bytes", "ref_dict_bytes"
     ).collect()
     assert rows
@@ -77,12 +82,11 @@ def test_size_gate_vs_reference_dict(spark, tokens_df):
         )
 
 
-def test_selector_matches_profiles(spark, tokens_df):
+def test_selector_matches_profiles(source_blocks):
     """Codec auto-selection per source matches FIXTURES.md expectations."""
-    blocks = _one_chunk_per_source(tokens_df)
     picks = {
         r["source"]: r["codec"]
-        for r in blocks.filter(F.col("column") == "tokens")
+        for r in source_blocks.filter(F.col("column") == "tokens")
         .select("source", "codec")
         .collect()
     }
@@ -91,14 +95,6 @@ def test_selector_matches_profiles(spark, tokens_df):
     assert picks["lowcard"] == "dict"
     assert picks["random"] in ("bitpack", "for")
     assert picks["texty"] in ("fsst", "dict")
-
-
-def test_encode_narrow_bit_identity(spark, tokens_df):
-    """The DataFrame-in encoder, one chunk per (source, split), must
-    round-trip bit-identically too."""
-    blocks = encode_table_narrow(tokens_df, snapshot_id="t")
-    decoded = decode_blocks(blocks)
-    assert _as_sorted_rows(decoded) == _as_sorted_rows(tokens_df)
 
 
 def test_encode_files_and_decode_files_bit_identity(spark, tokens_df, tmp_path):
@@ -293,9 +289,8 @@ def test_encode_job_is_one_spark_job(spark, tokens_df, tmp_path):
     assert len(jobs_of("encode-resume")) <= 1
 
 
-def test_decode_detects_corruption(spark, tokens_df):
-    blocks = _one_chunk_per_source(tokens_df)
-    tampered = blocks.withColumn(
+def test_decode_detects_corruption(source_blocks):
+    tampered = source_blocks.withColumn(
         "payload",
         F.when(F.col("column") == "tokens", F.concat(F.col("payload"), F.lit(b"x")))
         .otherwise(F.col("payload")),
@@ -332,17 +327,16 @@ def test_files_mode_splits_large_files_by_row_group(spark, tmp_path):
 
 # ------------------------------------------------- zone-map pruned decode
 
-def test_block_stats_present(spark, tokens_df):
+def test_block_stats_present(source_blocks):
     """Every int-column block row carries min/max zone-map stats."""
-    blocks = _one_chunk_per_source(tokens_df)
-    rows = blocks.filter(F.col("column").isin("tokens", "n_tok")).select(
+    rows = source_blocks.filter(F.col("column").isin("tokens", "n_tok")).select(
         "column", "stat_min", "stat_max"
     ).collect()
     assert rows
     for r in rows:
         assert r["stat_min"] is not None and r["stat_min"] <= r["stat_max"]
     # string columns carry no int stats
-    s = blocks.filter(F.col("column") == "doc_id").select("stat_min").collect()
+    s = source_blocks.filter(F.col("column") == "doc_id").select("stat_min").collect()
     assert all(r["stat_min"] is None for r in s)
 
 
@@ -358,13 +352,15 @@ def clustered_blocks(spark, tokens_df, tmp_path_factory):
 
 
 def test_decode_pruned_ntok_exact_and_selective(spark, tokens_df, clustered_blocks):
-    from parquet_python_spark.engine import decode_blocks_pruned
+    from parquet_python_spark.engine import decode_blocks_files_pruned
 
     _inp, blocks_dir = clustered_blocks
     blocks = spark.read.parquet(blocks_dir)
     lo, hi = 16, 32
     want = _as_sorted_rows(tokens_df.filter(F.col("n_tok").between(lo, hi)))
-    got = _as_sorted_rows(decode_blocks_pruned(blocks, "n_tok", lo, hi))
+    got = _as_sorted_rows(
+        decode_blocks_files_pruned(spark, blocks_dir, "n_tok", lo, hi)
+    )
     assert got == want and len(want) > 0
 
     # the zone maps actually prune: surviving parts < total parts
@@ -376,42 +372,26 @@ def test_decode_pruned_ntok_exact_and_selective(spark, tokens_df, clustered_bloc
     assert surviving < total
 
 
-def test_decode_files_pruned_matches_shuffled(spark, tokens_df, clustered_blocks):
-    from parquet_python_spark.engine import decode_blocks_files_pruned
-
-    _inp, blocks_dir = clustered_blocks
-    lo, hi = 16, 32
-    want = _as_sorted_rows(tokens_df.filter(F.col("n_tok").between(lo, hi)))
-    got = _as_sorted_rows(
-        decode_blocks_files_pruned(spark, blocks_dir, "n_tok", lo, hi)
-    )
-    assert got == want
-
-
 def test_decode_pruned_token_value_range(spark, tokens_df, clustered_blocks):
     """Pruning on token VALUES: keep rows containing a token in [lo, hi];
     blocks whose token range misses it are skipped wholesale."""
-    from parquet_python_spark.engine import decode_blocks_pruned
+    from parquet_python_spark.engine import decode_blocks_files_pruned
 
     _inp, blocks_dir = clustered_blocks
-    blocks = spark.read.parquet(blocks_dir)
     lo, hi = 0, 3
     want = _as_sorted_rows(
         tokens_df.filter(F.exists("tokens", lambda t: (t >= lo) & (t <= hi)))
     )
-    got = _as_sorted_rows(decode_blocks_pruned(blocks, "tokens", lo, hi))
+    got = _as_sorted_rows(
+        decode_blocks_files_pruned(spark, blocks_dir, "tokens", lo, hi)
+    )
     assert got == want
 
 
 def test_decode_pruned_empty_range(spark, clustered_blocks):
-    from parquet_python_spark.engine import (
-        decode_blocks_files_pruned,
-        decode_blocks_pruned,
-    )
+    from parquet_python_spark.engine import decode_blocks_files_pruned
 
     _inp, blocks_dir = clustered_blocks
-    blocks = spark.read.parquet(blocks_dir)
-    assert decode_blocks_pruned(blocks, "n_tok", -10, -5).count() == 0
     assert (
         decode_blocks_files_pruned(spark, blocks_dir, "n_tok", -10, -5).count()
         == 0
@@ -445,8 +425,12 @@ def test_decode_blocks_fast_path_zero_payload_shuffle(spark, tokens_df, tmp_path
 def test_decode_blocks_fast_path_percent_decodes_paths(spark, tokens_df, tmp_path):
     """Spark lists files as percent-encoded file: URIs; a blocks dir whose
     path holds a space must still resolve to local files and take the
-    shuffle-free path."""
-    from parquet_python_spark.engine import local_parquet_scan_files
+    shuffle-free path; a non-local URI is refused."""
+    from parquet_python_spark.engine import local_parquet_scan_files, local_path
+
+    assert local_path("file:///a%20b/c%25d.parquet") == "/a b/c%d.parquet"
+    with pytest.raises(ValueError):
+        local_path("s3a://bucket/blocks/blk-x.parquet")
 
     inp = str(tmp_path / "tok")
     tokens_df.repartition(3).write.parquet(inp)

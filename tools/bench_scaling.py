@@ -65,8 +65,8 @@ def child(cpus: int, tokens_path: str) -> None:
     virtual disk: shuffle dirs on /dev/shm, input pre-warmed into the page
     cache, blocks held in memory.  On a real cluster the skipped I/O scales
     with node count (node-local NVMe); the single shared disk here does not,
-    so including it would measure the sandbox, not the engine (disk-inclusive
-    end-to-end numbers are reported separately by bench.py).
+    so including it would measure the sandbox, not the engine
+    (disk-inclusive end-to-end numbers come from perfbench/run.py).
     """
     import shutil
 

@@ -131,13 +131,16 @@ def main() -> None:
     ok = "CartesianProduct" not in p and "NestedLoop" not in p
     checks.append(("setop_active_buyers: no cartesian in INTERSECT", ok, p))
 
-    # 12. zone-map-pruned decode: the driver plans the keep set from the
-    # stats columns and the part_id filter reaches the blocks scan (no join
-    # moves or broadcasts anything to prune)
+    # 12. zone-map-pruned decode: one mapInArrow task per block file reads
+    # the stats columns and decodes only the kept parts — no exchange moves
+    # a payload, no join or group-by reunites the parts
     p = _plan(qs["rt_tokens_pruned"](spark, sf_dir))
-    ok = _pruned_by_part_id(p)
+    ok = "MapInArrow" in p and not any(
+        n in p for n in ("Exchange", "Join", "FlatMapGroupsInArrow")
+    )
     checks.append(
-        ("rt_tokens_pruned: pushed part_id prune of blocks, no join", ok, p)
+        ("rt_tokens_pruned: per-file MapInArrow prune, no exchange, join "
+         "or group-by", ok, p)
     )
 
     # 13. stratified sampler: 100% JVM (no Python eval), broadcast rate map,
