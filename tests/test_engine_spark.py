@@ -372,6 +372,26 @@ def test_decode_pruned_ntok_exact_and_selective(spark, tokens_df, clustered_bloc
     assert surviving < total
 
 
+def test_decode_files_pruned_matches_shuffled(spark, tokens_df, clustered_blocks):
+    """The per-file pruned decode returns the same rows as the grouped
+    (shuffle) decode of the whole blocks table, filtered afterwards."""
+    from parquet_python_spark.engine import decode_blocks_files_pruned
+
+    _inp, blocks_dir = clustered_blocks
+    lo, hi = 16, 32
+    want = _as_sorted_rows(tokens_df.filter(F.col("n_tok").between(lo, hi)))
+    not_bare = spark.read.parquet(blocks_dir).filter(F.col("n_rows") >= 0)
+    shuffled = decode_blocks(not_bare)
+    assert "FlatMapGroupsInArrow" in (
+        shuffled._jdf.queryExecution().executedPlan().toString()
+    )
+    assert _as_sorted_rows(shuffled.filter(F.col("n_tok").between(lo, hi))) == want
+    got = _as_sorted_rows(
+        decode_blocks_files_pruned(spark, blocks_dir, "n_tok", lo, hi)
+    )
+    assert got == want
+
+
 def test_decode_pruned_token_value_range(spark, tokens_df, clustered_blocks):
     """Pruning on token VALUES: keep rows containing a token in [lo, hi];
     blocks whose token range misses it are skipped wholesale."""
