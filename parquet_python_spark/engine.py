@@ -360,7 +360,10 @@ def encode_table_files_native(
     meta_schema = T.StructType(
         [f for f in BLOCKS_SCHEMA.fields if f.name != "payload"]
     )
-    return paths_df.mapInArrow(enc, schema=meta_schema)
+    meta = paths_df.mapInArrow(enc, schema=meta_schema)
+    # nothing left to encode (a no-op resume): limit(0) plans as an empty
+    # local relation, so collecting it starts no Spark job or Python task
+    return meta if tasks_local else meta.limit(0)
 
 
 def _remove_stale_generations(blocks_dir: str, tasks: list[tuple]) -> set[str]:

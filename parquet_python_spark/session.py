@@ -1,5 +1,20 @@
 """SparkSession factory with engine defaults (local-mode stand-in for a
-multi-executor cluster; parallelism via SPARK_GRAFT_CPUS)."""
+multi-executor cluster; parallelism via SPARK_GRAFT_CPUS).
+
+Python workers start from ``parquet_python_spark._daemon``
+(``spark.python.daemon.module``). Spark puts ``pyspark.zip``, the py4j
+source zip and the spark-core jar on the workers' PYTHONPATH. pyspark's
+worker calls ``importlib.invalidate_caches()`` on every task, and under
+Python 3.11 each zipimporter built from those archives then re-reads its
+whole archive directory: a fixed cost of about 0.2 CPU-s per Python task.
+The daemon module drops the three archives from PYTHONPATH, keeping every
+other entry (user ``--py-files`` zips included), so workers import pyspark
+from the interpreter's site-packages. It leaves PYTHONPATH alone unless
+pyspark and py4j then import from directories and that pyspark's
+``version.py`` names the same version as the zip's: an executor that
+ships only the zip, or a mismatched install, keeps Spark's own path. The
+module then execs ``python -m pyspark.daemon``, so the daemon keeps its
+pid, port handshake and command line."""
 
 from __future__ import annotations
 
@@ -35,6 +50,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.sql.files.maxPartitionBytes", "128m")
+        .config("spark.python.daemon.module", "parquet_python_spark._daemon")
         # same allocator policy on real (non-local) executors
         .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", "536870912")
         .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", "536870912")
