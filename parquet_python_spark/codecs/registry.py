@@ -164,7 +164,12 @@ def select_codec(stats: dict, kind: str = "int") -> str:
 
 # ---------------------------------------------------------------- integers
 
-def _enc_int(vals: np.ndarray, codec: str) -> tuple[dict, bytes]:
+def _enc_int(
+    vals: np.ndarray, codec: str, dict_ptype: str | None = None
+) -> tuple[dict, bytes]:
+    """dict_ptype pins the dictionary entry width (the float bits route
+    keeps 8-byte entries so its dict page is PLAIN DOUBLE byte for byte);
+    default: int32 when every value fits."""
     if codec == "plain64":
         return {}, encode_plain_int64(vals)
     if codec == "plain32":
@@ -186,7 +191,7 @@ def _enc_int(vals: np.ndarray, codec: str) -> tuple[dict, bytes]:
         return encode_hybrid_params(vals, w)
     if codec == "dict":
         fits32 = len(vals) == 0 or (vals.min() >= -(2**31) and vals.max() < 2**31)
-        ptype = "int32" if fits32 else "int64"
+        ptype = dict_ptype or ("int32" if fits32 else "int64")
         return {"ptype": ptype}, encode_dict(
             vals.astype(np.int32) if ptype == "int32" else vals, ptype
         )
@@ -540,12 +545,12 @@ def _trial_compress_len(buf: bytes, outer: str) -> int:
 
 
 def _select_float_codec(vals: np.ndarray, itemsize: int, outer: str | None) -> str:
-    """PLAIN vs BYTE_STREAM_SPLIT for float chunks.  BSS is byte-identical
-    in size to PLAIN on its own — it only pays off under an outer
-    compressor — so the selection is a TRIAL: compress both layouts of a
-    sample with the actual outer codec and keep BSS only when it shrinks
-    the wrapped bytes.  Without an outer codec the answer is always
-    PLAIN."""
+    """PLAIN vs BYTE_STREAM_SPLIT for float chunks under an outer codec.
+    BSS is byte-identical in size to PLAIN on its own — it only pays off
+    under an outer compressor — so the selection is a TRIAL: compress both
+    layouts of a sample with the actual outer codec and keep BSS only when
+    it shrinks the wrapped bytes.  Without an outer codec the answer is
+    PLAIN (the integer routes of _float_int_route are tried first)."""
     if not outer or len(vals) == 0:
         return "plain"
     from .plain import encode_bss
@@ -554,6 +559,78 @@ def _select_float_codec(vals: np.ndarray, itemsize: int, outer: str | None) -> s
     plain_c = _trial_compress_len(sample.tobytes(), outer)
     bss_c = _trial_compress_len(encode_bss(sample, itemsize), outer)
     return "bss" if bss_c < plain_c * 0.98 else "plain"
+
+
+_DEC_MAX_E = 10
+_DEC_SAMPLE = 1024
+
+
+def _bits_dtype(dtype) -> type:
+    return np.int32 if np.dtype(dtype).itemsize == 4 else np.int64
+
+
+def _from_decimal(ints: np.ndarray, e: int, dtype) -> np.ndarray:
+    """The decimal route's decode expression; encode verifies against
+    exactly this, so decode is bit-exact by construction."""
+    return (ints / 10.0**e).astype(dtype, copy=False)
+
+
+def _decimal_ints(vals: np.ndarray, e: int) -> np.ndarray | None:
+    """rint(v·10^e) as int64 when it decodes back to every value's exact
+    bit pattern, else None.  Bits, not float ==: == equates -0.0 with 0.0
+    (the image has no -0) and never matches NaN."""
+    with np.errstate(over="ignore", invalid="ignore"):
+        r = np.rint(vals.astype(np.float64) * 10.0**e)
+    if not (np.abs(r) < 2.0**52).all():  # also rejects NaN / ±inf
+        return None
+    # verify from the int64 image itself: the float r may still be -0.0
+    ints = r.astype(np.int64)
+    bits = _bits_dtype(vals.dtype)
+    if not np.array_equal(
+        _from_decimal(ints, e, vals.dtype).view(bits), vals.view(bits)
+    ):
+        return None
+    return ints
+
+
+def _decimal_image(vals: np.ndarray) -> tuple[int, np.ndarray] | None:
+    """ALP-style decimal image (Afroozeh, Kuffó, Boncz, SIGMOD 2024): the
+    smallest exponent e that works on a leading sample, then verified on
+    the whole chunk.  No exceptions are stored: one miss drops the image."""
+    sample = vals[:_DEC_SAMPLE]
+    for e in range(_DEC_MAX_E + 1):
+        if _decimal_ints(sample, e) is not None:
+            ints = _decimal_ints(vals, e)
+            return None if ints is None else (e, ints)
+    return None
+
+
+def _float_int_route(vals: np.ndarray) -> tuple[dict, bytes] | None:
+    """Encode a float chunk through the integer selector; returns
+    (params, payload) or None when no integer image beats PLAIN.
+
+    Two integer images are tried and the smaller payload is kept:
+      * the raw IEEE bits (a dict result is Parquet's PLAIN_DICTIONARY
+        for DOUBLE / FLOAT byte for byte);
+      * the decimal image rint(v·10^e), when it is exact for the chunk.
+    params carry the integer codec, its params and, for the decimal
+    image, ``e``."""
+    bits_dt = _bits_dtype(vals.dtype)
+    images = [({}, vals.view(bits_dt), np.dtype(bits_dt).name)]
+    dec = _decimal_image(vals)
+    if dec is not None:
+        images.append(({"e": dec[0]}, dec[1], None))
+    best = None
+    for extra, ints, dict_ptype in images:
+        c = select_codec(chunk_stats(ints))
+        if c in ("plain64", "plain32"):
+            continue
+        p, payload = _enc_int(ints, c, dict_ptype)
+        if best is None or len(payload) < len(best[1]):
+            best = ({"int_codec": c, "int_params": p, **extra}, payload)
+    if best is None or len(best[1]) >= vals.nbytes:
+        return None
+    return best
 
 
 def _encode_column_inner(values, kind: str, codec: str | None, outer: str | None = None):
@@ -585,9 +662,12 @@ def _encode_column_inner(values, kind: str, codec: str | None, outer: str | None
         vals = np.asarray(values, dtype=bool)
         return "plain_bool", {}, encode_plain_boolean(vals), {"n": len(vals)}
     if kind in ("float32", "float64"):
-        # PLAIN or BYTE_STREAM_SPLIT (Parquet's float encoding — streams
-        # of byte k across all values; wins only under an outer codec, so
-        # selection is trial-based in _select_float_codec)
+        # Without a forced or outer codec: the integer routes of
+        # _float_int_route (dictionary over the IEEE bits, or an exact
+        # decimal image), kept only when they beat PLAIN.  Otherwise PLAIN
+        # or BYTE_STREAM_SPLIT (Parquet's float encoding — streams of byte
+        # k across all values; wins only under an outer codec, so that
+        # selection is trial-based in _select_float_codec).
         from .plain import (
             encode_bss,
             encode_plain_double,
@@ -598,8 +678,12 @@ def _encode_column_inner(values, kind: str, codec: str | None, outer: str | None
         vals = np.ascontiguousarray(
             values, dtype="<f4" if itemsize == 4 else "<f8"
         )
-        want = codec or _select_float_codec(vals, itemsize, outer)
         suffix = "f32" if itemsize == 4 else "f64"
+        if codec is None and not outer and len(vals):
+            routed = _float_int_route(vals)
+            if routed is not None:
+                return f"int_{suffix}", routed[0], routed[1], {"n": len(vals)}
+        want = codec or _select_float_codec(vals, itemsize, outer)
         if want in (f"bss_{suffix}", "bss"):
             return f"bss_{suffix}", {}, encode_bss(vals, itemsize), {"n": len(vals)}
         if want not in (f"plain_{suffix}", "plain"):
@@ -647,18 +731,21 @@ def decode_column(
         from .plain import decode_plain_boolean
 
         return np.asarray(decode_plain_boolean(payload, n), dtype=bool)
-    if kind == "float32":
-        from .plain import decode_bss, decode_plain_float
+    if kind in ("float32", "float64"):
+        from .plain import decode_bss, decode_plain_double, decode_plain_float
 
-        if codec == "bss_f32":
-            return decode_bss(payload, n, 4)
-        return np.asarray(decode_plain_float(payload, n))
-    if kind == "float64":
-        from .plain import decode_bss, decode_plain_double
-
-        if codec == "bss_f64":
-            return decode_bss(payload, n, 8)
-        return np.asarray(decode_plain_double(payload, n))
+        itemsize = 4 if kind == "float32" else 8
+        suffix = "f32" if itemsize == 4 else "f64"
+        if codec == f"int_{suffix}":
+            ints = _dec_int(payload, n, params["int_codec"], params["int_params"])
+            dtype = np.float32 if itemsize == 4 else np.float64
+            if "e" in params:
+                return _from_decimal(ints, params["e"], dtype)
+            return ints.astype(_bits_dtype(dtype), copy=False).view(dtype)
+        if codec == f"bss_{suffix}":
+            return decode_bss(payload, n, itemsize)
+        dec = decode_plain_float if itemsize == 4 else decode_plain_double
+        return np.asarray(dec(payload, n))
     if kind == "flba":
         from .plain import decode_plain_flba, flba_matrix_to_bytes_list
 

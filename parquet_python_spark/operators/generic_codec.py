@@ -10,8 +10,9 @@ Spark-first.
 Column kinds:
     int      — any integral Spark type (encoded as int64 chunks)
     str      — StringType
-    float64  — DoubleType (PLAIN, bit-exact)
-    float32  — FloatType  (PLAIN, bit-exact)
+    float64  — DoubleType (bit-exact: dict over IEEE bits, exact decimal
+               image, or PLAIN — see codecs/registry._float_int_route)
+    float32  — FloatType  (same routes as float64)
     int_list — ArrayType(int)    (flattened values + lengths chunk)
     f32_list — ArrayType(float)  (flattened values + lengths chunk)
     flba     — BinaryType, equal-length values (D7 FIXED_LEN_BYTE_ARRAY)
@@ -1008,7 +1009,8 @@ def _decode_values_ranges(
     Eligible when every value has a fixed bit stride (plain / bitpack /
     FOR — page boundaries are byte-aligned because PAGE_ROWS is a multiple
     of 8) and value offsets equal row offsets (no nulls, no page/outer
-    framing).  Returns None when ineligible (caller decodes fully and
+    framing).  Float chunks on an integer route (int_f64 / int_f32) are
+    not eligible.  Returns None when ineligible (caller decodes fully and
     row-slices)."""
     if not ranges or n_values != n_rows:
         return None

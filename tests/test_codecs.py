@@ -103,6 +103,26 @@ def test_dict_roundtrip_int_reference_oracle():
     np.testing.assert_array_equal(decode_dict(blob, len(vals), "int32"), vals)
 
 
+def test_dict_roundtrip_double_reference_oracle():
+    """A low-cardinality float64 chunk takes the dict-over-IEEE-bits route,
+    whose payload is Parquet's PLAIN_DICTIONARY for DOUBLE: the reference
+    reads it as a double dictionary page plus hybrid indices."""
+    pool = np.array(
+        [0.1, -2.5, 1e300, np.nan, -0.0, np.inf, 1 / 3, 5e-324],
+        dtype=np.float64,
+    )
+    vals = pool[np.random.default_rng(3).integers(0, len(pool), 5000)]
+    codec, params, payload, _ = encode_column(vals, "float64")
+    assert codec == "int_f64"
+    assert params["int_codec"] == "dict" and "e" not in params
+    fo = BytesIO(payload)
+    n_dict = int.from_bytes(fo.read(4), "little")
+    dict_vals = ref.read_plain_dictionary_values(fo, n_dict, "double")
+    idx = ref.read_dictionary_indices_page(fo.read(), len(vals))
+    got = np.array([dict_vals[i] for i in idx], dtype=np.float64)
+    assert np.array_equal(got.view(np.int64), vals.view(np.int64))
+
+
 def test_dict_roundtrip_strings():
     vals = np.array([b"ab", b"", b"ab", b"xyz", b"\xf0\x9f\x98\x80"] * 50, dtype=object)
     blob = encode_dict(vals, "byte_array")

@@ -542,6 +542,55 @@ def test_bss_roundtrip_and_outer_win():
         assert c3.startswith("plain_")
 
 
+@pytest.mark.parametrize("kind", ["float32", "float64"])
+def test_float_int_routes_selected(kind):
+    """Without a forced or outer codec, floats go through the integer
+    selector: repeated values (with NaN / -0.0 / inf) as a dict over the
+    IEEE bits, high-cardinality two-decimal prices as the decimal image,
+    and both beat PLAIN's bytes."""
+    from parquet_python_spark.codecs import decode_column, encode_column
+
+    dt = np.dtype(kind)
+    rng = np.random.default_rng(11)
+    pool = np.array([0.05, -0.0, np.nan, np.inf, -np.inf, 3.0], dtype=dt)
+    low = pool[rng.integers(0, len(pool), 20_000)]
+    prices = (rng.integers(90_000, 10_500_000, 20_000) / 100).astype(dt)
+    for vals, want_e in ((low, False), (prices, True)):
+        c, p, blob, _ = encode_column(vals, kind)
+        assert c == f"int_{'f32' if dt.itemsize == 4 else 'f64'}"
+        assert ("e" in p) == want_e
+        assert len(blob) < vals.nbytes
+        out = np.asarray(decode_column(c, blob, len(vals), p, kind))
+        assert out.dtype == dt
+        assert np.array_equal(out.view(np.uint8), vals.view(np.uint8))
+    assert p["e"] == 2
+    # no exceptions are stored: one NaN drops the decimal image
+    prices[7] = np.nan
+    c, p, blob, _ = encode_column(prices, kind)
+    assert "e" not in p
+    out = np.asarray(decode_column(c, blob, len(prices), p, kind))
+    assert np.array_equal(out.view(np.uint8), prices.view(np.uint8))
+
+
+@pytest.mark.parametrize("kind", ["float32", "float64"])
+def test_forced_float_codec_overrides_auto_selection(kind):
+    """A forced plain / bss float codec is honoured even where the auto
+    selector would take an integer route; an unknown one raises."""
+    from parquet_python_spark.codecs import decode_column, encode_column
+
+    suffix = "f32" if kind == "float32" else "f64"
+    vals = np.tile(np.array([0.25, 0.5, 0.75], dtype=kind), 4000)
+    assert encode_column(vals, kind)[0] == f"int_{suffix}"
+    for forced in ("plain", "bss", f"plain_{suffix}", f"bss_{suffix}"):
+        c, p, blob, _ = encode_column(vals, kind, codec=forced)
+        assert c == f"{forced.split('_')[0]}_{suffix}"
+        assert len(blob) == vals.nbytes
+        out = np.asarray(decode_column(c, blob, len(vals), p, kind))
+        assert np.array_equal(out.view(np.uint8), vals.view(np.uint8))
+    with pytest.raises(KeyError):
+        encode_column(vals, kind, codec="dict")
+
+
 def test_str_dlba_wire_and_roundtrip():
     """DELTA_LENGTH_BYTE_ARRAY shape: delta_bp-encoded lengths + raw
     concatenated bytes; lengths parse with the delta_bp decoder alone."""

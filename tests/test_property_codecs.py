@@ -3,7 +3,8 @@
 The reference has no property testing (SURVEY.md §5); these harden the
 engine's wire formats against edge shapes the fixture profiles miss:
 empty chunks, single values, all-equal runs, width boundaries, negative
-ints, zero-length strings, non-ascii bytes.
+ints, zero-length strings, non-ascii bytes, and float bit patterns (NaN
+payloads, -0.0, ±inf, subnormals) compared byte for byte.
 """
 
 from __future__ import annotations
@@ -81,22 +82,60 @@ def test_dba_wire_roundtrip_binary(vals):
     assert np.array_equal(out_lens, lens) and out_blob == blob
 
 
+def _float_bit_lists(width: int):
+    """Lists of IEEE bit patterns (uint32/uint64), so NaN payloads and the
+    sign of zero survive into the array untouched.  Mixes arbitrary bits,
+    NaNs with random payloads and signs, ±0.0, ±inf, subnormals, and
+    decimals: high-cardinality decimal lists take the decimal image,
+    short repeated pools (specials included) take the dict over bits."""
+    ftype = np.float32 if width == 32 else np.float64
+    utype = np.uint32 if width == 32 else np.uint64
+    mant = 23 if width == 32 else 52
+    exp_all = ((1 << (width - 1 - mant)) - 1) << mant
+    sign = 1 << (width - 1)
+
+    def bits(x) -> int:
+        return int(np.asarray(x, dtype=ftype).view(utype))
+
+    nan = st.tuples(st.booleans(), st.integers(1, (1 << mant) - 1)).map(
+        lambda t: (sign if t[0] else 0) | exp_all | t[1]
+    )
+    specials = st.sampled_from(
+        [bits(0.0), bits(-0.0), bits(np.inf), bits(-np.inf),
+         1, (1 << mant) - 1, sign | 1, sign | ((1 << mant) - 1)]
+    )
+    decimal = st.integers(-(10**6), 10**6).map(lambda i: bits(i / 100))
+    zeros = st.sampled_from([bits(0.0), bits(-0.0)])
+    element = st.one_of(st.integers(0, (1 << width) - 1), nan, specials, decimal)
+    return st.one_of(
+        st.lists(element, max_size=300),
+        st.lists(decimal, max_size=300),
+        # -0.0 equals 0.0 as a float but not as bits: the decimal image
+        # (which has no -0) must be refused for these
+        st.lists(st.one_of(decimal, zeros), max_size=300),
+        st.lists(element, min_size=1, max_size=8).flatmap(
+            lambda pool: st.lists(st.sampled_from(pool), max_size=300)
+        ),
+        st.lists(st.floats(width=width).map(bits), max_size=300),
+    ).map(lambda b: np.array(b, dtype=utype).view(ftype))
+
+
 @SET
-@given(st.lists(st.floats(allow_nan=False, width=32), min_size=0, max_size=300))
-def test_f32_roundtrip_bit_exact(vals):
-    arr = np.array(vals, dtype=np.float32)
+@given(_float_bit_lists(32))
+def test_f32_roundtrip_bit_exact(arr):
     c, params, payload, _ = encode_column(arr, "float32")
     out = np.asarray(decode_column(c, payload, len(arr), params, "float32"))
-    assert out.dtype == np.float32 and np.array_equal(out, arr)
+    assert out.dtype == np.float32
+    assert np.array_equal(out.view(np.uint8), arr.view(np.uint8))
 
 
 @SET
-@given(st.lists(st.floats(allow_nan=False), min_size=0, max_size=300))
-def test_f64_roundtrip_bit_exact(vals):
-    arr = np.array(vals, dtype=np.float64)
+@given(_float_bit_lists(64))
+def test_f64_roundtrip_bit_exact(arr):
     c, params, payload, _ = encode_column(arr, "float64")
     out = np.asarray(decode_column(c, payload, len(arr), params, "float64"))
-    assert out.dtype == np.float64 and np.array_equal(out, arr)
+    assert out.dtype == np.float64
+    assert np.array_equal(out.view(np.uint8), arr.view(np.uint8))
 
 
 @given(st.lists(st.booleans(), min_size=0, max_size=400))

@@ -636,6 +636,105 @@ def test_float_zone_maps_negative_zero_boundary(spark):
     blocks.unpersist()
 
 
+def test_float_int_routes_end_to_end(spark, tmp_path):
+    """Lineitem-shaped doubles (integer/100 discounts, integer quantities,
+    two-decimal prices, plus -0.0, NaN, ±inf and nulls) encode through the
+    integer routes, round-trip bit-identically, stay within the whole
+    column's reference dictionary bytes, and a page-pruned price range
+    over an int_f64 chunk (which the payload-slice fast path declines, so
+    the chunk decodes fully) equals the pyarrow oracle."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from parquet_python_spark.codecs import encode_dict
+    from parquet_python_spark.operators.generic_codec import (
+        PAGE_ROWS,
+        _arrow_safe_schema,
+        _decode_values_ranges,
+        _def_levels_blob,
+        decode_df,
+        decode_df_pruned,
+        encode_df,
+    )
+
+    n = 40_000
+    rng = np.random.default_rng(21)
+    k = np.arange(n)
+    disc = rng.integers(0, 11, n) / 100.0
+    qty = rng.integers(1, 51, n).astype(np.float64)
+    # monotone in k, so page zone maps prune inside a chunk
+    price = (90_000 + k * 37 + rng.integers(0, 37, n)) / 100.0
+    # specials ride the low-cardinality columns' dict over the IEEE bits; a
+    # price chunk holding them would keep plain_f64 (no exceptions stored)
+    disc[:4] = qty[4:8] = [-0.0, np.nan, np.inf, -np.inf]
+    null = np.zeros(n, dtype=bool)
+    null[12:200:7] = True
+    floats = ["l_discount", "l_quantity", "l_extendedprice"]
+    tbl = pa.table(
+        {"k": k}
+        | {c: pa.array(v, mask=null) for c, v in zip(floats, (disc, qty, price))}
+    )
+    path = str(tmp_path / "li.parquet")
+    pq.write_table(tbl, path)
+    df = spark.read.parquet(path)
+    kinds = {"k": "int"} | {c: "float64" for c in floats}
+    blocks = encode_df(df, "k", kinds, n_parts=4, partitioning="range").cache()
+    out_schema = _arrow_safe_schema(df.schema, kinds)
+
+    rows = blocks.filter(F.col("column").isin(floats)).collect()
+    for c in floats:
+        crows = [r for r in rows if r["column"] == c]
+        assert crows and all(r["codec"] == "int_f64" for r in crows), c
+        # enc_bytes carries the validity stream, so the reference side
+        # carries the whole column's definition levels too, as a Parquet
+        # PLAIN_DICTIONARY column chunk would
+        present = tbl.column(c).drop_null().to_numpy()
+        valid = tbl.column(c).is_valid().to_numpy(zero_copy_only=False)
+        ref_bytes = len(encode_dict(present.view(np.int64), "int64")) + len(
+            _def_levels_blob(valid)
+        ) + 4
+        assert sum(r["enc_bytes"] for r in crows) <= ref_bytes, c
+
+    def bits_equal(got: pa.Table, want: pa.Table) -> None:
+        for c in floats:
+            g, w = got.column(c).combine_chunks(), want.column(c)
+            gv = g.is_valid().to_numpy(zero_copy_only=False)
+            assert np.array_equal(gv, w.is_valid().to_numpy(zero_copy_only=False))
+            assert np.array_equal(
+                g.to_numpy(zero_copy_only=False)[gv].view(np.int64),
+                w.to_numpy(zero_copy_only=False)[gv].view(np.int64),
+            ), c
+
+    full = decode_df(blocks, "k", kinds, out_schema).toArrow().sort_by("k")
+    assert full.column("k").to_pylist() == k.tolist()
+    bits_equal(full, tbl)
+
+    # one page of the price chunk holding k ~ 25 000
+    lo, hi = 10_150.0, 10_160.0
+    prow = next(
+        r for r in rows
+        if r["column"] == "l_extendedprice" and r["stat_min"] is not None
+        and "e" in r["params"] and r["n_rows"] > PAGE_ROWS
+    )
+    assert _decode_values_ranges(
+        prow["payload"], prow["n_rows"], prow["n_values"], prow["codec"],
+        prow["params"], "float64", [(0, PAGE_ROWS)],
+    ) is None
+    dec = decode_df_pruned(
+        blocks, "k", kinds, out_schema, "l_extendedprice", lo, hi
+    ).toArrow()
+    assert dec.num_rows < n // 4  # pages skipped inside the surviving chunk
+    x = dec.column("l_extendedprice")
+    got = dec.filter(pc.and_(pc.greater_equal(x, lo), pc.less_equal(x, hi)))
+    xo = tbl.column("l_extendedprice")
+    want = tbl.filter(pc.and_(pc.greater_equal(xo, lo), pc.less_equal(xo, hi)))
+    assert want.num_rows > 0
+    bits_equal(got.sort_by("k"), want)
+    blocks.unpersist()
+
+
 # ------------------------------------------------ string bloom point lookups
 
 def test_string_bloom_pruned_equality_roundtrip(spark):
