@@ -267,7 +267,7 @@ def _rt_documents_nulls(spark, sf_dir):
     # predicates before any payload is read or decoded.
     from parquet_python_spark.operators.generic_codec import (
         roundtrip,
-        roundtrip_filtered_null_modes,
+        roundtrip_filtered,
     )
 
     docs = _t(spark, sf_dir, "documents").select(
@@ -279,11 +279,12 @@ def _rt_documents_nulls(spark, sf_dir):
     full = roundtrip(docs, "doc_id", kinds, page="v2", outer="lz4_raw").select(
         F.lit("all").alias("mode"), "*"
     )
-    # both null modes share ONE encode (blocks persisted once, pruned
-    # twice with opposite null predicates)
-    nul, nn = roundtrip_filtered_null_modes(docs, "doc_id", kinds, "lang_n")
-    nn = nn.select(F.lit("notnull").alias("mode"), "*")
-    nul = nul.select(F.lit("null").alias("mode"), "*")
+    nn = roundtrip_filtered(
+        docs, "doc_id", kinds, [("notnull", "lang_n")]
+    ).select(F.lit("notnull").alias("mode"), "*")
+    nul = roundtrip_filtered(
+        docs, "doc_id", kinds, [("isnull", "lang_n")]
+    ).select(F.lit("null").alias("mode"), "*")
     return full.unionAll(nn).unionAll(nul)
 
 
@@ -292,28 +293,23 @@ def _rt_lineitem_pruned(spark, sf_dir):
     # mode='range' — per-block min/max stats (the Statistics the reference
     # parses but never uses, parquet.thrift:198-206) skip blocks outside
     # [lo, hi] before any payload is read or decoded (range partitioning
-    # makes the stats selective); mode='eq' — per-chunk Bloom filters
-    # (parquet BloomFilter.md) prune a point lookup where min/max cannot.
-    from parquet_python_spark.operators.generic_codec import (
-        roundtrip_filtered,
-        roundtrip_filtered_any,
-        roundtrip_filtered_eq,
-        roundtrip_filtered_multi,
-    )
+    # makes the stats selective); mode='eq' — a point lookup, pruned by
+    # the zone maps and the per-chunk Bloom filters (parquet BloomFilter.md).
+    from parquet_python_spark.operators.generic_codec import roundtrip_filtered
 
     li = _t(spark, sf_dir, "lineitem")
     kinds = {"l_orderkey": "int", "l_partkey": "int", "l_quantity": "float64"}
     rng = roundtrip_filtered(
-        li, "l_orderkey", kinds, "l_orderkey", 1000, 3000
+        li, "l_orderkey", kinds, [("range", "l_orderkey", 1000, 3000)]
     ).select(F.lit("range").alias("mode"), "*")
-    eq = roundtrip_filtered_eq(
-        li, "l_orderkey", kinds, "l_orderkey", 1234
+    eq = roundtrip_filtered(
+        li, "l_orderkey", kinds, [("eq", "l_orderkey", 1234)]
     ).select(F.lit("eq").alias("mode"), "*")
     # mode='multi' (round 5): conjunctive pruning — keep sets intersect
     # across predicates (planned on the driver from one metadata read,
     # applied as a pushed part_id filter), page ranges intersect inside
     # surviving chunks; selectivities multiply
-    multi = roundtrip_filtered_multi(
+    multi = roundtrip_filtered(
         li, "l_orderkey", kinds,
         [
             ("range", "l_orderkey", 1000, 3000),
@@ -323,12 +319,13 @@ def _rt_lineitem_pruned(spark, sf_dir):
     ).select(F.lit("multi").alias("mode"), "*")
     # mode='any' (round 5): disjunctive pruning — keep sets UNION on the
     # driver, page ranges union; IN-list rides as per-value [v, v]
-    any_ = roundtrip_filtered_any(
+    any_ = roundtrip_filtered(
         li, "l_orderkey", kinds,
         [
             ("range", "l_orderkey", 100, 200),
             ("in", "l_orderkey", [1234, 4321]),
         ],
+        combine="or",
     ).select(F.lit("any").alias("mode"), "*")
     return rng.unionAll(eq).unionAll(multi).unionAll(any_)
 

@@ -202,6 +202,21 @@ def _enc_int(
     raise KeyError(f"unknown int codec {codec}")
 
 
+def _enc_selected(
+    vals: np.ndarray, codec: str, dict_ptype: str | None = None
+) -> tuple[str, dict, bytes]:
+    """_enc_int for a codec the selector chose -> (codec, params, payload).
+    An fsst encode whose training found no symbol is bitpack plus a
+    header, with a slower decode, so it is stored as bitpack instead
+    (the selector's fsst estimate assumes symbol hits that uniform data
+    does not have)."""
+    params, payload = _enc_int(vals, codec, dict_ptype)
+    if codec == "fsst" and params["n_sym"] == 0:
+        codec = "bitpack"
+        params, payload = _enc_int(vals, codec)
+    return codec, params, payload
+
+
 def _dec_int(
     data: bytes, n: int, codec: str, params: dict, prefer32: bool = False
 ) -> np.ndarray:
@@ -625,7 +640,7 @@ def _float_int_route(vals: np.ndarray) -> tuple[dict, bytes] | None:
         c = select_codec(chunk_stats(ints))
         if c in ("plain64", "plain32"):
             continue
-        p, payload = _enc_int(ints, c, dict_ptype)
+        c, p, payload = _enc_selected(ints, c, dict_ptype)
         if best is None or len(payload) < len(best[1]):
             best = ({"int_codec": c, "int_params": p, **extra}, payload)
     if best is None or len(best[1]) >= vals.nbytes:
@@ -641,8 +656,10 @@ def _encode_column_inner(values, kind: str, codec: str | None, outer: str | None
         if vals.dtype.kind not in "iu":
             vals = vals.astype(np.int64)
         stats = chunk_stats(vals)
-        codec = codec or select_codec(stats, kind)
-        params, payload = _enc_int(vals, codec)
+        if codec:  # a forced codec is stored as asked, fsst included
+            params, payload = _enc_int(vals, codec)
+        else:
+            codec, params, payload = _enc_selected(vals, select_codec(stats, kind))
         return codec, params, payload, stats
     if kind == "str":
         codec = codec or select_str_codec(values)

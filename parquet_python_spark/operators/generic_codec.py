@@ -93,7 +93,7 @@ BLOCKS_SCHEMA = T.StructType(
         # per-chunk null count (Parquet Statistics.null_count analog —
         # parsed by the reference at parquet.thrift:198-206, never used):
         # drives IS NULL / IS NOT NULL chunk skipping in
-        # decode_df_pruned_null for every scalar kind
+        # decode_df_pruned_multi for every scalar kind
         T.StructField("n_nulls", T.LongType(), False),
     ]
 )
@@ -476,7 +476,7 @@ def bloom_might_contain(blob: bytes, value: int) -> bool:
             return False
     return True
 
-# bounded cache registry for roundtrip_filtered{,_eq}'s persisted blocks.
+# bounded cache registry for roundtrip_filtered's persisted blocks.
 # More than one slot because a single driver query may lazily hold SEVERAL
 # filtered round-trips at once (rt_lineitem_pruned unions the range and eq
 # halves), and a single-slot eager unpersist would evict a sibling's blocks
@@ -691,7 +691,6 @@ def encode_df(
     n_parts: int | None = None,
     forced_codecs: dict[str, str] | None = None,
     partitioning: str = "hash",
-    build_blooms: bool = True,
     page: str = "v1",
     outer: str | None = None,
 ) -> DataFrame:
@@ -708,14 +707,10 @@ def encode_df(
     clustered-table layout that makes per-block min/max stats selective
     (decode_df_pruned skips whole blocks).  Both are deterministic given
     the data; n_parts scales with the row count unless pinned.
-
-    build_blooms=False skips the per-chunk Bloom bitsets (a per-int-column
-    np.unique at encode time) for workloads that will never point-prune;
-    min/max stats are always built (near-free off Arrow min_max).
     """
     work, enc = _encode_plan(
         df, key_col, col_kinds, n_parts, forced_codecs, partitioning,
-        build_blooms, page, outer,
+        page, outer,
     )
 
     def enc_group(tbl: pa.Table) -> pa.Table:
@@ -756,7 +751,6 @@ def _encode_plan(
     n_parts: int | None = None,
     forced_codecs: dict[str, str] | None = None,
     partitioning: str = "hash",
-    build_blooms: bool = True,
     page: str = "v1",
     outer: str | None = None,
     build_stats: bool = True,
@@ -829,9 +823,7 @@ def _encode_plan(
     # encode UDF never runs per-row Python over string bytes; the hidden
     # column rides next to its string column and is dropped from the blocks
     str_bloom_cols = (
-        [c for c, k in col_kinds.items() if k == "str"]
-        if (build_blooms and build_stats)
-        else []
+        [c for c, k in col_kinds.items() if k == "str"] if build_stats else []
     )
     for c in str_bloom_cols:
         work = work.withColumn(f"__bh_{c}", F.xxhash64(F.col(c)))
@@ -907,11 +899,8 @@ def _encode_plan(
                     pass  # fused round-trip: no pruning artifact is reachable
                 elif kind in ("int", "int96_ts"):
                     stats = int_stats(arr)
-                    if build_blooms:
-                        present = pc.drop_null(arr) if arr.null_count else arr
-                        bloom = bloom_build(
-                            present.to_numpy(zero_copy_only=False)
-                        )
+                    present = pc.drop_null(arr) if arr.null_count else arr
+                    bloom = bloom_build(present.to_numpy(zero_copy_only=False))
                     if arr.null_count == 0:
                         pstats = _page_stats_blob(
                             arr.to_numpy(zero_copy_only=False)
@@ -934,19 +923,16 @@ def _encode_plan(
                     # per-page truncated bounds; null slots never widen a
                     # page's bounds, all-null pages are marked skippable
                     pstats = _str_page_stats_blob(arr)
-                    if build_blooms:
-                        # bloom over the JVM-computed xxhash64 values
-                        # (row-aligned; drop slots where the string is null)
-                        hvals = combined_chunks(
-                            tbl.column(f"__bh_{col}")
-                        ).to_numpy(zero_copy_only=False)
-                        if arr.null_count:
-                            hvals = hvals[
-                                pc.is_valid(arr).to_numpy(
-                                    zero_copy_only=False
-                                )
-                            ]
-                        bloom = bloom_build(hvals.astype(np.int64, copy=False))
+                    # bloom over the JVM-computed xxhash64 values
+                    # (row-aligned; drop slots where the string is null)
+                    hvals = combined_chunks(
+                        tbl.column(f"__bh_{col}")
+                    ).to_numpy(zero_copy_only=False)
+                    if arr.null_count:
+                        hvals = hvals[
+                            pc.is_valid(arr).to_numpy(zero_copy_only=False)
+                        ]
+                    bloom = bloom_build(hvals.astype(np.int64, copy=False))
                 elif kind in ("float64", "float32"):
                     # float zone maps ride the int64 stat columns through
                     # the order-preserving bits transform (exact monotone,
@@ -1499,57 +1485,47 @@ def decode_df_pruned_multi(
     col_kinds: dict[str, str],
     out_schema: T.StructType,
     preds: list[tuple],
+    combine: str = "and",
 ) -> DataFrame:
-    """Conjunctive (AND) predicate pruning: a partition decodes only when
-    EVERY predicate admits it, and surviving chunks decode only the
-    INTERSECTION of each predicate's page row ranges — selectivities
+    """Multi-predicate pruning.  ``combine="and"``: a partition decodes
+    only when EVERY predicate admits it, and surviving chunks decode only
+    the INTERSECTION of each predicate's page row ranges — selectivities
     multiply, which is exactly what makes pruning pay at 100x scale.
+    ``combine="or"``: a partition decodes when ANY predicate admits it,
+    and surviving chunks decode the UNION of every predicate's page row
+    ranges (one union group); null members contribute their per-page
+    null-count bounds to the same union, so a chunk admitted only by an
+    IS NULL member still page-skips its null-free pages.  Together:
+    arbitrary AND-of-atoms and OR-of-atoms prunes (compose row-side for
+    deeper nesting).
 
     ``preds`` entries: ``("range", col, lo, hi)``, ``("eq", col, value)``,
     ``("in", col, [v1, ...])``, ``("isnull", col)``, ``("notnull", col)``.
     Chunk level: one metadata read (plus the executor-side Bloom test
     for eq/in) gives each predicate's keep set on the driver; the sets
-    intersect there and reach the decode as a pushed part_id filter.
+    combine there and reach the decode as a pushed part_id filter.
     Page level: int/str equality rides the zone maps as the degenerate
     range [v, v], IN-lists as the UNION of their values' ranges, and
     null predicates skip pages through the per-page null counts
     (null-free pages for IS NULL, all-null pages for IS NOT NULL).
     Output is a SUPERSET of matching rows — callers re-apply the exact
     row predicate, same contract as every other pruned decode."""
+    if combine not in ("and", "or"):
+        raise ValueError(f"combine must be 'and' or 'or', got {combine!r}")
     planned = _pred_keeps(blocks, col_kinds, _normalize_preds(preds))
-    keep = set.intersection(*(k for k, _ in planned))
-    page_prunes = [
-        pages[0] if len(pages) == 1 else pages for _, pages in planned if pages
-    ]
+    if combine == "and":
+        keep = set.intersection(*(k for k, _ in planned))
+        page_prunes = [
+            pages[0] if len(pages) == 1 else pages
+            for _, pages in planned if pages
+        ]
+    else:
+        keep = set().union(*(k for k, _ in planned))
+        union_tuples = [t for _, pages in planned for t in pages]
+        page_prunes = [union_tuples] if union_tuples else []
     return decode_df(
         _keep_parts(blocks, keep), key_col, col_kinds, out_schema,
         prune=page_prunes or None,
-    )
-
-
-def decode_df_pruned_any(
-    blocks: DataFrame,
-    key_col: str,
-    col_kinds: dict[str, str],
-    out_schema: T.StructType,
-    preds: list[tuple],
-) -> DataFrame:
-    """Disjunctive (OR) predicate pruning: a partition decodes when ANY
-    predicate admits it (the union of the per-predicate keep sets, from
-    the same one metadata read), and surviving chunks decode the UNION
-    of every predicate's page row ranges (one union group); null members
-    contribute their per-page null-count bounds to the same union, so a
-    chunk admitted only by an IS NULL member still page-skips its
-    null-free pages.  Same pred grammar as decode_df_pruned_multi; same
-    superset-then-re-filter contract.  With decode_df_pruned_multi this
-    completes the predicate algebra: arbitrary AND-of-atoms and
-    OR-of-atoms prunes (compose row-side for deeper nesting)."""
-    planned = _pred_keeps(blocks, col_kinds, _normalize_preds(preds))
-    keep = set().union(*(k for k, _ in planned))
-    union_tuples = [t for _, pages in planned for t in pages]
-    return decode_df(
-        _keep_parts(blocks, keep), key_col, col_kinds, out_schema,
-        prune=[union_tuples] if union_tuples else None,
     )
 
 
@@ -1583,106 +1559,6 @@ def decode_df_pruned_eq(
     degenerate range [v, v])."""
     return decode_df_pruned_multi(
         blocks, key_col, col_kinds, out_schema, [("eq", pred_col, value)]
-    )
-
-
-def decode_df_pruned_null(
-    blocks: DataFrame,
-    key_col: str,
-    col_kinds: dict[str, str],
-    out_schema: T.StructType,
-    pred_col: str,
-    want_null: bool,
-) -> DataFrame:
-    """IS NULL / IS NOT NULL chunk skipping via the per-chunk null counts
-    (Parquet Statistics.null_count analog — the reference parses it,
-    parquet.thrift:198-206, and never consumes it).  ``want_null=True``
-    decodes only chunks containing at least one null; ``False`` only
-    chunks with at least one present value.  Exact counts (not min/max
-    bounds), so the skip is airtight for every scalar kind — callers
-    still re-apply the row predicate because surviving chunks hold a mix.
-    Same scale shape as the stats prune: the driver plans the keep set
-    from the metadata read and the decode's part_id filter pushes to the
-    blocks scan; skipped payloads are never shuffled or decoded."""
-    return decode_df_pruned_multi(
-        blocks, key_col, col_kinds, out_schema,
-        [("isnull" if want_null else "notnull", pred_col)],
-    )
-
-
-def roundtrip_filtered_eq(
-    df: DataFrame,
-    key_col: str,
-    col_kinds: dict[str, str],
-    pred_col: str,
-    value: int | str,
-    n_parts: int | None = None,
-) -> DataFrame:
-    """encode -> blocks -> bloom-pruned decode -> exact equality filter
-    (the point-lookup twin of roundtrip_filtered)."""
-    from pyspark import StorageLevel
-
-    cols = list(col_kinds)
-    in_schema = df.select(*cols).schema
-    blocks = encode_df(df, key_col, col_kinds, n_parts).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    _retain_filtered_blocks(blocks)
-    decoded = decode_df_pruned_eq(
-        blocks, key_col, col_kinds, _arrow_safe_schema(in_schema, col_kinds),
-        pred_col, value,
-    )
-    out = decoded.filter(F.col(pred_col) == value)
-    return out.select(
-        *[
-            F.col(f.name).cast(_cast_target(f.dataType)).alias(f.name)
-            for f in in_schema.fields
-        ]
-    )
-
-
-def roundtrip_filtered(
-    df: DataFrame,
-    key_col: str,
-    col_kinds: dict[str, str],
-    pred_col: str,
-    lo: int,
-    hi: int,
-    n_parts: int | None = None,
-    forced_codecs: dict[str, str] | None = None,
-) -> DataFrame:
-    """encode -> blocks -> min/max-pruned decode -> exact predicate.
-
-    Row-level result is exact (the block-stats prune is a superset; the
-    final filter re-applies the predicate); the prune is the perf win.
-
-    The blocks DataFrame is persisted across its two consumers (the stats
-    scan and the pruned decode) — without it the whole Arrow encode stage
-    would execute twice.  The cache is released as newer calls come in
-    (module-level bounded registry — see _retain_filtered_blocks),
-    holding the last _FILTERED_BLOCKS_KEEP encodes instead of one per
-    call.  In a persistent deployment the blocks live in a parquet/
-    Iceberg table instead and the stats filter prunes at the scan."""
-    from pyspark import StorageLevel
-
-    cols = list(col_kinds)
-    in_schema = df.select(*cols).schema
-    blocks = encode_df(
-        df, key_col, col_kinds, n_parts, forced_codecs, partitioning="range"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _retain_filtered_blocks(blocks)
-    decoded = decode_df_pruned(
-        blocks, key_col, col_kinds, _arrow_safe_schema(in_schema, col_kinds),
-        pred_col, lo, hi,
-    )
-    out = decoded.filter(
-        (F.col(pred_col) >= lo) & (F.col(pred_col) <= hi)
-    )
-    return out.select(
-        *[
-            F.col(f.name).cast(_cast_target(f.dataType)).alias(f.name)
-            for f in in_schema.fields
-        ]
     )
 
 
@@ -1723,34 +1599,49 @@ def _pred_row_expr(preds: list[tuple], combine: str = "and"):
     return e
 
 
-def roundtrip_filtered_multi(
+def roundtrip_filtered(
     df: DataFrame,
     key_col: str,
     col_kinds: dict[str, str],
     preds: list[tuple],
+    combine: str = "and",
     n_parts: int | None = None,
 ) -> DataFrame:
-    """encode -> blocks -> conjunction-pruned decode -> exact predicate
-    re-apply (the multi-predicate sibling of roundtrip_filtered; see
-    decode_df_pruned_multi for the pred grammar)."""
-    return _roundtrip_preds(
-        df, key_col, col_kinds, preds, n_parts,
-        decode_df_pruned_multi, "and",
+    """encode -> blocks -> pruned decode -> exact predicate re-apply.
+
+    ``preds`` and ``combine`` follow decode_df_pruned_multi (AND or OR of
+    range / eq / in / isnull / notnull atoms).  Row-level result is exact
+    (the prune is a superset; the final filter re-applies the predicate);
+    the prune is the perf win.  The input is range-partitioned on
+    ``key_col`` so the block stats are selective.
+
+    The blocks DataFrame is persisted across its two consumers (the stats
+    scan and the pruned decode) — without it the whole Arrow encode stage
+    would execute twice.  The cache is released as newer calls come in
+    (module-level bounded registry — see _retain_filtered_blocks),
+    holding the last _FILTERED_BLOCKS_KEEP encodes instead of one per
+    call.  In a persistent deployment the blocks live in a parquet/
+    Iceberg table instead and the stats filter prunes at the scan."""
+    from pyspark import StorageLevel
+
+    # normalize BEFORE the double read (prune + row filter): a one-shot
+    # IN iterable consumed by the prune would leave the row filter empty
+    preds = _normalize_preds(preds)
+    in_schema = df.select(*list(col_kinds)).schema
+    blocks = encode_df(
+        df, key_col, col_kinds, n_parts, partitioning="range"
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    _retain_filtered_blocks(blocks)
+    decoded = decode_df_pruned_multi(
+        blocks, key_col, col_kinds, _arrow_safe_schema(in_schema, col_kinds),
+        preds, combine,
     )
-
-
-def roundtrip_filtered_any(
-    df: DataFrame,
-    key_col: str,
-    col_kinds: dict[str, str],
-    preds: list[tuple],
-    n_parts: int | None = None,
-) -> DataFrame:
-    """encode -> blocks -> disjunction-pruned decode -> exact OR-of-preds
-    re-apply (the OR sibling of roundtrip_filtered_multi)."""
-    return _roundtrip_preds(
-        df, key_col, col_kinds, preds, n_parts,
-        decode_df_pruned_any, "or",
+    out = decoded.filter(_pred_row_expr(preds, combine))
+    return out.select(
+        *[
+            F.col(f.name).cast(_cast_target(f.dataType)).alias(f.name)
+            for f in in_schema.fields
+        ]
     )
 
 
@@ -1960,95 +1851,6 @@ def count_null_meta(
     return _literal_row(blocks, cnt=nulls if want_null else rows - nulls)
 
 
-def _encode_persisted(df, key_col, col_kinds, n_parts):
-    """encode -> MEMORY_AND_DISK persist -> cache registration (the shared
-    head of every filtered round-trip) -> (blocks, input schema)."""
-    from pyspark import StorageLevel
-
-    in_schema = df.select(*list(col_kinds)).schema
-    blocks = encode_df(
-        df, key_col, col_kinds, n_parts, partitioning="range"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _retain_filtered_blocks(blocks)
-    return blocks, in_schema
-
-
-def _finish_decoded(decoded, in_schema, preds, combine):
-    """exact predicate re-apply + output cast (the shared tail of every
-    filtered round-trip)."""
-    out = decoded.filter(_pred_row_expr(preds, combine=combine))
-    return out.select(
-        *[
-            F.col(f.name).cast(_cast_target(f.dataType)).alias(f.name)
-            for f in in_schema.fields
-        ]
-    )
-
-
-def _roundtrip_preds(
-    df: DataFrame,
-    key_col: str,
-    col_kinds: dict[str, str],
-    preds: list[tuple],
-    n_parts: int | None,
-    decode_fn,
-    combine: str,
-) -> DataFrame:
-    """Shared encode -> persist -> pruned decode -> exact re-apply body
-    for the AND/OR wrappers (one place for the persist policy, the blocks
-    cache registration and the output cast)."""
-    # normalize BEFORE the double read (prune + row filter): a one-shot
-    # IN iterable consumed by the prune would leave the row filter empty
-    preds = _normalize_preds(preds)
-    blocks, in_schema = _encode_persisted(df, key_col, col_kinds, n_parts)
-    decoded = decode_fn(
-        blocks, key_col, col_kinds, _arrow_safe_schema(in_schema, col_kinds),
-        preds,
-    )
-    return _finish_decoded(decoded, in_schema, preds, combine)
-
-
-def roundtrip_filtered_null(
-    df: DataFrame,
-    key_col: str,
-    col_kinds: dict[str, str],
-    pred_col: str,
-    want_null: bool,
-    n_parts: int | None = None,
-) -> DataFrame:
-    """encode -> blocks -> null-count-pruned decode -> exact IS [NOT] NULL
-    filter (the null-predicate twin of roundtrip_filtered)."""
-    return roundtrip_filtered_multi(
-        df, key_col, col_kinds,
-        [("isnull" if want_null else "notnull", pred_col)], n_parts,
-    )
-
-
-def roundtrip_filtered_null_modes(
-    df: DataFrame,
-    key_col: str,
-    col_kinds: dict[str, str],
-    pred_col: str,
-    n_parts: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """(IS NULL round-trip, IS NOT NULL round-trip) over ONE shared
-    encode — the blocks are built and persisted once, then pruned twice
-    with opposite null predicates (the pair a query like
-    rt_documents_nulls consumes; two separate roundtrip_filtered_null
-    calls would encode the input twice)."""
-    blocks, in_schema = _encode_persisted(df, key_col, col_kinds, n_parts)
-    out_schema = _arrow_safe_schema(in_schema, col_kinds)
-
-    def one(want_null: bool) -> DataFrame:
-        decoded = decode_df_pruned_null(
-            blocks, key_col, col_kinds, out_schema, pred_col, want_null
-        )
-        preds = [("isnull" if want_null else "notnull", pred_col)]
-        return _finish_decoded(decoded, in_schema, preds, "and")
-
-    return one(True), one(False)
-
-
 # file-direct fast-path bounds: footers are read on the driver (one open per
 # file), so cap the file count at a size where that stays metadata-cheap;
 # row groups are only ever split into TARGET-sized pieces (each piece
@@ -2181,7 +1983,7 @@ def roundtrip(
     rows are identical; pruning artifacts (stats/blooms/page maps) are
     skipped because the in-worker blocks are discarded immediately —
     nothing could ever read them (the persisted-blocks paths, encode_df
-    proper and every roundtrip_filtered* wrapper, still build them all).
+    proper and roundtrip_filtered, still build them all).
 
     ZERO-shuffle execution (round 6, default): chunk assignment is
     unobservable in a round-trip's output, so co-locating rows by

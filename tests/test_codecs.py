@@ -190,6 +190,25 @@ def test_fsst_roundtrip_property(xs):
     np.testing.assert_array_equal(decode_fsst(payload, len(vals), params), vals)
 
 
+def test_fsst_without_symbols_is_stored_as_bitpack():
+    """Uniform 1..50 values (lineitem l_quantity's decimal image): the
+    selector picks fsst, training finds no symbol, and the chunk is
+    stored as bitpack instead; a forced fsst stays fsst."""
+    vals = np.random.default_rng(7).integers(1, 51, 75_000).astype(np.float64)
+    ints = vals.astype(np.int64)
+    assert select_codec(chunk_stats(ints)) == "fsst"
+    codec, params, payload, _ = encode_column(vals, "float64")
+    assert codec == "int_f64" and params["int_codec"] == "bitpack"
+    got = decode_column(codec, payload, len(vals), params, "float64")
+    assert np.array_equal(got.view(np.int64), vals.view(np.int64))
+    assert encode_column(ints, "int")[0] == "bitpack"
+    codec, params, payload, _ = encode_column(ints, "int", "fsst")
+    assert codec == "fsst" and params["n_sym"] == 0
+    np.testing.assert_array_equal(
+        decode_column(codec, payload, len(ints), params, "int"), ints
+    )
+
+
 # --------------------------------------------------------------- selector
 
 def test_selector_picks_expected_codecs():

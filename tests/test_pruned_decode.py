@@ -90,7 +90,7 @@ def test_roundtrip_filtered_end_to_end(spark, keyed_df):
 
     out = roundtrip_filtered(
         keyed_df, "k", {"k": "int", "v": "int", "s": "str"},
-        "k", 100, 250, n_parts=16,
+        [("range", "k", 100, 250)], n_parts=16,
     )
     got = sorted((r["k"], r["v"], r["s"]) for r in out.collect())
     exp = sorted(
@@ -107,7 +107,8 @@ def test_pruned_decode_rejects_non_numeric_pred(spark, keyed_df):
 
     with pytest.raises(ValueError, match="str bounds"):
         roundtrip_filtered(
-            keyed_df, "k", {"k": "int", "s": "str"}, "s", 0, 10, n_parts=4
+            keyed_df, "k", {"k": "int", "s": "str"}, [("range", "s", 0, 10)],
+            n_parts=4,
         ).collect()
 
 
@@ -152,7 +153,7 @@ def test_bloom_pruned_equality_roundtrip(spark):
     from parquet_python_spark.operators.generic_codec import (
         bloom_might_contain,
         encode_df,
-        roundtrip_filtered_eq,
+        roundtrip_filtered,
     )
 
     li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
@@ -164,8 +165,9 @@ def test_bloom_pruned_equality_roundtrip(spark):
     # filter correctly admits all of them — nothing to prune.)
     value = int(li.select("l_orderkey").first()["l_orderkey"])
 
-    got = roundtrip_filtered_eq(li, "l_orderkey", kinds, "l_orderkey", value,
-                                n_parts=8)
+    got = roundtrip_filtered(
+        li, "l_orderkey", kinds, [("eq", "l_orderkey", value)], n_parts=8
+    )
     exp = li.select(*kinds).filter(F.col("l_orderkey") == value)
     a = sorted(tuple(r) for r in got.collect())
     b = sorted(tuple(r) for r in exp.collect())
@@ -231,22 +233,34 @@ def test_bloom_prune_is_executor_side(spark, monkeypatch):
 
 
 def test_bloom_build_flag_off_and_conservative_decode(spark):
-    """encode_df(build_blooms=False): no bitsets are built, and the eq
-    prune degrades conservatively (keeps partitions, exact rows)."""
+    """Chunks with more than BLOOM_MAX_CARD distinct values carry no
+    bitset, and the eq prune degrades conservatively over them (keeps
+    every stats-admitted partition, exact rows)."""
     from pyspark.sql import functions as F
 
     from parquet_python_spark.operators.generic_codec import (
+        BLOOM_MAX_CARD,
         _arrow_safe_schema,
+        _pred_keeps,
         decode_df_pruned_eq,
         encode_df,
     )
 
-    df = spark.range(10_000).select(
+    df = spark.range(3 * BLOOM_MAX_CARD).select(
         F.col("id").alias("k"), (F.col("id") * 3 % 500).alias("v")
     )
     kinds = {"k": "int", "v": "int"}
-    blocks = encode_df(df, "k", kinds, n_parts=4, build_blooms=False).cache()
-    assert blocks.filter(F.col("bloom").isNotNull()).count() == 0
+    blocks = encode_df(df, "k", kinds, n_parts=2).cache()
+    # hash layout: ~98k distinct keys per chunk, over the cap -> no bitset;
+    # the 500-value column still gets one
+    assert blocks.filter(
+        (F.col("column") == "k") & F.col("bloom").isNotNull()
+    ).count() == 0
+    assert blocks.filter(
+        (F.col("column") == "v") & F.col("bloom").isNotNull()
+    ).count() == 2
+    # both chunks span the key range, and no bitset can rule either out
+    assert _pred_keeps(blocks, kinds, [("eq", "k", 1234)])[0][0] == {0, 1}
     out_schema = _arrow_safe_schema(df.select(*kinds).schema, kinds)
     dec = decode_df_pruned_eq(blocks, "k", kinds, out_schema, "k", 1234)
     got = sorted(tuple(r) for r in dec.filter(F.col("k") == 1234).collect())
@@ -281,17 +295,18 @@ def test_filtered_blocks_cache_union_consumes_both(spark):
     evict the first's persisted blocks before the union is collected."""
     from pyspark.sql import functions as F
 
-    from parquet_python_spark.operators.generic_codec import (
-        roundtrip_filtered,
-        roundtrip_filtered_eq,
-    )
+    from parquet_python_spark.operators.generic_codec import roundtrip_filtered
 
     df = spark.range(20_000).select(
         F.col("id").alias("k"), (F.col("id") % 700).alias("v")
     )
     kinds = {"k": "int", "v": "int"}
-    rng_half = roundtrip_filtered(df, "k", kinds, "k", 100, 200, n_parts=8)
-    eq_half = roundtrip_filtered_eq(df, "k", kinds, "k", 15_000, n_parts=8)
+    rng_half = roundtrip_filtered(
+        df, "k", kinds, [("range", "k", 100, 200)], n_parts=8
+    )
+    eq_half = roundtrip_filtered(
+        df, "k", kinds, [("eq", "k", 15_000)], n_parts=8
+    )
     got = sorted(tuple(r) for r in rng_half.unionAll(eq_half).collect())
     exp = sorted(
         tuple(r)
@@ -300,6 +315,38 @@ def test_filtered_blocks_cache_union_consumes_both(spark):
         ).collect()
     )
     assert got == exp
+
+
+def test_filtered_blocks_registry_evicts_oldest(spark, monkeypatch):
+    """The persisted-blocks registry is bounded: after
+    _FILTERED_BLOCKS_KEEP + 2 round-trips the two oldest blocks are
+    unpersisted and at most _FILTERED_BLOCKS_KEEP stay persisted."""
+    from pyspark import StorageLevel
+
+    from parquet_python_spark.operators import generic_codec as gc
+
+    registered = []
+    retain = gc._retain_filtered_blocks
+
+    def spy(blocks):
+        registered.append(blocks)
+        retain(blocks)
+
+    monkeypatch.setattr(gc, "_retain_filtered_blocks", spy)
+    kinds = {"k": "int"}
+    for i in range(gc._FILTERED_BLOCKS_KEEP + 2):
+        # a distinct input per call: equal plans would share one cache entry
+        df = spark.range(1_000 + i).select(F.col("id").alias("k"))
+        out = gc.roundtrip_filtered(df, "k", kinds, [("eq", "k", i)], n_parts=2)
+        assert [r["k"] for r in out.collect()] == [i]
+    assert len(registered) == gc._FILTERED_BLOCKS_KEEP + 2
+    for evicted in registered[:2]:
+        assert evicted.storageLevel == StorageLevel.NONE
+    persisted = [
+        b for b in registered if b.storageLevel != StorageLevel.NONE
+    ]
+    assert len(persisted) <= gc._FILTERED_BLOCKS_KEEP
+    assert len(gc._filtered_blocks_cache) <= gc._FILTERED_BLOCKS_KEEP
 
 
 # -------------------------------------------- page-level (sub-chunk) zone maps
@@ -745,14 +792,16 @@ def test_string_bloom_pruned_equality_roundtrip(spark):
     from parquet_python_spark.operators.generic_codec import (
         bloom_might_contain,
         encode_df,
-        roundtrip_filtered_eq,
+        roundtrip_filtered,
     )
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     kinds = {"doc_id": "int", "text": "str", "lang": "str"}
     value = docs.select("text").first()["text"]
 
-    got = roundtrip_filtered_eq(docs, "doc_id", kinds, "text", value, n_parts=8)
+    got = roundtrip_filtered(
+        docs, "doc_id", kinds, [("eq", "text", value)], n_parts=8
+    )
     exp = docs.select(*kinds).filter(F.col("text") == value)
     a = sorted(tuple(r) for r in got.collect())
     b = sorted(tuple(r) for r in exp.collect())
@@ -801,14 +850,14 @@ def test_string_bloom_eq_rejects_non_str_value(spark):
 
 
 def test_null_count_stats_and_pruned_decode(spark):
-    """Chunks carry exact null counts, and decode_df_pruned_null skips
+    """Chunks carry exact null counts, and decode_df_pruned_multi skips
     whole chunks for IS NULL / IS NOT NULL predicates — the
     Statistics.null_count consumption the reference never does.  Nulls
     are concentrated in the low key range so range partitioning makes
     the skip observable."""
     from parquet_python_spark.operators.generic_codec import (
         _arrow_safe_schema,
-        decode_df_pruned_null,
+        decode_df_pruned_multi,
         encode_df,
     )
 
@@ -828,8 +877,8 @@ def test_null_count_stats_and_pruned_decode(spark):
 
     out_schema = _arrow_safe_schema(df.select(*kinds).schema, kinds)
     # IS NULL: only null-bearing chunks decode (nulls live in one part)
-    dec_null = decode_df_pruned_null(
-        blocks, "k", kinds, out_schema, "w", want_null=True
+    dec_null = decode_df_pruned_multi(
+        blocks, "k", kinds, out_schema, [("isnull", "w")]
     ).cache()
     assert dec_null.count() < 20_000  # skipped the null-free chunks
     got = sorted(
@@ -838,8 +887,8 @@ def test_null_count_stats_and_pruned_decode(spark):
     assert got == list(range(5_000))
     dec_null.unpersist()
     # IS NOT NULL: the all-null chunk is skipped
-    dec_nn = decode_df_pruned_null(
-        blocks, "k", kinds, out_schema, "w", want_null=False
+    dec_nn = decode_df_pruned_multi(
+        blocks, "k", kinds, out_schema, [("notnull", "w")]
     ).cache()
     assert dec_nn.count() < 20_000
     got_nn = sorted(
@@ -858,7 +907,7 @@ def test_null_count_stats_and_pruned_decode(spark):
 def test_null_pruning_rejects_list_kind(spark):
     from parquet_python_spark.operators.generic_codec import (
         _arrow_safe_schema,
-        decode_df_pruned_null,
+        decode_df_pruned_multi,
         encode_df,
     )
 
@@ -870,15 +919,15 @@ def test_null_pruning_rejects_list_kind(spark):
     blocks = encode_df(df, "k", kinds, n_parts=2)
     out_schema = _arrow_safe_schema(df.select(*kinds).schema, kinds)
     with pytest.raises(ValueError, match="scalar column"):
-        decode_df_pruned_null(blocks, "k", kinds, out_schema, "a", True)
+        decode_df_pruned_multi(blocks, "k", kinds, out_schema, [("isnull", "a")])
     with pytest.raises(ValueError, match="scalar column"):
-        decode_df_pruned_null(blocks, "k", kinds, out_schema, "zz", False)
+        decode_df_pruned_multi(
+            blocks, "k", kinds, out_schema, [("notnull", "zz")]
+        )
 
 
 def test_roundtrip_filtered_null_end_to_end(spark):
-    from parquet_python_spark.operators.generic_codec import (
-        roundtrip_filtered_null,
-    )
+    from parquet_python_spark.operators.generic_codec import roundtrip_filtered
 
     df = spark.range(8_000).select(
         F.col("id").alias("k"),
@@ -887,11 +936,11 @@ def test_roundtrip_filtered_null_end_to_end(spark):
         .alias("t"),
     )
     kinds = {"k": "int", "t": "str"}
-    out = roundtrip_filtered_null(df, "k", kinds, "t", want_null=True, n_parts=4)
+    out = roundtrip_filtered(df, "k", kinds, [("isnull", "t")], n_parts=4)
     got = sorted(r["k"] for r in out.collect())
     exp = sorted(r["k"] for r in df.filter(F.col("t").isNull()).collect())
     assert got == exp
-    out2 = roundtrip_filtered_null(df, "k", kinds, "t", want_null=False, n_parts=4)
+    out2 = roundtrip_filtered(df, "k", kinds, [("notnull", "t")], n_parts=4)
     got2 = sorted((r["k"], r["t"]) for r in out2.collect())
     exp2 = sorted(
         (r["k"], r["t"]) for r in df.filter(F.col("t").isNotNull()).collect()
@@ -1228,7 +1277,6 @@ def test_persisted_blocks_prune_pushes_to_scan(spark, tmp_path):
         _arrow_safe_schema,
         decode_df_pruned,
         decode_df_pruned_multi,
-        decode_df_pruned_null,
         encode_df,
     )
 
@@ -1259,7 +1307,9 @@ def test_persisted_blocks_prune_pushes_to_scan(spark, tmp_path):
     assert got == list(range(5_000, 6_001))
 
     # null prune: the null-count keep set pushes the same way
-    dec_n = decode_df_pruned_null(blocks, "k", kinds, out_schema, "w", True)
+    dec_n = decode_df_pruned_multi(
+        blocks, "k", kinds, out_schema, [("isnull", "w")]
+    )
     p_n = plan(dec_n)
     assert "Join" not in p_n
     assert re.search(r"PushedFilters: \[[^\]]*(EqualTo|In)\(part_id", p_n), p_n
@@ -1300,9 +1350,9 @@ def test_or_predicate_prune_union_and_exact(spark):
     from parquet_python_spark.operators.generic_codec import (
         PAGE_ROWS,
         _arrow_safe_schema,
-        decode_df_pruned_any,
+        decode_df_pruned_multi,
         encode_df,
-        roundtrip_filtered_any,
+        roundtrip_filtered,
     )
 
     n = 40_000
@@ -1316,7 +1366,9 @@ def test_or_predicate_prune_union_and_exact(spark):
 
     # OR of two distant narrow ranges on k: union of ~2 pages
     preds = [("range", "k", 100, 200), ("range", "k", 30_000, 30_100)]
-    dec = decode_df_pruned_any(blocks, "k", kinds, out_schema, preds).cache()
+    dec = decode_df_pruned_multi(
+        blocks, "k", kinds, out_schema, preds, combine="or"
+    ).cache()
     assert dec.count() <= 2 * PAGE_ROWS
     got = sorted(
         r["k"]
@@ -1331,7 +1383,9 @@ def test_or_predicate_prune_union_and_exact(spark):
     # OR with isnull: page pruning off (the null member has no page
     # bound), chunk union still prunes — nulls live in the first part only
     preds2 = [("isnull", "w"), ("range", "k", 30_000, 30_100)]
-    dec2 = decode_df_pruned_any(blocks, "k", kinds, out_schema, preds2).cache()
+    dec2 = decode_df_pruned_multi(
+        blocks, "k", kinds, out_schema, preds2, combine="or"
+    ).cache()
     pre2 = dec2.count()
     assert pre2 < n  # chunk-level union still skipped non-matching parts
     got2 = sorted(
@@ -1343,14 +1397,18 @@ def test_or_predicate_prune_union_and_exact(spark):
     )
     assert got2 == list(range(2_000)) + list(range(30_000, 30_101))
     dec2.unpersist()
+    with pytest.raises(ValueError, match="combine"):
+        decode_df_pruned_multi(
+            blocks, "k", kinds, out_schema, preds, combine="xor"
+        )
     blocks.unpersist()
 
     # end-to-end wrapper with a GENERATOR In member: normalize-first means
     # the prune and the exact row filter see the same values
-    out = roundtrip_filtered_any(
+    out = roundtrip_filtered(
         df, "k", kinds,
         [("in", "k", (v for v in [5, 30_050])), ("eq", "k", 7)],
-        n_parts=4,
+        combine="or", n_parts=4,
     )
     assert sorted(r["k"] for r in out.collect()) == [5, 7, 30_050]
 
@@ -1693,7 +1751,7 @@ def test_pruned_decode_rejects_unencoded_and_str_bounds_on_int(spark):
     from parquet_python_spark.operators.generic_codec import (
         _arrow_safe_schema,
         decode_df_pruned,
-        decode_df_pruned_any,
+        decode_df_pruned_multi,
         encode_df,
     )
 
@@ -1705,9 +1763,9 @@ def test_pruned_decode_rejects_unencoded_and_str_bounds_on_int(spark):
     with pytest.raises(ValueError, match="no chunks"):
         decode_df_pruned(blocks, "k", wide, out_schema, "zz", 0, 10)
     with pytest.raises(ValueError, match="no chunks"):
-        decode_df_pruned_any(
+        decode_df_pruned_multi(
             blocks, "k", wide, out_schema,
-            [("range", "zz", 0, 10), ("range", "k", 0, 10)],
+            [("range", "zz", 0, 10), ("range", "k", 0, 10)], combine="or",
         )
     with pytest.raises(ValueError, match="numeric bounds"):
         decode_df_pruned(blocks, "k", kinds, out_schema, "k", "a", "z")
@@ -1716,7 +1774,6 @@ def test_pruned_decode_rejects_unencoded_and_str_bounds_on_int(spark):
     from parquet_python_spark.operators.generic_codec import (
         count_filtered_meta,
         decode_df_pruned_eq,
-        decode_df_pruned_multi,
     )
 
     with pytest.raises(ValueError, match=str(2**63)):
@@ -1822,7 +1879,7 @@ def test_page_null_counts_prune_and_exact(spark):
         _arrow_safe_schema,
         _page_keep_ranges_nulls,
         _page_nulls_blob,
-        decode_df_pruned_null,
+        decode_df_pruned_multi,
         encode_df,
     )
 
@@ -1852,8 +1909,8 @@ def test_page_null_counts_prune_and_exact(spark):
     kinds = {"k": "int", "w": "int"}
     blocks = encode_df(df, "k", kinds, n_parts=1, partitioning="range").cache()
     out_schema = _arrow_safe_schema(df.select(*kinds).schema, kinds)
-    dec = decode_df_pruned_null(
-        blocks, "k", kinds, out_schema, "w", want_null=True
+    dec = decode_df_pruned_multi(
+        blocks, "k", kinds, out_schema, [("isnull", "w")]
     ).cache()
     # only the null-bearing page survives, not the whole 20k chunk
     assert dec.count() <= PAGE_ROWS
@@ -1861,8 +1918,8 @@ def test_page_null_counts_prune_and_exact(spark):
     assert got == list(range(PAGE_ROWS, PAGE_ROWS + 200))
     dec.unpersist()
     # IS NOT NULL on the same chunk keeps everything (no all-null page)
-    nn = decode_df_pruned_null(
-        blocks, "k", kinds, out_schema, "w", want_null=False
+    nn = decode_df_pruned_multi(
+        blocks, "k", kinds, out_schema, [("notnull", "w")]
     )
     assert nn.filter(F.col("w").isNotNull()).count() == n2 - 200
     blocks.unpersist()
