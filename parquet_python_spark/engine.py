@@ -311,59 +311,41 @@ def encode_table_files_native(
         if t[0] not in committed
         and not os.path.exists(os.path.join(blocks_dir, f"blk-{t[0]}.parquet"))
     ]
-    # JVM-native range dispatch, one partition per task; tasks resolve
-    # from the closure list (same rationale + sizing note as
-    # _decode_files_df: no exchange, no python-RDD hop)
-    tasks_local = list(tasks)
-    paths_df = spark.range(
-        len(tasks_local), numPartitions=max(len(tasks_local), 1)
-    )
-
-    def enc(batches):
+    def enc(task):
         import pyarrow as pa
         import pyarrow.parquet as pq
         from pyspark import TaskContext
 
-        for batch in batches:
-            for i in batch.column("id").to_pylist():
-                tkey, path, rg_start, rg_end = tasks_local[int(i)]
-                tbl = _read_task_table(path, rg_start, rg_end)
-                out_batches = list(
-                    _encode_split_by_source(
-                        tbl, tkey, snapshot_id, with_ref_baseline
-                    )
-                )
-                if not out_batches:
-                    continue
-                out = pa.Table.from_batches(out_batches, schema=_BLOCKS_ARROW_SCHEMA)
-                fname = os.path.join(blocks_dir, f"blk-{tkey}.parquet")
-                # attempt-unique temp name: concurrent attempts (speculation,
-                # zombie retries) must never interleave writes on one inode;
-                # dot prefix keeps Spark's file index and list_input_files
-                # from ever seeing an in-progress or abandoned temp.
-                ctx = TaskContext.get()
-                attempt = ctx.taskAttemptId() if ctx is not None else os.getpid()
-                tmp = os.path.join(
-                    blocks_dir, f".blk-{tkey}.parquet.inprogress-{attempt}"
-                )
-                # payload bytes are already entropy-coded by the column
-                # codecs — parquet-level snappy on top is pure CPU (guide
-                # §2.3: compressing high-entropy payloads), measured ~35%
-                # of this write+read path for a ~4% size increase.  Every
-                # OTHER column is listed explicitly with snappy: pyarrow
-                # treats columns absent from a compression dict as
-                # UNCOMPRESSED, not as the default codec.
-                pq.write_table(out, tmp, compression=_BLK_COMPRESSION)
-                os.rename(tmp, fname)
-                yield from out.drop_columns(["payload"]).to_batches()
+        tkey, path, rg_start, rg_end = task
+        tbl = _read_task_table(path, rg_start, rg_end)
+        out_batches = list(
+            _encode_split_by_source(tbl, tkey, snapshot_id, with_ref_baseline)
+        )
+        if not out_batches:
+            return
+        out = pa.Table.from_batches(out_batches, schema=_BLOCKS_ARROW_SCHEMA)
+        fname = os.path.join(blocks_dir, f"blk-{tkey}.parquet")
+        # attempt-unique temp name: concurrent attempts (speculation,
+        # zombie retries) must never interleave writes on one inode;
+        # dot prefix keeps Spark's file index and list_input_files
+        # from ever seeing an in-progress or abandoned temp.
+        ctx = TaskContext.get()
+        attempt = ctx.taskAttemptId() if ctx is not None else os.getpid()
+        tmp = os.path.join(blocks_dir, f".blk-{tkey}.parquet.inprogress-{attempt}")
+        # payload bytes are already entropy-coded by the column codecs —
+        # parquet-level snappy on top is pure CPU (guide §2.3: compressing
+        # high-entropy payloads), measured ~35% of this write+read path
+        # for a ~4% size increase.  Every OTHER column is listed
+        # explicitly with snappy: pyarrow treats columns absent from a
+        # compression dict as UNCOMPRESSED, not as the default codec.
+        pq.write_table(out, tmp, compression=_BLK_COMPRESSION)
+        os.rename(tmp, fname)
+        yield from out.drop_columns(["payload"]).to_batches()
 
     meta_schema = T.StructType(
         [f for f in BLOCKS_SCHEMA.fields if f.name != "payload"]
     )
-    meta = paths_df.mapInArrow(enc, schema=meta_schema)
-    # nothing left to encode (a no-op resume): limit(0) plans as an empty
-    # local relation, so collecting it starts no Spark job or Python task
-    return meta if tasks_local else meta.limit(0)
+    return map_tasks(spark, tasks, enc, meta_schema)
 
 
 def _remove_stale_generations(blocks_dir: str, tasks: list[tuple]) -> set[str]:
@@ -600,6 +582,49 @@ def local_parquet_scan_files(df: DataFrame) -> list[str] | None:
         return None  # non-local filesystem: keep the generic path
 
 
+def map_tasks(spark: SparkSession, tasks: list, run_task, schema) -> DataFrame:
+    """One Spark task per entry of ``tasks``: ``run_task(task)`` yields
+    that task's Arrow record batches.  The one dispatch of every
+    file-direct reader and writer (the tokens encode, decode and
+    compaction here, generic_codec's round-trip and pruned decodes).
+
+    Dispatch is a JVM-native spark.range with one partition per task;
+    each task resolves its entry from the list shipped in the function
+    closure.  Versus createDataFrame(+repartition) this removes both an
+    exchange/stage and a pickled-python-RDD deserialization hop per task
+    (measured ~0.3s of fixed overhead at the bench scale).  The closure
+    grows with the task count (~100 B/file) — metadata-sized up to ~1e6
+    files, the same regime every other driver-side file plan here
+    assumes.  With no task the plan is limit(0), which Spark plans as an
+    empty local relation: collecting it starts no job or Python task."""
+    tasks = list(tasks)
+
+    def run(batches):
+        for batch in batches:
+            for i in batch.column("id").to_pylist():
+                yield from run_task(tasks[int(i)])
+
+    out = spark.range(len(tasks), numPartitions=max(len(tasks), 1)).mapInArrow(
+        run, schema=schema
+    )
+    return out if tasks else out.limit(0)
+
+
+def part_runs(tbl):
+    """(part_id, rows) per part of one block file's rows, in file order.
+    Writers keep a part's rows contiguous; a file that interleaves parts
+    is stably sorted by part_id first, so each part still decodes whole."""
+    pids = tbl.column("part_id").to_pylist()
+    bounds = [0] + [j for j in range(1, len(pids)) if pids[j] != pids[j - 1]]
+    if len(bounds) > len(set(pids)):
+        tbl = tbl.sort_by("part_id")
+        pids = tbl.column("part_id").to_pylist()
+        bounds = [0] + [j for j in range(1, len(pids)) if pids[j] != pids[j - 1]]
+    for s, e in zip(bounds, bounds[1:] + [len(pids)]):
+        if s < e:
+            yield pids[s], tbl.slice(s, e - s)
+
+
 def _engine_block_files_of_scan(blocks: DataFrame) -> list[str] | None:
     """Local file list when ``blocks`` is a bare, unfiltered scan of
     engine-written block files — else None.
@@ -671,48 +696,26 @@ def _decode_files_df(
     prune: tuple[str, int, int] | None = None,
 ) -> DataFrame:
     """mapInArrow decode over an explicit block-file list (one task per
-    file; a part never spans files) — the shared body of
-    decode_blocks_files, decode_blocks' fast path and
+    file through map_tasks; a part never spans files) — the shared body
+    of decode_blocks_files, decode_blocks' fast path and
     decode_blocks_files_pruned.  With ``prune=(column, lo, hi)`` each task
-    decodes only the parts _zone_map_keep keeps.
+    decodes only the parts _zone_map_keep keeps."""
 
-    Task dispatch is a JVM-native spark.range with one partition per file;
-    each task resolves its file from the list shipped in the function
-    closure.  Versus createDataFrame(+repartition) this removes both an
-    exchange/stage and a pickled-python-RDD deserialization hop per task
-    (measured ~0.3s of fixed overhead at the bench scale).  The closure
-    grows with the file count (~100 B/file) — metadata-sized up to ~1e6
-    files, the same regime every other driver-side file plan here assumes."""
-    files_local = list(files)
-    idx_df = spark.range(
-        len(files_local), numPartitions=max(len(files_local), 1)
-    )
-
-    def dec(batches):
+    def dec(path):
         import pyarrow.parquet as pq
 
-        for batch in batches:
-            for i in batch.column("id").to_pylist():
-                path = files_local[int(i)]
-                # the stats columns alone: the payload bytes stay unread
-                keep = None if prune is None else _zone_map_keep(
-                    pq.read_table(path, columns=_ZONE_MAP_COLS, use_threads=False),
-                    *prune,
-                )
-                if keep is not None and not keep:
-                    continue  # payload never read
-                tbl = pq.read_table(path, use_threads=False)
-                pids = tbl.column("part_id").to_pylist()
-                start = 0
-                for j in range(1, len(pids) + 1):
-                    if j == len(pids) or pids[j] != pids[start]:
-                        if keep is None or pids[start] in keep:
-                            yield from _decode_part_table(
-                                tbl.slice(start, j - start)
-                            ).to_batches()
-                        start = j
+        # the stats columns alone: the payload bytes stay unread
+        keep = None if prune is None else _zone_map_keep(
+            pq.read_table(path, columns=_ZONE_MAP_COLS, use_threads=False),
+            *prune,
+        )
+        if keep is not None and not keep:
+            return  # payload never read
+        for pid, rows in part_runs(pq.read_table(path, use_threads=False)):
+            if keep is None or pid in keep:
+                yield from _decode_part_table(rows).to_batches()
 
-    return idx_df.mapInArrow(dec, schema=DECODED_SCHEMA)
+    return map_tasks(spark, files, dec, DECODED_SCHEMA)
 
 
 def decode_blocks(blocks: DataFrame) -> DataFrame:
@@ -862,42 +865,31 @@ def compact_blocks(
     if not bins:
         return {"bins": 0, "files_removed": 0}
 
-    bins_local = [json.dumps(b) for b in bins]
-    bins_df = spark.range(len(bins_local), numPartitions=len(bins_local))
-
-    def run(batches):
+    def run(srcs):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        for batch in batches:
-            for srcs_json in (
-                bins_local[int(i)] for i in batch.column("id").to_pylist()
-            ):
-                srcs = json.loads(srcs_json)
-                tables = [pq.read_table(p, use_threads=False) for p in srcs]
-                out = pa.concat_tables(tables, promote_options="permissive")
-                cid = hashlib.sha1(
-                    "".join(
-                        f"{os.path.basename(p)}:{os.path.getsize(p)}"
-                        for p in srcs
-                    ).encode()
-                ).hexdigest()[:16]
-                final = os.path.join(blocks_path, f"cmp-{cid}.parquet")
-                sidecar = os.path.join(blocks_path, f".cmp-{cid}.parquet.srcs.json")
-                tmp = os.path.join(blocks_path, f".cmp-{cid}.parquet.inprogress")
-                # same payload-uncompressed policy as the blk writer
-                pq.write_table(out, tmp, compression=_BLK_COMPRESSION)
-                with open(sidecar, "w") as f:
-                    json.dump([os.path.basename(p) for p in srcs], f)
-                os.rename(tmp, final)
-                for p in srcs:
-                    os.remove(p)
-                os.remove(sidecar)
-                yield pa.record_batch(
-                    {"n_files": pa.array([len(srcs)], type=pa.int64())}
-                )
+        tables = [pq.read_table(p, use_threads=False) for p in srcs]
+        out = pa.concat_tables(tables, promote_options="permissive")
+        cid = hashlib.sha1(
+            "".join(
+                f"{os.path.basename(p)}:{os.path.getsize(p)}" for p in srcs
+            ).encode()
+        ).hexdigest()[:16]
+        final = os.path.join(blocks_path, f"cmp-{cid}.parquet")
+        sidecar = os.path.join(blocks_path, f".cmp-{cid}.parquet.srcs.json")
+        tmp = os.path.join(blocks_path, f".cmp-{cid}.parquet.inprogress")
+        # same payload-uncompressed policy as the blk writer
+        pq.write_table(out, tmp, compression=_BLK_COMPRESSION)
+        with open(sidecar, "w") as f:
+            json.dump([os.path.basename(p) for p in srcs], f)
+        os.rename(tmp, final)
+        for p in srcs:
+            os.remove(p)
+        os.remove(sidecar)
+        yield pa.record_batch({"n_files": pa.array([len(srcs)], type=pa.int64())})
 
-    rows = bins_df.mapInArrow(run, schema="n_files long").collect()
+    rows = map_tasks(spark, bins, run, "n_files long").collect()
     return {
         "bins": len(rows),
         "files_removed": int(sum(r["n_files"] for r in rows)),

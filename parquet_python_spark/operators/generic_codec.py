@@ -49,7 +49,7 @@ from ..codecs.arrow_io import (
     list_column_flat,
     string_array_from_lens_blob,
 )
-from ..engine import local_parquet_scan_files
+from ..engine import local_parquet_scan_files, map_tasks, part_runs
 
 BLOCKS_SCHEMA = T.StructType(
     [
@@ -260,13 +260,20 @@ def _page_keep_ranges_nulls(
     keep = counts > 0 if want_null else counts < sizes
     if keep.all():
         return None
+    return _pages_to_ranges(np.flatnonzero(keep), page_rows, n_rows)
+
+
+def _pages_to_ranges(
+    pages, page_rows: int, n_rows: int
+) -> list[tuple[int, int]]:
+    """Merged row ranges covering the ascending page indices ``pages``."""
     ranges: list[tuple[int, int]] = []
-    for p in np.flatnonzero(keep):
-        st, e = int(p) * page_rows, min(n_rows, (int(p) + 1) * page_rows)
-        if ranges and ranges[-1][1] == st:
+    for p in pages:
+        s, e = int(p) * page_rows, min(n_rows, (int(p) + 1) * page_rows)
+        if ranges and ranges[-1][1] == s:
             ranges[-1] = (ranges[-1][0], e)
         else:
-            ranges.append((st, e))
+            ranges.append((s, e))
     return ranges
 
 
@@ -336,16 +343,7 @@ def _page_keep_ranges_str(
         raise ValueError("str page-stats blob page count mismatch")
     if all(keep_pages):
         return None
-    ranges: list[tuple[int, int]] = []
-    for p, k in enumerate(keep_pages):
-        if not k:
-            continue
-        s, e = p * page_rows, min(n_rows, (p + 1) * page_rows)
-        if ranges and ranges[-1][1] == s:
-            ranges[-1] = (ranges[-1][0], e)
-        else:
-            ranges.append((s, e))
-    return ranges
+    return _pages_to_ranges(np.flatnonzero(keep_pages), page_rows, n_rows)
 
 
 def _union_ranges(
@@ -401,14 +399,7 @@ def _page_keep_ranges(
     keep = (stats[:, 1] >= lo) & (stats[:, 0] <= hi)
     if keep.all():
         return None
-    ranges: list[tuple[int, int]] = []
-    for p in np.flatnonzero(keep):
-        s, e = int(p) * page_rows, min(n_rows, (int(p) + 1) * page_rows)
-        if ranges and ranges[-1][1] == s:
-            ranges[-1] = (ranges[-1][0], e)
-        else:
-            ranges.append((s, e))
-    return ranges
+    return _pages_to_ranges(np.flatnonzero(keep), page_rows, n_rows)
 
 # ------------------------------------------------------- bloom filters
 # Double-hashing Bloom filter over a chunk's DISTINCT int values: h_i =
@@ -1042,9 +1033,13 @@ def decode_df(
     (page_stats) and decodes only the row sub-ranges whose pages may
     intersect every [lo, hi] (range intersection across predicates) —
     the intra-chunk skip that keeps pruning selective as chunks grow
-    with scale.  Output is a SUPERSET of the matching rows (callers
+    with scale.  Inside the surviving pages the predicates are then
+    evaluated row by row where that equals Spark's filter (int/str
+    bounds, null tests; see _decode_fn), and only the matching rows
+    materialize.  Output is a SUPERSET of the matching rows — exact for
+    int/str/null predicates, page-granular for float ones (callers
     re-apply the exact predicate); columns stay row-aligned because
-    every column slices to the same ranges."""
+    every column slices to the same ranges and takes the same rows."""
     dec = _decode_fn(col_kinds, out_schema, prune)
     return blocks.groupBy("part_id").applyInArrow(dec, schema=out_schema)
 
@@ -1054,9 +1049,17 @@ def _decode_fn(
     out_schema: T.StructType,
     prune: tuple | list[tuple] | None = None,
 ):
-    """Per-group block-rows -> decoded-rows function (the body of
-    decode_df, exposed so the fused round-trip can chain it directly onto
-    the encode function inside one applyInArrow pass)."""
+    """Per-part block-rows -> decoded-rows function (the body of
+    decode_df and of the file-direct pruned decode, exposed so the fused
+    round-trip can chain it directly onto the encode function inside one
+    Python task).
+
+    With ``prune``: page ranges first, from the page zone maps and null
+    counts; then late materialization — each prune tuple whose row test
+    equals Spark's filter (_row_exact) is evaluated on its column decoded
+    over those pages, and only the pages holding a selected row decode
+    for the other columns, which then take the selected rows.  Float
+    predicates and union groups with such a member stay page-granular."""
 
     # arrow image of the output schema, for the all-pages-pruned early exit
     # (a zero-row table without touching any payload)
@@ -1116,17 +1119,17 @@ def _decode_fn(
             # (bounds straddle a gap between pages): nothing to decode —
             # skipping the whole part here is where page stats win most
             return empty_out
-        out_arrays, names = [], []
 
-        def chunk_arr(column, kind, slice_rows=True) -> pa.Array:
+        def chunk_arr(column, kind, rr) -> pa.Array:
+            """``column`` decoded over the row ranges ``rr`` (None = all)."""
             row = by_col[column]
             payload = bytes(row["payload"])
             if zlib.crc32(payload) != int(row["checksum"]):
                 raise ValueError(f"checksum mismatch in {column}")
-            if slice_rows and ranges is not None:
+            if rr is not None:
                 fast = _decode_values_ranges(
                     payload, n_rows, int(row["n_values"]), row["codec"],
-                    row["params"], kind, ranges,
+                    row["params"], kind, rr,
                 )
                 if fast is not None:
                     return fast
@@ -1134,17 +1137,54 @@ def _decode_fn(
                 payload, n_rows, int(row["n_values"]), row["codec"],
                 row["params"], kind,
             )
-            return _slice_ranges(arr, ranges) if slice_rows else arr
+            return _slice_ranges(arr, rr)
 
+        # late materialization: decode the predicate columns over the
+        # surviving pages and evaluate each prune tuple row by row (AND
+        # across entries, OR inside a union group) wherever that equals
+        # Spark's filter; the other columns then decode only the pages
+        # holding a selected row, and every column takes just those rows
+        pred_arrs: dict[str, pa.Array] = {}
+        mask = None
+        for entry in prunes:
+            group = entry if isinstance(entry, list) else [entry]
+            if not group or not all(
+                t[0] in by_col and _row_exact(col_kinds.get(t[0]), t[1], t[2])
+                for t in group
+            ):
+                continue  # this entry keeps page granularity
+            m = None
+            for pcol, lo, hi in group:
+                if pcol not in pred_arrs:
+                    pred_arrs[pcol] = chunk_arr(pcol, col_kinds[pcol], ranges)
+                mm = _row_mask(pred_arrs[pcol], lo, hi)
+                m = mm if m is None else m | mm
+            mask = m if mask is None else mask & m
+        out_ranges = ranges
+        if mask is not None:
+            base = ranges if ranges is not None else [(0, n_rows)]
+            rows = np.concatenate([np.arange(s, e) for s, e in base])[mask]
+            if not len(rows):
+                return empty_out
+            out_ranges = _pages_to_ranges(
+                np.unique(rows // PAGE_ROWS), PAGE_ROWS, n_rows
+            )
+            take_pred = pa.array(np.flatnonzero(mask))
+            take_out = pa.array(_range_positions(out_ranges, rows))
+
+        out_arrays = []
         for col, kind in col_kinds.items():
+            if col in pred_arrs:  # decoded over `ranges`; mask is set
+                out_arrays.append(pred_arrs[col].take(take_pred))
+                continue
             if kind in _LIST_KINDS:
                 elem_kind = _LIST_KINDS[kind]
                 # lists: lens and flat values must stay consistent, so the
                 # page slice applies to the ASSEMBLED list array (zero-copy
                 # offset views), not to the two chunks independently
-                lens = chunk_arr(col + ".lens", "int", slice_rows=False)
+                lens = chunk_arr(col + ".lens", "int", None)
                 lens = lens.to_numpy(zero_copy_only=False)
-                flat = chunk_arr(col + ".vals", elem_kind, slice_rows=False)
+                flat = chunk_arr(col + ".vals", elem_kind, None)
                 offsets = np.zeros(n_rows + 1, dtype=np.int64)
                 np.cumsum(lens, out=offsets[1:])
                 if offsets[-1] >= 2**31:
@@ -1155,13 +1195,52 @@ def _decode_fn(
                 arr = pa.ListArray.from_arrays(
                     pa.array(offsets.astype(np.int32), type=pa.int32()), flat
                 )
-                out_arrays.append(_slice_ranges(arr, ranges))
+                arr = _slice_ranges(arr, out_ranges)
             else:
-                out_arrays.append(chunk_arr(col, kind))
-            names.append(col)
-        return pa.Table.from_arrays(out_arrays, names=names)
+                arr = chunk_arr(col, kind, out_ranges)
+            out_arrays.append(arr if mask is None else arr.take(take_out))
+        return pa.Table.from_arrays(out_arrays, names=list(col_kinds))
 
     return dec
+
+
+def _row_exact(kind: str | None, lo, hi) -> bool:
+    """True when one prune tuple's row-level test (_row_mask) keeps exactly
+    the rows a Spark filter of the same predicate keeps: IS [NOT] NULL on
+    any scalar column, int bounds on an int/int96_ts column (int64 order)
+    and str bounds on a str column (UTF-8 byte order, which is Spark's
+    binary string order).  Float bounds arrive as ordered bits, whose
+    order differs from Spark's for NaN payloads, and an int column probed
+    with a float bound compares in double — both keep page granularity,
+    and the caller's re-filter decides."""
+    if lo is None:
+        return kind is not None and kind not in _LIST_KINDS
+    if kind == "str":
+        return isinstance(lo, str) and isinstance(hi, str)
+    return kind in ("int", "int96_ts") and all(
+        isinstance(b, int) and not isinstance(b, bool) for b in (lo, hi)
+    )
+
+
+def _row_mask(arr: pa.Array, lo, hi) -> np.ndarray:
+    """Rows of ``arr`` that satisfy one prune tuple: ``(col, None,
+    want_null)`` is IS NULL / IS NOT NULL, anything else lo <= v <= hi
+    (a null value never satisfies a bound)."""
+    if lo is None:
+        m = arr.is_null() if hi else arr.is_valid()
+    else:
+        m = pc.and_kleene(pc.greater_equal(arr, lo), pc.less_equal(arr, hi))
+    return pc.fill_null(m, False).to_numpy(zero_copy_only=False)
+
+
+def _range_positions(ranges: list[tuple[int, int]], rows: np.ndarray) -> np.ndarray:
+    """Positions of the absolute ``rows`` (each inside one of the sorted,
+    disjoint ``ranges``) in the concatenation of those ranges."""
+    starts = np.array([s for s, _ in ranges], dtype=np.int64)
+    lens = np.array([e - s for s, e in ranges], dtype=np.int64)
+    offs = np.cumsum(lens) - lens
+    k = np.searchsorted(starts, rows, side="right") - 1
+    return offs[k] + rows - starts[k]
 
 
 def decode_df_pruned(
@@ -1177,11 +1256,11 @@ def decode_df_pruned(
     ``pred_col`` intersects [lo, hi] — min/max block skipping, the thing
     the reference parses from parquet Statistics but never does
     (parquet.thrift:198-206).  The driver plans the keep set from one
-    read of the chunk statistics, and the surviving part_ids reach the
-    blocks scan as a plain ``part_id IN (...)`` filter, so
-    non-qualifying payloads are never shuffled or decoded.  Callers
-    re-apply the exact row predicate after decode (block stats are a
-    superset filter).
+    read of the chunk statistics, and only the surviving parts are read
+    and decoded (_decode_parts: file-direct on a bare blocks scan, else a
+    pushed ``part_id IN (...)`` filter), so non-qualifying payloads are
+    never shuffled or decoded.  Callers re-apply the exact row predicate
+    after decode (block stats are a superset filter).
 
     ``pred_col`` may be an int/int96_ts column (exact chunk bounds + the
     intra-chunk page skip), a float column with numeric bounds (exact
@@ -1248,12 +1327,6 @@ def _all(*masks):
 def _parts(meta: pa.Table, mask) -> set[int]:
     """part_ids of the metadata rows whose mask is true (NULL drops)."""
     return set(pc.filter(meta.column("part_id"), mask).to_pylist())
-
-
-def _keep_parts(blocks: DataFrame, keep: set[int]) -> DataFrame:
-    """The block rows of the kept parts: a literal IN-list that pushes to
-    the blocks scan (no join, nothing to broadcast)."""
-    return blocks.filter(F.col("part_id").isin(sorted(keep)))
 
 
 def _check_int64(values) -> None:
@@ -1503,13 +1576,16 @@ def decode_df_pruned_multi(
     ``("in", col, [v1, ...])``, ``("isnull", col)``, ``("notnull", col)``.
     Chunk level: one metadata read (plus the executor-side Bloom test
     for eq/in) gives each predicate's keep set on the driver; the sets
-    combine there and reach the decode as a pushed part_id filter.
+    combine there and only the kept parts decode (_decode_parts).
     Page level: int/str equality rides the zone maps as the degenerate
     range [v, v], IN-lists as the UNION of their values' ranges, and
     null predicates skip pages through the per-page null counts
     (null-free pages for IS NULL, all-null pages for IS NOT NULL).
-    Output is a SUPERSET of matching rows — callers re-apply the exact
-    row predicate, same contract as every other pruned decode."""
+    Row level: inside surviving pages the same atoms are evaluated row by
+    row (late materialization, see _decode_fn).  Output is a SUPERSET of
+    matching rows — exact unless a float predicate is involved; callers
+    re-apply the exact row predicate, same contract as every other pruned
+    decode."""
     if combine not in ("and", "or"):
         raise ValueError(f"combine must be 'and' or 'or', got {combine!r}")
     planned = _pred_keeps(blocks, col_kinds, _normalize_preds(preds))
@@ -1523,9 +1599,8 @@ def decode_df_pruned_multi(
         keep = set().union(*(k for k, _ in planned))
         union_tuples = [t for _, pages in planned for t in pages]
         page_prunes = [union_tuples] if union_tuples else []
-    return decode_df(
-        _keep_parts(blocks, keep), key_col, col_kinds, out_schema,
-        prune=page_prunes or None,
+    return _decode_parts(
+        blocks, keep, col_kinds, out_schema, page_prunes or None
     )
 
 
@@ -1546,10 +1621,9 @@ def decode_df_pruned_eq(
     vectorized pandas UDF column of the one metadata read) so bitsets —
     up to ~80 KB/chunk — never move to the driver at any chunk count;
     the driver sees one boolean per chunk, ANDs it with the stats test
-    and hands the surviving part_ids to the decode as a pushed filter,
-    exactly like the stats path.  Callers re-apply the exact predicate
-    after decode (Bloom filters admit false positives, never false
-    negatives).
+    and decodes only the surviving parts, exactly like the stats path.
+    Callers re-apply the exact predicate after decode (Bloom filters
+    admit false positives, never false negatives).
 
     ``pred_col`` may be int/int96_ts (bloom over the values) or str
     (bloom over JVM-side xxhash64 of the values — the query literal is
@@ -1669,9 +1743,10 @@ def count_filtered_meta(
     of the min (stat_min_str >= lo proves min >= lo) and every value
     sorts <= stat_max_str (truncated-successor), so stat_max_str <= hi
     proves containment; a NULL (unbounded) truncated upper bound never
-    claims containment.  Returns a 1-row DataFrame (``cnt`` long): the
-    driver sums the contained chunks, and with no boundary chunk the
-    answer is a literal row."""
+    claims containment.  Returns a 1-row DataFrame (``cnt`` long) holding
+    the answer as a literal row: the driver sums the contained chunks,
+    and the boundary decode's count comes back from one exchange-free
+    Spark job inside the call (_aggregate)."""
     kind = col_kinds.get(pred_col)
     meta = _chunk_meta(blocks, col_kinds, [pred_col])
     # ONE source of truth for the bound normalization (±0 widening,
@@ -1681,13 +1756,13 @@ def count_filtered_meta(
     contained = pc.and_kleene(contained, pc.equal(meta.column("n_nulls"), 0))
     cnt = pc.sum(pc.filter(meta.column("n_rows"), contained)).as_py() or 0
     boundary = _parts(meta, pc.and_kleene(overlap, pc.invert(contained)))
-    if not boundary:
-        return _literal_row(blocks, cnt=cnt)
-    return (
-        _decode_col(blocks, pred_col, kind, boundary, page_prune)
-        .filter((F.col(pred_col) >= lo) & (F.col(pred_col) <= hi))
-        .agg((F.count("*") + F.lit(cnt)).cast("long").alias("cnt"))
-    )
+    if boundary:
+        cnt += _aggregate(
+            _decode_col(blocks, pred_col, kind, boundary, page_prune)
+            .filter((F.col(pred_col) >= lo) & (F.col(pred_col) <= hi)),
+            F.count(F.lit(1)).alias("n"),
+        )["n"]
+    return _literal_row(blocks, cnt=cnt)
 
 
 def _literal_row(blocks: DataFrame, **values: int | None) -> DataFrame:
@@ -1714,11 +1789,108 @@ def _decode_col(
     blocks: DataFrame, col: str, kind: str, parts: set[int], prune
 ) -> DataFrame:
     """Decode only ``col``'s chunk rows of ``parts`` (page-pruned by
-    ``prune``): the metadata aggregates need nothing else, and the full
-    blocks rows would ship every column's payload through the shuffle."""
-    rows = _keep_parts(blocks, parts).filter(F.col("column") == col)
+    ``prune``): the metadata aggregates need nothing else, and the other
+    columns' payloads would only be read to be dropped."""
     out_schema = T.StructType([T.StructField(col, _SCALAR_TYPES[kind], True)])
-    return decode_df(rows, col, {col: kind}, out_schema, prune=prune)
+    return _decode_parts(blocks, parts, {col: kind}, out_schema, prune, col)
+
+
+def _aggregate(decoded: DataFrame, *aggs) -> dict:
+    """Driver-side values of the aggregate columns ``aggs`` over
+    ``decoded``, in one Spark job with no exchange: the per-task partial
+    aggregates merge through an Observation's accumulators, where a
+    DataFrame ``agg`` would shuffle them to one partition (one more job
+    under adaptive execution)."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    decoded.observe(obs, *aggs).write.format("noop").mode("overwrite").save()
+    return obs.get
+
+
+# the blocks columns _decode_fn reads: a file-direct task reads no other
+_DECODE_COLS = [
+    "part_id", "column", "codec", "params", "payload", "n_values", "n_rows",
+    "checksum", "page_stats", "page_nulls",
+]
+
+
+def _part_files(blocks: DataFrame, parts: set[int]) -> dict[str, list[int]] | None:
+    """{file: its kept part_ids} for the files holding a part of
+    ``parts``, when ``blocks`` is a bare scan of at most
+    _FAST_SCAN_MAX_FILES local parquet files
+    (engine.local_parquet_scan_files) that carry every _DECODE_COLS column
+    and in which every part's rows lie in exactly one file — proved here
+    on the driver from the files' part_id columns.  Else None: filtered,
+    joined or persisted blocks, and parts that span files (blocks written
+    after a repartition), take the groupBy path."""
+    import pyarrow.parquet as pq
+
+    files = local_parquet_scan_files(blocks)
+    if files is None or len(files) > _FAST_SCAN_MAX_FILES:
+        return None
+    owner: dict[int, str] = {}
+    try:
+        for path in files:
+            with pq.ParquetFile(path) as pf:
+                if not set(_DECODE_COLS) <= set(pf.schema_arrow.names):
+                    return None
+                pids = pf.read(columns=["part_id"], use_threads=False)
+            for pid in pc.unique(pids.column("part_id")).to_pylist():
+                if owner.setdefault(pid, path) != path:
+                    return None  # this part spans files
+    except (OSError, pa.ArrowException):
+        return None  # unreadable or non-parquet file: the generic path
+    by_file: dict[str, list[int]] = {}
+    for pid in sorted(parts):
+        if pid in owner:
+            by_file.setdefault(owner[pid], []).append(pid)
+    return by_file
+
+
+def _decode_parts(
+    blocks: DataFrame,
+    parts: set[int],
+    col_kinds: dict[str, str],
+    out_schema: T.StructType,
+    prune,
+    column: str | None = None,
+) -> DataFrame:
+    """Decode the chunk rows of ``parts`` (only ``column``'s when given),
+    page-pruned and late-materialized by ``prune`` (see _decode_fn).
+
+    File-direct when _part_files proves the layout: one task per file
+    holding a kept part (engine.map_tasks), each reading with pyarrow only
+    its kept parts' rows and only the columns _decode_fn reads — no
+    Spark scan and no exchange.  Any other blocks DataFrame reaches the
+    decode through a pushed ``part_id IN (...)`` filter and the groupBy
+    shuffle, the one path that runs on DataFrame-held blocks."""
+    by_file = _part_files(blocks, parts)
+    if by_file is None:
+        # a literal IN-list that pushes to the blocks scan (no join)
+        rows = blocks.filter(F.col("part_id").isin(sorted(parts)))
+        if column is not None:
+            rows = rows.filter(F.col("column") == column)
+        return decode_df(rows, None, col_kinds, out_schema, prune=prune)
+    dec = _decode_fn(col_kinds, out_schema, prune)
+    names = out_schema.fieldNames()
+
+    def run_file(task):
+        import pyarrow.parquet as pq
+
+        path, pids = task
+        filters = [("part_id", "in", pids)]
+        if column is not None:
+            filters.append(("column", "=", column))
+        tbl = pq.read_table(
+            path, columns=_DECODE_COLS, filters=filters, use_threads=False
+        )
+        for _, rows in part_runs(tbl):
+            yield from dec(rows).select(names).to_batches()
+
+    return map_tasks(
+        blocks.sparkSession, sorted(by_file.items()), run_file, out_schema
+    )
 
 
 def minmax_filtered_meta(
@@ -1734,8 +1906,10 @@ def minmax_filtered_meta(
     value present in the chunk and already inside the bounds (the
     symmetric argument gives stat_max as a max candidate when
     ``stat_max <= hi``).  Only chunks straddling a bound (some values
-    below lo or above hi) decode, page-pruned.  Returns a 1-row DataFrame
-    ``(mn, mx)`` — SQL semantics: NULL when nothing matches.
+    below lo or above hi) decode, page-pruned, in one exchange-free Spark
+    job inside the call (_aggregate).  Returns a 1-row DataFrame ``(mn,
+    mx)`` holding the answer as a literal row — SQL semantics: NULL when
+    nothing matches.
 
     Int kinds only, loudly: float stats live in the order-preserving
     bits space and Spark has no longBitsToDouble to map a metadata
@@ -1758,17 +1932,17 @@ def minmax_filtered_meta(
     # classifier count_filtered_meta uses) decode page-pruned for the
     # exact extremes of their in-range values
     straddle = _parts(meta, pc.and_kleene(overlap, pc.invert(contained)))
-    if not straddle:
-        return _literal_row(blocks, mn=mn, mx=mx)
-    # least/greatest skip NULLs, so an empty side never masks the other
-    return (
-        _decode_col(blocks, pred_col, kind, straddle, page_prune)
-        .filter((F.col(pred_col) >= lo) & (F.col(pred_col) <= hi))
-        .agg(
-            F.least(F.min(pred_col), F.lit(mn).cast("long")).alias("mn"),
-            F.greatest(F.max(pred_col), F.lit(mx).cast("long")).alias("mx"),
+    if straddle:
+        got = _aggregate(
+            _decode_col(blocks, pred_col, kind, straddle, page_prune)
+            .filter((F.col(pred_col) >= lo) & (F.col(pred_col) <= hi)),
+            F.min(pred_col).alias("mn"),
+            F.max(pred_col).alias("mx"),
         )
-    )
+        # an empty side (None) never masks the other
+        mn = min((v for v in (mn, got["mn"]) if v is not None), default=None)
+        mx = max((v for v in (mx, got["mx"]) if v is not None), default=None)
+    return _literal_row(blocks, mn=mn, mx=mx)
 
 
 def topk_filtered_meta(
@@ -1999,9 +2173,9 @@ def roundtrip(
     pyarrow instead of receiving rows through Spark's scan -> Arrow IPC
     conversion — measured, that conversion (an identity mapInArrow over
     the 10x lineitem scan) costs ~12x the scan itself and dominated the
-    fused round-trip.  Task dispatch is one task per row group (the same
-    range+closure shape as the engine's decode fast path); in the
-    few-row-group regime the groups are split into ~TARGET-sized pieces
+    fused round-trip.  Task dispatch is one task per row group
+    (engine.map_tasks, the dispatch every file-direct reader shares); in
+    the few-row-group regime the groups are split into ~TARGET-sized pieces
     for parallelism (each piece re-reads its row group — bounded by
     _FAST_SCAN_SPLIT_BYTES_CAP, and only when row groups < cores, where
     the re-read is small by construction).  Any other input — filtered,
@@ -2027,30 +2201,23 @@ def roundtrip(
                 units, df.sparkSession.sparkContext.defaultParallelism
             )
 
-            def rt_files(batches):
+            def rt_files(task):
                 import pyarrow.parquet as pq
 
-                for b in batches:
-                    for i in b.column("id").to_pylist():
-                        fi, rg, s, ln = tasks[int(i)]
-                        tbl = (
-                            pq.ParquetFile(paths[fi])
-                            .read_row_group(rg, columns=sel, use_threads=False)
-                            .select(sel)
-                            .slice(s, ln)
-                        )
-                        off = 0
-                        while off < tbl.num_rows:
-                            chunk = tbl.slice(
-                                off, TARGET_ROWS_PER_PART
-                            ).combine_chunks()
-                            off += chunk.num_rows
-                            yield from dec(enc(chunk, part_id=0)).to_batches()
+                fi, rg, s, ln = task
+                tbl = (
+                    pq.ParquetFile(paths[fi])
+                    .read_row_group(rg, columns=sel, use_threads=False)
+                    .select(sel)
+                    .slice(s, ln)
+                )
+                off = 0
+                while off < tbl.num_rows:
+                    chunk = tbl.slice(off, TARGET_ROWS_PER_PART).combine_chunks()
+                    off += chunk.num_rows
+                    yield from dec(enc(chunk, part_id=0)).to_batches()
 
-            idx = df.sparkSession.range(
-                len(tasks), numPartitions=max(len(tasks), 1)
-            )
-            decoded = idx.mapInArrow(rt_files, schema=out_schema)
+            decoded = map_tasks(df.sparkSession, tasks, rt_files, out_schema)
         else:
             # few-split scans would serialize the whole encode on a handful
             # of tasks; the shared conditional bump (pipeline_ops)

@@ -1269,12 +1269,19 @@ def test_union_ranges_kernel():
 
 def test_persisted_blocks_prune_pushes_to_scan(spark, tmp_path):
     """The deployment shape: blocks persisted as a parquet table, pruned
-    decodes reading it back.  The driver-planned keep set must reach the
-    blocks scan as a pushed part_id filter, with no join in the decode
-    plan, and results stay exact through the parquet round-trip
-    (n_nulls/page_stats/str bounds survive)."""
+    decodes reading it back.  On the bare scan the decode is file-direct:
+    no exchange, no join, one task per file holding a kept part.  On a
+    persisted (DataFrame-held) copy the driver-planned keep set reaches
+    the cached scan as a pushed part_id filter, with no join.  Results
+    stay exact through the parquet round-trip (n_nulls/page_stats/str
+    bounds survive) on both."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
     from parquet_python_spark.operators.generic_codec import (
         _arrow_safe_schema,
+        _decode_col,
+        count_filtered_meta,
         decode_df_pruned,
         decode_df_pruned_multi,
         encode_df,
@@ -1287,59 +1294,89 @@ def test_persisted_blocks_prune_pushes_to_scan(spark, tmp_path):
     kinds = {"k": "int", "w": "int"}
     path = str(tmp_path / "blocks_table")
     encode_df(df, "k", kinds, n_parts=4, partitioning="range").write.parquet(path)
-    blocks = spark.read.parquet(path)
     out_schema = _arrow_safe_schema(df.select(*kinds).schema, kinds)
+    files = pq.ParquetDataset(path).files
+
+    def files_holding(parts):
+        return sum(
+            bool(set(pq.read_table(f, columns=["part_id"]).column(0).to_pylist()) & parts)
+            for f in files
+        )
+
+    def kept_parts(lo, hi):
+        meta = pq.read_table(path, columns=["part_id", "column", "stat_min", "stat_max"])
+        meta = meta.filter(pc.equal(meta.column("column"), "k")).to_pylist()
+        return {r["part_id"] for r in meta if r["stat_max"] >= lo and r["stat_min"] <= hi}
 
     def plan(d):
         return d._sc._jvm.PythonSQLUtils.explainString(
             d._jdf.queryExecution(), "formatted"
         )
 
-    # range prune: the driver-planned keep set reaches the blocks scan as
-    # a pushed part_id filter; no join applies it
-    dec = decode_df_pruned(blocks, "k", kinds, out_schema, "k", 5_000, 6_000)
-    p = plan(dec)
-    assert "Join" not in p
-    assert re.search(r"PushedFilters: \[[^\]]*(EqualTo|In)\(part_id", p), p
-    got = sorted(
-        r["k"] for r in dec.filter((F.col("k") >= 5_000) & (F.col("k") <= 6_000)).collect()
-    )
-    assert got == list(range(5_000, 6_001))
+    def pushed(p):
+        return re.search(
+            r"InMemoryTableScan\nOutput[^\n]*\n"
+            r"Arguments: [^\n]*\], \[[^\n]*part_id#\d+ (=|IN|INSET) ",
+            p,
+        )
 
-    # null prune: the null-count keep set pushes the same way
-    dec_n = decode_df_pruned_multi(
-        blocks, "k", kinds, out_schema, [("isnull", "w")]
-    )
-    p_n = plan(dec_n)
-    assert "Join" not in p_n
-    assert re.search(r"PushedFilters: \[[^\]]*(EqualTo|In)\(part_id", p_n), p_n
-    got_n = sorted(r["k"] for r in dec_n.filter(F.col("w").isNull()).collect())
-    assert got_n == list(range(4_000))
+    # file-direct first: once persisted, Spark's cache serves every scan of
+    # the path, the bare one included
+    for file_direct in (True, False):
+        blocks = spark.read.parquet(path)
+        if not file_direct:
+            blocks = blocks.persist()
+        # range prune
+        dec = decode_df_pruned(blocks, "k", kinds, out_schema, "k", 5_000, 6_000)
+        p = plan(dec)
+        assert "Join" not in p
+        if file_direct:
+            assert "Exchange" not in p and "FlatMapGroupsInArrow" not in p, p
+            for lo, hi in ((5_000, 6_000), (0, 19_999)):
+                n_tasks = decode_df_pruned(
+                    blocks, "k", kinds, out_schema, "k", lo, hi
+                ).rdd.getNumPartitions()
+                assert n_tasks == files_holding(kept_parts(lo, hi)) >= 1
+        else:
+            assert pushed(p), p
+        got = sorted(
+            r["k"] for r in dec.filter((F.col("k") >= 5_000) & (F.col("k") <= 6_000)).collect()
+        )
+        assert got == list(range(5_000, 6_001))
 
-    # conjunction over the persisted table stays exact
-    dec_m = decode_df_pruned_multi(
-        blocks, "k", kinds, out_schema,
-        [("range", "k", 5_000, 6_000), ("notnull", "w")],
-    )
-    got_m = sorted(
-        tuple(r)
-        for r in dec_m.filter(
-            (F.col("k") >= 5_000) & (F.col("k") <= 6_000) & F.col("w").isNotNull()
-        ).collect()
-    )
-    assert got_m == [(i, i) for i in range(5_000, 6_001)]
+        # null prune: the null-count keep set takes the same path
+        dec_n = decode_df_pruned_multi(
+            blocks, "k", kinds, out_schema, [("isnull", "w")]
+        )
+        p_n = plan(dec_n)
+        assert "Join" not in p_n
+        assert ("Exchange" not in p_n) if file_direct else pushed(p_n), p_n
+        got_n = sorted(r["k"] for r in dec_n.filter(F.col("w").isNull()).collect())
+        assert got_n == list(range(4_000))
 
-    # metadata-first COUNT over the persisted table: exact, and the
-    # boundary decode reads only the predicate column's kept chunks
-    from parquet_python_spark.operators.generic_codec import (
-        count_filtered_meta,
-    )
+        # conjunction over the persisted table stays exact
+        dec_m = decode_df_pruned_multi(
+            blocks, "k", kinds, out_schema,
+            [("range", "k", 5_000, 6_000), ("notnull", "w")],
+        )
+        got_m = sorted(
+            tuple(r)
+            for r in dec_m.filter(
+                (F.col("k") >= 5_000) & (F.col("k") <= 6_000) & F.col("w").isNotNull()
+            ).collect()
+        )
+        assert got_m == [(i, i) for i in range(5_000, 6_001)]
 
-    cnt_df = count_filtered_meta(blocks, kinds, "k", 2_500, 17_499)
-    p_c = plan(cnt_df)
-    assert "Join" not in p_c
-    assert "EqualTo(column,k)" in p_c and "In(part_id, [0,3])" in p_c, p_c
-    assert cnt_df.first()["cnt"] == 15_000
+        # metadata-first COUNT: exact, and the boundary decode reads only
+        # the predicate column's kept chunks
+        assert count_filtered_meta(blocks, kinds, "k", 2_500, 17_499).first()["cnt"] == 15_000
+        p_c = plan(_decode_col(blocks, "k", "int", {0, 3}, ("k", 2_500, 17_499)))
+        assert "Join" not in p_c
+        if file_direct:
+            assert "Exchange" not in p_c, p_c
+        else:
+            assert pushed(p_c) and re.search(r"\(column#\d+ = k\)", p_c), p_c
+    blocks.unpersist()
 
 
 def test_or_predicate_prune_union_and_exact(spark):
@@ -1790,8 +1827,8 @@ def test_pruned_decode_rejects_unencoded_and_str_bounds_on_int(spark):
 
 def test_pruned_calls_spark_job_counts(spark, tmp_path):
     """Each pruned call plans on the driver from one metadata read: a row
-    lookup or top-k is the metadata job plus the decode, a count with
-    boundary chunks adds the boundary decode, and a count answered from
+    lookup, a top-k or a count with boundary chunks is the metadata job
+    plus one exchange-free decode job, and a count answered from
     metadata alone runs only the metadata job."""
     import time
 
@@ -1842,21 +1879,21 @@ def test_pruned_calls_spark_job_counts(spark, tmp_path):
     n, rows = jobs_of("range", lambda: decode_df_pruned(
         blocks, "k", kinds, out_schema, "k", 5_000, 6_000
     ).filter(F.col("k").between(5_000, 6_000)).collect())
-    assert len(rows) == 1_001 and n <= 3, n
+    assert len(rows) == 1_001 and n <= 2, n
     n, rows = jobs_of("eq", lambda: decode_df_pruned_eq(
         blocks, "k", kinds, out_schema, "v", 7
     ).filter(F.col("v") == 7).collect())
-    assert len(rows) == 20 and n <= 3, n
+    assert len(rows) == 20 and n <= 2, n
     n, rows = jobs_of("topk", lambda: topk_filtered_meta(
         blocks, kinds, "k", 5, ascending=False
     ).collect())
     assert [r["k"] for r in rows] == [19_999, 19_998, 19_997, 19_996, 19_995]
-    assert n <= 3, n
+    assert n <= 2, n
     # [2_500, 17_499] contains the two middle parts and cuts the outer two
     n, cnt = jobs_of("count", lambda: count_filtered_meta(
         blocks, kinds, "k", 2_500, 17_499
     ).first()["cnt"])
-    assert cnt == 15_000 and n <= 4, n
+    assert cnt == 15_000 and n <= 2, n
     # [0, 19_999] contains every part: no boundary chunk decodes
     n, cnt = jobs_of("count-meta", lambda: count_filtered_meta(
         blocks, kinds, "k", 0, 19_999
@@ -1923,3 +1960,197 @@ def test_page_null_counts_prune_and_exact(spark):
     )
     assert nn.filter(F.col("w").isNotNull()).count() == n2 - 200
     blocks.unpersist()
+
+
+_LM_KINDS = {"k": "int", "i": "int", "s": "str", "w": "int", "f": "float64"}
+
+
+@pytest.fixture(scope="module")
+def lm_blocks(spark, tmp_path_factory):
+    """Four-part range-clustered blocks over unclustered int/str columns,
+    a null-bearing int column and a float column holding NaN payloads of
+    both signs, ±0.0 and ±inf; (raw DataFrame, blocks path, the same
+    blocks written with .repartition(3) so every part spans files, and
+    written as one file whose rows interleave the parts)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parquet_python_spark.operators.generic_codec import encode_df
+
+    n = 24_000
+    k = np.arange(n, dtype=np.int64)
+    f = k * 0.5 - 3_000.0
+    specials = {
+        97: np.uint64(0x7FF8_0000_0000_0001).view(np.float64),
+        89: np.uint64(0xFFF8_0000_0000_0002).view(np.float64),
+        83: -0.0,
+        79: 0.0,
+        73: np.inf,
+        71: -np.inf,
+    }
+    for m, v in specials.items():
+        f[k % m == 0] = v
+    w = pa.array(k, mask=(k % 5 == 0))
+    s = pa.array([f"s{(x * 31) % 500:03d}" for x in k.tolist()])
+    base = tmp_path_factory.mktemp("late_mat")
+    pq.write_table(
+        pa.table({"k": k, "i": (k * 7919) % 1_000, "s": s, "w": w, "f": f}),
+        str(base / "raw.parquet"),
+    )
+    raw = spark.read.parquet(str(base / "raw.parquet"))
+    blocks = encode_df(raw, "k", _LM_KINDS, n_parts=4, partitioning="range")
+    blocks.write.parquet(str(base / "blocks"))
+    blocks.repartition(3).write.parquet(str(base / "spread"))
+    blocks.coalesce(1).sortWithinPartitions("column").write.parquet(
+        str(base / "mixed")
+    )
+    return raw, str(base / "blocks"), str(base / "spread"), str(base / "mixed")
+
+
+@pytest.mark.parametrize("path", ["file_direct", "shuffle"])
+@pytest.mark.parametrize(
+    "preds,combine,exact",
+    [
+        ([("range", "i", 100, 180)], "and", True),
+        ([("eq", "i", 77)], "and", True),
+        ([("in", "i", [3, 500, 999])], "and", True),
+        ([("eq", "s", "s123")], "and", True),
+        ([("in", "s", ["s007", "s300"])], "and", True),
+        ([("range", "s", "s100", "s149")], "and", True),
+        ([("isnull", "w")], "and", True),
+        ([("notnull", "w")], "and", True),
+        (
+            [("range", "k", 1_000, 1_100), ("eq", "i", 5), ("isnull", "w")],
+            "or",
+            True,
+        ),
+        ([("range", "f", -0.0, float("inf"))], "and", False),
+    ],
+    ids=[
+        "int_range", "int_eq", "int_in", "str_eq", "str_in", "str_range",
+        "isnull", "notnull", "or", "float_range",
+    ],
+)
+def test_late_materialized_rows(spark, lm_blocks, preds, combine, exact, path):
+    """The pruned decode's output BEFORE the caller's re-filter is a
+    superset of a plain Spark filter, and for int/str/null predicates it
+    equals that filter row for row: the predicates ran at row level inside
+    the surviving pages.  Float predicates stay page-granular.  Both the
+    file-direct decode of a bare blocks scan and the groupBy decode of a
+    persisted blocks DataFrame."""
+    from parquet_python_spark.operators.generic_codec import (
+        _arrow_safe_schema,
+        _pred_row_expr,
+        decode_df_pruned_multi,
+    )
+
+    raw, blocks_path = lm_blocks[:2]
+    blocks = spark.read.parquet(blocks_path)
+    if path == "shuffle":
+        blocks = blocks.persist()
+    out_schema = _arrow_safe_schema(raw.select(*_LM_KINDS).schema, _LM_KINDS)
+    try:
+        dec = decode_df_pruned_multi(
+            blocks, "k", _LM_KINDS, out_schema, preds, combine
+        )
+        p = dec._sc._jvm.PythonSQLUtils.explainString(
+            dec._jdf.queryExecution(), "formatted"
+        )
+        got = sorted(repr(r) for r in dec.collect())
+    finally:
+        blocks.unpersist()
+    assert ("FlatMapGroupsInArrow" in p) == (path == "shuffle"), p
+    want = sorted(repr(r) for r in raw.filter(_pred_row_expr(preds, combine)).collect())
+    assert want and set(want) <= set(got)
+    if exact:
+        assert got == want
+    else:
+        assert len(got) > len(want)  # NaN rows ride along page-granular
+
+
+def test_file_direct_gate_falls_back_when_parts_span_files(spark, lm_blocks):
+    """Blocks whose parts span files (written after .repartition(3)) fail
+    the driver's one-file proof and take the groupBy decode; the rows
+    equal the file-direct decode of the same blocks, as do those of a
+    file-direct decode of one file whose rows interleave the parts."""
+    from parquet_python_spark.operators.generic_codec import (
+        _arrow_safe_schema,
+        _part_files,
+        decode_df_pruned_multi,
+    )
+
+    raw, blocks_path, spread_path, mixed_path = lm_blocks
+    clustered = spark.read.parquet(blocks_path)
+    spread = spark.read.parquet(spread_path)
+    mixed = spark.read.parquet(mixed_path)
+    assert _part_files(clustered, {0, 1, 2, 3}) is not None
+    assert _part_files(mixed, {0, 1, 2, 3}) is not None
+    assert _part_files(spread, {0, 1, 2, 3}) is None
+    out_schema = _arrow_safe_schema(raw.select(*_LM_KINDS).schema, _LM_KINDS)
+    preds = [("range", "k", 4_000, 14_000), ("in", "i", [7, 70])]
+
+    def rows(blocks):
+        dec = decode_df_pruned_multi(blocks, "k", _LM_KINDS, out_schema, preds)
+        p = dec._sc._jvm.PythonSQLUtils.explainString(
+            dec._jdf.queryExecution(), "formatted"
+        )
+        return "FlatMapGroupsInArrow" in p, sorted(repr(r) for r in dec.collect())
+
+    (grouped_c, got_c), (grouped_s, got_s) = rows(clustered), rows(spread)
+    grouped_m, got_m = rows(mixed)
+    assert not grouped_c and grouped_s and not grouped_m
+    assert got_c and got_s == got_c and got_m == got_c
+
+
+def test_pruned_decode_detects_corrupt_payload(spark, lm_blocks, tmp_path):
+    """One flipped payload byte in a block file makes a pruned decode of
+    that chunk fail its crc32 check, on the file-direct and the groupBy
+    path alike."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from parquet_python_spark.operators.generic_codec import (
+        _arrow_safe_schema,
+        decode_df_pruned_multi,
+    )
+
+    raw, blocks_path = lm_blocks[:2]
+    bad = str(tmp_path / "bad")
+    # without the .crc sidecars: Hadoop would reject the rewritten file first
+    shutil.copytree(blocks_path, bad, ignore=shutil.ignore_patterns("*.crc"))
+    victim = next(p for p in pq.ParquetDataset(bad).files if pq.read_metadata(p).num_rows)
+    tbl = pq.read_table(victim)
+    row = pc.index(tbl.column("column"), "i").as_py()
+    pid = tbl.column("part_id")[row].as_py()
+    payloads = tbl.column("payload").to_pylist()
+    buf = bytearray(payloads[row])
+    buf[len(buf) // 2] ^= 0xFF
+    payloads[row] = bytes(buf)
+    tbl = tbl.set_column(
+        tbl.schema.get_field_index("payload"), "payload",
+        pa.array(payloads, type=tbl.schema.field("payload").type),
+    )
+    pq.write_table(tbl, victim)
+    k_lo = pid * 6_000  # range partitioning: part p holds keys [6000p, 6000p + 6000)
+    out_schema = _arrow_safe_schema(raw.select(*_LM_KINDS).schema, _LM_KINDS)
+    for file_direct in (True, False):
+        blocks = spark.read.parquet(bad)
+        if not file_direct:
+            blocks = blocks.persist()
+        dec = decode_df_pruned_multi(
+            blocks, "k", _LM_KINDS, out_schema,
+            [("range", "k", k_lo + 10, k_lo + 20)],
+        )
+        p = dec._sc._jvm.PythonSQLUtils.explainString(
+            dec._jdf.queryExecution(), "formatted"
+        )
+        assert ("FlatMapGroupsInArrow" in p) != file_direct, p
+        try:
+            with pytest.raises(Exception, match="checksum mismatch in i"):
+                dec.collect()
+        finally:
+            blocks.unpersist()
