@@ -1267,7 +1267,7 @@ def test_union_ranges_kernel():
     assert _intersect_ranges([(0, 2)], [(5, 6)]) == []
 
 
-def test_persisted_blocks_prune_pushes_to_scan(spark, tmp_path):
+def test_persisted_blocks_prune_pushes_to_scan(spark, tmp_path, monkeypatch):
     """The deployment shape: blocks persisted as a parquet table, pruned
     decodes reading it back.  On the bare scan the decode is file-direct:
     no exchange, no join, one task per file holding a kept part.  On a
@@ -1278,15 +1278,16 @@ def test_persisted_blocks_prune_pushes_to_scan(spark, tmp_path):
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
+    import parquet_python_spark.operators.generic_codec as gc
     from parquet_python_spark.operators.generic_codec import (
         _arrow_safe_schema,
-        _decode_col,
         count_filtered_meta,
         decode_df_pruned,
         decode_df_pruned_multi,
         encode_df,
     )
 
+    real_decode_col = gc._decode_col
     df = spark.range(20_000).select(
         F.col("id").alias("k"),
         F.when(F.col("id") < 4_000, None).otherwise(F.col("id")).alias("w"),
@@ -1367,14 +1368,26 @@ def test_persisted_blocks_prune_pushes_to_scan(spark, tmp_path):
         )
         assert got_m == [(i, i) for i in range(5_000, 6_001)]
 
-        # metadata-first COUNT: exact, and the boundary decode reads only
-        # the predicate column's kept chunks
+        # metadata-first COUNT: exact; only the two boundary parts decode
+        # (the two contained ones are answered from the metadata), and
+        # that decode reads only the predicate column's kept chunks
+        calls = []
+
+        def recording_decode_col(*args):
+            calls.append((args[3], real_decode_col(*args)))
+            return calls[-1][1]
+
+        monkeypatch.setattr(gc, "_decode_col", recording_decode_col)
         assert count_filtered_meta(blocks, kinds, "k", 2_500, 17_499).first()["cnt"] == 15_000
-        p_c = plan(_decode_col(blocks, "k", "int", {0, 3}, ("k", 2_500, 17_499)))
+        monkeypatch.setattr(gc, "_decode_col", real_decode_col)
+        assert [parts for parts, _ in calls] == [{0, 3}]
+        p_c = plan(calls[0][1])
         assert "Join" not in p_c
         if file_direct:
             assert "Exchange" not in p_c, p_c
+            assert calls[0][1].rdd.getNumPartitions() == files_holding({0, 3})
         else:
+            assert re.search(r"part_id#\d+ IN \(0,3\)", p_c), p_c
             assert pushed(p_c) and re.search(r"\(column#\d+ = k\)", p_c), p_c
     blocks.unpersist()
 
@@ -2069,11 +2082,21 @@ def test_late_materialized_rows(spark, lm_blocks, preds, combine, exact, path):
         assert len(got) > len(want)  # NaN rows ride along page-granular
 
 
-def test_file_direct_gate_falls_back_when_parts_span_files(spark, lm_blocks):
+def test_file_direct_gate_falls_back_when_parts_span_files(
+    spark, lm_blocks, tmp_path, monkeypatch
+):
     """Blocks whose parts span files (written after .repartition(3)) fail
     the driver's one-file proof and take the groupBy decode; the rows
     equal the file-direct decode of the same blocks, as do those of a
-    file-direct decode of one file whose rows interleave the parts."""
+    file-direct decode of one file whose rows interleave the parts and
+    of two files holding parts {0, 2} and {1, 3}.  Each file's part_ids
+    are read once per file version: a repeated proof reads no file, a
+    file rewritten in place is read again.  Bundled file tasks return
+    the same rows."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
     from parquet_python_spark.operators.generic_codec import (
         _arrow_safe_schema,
         _part_files,
@@ -2081,12 +2104,40 @@ def test_file_direct_gate_falls_back_when_parts_span_files(spark, lm_blocks):
     )
 
     raw, blocks_path, spread_path, mixed_path = lm_blocks
+    tbl = pq.read_table(blocks_path)
+    pid_type = tbl.schema.field("part_id").type
+    two = tmp_path / "two_files"
+    two.mkdir()
+
+    def write_two(a_pids, b_pids):
+        for name, pids in (("a", a_pids), ("b", b_pids)):
+            keep = pc.is_in(tbl.column("part_id"), pa.array(pids, pid_type))
+            pq.write_table(tbl.filter(keep), str(two / f"{name}.parquet"))
+        by_file = _part_files(spark.read.parquet(str(two)), {0, 1, 2, 3})
+        if by_file is not None:
+            return {p.rsplit("/", 1)[-1]: ps for p, ps in by_file.items()}
+
     clustered = spark.read.parquet(blocks_path)
     spread = spark.read.parquet(spread_path)
     mixed = spark.read.parquet(mixed_path)
     assert _part_files(clustered, {0, 1, 2, 3}) is not None
     assert _part_files(mixed, {0, 1, 2, 3}) is not None
     assert _part_files(spread, {0, 1, 2, 3}) is None
+    reads = []
+    real_read = pq.ParquetFile.read
+
+    def counting_read(self, *args, **kwargs):
+        reads.append(args)
+        return real_read(self, *args, **kwargs)
+
+    monkeypatch.setattr(pq.ParquetFile, "read", counting_read)
+    assert _part_files(clustered, {0, 1, 2, 3}) is not None
+    assert not reads  # cached per file version
+    assert write_two([0, 1], [2, 3]) == {"a.parquet": [0, 1], "b.parquet": [2, 3]}
+    # rewritten in place: the cached part_ids of the old files go stale
+    assert write_two([0, 2], [1, 3]) == {"a.parquet": [0, 2], "b.parquet": [1, 3]}
+    monkeypatch.undo()
+    odd_even = spark.read.parquet(str(two))
     out_schema = _arrow_safe_schema(raw.select(*_LM_KINDS).schema, _LM_KINDS)
     preds = [("range", "k", 4_000, 14_000), ("in", "i", [7, 70])]
 
@@ -2098,9 +2149,20 @@ def test_file_direct_gate_falls_back_when_parts_span_files(spark, lm_blocks):
         return "FlatMapGroupsInArrow" in p, sorted(repr(r) for r in dec.collect())
 
     (grouped_c, got_c), (grouped_s, got_s) = rows(clustered), rows(spread)
-    grouped_m, got_m = rows(mixed)
-    assert not grouped_c and grouped_s and not grouped_m
-    assert got_c and got_s == got_c and got_m == got_c
+    (grouped_m, got_m), (grouped_o, got_o) = rows(mixed), rows(odd_even)
+    assert not grouped_c and grouped_s and not grouped_m and not grouped_o
+    assert got_c and got_s == got_c and got_m == got_c and got_o == got_c
+
+    # past _FILES_TASKS_PER_CORE file tasks per core, files share a task
+    from pyspark import SparkContext
+
+    import parquet_python_spark.operators.generic_codec as gc
+
+    monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda sc: 1))
+    monkeypatch.setattr(gc, "_FILES_TASKS_PER_CORE", 1)
+    dec = decode_df_pruned_multi(clustered, "k", _LM_KINDS, out_schema, preds)
+    assert dec.rdd.getNumPartitions() == 1
+    assert sorted(repr(r) for r in dec.collect()) == got_c
 
 
 def test_pruned_decode_detects_corrupt_payload(spark, lm_blocks, tmp_path):
