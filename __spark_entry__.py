@@ -1676,17 +1676,12 @@ def _ann_ivf_oracle() -> str:
 
 
 def _nation_fixture_oracle() -> str:
-    """nation.csv (the reference's golden, test-data/nation.csv) inlined as
-    VALUES — self-contained, no filesystem access needed in the oracle."""
-    import csv
-
-    with open("/root/reference/test-data/nation.csv") as f:
-        rows = list(csv.reader(f, delimiter="|"))
-    vals = ", ".join(
-        f"({int(r[0])}, '{r[1]}', {int(r[2])}, '{r[3]}')" for r in rows
-    )
+    """nation.csv (the reference's golden, test-data/nation.csv) read by
+    DuckDB when the query runs: building the oracle dict touches no file,
+    so a missing fixture fails this query alone."""
     return (
-        f"SELECT CAST(n_nationkey AS INTEGER) AS n_nationkey, n_name, "
-        f"CAST(n_regionkey AS INTEGER) AS n_regionkey, n_comment FROM "
-        f"(VALUES {vals}) AS t(n_nationkey, n_name, n_regionkey, n_comment)"
+        "SELECT CAST(column0 AS INTEGER) AS n_nationkey, column1 AS n_name, "
+        "CAST(column2 AS INTEGER) AS n_regionkey, column3 AS n_comment FROM "
+        "read_csv('/root/reference/test-data/nation.csv', delim='|', "
+        "header=false, all_varchar=true)"
     )

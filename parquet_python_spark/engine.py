@@ -14,8 +14,10 @@ Scale design notes (targets a 1000-executor cluster; local[32] here):
     task per input file / row-group range, workers read parquet via
     pyarrow and write their own block files — token payloads never cross
     the JVM<->python Arrow IPC boundary or an exchange.  Every block file
-    is therefore a blk-* file or a cmp-* concatenation of them, and every
-    reader of a bare blocks directory decodes one task per file.
+    is therefore a blk-* file or a cmp-* concatenation of them.
+  * One file-direct reader for both block schemas (here and generic_codec):
+    a cached proof that each part lies in one file (_block_files) gates
+    one read loop (_decode_block_files) over map_tasks' tasks.
   * Skew is bounded by task planning, not salting: a file larger than
     max_task_bytes splits into row-group ranges (_plan_file_tasks), so a
     dominant source simply spans more tasks.
@@ -558,9 +560,9 @@ def local_parquet_scan_files(df: DataFrame) -> list[str] | None:
     """Sorted local paths of the files behind ``df`` when it is a bare,
     unfiltered scan of a plain parquet relation — else None.
 
-    The one gate of both file-direct readers (decode_blocks' fast path and
-    generic_codec's round-trip): the optimized plan must be the
-    LogicalRelation itself (any caller filter/projection/join/cache falls
+    The scan test of every file-direct reader (the block layout proof
+    _block_files and generic_codec's round-trip): the optimized plan must
+    be the LogicalRelation itself (any caller filter/projection/join/cache falls
     back), its file format exactly ParquetFileFormat (a subclass such as
     Delta's applies deletion vectors a raw pyarrow read would skip), and
     every file local (local_path)."""
@@ -583,18 +585,19 @@ def local_parquet_scan_files(df: DataFrame) -> list[str] | None:
 
 
 def map_tasks(spark: SparkSession, tasks: list, run_task, schema) -> DataFrame:
-    """One Spark task per entry of ``tasks``: ``run_task(task)`` yields
-    that task's Arrow record batches.  The one dispatch of every
-    file-direct reader and writer (the tokens encode, decode and
-    compaction here, generic_codec's round-trip and pruned decodes).
+    """One Spark task per entry of ``tasks`` (past _TASKS_PER_CORE per
+    core, consecutive entries share one): ``run_task(task)`` yields each
+    entry's Arrow record batches.  The one dispatch of every file-direct
+    reader and writer (the tokens encode, decode and compaction here,
+    generic_codec's round-trip and pruned decodes).
 
-    Dispatch is a JVM-native spark.range with one partition per task;
-    each task resolves its entry from the list shipped in the function
-    closure.  Versus createDataFrame(+repartition) this removes both an
-    exchange/stage and a pickled-python-RDD deserialization hop per task
-    (measured ~0.3s of fixed overhead at the bench scale).  The closure
-    grows with the task count (~100 B/file) — metadata-sized up to ~1e6
-    files, the same regime every other driver-side file plan here
+    Dispatch is a JVM-native spark.range, whose partitions are contiguous
+    id ranges; each task resolves its entries from the list shipped in the
+    function closure.  Versus createDataFrame(+repartition) this removes
+    both an exchange/stage and a pickled-python-RDD deserialization hop
+    per task (measured ~0.3s of fixed overhead at the bench scale).  The
+    closure grows with the task count (~100 B/file) — metadata-sized up
+    to ~1e6 files, the same regime every other driver-side file plan here
     assumes.  With no task the plan is limit(0), which Spark plans as an
     empty local relation: collecting it starts no job or Python task."""
     tasks = list(tasks)
@@ -604,10 +607,17 @@ def map_tasks(spark: SparkSession, tasks: list, run_task, schema) -> DataFrame:
             for i in batch.column("id").to_pylist():
                 yield from run_task(tasks[int(i)])
 
-    out = spark.range(len(tasks), numPartitions=max(len(tasks), 1)).mapInArrow(
-        run, schema=schema
-    )
+    cores = spark.sparkContext.defaultParallelism
+    n = max(min(len(tasks), _TASKS_PER_CORE * cores), 1)
+    out = spark.range(len(tasks), numPartitions=n).mapInArrow(run, schema=schema)
     return out if tasks else out.limit(0)
+
+
+# map_tasks bundles past this many tasks per core (a Python task costs ~0.1
+# core-s to start).  On 512 one-part block files, all kept (4 vCPUs), 512
+# tasks took 14 s and 16 tasks 2.2-2.8 s, against 3.7-6 s for the groupBy
+# decode, whose scan packs the files into 16 splits.
+_TASKS_PER_CORE = 4
 
 
 def part_runs(tbl):
@@ -625,46 +635,105 @@ def part_runs(tbl):
             yield pids[s], tbl.slice(s, e - s)
 
 
-def _engine_block_files_of_scan(blocks: DataFrame) -> list[str] | None:
-    """Local file list when ``blocks`` is a bare, unfiltered scan of
-    engine-written block files — else None.
+# the zone-map rows both block schemas carry
+_ZONE_MAP_COLS = ["part_id", "column", "stat_min", "stat_max"]
 
-    The zero-shuffle decode below is only sound when every partition's
-    rows form exactly one contiguous run in exactly one file.  That holds
-    because every tokens block file is a blk-* file or a whole-file
-    concatenation of them: encode_table_files_native, the one tokens
-    writer, commits one content-addressed blk-<task key> file per task
-    (a re-run skips a committed task, never duplicates it), and
-    compact_blocks writes cmp-* files by concatenating whole files.
-    Anything else — a filtered/joined/cached blocks DataFrame, files of
-    any other name, non-local storage, a mid-compaction directory
-    (sidecar/tmp present) — falls back to the general shuffle path, which
-    assumes nothing about layout."""
+# path -> ((mtime_ns, size), *_block_index(path)); cleared when full
+_BLOCK_INDEX: dict[str, tuple] = {}
+_BLOCK_INDEX_MAX = 16_384
+
+
+def _block_index(path: str) -> tuple:
+    """({column: arrow type}, zone-map rows, distinct part_ids) of one
+    block file, read once per file version (mtime, size): one row per
+    chunk, about the cost of the footer read."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    st = os.stat(path)
+    version = (st.st_mtime_ns, st.st_size)
+    hit = _BLOCK_INDEX.get(path)
+    if hit is not None and hit[0] == version:
+        return hit[1:]
+    with pq.ParquetFile(path) as pf:
+        types = {f.name: f.type for f in pf.schema_arrow}
+        rows = pf.read(columns=_ZONE_MAP_COLS, use_threads=False)
+    pids = pc.unique(rows.column("part_id")).to_pylist()
+    if len(_BLOCK_INDEX) >= _BLOCK_INDEX_MAX:
+        _BLOCK_INDEX.clear()
+    _BLOCK_INDEX[path] = (version, types, rows, pids)
+    return types, rows, pids
+
+
+def _block_files(blocks: DataFrame, schema: pa.Schema) -> dict | None:
+    """{file: its part_ids} when ``blocks`` is a bare scan of local
+    parquet files (local_parquet_scan_files) that all carry ``schema``'s
+    fields (the reader's columns) with its types, and every part's rows
+    lie in one file; else None.  The one gate of every file-direct read of
+    a blocks DataFrame, proved on the driver from the cached _block_index
+    whatever the writer or the file names.  Filtered, joined or persisted
+    blocks, the other block schema (the part_id types differ), parts that
+    span files (written after a repartition) and an interrupted
+    compaction (a visible cmp-* file next to one of its sources) take the
+    caller's groupBy decode.  No file-count cap: at 4096 and 8192 one-part
+    files (4 vCPUs) the file-direct decode_blocks and one-part pruned
+    lookup cost less CPU than the groupBy path, cold and cached."""
     files = local_parquet_scan_files(blocks)
     if files is None:
         return None
-    if set(blocks.columns) != {f.name for f in BLOCKS_SCHEMA.fields}:
-        return None
-    dirs: set[str] = set()
-    for f in files:
-        name = os.path.basename(f)
-        if not (name.endswith(".parquet") and name.startswith(("blk-", "cmp-"))):
-            return None
-        dirs.add(os.path.dirname(f))
-    for d in dirs:
-        try:
-            names = os.listdir(d)
-        except OSError:
-            return None
-        if any(
-            n.endswith(".srcs.json") or n.endswith(".inprogress") for n in names
-        ):
-            return None  # interrupted compaction: the generic path is safe
-    return files
+    owner, out = {}, {}
+    try:
+        for path in files:
+            types, _, pids = _block_index(path)
+            if any(types.get(f.name) != f.type for f in schema):
+                return None
+            for pid in pids:
+                if owner.setdefault(pid, path) != path:
+                    return None  # this part spans files
+            out[path] = pids
+    except (OSError, pa.ArrowException):
+        return None  # unreadable, non-parquet or non-block file
+    return out
 
 
-def _zone_map_keep(meta: pa.Table, column: str, lo: int, hi: int) -> set[str]:
-    """part_ids of the blocks metadata ``meta`` (part_id, column,
+# the blocks columns _decode_part_table reads
+_DECODE_COLS = (
+    "part_id", "column", "codec", "params", "payload", "n_values", "n_rows",
+    "checksum",
+)
+_DECODE_SCHEMA = pa.schema([f for f in _BLOCKS_ARROW_SCHEMA if f.name in _DECODE_COLS])
+
+
+def _decode_block_files(
+    spark: SparkSession,
+    plan: list[tuple],
+    schema: pa.Schema = _DECODE_SCHEMA,
+    decode=_decode_part_table,
+    out_schema=DECODED_SCHEMA,
+) -> DataFrame:
+    """The one file-direct read loop, decoding tokens blocks by default:
+    each (path, filters) of ``plan`` reads with pyarrow only ``schema``'s
+    columns of the rows passing ``filters`` (every row when None: a
+    pyarrow filter on part_id reads only the kept parts); part_runs
+    splits them, and ``decode`` turns each part's rows into an Arrow
+    table of ``out_schema``.  A part never spans files (_block_files, or
+    a blocks directory's writers), so each decodes whole."""
+
+    def run(task):
+        import pyarrow.parquet as pq
+
+        path, where = task
+        tbl = pq.read_table(
+            path, columns=schema.names, filters=where, use_threads=False
+        )
+        for _, rows in part_runs(tbl):
+            yield from decode(rows).to_batches()
+
+    return map_tasks(spark, plan, run, out_schema)
+
+
+def _zone_map_keep(meta: pa.Table, column: str, lo: int, hi: int) -> list[str]:
+    """Sorted part_ids of the blocks metadata ``meta`` (part_id, column,
     stat_min, stat_max) that may hold a ``column`` value in [lo, hi]:
     parts whose stats range intersects it, plus legacy parts with no
     stats row for ``column``."""
@@ -684,54 +753,26 @@ def _zone_map_keep(meta: pa.Table, column: str, lo: int, hi: int) -> set[str]:
     )
     keep = set(pc.filter(pids, hit).to_pylist())
     legacy = set(pids.to_pylist()) - set(pc.filter(pids, with_stats).to_pylist())
-    return keep | legacy
-
-
-_ZONE_MAP_COLS = ["part_id", "column", "stat_min", "stat_max"]
-
-
-def _decode_files_df(
-    spark: SparkSession,
-    files: list[str],
-    prune: tuple[str, int, int] | None = None,
-) -> DataFrame:
-    """mapInArrow decode over an explicit block-file list (one task per
-    file through map_tasks; a part never spans files) — the shared body
-    of decode_blocks_files, decode_blocks' fast path and
-    decode_blocks_files_pruned.  With ``prune=(column, lo, hi)`` each task
-    decodes only the parts _zone_map_keep keeps."""
-
-    def dec(path):
-        import pyarrow.parquet as pq
-
-        # the stats columns alone: the payload bytes stay unread
-        keep = None if prune is None else _zone_map_keep(
-            pq.read_table(path, columns=_ZONE_MAP_COLS, use_threads=False),
-            *prune,
-        )
-        if keep is not None and not keep:
-            return  # payload never read
-        for pid, rows in part_runs(pq.read_table(path, use_threads=False)):
-            if keep is None or pid in keep:
-                yield from _decode_part_table(rows).to_batches()
-
-    return map_tasks(spark, files, dec, DECODED_SCHEMA)
+    return sorted(keep | legacy)
 
 
 def decode_blocks(blocks: DataFrame) -> DataFrame:
     """blocks DataFrame -> original tokens DataFrame (bit-identical rows).
 
-    Fast path (round 6): when ``blocks`` is a bare scan of engine-written
-    block files (see _engine_block_files_of_scan), decode runs shuffle-free
-    with one task per file — the encoded payloads never cross an exchange
-    (measured ~2x at the 10x bench scale; at 100 TB the saved payload
-    shuffle is the job).  General path: groups by part_id (the blocks of
-    one partition reunite) and decodes via _decode_part_table — works on
-    any blocks DataFrame at the cost of shuffling payloads.
+    File-direct when the one layout proof holds (_block_files: a bare
+    local scan of tokens block files whose parts each lie in one file,
+    whatever their names): one task per file (map_tasks), the encoded
+    payloads never cross an exchange (measured ~2x at the 10x bench
+    scale; at 100 TB the saved payload shuffle is the job).  General
+    path: groups by part_id (the blocks of one partition reunite) and
+    decodes via _decode_part_table — works on any blocks DataFrame at the
+    cost of shuffling payloads.
     """
-    fast_files = _engine_block_files_of_scan(blocks)
-    if fast_files is not None:
-        return _decode_files_df(blocks.sparkSession, fast_files)
+    files = _block_files(blocks, _DECODE_SCHEMA)
+    if files is not None:
+        return _decode_block_files(
+            blocks.sparkSession, [(path, None) for path in files]
+        )
 
     def dec(tbl):
         # (wrapper without annotations: applyInArrow's eval-type inference
@@ -760,18 +801,20 @@ def decode_blocks_files_pruned(
 ) -> DataFrame:
     """Shuffle-free zone-map-pruned decode of a blocks directory.
 
-    Two-pass per file: (1) read only the stats columns — parquet columnar
-    layout means the payload bytes are never touched for this pass; (2) for
-    surviving part_ids, read + decode the payload rows.  Files where no part
-    survives cost one footer + three tiny columns; at 100 TB with a
-    range-clustered layout that is the difference between scanning the
-    table and scanning the matching slice.
+    The driver plans the keep set from each file's cached zone-map rows
+    (_block_index), and tasks run only for files holding a kept part,
+    each reading and decoding just those parts' rows: no payload byte of
+    a pruned part is read.  At 100 TB with a range-clustered layout that
+    is the difference between scanning the table and scanning the
+    matching slice.
     """
     _repair_compaction(blocks_path, conservative=True)
-    decoded = _decode_files_df(
-        spark, list_input_files(blocks_path), prune=(column, lo, hi)
-    )
-    return _pruned_residual(decoded, column, lo, hi)
+    plan = []
+    for path in list_input_files(blocks_path):
+        keep = _zone_map_keep(_block_index(path)[1], column, lo, hi)
+        if keep:
+            plan.append((path, [("part_id", "in", keep)]))
+    return _pruned_residual(_decode_block_files(spark, plan), column, lo, hi)
 
 
 def _file_key_of_part(part_id):
@@ -811,7 +854,9 @@ def decode_blocks_files(spark: SparkSession, blocks_path: str) -> DataFrame:
     _repair_compaction).
     """
     _repair_compaction(blocks_path, conservative=True)
-    return _decode_files_df(spark, list_input_files(blocks_path))
+    return _decode_block_files(
+        spark, [(path, None) for path in list_input_files(blocks_path)]
+    )
 
 
 def compact_blocks(

@@ -31,6 +31,8 @@ constant, so the same code holds at 100x the input.
 from __future__ import annotations
 
 import functools
+import math
+import numbers
 import os
 import zlib
 
@@ -50,7 +52,8 @@ from ..codecs.arrow_io import (
     list_column_flat,
     string_array_from_lens_blob,
 )
-from ..engine import local_parquet_scan_files, map_tasks, part_runs
+from ..engine import _block_files, _decode_block_files
+from ..engine import local_parquet_scan_files, map_tasks
 
 BLOCKS_SCHEMA = T.StructType(
     [
@@ -158,8 +161,11 @@ def _float_ordered_bits(vals: np.ndarray) -> np.ndarray:
     floats keep their bit pattern, negative floats flip all non-sign
     bits).  Lets float columns share the int64 stat/page-stat machinery
     with exact monotone semantics: -inf < -1 < -0.0 < +0.0 < 1 < +inf <
-    NaN — matching Spark's NaN-greatest float ordering."""
-    bits = np.ascontiguousarray(vals, dtype=np.float64).view(np.int64)
+    NaN — matching Spark's NaN-greatest float ordering.  Every NaN,
+    whatever its sign bit and payload, maps to the image of the one
+    canonical NaN (Spark orders all NaNs as equal)."""
+    f = np.ascontiguousarray(vals, dtype=np.float64)
+    bits = np.where(np.isnan(f), np.int64(0x7FF8 << 48), f.view(np.int64))
     return np.where(bits >= 0, bits, bits ^ np.int64(0x7FFFFFFFFFFFFFFF))
 
 
@@ -1343,12 +1349,13 @@ def _check_int64(values) -> None:
 def _range_keep(
     kind: str | None, meta: pa.Table, pred_col: str, lo, hi
 ) -> tuple:
-    """(overlap mask, page-prune tuple, containment mask) over the
-    ``meta`` rows for a range predicate — the kind dispatch shared by the
-    pruned decodes AND the metadata aggregates, so the bound
-    normalization (±0 widening, truncated string semantics) lives in
-    exactly one place.  Containment = every present value provably in
-    [lo, hi] (an unbounded truncated string upper never claims it)."""
+    """(overlap mask, page bound tuples — a union, see _pred_keep —,
+    containment mask) over the ``meta`` rows for a range predicate — the
+    kind dispatch shared by the pruned decodes AND the metadata
+    aggregates, so the bound normalization (numpy scalars, ±0 widening,
+    NaN bounds, truncated string semantics) lives in exactly one place.
+    Containment = every present value provably in [lo, hi] (an unbounded
+    truncated string upper never claims it)."""
     col_rows = pc.equal(meta.column("column"), pred_col)
     if kind == "str":
         if not (isinstance(lo, str) and isinstance(hi, str)):
@@ -1369,8 +1376,9 @@ def _range_keep(
         )
         # surviving chunks additionally skip pages via the per-page
         # truncated string bounds (str twin of the int page stats)
-        return overlap, (pred_col, lo, hi), contained
+        return overlap, [(pred_col, lo, hi)], contained
     if kind in ("float64", "float32", "int", "int96_ts"):
+        lo, hi = _plain_number(lo), _plain_number(hi)
         if any(
             isinstance(b, bool) or not isinstance(b, (int, float))
             for b in (lo, hi)
@@ -1392,19 +1400,31 @@ def _range_keep(
         # comparison does not, so widen zero bounds to the ±0 pair's outer
         # edge — otherwise a chunk whose max is -0.0 would be pruned for
         # lo=0.0 even though -0.0 >= 0.0 is true row-side (the widening is
-        # equally sound for containment: IEEE equates the pair)
-        lo = _float_ordered_scalar(-0.0 if lo == 0 else lo)
-        hi = _float_ordered_scalar(+0.0 if hi == 0 else hi)
+        # equally sound for containment: IEEE equates the pair).  A NaN
+        # bound spans every image above +inf's: the canonical NaN's and
+        # any positive NaN of blocks written before NaN was canonicalized.
+        # Their sign-bit NaNs image below -inf's, so with hi NaN a second
+        # range keeps every chunk and page whose minimum lies there.
+        ranges = [(
+            _float_ordered_scalar(np.inf) + 1 if math.isnan(lo)
+            else _float_ordered_scalar(-0.0 if lo == 0 else lo),
+            2**63 - 1 if math.isnan(hi)
+            else _float_ordered_scalar(+0.0 if hi == 0 else hi),
+        )]
+        if math.isnan(hi):
+            ranges.append((-(2**63), _float_ordered_scalar(-np.inf) - 1))
     else:
         _check_int64((lo, hi))
+        ranges = [(lo, hi)]
     smin, smax = meta.column("stat_min"), meta.column("stat_max")
-    overlap = _all(
-        col_rows, pc.greater_equal(smax, lo), pc.less_equal(smin, hi)
-    )
+    overlap = _all(col_rows, functools.reduce(pc.or_kleene, [
+        _all(pc.greater_equal(smax, a), pc.less_equal(smin, b)) for a, b in ranges
+    ]))
+    a, b = ranges[0]
     contained = _all(
-        col_rows, pc.greater_equal(smin, lo), pc.less_equal(smax, hi)
+        col_rows, pc.greater_equal(smin, a), pc.less_equal(smax, b)
     )
-    return overlap, (pred_col, lo, hi), contained
+    return overlap, [(pred_col, a, b) for a, b in ranges], contained
 
 
 @F.pandas_udf(T.BooleanType())
@@ -1493,8 +1513,8 @@ def _pred_keep(
     kind = col_kinds.get(pred_col)
     col_rows = pc.equal(meta.column("column"), pred_col)
     if op == "range":
-        overlap, page_prune, _ = _range_keep(kind, meta, pred_col, *pred[2:4])
-        return _parts(meta, overlap), [page_prune]
+        overlap, pages, _ = _range_keep(kind, meta, pred_col, *pred[2:4])
+        return _parts(meta, overlap), pages
     if op in ("eq", "in"):
         # eq is the single-value IN: both prune a partition when ANY
         # probe value may be present (stats OR'd per value, Bloom
@@ -1640,12 +1660,25 @@ def decode_df_pruned_eq(
 def _normalize_preds(preds: list[tuple]) -> list[tuple]:
     """Materialize IN-list values (a one-shot iterable read twice — once
     for the prune, once for the exact row filter — would silently yield
-    an empty second read) and reject an empty conjunction."""
+    an empty second read), turn numpy scalar bounds and values into
+    Python numbers (_plain_number) and reject an empty conjunction."""
     if not preds:
         raise ValueError("preds must be non-empty")
     return [
-        (p[0], p[1], list(p[2])) if p[0] == "in" else p for p in preds
+        (p[0], p[1], [_plain_number(v) for v in p[2]]) if p[0] == "in"
+        else (*p[:2], *map(_plain_number, p[2:]))
+        for p in preds
     ]
+
+
+def _plain_number(v):
+    """``v`` as a Python int or float when it is a numbers.Integral or
+    numbers.Real (numpy scalars included), so it checks and compares like
+    a Python bound; bool and numpy.bool_ stay, for the kind checks to
+    reject."""
+    if isinstance(v, (bool, np.bool_)) or not isinstance(v, numbers.Real):
+        return v
+    return int(v) if isinstance(v, numbers.Integral) else float(v)
 
 
 def _pred_row_expr(preds: list[tuple], combine: str = "and"):
@@ -1755,13 +1788,13 @@ def count_filtered_meta(
     # ONE source of truth for the bound normalization (±0 widening,
     # truncated string semantics, bound validation): the same dispatch
     # every pruned decode uses
-    overlap, page_prune, contained = _range_keep(kind, meta, pred_col, lo, hi)
+    overlap, pages, contained = _range_keep(kind, meta, pred_col, lo, hi)
     contained = pc.and_kleene(contained, pc.equal(meta.column("n_nulls"), 0))
     cnt = pc.sum(pc.filter(meta.column("n_rows"), contained)).as_py() or 0
     boundary = _parts(meta, pc.and_kleene(overlap, pc.invert(contained)))
     if boundary:
         cnt += _aggregate(
-            _decode_col(blocks, pred_col, kind, boundary, page_prune)
+            _decode_col(blocks, pred_col, kind, boundary, [pages])
             .filter((F.col(pred_col) >= lo) & (F.col(pred_col) <= hi)),
             F.count(F.lit(1)).alias("n"),
         )["n"]
@@ -1812,75 +1845,11 @@ def _aggregate(decoded: DataFrame, *aggs) -> dict:
 
 
 # the blocks columns _decode_fn reads: a file-direct task reads no other
-_DECODE_COLS = [
+_DECODE_COLS = (
     "part_id", "column", "codec", "params", "payload", "n_values", "n_rows",
     "checksum", "page_stats", "page_nulls",
-]
-
-
-def _part_files(blocks: DataFrame, parts: set[int]) -> dict[str, list[int]] | None:
-    """{file: its kept part_ids} for the files holding a part of
-    ``parts``, when ``blocks`` is a bare scan of at most
-    _FAST_SCAN_MAX_FILES local parquet files
-    (engine.local_parquet_scan_files) that carry every _DECODE_COLS column
-    and in which every part's rows lie in exactly one file — proved here
-    on the driver from each file's distinct part_ids (_file_part_ids).
-    Else None: filtered, joined or persisted blocks, and parts that span
-    files (blocks written after a repartition), take the groupBy path.
-    Per-file part_id ranges from the footers cannot replace the read:
-    encode_df's output, as Spark writes it, mixes unordered parts in a
-    file ({0, 5}, {2, 4}, ...), so those ranges overlap."""
-    files = local_parquet_scan_files(blocks)
-    if files is None or len(files) > _FAST_SCAN_MAX_FILES:
-        return None
-    owner: dict[int, str] = {}
-    try:
-        for path in files:
-            pids = _file_part_ids(path)
-            if pids is None:
-                return None
-            for pid in pids:
-                if owner.setdefault(pid, path) != path:
-                    return None  # this part spans files
-    except (OSError, pa.ArrowException):
-        return None  # unreadable or non-parquet file: the generic path
-    by_file: dict[str, list[int]] = {}
-    for pid in sorted(parts):
-        if pid in owner:
-            by_file.setdefault(owner[pid], []).append(pid)
-    return by_file
-
-
-# path -> ((mtime_ns, size), _file_part_ids value); cleared when it holds
-# four scans' worth of files at the _FAST_SCAN_MAX_FILES cap
-_FILE_PART_IDS: dict[str, tuple] = {}
-_FILE_PART_IDS_MAX = 16_384
-
-
-def _file_part_ids(path: str) -> list[int] | None:
-    """The distinct part_ids of a block file, or None when it lacks a
-    _DECODE_COLS column.  Cached per file version (mtime, size), so
-    repeated lookups on one blocks table read each file's part_id column
-    once.  That column holds one row per chunk, so reading it costs about
-    what the footer read does.  A one-part lookup over 4096 one-part
-    files (4 vCPUs) spent 2.3 driver CPU-s uncached and 0.33-0.39 cached,
-    against 0.05 on the groupBy path."""
-    import pyarrow.parquet as pq
-
-    st = os.stat(path)
-    version = (st.st_mtime_ns, st.st_size)
-    hit = _FILE_PART_IDS.get(path)
-    if hit is not None and hit[0] == version:
-        return hit[1]
-    with pq.ParquetFile(path) as pf:
-        pids = None
-        if set(_DECODE_COLS) <= set(pf.schema_arrow.names):
-            tbl = pf.read(columns=["part_id"], use_threads=False)
-            pids = pc.unique(tbl.column("part_id")).to_pylist()
-    if len(_FILE_PART_IDS) >= _FILE_PART_IDS_MAX:
-        _FILE_PART_IDS.clear()
-    _FILE_PART_IDS[path] = (version, pids)
-    return pids
+)
+_DECODE_SCHEMA = pa.schema([f for f in _BLOCKS_ARROW if f.name in _DECODE_COLS])
 
 
 def _decode_parts(
@@ -1893,17 +1862,13 @@ def _decode_parts(
 ) -> DataFrame:
     """Decode the chunk rows of ``parts`` (only ``column``'s when given),
     page-pruned and late-materialized by ``prune`` (see _decode_fn).
-
-    File-direct when _part_files proves the layout: one task per file
-    holding a kept part (engine.map_tasks), each reading with pyarrow only
-    its kept parts' rows and only the columns _decode_fn reads — no
-    Spark scan and no exchange.  Past _FILES_TASKS_PER_CORE tasks per
-    core, consecutive files share a task.  Any other blocks DataFrame
-    reaches the decode through a pushed ``part_id IN (...)`` filter and
-    the groupBy shuffle, the one path that runs on DataFrame-held
-    blocks."""
-    by_file = _part_files(blocks, parts)
-    if by_file is None:
+    File-direct when engine._block_files proves the layout: each file
+    holding a kept part reads only those parts' rows and the columns
+    _decode_fn reads (engine._decode_block_files), with no Spark scan or
+    exchange.  Other blocks DataFrames take a pushed ``part_id IN (...)``
+    filter and the groupBy shuffle."""
+    files = _block_files(blocks, _DECODE_SCHEMA)
+    if files is None:
         # a literal IN-list that pushes to the blocks scan (no join)
         rows = blocks.filter(F.col("part_id").isin(sorted(parts)))
         if column is not None:
@@ -1911,35 +1876,16 @@ def _decode_parts(
         return decode_df(rows, None, col_kinds, out_schema, prune=prune)
     dec = _decode_fn(col_kinds, out_schema, prune)
     names = out_schema.fieldNames()
-    items = sorted(by_file.items())
-    cores = blocks.sparkSession.sparkContext.defaultParallelism
-    n = min(len(items), _FILES_TASKS_PER_CORE * cores)
-    tasks = [
-        items[i * len(items) // n : (i + 1) * len(items) // n] for i in range(n)
+    only_col = [] if column is None else [("column", "=", column)]
+    plan = [
+        (path, [("part_id", "in", kept)] + only_col)
+        for path, pids in files.items()
+        if (kept := sorted(parts.intersection(pids)))
     ]
-
-    def run_files(task):
-        import pyarrow.parquet as pq
-
-        for path, pids in task:
-            filters = [("part_id", "in", pids)]
-            if column is not None:
-                filters.append(("column", "=", column))
-            tbl = pq.read_table(
-                path, columns=_DECODE_COLS, filters=filters, use_threads=False
-            )
-            for _, rows in part_runs(tbl):
-                yield from dec(rows).select(names).to_batches()
-
-    return map_tasks(blocks.sparkSession, tasks, run_files, out_schema)
-
-
-# past this many file tasks per core a pruned decode bundles files: each
-# Python task costs ~0.1 core-s to start.  Measured on 512 one-part files,
-# every part kept (4 vCPUs): 512 tasks took 14 s against 6 s for the
-# groupBy decode, whose scan packs the files into 16 splits; 16 tasks
-# took 2.2-2.8 s against 3.7-4.8 s.
-_FILES_TASKS_PER_CORE = 4
+    return _decode_block_files(
+        blocks.sparkSession, plan, _DECODE_SCHEMA,
+        lambda rows: dec(rows).select(names), out_schema,
+    )
 
 
 def minmax_filtered_meta(
@@ -1973,7 +1919,7 @@ def minmax_filtered_meta(
             "metadata min/max needs an int or int96_ts column"
         )
     meta = _chunk_meta(blocks, col_kinds, [pred_col])
-    overlap, page_prune, contained = _range_keep(kind, meta, pred_col, lo, hi)
+    overlap, pages, contained = _range_keep(kind, meta, pred_col, lo, hi)
     smin, smax = meta.column("stat_min"), meta.column("stat_max")
     mn = pc.min(pc.filter(smin, _all(overlap, pc.greater_equal(smin, lo))))
     mx = pc.max(pc.filter(smax, _all(overlap, pc.less_equal(smax, hi))))
@@ -1984,7 +1930,7 @@ def minmax_filtered_meta(
     straddle = _parts(meta, pc.and_kleene(overlap, pc.invert(contained)))
     if straddle:
         got = _aggregate(
-            _decode_col(blocks, pred_col, kind, straddle, page_prune)
+            _decode_col(blocks, pred_col, kind, straddle, [pages])
             .filter((F.col(pred_col) >= lo) & (F.col(pred_col) <= hi)),
             F.min(pred_col).alias("mn"),
             F.max(pred_col).alias("mx"),
@@ -2223,8 +2169,9 @@ def roundtrip(
     pyarrow instead of receiving rows through Spark's scan -> Arrow IPC
     conversion — measured, that conversion (an identity mapInArrow over
     the 10x lineitem scan) costs ~12x the scan itself and dominated the
-    fused round-trip.  Task dispatch is one task per row group
-    (engine.map_tasks, the dispatch every file-direct reader shares); in
+    fused round-trip.  Task dispatch is one task per row group, bundled
+    past four per core (engine.map_tasks, shared by every file-direct
+    reader); in
     the few-row-group regime the groups are split into ~TARGET-sized pieces
     for parallelism (each piece re-reads its row group — bounded by
     _FAST_SCAN_SPLIT_BYTES_CAP, and only when row groups < cores, where

@@ -341,7 +341,11 @@ def test_read_path_repair_is_conservative(spark, blocks_dir):
 
 class _InProcessSession:
     """Runs compact_blocks' bin tasks in this process (its
-    ``range(n).mapInArrow(fn).collect()``), where monkeypatch reaches them."""
+    ``range(n).mapInArrow(fn).collect()``), where monkeypatch reaches them;
+    map_tasks reads the core count from ``sparkContext``."""
+
+    class sparkContext:
+        defaultParallelism = 1
 
     def range(self, n, numPartitions=None):
         import pyarrow as pa
@@ -460,3 +464,100 @@ def test_compact_preserves_chunk_stats_and_bloom(spark, tmp_path):
     got_eq = sorted(tuple(r) for r in dec_eq.filter(F.col("k") == 12_345).collect())
     exp_eq = sorted(tuple(r) for r in df.filter(F.col("k") == 12_345).collect())
     assert got_eq == exp_eq and len(got_eq) == 1
+
+
+def _grouped(df) -> bool:
+    """True when ``df`` decodes through the groupBy shuffle."""
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    return "FlatMapGroupsInArrow" in plan
+
+
+def test_decode_blocks_single_layout_gate(spark, blocks_dir, monkeypatch):
+    """decode_blocks reads a bare scan file-direct exactly when the one
+    layout proof (engine._block_files) holds.  An in-flight bin (a
+    dangling sidecar, no cmp-* file) stays file-direct; a visible cmp-*
+    file next to one of its sources holds parts twice and falls back with
+    identical rows; a block file rewritten in place is indexed again; a
+    generic blocks directory falls back; past _TASKS_PER_CORE files per
+    core the file tasks bundle."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark import SparkContext
+
+    from parquet_python_spark.engine import _DECODE_SCHEMA, _block_files
+    from parquet_python_spark.operators.generic_codec import encode_df
+
+    _, bdir = blocks_dir
+    want = _rows(decode_blocks_files(spark, bdir))
+    files = list_input_files(bdir)
+    assert len(files) == 8
+
+    def frame():
+        return decode_blocks(spark.read.parquet(bdir))
+
+    sidecar = os.path.join(bdir, ".cmp-0123456789abcdef.parquet.srcs.json")
+    with open(sidecar, "w") as f:
+        json.dump([os.path.basename(p) for p in files[:2]], f)
+    assert not _grouped(frame()) and _rows(frame()) == want
+    os.remove(sidecar)
+
+    # an interrupted compaction: the bin is visible, one source survives
+    saved = os.path.join(os.path.dirname(bdir), "saved.parquet")
+    shutil.copy2(files[1], saved)
+    cmp = os.path.join(bdir, "cmp-0123456789abcdef.parquet")
+    pq.write_table(pa.concat_tables([pq.read_table(p) for p in files[:2]]), cmp)
+    os.remove(files[1])
+    assert _grouped(frame()) and _rows(frame()) == want
+    os.remove(cmp)
+    shutil.copy2(saved, files[1])
+    assert not _grouped(frame())
+
+    # rewritten in place: files[0] now also holds files[1]'s parts
+    original = pq.read_table(files[0])
+    pq.write_table(pa.concat_tables([original, pq.read_table(files[1])]), files[0])
+    assert _grouped(frame()) and _rows(frame()) == want
+    pq.write_table(original, files[0])
+    assert not _grouped(frame()) and _rows(frame()) == want
+
+    gdir = os.path.join(os.path.dirname(bdir), "generic")
+    encode_df(
+        spark.range(1_000).withColumnRenamed("id", "k"), "k", {"k": "int"}, n_parts=2
+    ).write.parquet(gdir)
+    generic = spark.read.parquet(gdir)
+    assert _block_files(generic, _DECODE_SCHEMA) is None
+    assert _grouped(decode_blocks(generic))
+
+    monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda sc: 1))
+    for dec in (decode_blocks_files(spark, bdir), frame()):
+        assert dec.rdd.getNumPartitions() == 4  # 8 files, 4 tasks per core
+        assert _rows(dec) == want
+
+
+def test_pruned_decode_plans_on_driver(spark, blocks_dir):
+    """decode_blocks_files_pruned plans from the cached zone-map rows: a
+    task runs only for a file holding a kept part, and a window no part
+    reaches runs none."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    _, bdir = blocks_dir
+    lo, hi = 131_067, 131_070  # the top of the random profile's ids
+
+    def holds(path):
+        t = pq.read_table(path, columns=["column", "stat_min", "stat_max"])
+        t = t.filter(pc.equal(t.column("column"), "tokens"))
+        hit = pc.and_(
+            pc.greater_equal(t.column("stat_max"), lo),
+            pc.less_equal(t.column("stat_min"), hi),
+        )
+        return pc.any(hit).as_py()
+
+    kept = sum(holds(p) for p in list_input_files(bdir))
+    dec = decode_blocks_files_pruned(spark, bdir, "tokens", lo, hi)
+    assert 0 < kept < 8 and dec.rdd.getNumPartitions() == kept
+    none = decode_blocks_files_pruned(spark, bdir, "tokens", -5, -1)
+    assert none.rdd.getNumPartitions() == 0 and none.count() == 0

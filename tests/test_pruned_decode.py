@@ -2097,11 +2097,16 @@ def test_file_direct_gate_falls_back_when_parts_span_files(
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
+    from parquet_python_spark.engine import _block_files
     from parquet_python_spark.operators.generic_codec import (
+        _DECODE_SCHEMA,
         _arrow_safe_schema,
-        _part_files,
         decode_df_pruned_multi,
     )
+
+    def _part_files(blocks):
+        files = _block_files(blocks, _DECODE_SCHEMA)
+        return None if files is None else {p: sorted(ps) for p, ps in files.items()}
 
     raw, blocks_path, spread_path, mixed_path = lm_blocks
     tbl = pq.read_table(blocks_path)
@@ -2113,16 +2118,16 @@ def test_file_direct_gate_falls_back_when_parts_span_files(
         for name, pids in (("a", a_pids), ("b", b_pids)):
             keep = pc.is_in(tbl.column("part_id"), pa.array(pids, pid_type))
             pq.write_table(tbl.filter(keep), str(two / f"{name}.parquet"))
-        by_file = _part_files(spark.read.parquet(str(two)), {0, 1, 2, 3})
+        by_file = _part_files(spark.read.parquet(str(two)))
         if by_file is not None:
             return {p.rsplit("/", 1)[-1]: ps for p, ps in by_file.items()}
 
     clustered = spark.read.parquet(blocks_path)
     spread = spark.read.parquet(spread_path)
     mixed = spark.read.parquet(mixed_path)
-    assert _part_files(clustered, {0, 1, 2, 3}) is not None
-    assert _part_files(mixed, {0, 1, 2, 3}) is not None
-    assert _part_files(spread, {0, 1, 2, 3}) is None
+    assert _part_files(clustered) is not None
+    assert _part_files(mixed) is not None
+    assert _part_files(spread) is None
     reads = []
     real_read = pq.ParquetFile.read
 
@@ -2131,7 +2136,7 @@ def test_file_direct_gate_falls_back_when_parts_span_files(
         return real_read(self, *args, **kwargs)
 
     monkeypatch.setattr(pq.ParquetFile, "read", counting_read)
-    assert _part_files(clustered, {0, 1, 2, 3}) is not None
+    assert _part_files(clustered) is not None
     assert not reads  # cached per file version
     assert write_two([0, 1], [2, 3]) == {"a.parquet": [0, 1], "b.parquet": [2, 3]}
     # rewritten in place: the cached part_ids of the old files go stale
@@ -2153,14 +2158,15 @@ def test_file_direct_gate_falls_back_when_parts_span_files(
     assert not grouped_c and grouped_s and not grouped_m and not grouped_o
     assert got_c and got_s == got_c and got_m == got_c and got_o == got_c
 
-    # past _FILES_TASKS_PER_CORE file tasks per core, files share a task
+    # past _TASKS_PER_CORE file tasks per core, files share a task
     from pyspark import SparkContext
 
-    import parquet_python_spark.operators.generic_codec as gc
+    import parquet_python_spark.engine as engine
 
     monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda sc: 1))
-    monkeypatch.setattr(gc, "_FILES_TASKS_PER_CORE", 1)
-    dec = decode_df_pruned_multi(clustered, "k", _LM_KINDS, out_schema, preds)
+    monkeypatch.setattr(engine, "_TASKS_PER_CORE", 1)
+    # both files hold a kept part: two tasks unbundled
+    dec = decode_df_pruned_multi(odd_even, "k", _LM_KINDS, out_schema, preds)
     assert dec.rdd.getNumPartitions() == 1
     assert sorted(repr(r) for r in dec.collect()) == got_c
 
@@ -2216,3 +2222,199 @@ def test_pruned_decode_detects_corrupt_payload(spark, lm_blocks, tmp_path):
                 dec.collect()
         finally:
             blocks.unpersist()
+
+
+def _nan(bits: int) -> float:
+    import numpy as np
+
+    return float(np.array([bits], dtype=np.uint64).view(np.float64)[0])
+
+
+def test_nan_zone_maps_canonical_and_old_blocks_kept():
+    """Every NaN, whatever its sign bit and payload, takes one stat image
+    above +inf's.  Blocks written before that hold a sign-bit NaN's
+    image below -inf's: a range whose hi is NaN keeps such a chunk and
+    such a page, because Spark's filter keeps their NaN rows."""
+    import numpy as np
+    import pyarrow as pa
+
+    from parquet_python_spark.operators.generic_codec import (
+        _float_ordered_bits,
+        _float_ordered_scalar,
+        _page_keep_ranges,
+        _page_stats_blob,
+        _range_keep,
+        PAGE_ROWS,
+    )
+
+    nans = [_nan(b) for b in (0x7FF8_0000_0000_0000, 0xFFF8_0000_0000_0001,
+                              0x7FF0_0000_0000_0001, 0xFFFF_FFFF_FFFF_FFFF)]
+    ob = _float_ordered_bits(np.array([*nans, np.inf]))
+    assert len(set(ob[:4].tolist())) == 1 and ob[0] > ob[4]
+
+    def old_image(v):  # the transform before NaN was canonicalized
+        bits = np.array([v]).view(np.int64)
+        return int(np.where(bits >= 0, bits, bits ^ np.int64(2**63 - 1))[0])
+
+    neg_nan = nans[1]
+    assert old_image(neg_nan) < _float_ordered_scalar(-np.inf)
+    meta = pa.table({
+        "part_id": pa.array([0, 1], pa.int32()),
+        "column": ["f", "f"],
+        "stat_min": [old_image(neg_nan), _float_ordered_scalar(1.0)],
+        "stat_max": [_float_ordered_scalar(1.0), _float_ordered_scalar(2.0)],
+    })
+    nan = float("nan")
+    for lo, hi, want in (
+        (nan, nan, [True, False]),
+        (5.0, nan, [True, False]),
+        (-1.0, 1.5, [True, True]),
+        (1.5, 3.0, [False, True]),
+    ):
+        overlap, pages, _ = _range_keep("float64", meta, "f", lo, hi)
+        assert overlap.to_pylist() == want, (lo, hi)
+    # an old page holding [1.0, -NaN] survives a hi-NaN page prune, and the
+    # page of finite values above it does not
+    vals = np.full(2 * PAGE_ROWS, 3.0)
+    vals[0] = 1.0
+    blob = bytearray(_page_stats_blob(_float_ordered_bits(vals)))
+    blob[4:12] = np.int64(old_image(neg_nan)).tobytes()  # page 0's minimum
+    _, pages, _ = _range_keep("float64", meta, "f", 5.0, nan)
+    kept = [_page_keep_ranges(bytes(blob), len(vals), a, b) for _, a, b in pages]
+    assert kept == [[], [(0, PAGE_ROWS)]]
+
+
+def test_sign_bit_nan_pruned_equals_spark_filter(spark, tmp_path):
+    """Hypothesis: float columns holding NaNs of both signs and several
+    payloads (plus ±0.0 and ±inf) return, through a pruned decode and the
+    exact re-filter, the rows of a plain Spark filter — file-direct and on
+    the groupBy path, for bounds that may themselves be NaN, ±inf or ±0."""
+    import itertools
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from hypothesis import example, given, settings
+    from hypothesis import strategies as st
+
+    from parquet_python_spark.operators.generic_codec import (
+        _arrow_safe_schema,
+        _pred_row_expr,
+        decode_df_pruned_multi,
+        encode_df,
+    )
+
+    kinds = {"k": "int", "f": "float64"}
+    specials = [
+        _nan(0x7FF8_0000_0000_0000), _nan(0xFFF8_0000_0000_0000),
+        _nan(0xFFF0_0000_0000_0001), _nan(0x7FFF_FFFF_FFFF_FFFF),
+        _nan(0xFFFF_FFFF_FFFF_FFFF), -0.0, 0.0, float("inf"), float("-inf"),
+    ]
+    bound = st.one_of(
+        st.sampled_from(specials), st.floats(-100.0, 100.0, allow_nan=False)
+    )
+    n = 9_000  # two parts of 4500 rows: two pages each
+    runs = itertools.count()
+
+    @settings(max_examples=8, deadline=None)
+    # a sign-bit NaN in the low part, whose finite values all lie below lo
+    @example([(10, specials[1])], float("nan"), float("nan"))
+    @example([(20, specials[2])], 5.0, float("nan"))
+    @given(
+        st.lists(
+            st.tuples(st.integers(0, n - 1), st.sampled_from(specials)),
+            min_size=1, max_size=12,
+        ),
+        bound,
+        bound,
+    )
+    def check(placed, lo, hi):
+        f = np.arange(n) / 50.0 - 90.0
+        for pos, v in placed:
+            f[pos] = v
+        base = tmp_path / f"run{next(runs)}"
+        base.mkdir()
+        pq.write_table(
+            pa.table({"k": np.arange(n, dtype=np.int64), "f": f}),
+            str(base / "raw.parquet"),
+        )
+        raw = spark.read.parquet(str(base / "raw.parquet"))
+        encode_df(raw, "k", kinds, n_parts=2, partitioning="range").write.parquet(
+            str(base / "blocks")
+        )
+        preds = [("range", "f", lo, hi)]
+        # unpushed: Spark's parquet row-group filter drops the NaN rows of
+        # a NaN-bound range (parquet's min/max ignore NaN)
+        push = "spark.sql.parquet.filterPushdown"
+        prev = spark.conf.get(push)
+        spark.conf.set(push, "false")
+        try:
+            want = sorted(r.k for r in raw.filter(_pred_row_expr(preds)).collect())
+        finally:
+            spark.conf.set(push, prev)
+        out_schema = _arrow_safe_schema(raw.schema, kinds)
+        for file_direct in (True, False):
+            blocks = spark.read.parquet(str(base / "blocks"))
+            if not file_direct:
+                blocks = blocks.persist()
+            dec = decode_df_pruned_multi(blocks, "k", kinds, out_schema, preds)
+            p = dec._sc._jvm.PythonSQLUtils.explainString(
+                dec._jdf.queryExecution(), "formatted"
+            )
+            try:
+                assert ("FlatMapGroupsInArrow" in p) != file_direct, p
+                got = sorted(r.k for r in dec.filter(_pred_row_expr(preds)).collect())
+            finally:
+                blocks.unpersist()
+            assert got == want, (file_direct, lo, hi)
+
+    check()
+
+
+def test_numpy_scalar_bounds_match_python(spark, lm_blocks):
+    """numpy int64/int32/float64 bounds and eq/IN values prune and answer
+    exactly as the same Python numbers do; bool-like values stay
+    rejected."""
+    import numpy as np
+
+    from parquet_python_spark.operators.generic_codec import (
+        _arrow_safe_schema,
+        _pred_row_expr,
+        count_filtered_meta,
+        decode_df_pruned_multi,
+    )
+
+    raw, blocks_path = lm_blocks[:2]
+    blocks = spark.read.parquet(blocks_path)
+    out_schema = _arrow_safe_schema(raw.select(*_LM_KINDS).schema, _LM_KINDS)
+
+    def rows(preds):
+        dec = decode_df_pruned_multi(blocks, "k", _LM_KINDS, out_schema, preds)
+        return sorted(repr(r) for r in dec.filter(_pred_row_expr(preds)).collect())
+
+    cases = [
+        ([("range", "i", 100, 180)], [("range", "i", np.int64(100), np.int64(180))]),
+        ([("range", "k", 900, 5_000)], [("range", "k", np.int32(900), np.int32(5_000))]),
+        ([("range", "f", -10.5, 20.0)], [("range", "f", np.float64(-10.5), np.float64(20.0))]),
+        ([("range", "f", -10, 20)], [("range", "f", np.int64(-10), np.int32(20))]),
+        ([("eq", "i", 77)], [("eq", "i", np.int64(77))]),
+        ([("in", "i", [3, 500])], [("in", "i", [np.int32(3), np.int64(500)])]),
+    ]
+    for py, npy in cases:
+        want = rows(py)
+        assert want and rows(npy) == want, py
+    cnt = count_filtered_meta(blocks, _LM_KINDS, "k", 2_500, 17_499).first().cnt
+    assert (
+        count_filtered_meta(
+            blocks, _LM_KINDS, "k", np.int64(2_500), np.int64(17_499)
+        ).first().cnt
+        == cnt
+        == 15_000
+    )
+    for bad in (
+        [("range", "i", np.bool_(True), 5)],
+        [("range", "i", True, 5)],
+        [("eq", "i", np.bool_(False))],
+    ):
+        with pytest.raises(ValueError, match="int pred_col needs"):
+            decode_df_pruned_multi(blocks, "k", _LM_KINDS, out_schema, bad)

@@ -5,7 +5,8 @@ a micro-batch is replayed after a crash."""
 import os
 
 from parquet_python_spark.engine import (
-    _engine_block_files_of_scan,
+    _DECODE_SCHEMA,
+    _block_files,
     decode_blocks,
     list_input_files,
 )
@@ -84,4 +85,4 @@ def test_replayed_batch_encodes_nothing(spark, tmp_path):
     assert all(os.path.basename(f).startswith("blk-") for f in before)
     after = {f: os.stat(f).st_mtime_ns for f in list_input_files(blocks_path)}
     assert after == before
-    assert _engine_block_files_of_scan(spark.read.parquet(blocks_path)) is not None
+    assert _block_files(spark.read.parquet(blocks_path), _DECODE_SCHEMA) is not None
