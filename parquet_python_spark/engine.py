@@ -635,8 +635,13 @@ def part_runs(tbl):
             yield pids[s], tbl.slice(s, e - s)
 
 
-# the zone-map rows both block schemas carry
-_ZONE_MAP_COLS = ["part_id", "column", "stat_min", "stat_max"]
+# the chunk statistics every pruned read plans on: tokens blocks carry
+# the first three and stat_min/stat_max, generic blocks all of them.  No
+# payload, bitset or page blob enters the index
+_META_COLS = (
+    "part_id", "column", "n_rows", "n_nulls",
+    "stat_min", "stat_max", "stat_min_str", "stat_max_str",
+)
 
 # path -> ((mtime_ns, size), *_block_index(path)); cleared when full
 _BLOCK_INDEX: dict[str, tuple] = {}
@@ -644,9 +649,12 @@ _BLOCK_INDEX_MAX = 16_384
 
 
 def _block_index(path: str) -> tuple:
-    """({column: arrow type}, zone-map rows, distinct part_ids) of one
-    block file, read once per file version (mtime, size): one row per
-    chunk, about the cost of the footer read."""
+    """({column: arrow type}, chunk-statistics rows, distinct part_ids) of
+    one block file, read once per file version (mtime, size): one row per
+    chunk holding the _META_COLS the file has, about the cost of the
+    footer read.  The layout proof (_block_files), the tokens zone-map
+    prune (_zone_map_keep) and every generic_codec pruned call on
+    file-direct blocks plan from these rows."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
@@ -657,7 +665,9 @@ def _block_index(path: str) -> tuple:
         return hit[1:]
     with pq.ParquetFile(path) as pf:
         types = {f.name: f.type for f in pf.schema_arrow}
-        rows = pf.read(columns=_ZONE_MAP_COLS, use_threads=False)
+        rows = pf.read(
+            columns=[c for c in _META_COLS if c in types], use_threads=False
+        )
     pids = pc.unique(rows.column("part_id")).to_pylist()
     if len(_BLOCK_INDEX) >= _BLOCK_INDEX_MAX:
         _BLOCK_INDEX.clear()

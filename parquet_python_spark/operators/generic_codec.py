@@ -37,7 +37,6 @@ import os
 import zlib
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
@@ -52,7 +51,7 @@ from ..codecs.arrow_io import (
     list_column_flat,
     string_array_from_lens_blob,
 )
-from ..engine import _block_files, _decode_block_files
+from ..engine import _META_COLS, _block_files, _block_index, _decode_block_files
 from ..engine import local_parquet_scan_files, map_tasks
 
 BLOCKS_SCHEMA = T.StructType(
@@ -1055,17 +1054,22 @@ def _decode_fn(
     col_kinds: dict[str, str],
     out_schema: T.StructType,
     prune: tuple | list[tuple] | None = None,
+    probes: dict | None = None,
 ):
     """Per-part block-rows -> decoded-rows function (the body of
-    decode_df and of the file-direct pruned decode, exposed so the fused
-    round-trip can chain it directly onto the encode function inside one
-    Python task).
+    decode_df and of the pruned decodes, exposed so the fused round-trip
+    can chain it directly onto the encode function inside one Python
+    task).
 
     With ``prune``: page ranges first, from the page zone maps and null
-    counts; then late materialization — each prune tuple whose row test
-    equals Spark's filter (_row_exact) is evaluated on its column decoded
-    over those pages, and only the pages holding a selected row decode
-    for the other columns, which then take the selected rows.  Float
+    counts.  ``probes`` maps an eq/IN value's page bound tuple (col, v, v)
+    to its Bloom probe (_bloom_probes): a chunk whose ``bloom`` cell
+    admits no probe gives that tuple no rows, so a part no predicate
+    admits returns before any payload decodes.  Then late
+    materialization — each prune tuple whose row test equals Spark's
+    filter (_row_exact) is evaluated on its column decoded over those
+    pages, and only the pages holding a selected row decode for the
+    other columns, which then take the selected rows.  Float
     predicates and union groups with such a member stay page-granular."""
 
     # arrow image of the output schema, for the all-pages-pruned early exit
@@ -1073,6 +1077,7 @@ def _decode_fn(
     from pyspark.sql.pandas.types import to_arrow_schema
 
     empty_out = pa.Table.from_pylist([], schema=to_arrow_schema(out_schema))
+    probes = probes or {}
     prunes = (
         [] if prune is None
         else [prune] if isinstance(prune, tuple)
@@ -1087,6 +1092,12 @@ def _decode_fn(
             prow = by_col.get(pcol)
             if prow is None:
                 return None
+            probe = probes.get((pcol, lo, hi))
+            bloom = prow.get("bloom")
+            if probe is not None and bloom and not bloom_might_contain(
+                bytes(bloom), probe
+            ):
+                return []  # the chunk's Bloom filter rules the value out
             if lo is None:
                 # null-predicate page prune: hi is want_null (see
                 # _pred_keep); consults the per-page null counts
@@ -1262,12 +1273,13 @@ def decode_df_pruned(
     """Decode only the partitions whose [stat_min, stat_max] for
     ``pred_col`` intersects [lo, hi] — min/max block skipping, the thing
     the reference parses from parquet Statistics but never does
-    (parquet.thrift:198-206).  The driver plans the keep set from one
-    read of the chunk statistics, and only the surviving parts are read
-    and decoded (_decode_parts: file-direct on a bare blocks scan, else a
-    pushed ``part_id IN (...)`` filter), so non-qualifying payloads are
-    never shuffled or decoded.  Callers re-apply the exact row predicate
-    after decode (block stats are a superset filter).
+    (parquet.thrift:198-206).  The driver plans the keep set from the
+    chunk statistics (_chunk_meta: the cached block index on file-direct
+    blocks, in no Spark job; one metadata read otherwise), and only the
+    surviving parts are read and decoded (_decode_parts: file-direct,
+    else a pushed ``part_id IN (...)`` filter), so non-qualifying
+    payloads are never shuffled or decoded.  Callers re-apply the exact
+    row predicate after decode (block stats are a superset filter).
 
     ``pred_col`` may be an int/int96_ts column (exact chunk bounds + the
     intra-chunk page skip), a float column with numeric bounds (exact
@@ -1282,47 +1294,55 @@ def decode_df_pruned(
     )
 
 
-# the chunk statistics every prune plans on: no payload, bitset or page
-# blob ever reaches the driver
-_META_COLS = (
-    "part_id", "column", "n_rows", "n_nulls",
-    "stat_min", "stat_max", "stat_min_str", "stat_max_str",
-)
-
-
 def _chunk_meta(
-    blocks: DataFrame, col_kinds: dict[str, str], cols, hits=()
-) -> pa.Table:
-    """The chunk-statistics rows of ``cols`` (plus the ``hits`` columns,
-    executor-side Bloom tests) as one driver-side Arrow table — the one
-    Spark job a pruned call spends on planning.  The column filter
-    pushes to the blocks scan.
+    blocks: DataFrame, col_kinds: dict[str, str], cols
+) -> tuple[dict | None, pa.Table]:
+    """(the proven {file: part_ids} of file-direct blocks, else None; the
+    chunk-statistics rows (_META_COLS) of ``cols`` as one driver-side
+    Arrow table) — a pruned call's one layout proof and its plan source.
+    On file-direct blocks (engine._block_files) the rows come from the
+    cached block index and no Spark job runs; other blocks DataFrames
+    spend one Spark job, whose column filter pushes to the blocks scan.
+    No payload, bitset or page blob reaches the driver either way.
 
     Loud-fails when a predicate column was never encoded into a
     NON-EMPTY blocks table: its keep set would otherwise be empty (an
     AND returns a definitive-looking empty result, an OR silently drops
     that member's rows, a metadata count returns 0).  An empty blocks
-    table (empty input) is legitimate, so the emptiness probe runs only
-    when the metadata has no rows at all.  Unknown and list kinds have
-    no chunk rows under their own name and are not checked: the
-    predicate dispatch raises the precise kind error for those."""
+    table (empty input) is legitimate; off the index, the emptiness probe
+    runs only when the metadata has no rows at all.  Unknown and list
+    kinds have no chunk rows under their own name and are not checked:
+    the predicate dispatch raises the precise kind error for those."""
     cols = sorted(set(cols))
-    meta = (
-        blocks.filter(F.col("column").isin(cols))
-        .select(*_META_COLS, *hits)
-        .toArrow()
-    )
+    files = _block_files(blocks, _PLAN_SCHEMA)
+    if files is None:
+        meta = (
+            blocks.filter(F.col("column").isin(cols))
+            .select(*_META_COLS)
+            .toArrow()
+        )
+    else:
+        meta = pa.concat_tables(
+            [_block_index(path)[1] for path in files],
+            promote_options="permissive",
+        )
+        names = meta.column("column")
+        meta = meta.filter(pc.is_in(names, pa.array(cols, names.type)))
     present = set(pc.unique(meta.column("column")).to_pylist())
     missing = [
         c for c in cols
         if c not in present and col_kinds.get(c) not in (None, *_LIST_KINDS)
     ]
-    if missing and (meta.num_rows or not blocks.select("part_id").isEmpty()):
+    if missing and (
+        meta.num_rows
+        or (any(files.values()) if files is not None
+            else not blocks.select("part_id").isEmpty())
+    ):
         raise ValueError(
             f"column {missing[0]!r} has no chunks in this blocks table "
             "(encoded with different col_kinds?)"
         )
-    return meta
+    return files, meta
 
 
 def _all(*masks):
@@ -1427,88 +1447,70 @@ def _range_keep(
     return overlap, [(pred_col, a, b) for a, b in ranges], contained
 
 
-@F.pandas_udf(T.BooleanType())
-def _bloom_hit(bloom: pd.Series, probes: pd.Series) -> pd.Series:
-    """Executor-side Bloom test of each metadata row: may ANY probe be in
-    the chunk (IN-list semantics; a single probe is the eq case)?  A
-    missing filter (high-cardinality chunk) conservatively admits.
-    Bitsets are tested where the metadata rows live — never on the
-    driver.  (A DataType, not a DDL string, as the return type: workers
-    import this module without a SparkContext to parse one.)"""
-    return pd.Series(
-        [
-            b is None or any(bloom_might_contain(bytes(b), int(p)) for p in ps)
-            for b, ps in zip(bloom, probes)
-        ],
-        dtype=bool,
-    )
-
-
-def _bloom_hit_col(col_kinds: dict[str, str], pred: tuple):
-    """The metadata-job column holding one eq/IN predicate's Bloom test,
-    or None for the vacuous empty IN.  Validates the kind and the values
-    at plan time, before any job runs (SQL `IN (..., NULL)` is a common
-    source of a bad value)."""
-    op, pred_col = pred[0], pred[1]
-    values = [pred[2]] if op == "eq" else pred[2]
-    if not values:
-        return None
-    kind = col_kinds.get(pred_col)
-    if kind == "str":
-        if not all(isinstance(v, str) for v in values):
-            raise ValueError("str pred_col needs a str value")
-        # the SAME JVM hash the encode used; Catalyst folds it to a
-        # constant
-        probes = [F.xxhash64(F.lit(v)) for v in values]
-    elif kind in ("int", "int96_ts"):
-        if not all(
-            isinstance(v, int) and not isinstance(v, bool) for v in values
-        ):
-            raise ValueError("int pred_col needs int values")
-        _check_int64(values)
-        probes = [F.lit(v).cast("long") for v in values]
-    else:
-        raise ValueError(
-            f"pred_col {pred_col!r} has kind {kind!r}; "
-            "bloom pruning needs an int, int96_ts or str column"
-        )
-    return F.when(
-        F.col("column") == pred_col, _bloom_hit(F.col("bloom"), F.array(*probes))
-    )
+def _bloom_probes(spark, col_kinds: dict[str, str], preds: list[tuple]) -> dict:
+    """{(col, v, v): int64 Bloom probe} for every eq/IN value — the page
+    bound tuple of the value (_pred_keep), which _decode_fn tests against
+    each chunk's ``bloom`` cell.  Validates kinds and values before any
+    read (SQL `IN (..., NULL)` is a common source of a bad value).  An
+    int value probes as itself; a str value as the JVM's xxhash64 of it,
+    the hash the encode built the filter over, from one VALUES query the
+    optimizer evaluates on the driver: no Spark job."""
+    probes, strs = {}, []
+    for p in preds:
+        if p[0] not in ("eq", "in"):
+            continue
+        pred_col = p[1]
+        values = [p[2]] if p[0] == "eq" else p[2]
+        if not values:
+            continue  # x IN () decodes nothing (_pred_keep)
+        kind = col_kinds.get(pred_col)
+        if kind == "str":
+            if not all(isinstance(v, str) for v in values):
+                raise ValueError("str pred_col needs a str value")
+            strs += [(pred_col, v) for v in values]
+        elif kind in ("int", "int96_ts"):
+            if not all(
+                isinstance(v, int) and not isinstance(v, bool) for v in values
+            ):
+                raise ValueError("int pred_col needs int values")
+            _check_int64(values)
+            probes.update(((pred_col, v, v), v) for v in values)
+        else:
+            raise ValueError(
+                f"pred_col {pred_col!r} has kind {kind!r}; "
+                "bloom pruning needs an int, int96_ts or str column"
+            )
+    if strs:
+        args = {f"v{i}": v for i, (_, v) in enumerate(strs)}
+        row = spark.sql(
+            f"SELECT {', '.join(f'xxhash64(:{a})' for a in args)} "
+            "FROM VALUES (0)",
+            args=args,
+        ).first()
+        probes.update(((c, v, v), h) for (c, v), h in zip(strs, row))
+    return probes
 
 
 def _pred_keeps(
     blocks: DataFrame, col_kinds: dict[str, str], preds: list[tuple]
-) -> list[tuple]:
-    """(keep part_id set, page bound tuples) per predicate, planned on the
-    driver from ONE metadata read (each eq/IN predicate adds its Bloom
-    test as one more column of that read)."""
-    hits = {
-        i: _bloom_hit_col(col_kinds, p)
-        for i, p in enumerate(preds)
-        if p[0] in ("eq", "in")
-    }
-    meta = _chunk_meta(
-        blocks, col_kinds, [p[1] for p in preds],
-        [h.alias(f"_hit{i}") for i, h in hits.items() if h is not None],
-    )
-    return [
-        _pred_keep(col_kinds, meta, p, f"_hit{i}")
-        for i, p in enumerate(preds)
-    ]
+) -> tuple[dict | None, list[tuple]]:
+    """(the proven block files or None — see _chunk_meta; per predicate,
+    its keep part_id set and page bound tuples), planned on the driver
+    from ONE metadata read."""
+    files, meta = _chunk_meta(blocks, col_kinds, [p[1] for p in preds])
+    return files, [_pred_keep(col_kinds, meta, p) for p in preds]
 
 
-def _pred_keep(
-    col_kinds: dict[str, str], meta: pa.Table, pred: tuple, hit: str
-) -> tuple:
+def _pred_keep(col_kinds: dict[str, str], meta: pa.Table, pred: tuple) -> tuple:
     """(keep part_id set, page bound tuples) for one predicate.
 
     The page bounds are a list of (col, lo, hi) whose UNION covers every
     row the predicate can match (range -> one tuple, eq/in -> one [v, v]
     per value, [] for the vacuous empty IN); null predicates bound pages
     with the sentinel (col, None, want_null), which routes to the
-    per-page null counts inside decode_df.  ``hit`` names the predicate's
-    Bloom column in ``meta`` (eq/in only)."""
+    per-page null counts inside decode_df.  An eq/in keep set is the
+    parts the chunk statistics admit; the Bloom filters prune further
+    inside the decode task (_bloom_probes, _decode_fn)."""
     op, pred_col = pred[0], pred[1]
     kind = col_kinds.get(pred_col)
     col_rows = pc.equal(meta.column("column"), pred_col)
@@ -1516,10 +1518,9 @@ def _pred_keep(
         overlap, pages, _ = _range_keep(kind, meta, pred_col, *pred[2:4])
         return _parts(meta, overlap), pages
     if op in ("eq", "in"):
-        # eq is the single-value IN: both prune a partition when ANY
-        # probe value may be present (stats OR'd per value, Bloom
-        # membership any-of), and page-skip via the UNION of each
-        # value's degenerate range [v, v]
+        # eq is the single-value IN: both keep a partition when ANY
+        # probe value may be present (stats OR'd per value), and
+        # page-skip via the UNION of each value's degenerate range [v, v]
         values = [pred[2]] if op == "eq" else pred[2]
         if not values:
             return set(), []  # x IN () is vacuously false: decode nothing
@@ -1551,10 +1552,7 @@ def _pred_keep(
                 for v in values
             ]
         stats = functools.reduce(pc.or_kleene, per_val)
-        return (
-            _parts(meta, _all(col_rows, stats, meta.column(hit))),
-            [(pred_col, v, v) for v in values],
-        )
+        return _parts(meta, _all(col_rows, stats)), [(pred_col, v, v) for v in values]
     if op in ("isnull", "notnull"):
         if kind is None or kind in _LIST_KINDS:
             # list columns reject nulls at encode, so a null predicate
@@ -1595,9 +1593,12 @@ def decode_df_pruned_multi(
 
     ``preds`` entries: ``("range", col, lo, hi)``, ``("eq", col, value)``,
     ``("in", col, [v1, ...])``, ``("isnull", col)``, ``("notnull", col)``.
-    Chunk level: one metadata read (plus the executor-side Bloom test
-    for eq/in) gives each predicate's keep set on the driver; the sets
-    combine there and only the kept parts decode (_decode_parts).
+    Chunk level: the chunk statistics (_chunk_meta: the block index on
+    file-direct blocks, else one metadata read) give each predicate's
+    keep set on the driver; the sets combine there and only the kept
+    parts decode (_decode_parts).  Inside the decode task each eq/in
+    value's Bloom probe is tested against the chunk's filter before any
+    payload decodes (_decode_fn).
     Page level: int/str equality rides the zone maps as the degenerate
     range [v, v], IN-lists as the UNION of their values' ranges, and
     null predicates skip pages through the per-page null counts
@@ -1609,7 +1610,9 @@ def decode_df_pruned_multi(
     decode."""
     if combine not in ("and", "or"):
         raise ValueError(f"combine must be 'and' or 'or', got {combine!r}")
-    planned = _pred_keeps(blocks, col_kinds, _normalize_preds(preds))
+    preds = _normalize_preds(preds)
+    probes = _bloom_probes(blocks.sparkSession, col_kinds, preds)
+    files, planned = _pred_keeps(blocks, col_kinds, preds)
     if combine == "and":
         keep = set.intersection(*(k for k, _ in planned))
         page_prunes = [
@@ -1621,7 +1624,8 @@ def decode_df_pruned_multi(
         union_tuples = [t for _, pages in planned for t in pages]
         page_prunes = [union_tuples] if union_tuples else []
     return _decode_parts(
-        blocks, keep, col_kinds, out_schema, page_prunes or None
+        blocks, files, keep, col_kinds, out_schema, page_prunes or None,
+        probes=probes,
     )
 
 
@@ -1638,18 +1642,19 @@ def decode_df_pruned_eq(
     (zone maps only help range predicates; a point lookup on a
     non-clustered column prunes nothing through min/max).
 
-    Scale shape: the bloom membership test runs EXECUTOR-side (a
-    vectorized pandas UDF column of the one metadata read) so bitsets —
-    up to ~80 KB/chunk — never move to the driver at any chunk count;
-    the driver sees one boolean per chunk, ANDs it with the stats test
-    and decodes only the surviving parts, exactly like the stats path.
-    Callers re-apply the exact predicate after decode (Bloom filters
-    admit false positives, never false negatives).
+    Scale shape: the driver plans from the chunk statistics alone, and
+    the Bloom membership test runs inside the decode task, on the part's
+    own ``bloom`` cell, before any payload decodes: a part the filter
+    rules out yields no rows.  So bitsets — up to ~80 KB/chunk — never
+    move to the driver at any chunk count, and no separate Python stage
+    runs for them.  Callers re-apply the exact predicate after decode
+    (Bloom filters admit false positives, never false negatives).
 
     ``pred_col`` may be int/int96_ts (bloom over the values) or str
     (bloom over JVM-side xxhash64 of the values — the query literal is
-    hashed through the same Spark function, so executor and probe agree
-    bit-for-bit; the truncated string zone maps additionally pre-filter).
+    hashed on the driver through the same Spark function, in a VALUES
+    query that runs no job, so encode and probe agree bit-for-bit; the
+    truncated string zone maps additionally pre-filter).
     Surviving chunks also page-skip via the zone maps (eq = the
     degenerate range [v, v])."""
     return decode_df_pruned_multi(
@@ -1784,7 +1789,7 @@ def count_filtered_meta(
     not when the result is collected: the returned DataFrame is already
     computed, unlike topk_filtered_meta's lazy plan."""
     kind = col_kinds.get(pred_col)
-    meta = _chunk_meta(blocks, col_kinds, [pred_col])
+    files, meta = _chunk_meta(blocks, col_kinds, [pred_col])
     # ONE source of truth for the bound normalization (±0 widening,
     # truncated string semantics, bound validation): the same dispatch
     # every pruned decode uses
@@ -1794,7 +1799,7 @@ def count_filtered_meta(
     boundary = _parts(meta, pc.and_kleene(overlap, pc.invert(contained)))
     if boundary:
         cnt += _aggregate(
-            _decode_col(blocks, pred_col, kind, boundary, [pages])
+            _decode_col(blocks, pred_col, kind, boundary, [pages], files)
             .filter((F.col(pred_col) >= lo) & (F.col(pred_col) <= hi)),
             F.count(F.lit(1)).alias("n"),
         )["n"]
@@ -1822,13 +1827,17 @@ _SCALAR_TYPES = {
 
 
 def _decode_col(
-    blocks: DataFrame, col: str, kind: str, parts: set[int], prune
+    blocks: DataFrame, col: str, kind: str, parts: set[int], prune,
+    files: dict | None,
 ) -> DataFrame:
     """Decode only ``col``'s chunk rows of ``parts`` (page-pruned by
-    ``prune``): the metadata aggregates need nothing else, and the other
-    columns' payloads would only be read to be dropped."""
+    ``prune``; ``files`` as _chunk_meta proved them): the metadata
+    aggregates need nothing else, and the other columns' payloads would
+    only be read to be dropped."""
     out_schema = T.StructType([T.StructField(col, _SCALAR_TYPES[kind], True)])
-    return _decode_parts(blocks, parts, {col: kind}, out_schema, prune, col)
+    return _decode_parts(
+        blocks, files, parts, {col: kind}, out_schema, prune, column=col
+    )
 
 
 def _aggregate(decoded: DataFrame, *aggs) -> dict:
@@ -1845,36 +1854,48 @@ def _aggregate(decoded: DataFrame, *aggs) -> dict:
 
 
 # the blocks columns _decode_fn reads: a file-direct task reads no other
+# (plus ``bloom`` when the call has eq/IN probes)
 _DECODE_COLS = (
     "part_id", "column", "codec", "params", "payload", "n_values", "n_rows",
     "checksum", "page_stats", "page_nulls",
 )
 _DECODE_SCHEMA = pa.schema([f for f in _BLOCKS_ARROW if f.name in _DECODE_COLS])
+# the columns a file-direct pruned call plans on or reads: the layout
+# proof (_chunk_meta) requires every one of them with its type
+_PLAN_SCHEMA = pa.schema([
+    f for f in _BLOCKS_ARROW if f.name in (*_DECODE_COLS, *_META_COLS, "bloom")
+])
 
 
 def _decode_parts(
     blocks: DataFrame,
+    files: dict | None,
     parts: set[int],
     col_kinds: dict[str, str],
     out_schema: T.StructType,
     prune,
     column: str | None = None,
+    probes: dict | None = None,
 ) -> DataFrame:
     """Decode the chunk rows of ``parts`` (only ``column``'s when given),
-    page-pruned and late-materialized by ``prune`` (see _decode_fn).
-    File-direct when engine._block_files proves the layout: each file
-    holding a kept part reads only those parts' rows and the columns
-    _decode_fn reads (engine._decode_block_files), with no Spark scan or
-    exchange.  Other blocks DataFrames take a pushed ``part_id IN (...)``
-    filter and the groupBy shuffle."""
-    files = _block_files(blocks, _DECODE_SCHEMA)
+    page-pruned, Bloom-tested against ``probes`` and late-materialized by
+    ``prune`` (see _decode_fn).  File-direct when _chunk_meta proved the
+    layout (``files``): each file holding a kept part reads only those
+    parts' rows and the columns _decode_fn reads, the ``bloom`` cells
+    only when there are probes (engine._decode_block_files), with no
+    Spark scan or exchange.  Other blocks DataFrames take a pushed
+    ``part_id IN (...)`` filter and the groupBy shuffle, whose rows carry
+    every column."""
+    dec = _decode_fn(col_kinds, out_schema, prune, probes)
     if files is None:
         # a literal IN-list that pushes to the blocks scan (no join)
         rows = blocks.filter(F.col("part_id").isin(sorted(parts)))
         if column is not None:
             rows = rows.filter(F.col("column") == column)
-        return decode_df(rows, None, col_kinds, out_schema, prune=prune)
-    dec = _decode_fn(col_kinds, out_schema, prune)
+        return rows.groupBy("part_id").applyInArrow(dec, schema=out_schema)
+    schema = _DECODE_SCHEMA
+    if probes:
+        schema = schema.append(_BLOCKS_ARROW.field("bloom"))
     names = out_schema.fieldNames()
     only_col = [] if column is None else [("column", "=", column)]
     plan = [
@@ -1883,7 +1904,7 @@ def _decode_parts(
         if (kept := sorted(parts.intersection(pids)))
     ]
     return _decode_block_files(
-        blocks.sparkSession, plan, _DECODE_SCHEMA,
+        blocks.sparkSession, plan, schema,
         lambda rows: dec(rows).select(names), out_schema,
     )
 
@@ -1918,7 +1939,7 @@ def minmax_filtered_meta(
             f"pred_col {pred_col!r} has kind {kind!r}; "
             "metadata min/max needs an int or int96_ts column"
         )
-    meta = _chunk_meta(blocks, col_kinds, [pred_col])
+    files, meta = _chunk_meta(blocks, col_kinds, [pred_col])
     overlap, pages, contained = _range_keep(kind, meta, pred_col, lo, hi)
     smin, smax = meta.column("stat_min"), meta.column("stat_max")
     mn = pc.min(pc.filter(smin, _all(overlap, pc.greater_equal(smin, lo))))
@@ -1930,7 +1951,7 @@ def minmax_filtered_meta(
     straddle = _parts(meta, pc.and_kleene(overlap, pc.invert(contained)))
     if straddle:
         got = _aggregate(
-            _decode_col(blocks, pred_col, kind, straddle, [pages])
+            _decode_col(blocks, pred_col, kind, straddle, [pages], files)
             .filter((F.col(pred_col) >= lo) & (F.col(pred_col) <= hi)),
             F.min(pred_col).alias("mn"),
             F.max(pred_col).alias("mx"),
@@ -1973,7 +1994,7 @@ def topk_filtered_meta(
         )
     if k <= 0:
         raise ValueError("k must be positive")
-    meta = _chunk_meta(blocks, col_kinds, [col])
+    files, meta = _chunk_meta(blocks, col_kinds, [col])
     # all-null chunks (NULL stats) hold no present values: not candidates
     meta = meta.filter(pc.is_valid(meta.column("stat_min")))
     edge, cmp_col = (
@@ -1990,7 +2011,7 @@ def topk_filtered_meta(
         keep = _parts(meta, cmp(meta.column(cmp_col), b))
         # boundary chunks page-skip everything provably beyond B
         prune = (col, -(2**63), b) if ascending else (col, b, 2**63 - 1)
-    dec = _decode_col(blocks, col, kind, keep, prune)
+    dec = _decode_col(blocks, col, kind, keep, prune, files)
     return (
         dec.filter(F.col(col).isNotNull())
         .orderBy(F.col(col).asc() if ascending else F.col(col).desc())
@@ -2015,7 +2036,7 @@ def count_null_meta(
             f"pred_col {pred_col!r} has kind {kind!r}; "
             "null counting needs a scalar column"
         )
-    meta = _chunk_meta(blocks, col_kinds, [pred_col])
+    _, meta = _chunk_meta(blocks, col_kinds, [pred_col])
     nulls = pc.sum(meta.column("n_nulls")).as_py() or 0
     rows = pc.sum(meta.column("n_rows")).as_py() or 0
     return _literal_row(blocks, cnt=nulls if want_null else rows - nulls)

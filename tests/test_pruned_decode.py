@@ -188,11 +188,12 @@ def test_bloom_pruned_equality_roundtrip(spark):
     assert len(admitted) < len(meta), (len(admitted), len(meta))
 
 
-def test_bloom_prune_is_executor_side(spark, monkeypatch):
-    """The driver must never hold bloom bitsets: the membership test runs
-    in a pandas UDF over the metadata rows, so the driver-side metadata
-    table of an eq plan and of an IN plan holds one boolean per chunk and
-    predicate, and no binary column."""
+def test_bloom_prune_is_executor_side(spark, tmp_path, monkeypatch):
+    """The driver never holds Bloom bitsets: the metadata table of an eq
+    plan and of an IN plan holds only the chunk statistics (_META_COLS),
+    with no binary column and no per-chunk hit column, on cached blocks
+    (a Spark metadata read) and on file-direct blocks (the block index);
+    the membership test runs inside the decode task."""
     import pyarrow as pa
 
     from parquet_python_spark.operators import generic_codec as gc
@@ -203,32 +204,47 @@ def test_bloom_prune_is_executor_side(spark, monkeypatch):
         F.concat(F.lit("s"), (F.col("id") % 300).cast("string")).alias("s"),
     )
     kinds = {"k": "int", "v": "int", "s": "str"}
-    blocks = gc.encode_df(df, "k", kinds, n_parts=4).cache()
+    path = str(tmp_path / "blocks")
+    gc.encode_df(df, "k", kinds, n_parts=4).write.parquet(path)
     # the bitsets exist on the blocks side
-    assert blocks.filter(
+    assert spark.read.parquet(path).filter(
         F.col("column").isin("v", "s") & F.col("bloom").isNotNull()
     ).count() == 8
-    seen = []
     real = gc._chunk_meta
-
-    def spy(*args, **kwargs):
-        seen.append(real(*args, **kwargs))
-        return seen[-1]
-
-    monkeypatch.setattr(gc, "_chunk_meta", spy)
     out_schema = gc._arrow_safe_schema(df.select(*kinds).schema, kinds)
-    gc.decode_df_pruned_eq(blocks, "k", kinds, out_schema, "v", 42)
-    gc.decode_df_pruned_multi(
-        blocks, "k", kinds, out_schema,
-        [("in", "s", ["s1", "s2"]), ("in", "v", [3, 6])],
-    )
-    assert [m.num_rows for m in seen] == [4, 8]
-    for meta, n_hits in zip(seen, (1, 2)):
-        types = [f.type for f in meta.schema]
-        assert not any(
-            pa.types.is_binary(t) or pa.types.is_large_binary(t) for t in types
-        ), meta.schema
-        assert sum(pa.types.is_boolean(t) for t in types) == n_hits
+    preds = [("in", "s", ["s1", "s2"]), ("in", "v", [3, 6])]
+    # file-direct first: once cached, Spark's cache serves every scan of
+    # the path, the bare one included
+    for cached in (False, True):
+        blocks = spark.read.parquet(path)
+        if cached:
+            blocks = blocks.cache()
+        seen = []
+
+        def spy(*args, **kwargs):
+            seen.append(real(*args, **kwargs))
+            return seen[-1]
+
+        monkeypatch.setattr(gc, "_chunk_meta", spy)
+        eq = gc.decode_df_pruned_eq(blocks, "k", kinds, out_schema, "v", 42)
+        multi = gc.decode_df_pruned_multi(blocks, "k", kinds, out_schema, preds)
+        monkeypatch.undo()
+        assert [f is None for f, _ in seen] == [cached] * 2
+        assert [m.num_rows for _, m in seen] == [4, 8]
+        for _, meta in seen:
+            assert meta.column_names == list(gc._META_COLS)
+            assert not any(
+                pa.types.is_binary(t) or pa.types.is_large_binary(t)
+                or pa.types.is_boolean(t)
+                for t in meta.schema.types
+            ), meta.schema
+        for dec, row_pred in (
+            (eq, F.col("v") == 42),
+            (multi, gc._pred_row_expr(gc._normalize_preds(preds))),
+        ):
+            got = sorted(tuple(r) for r in dec.filter(row_pred).collect())
+            want = sorted(tuple(r) for r in df.filter(row_pred).collect())
+            assert got == want and got
     blocks.unpersist()
 
 
@@ -260,7 +276,7 @@ def test_bloom_build_flag_off_and_conservative_decode(spark):
         (F.col("column") == "v") & F.col("bloom").isNotNull()
     ).count() == 2
     # both chunks span the key range, and no bitset can rule either out
-    assert _pred_keeps(blocks, kinds, [("eq", "k", 1234)])[0][0] == {0, 1}
+    assert _pred_keeps(blocks, kinds, [("eq", "k", 1234)])[1][0][0] == {0, 1}
     out_schema = _arrow_safe_schema(df.select(*kinds).schema, kinds)
     dec = decode_df_pruned_eq(blocks, "k", kinds, out_schema, "k", 1234)
     got = sorted(tuple(r) for r in dec.filter(F.col("k") == 1234).collect())
@@ -1719,7 +1735,7 @@ def test_minmax_filtered_meta_exact(spark):
         _range_keep,
     )
 
-    meta = _chunk_meta(blocks, kinds, ["k"])
+    _, meta = _chunk_meta(blocks, kinds, ["k"])
     overlap, _, contained = _range_keep("int", meta, "k", 0, 10**9)
     straddle = pc.and_kleene(overlap, pc.invert(contained))
     assert meta.num_rows == 8 and not pc.any(straddle).as_py()
@@ -1838,13 +1854,42 @@ def test_pruned_decode_rejects_unencoded_and_str_bounds_on_int(spark):
         )
 
 
-def test_pruned_calls_spark_job_counts(spark, tmp_path):
-    """Each pruned call plans on the driver from one metadata read: a row
-    lookup, a top-k or a count with boundary chunks is the metadata job
-    plus one exchange-free decode job, and a count answered from
-    metadata alone runs only the metadata job."""
+def _jobs_of(spark, group, call):
+    """(Spark jobs ``call`` ran, its result): the jobs are tagged with a
+    job group, counted once a marker job run after the call has finished
+    (the listener bus delivers events in order)."""
     import time
 
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup(group, group)
+    try:
+        result = call()
+    finally:
+        sc.setJobGroup(group + "-marker", "marker")
+        sc.parallelize([0], 1).count()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.monotonic() + 10
+    while time.monotonic() < deadline:
+        marker = [
+            tracker.getJobInfo(j)
+            for j in tracker.getJobIdsForGroup(group + "-marker")
+        ]
+        if marker and all(i is not None and i.status == "SUCCEEDED" for i in marker):
+            break
+        time.sleep(0.05)
+    return len(tracker.getJobIdsForGroup(group)), result
+
+
+def test_pruned_calls_spark_job_counts(spark, tmp_path):
+    """On file-direct blocks every pruned call plans from the cached
+    block index: a row lookup (range or eq), a top-k, and a count or
+    min/max with boundary chunks run exactly one Spark job, the
+    exchange-free decode; a count or min/max answered from metadata alone
+    and a null count run none.  Cached (DataFrame-held) blocks keep the
+    Spark metadata read, one job, and the groupBy decode runs as two
+    under adaptive execution (its shuffle stage, then its result): three
+    jobs per decoding call, one per metadata-only call."""
     from parquet_python_spark.operators.generic_codec import (
         _arrow_safe_schema,
         count_filtered_meta,
@@ -1852,6 +1897,7 @@ def test_pruned_calls_spark_job_counts(spark, tmp_path):
         decode_df_pruned,
         decode_df_pruned_eq,
         encode_df,
+        minmax_filtered_meta,
         topk_filtered_meta,
     )
 
@@ -1863,59 +1909,55 @@ def test_pruned_calls_spark_job_counts(spark, tmp_path):
     kinds = {"k": "int", "v": "int", "w": "int"}
     path = str(tmp_path / "blocks")
     encode_df(df, "k", kinds, n_parts=4, partitioning="range").write.parquet(path)
-    blocks = spark.read.parquet(path)
     out_schema = _arrow_safe_schema(df.select(*kinds).schema, kinds)
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
+    # file-direct first: once cached, Spark's cache serves every scan of
+    # the path, the bare one included
+    for cached in (False, True):
+        blocks = spark.read.parquet(path)
+        if cached:
+            assert blocks.cache().count() == 12
+        tag = "cached" if cached else "direct"
 
-    def jobs_of(group, call):
-        sc.setJobGroup(group, group)
-        try:
-            result = call()
-        finally:
-            # a marker job after the call: the listener bus delivers events
-            # in order, so once the marker is seen finished, so is the group
-            sc.setJobGroup(group + "-marker", "marker")
-            sc.parallelize([0], 1).count()
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        deadline = time.monotonic() + 10
-        while time.monotonic() < deadline:
-            marker = [
-                tracker.getJobInfo(j)
-                for j in tracker.getJobIdsForGroup(group + "-marker")
-            ]
-            if marker and all(i is not None and i.status == "SUCCEEDED" for i in marker):
-                break
-            time.sleep(0.05)
-        return len(tracker.getJobIdsForGroup(group)), result
+        def jobs(name, want, call):
+            n, result = _jobs_of(spark, f"{tag}-{name}", call)
+            assert n == ((3 if want else 1) if cached else want), (name, n)
+            return result
 
-    n, rows = jobs_of("range", lambda: decode_df_pruned(
-        blocks, "k", kinds, out_schema, "k", 5_000, 6_000
-    ).filter(F.col("k").between(5_000, 6_000)).collect())
-    assert len(rows) == 1_001 and n <= 2, n
-    n, rows = jobs_of("eq", lambda: decode_df_pruned_eq(
-        blocks, "k", kinds, out_schema, "v", 7
-    ).filter(F.col("v") == 7).collect())
-    assert len(rows) == 20 and n <= 2, n
-    n, rows = jobs_of("topk", lambda: topk_filtered_meta(
-        blocks, kinds, "k", 5, ascending=False
-    ).collect())
-    assert [r["k"] for r in rows] == [19_999, 19_998, 19_997, 19_996, 19_995]
-    assert n <= 2, n
-    # [2_500, 17_499] contains the two middle parts and cuts the outer two
-    n, cnt = jobs_of("count", lambda: count_filtered_meta(
-        blocks, kinds, "k", 2_500, 17_499
-    ).first()["cnt"])
-    assert cnt == 15_000 and n <= 2, n
-    # [0, 19_999] contains every part: no boundary chunk decodes
-    n, cnt = jobs_of("count-meta", lambda: count_filtered_meta(
-        blocks, kinds, "k", 0, 19_999
-    ).first()["cnt"])
-    assert cnt == 20_000 and n <= 2, n
-    n, cnt = jobs_of("nulls", lambda: count_null_meta(
-        blocks, kinds, "w", True
-    ).first()["cnt"])
-    assert cnt == 6_667 and n <= 2, n
+        rows = jobs("range", 1, lambda: decode_df_pruned(
+            blocks, "k", kinds, out_schema, "k", 5_000, 6_000
+        ).filter(F.col("k").between(5_000, 6_000)).collect())
+        assert len(rows) == 1_001
+        rows = jobs("eq", 1, lambda: decode_df_pruned_eq(
+            blocks, "k", kinds, out_schema, "v", 7
+        ).filter(F.col("v") == 7).collect())
+        assert len(rows) == 20
+        rows = jobs("topk", 1, lambda: topk_filtered_meta(
+            blocks, kinds, "k", 5, ascending=False
+        ).collect())
+        assert [r["k"] for r in rows] == [19_999, 19_998, 19_997, 19_996, 19_995]
+        # [2_500, 17_499] contains the two middle parts and cuts the outer two
+        cnt = jobs("count", 1, lambda: count_filtered_meta(
+            blocks, kinds, "k", 2_500, 17_499
+        ).first()["cnt"])
+        assert cnt == 15_000
+        # [0, 19_999] contains every part: no boundary chunk decodes
+        cnt = jobs("count-meta", 0, lambda: count_filtered_meta(
+            blocks, kinds, "k", 0, 19_999
+        ).first()["cnt"])
+        assert cnt == 20_000
+        row = jobs("minmax", 1, lambda: minmax_filtered_meta(
+            blocks, kinds, "k", 2_500, 17_499
+        ).first())
+        assert (row["mn"], row["mx"]) == (2_500, 17_499)
+        row = jobs("minmax-meta", 0, lambda: minmax_filtered_meta(
+            blocks, kinds, "k", 0, 19_999
+        ).first())
+        assert (row["mn"], row["mx"]) == (0, 19_999)
+        cnt = jobs("nulls", 0, lambda: count_null_meta(
+            blocks, kinds, "w", True
+        ).first()["cnt"])
+        assert cnt == 6_667
+    blocks.unpersist()
 
 
 def test_page_null_counts_prune_and_exact(spark):
@@ -2418,3 +2460,217 @@ def test_numpy_scalar_bounds_match_python(spark, lm_blocks):
     ):
         with pytest.raises(ValueError, match="int pred_col needs"):
             decode_df_pruned_multi(blocks, "k", _LM_KINDS, out_schema, bad)
+
+
+def test_block_index_replans_rewritten_file(spark, tmp_path):
+    """A file-direct pruned call plans from the block index, in no Spark
+    job; a block file rewritten in place with other statistics is indexed
+    again, so the next call gets the new file's keep set and rows."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from parquet_python_spark.operators.generic_codec import (
+        _arrow_safe_schema,
+        _pred_keeps,
+        decode_df_pruned,
+        encode_df,
+    )
+
+    kinds = {"k": "int", "v": "int"}
+    srcs = {}
+    for base in (0, 100_000):
+        df = spark.range(8_000).select(
+            (F.col("id") + base).alias("k"), (F.col("id") % 97).alias("v")
+        )
+        out = str(tmp_path / f"src{base}")
+        encode_df(df, "k", kinds, n_parts=2, partitioning="range").coalesce(
+            1
+        ).write.parquet(out)
+        (srcs[base],) = [f for f in pq.ParquetDataset(out).files]
+        srcs[base, "df"] = df
+    target = tmp_path / "blocks"
+    target.mkdir()
+    out_schema = _arrow_safe_schema(srcs[0, "df"].schema, kinds)
+    pred = [("range", "k", 100_100, 100_200)]
+    for base, want_keep in ((0, set()), (100_000, {0})):
+        shutil.copyfile(srcs[base], target / "part.parquet")
+        blocks = spark.read.parquet(str(target))
+        n, (files, planned) = _jobs_of(
+            spark, f"replan-{base}", lambda: _pred_keeps(blocks, kinds, pred)
+        )
+        assert files is not None and n == 0
+        assert planned[0][0] == want_keep
+        got = sorted(
+            tuple(r)
+            for r in decode_df_pruned(
+                blocks, "k", kinds, out_schema, "k", 100_100, 100_200
+            ).collect()
+        )
+        want = sorted(
+            tuple(r)
+            for r in srcs[base, "df"].filter(F.col("k").between(100_100, 100_200))
+            .collect()
+        )
+        assert got == want and bool(got) == bool(want_keep)
+
+
+def test_bloom_rejected_part_decodes_nothing(spark, tmp_path, monkeypatch):
+    """A part whose chunk statistics admit an eq value but whose Bloom
+    filter rules it out decodes no payload, on the file-direct path (the
+    read loop run in this process) and on the groupBy path (the decode
+    function applied to the part's full block rows); a part the Bloom
+    admits decodes and yields the matching rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import parquet_python_spark.engine as engine
+    from parquet_python_spark.operators import generic_codec as gc
+
+    # even values only: every chunk's [min, max] spans the odd ones too
+    df = spark.range(8_000).select(
+        F.col("id").alias("k"),
+        (F.col("id") % 500 * 2).alias("v"),
+        F.concat(F.lit("s"), (F.col("id") % 300).cast("string")).alias("s"),
+    )
+    kinds = {"k": "int", "v": "int", "s": "str"}
+    path = str(tmp_path / "blocks")
+    gc.encode_df(df, "k", kinds, n_parts=2, partitioning="range").write.parquet(path)
+    out_schema = gc._arrow_safe_schema(df.schema, kinds)
+    cells = pq.read_table(path, columns=["column", "bloom"]).to_pylist()
+    blooms = [r["bloom"] for r in cells if r["column"] == "v"]
+    assert len(blooms) == 2 and all(blooms)
+    odd = next(
+        v for v in range(1, 999, 2)
+        if not any(gc.bloom_might_contain(b, v) for b in blooms)
+    )
+    decoded = []
+
+    def spy(name):
+        real = getattr(gc, name)
+
+        def wrapped(*args):
+            decoded.append(name)
+            return real(*args)
+
+        monkeypatch.setattr(gc, name, wrapped)
+
+    spy("_decode_values")
+    spy("_decode_values_ranges")
+
+    def in_process(spark_, tasks, run_task, schema):
+        tbls = [pa.Table.from_batches([b]) for t in tasks for b in run_task(t)]
+        return sum(t.num_rows for t in tbls)
+
+    real_map_tasks = engine.map_tasks
+    monkeypatch.setattr(engine, "map_tasks", in_process)
+    direct = spark.read.parquet(path)
+    for v, want in ((odd, 0), (8, 16)):
+        decoded.clear()
+        n = gc.decode_df_pruned_eq(direct, "k", kinds, out_schema, "v", v)
+        assert n == want and bool(decoded) == bool(want), (v, n, decoded)
+    monkeypatch.setattr(engine, "map_tasks", real_map_tasks)
+
+    # groupBy path: capture the decode function the plan ships
+    made = []
+    real_fn = gc._decode_fn
+
+    def capture(*args):
+        made.append(real_fn(*args))
+        return made[-1]
+
+    monkeypatch.setattr(gc, "_decode_fn", capture)
+    cached = spark.read.parquet(path).cache()
+    for v, want in ((odd, 0), (8, 16)):
+        made.clear()
+        plan = gc.decode_df_pruned_eq(cached, "k", kinds, out_schema, "v", v)
+        assert "FlatMapGroupsInArrow" in plan._sc._jvm.PythonSQLUtils.explainString(
+            plan._jdf.queryExecution(), "formatted"
+        )
+        decoded.clear()
+        n = sum(
+            made[0](cached.filter(F.col("part_id") == pid).toArrow()).num_rows
+            for pid in (0, 1)
+        )
+        assert n == want and bool(decoded) == bool(want), (v, n, decoded)
+        assert plan.count() == want
+    cached.unpersist()
+
+
+def test_str_bloom_probes_hash_in_no_job(spark, tmp_path):
+    """Str eq/IN probes are hashed on the driver through one VALUES
+    query that runs no Spark job, to the same xxhash64 the encode built
+    the filters over; a str eq and IN lookup on file-direct blocks then
+    runs one job and equals a plain Spark filter."""
+    from parquet_python_spark.operators.generic_codec import (
+        _arrow_safe_schema,
+        _bloom_probes,
+        _pred_row_expr,
+        decode_df_pruned_multi,
+        encode_df,
+    )
+
+    df = spark.range(6_000).select(
+        F.col("id").alias("k"),
+        F.concat(F.lit("s"), (F.col("id") * 7 % 400).cast("string")).alias("s"),
+    )
+    kinds = {"k": "int", "s": "str"}
+    path = str(tmp_path / "blocks")
+    encode_df(df, "k", kinds, n_parts=3, partitioning="range").write.parquet(path)
+    blocks = spark.read.parquet(path)
+    out_schema = _arrow_safe_schema(df.schema, kinds)
+    preds = [("eq", "s", "s17"), ("in", "s", ["s3", "zz", "s3"])]
+    n, probes = _jobs_of(
+        spark, "str-probes", lambda: _bloom_probes(spark, kinds, preds)
+    )
+    assert n == 0
+    want = {
+        v: spark.range(1).select(F.xxhash64(F.lit(v))).first()[0]
+        for v in ("s17", "s3", "zz")
+    }
+    assert probes == {("s", v, v): h for v, h in want.items()}
+    for lookup, combine in ((preds[:1], "and"), (preds, "or")):
+        n, got = _jobs_of(spark, f"str-lookup-{combine}", lambda: sorted(
+            tuple(r) for r in decode_df_pruned_multi(
+                blocks, "k", kinds, out_schema, lookup, combine
+            ).collect()
+        ))
+        expr = _pred_row_expr(lookup, combine)
+        assert n == 1 and got
+        assert got == sorted(tuple(r) for r in df.filter(expr).collect())
+
+
+def test_file_direct_missing_pred_column_raises(spark, tmp_path):
+    """On file-direct blocks the "no chunks" check is decided from the
+    block index: a predicate column never encoded into non-empty blocks
+    raises for the pruned decodes and the metadata aggregates."""
+    from parquet_python_spark.operators.generic_codec import (
+        _arrow_safe_schema,
+        _block_files,
+        _PLAN_SCHEMA,
+        count_filtered_meta,
+        count_null_meta,
+        decode_df_pruned,
+        decode_df_pruned_multi,
+        encode_df,
+    )
+
+    df = spark.range(100).select(F.col("id").alias("k"))
+    kinds = {"k": "int"}
+    path = str(tmp_path / "blocks")
+    encode_df(df, "k", kinds, n_parts=2).write.parquet(path)
+    blocks = spark.read.parquet(path)
+    assert _block_files(blocks, _PLAN_SCHEMA) is not None
+    out_schema = _arrow_safe_schema(df.schema, kinds)
+    wide = {"k": "int", "zz": "int"}
+    with pytest.raises(ValueError, match="no chunks"):
+        decode_df_pruned(blocks, "k", wide, out_schema, "zz", 0, 10)
+    with pytest.raises(ValueError, match="no chunks"):
+        decode_df_pruned_multi(
+            blocks, "k", wide, out_schema,
+            [("range", "zz", 0, 10), ("eq", "k", 3)], combine="or",
+        )
+    with pytest.raises(ValueError, match="no chunks"):
+        count_filtered_meta(blocks, wide, "zz", 0, 10)
+    with pytest.raises(ValueError, match="no chunks"):
+        count_null_meta(blocks, wide, "zz", True)
