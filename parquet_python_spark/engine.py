@@ -676,12 +676,13 @@ def _block_index(path: str) -> tuple:
 
 
 def _block_files(blocks: DataFrame, schema: pa.Schema) -> dict | None:
-    """{file: its part_ids} when ``blocks`` is a bare scan of local
-    parquet files (local_parquet_scan_files) that all carry ``schema``'s
-    fields (the reader's columns) with its types, and every part's rows
-    lie in one file; else None.  The one gate of every file-direct read of
-    a blocks DataFrame, proved on the driver from the cached _block_index
-    whatever the writer or the file names.  Filtered, joined or persisted
+    """{file: (its part_ids, its _block_index rows)} when ``blocks`` is a
+    bare scan of local parquet files (local_parquet_scan_files) that all
+    carry ``schema``'s fields (the reader's columns) with its types, and
+    every part's rows lie in one file; else None.  The one gate of every
+    file-direct read of a blocks DataFrame, proved on the driver from the
+    cached _block_index whatever the writer or the file names; each file
+    is statted and looked up once, and callers plan on the rows returned.  Filtered, joined or persisted
     blocks, the other block schema (the part_id types differ), parts that
     span files (written after a repartition) and an interrupted
     compaction (a visible cmp-* file next to one of its sources) take the
@@ -694,13 +695,13 @@ def _block_files(blocks: DataFrame, schema: pa.Schema) -> dict | None:
     owner, out = {}, {}
     try:
         for path in files:
-            types, _, pids = _block_index(path)
+            types, rows, pids = _block_index(path)
             if any(types.get(f.name) != f.type for f in schema):
                 return None
             for pid in pids:
                 if owner.setdefault(pid, path) != path:
                     return None  # this part spans files
-            out[path] = pids
+            out[path] = pids, rows
     except (OSError, pa.ArrowException):
         return None  # unreadable, non-parquet or non-block file
     return out
@@ -720,6 +721,7 @@ def _decode_block_files(
     schema: pa.Schema = _DECODE_SCHEMA,
     decode=_decode_part_table,
     out_schema=DECODED_SCHEMA,
+    narrow=None,
 ) -> DataFrame:
     """The one file-direct read loop, decoding tokens blocks by default:
     each (path, filters) of ``plan`` reads with pyarrow only ``schema``'s
@@ -727,12 +729,17 @@ def _decode_block_files(
     pyarrow filter on part_id reads only the kept parts); part_runs
     splits them, and ``decode`` turns each part's rows into an Arrow
     table of ``out_schema``.  A part never spans files (_block_files, or
-    a blocks directory's writers), so each decodes whole."""
+    a blocks directory's writers), so each decodes whole.  ``narrow``,
+    when given, runs first in the task as ``narrow(path, filters)`` and
+    returns the filters of the rows still worth reading, or None to read
+    nothing more of the file."""
 
     def run(task):
         import pyarrow.parquet as pq
 
         path, where = task
+        if narrow is not None and (where := narrow(path, where)) is None:
+            return
         tbl = pq.read_table(
             path, columns=schema.names, filters=where, use_threads=False
         )

@@ -33,6 +33,7 @@ from __future__ import annotations
 import functools
 import math
 import numbers
+import operator
 import os
 import zlib
 
@@ -51,8 +52,8 @@ from ..codecs.arrow_io import (
     list_column_flat,
     string_array_from_lens_blob,
 )
-from ..engine import _META_COLS, _block_files, _block_index, _decode_block_files
-from ..engine import local_parquet_scan_files, map_tasks
+from ..engine import _META_COLS, _block_files, _decode_block_files
+from ..engine import local_parquet_scan_files, map_tasks, part_runs
 
 BLOCKS_SCHEMA = T.StructType(
     [
@@ -461,17 +462,22 @@ def bloom_build(vals: np.ndarray) -> bytes | None:
 def bloom_might_contain(blob: bytes, value: int) -> bool:
     """True when ``value`` MAY be in the chunk (false positives possible,
     false negatives impossible)."""
-    k = blob[0]
     bitset = np.frombuffer(blob, dtype=np.uint8, offset=1)
     m_bits = len(bitset) * 8
-    u = np.array([value], dtype=np.int64).view(np.uint64)
-    h1 = int(_splitmix64(u)[0])
-    h2 = int(_splitmix64(u ^ np.uint64(0xA076_1D64_78BD_642F))[0]) | 1
-    for i in range(k):
-        idx = (h1 + i * h2) % m_bits
+    for idx in _bloom_positions(value, blob[0]):
+        idx %= m_bits
         if not (bitset[idx >> 3] >> (idx & 7)) & 1:
             return False
     return True
+
+
+def _bloom_positions(value: int, k: int) -> list[int]:
+    """The ``k`` bit positions bloom_build sets for ``value``, before the
+    modulo the bitset's size (a power of two) takes: (h1 + i*h2) mod 2^64."""
+    u = np.array([value], dtype=np.int64).view(np.uint64)
+    h1 = int(_splitmix64(u)[0])
+    h2 = int(_splitmix64(u ^ np.uint64(0xA076_1D64_78BD_642F))[0]) | 1
+    return [(h1 + i * h2) % 2**64 for i in range(k)]
 
 # bounded cache registry for roundtrip_filtered's persisted blocks.
 # More than one slot because a single driver query may lazily hold SEVERAL
@@ -1054,7 +1060,6 @@ def _decode_fn(
     col_kinds: dict[str, str],
     out_schema: T.StructType,
     prune: tuple | list[tuple] | None = None,
-    probes: dict | None = None,
 ):
     """Per-part block-rows -> decoded-rows function (the body of
     decode_df and of the pruned decodes, exposed so the fused round-trip
@@ -1062,14 +1067,10 @@ def _decode_fn(
     task).
 
     With ``prune``: page ranges first, from the page zone maps and null
-    counts.  ``probes`` maps an eq/IN value's page bound tuple (col, v, v)
-    to its Bloom probe (_bloom_probes): a chunk whose ``bloom`` cell
-    admits no probe gives that tuple no rows, so a part no predicate
-    admits returns before any payload decodes.  Then late
-    materialization — each prune tuple whose row test equals Spark's
-    filter (_row_exact) is evaluated on its column decoded over those
-    pages, and only the pages holding a selected row decode for the
-    other columns, which then take the selected rows.  Float
+    counts; then late materialization — each prune tuple whose row test
+    equals Spark's filter (_row_exact) is evaluated on its column decoded
+    over those pages, and only the pages holding a selected row decode
+    for the other columns, which then take the selected rows.  Float
     predicates and union groups with such a member stay page-granular."""
 
     # arrow image of the output schema, for the all-pages-pruned early exit
@@ -1077,7 +1078,6 @@ def _decode_fn(
     from pyspark.sql.pandas.types import to_arrow_schema
 
     empty_out = pa.Table.from_pylist([], schema=to_arrow_schema(out_schema))
-    probes = probes or {}
     prunes = (
         [] if prune is None
         else [prune] if isinstance(prune, tuple)
@@ -1092,12 +1092,6 @@ def _decode_fn(
             prow = by_col.get(pcol)
             if prow is None:
                 return None
-            probe = probes.get((pcol, lo, hi))
-            bloom = prow.get("bloom")
-            if probe is not None and bloom and not bloom_might_contain(
-                bytes(bloom), probe
-            ):
-                return []  # the chunk's Bloom filter rules the value out
             if lo is None:
                 # null-predicate page prune: hi is want_null (see
                 # _pred_keep); consults the per-page null counts
@@ -1295,15 +1289,19 @@ def decode_df_pruned(
 
 
 def _chunk_meta(
-    blocks: DataFrame, col_kinds: dict[str, str], cols
+    blocks: DataFrame, col_kinds: dict[str, str], cols, probes=None
 ) -> tuple[dict | None, pa.Table]:
-    """(the proven {file: part_ids} of file-direct blocks, else None; the
-    chunk-statistics rows (_META_COLS) of ``cols`` as one driver-side
-    Arrow table) — a pruned call's one layout proof and its plan source.
-    On file-direct blocks (engine._block_files) the rows come from the
-    cached block index and no Spark job runs; other blocks DataFrames
-    spend one Spark job, whose column filter pushes to the blocks scan.
-    No payload, bitset or page blob reaches the driver either way.
+    """(the proven layout of file-direct blocks — engine._block_files —
+    else None; the chunk-statistics rows (_META_COLS) of ``cols`` as one
+    driver-side Arrow table) — a pruned call's one layout proof and its
+    plan source.  On file-direct blocks the rows are the block index rows
+    the proof returned, and no Spark job runs; the Bloom ``probes`` are
+    tested later, in the read task (_decode_parts).  Other blocks
+    DataFrames spend one Spark job, whose column filter pushes to the
+    blocks scan, and which tests the probes there (_bloom_admits) into
+    one more column, ``bloom_ok``, so Bloom-rejected parts never enter
+    the groupBy decode.  No payload, bitset or page blob reaches the
+    driver either way.
 
     Loud-fails when a predicate column was never encoded into a
     NON-EMPTY blocks table: its keep set would otherwise be empty (an
@@ -1316,15 +1314,15 @@ def _chunk_meta(
     cols = sorted(set(cols))
     files = _block_files(blocks, _PLAN_SCHEMA)
     if files is None:
+        bloom_ok = [_bloom_admits(probes).alias("bloom_ok")] if probes else []
         meta = (
             blocks.filter(F.col("column").isin(cols))
-            .select(*_META_COLS)
+            .select(*_META_COLS, *bloom_ok)
             .toArrow()
         )
     else:
         meta = pa.concat_tables(
-            [_block_index(path)[1] for path in files],
-            promote_options="permissive",
+            [rows for _, rows in files.values()], promote_options="permissive"
         )
         names = meta.column("column")
         meta = meta.filter(pc.is_in(names, pa.array(cols, names.type)))
@@ -1335,7 +1333,7 @@ def _chunk_meta(
     ]
     if missing and (
         meta.num_rows
-        or (any(files.values()) if files is not None
+        or (any(pids for pids, _ in files.values()) if files is not None
             else not blocks.select("part_id").isEmpty())
     ):
         raise ValueError(
@@ -1449,8 +1447,9 @@ def _range_keep(
 
 def _bloom_probes(spark, col_kinds: dict[str, str], preds: list[tuple]) -> dict:
     """{(col, v, v): int64 Bloom probe} for every eq/IN value — the page
-    bound tuple of the value (_pred_keep), which _decode_fn tests against
-    each chunk's ``bloom`` cell.  Validates kinds and values before any
+    bound tuple of the value (_pred_keep), tested against each chunk's
+    ``bloom`` cell before its part's payloads are read (_chunk_meta,
+    _decode_parts).  Validates kinds and values before any
     read (SQL `IN (..., NULL)` is a common source of a bad value).  An
     int value probes as itself; a str value as the JVM's xxhash64 of it,
     the hash the encode built the filter over, from one VALUES query the
@@ -1491,13 +1490,67 @@ def _bloom_probes(spark, col_kinds: dict[str, str], preds: list[tuple]) -> dict:
     return probes
 
 
+def _bloom_admits(probes: dict):
+    """The Spark column that tests each metadata row's ``bloom`` cell
+    against the probes (_bloom_probes) of the row's column: NULL on a
+    column without probes, else True when the filter may hold any of
+    them or the chunk has no filter.  It is bloom_might_contain in native
+    expressions over one array literal of each probe's bit positions
+    (_bloom_positions, mod 2^62: every bitset is smaller), so the test
+    runs in the metadata scan, in no Python stage, its plan the same size
+    for any number of probes, and no bitset leaves the scan.  A filter
+    built with more than _BLOOM_K hashes is tested on its first
+    _BLOOM_K: a conservative superset."""
+    bloom = F.col("bloom")
+    top = (F.length(bloom) - 2).cast("long")  # bitset bytes - 1: a 2^n - 1
+    k = F.conv(F.hex(F.substring(bloom, 1, 1)), 16, 10).cast("int")
+
+    def bit_set(idx):
+        pos = (F.shiftright(idx, 3).bitwiseAND(top) + 2).cast("int")
+        byte = F.conv(F.hex(F.substring(bloom, pos, 1)), 16, 10).cast("int")
+        return F.getbit(byte, idx.bitwiseAND(7).cast("int")) == 1
+
+    by_col: dict[str, list[list[int]]] = {}
+    for (col, _, _), h in probes.items():
+        by_col.setdefault(col, []).append(
+            [p % 2**62 for p in _bloom_positions(h, _BLOOM_K)]
+        )
+    test = F
+    for col, positions in by_col.items():
+        hit = F.exists(
+            F.lit(positions), lambda p: F.forall(F.slice(p, 1, k), bit_set)
+        )
+        test = test.when(F.col("column") == col, F.coalesce(hit, F.lit(True)))
+    return test
+
+
+def _bloom_rules_out(prune: list, probes: dict, blooms: dict) -> bool:
+    """True when one part's Bloom cells (``blooms``: column -> bitset or
+    None) rule out every row ``prune`` admits (the _decode_fn prune: AND
+    across entries, OR inside a union group): some entry whose every
+    member is an eq/IN value tuple (col, v, v) the column's filter
+    excludes.  A chunk without a filter admits."""
+
+    def out(t):
+        h, bloom = probes.get(t), blooms.get(t[0])
+        return (
+            h is not None and bool(bloom)
+            and not bloom_might_contain(bytes(bloom), h)
+        )
+
+    return any(
+        all(map(out, e)) if isinstance(e, list) else out(e) for e in prune
+    )
+
+
 def _pred_keeps(
-    blocks: DataFrame, col_kinds: dict[str, str], preds: list[tuple]
+    blocks: DataFrame, col_kinds: dict[str, str], preds: list[tuple],
+    probes=None,
 ) -> tuple[dict | None, list[tuple]]:
     """(the proven block files or None — see _chunk_meta; per predicate,
     its keep part_id set and page bound tuples), planned on the driver
     from ONE metadata read."""
-    files, meta = _chunk_meta(blocks, col_kinds, [p[1] for p in preds])
+    files, meta = _chunk_meta(blocks, col_kinds, [p[1] for p in preds], probes)
     return files, [_pred_keep(col_kinds, meta, p) for p in preds]
 
 
@@ -1509,8 +1562,10 @@ def _pred_keep(col_kinds: dict[str, str], meta: pa.Table, pred: tuple) -> tuple:
     per value, [] for the vacuous empty IN); null predicates bound pages
     with the sentinel (col, None, want_null), which routes to the
     per-page null counts inside decode_df.  An eq/in keep set is the
-    parts the chunk statistics admit; the Bloom filters prune further
-    inside the decode task (_bloom_probes, _decode_fn)."""
+    parts the chunk statistics admit and, where ``meta`` has the
+    ``bloom_ok`` column (_chunk_meta off the block index), whose Bloom
+    filter may hold a probe of the column; on file-direct blocks the
+    Bloom filters prune in the read task instead (_decode_parts)."""
     op, pred_col = pred[0], pred[1]
     kind = col_kinds.get(pred_col)
     col_rows = pc.equal(meta.column("column"), pred_col)
@@ -1552,6 +1607,8 @@ def _pred_keep(col_kinds: dict[str, str], meta: pa.Table, pred: tuple) -> tuple:
                 for v in values
             ]
         stats = functools.reduce(pc.or_kleene, per_val)
+        if "bloom_ok" in meta.column_names:
+            stats = _all(stats, meta.column("bloom_ok"))
         return _parts(meta, _all(col_rows, stats)), [(pred_col, v, v) for v in values]
     if op in ("isnull", "notnull"):
         if kind is None or kind in _LIST_KINDS:
@@ -1596,9 +1653,10 @@ def decode_df_pruned_multi(
     Chunk level: the chunk statistics (_chunk_meta: the block index on
     file-direct blocks, else one metadata read) give each predicate's
     keep set on the driver; the sets combine there and only the kept
-    parts decode (_decode_parts).  Inside the decode task each eq/in
-    value's Bloom probe is tested against the chunk's filter before any
-    payload decodes (_decode_fn).
+    parts decode (_decode_parts).  Each eq/in value's Bloom probe is
+    tested against the chunk's filter before its part's payloads are
+    read: in that metadata read (_bloom_admits), or on file-direct
+    blocks as the first read of the decode task (_decode_parts).
     Page level: int/str equality rides the zone maps as the degenerate
     range [v, v], IN-lists as the UNION of their values' ranges, and
     null predicates skip pages through the per-page null counts
@@ -1612,7 +1670,7 @@ def decode_df_pruned_multi(
         raise ValueError(f"combine must be 'and' or 'or', got {combine!r}")
     preds = _normalize_preds(preds)
     probes = _bloom_probes(blocks.sparkSession, col_kinds, preds)
-    files, planned = _pred_keeps(blocks, col_kinds, preds)
+    files, planned = _pred_keeps(blocks, col_kinds, preds, probes)
     if combine == "and":
         keep = set.intersection(*(k for k, _ in planned))
         page_prunes = [
@@ -1642,12 +1700,14 @@ def decode_df_pruned_eq(
     (zone maps only help range predicates; a point lookup on a
     non-clustered column prunes nothing through min/max).
 
-    Scale shape: the driver plans from the chunk statistics alone, and
-    the Bloom membership test runs inside the decode task, on the part's
-    own ``bloom`` cell, before any payload decodes: a part the filter
-    rules out yields no rows.  So bitsets — up to ~80 KB/chunk — never
-    move to the driver at any chunk count, and no separate Python stage
-    runs for them.  Callers re-apply the exact predicate after decode
+    Scale shape: the Bloom membership test runs where the bitsets are,
+    before a part's payloads are read — on file-direct blocks as the
+    decode task's first read, of the ``bloom`` cells alone; on other
+    blocks DataFrames inside the metadata read, as native expressions
+    (_bloom_admits), so a rejected part never enters the groupBy
+    shuffle.  Bitsets — up to ~80 KB/chunk — never move to the driver
+    at any chunk count, and no separate Python stage runs for them.
+    Callers re-apply the exact predicate after decode
     (Bloom filters admit false positives, never false negatives).
 
     ``pred_col`` may be int/int96_ts (bloom over the values) or str
@@ -1854,7 +1914,7 @@ def _aggregate(decoded: DataFrame, *aggs) -> dict:
 
 
 # the blocks columns _decode_fn reads: a file-direct task reads no other
-# (plus ``bloom`` when the call has eq/IN probes)
+# (and the ``bloom`` cells first when the call has eq/IN probes)
 _DECODE_COLS = (
     "part_id", "column", "codec", "params", "payload", "n_values", "n_rows",
     "checksum", "page_stats", "page_nulls",
@@ -1878,34 +1938,54 @@ def _decode_parts(
     probes: dict | None = None,
 ) -> DataFrame:
     """Decode the chunk rows of ``parts`` (only ``column``'s when given),
-    page-pruned, Bloom-tested against ``probes`` and late-materialized by
-    ``prune`` (see _decode_fn).  File-direct when _chunk_meta proved the
-    layout (``files``): each file holding a kept part reads only those
-    parts' rows and the columns _decode_fn reads, the ``bloom`` cells
-    only when there are probes (engine._decode_block_files), with no
-    Spark scan or exchange.  Other blocks DataFrames take a pushed
-    ``part_id IN (...)`` filter and the groupBy shuffle, whose rows carry
-    every column."""
-    dec = _decode_fn(col_kinds, out_schema, prune, probes)
+    page-pruned and late-materialized by ``prune`` (see _decode_fn).
+    File-direct when _chunk_meta proved the layout (``files``): each file
+    holding a kept part reads only those parts' rows and the columns
+    _decode_fn reads (engine._decode_block_files), with no Spark scan or
+    exchange.  With Bloom ``probes`` (_bloom_probes) the task first reads
+    only the parts' ``bloom`` cells of the probed columns and drops each
+    part they rule out (_bloom_rules_out), so a file whose every part is
+    ruled out reads no payload.  Other blocks DataFrames take a pushed
+    ``part_id IN (...)`` filter and the groupBy shuffle; their Bloom test
+    ran in the metadata read (_chunk_meta)."""
     if files is None:
         # a literal IN-list that pushes to the blocks scan (no join)
         rows = blocks.filter(F.col("part_id").isin(sorted(parts)))
         if column is not None:
             rows = rows.filter(F.col("column") == column)
-        return rows.groupBy("part_id").applyInArrow(dec, schema=out_schema)
-    schema = _DECODE_SCHEMA
-    if probes:
-        schema = schema.append(_BLOCKS_ARROW.field("bloom"))
+        return decode_df(rows, None, col_kinds, out_schema, prune=prune)
+    dec = _decode_fn(col_kinds, out_schema, prune)
     names = out_schema.fieldNames()
     only_col = [] if column is None else [("column", "=", column)]
     plan = [
         (path, [("part_id", "in", kept)] + only_col)
-        for path, pids in files.items()
+        for path, (pids, _) in files.items()
         if (kept := sorted(parts.intersection(pids)))
     ]
+    narrow = None
+    if probes:
+        probed = sorted({c for c, _, _ in probes})
+
+        def narrow(path, where):
+            import pyarrow.parquet as pq
+
+            cells = pq.read_table(
+                path, columns=["part_id", "column", "bloom"],
+                filters=[*where, ("column", "in", probed)], use_threads=False,
+            )
+            out = {
+                pid for pid, rows in part_runs(cells)
+                if _bloom_rules_out(prune, probes, dict(zip(
+                    rows.column("column").to_pylist(),
+                    rows.column("bloom").to_pylist(),
+                )))
+            }
+            kept = [p for p in where[0][2] if p not in out]
+            return [("part_id", "in", kept), *where[1:]] if kept else None
+
     return _decode_block_files(
-        blocks.sparkSession, plan, schema,
-        lambda rows: dec(rows).select(names), out_schema,
+        blocks.sparkSession, plan, _DECODE_SCHEMA,
+        lambda rows: dec(rows).select(names), out_schema, narrow,
     )
 
 
