@@ -33,6 +33,7 @@ Scale design notes (targets a 1000-executor cluster; local[32] here):
 
 from __future__ import annotations
 
+import gc
 import hashlib
 import json
 import os
@@ -585,11 +586,11 @@ def local_parquet_scan_files(df: DataFrame) -> list[str] | None:
 
 
 def map_tasks(spark: SparkSession, tasks: list, run_task, schema) -> DataFrame:
-    """One Spark task per entry of ``tasks`` (past _TASKS_PER_CORE per
-    core, consecutive entries share one): ``run_task(task)`` yields each
-    entry's Arrow record batches.  The one dispatch of every file-direct
-    reader and writer (the tokens encode, decode and compaction here,
-    generic_codec's round-trip and pruned decodes).
+    """One Spark task per core at most, each running a contiguous run of
+    the entries of ``tasks``: ``run_task(task)`` yields each entry's Arrow
+    record batches.  The one dispatch of every file-direct reader and
+    writer (the tokens encode, decode and compaction here, generic_codec's
+    round-trip and pruned decodes).
 
     Dispatch is a JVM-native spark.range, whose partitions are contiguous
     id ranges; each task resolves its entries from the list shipped in the
@@ -599,25 +600,41 @@ def map_tasks(spark: SparkSession, tasks: list, run_task, schema) -> DataFrame:
     closure grows with the task count (~100 B/file) — metadata-sized up
     to ~1e6 files, the same regime every other driver-side file plan here
     assumes.  With no task the plan is limit(0), which Spark plans as an
-    empty local relation: collecting it starts no job or Python task."""
+    empty local relation: collecting it starts no job or Python task.
+
+    Every Python task has a fixed cost, and more tasks than cores buy no
+    parallelism.  After its first task a worker freezes its heap
+    (_freeze_worker_heap), which removes most of that cost."""
     tasks = list(tasks)
 
     def run(batches):
         for batch in batches:
             for i in batch.column("id").to_pylist():
                 yield from run_task(tasks[int(i)])
+        _freeze_worker_heap()
 
-    cores = spark.sparkContext.defaultParallelism
-    n = max(min(len(tasks), _TASKS_PER_CORE * cores), 1)
+    n = max(min(len(tasks), spark.sparkContext.defaultParallelism), 1)
     out = spark.range(len(tasks), numPartitions=n).mapInArrow(run, schema=schema)
     return out if tasks else out.limit(0)
 
 
-# map_tasks bundles past this many tasks per core (a Python task costs ~0.1
-# core-s to start).  On 512 one-part block files, all kept (4 vCPUs), 512
-# tasks took 14 s and 16 tasks 2.2-2.8 s, against 3.7-6 s for the groupBy
-# decode, whose scan packs the files into 16 splits.
-_TASKS_PER_CORE = 4
+_HEAP_FROZEN = False
+
+
+def _freeze_worker_heap() -> None:
+    """Move everything live in this Python worker into gc's permanent
+    generation, once per process, after its first map_tasks task (so the
+    kernels' lazy imports are in it).  pyspark's daemon runs gc.collect()
+    after every task in a reused worker, and that rescans the ~76k objects
+    pyspark, pyarrow, numpy and the engine leave behind: 0.045 CPU-s per
+    task on 4 vCPUs, against about 1 us once they are frozen.  Objects
+    later tasks create stay collectable; the frozen set is fixed here and
+    never grows."""
+    global _HEAP_FROZEN
+    if not _HEAP_FROZEN:
+        gc.collect()
+        gc.freeze()
+        _HEAP_FROZEN = True
 
 
 def part_runs(tbl):
@@ -778,7 +795,7 @@ def decode_blocks(blocks: DataFrame) -> DataFrame:
 
     File-direct when the one layout proof holds (_block_files: a bare
     local scan of tokens block files whose parts each lie in one file,
-    whatever their names): one task per file (map_tasks), the encoded
+    whatever their names): read per file in map_tasks' tasks, the encoded
     payloads never cross an exchange (measured ~2x at the 10x bench
     scale; at 100 TB the saved payload shuffle is the job).  General
     path: groups by part_id (the blocks of one partition reunite) and

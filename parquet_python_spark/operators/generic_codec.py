@@ -2270,16 +2270,15 @@ def roundtrip(
     pyarrow instead of receiving rows through Spark's scan -> Arrow IPC
     conversion — measured, that conversion (an identity mapInArrow over
     the 10x lineitem scan) costs ~12x the scan itself and dominated the
-    fused round-trip.  Task dispatch is one task per row group, bundled
-    past four per core (engine.map_tasks, shared by every file-direct
-    reader); in
-    the few-row-group regime the groups are split into ~TARGET-sized pieces
-    for parallelism (each piece re-reads its row group — bounded by
-    _FAST_SCAN_SPLIT_BYTES_CAP, and only when row groups < cores, where
-    the re-read is small by construction).  Any other input — filtered,
-    derived, cached, non-local, non-parquet, or carrying Arrow types
-    whose Spark conversion is not value-identical (timestamps, decimals)
-    — keeps the scan-fed fused path unchanged."""
+    fused round-trip.  Task dispatch is one entry per row group, run in at
+    most one Spark task per core (engine.map_tasks, shared by every
+    file-direct reader); in the few-row-group regime the groups are split
+    into ~TARGET-sized pieces for parallelism (each piece re-reads its row
+    group — bounded by _FAST_SCAN_SPLIT_BYTES_CAP, and only when row
+    groups < cores, where the re-read is small by construction).  Any
+    other input — filtered, derived, cached, non-local, non-parquet, or
+    carrying Arrow types whose Spark conversion is not value-identical
+    (timestamps, decimals) — keeps the scan-fed fused path unchanged."""
     cols = list(col_kinds)
     in_schema = df.select(*cols).schema
     out_schema = _arrow_safe_schema(in_schema, col_kinds)

@@ -480,8 +480,8 @@ def test_decode_blocks_single_layout_gate(spark, blocks_dir, monkeypatch):
     dangling sidecar, no cmp-* file) stays file-direct; a visible cmp-*
     file next to one of its sources holds parts twice and falls back with
     identical rows; a block file rewritten in place is indexed again; a
-    generic blocks directory falls back; past _TASKS_PER_CORE files per
-    core the file tasks bundle."""
+    generic blocks directory falls back; past one file per core the file
+    tasks bundle."""
     import shutil
 
     import pyarrow as pa
@@ -531,10 +531,13 @@ def test_decode_blocks_single_layout_gate(spark, blocks_dir, monkeypatch):
     assert _block_files(generic, _DECODE_SCHEMA) is None
     assert _grouped(decode_blocks(generic))
 
-    monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda sc: 1))
-    for dec in (decode_blocks_files(spark, bdir), frame()):
-        assert dec.rdd.getNumPartitions() == 4  # 8 files, 4 tasks per core
-        assert _rows(dec) == want
+    for cores in (4, 1):  # 8 files, one task per core
+        monkeypatch.setattr(
+            SparkContext, "defaultParallelism", property(lambda sc: cores)
+        )
+        for dec in (decode_blocks_files(spark, bdir), frame()):
+            assert dec.rdd.getNumPartitions() == cores
+            assert _rows(dec) == want
 
 
 def test_pruned_decode_plans_on_driver(spark, blocks_dir):

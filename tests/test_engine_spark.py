@@ -465,3 +465,35 @@ def test_decode_blocks_fast_path_percent_decodes_paths(spark, tokens_df, tmp_pat
     plan = fast._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInArrow" not in plan
     assert _as_sorted_rows(fast) == _as_sorted_rows(spark.read.parquet(inp))
+
+
+def test_map_tasks_freezes_each_worker_heap_once(spark):
+    """A worker freezes its heap after its first map_tasks task, and only
+    then: a worker that already ran one reports one fixed freeze count in
+    every later job, and the driver freezes nothing."""
+    import gc
+
+    from parquet_python_spark.engine import map_tasks
+
+    def report(_):
+        import gc
+        import os
+
+        import pyarrow as pa
+
+        yield pa.RecordBatch.from_pydict(
+            {"pid": [os.getpid()], "frozen": [gc.get_freeze_count()]}
+        )
+
+    tasks = list(range(2 * spark.sparkContext.defaultParallelism))
+    assert gc.get_freeze_count() == 0
+    ran, frozen = set(), {}
+    for _ in range(4):
+        got = map_tasks(spark, tasks, report, "pid long, frozen long").collect()
+        assert len(got) == len(tasks)
+        for pid, count in got:
+            if pid in ran:  # its first task here has ended: frozen once
+                assert count > 0 and count == frozen.setdefault(pid, count)
+        ran |= {pid for pid, _ in got}
+    assert frozen  # workers are reused across jobs
+    assert gc.get_freeze_count() == 0

@@ -2205,13 +2205,10 @@ def test_file_direct_gate_falls_back_when_parts_span_files(
     assert not grouped_c and grouped_s and not grouped_m and not grouped_o
     assert got_c and got_s == got_c and got_m == got_c and got_o == got_c
 
-    # past _TASKS_PER_CORE file tasks per core, files share a task
+    # past one file task per core, files share a task
     from pyspark import SparkContext
 
-    import parquet_python_spark.engine as engine
-
     monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda sc: 1))
-    monkeypatch.setattr(engine, "_TASKS_PER_CORE", 1)
     # both files hold a kept part: two tasks unbundled
     dec = decode_df_pruned_multi(odd_even, "k", _LM_KINDS, out_schema, preds)
     assert dec.rdd.getNumPartitions() == 1
