@@ -16,31 +16,11 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from parquet_python_spark.session import session_tmpdir
+
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-_SESSION_TMPDIRS: list[str] = []
-
-
-def _session_tmpdir(prefix: str) -> str:
-    """Temp dir that lives until process exit (cleaned by atexit), so a
-    returned lazy DataFrame can keep reading its files when the driver
-    collects later.  This replaces round-2's
-    spark.createDataFrame(df.collect(), ...) wrappers — at a larger sf the
-    driver-side materialization, not the operator, became the bottleneck."""
-    import atexit
-    import shutil
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix=prefix)
-    if not _SESSION_TMPDIRS:
-        atexit.register(
-            lambda: [shutil.rmtree(p, ignore_errors=True) for p in _SESSION_TMPDIRS]
-        )
-    _SESSION_TMPDIRS.append(d)
-    return d
 
 
 # --------------------------------------------------------------- flagship
@@ -353,7 +333,6 @@ def _rt_fixture_nation(spark, sf_dir):
             "n_regionkey": "int",
             "n_comment": "str",
         },
-        n_parts=4,
     )
 
 
@@ -403,7 +382,7 @@ def _rt_tokens_pruned(spark, sf_dir):
         encode_table_files_native,
     )
 
-    work = _session_tmpdir("pps_prune_")
+    work = session_tmpdir("pps_prune_")
     inp = f"{work}/inp"
     # clustered layout -> selective stats
     _derived_tokens(spark, sf_dir).repartitionByRange(8, "n_tok").write.parquet(inp)
@@ -428,7 +407,7 @@ def _rt_tokens_compacted(spark, sf_dir):
         list_input_files,
     )
 
-    work = _session_tmpdir("pps_cmp_")
+    work = session_tmpdir("pps_cmp_")
     inp = f"{work}/inp"
     _derived_tokens(spark, sf_dir).repartition(6).write.parquet(inp)
     bdir = f"{work}/blocks"
@@ -493,7 +472,7 @@ def _sink_roundtrips(spark, sf_dir):
     nation = _t(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
-    work = _session_tmpdir("pps_sink_")
+    work = session_tmpdir("pps_sink_")
     write_csv(nation, f"{work}/csv")
     write_jsonl(nation, f"{work}/jsonl")
     schema = "n_nationkey int, n_name string, n_regionkey int"
@@ -615,7 +594,7 @@ def _stream_rates(spark, sf_dir):
     global _STREAM_RATES_SEQ
     _STREAM_RATES_SEQ += 1
     name = f"stream_rates_{_STREAM_RATES_SEQ}"
-    work = _session_tmpdir("pps_stream_")
+    work = session_tmpdir("pps_stream_")
     inp = f"{work}/feed"
     docs = _t(spark, sf_dir, "documents")
     feed = docs.select(
@@ -658,7 +637,7 @@ def _stream_feed(spark, sf_dir, duplicate: bool = False):
     minutes, absolute-epoch timestamps so any session TZ agrees with the
     oracle).  duplicate=True unions the feed with itself — byte-identical
     twin rows — to give the streaming dedup something to drop."""
-    work = _session_tmpdir("pps_stream_")
+    work = session_tmpdir("pps_stream_")
     inp = f"{work}/feed"
     docs = _t(spark, sf_dir, "documents")
     feed = docs.select(
@@ -854,7 +833,7 @@ def _stream_encode_rt(spark, sf_dir):
     from parquet_python_spark.engine import decode_blocks_files
     from parquet_python_spark.streaming.stream_encode import start_stream_encode
 
-    work = _session_tmpdir("pps_senc_")
+    work = session_tmpdir("pps_senc_")
     inp = f"{work}/inp"
     _derived_tokens(spark, sf_dir).repartition(6).write.parquet(inp)
     out = f"{work}/enc"

@@ -15,9 +15,14 @@ exists, or compaction folded its rows into a cmp-*.parquet) and whose input
 file is unchanged; only the missing tasks encode.
 
 `--verify` runs a distributed round-trip check after encoding: decode the
-blocks table and compare row count, token count, and an order-independent
-content hash (sum of F.hash over the full row) against the input — a
-cluster-side bit-identity proxy that never collects data to the driver.
+blocks of the input's current files (engine.decode_current_blocks: the
+driver plans the parts from the block files' metadata and the tasks read
+them directly, with no shuffle) and compare row count, token count, and an
+order-independent content hash (sum of F.hash over the full row) against
+the input — a cluster-side bit-identity proxy that never collects data to
+the driver.  Like every file-direct reader here, it reads the block files
+by local path, so <output> must be visible at the same path to the driver
+and every executor.
 
 Prints one line `ENCODE_JOB_RESULT {json}` for orchestration to parse.
 """
@@ -47,11 +52,7 @@ def main() -> None:
     # SparkContext starts, both on the driver and in every python worker.
     from pyspark.sql import functions as F
 
-    from parquet_python_spark.engine import (
-        current_blocks,
-        decode_blocks,
-        encode_job,
-    )
+    from parquet_python_spark.engine import decode_current_blocks, encode_job
 
     t0 = time.perf_counter()
     stats = encode_job(
@@ -69,11 +70,12 @@ def main() -> None:
             ).collect()[0]
 
         src = content_agg(spark.read.parquet(args.input))
-        # filter to the input's current state: blocks/ accumulates history
+        # only the input's current files: blocks/ accumulates history
         # (incremental encodes, removed files), which would otherwise fail
         # the round-trip comparison spuriously
-        blocks = current_blocks(spark, args.input, args.output + "/blocks")
-        dec = content_agg(decode_blocks(blocks))
+        dec = content_agg(
+            decode_current_blocks(spark, args.input, args.output + "/blocks")
+        )
         stats["verify_ok"] = (
             src["rows"] == dec["rows"]
             and src["tokens"] == dec["tokens"]

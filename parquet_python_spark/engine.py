@@ -358,7 +358,7 @@ def _remove_stale_generations(blocks_dir: str, tasks: list[tuple]) -> set[str]:
     Task keys embed max_task_bytes-dependent row-group boundaries
     (fk vs fk.rgN); re-running encode with a different max_task_bytes
     re-encodes under new keys while the old blk-<fk>*.parquet files remain,
-    and current_blocks' file-key-prefix filter would double-count those
+    and decode_current_blocks' file-key filter would double-count those
     rows.  Driver-side (race-free: before any task runs): for every file
     key in the CURRENT plan, delete blk files whose task key is not in the
     plan.  Blocks of files no longer in the input are untouched (history).
@@ -699,13 +699,17 @@ def _block_files(blocks: DataFrame, schema: pa.Schema) -> dict | None:
     every part's rows lie in one file; else None.  The one gate of every
     file-direct read of a blocks DataFrame, proved on the driver from the
     cached _block_index whatever the writer or the file names; each file
-    is statted and looked up once, and callers plan on the rows returned.  Filtered, joined or persisted
-    blocks, the other block schema (the part_id types differ), parts that
-    span files (written after a repartition) and an interrupted
-    compaction (a visible cmp-* file next to one of its sources) take the
-    caller's groupBy decode.  No file-count cap: at 4096 and 8192 one-part
-    files (4 vCPUs) the file-direct decode_blocks and one-part pruned
-    lookup cost less CPU than the groupBy path, cold and cached."""
+    is statted and looked up once, and callers plan on the rows returned.
+    The package's own decodes pass it a bare scan of the block files they
+    wrote (roundtrip_filtered) or plan by directory without it
+    (decode_blocks_files*, decode_current_blocks).  A caller-supplied
+    blocks DataFrame that is filtered, joined, cached or repartitioned
+    (parts span files), of the other block schema (the part_id types
+    differ), or over an interrupted compaction (a visible cmp-* file
+    next to one of its sources) takes the caller's groupBy decode, its
+    only path.  No file-count cap: at 4096 and 8192 one-part files
+    (4 vCPUs) the file-direct decode_blocks and one-part pruned lookup
+    cost less CPU than the groupBy path, cold and cached."""
     files = local_parquet_scan_files(blocks)
     if files is None:
         return None
@@ -797,10 +801,11 @@ def decode_blocks(blocks: DataFrame) -> DataFrame:
     local scan of tokens block files whose parts each lie in one file,
     whatever their names): read per file in map_tasks' tasks, the encoded
     payloads never cross an exchange (measured ~2x at the 10x bench
-    scale; at 100 TB the saved payload shuffle is the job).  General
-    path: groups by part_id (the blocks of one partition reunite) and
-    decodes via _decode_part_table — works on any blocks DataFrame at the
-    cost of shuffling payloads.
+    scale; at 100 TB the saved payload shuffle is the job).  Any other
+    blocks DataFrame — cached, filtered or repartitioned by the caller;
+    no package caller passes one — groups by part_id (the blocks of one
+    partition reunite) and decodes via _decode_part_table, at the cost of
+    shuffling payloads.
     """
     files = _block_files(blocks, _DECODE_SCHEMA)
     if files is not None:
@@ -842,33 +847,48 @@ def decode_blocks_files_pruned(
     is the difference between scanning the table and scanning the
     matching slice.
     """
+    decoded = _decode_kept_parts(
+        spark, blocks_path, lambda rows, _: _zone_map_keep(rows, column, lo, hi)
+    )
+    return _pruned_residual(decoded, column, lo, hi)
+
+
+def _decode_kept_parts(spark: SparkSession, blocks_path: str, keep) -> DataFrame:
+    """Decode, per file of a blocks directory, only the parts
+    ``keep(index rows, part_ids)`` returns from the file's cached
+    _block_index; a file keeping none starts no task.  Interrupted
+    compactions are repaired first (decode_blocks_files)."""
     _repair_compaction(blocks_path, conservative=True)
     plan = []
     for path in list_input_files(blocks_path):
-        keep = _zone_map_keep(_block_index(path)[1], column, lo, hi)
-        if keep:
-            plan.append((path, [("part_id", "in", keep)]))
-    return _pruned_residual(_decode_block_files(spark, plan), column, lo, hi)
+        kept = keep(*_block_index(path)[1:])
+        if kept:
+            plan.append((path, [("part_id", "in", kept)]))
+    return _decode_block_files(spark, plan)
 
 
-def _file_key_of_part(part_id):
-    """file_key of a part_id column: f"{source}#{file_key}[.rgN]" -> file_key."""
-    return F.substring_index(F.substring_index(part_id, "#", -1), ".", 1)
+def _part_file_key(part_id: str) -> str:
+    """Input file key of a tokens part_id: f"{source}#{file_key}[.rgN]"
+    -> file_key."""
+    return part_id.rsplit("#", 1)[-1].split(".")[0]
 
 
-def current_blocks(
+def decode_current_blocks(
     spark: SparkSession, input_path: str, blocks_path: str
 ) -> DataFrame:
-    """Blocks rows belonging to the input's CURRENT file set.
+    """Shuffle-free decode of the blocks of the input's CURRENT file set.
 
     blocks/ accumulates history (incremental encodes, old snapshots of
     since-removed files); consumers that must mirror the input exactly —
-    e.g. the encode job's --verify round-trip — filter through this.
-    """
-    _repair_compaction(blocks_path, conservative=True)
-    keys = [file_key(f) for f in resolve_input_files(input_path)]
-    return spark.read.parquet(blocks_path).filter(
-        _file_key_of_part(F.col("part_id")).isin(keys)
+    e.g. the encode job's --verify round-trip — decode through this.  The
+    driver keeps, per block file, the part_ids (from its cached
+    _block_index) whose input file is current, and the tasks read only
+    those parts' rows (_decode_kept_parts, as decode_blocks_files_pruned
+    does)."""
+    keys = {file_key(f) for f in resolve_input_files(input_path)}
+    return _decode_kept_parts(
+        spark, blocks_path,
+        lambda _, pids: [p for p in pids if _part_file_key(p) in keys],
     )
 
 
@@ -910,8 +930,8 @@ def compact_blocks(
     files concatenate in order, decode_blocks_files' invariant — a part
     never spans files, its rows stay contiguous — is preserved, and the
     stat_min/stat_max zone maps ride along so pruned decode keeps working.
-    current_blocks keys on part_id VALUES, never on file names; resume
-    finds a compacted task's key inside its cmp file
+    decode_current_blocks keys on part_id VALUES, never on file names;
+    resume finds a compacted task's key inside its cmp file
     (_remove_stale_generations) and still skips it.
 
     Crash safety: each bin writes a ``.cmp-<id>.parquet.srcs.json`` sidecar
@@ -1152,12 +1172,11 @@ def encode_job(
 
     # totals over the CURRENT file set: parts encoded under earlier
     # snapshots count if their file is still in the table; parts of
-    # removed files do not (part_id = f"{source}#{file_key}[.rgN]")
+    # removed files do not (the same rule as decode_current_blocks)
     cur_keys = {file_key(f) for f in cur_files}
     current = report.filter(
         pa.array(
-            [p.rsplit("#", 1)[-1].split(".")[0] in cur_keys
-             for p in report["part_id"].to_pylist()],
+            [_part_file_key(p) in cur_keys for p in report["part_id"].to_pylist()],
             pa.bool_(),
         )
     )

@@ -54,6 +54,7 @@ from ..codecs.arrow_io import (
 )
 from ..engine import _META_COLS, _block_files, _decode_block_files
 from ..engine import local_parquet_scan_files, map_tasks, part_runs
+from ..session import session_tmpdir
 
 BLOCKS_SCHEMA = T.StructType(
     [
@@ -478,34 +479,6 @@ def _bloom_positions(value: int, k: int) -> list[int]:
     h1 = int(_splitmix64(u)[0])
     h2 = int(_splitmix64(u ^ np.uint64(0xA076_1D64_78BD_642F))[0]) | 1
     return [(h1 + i * h2) % 2**64 for i in range(k)]
-
-# bounded cache registry for roundtrip_filtered's persisted blocks.
-# More than one slot because a single driver query may lazily hold SEVERAL
-# filtered round-trips at once (rt_lineitem_pruned unions the range and eq
-# halves), and a single-slot eager unpersist would evict a sibling's blocks
-# before the union is consumed — correct only by accidental recompute, 2x
-# the work.  INVARIANT for composed queries: a lazy plan may reference at
-# most _FILTERED_BLOCKS_KEEP filtered round-trips; evicting past the bound
-# only costs recompute (results stay exact — encode_df is deterministic),
-# so the bound is headroom, not a correctness line.  Spark offers no
-# consumption callback for DataFrames, so eviction-by-recency is the
-# available policy; a persistent deployment stores blocks in a table and
-# has no cache to manage.
-_FILTERED_BLOCKS_KEEP = 6  # rt_lineitem_pruned alone unions 4 round-trips
-_filtered_blocks_cache: list = []
-
-
-def _retain_filtered_blocks(blocks) -> None:
-    """Register a persisted blocks DataFrame; evict (unpersist) the oldest
-    beyond the last _FILTERED_BLOCKS_KEEP."""
-    _filtered_blocks_cache.append(blocks)
-    while len(_filtered_blocks_cache) > _FILTERED_BLOCKS_KEEP:
-        old = _filtered_blocks_cache.pop(0)
-        try:
-            old.unpersist(blocking=False)
-        except Exception:  # noqa: BLE001 - session may already be gone
-            pass
-
 
 def _def_levels_blob(valid: np.ndarray) -> bytes:
     """Width-1 RLE/bit-packed-hybrid validity stream (reference definition
@@ -1780,7 +1753,7 @@ def roundtrip_filtered(
     combine: str = "and",
     n_parts: int | None = None,
 ) -> DataFrame:
-    """encode -> blocks -> pruned decode -> exact predicate re-apply.
+    """encode -> block files -> pruned decode -> exact predicate re-apply.
 
     ``preds`` and ``combine`` follow decode_df_pruned_multi (AND or OR of
     range / eq / in / isnull / notnull atoms).  Row-level result is exact
@@ -1788,26 +1761,24 @@ def roundtrip_filtered(
     the prune is the perf win.  The input is range-partitioned on
     ``key_col`` so the block stats are selective.
 
-    The blocks DataFrame is persisted across its two consumers (the stats
-    scan and the pruned decode) — without it the whole Arrow encode stage
-    would execute twice.  The cache is released as newer calls come in
-    (module-level bounded registry — see _retain_filtered_blocks),
-    holding the last _FILTERED_BLOCKS_KEEP encodes instead of one per
-    call.  In a persistent deployment the blocks live in a parquet/
-    Iceberg table instead and the stats filter prunes at the scan."""
-    from pyspark import StorageLevel
-
+    The blocks are written once, when this is called, as parquet files in
+    a fresh session.session_tmpdir, where they stay on the driver's local
+    disk until the driver process exits: the returned DataFrame reads
+    them whenever it is collected, however many calls came after it.
+    Every part lies in one file, so the pruned decode plans on the
+    files' cached block index and reads only the kept parts, file-direct
+    (engine._block_files), as it would over a persistent blocks table."""
     # normalize BEFORE the double read (prune + row filter): a one-shot
     # IN iterable consumed by the prune would leave the row filter empty
     preds = _normalize_preds(preds)
     in_schema = df.select(*list(col_kinds)).schema
-    blocks = encode_df(
+    path = os.path.join(session_tmpdir("pps_rtf_"), "blocks")
+    encode_df(
         df, key_col, col_kinds, n_parts, partitioning="range"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _retain_filtered_blocks(blocks)
+    ).write.parquet(path)
     decoded = decode_df_pruned_multi(
-        blocks, key_col, col_kinds, _arrow_safe_schema(in_schema, col_kinds),
-        preds, combine,
+        df.sparkSession.read.parquet(path), key_col, col_kinds,
+        _arrow_safe_schema(in_schema, col_kinds), preds, combine,
     )
     out = decoded.filter(_pred_row_expr(preds, combine))
     return out.select(
@@ -2237,7 +2208,6 @@ def roundtrip(
     df: DataFrame,
     key_col: str,
     col_kinds: dict[str, str],
-    n_parts: int | None = None,
     forced_codecs: dict[str, str] | None = None,
     page: str = "v1",
     outer: str | None = None,
@@ -2251,18 +2221,17 @@ def roundtrip(
     python worker — the encoded payloads are not serialized to the JVM,
     not shuffled, and not deserialized back.  The encode/decode kernels
     themselves are the unchanged encode_df/decode_df bodies, so output
-    rows are identical; pruning artifacts (stats/blooms/page maps) are
-    skipped because the in-worker blocks are discarded immediately —
-    nothing could ever read them (the persisted-blocks paths, encode_df
-    proper and roundtrip_filtered, still build them all).
+    rows equal the decode_df(encode_df(...)) composition; pruning
+    artifacts (stats/blooms/page maps) are skipped because the in-worker
+    blocks are discarded immediately — nothing could ever read them
+    (encode_df proper, and so roundtrip_filtered, still builds them all).
 
-    ZERO-shuffle execution (round 6, default): chunk assignment is
-    unobservable in a round-trip's output, so co-locating rows by
-    content hash (a full shuffle of the input) buys nothing — the same
-    argument as the engine's files mode.  mapInArrow over the scan
-    encodes+decodes one ~TARGET_ROWS_PER_PART chunk at a time per split.
-    A caller-pinned n_parts keeps the content-addressed groupBy path
-    (chunk layout was requested explicitly).
+    ZERO-shuffle execution (round 6): chunk assignment is unobservable in
+    a round-trip's output, so co-locating rows by content hash (a full
+    shuffle of the input) buys nothing — the same argument as the
+    engine's files mode.  mapInArrow over the scan encodes+decodes one
+    ~TARGET_ROWS_PER_PART chunk at a time per split; a caller that wants
+    a given chunk layout encodes with encode_df(n_parts=...) instead.
 
     FILE-DIRECT execution (round 6, on top of the fused path): when the
     input is a bare, unfiltered scan of local parquet files
@@ -2283,83 +2252,70 @@ def roundtrip(
     in_schema = df.select(*cols).schema
     out_schema = _arrow_safe_schema(in_schema, col_kinds)
     dec = _decode_fn(col_kinds, out_schema)
-    if n_parts is None:
-        _, enc = _encode_plan(
-            df, key_col, col_kinds, None, forced_codecs,
-            partitioning="none", page=page, outer=outer, build_stats=False,
+    _, enc = _encode_plan(
+        df, key_col, col_kinds, None, forced_codecs,
+        partitioning="none", page=page, outer=outer, build_stats=False,
+    )
+    # enc sorts each chunk by key_col, so the key must ride along even
+    # when the caller did not ask for it in the output columns
+    sel = ([key_col] if key_col not in col_kinds else []) + cols
+    fast = _bare_local_parquet_units(df, sel)
+    if fast is not None:
+        paths, units = fast
+        tasks = _file_direct_tasks(
+            units, df.sparkSession.sparkContext.defaultParallelism
         )
-        # enc sorts each chunk by key_col, so the key must ride along even
-        # when the caller did not ask for it in the output columns
-        sel = ([key_col] if key_col not in col_kinds else []) + cols
-        fast = _bare_local_parquet_units(df, sel)
-        if fast is not None:
-            paths, units = fast
-            tasks = _file_direct_tasks(
-                units, df.sparkSession.sparkContext.defaultParallelism
+
+        def rt_files(task):
+            import pyarrow.parquet as pq
+
+            fi, rg, s, ln = task
+            tbl = (
+                pq.ParquetFile(paths[fi])
+                .read_row_group(rg, columns=sel, use_threads=False)
+                .select(sel)
+                .slice(s, ln)
             )
+            off = 0
+            while off < tbl.num_rows:
+                chunk = tbl.slice(off, TARGET_ROWS_PER_PART).combine_chunks()
+                off += chunk.num_rows
+                yield from dec(enc(chunk, part_id=0)).to_batches()
 
-            def rt_files(task):
-                import pyarrow.parquet as pq
-
-                fi, rg, s, ln = task
-                tbl = (
-                    pq.ParquetFile(paths[fi])
-                    .read_row_group(rg, columns=sel, use_threads=False)
-                    .select(sel)
-                    .slice(s, ln)
-                )
-                off = 0
-                while off < tbl.num_rows:
-                    chunk = tbl.slice(off, TARGET_ROWS_PER_PART).combine_chunks()
-                    off += chunk.num_rows
-                    yield from dec(enc(chunk, part_id=0)).to_batches()
-
-            decoded = map_tasks(df.sparkSession, tasks, rt_files, out_schema)
-        else:
-            # few-split scans would serialize the whole encode on a handful
-            # of tasks; the shared conditional bump (pipeline_ops)
-            # round-robins up to the core count only when the scan supplies
-            # under a quarter of it — a no-op at real data sizes
-            from .pipeline_ops import _with_min_parallelism
-
-            df = _with_min_parallelism(df)
-
-            def enc_dec_stream(batches):
-                buf: list = []
-                nbuf = 0
-
-                def flush():
-                    nonlocal buf, nbuf
-                    if not buf:
-                        return ()
-                    tbl = pa.Table.from_batches(buf)
-                    buf, nbuf = [], 0
-                    # part_id is unobservable here: dec treats each chunk's
-                    # block rows as one partition and never keys on the id
-                    out = dec(enc(tbl, part_id=0))
-                    return out.to_batches()
-
-                for b in batches:
-                    buf.append(b)
-                    nbuf += b.num_rows
-                    if nbuf >= TARGET_ROWS_PER_PART:
-                        yield from flush()
-                yield from flush()
-
-            decoded = df.select(*sel).mapInArrow(
-                enc_dec_stream, schema=out_schema
-            )
+        decoded = map_tasks(df.sparkSession, tasks, rt_files, out_schema)
     else:
-        work, enc = _encode_plan(
-            df, key_col, col_kinds, n_parts, forced_codecs, page=page,
-            outer=outer, build_stats=False,
-        )
+        # few-split scans would serialize the whole encode on a handful
+        # of tasks; the shared conditional bump (pipeline_ops)
+        # round-robins up to the core count only when the scan supplies
+        # under a quarter of it — a no-op at real data sizes
+        from .pipeline_ops import _with_min_parallelism
 
-        def enc_dec(tbl: pa.Table) -> pa.Table:
-            return dec(enc(tbl))
+        df = _with_min_parallelism(df)
 
-        decoded = work.groupBy("part_id").applyInArrow(
-            enc_dec, schema=out_schema
+        def enc_dec_stream(batches):
+            buf: list = []
+            nbuf = 0
+
+            def flush():
+                nonlocal buf, nbuf
+                if not buf:
+                    return ()
+                tbl = pa.Table.from_batches(buf)
+                buf, nbuf = [], 0
+                # part_id is unobservable here: dec treats each chunk's
+                # block rows as one partition and never keys on the id
+                out = dec(enc(tbl, part_id=0))
+                return out.to_batches()
+
+            for b in batches:
+                buf.append(b)
+                nbuf += b.num_rows
+                if nbuf >= TARGET_ROWS_PER_PART:
+                    yield from flush()
+            yield from flush()
+
+        decoded = df.select(*sel).mapInArrow(
+            enc_dec_stream, schema=out_schema
         )
     # cast back to the exact input Spark types (e.g. int32 vs int64)
     return decoded.select(

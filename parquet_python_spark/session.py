@@ -28,6 +28,29 @@ import os
 
 from pyspark.sql import SparkSession
 
+_SESSION_TMPDIRS: list[str] = []
+
+
+def session_tmpdir(prefix: str) -> str:
+    """A fresh directory on the driver's local disk that lives until the
+    driver process exits (atexit removes it), so a lazy DataFrame
+    returned over its files can still read them whenever the caller
+    collects.  generic_codec.roundtrip_filtered writes each call's blocks
+    into one, and the blocks stay on disk until the driver exits; the
+    engine round-trips of ``__spark_entry__`` write their inputs and
+    blocks into them instead of collecting to the driver."""
+    import atexit
+    import shutil
+    import tempfile
+
+    d = tempfile.mkdtemp(prefix=prefix)
+    if not _SESSION_TMPDIRS:
+        atexit.register(
+            lambda: [shutil.rmtree(p, ignore_errors=True) for p in _SESSION_TMPDIRS]
+        )
+    _SESSION_TMPDIRS.append(d)
+    return d
+
 
 def get_spark(
     app_name: str = "parquet-python-spark",

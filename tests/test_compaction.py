@@ -147,7 +147,7 @@ def test_stale_generation_rewritten_inside_compacted(spark, tmp_path):
     is test_mixed_generation_cmp_keeps_one_generation.)"""
     import time as _time
 
-    from parquet_python_spark.engine import current_blocks, encode_job
+    from parquet_python_spark.engine import decode_current_blocks, encode_job
 
     df = generate_tokens_df(spark, N_ROWS, SEED)
     inp = str(tmp_path / "inp")
@@ -169,14 +169,11 @@ def test_stale_generation_rewritten_inside_compacted(spark, tmp_path):
     # the rewritten file's old generation is history (new file key); the
     # CURRENT view must hold exactly one generation of every row, including
     # rows that now live inside cmp files
-    from parquet_python_spark.engine import decode_blocks
-
-    cur = current_blocks(spark, inp, bdir)
-    assert _rows(decode_blocks(cur)) == _rows(df)
-    n_rows_cur = cur.filter(F.col("column") == "doc_id").agg(
-        F.sum("n_rows")
-    ).collect()[0][0]
-    assert int(n_rows_cur) == N_ROWS
+    cur = decode_current_blocks(spark, inp, bdir)
+    assert _rows(cur) == _rows(df)
+    assert cur.count() == N_ROWS
+    # read file-direct: no exchange moves a payload
+    assert "Exchange" not in cur._jdf.queryExecution().executedPlan().toString()
 
 
 def _two_file_input(spark, tmp_path):
@@ -366,7 +363,7 @@ def test_inflight_bin_stays_invisible(spark, tmp_path, monkeypatch):
     sidecar, before the rename: no Spark reader of the blocks dir lists
     either file, so every row is counted once, the current view decodes to
     the input and encode_job commits over it."""
-    from parquet_python_spark.engine import current_blocks, decode_blocks, encode_job
+    from parquet_python_spark.engine import decode_current_blocks, encode_job
 
     df = generate_tokens_df(spark, N_ROWS, SEED)
     inp = str(tmp_path / "inp")
@@ -396,7 +393,7 @@ def test_inflight_bin_stays_invisible(spark, tmp_path, monkeypatch):
     planted = inflight()
     assert len(planted) == 2  # the bin's tmp and its sidecar
     assert _visible_rows(spark, bdir) == N_ROWS
-    assert _rows(decode_blocks(current_blocks(spark, inp, bdir))) == _rows(df)
+    assert _rows(decode_current_blocks(spark, inp, bdir)) == _rows(df)
     assert encode_job(spark, inp, out)["rows"] == N_ROWS
     assert inflight() == planted  # the read path leaves in-flight state alone
 

@@ -115,11 +115,7 @@ def test_encode_job_reencodes_rewritten_file(spark, tmp_path):
     """End-to-end A1 scenario: rewrite an input file in place with
     DIFFERENT content -> the job re-encodes it and the decoded table's
     content hash matches the NEW input exactly (stale blocks would fail)."""
-    from parquet_python_spark.engine import (
-        current_blocks,
-        decode_blocks,
-        encode_job,
-    )
+    from parquet_python_spark.engine import decode_current_blocks, encode_job
     from parquet_python_spark.tokengen import write_tokens_table
 
     inp = str(tmp_path / "tokens")
@@ -151,9 +147,7 @@ def test_encode_job_reencodes_rewritten_file(spark, tmp_path):
     assert stats3["resumed_skipped"] > 0
     assert stats3["partitions"] > stats3["resumed_skipped"] - 1
     # decoded current blocks reproduce the NEW input bit-for-bit
-    dec = decode_blocks(
-        current_blocks(spark, inp, os.path.join(out, "blocks"))
-    )
+    dec = decode_current_blocks(spark, inp, os.path.join(out, "blocks"))
     assert _content_hash(spark, dec) == _content_hash(
         spark, spark.read.parquet(inp)
     )

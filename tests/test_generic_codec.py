@@ -18,6 +18,26 @@ def _sorted(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _composed(df, key_col, kinds, **encode_kw):
+    """The unfused decode_df(encode_df(...)) composition, cast back to the
+    input's Spark types like roundtrip's output."""
+    from parquet_python_spark.operators.generic_codec import (
+        _arrow_safe_schema,
+        decode_df,
+        encode_df,
+    )
+
+    in_schema = df.select(*list(kinds)).schema
+    return decode_df(
+        encode_df(df, key_col, kinds, **encode_kw),
+        key_col,
+        kinds,
+        _arrow_safe_schema(in_schema, kinds),
+    ).select(
+        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in in_schema.fields]
+    )
+
+
 def test_roundtrip_with_nulls(spark):
     """Definition-level null weave (reference __init__.py:295-317,336-338)."""
     li = _t(spark, "lineitem").select(
@@ -128,10 +148,13 @@ def test_range_partitioning_wide_key_span(spark):
     )
     pids = [r["part_id"] for r in blocks.select("part_id").distinct().collect()]
     assert all(0 <= p < 8 for p in pids)
-    rt = roundtrip(df, "k", {"k": "int", "v": "int"}, n_parts=8)
-    got = sorted((r["k"], r["v"]) for r in rt.collect())
-    exp = sorted((r["k"], r["v"]) for r in df.collect())
-    assert got == exp
+    rt = roundtrip(df, "k", {"k": "int", "v": "int"})
+    exp = _sorted(df)
+    assert _sorted(rt) == exp
+    composed = _composed(
+        df, "k", {"k": "int", "v": "int"}, n_parts=8, partitioning="range"
+    )
+    assert _sorted(composed) == exp
 
 
 def test_roundtrip_fused_single_exchange(spark):
@@ -142,12 +165,6 @@ def test_roundtrip_fused_single_exchange(spark):
     encode_df->decode_df composition bit-for-bit.  (The only exchange the
     fused plan may carry is the conditional round-robin parallelism bump
     for few-split scans — never a hash partitioning.)"""
-    from parquet_python_spark.operators.generic_codec import (
-        _arrow_safe_schema,
-        decode_df,
-        encode_df,
-    )
-
     li = _t(spark, "lineitem")
     kinds = {"l_orderkey": "int", "l_partkey": "int", "l_quantity": "float64"}
     fused = roundtrip(li, "l_orderkey", kinds)
@@ -156,22 +173,9 @@ def test_roundtrip_fused_single_exchange(spark):
     assert "MapInArrow" in plan
     assert "hashpartitioning" not in plan
 
-    pinned = roundtrip(li, "l_orderkey", kinds, n_parts=4)
-    pinned_plan = pinned._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInArrow" in pinned_plan  # pinned layout keeps groupBy
-    assert _sorted(fused.select("l_orderkey", "l_partkey")) == _sorted(
-        pinned.select("l_orderkey", "l_partkey")
-    )
-
-    in_schema = li.select(*list(kinds)).schema
-    unfused = decode_df(
-        encode_df(li, "l_orderkey", kinds),
-        "l_orderkey",
-        kinds,
-        _arrow_safe_schema(in_schema, kinds),
-    ).select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in in_schema.fields]
-    )
+    unfused = _composed(li, "l_orderkey", kinds)
+    unfused_plan = unfused._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInArrow" in unfused_plan
     assert _sorted(fused) == _sorted(unfused)
 
 
@@ -179,8 +183,8 @@ def test_roundtrip_file_direct_fast_path(spark):
     """Round-6 optimization: a bare local parquet scan round-trips via
     file-direct pyarrow reads (range dispatch, one task per row-group
     piece) — Spark's scan->Arrow conversion, which dominated the fused
-    path, is gone from the plan entirely.  Rows must equal the pinned
-    groupBy path bit-for-bit."""
+    path, is gone from the plan entirely.  Rows must equal the unfused
+    encode_df->decode_df composition bit-for-bit."""
     from parquet_python_spark.operators.generic_codec import (
         _bare_local_parquet_units,
     )
@@ -197,8 +201,8 @@ def test_roundtrip_file_direct_fast_path(spark):
     assert "Scan parquet" not in plan
     assert "Exchange" not in plan
 
-    pinned = roundtrip(li, "l_orderkey", kinds, n_parts=4)
-    assert _sorted(fast) == _sorted(pinned)
+    composed = _composed(li, "l_orderkey", kinds, n_parts=4)
+    assert _sorted(fast) == _sorted(composed)
 
 
 def test_roundtrip_file_direct_fallbacks(spark):

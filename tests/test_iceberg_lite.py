@@ -78,10 +78,10 @@ def test_snapshot_of_falls_back_to_listing_hash(spark, tmp_path):
 
 
 def test_current_blocks_mirrors_evolving_input(spark, table, tmp_path):
-    """current_blocks filters history: after appends + re-snapshots the
-    decoded current blocks must equal the current input exactly (the
+    """decode_current_blocks skips history: after appends + re-snapshots
+    the decoded current blocks must equal the current input exactly (the
     encode job's --verify correctness)."""
-    from parquet_python_spark.engine import current_blocks, decode_blocks
+    from parquet_python_spark.engine import decode_current_blocks
 
     out = str(tmp_path / "enc")
     write_snapshot(table)
@@ -90,8 +90,7 @@ def test_current_blocks_mirrors_evolving_input(spark, table, tmp_path):
     write_snapshot(table)
     encode_job(spark, table, out)
 
-    blocks = current_blocks(spark, table, os.path.join(out, "blocks"))
-    dec = decode_blocks(blocks)
+    dec = decode_current_blocks(spark, table, os.path.join(out, "blocks"))
     src = spark.read.parquet(table)
     assert dec.count() == src.count()
     import pyspark.sql.functions as SF

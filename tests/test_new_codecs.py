@@ -162,6 +162,21 @@ def test_bson_to_json_udf(spark):
 
 # ---------------------------------------------- Spark-level flba/int96 rt
 
+def _composed(df, key_col, kinds, **encode_kw):
+    """The unfused decode_df(encode_df(...)) composition, in the decoder's
+    Arrow-widened types (the rows below compare Python values)."""
+    from parquet_python_spark.operators.generic_codec import (
+        _arrow_safe_schema,
+        decode_df,
+        encode_df,
+    )
+
+    schema = _arrow_safe_schema(df.select(*list(kinds)).schema, kinds)
+    return decode_df(
+        encode_df(df, key_col, kinds, **encode_kw), key_col, kinds, schema
+    )
+
+
 def test_generic_codec_flba_int96_roundtrip(spark):
     from pyspark.sql import functions as F
 
@@ -175,17 +190,16 @@ def test_generic_codec_flba_int96_roundtrip(spark):
             (F.col("id") * 86_400_000 + 123).alias("ts_millis"),
         )
     )
-    rt = roundtrip(
-        df,
-        "id",
-        {"id": "int", "digest": "flba", "ts_millis": "int96_ts"},
-        n_parts=4,
-    )
-    got = {r["id"]: (bytes(r["digest"]), r["ts_millis"]) for r in rt.collect()}
-    exp = {
-        r["id"]: (bytes(r["digest"]), r["ts_millis"]) for r in df.collect()
-    }
-    assert got == exp
+    kinds = {"id": "int", "digest": "flba", "ts_millis": "int96_ts"}
+
+    def rows(out):
+        return {
+            r["id"]: (bytes(r["digest"]), r["ts_millis"]) for r in out.collect()
+        }
+
+    exp = rows(df)
+    assert rows(roundtrip(df, "id", kinds)) == exp
+    assert rows(_composed(df, "id", kinds, n_parts=4)) == exp
 
 
 def test_arrow_kernel_null_edges():
@@ -234,10 +248,14 @@ def test_int_list_int32_roundtrip(spark):
         ).alias("arr"),
     )
     assert isinstance(df.schema["arr"].dataType.elementType, T.IntegerType)
-    rt = roundtrip(df, "id", {"id": "int", "arr": "int_list"}, n_parts=4)
-    got = {r["id"]: list(r["arr"]) for r in rt.collect()}
-    exp = {r["id"]: list(r["arr"]) for r in df.collect()}
-    assert got == exp
+    kinds = {"id": "int", "arr": "int_list"}
+
+    def rows(out):
+        return {r["id"]: list(r["arr"]) for r in out.collect()}
+
+    exp = rows(df)
+    assert rows(roundtrip(df, "id", kinds)) == exp
+    assert rows(_composed(df, "id", kinds, n_parts=4)) == exp
 
 
 def test_flba_zero_width_and_unequal_widths():
@@ -406,10 +424,14 @@ def test_bool_generic_roundtrip_with_nulls(spark):
         .otherwise(F.col("id") % 3 == 0)
         .alias("bn"),
     )
-    rt = roundtrip(df, "id", {"id": "int", "b": "bool", "bn": "bool"}, n_parts=4)
-    got = {r["id"]: (r["b"], r["bn"]) for r in rt.collect()}
-    exp = {r["id"]: (r["b"], r["bn"]) for r in df.collect()}
-    assert got == exp
+    kinds = {"id": "int", "b": "bool", "bn": "bool"}
+
+    def rows(out):
+        return {r["id"]: (r["b"], r["bn"]) for r in out.collect()}
+
+    exp = rows(df)
+    assert rows(roundtrip(df, "id", kinds)) == exp
+    assert rows(_composed(df, "id", kinds, n_parts=4)) == exp
 
 
 # ----------------------------------------- DELTA_BINARY_PACKED (wire layout)

@@ -335,36 +335,35 @@ def test_filtered_blocks_cache_union_consumes_both(spark):
     assert got == exp
 
 
-def test_filtered_blocks_registry_evicts_oldest(spark, monkeypatch):
-    """The persisted-blocks registry is bounded: after
-    _FILTERED_BLOCKS_KEEP + 2 round-trips the two oldest blocks are
-    unpersisted and at most _FILTERED_BLOCKS_KEEP stay persisted."""
-    from pyspark import StorageLevel
+def test_filtered_results_outlive_later_calls(spark):
+    """Each roundtrip_filtered call's blocks stay on disk until the driver
+    exits: eight results (more than the six the old persisted-blocks
+    registry kept) are built before any is collected, then collected
+    newest first, and each equals a plain Spark filter.  The returned
+    plan reads the block files directly: no group-by decode, exchange or
+    cached-blocks scan."""
+    from parquet_python_spark.operators.generic_codec import roundtrip_filtered
 
-    from parquet_python_spark.operators import generic_codec as gc
-
-    registered = []
-    retain = gc._retain_filtered_blocks
-
-    def spy(blocks):
-        registered.append(blocks)
-        retain(blocks)
-
-    monkeypatch.setattr(gc, "_retain_filtered_blocks", spy)
-    kinds = {"k": "int"}
-    for i in range(gc._FILTERED_BLOCKS_KEEP + 2):
-        # a distinct input per call: equal plans would share one cache entry
-        df = spark.range(1_000 + i).select(F.col("id").alias("k"))
-        out = gc.roundtrip_filtered(df, "k", kinds, [("eq", "k", i)], n_parts=2)
-        assert [r["k"] for r in out.collect()] == [i]
-    assert len(registered) == gc._FILTERED_BLOCKS_KEEP + 2
-    for evicted in registered[:2]:
-        assert evicted.storageLevel == StorageLevel.NONE
-    persisted = [
-        b for b in registered if b.storageLevel != StorageLevel.NONE
-    ]
-    assert len(persisted) <= gc._FILTERED_BLOCKS_KEEP
-    assert len(gc._filtered_blocks_cache) <= gc._FILTERED_BLOCKS_KEEP
+    kinds = {"k": "int", "v": "int"}
+    built = []
+    for i in range(8):
+        # a distinct input per call
+        df = spark.range(2_000 + i).select(
+            F.col("id").alias("k"), (F.col("id") % 13).alias("v")
+        )
+        lo, hi = 100 * i, 100 * i + 150
+        out = roundtrip_filtered(
+            df, "k", kinds, [("range", "k", lo, hi)], n_parts=4
+        )
+        built.append((out, df.filter(F.col("k").between(lo, hi))))
+    for out, exp in reversed(built):
+        assert sorted(map(tuple, out.collect())) == sorted(
+            map(tuple, exp.collect())
+        )
+    plan = built[0][0]._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan and "Scan parquet" not in plan
+    for node in ("FlatMapGroupsInArrow", "Exchange", "InMemoryTableScan"):
+        assert node not in plan
 
 
 # -------------------------------------------- page-level (sub-chunk) zone maps

@@ -77,7 +77,6 @@ def test_nation_fixture_roundtrip(spark, fixture):
             "n_regionkey": "int",
             "n_comment": "str",
         },
-        n_parts=4,
     )
     got = sorted(
         (r["n_nationkey"], r["n_name"], r["n_regionkey"], r["n_comment"])
@@ -92,7 +91,7 @@ def test_null_int_fixture_roundtrip(spark):
     from parquet_python_spark.operators.generic_codec import roundtrip
 
     df = _load_fixture(spark, os.path.join(REF_DATA, "test-null.parquet"))
-    rt = roundtrip(df, "foo", {"foo": "int", "bar": "int"}, n_parts=2)
+    rt = roundtrip(df, "foo", {"foo": "int", "bar": "int"})
     got = sorted(
         ((r["foo"], r["bar"]) for r in rt.collect()),
         key=lambda t: (t[0], t[1] is None, t[1] or 0),
@@ -108,7 +107,7 @@ def test_converted_type_null_fixture_roundtrip(spark):
     df = _load_fixture(
         spark, os.path.join(REF_DATA, "test-converted-type-null.parquet")
     )
-    rt = roundtrip(df, "foo", {"foo": "str"}, n_parts=2)
+    rt = roundtrip(df, "foo", {"foo": "str"})
     got = sorted((r["foo"] for r in rt.collect()), key=lambda v: (v is None, v or ""))
     assert got == ["bar", None]
 
@@ -121,7 +120,7 @@ def test_null_dictionary_fixture_roundtrip(spark):
     df = _load_fixture(
         spark, os.path.join(REF_DATA, "test-null-dictionary.parquet")
     )
-    rt = roundtrip(df, "foo", {"foo": "str"}, n_parts=2, forced_codecs={"foo": "dict"})
+    rt = roundtrip(df, "foo", {"foo": "str"}, forced_codecs={"foo": "dict"})
     got = sorted((r["foo"] for r in rt.collect()), key=lambda v: (v is not None, v or ""))
     assert got == [None, "bar", "bar", "bar", "baz", "baz", "baz"]
 

@@ -23,17 +23,64 @@ def _plan(df) -> str:
     )
 
 
-def _pruned_by_part_id(p: str) -> bool:
-    """A driver-planned keep set reaches the blocks scan: a part_id entry
-    in a parquet scan's PushedFilters, or in the predicates an in-memory
-    scan prunes its cached batches with; and no join applies it."""
-    parquet = r"PushedFilters: \[[^\]]*(EqualTo|In)\(part_id"
-    in_memory = (
-        r"InMemoryTableScan\nOutput[^\n]*\n"
-        r"Arguments: [^\n]*\], \[[^\n]*part_id#\d+ (=|IN|INSET) "
-    )
-    pushed = re.search(parquet, p) or re.search(in_memory, p)
-    return bool(pushed) and "Join" not in p and "CartesianProduct" not in p
+def _recording_block_reads(build):
+    """Build a query while recording the (path, filters) plan handed to
+    every file-direct block read (engine._decode_block_files) it starts,
+    and the DataFrame each read returns: (query, [(plan, decode df)])."""
+    from parquet_python_spark import engine
+    from parquet_python_spark.operators import generic_codec
+
+    reads = []
+    real = engine._decode_block_files
+
+    def spy(spark, plan, *args, **kwargs):
+        out = real(spark, plan, *args, **kwargs)
+        reads.append((list(plan), out))
+        return out
+
+    engine._decode_block_files = generic_codec._decode_block_files = spy
+    try:
+        return build(), reads
+    finally:
+        engine._decode_block_files = generic_codec._decode_block_files = real
+
+
+def _file_direct_prune(reads, n_reads: int) -> tuple[bool, str, list]:
+    """(ok, one summary line per read, [(kept, encoded) part_id sets per
+    read]): the query started ``n_reads`` file-direct block reads; every
+    entry of each read reads through a driver-planned, non-empty
+    ``part_id in [...]`` filter; and no decode plan shuffles, joins,
+    groups or scans cached blocks."""
+    from parquet_python_spark.engine import _block_index, list_input_files
+
+    ok = len(reads) == n_reads
+    lines, parts = [], []
+    for i, (plan, df) in enumerate(reads):
+        kept: set = set()
+        for _, where in plan:
+            head = (where or [None])[0]
+            if not (head and head[:2] == ("part_id", "in") and head[2]):
+                ok = False
+                continue
+            kept.update(head[2])
+        dirs = {os.path.dirname(path) for path, _ in plan}
+        encoded = {
+            pid for d in dirs for f in list_input_files(d)
+            for pid in _block_index(f)[2]
+        }
+        parts.append((kept, encoded))
+        p = _plan(df)
+        ok = ok and bool(plan) and not any(
+            n in p for n in (
+                "Exchange", "Join", "FlatMapGroupsInArrow", "InMemoryTableScan"
+            )
+        )
+        filters = "; ".join(str(where) for _, where in plan)
+        lines.append(
+            f"block read {i}: {len(plan)} file(s), parts kept {len(kept)} "
+            f"of {len(encoded)}: {filters}"
+        )
+    return ok, "\n".join(lines), parts
 
 
 def main() -> None:
@@ -236,13 +283,19 @@ def main() -> None:
          ok, p)
     )
 
-    # 22. range + bloom point-lookup prune: the keep sets (the bitset
-    # membership test ran executor-side inside the metadata read) reach
-    # the blocks scan as a part_id filter, with no join in the plan
-    p = _plan(qs["rt_lineitem_pruned"](spark, sf_dir))
-    ok = _pruned_by_part_id(p)
+    # 22. range + bloom point-lookup prune on block files: each of the
+    # four round-trips reads only the parts the driver kept (a strict
+    # subset of those encoded) through a part_id filter on the files, and
+    # no decode shuffles, joins, groups or scans cached blocks
+    q, reads = _recording_block_reads(
+        lambda: qs["rt_lineitem_pruned"](spark, sf_dir)
+    )
+    ok, summary, parts = _file_direct_prune(reads, 4)
+    ok = ok and all(kept < encoded for kept, encoded in parts)
     checks.append(
-        ("rt_lineitem_pruned: pushed part_id prune (range + bloom eq), no join", ok, p)
+        ("rt_lineitem_pruned: file-direct part_id prune (range + bloom eq), "
+         "kept parts a strict subset, no exchange, join, group-by or cache",
+         ok, summary + "\n" + _plan(q))
     )
 
     # 23. end-to-end cluster dedup (minhash candidates -> connected
@@ -269,11 +322,14 @@ def main() -> None:
 
     # 24. null-count prune (IS NULL / IS NOT NULL chunk skipping): same
     # shape as the stats prune — the keep set planned from the chunk null
-    # counts reaches the blocks scan as a part_id filter, no join
-    p = _plan(qs["rt_documents_nulls"](spark, sf_dir))
-    ok = _pruned_by_part_id(p)
+    # counts reaches each block file read as a part_id filter
+    q, reads = _recording_block_reads(
+        lambda: qs["rt_documents_nulls"](spark, sf_dir)
+    )
+    ok, summary, _ = _file_direct_prune(reads, 2)
     checks.append(
-        ("rt_documents_nulls: pushed part_id null-count prune, no join", ok, p)
+        ("rt_documents_nulls: file-direct part_id null-count prune, no "
+         "exchange, join, group-by or cache", ok, summary + "\n" + _plan(q))
     )
 
     n_bad = 0
@@ -282,7 +338,15 @@ def main() -> None:
         if not ok:
             n_bad += 1
         out.write(f"## [{mark}] {name}\n\n```\n")
-        # keep the interesting head of the plan; full plans are enormous
+        # keep the interesting head of the plan; full plans are enormous.
+        # Spark's RDD, expression and plan ids shift with every earlier
+        # call, so the written copy names them by placeholders (the
+        # checks above match the raw plans)
+        for pat, sub in (
+            (r"RDD\[\d+\]", "RDD[N]"), (r"#\d+", "#N"),
+            (r"plan_id=\d+", "plan_id=N"),
+        ):
+            plan = re.sub(pat, sub, plan)
         lines = [l for l in plan.splitlines() if l.strip()][:40]
         out.write("\n".join(lines))
         out.write("\n```\n\n")
