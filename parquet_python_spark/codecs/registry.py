@@ -326,11 +326,13 @@ def dec_str_lens_blob(data: bytes, n: int, codec: str, params: dict):
     return lens, blob
 
 
-def _enc_str(values, codec: str) -> tuple[dict, bytes]:
+def _enc_str(values, codec: str | None) -> tuple[str, dict, bytes]:
     """String-column codecs (non-Spark kernel API).  values: sequence of
     str/bytes.  Routed through the SAME zero-copy Arrow adapters the Spark
     hot path uses (arrow_io.encode_str_column) — one pa.array conversion,
-    then buffer-level encode; no Python-level per-value loop anywhere."""
+    then buffer-level encode; no Python-level per-value loop anywhere.
+    ``codec=None`` selects there (_select_str_codec_arrow); returns the
+    codec the payload was written with."""
     import pyarrow as pa
 
     from .arrow_io import encode_str_column
@@ -345,8 +347,7 @@ def _enc_str(values, codec: str) -> tuple[dict, bytes]:
         )
     else:
         arr = pa.array(vals, type=pa.utf8())
-    c, params, payload = encode_str_column(arr, codec)
-    return params, payload
+    return encode_str_column(arr, codec)
 
 
 def _dec_str(data: bytes, n: int, codec: str, params: dict) -> list[bytes]:
@@ -374,40 +375,6 @@ def _dec_str(data: bytes, n: int, codec: str, params: dict) -> list[bytes]:
     # binary (arbitrary bytes) + large-offset promotion for >=2 GiB blobs
     arr = string_array_from_lens_blob(lens, blob, binary=True, allow_large=True)
     return arr.to_pylist()
-
-
-def select_str_codec(values) -> str:
-    """Selector for string columns: dict when low-cardinality, then
-    DELTA_BYTE_ARRAY when consecutive values share long prefixes (sorted /
-    clustered keys, URLs, paths), FSST when the byte stream shows motif
-    repetition, plain otherwise.  DBA-vs-FSST compares estimated savings:
-    dba removes ~gain of the blob outright, fsst converts ~60% of
-    duplicated pairs to 1-symbol hits."""
-    n = len(values)
-    if n == 0:
-        return "str_plain"
-    probe = values[: min(n, 8192)]
-    card = len(set(probe))
-    if card <= max(16, len(probe) // 8):
-        return "dict"
-    sub = probe[:1024]
-    blob = "".join(v if isinstance(v, str) else "" for v in sub).encode()
-    fsst_g = 0.0
-    if len(blob) > 256:
-        stream = np.frombuffer(blob, dtype=np.uint8).astype(np.int64)
-        fsst_g = fsst_gain_sample(stream)
-    from .dba import dba_gain_sample
-
-    lens = np.fromiter(
-        (len(v.encode()) if isinstance(v, str) else 0 for v in sub),
-        dtype=np.int64, count=len(sub),
-    )
-    dba_g = dba_gain_sample(lens, blob) if len(blob) else 0.0
-    if dba_g > 0.3 and dba_g >= 0.6 * fsst_g:
-        return "str_dba"
-    if fsst_g > 0.5:
-        return "str_fsst"
-    return "str_plain"
 
 
 # -------------------------------------------------- outer (page) compression
@@ -662,8 +629,7 @@ def _encode_column_inner(values, kind: str, codec: str | None, outer: str | None
             codec, params, payload = _enc_selected(vals, select_codec(stats, kind))
         return codec, params, payload, stats
     if kind == "str":
-        codec = codec or select_str_codec(values)
-        params, payload = _enc_str(values, codec)
+        codec, params, payload = _enc_str(values, codec)
         stats = {"n": len(values)}
         return codec, params, payload, stats
     if kind == "bool":

@@ -81,7 +81,7 @@ BLOCKS_SCHEMA = T.StructType(
         # per-PAGE min/max inside the chunk (Parquet ColumnIndex analog):
         # [4B <u32 page_rows][<q min,<q max per page].  Chunk-level stats
         # lose selectivity exactly as chunks grow with scale; page stats
-        # let decode skip sub-ranges of a surviving chunk
+        # keep only the pages of a surviving chunk that may match
         T.StructField("page_stats", T.BinaryType(), True),
         # TRUNCATED string bounds for str columns (Parquet ColumnIndex
         # truncation semantics): stat_min_str is a prefix of the chunk min
@@ -186,10 +186,8 @@ _NUMERIC_NP = {
 # target rows per encode partition; partition count grows with data size
 TARGET_ROWS_PER_PART = 262_144
 
-# rows per page for the sub-chunk zone maps.  A multiple of 8 keeps page
-# boundaries bit-aligned for every legal bit width, so fixed-stride codecs
-# (plain/bitpack/FOR) can decode a surviving page straight out of a payload
-# byte slice
+# rows per page for the sub-chunk zone maps; each page-stats blob records
+# the value it was written with, and the readers use that one
 PAGE_ROWS = 4096
 
 
@@ -250,10 +248,10 @@ def _page_nulls_blob(valid: np.ndarray) -> bytes | None:
     return int(PAGE_ROWS).to_bytes(4, "little") + counts.tobytes()
 
 
-def _page_keep_ranges_nulls(
+def _page_keep_nulls(
     blob: bytes, n_rows: int, want_null: bool
-) -> list[tuple[int, int]] | None:
-    """Row ranges whose pages MAY hold a matching row for IS NULL
+) -> np.ndarray | None:
+    """Per-row mask of the pages that MAY hold a matching row for IS NULL
     (pages with any null) or IS NOT NULL (pages with any present value);
     None = keep everything."""
     page_rows = int.from_bytes(blob[:4], "little")
@@ -266,23 +264,17 @@ def _page_keep_ranges_nulls(
     sizes = np.full(n_pages, page_rows, dtype=np.int64)
     sizes[-1] = n_rows - (n_pages - 1) * page_rows
     keep = counts > 0 if want_null else counts < sizes
+    return _page_rows_mask(keep, page_rows, n_rows)
+
+
+def _page_rows_mask(
+    keep: np.ndarray, page_rows: int, n_rows: int
+) -> np.ndarray | None:
+    """The per-page ``keep`` flags expanded to one flag per row; None when
+    every page is kept."""
     if keep.all():
         return None
-    return _pages_to_ranges(np.flatnonzero(keep), page_rows, n_rows)
-
-
-def _pages_to_ranges(
-    pages, page_rows: int, n_rows: int
-) -> list[tuple[int, int]]:
-    """Merged row ranges covering the ascending page indices ``pages``."""
-    ranges: list[tuple[int, int]] = []
-    for p in pages:
-        s, e = int(p) * page_rows, min(n_rows, (int(p) + 1) * page_rows)
-        if ranges and ranges[-1][1] == s:
-            ranges[-1] = (ranges[-1][0], e)
-        else:
-            ranges.append((s, e))
-    return ranges
+    return keep[np.arange(n_rows) // page_rows]
 
 
 def _str_page_stats_blob(arr: pa.Array) -> bytes | None:
@@ -319,16 +311,26 @@ def _str_page_stats_blob(arr: pa.Array) -> bytes | None:
     return bytes(out)
 
 
-def _page_keep_ranges_str(
+def _page_keep_str(
     blob: bytes, n_rows: int, lo: str, hi: str
-) -> list[tuple[int, int]] | None:
-    """String twin of _page_keep_ranges over the truncated per-page bounds
+) -> np.ndarray | None:
+    """String twin of _page_keep over the truncated per-page bounds
     (bounds are conservative, so a surviving page MAY contain matches; a
     skipped page CANNOT)."""
     head = int.from_bytes(blob[:4], "little")
     if not head & _PAGE_STATS_STR_TAG:
         raise ValueError("int page-stats blob passed to the str parser")
     page_rows = head & ~_PAGE_STATS_STR_TAG
+    if page_rows <= 0:
+        raise ValueError("str page-stats blob has no page_rows")
+
+    def take(pos: int, k: int) -> tuple[bytes, int]:
+        # str page-stats blobs are outside the payload CRC: a bound cut
+        # short must fail loudly, not compare as a shorter string
+        if pos + k > len(blob):
+            raise ValueError("str page-stats blob is truncated")
+        return blob[pos : pos + k], pos + k
+
     keep_pages: list[bool] = []
     pos = 4
     while pos < len(blob):
@@ -337,65 +339,25 @@ def _page_keep_ranges_str(
         if nlo == 0xFE:  # all-null page: no value can match a range
             keep_pages.append(False)
             continue
-        p_lo = blob[pos : pos + nlo].decode("utf-8")
-        pos += nlo
-        nhi = blob[pos]
-        pos += 1
-        if nhi == 0xFF:
-            p_hi = None
-        else:
-            p_hi = blob[pos : pos + nhi].decode("utf-8")
-            pos += nhi
-        keep_pages.append((p_hi is None or p_hi >= lo) and p_lo <= hi)
+        p_lo, pos = take(pos, nlo)
+        (nhi,), pos = take(pos, 1)
+        p_hi = None
+        if nhi != 0xFF:
+            p_hi, pos = take(pos, nhi)
+        keep_pages.append(
+            (p_hi is None or p_hi.decode("utf-8") >= lo)
+            and p_lo.decode("utf-8") <= hi
+        )
     if -(-n_rows // page_rows) != len(keep_pages):
         raise ValueError("str page-stats blob page count mismatch")
-    if all(keep_pages):
-        return None
-    return _pages_to_ranges(np.flatnonzero(keep_pages), page_rows, n_rows)
+    return _page_rows_mask(np.array(keep_pages), page_rows, n_rows)
 
 
-def _union_ranges(
-    a: list[tuple[int, int]], b: list[tuple[int, int]]
-) -> list[tuple[int, int]]:
-    """Union of two sorted disjoint row-range lists (sorted disjoint out).
-    Used for IN-list page pruning: a page survives if ANY probe value's
-    range admits it."""
-    out: list[tuple[int, int]] = []
-    for s, e in sorted(a + b):
-        if out and s <= out[-1][1]:
-            out[-1] = (out[-1][0], max(out[-1][1], e))
-        else:
-            out.append((s, e))
-    return out
-
-
-def _intersect_ranges(
-    a: list[tuple[int, int]] | None, b: list[tuple[int, int]] | None
-) -> list[tuple[int, int]] | None:
-    """Intersection of two sorted disjoint row-range lists; None is the
-    'keep everything' identity.  [] means nothing survives."""
-    if a is None:
-        return b
-    if b is None:
-        return a
-    out: list[tuple[int, int]] = []
-    i = j = 0
-    while i < len(a) and j < len(b):
-        s, e = max(a[i][0], b[j][0]), min(a[i][1], b[j][1])
-        if s < e:
-            out.append((s, e))
-        if a[i][1] < b[j][1]:
-            i += 1
-        else:
-            j += 1
-    return out
-
-
-def _page_keep_ranges(
+def _page_keep(
     blob: bytes, n_rows: int, lo: int, hi: int
-) -> list[tuple[int, int]] | None:
-    """Row ranges whose pages MAY intersect [lo, hi] (merged-contiguous);
-    None means 'keep everything' (no stats or every page survives)."""
+) -> np.ndarray | None:
+    """Per-row mask of the pages that MAY intersect [lo, hi]; None means
+    'keep everything' (every page survives)."""
     page_rows = int.from_bytes(blob[:4], "little")
     if page_rows & _PAGE_STATS_STR_TAG:
         raise ValueError("str page-stats blob passed to the int parser")
@@ -405,9 +367,7 @@ def _page_keep_ranges(
         # must fail loudly, not silently treat missing pages as skippable
         raise ValueError("page-stats blob page count mismatch")
     keep = (stats[:, 1] >= lo) & (stats[:, 0] <= hi)
-    if keep.all():
-        return None
-    return _pages_to_ranges(np.flatnonzero(keep), page_rows, n_rows)
+    return _page_rows_mask(keep, page_rows, n_rows)
 
 # ------------------------------------------------------- bloom filters
 # Double-hashing Bloom filter over a chunk's DISTINCT int values: h_i =
@@ -946,64 +906,6 @@ def _encode_plan(
     return work, enc
 
 
-_FIXED_STRIDE_BYTES = {"plain32": 4, "plain64": 8, "plain_f32": 4, "plain_f64": 8}
-
-
-def _slice_ranges(arr: pa.Array, ranges: list[tuple[int, int]] | None) -> pa.Array:
-    if ranges is None:
-        return arr
-    if not ranges:
-        return arr.slice(0, 0)
-    if len(ranges) == 1:
-        s, e = ranges[0]
-        return arr.slice(s, e - s)
-    return pa.concat_arrays(
-        [arr.slice(s, e - s) for s, e in ranges]
-    )
-
-
-def _decode_values_ranges(
-    payload: bytes, n_rows: int, n_values: int, codec: str, params_json: str,
-    kind: str, ranges: list[tuple[int, int]] | None,
-):
-    """Payload-slice fast path for the page-pruned decode: decode ONLY the
-    byte sub-ranges covering surviving pages instead of the whole chunk.
-    Eligible when every value has a fixed bit stride (plain / bitpack /
-    FOR — page boundaries are byte-aligned because PAGE_ROWS is a multiple
-    of 8) and value offsets equal row offsets (no nulls, no page/outer
-    framing).  Float chunks on an integer route (int_f64 / int_f32) are
-    not eligible.  Returns None when ineligible (caller decodes fully and
-    row-slices)."""
-    if not ranges or n_values != n_rows:
-        return None
-    params = params_from_json(params_json)
-    if any(
-        k in params for k in ("__nulls__", "__page__", "__pouter__", "outer")
-    ):
-        return None
-    pieces = []
-    if codec in _FIXED_STRIDE_BYTES:
-        sz = _FIXED_STRIDE_BYTES[codec]
-        for s, e in ranges:
-            pieces.append(
-                decode_column(codec, payload[s * sz : e * sz], e - s, params, kind)
-            )
-    elif codec in ("bitpack", "for") and kind == "int":
-        w = int(params["width"])
-        for s, e in ranges:
-            if (s * w) % 8:  # unreachable at PAGE_ROWS%8==0; belt-and-braces
-                return None
-            off = s * w // 8
-            end = off + -(-((e - s) * w) // 8)
-            pieces.append(
-                decode_column(codec, payload[off:end], e - s, params, kind)
-            )
-    else:
-        return None
-    out = np.concatenate([np.asarray(p) for p in pieces])
-    return pa.array(out)
-
-
 def decode_df(
     blocks: DataFrame,
     key_col: str,
@@ -1015,16 +917,15 @@ def decode_df(
 
     ``prune=(pred_col, lo, hi)`` — or a LIST of such tuples for a
     conjunction — consults each pred_col's per-page zone maps
-    (page_stats) and decodes only the row sub-ranges whose pages may
-    intersect every [lo, hi] (range intersection across predicates) —
+    (page_stats) and keeps only the rows of pages that may intersect
+    every [lo, hi]; a part where no page survives decodes nothing —
     the intra-chunk skip that keeps pruning selective as chunks grow
-    with scale.  Inside the surviving pages the predicates are then
-    evaluated row by row where that equals Spark's filter (int/str
-    bounds, null tests; see _decode_fn), and only the matching rows
-    materialize.  Output is a SUPERSET of the matching rows — exact for
-    int/str/null predicates, page-granular for float ones (callers
-    re-apply the exact predicate); columns stay row-aligned because
-    every column slices to the same ranges and takes the same rows."""
+    with scale.  The predicates are then evaluated row by row where that
+    equals Spark's filter (int/str bounds, null tests; see _decode_fn),
+    and only the matching rows are returned.  Output is a SUPERSET of
+    the matching rows — exact for int/str/null predicates, page-granular
+    for float ones (callers re-apply the exact predicate); columns stay
+    row-aligned because every column takes the same rows."""
     dec = _decode_fn(col_kinds, out_schema, prune)
     return blocks.groupBy("part_id").applyInArrow(dec, schema=out_schema)
 
@@ -1039,29 +940,34 @@ def _decode_fn(
     can chain it directly onto the encode function inside one Python
     task).
 
-    With ``prune``: page ranges first, from the page zone maps and null
-    counts; then late materialization — each prune tuple whose row test
-    equals Spark's filter (_row_exact) is evaluated on its column decoded
-    over those pages, and only the pages holding a selected row decode
-    for the other columns, which then take the selected rows.  Float
-    predicates and union groups with such a member stay page-granular."""
+    With ``prune``, one boolean row mask selects the output.  It starts
+    from the page zone maps and null counts (AND across entries, OR
+    inside a union group); a part whose mask is all false returns before
+    any payload decodes.  Then late materialization: each entry whose
+    row test equals Spark's filter (_row_exact) is evaluated on its
+    decoded column and ANDed in.  Float predicates and union groups with
+    such a member stay page-granular.  Every output column decodes whole
+    and takes the mask's rows."""
 
     # arrow image of the output schema, for the all-pages-pruned early exit
     # (a zero-row table without touching any payload)
     from pyspark.sql.pandas.types import to_arrow_schema
 
     empty_out = pa.Table.from_pylist([], schema=to_arrow_schema(out_schema))
-    prunes = (
-        [] if prune is None
-        else [prune] if isinstance(prune, tuple)
-        else list(prune)
-    )
+    if prune is None:
+        prune = []
+    elif isinstance(prune, tuple):
+        prune = [prune]
+    # every entry as a group of tuples, ORed: a bare tuple is a group of one
+    prunes = [e if isinstance(e, list) else [e] for e in prune]
 
     def dec(tbl: pa.Table) -> pa.Table:
         by_col = {r["column"]: r for r in tbl.to_pylist()}
         n_rows = int(next(iter(by_col.values()))["n_rows"])
 
-        def one_range(pcol, lo, hi):
+        def page_keep(pcol, lo, hi) -> np.ndarray | None:
+            """Rows of the pages of ``pcol`` that may satisfy one prune
+            tuple; None = keep all."""
             prow = by_col.get(pcol)
             if prow is None:
                 return None
@@ -1071,105 +977,71 @@ def _decode_fn(
                 pnb = prow.get("page_nulls")
                 if not pnb:
                     return None
-                return _page_keep_ranges_nulls(bytes(pnb), n_rows, bool(hi))
+                return _page_keep_nulls(bytes(pnb), n_rows, bool(hi))
             pstats = prow.get("page_stats")
             if not pstats:
                 return None  # no page info: keep everything
-            keep_fn = (
-                _page_keep_ranges_str
-                if isinstance(lo, str)
-                else _page_keep_ranges
-            )
+            keep_fn = _page_keep_str if isinstance(lo, str) else _page_keep
             return keep_fn(bytes(pstats), n_rows, lo, hi)
 
-        ranges: list[tuple[int, int]] | None = None
-        for entry in prunes:
-            if isinstance(entry, list):
-                # union group (IN-list): a page survives if ANY member
-                # range admits it; a member without page info keeps all
-                acc: list[tuple[int, int]] | None = []
-                for pcol, lo, hi in entry:
-                    r = one_range(pcol, lo, hi)
-                    if r is None:
-                        acc = None
-                        break
-                    acc = _union_ranges(acc, r)
-                ranges = _intersect_ranges(ranges, acc)
+        def chunk_arr(column, kind) -> pa.Array:
+            row = by_col[column]
+            payload = bytes(row["payload"])
+            if zlib.crc32(payload) != int(row["checksum"]):
+                raise ValueError(f"checksum mismatch in {column}")
+            return _decode_values(
+                payload, n_rows, int(row["n_values"]), row["codec"],
+                row["params"], kind,
+            )
+
+        mask = None  # None = every row
+        for group in prunes:
+            # a union group (IN-list, OR) keeps a page if ANY member
+            # admits it; a member without page info keeps all
+            m = np.zeros(n_rows, dtype=bool)
+            for t in group:
+                k = page_keep(*t)
+                if k is None:
+                    break
+                m |= k
             else:
-                ranges = _intersect_ranges(ranges, one_range(*entry))
-            if ranges == []:
-                break
-        if ranges == []:
+                mask = m if mask is None else mask & m
+        if mask is not None and not mask.any():
             # chunk-level stats passed but EVERY page misses the predicate
             # (bounds straddle a gap between pages): nothing to decode —
             # skipping the whole part here is where page stats win most
             return empty_out
 
-        def chunk_arr(column, kind, rr) -> pa.Array:
-            """``column`` decoded over the row ranges ``rr`` (None = all)."""
-            row = by_col[column]
-            payload = bytes(row["payload"])
-            if zlib.crc32(payload) != int(row["checksum"]):
-                raise ValueError(f"checksum mismatch in {column}")
-            if rr is not None:
-                fast = _decode_values_ranges(
-                    payload, n_rows, int(row["n_values"]), row["codec"],
-                    row["params"], kind, rr,
-                )
-                if fast is not None:
-                    return fast
-            arr = _decode_values(
-                payload, n_rows, int(row["n_values"]), row["codec"],
-                row["params"], kind,
-            )
-            return _slice_ranges(arr, rr)
-
-        # late materialization: decode the predicate columns over the
-        # surviving pages and evaluate each prune tuple row by row (AND
+        # late materialization: evaluate each prune entry row by row (AND
         # across entries, OR inside a union group) wherever that equals
-        # Spark's filter; the other columns then decode only the pages
-        # holding a selected row, and every column takes just those rows
+        # Spark's filter
         pred_arrs: dict[str, pa.Array] = {}
-        mask = None
-        for entry in prunes:
-            group = entry if isinstance(entry, list) else [entry]
+        for group in prunes:
             if not group or not all(
                 t[0] in by_col and _row_exact(col_kinds.get(t[0]), t[1], t[2])
                 for t in group
             ):
                 continue  # this entry keeps page granularity
-            m = None
+            m = np.zeros(n_rows, dtype=bool)
             for pcol, lo, hi in group:
                 if pcol not in pred_arrs:
-                    pred_arrs[pcol] = chunk_arr(pcol, col_kinds[pcol], ranges)
-                mm = _row_mask(pred_arrs[pcol], lo, hi)
-                m = mm if m is None else m | mm
+                    pred_arrs[pcol] = chunk_arr(pcol, col_kinds[pcol])
+                m |= _row_mask(pred_arrs[pcol], lo, hi)
             mask = m if mask is None else mask & m
-        out_ranges = ranges
-        if mask is not None:
-            base = ranges if ranges is not None else [(0, n_rows)]
-            rows = np.concatenate([np.arange(s, e) for s, e in base])[mask]
-            if not len(rows):
-                return empty_out
-            out_ranges = _pages_to_ranges(
-                np.unique(rows // PAGE_ROWS), PAGE_ROWS, n_rows
-            )
-            take_pred = pa.array(np.flatnonzero(mask))
-            take_out = pa.array(_range_positions(out_ranges, rows))
+        rows = None if mask is None else pa.array(np.flatnonzero(mask))
+        if rows is not None and not len(rows):
+            return empty_out
 
         out_arrays = []
         for col, kind in col_kinds.items():
-            if col in pred_arrs:  # decoded over `ranges`; mask is set
-                out_arrays.append(pred_arrs[col].take(take_pred))
-                continue
-            if kind in _LIST_KINDS:
-                elem_kind = _LIST_KINDS[kind]
-                # lists: lens and flat values must stay consistent, so the
-                # page slice applies to the ASSEMBLED list array (zero-copy
-                # offset views), not to the two chunks independently
-                lens = chunk_arr(col + ".lens", "int", None)
+            if col in pred_arrs:
+                arr = pred_arrs[col]
+            elif kind in _LIST_KINDS:
+                # lens and flat values assemble into one list array before
+                # any row is taken, so they stay consistent
+                lens = chunk_arr(col + ".lens", "int")
                 lens = lens.to_numpy(zero_copy_only=False)
-                flat = chunk_arr(col + ".vals", elem_kind, None)
+                flat = chunk_arr(col + ".vals", _LIST_KINDS[kind])
                 offsets = np.zeros(n_rows + 1, dtype=np.int64)
                 np.cumsum(lens, out=offsets[1:])
                 if offsets[-1] >= 2**31:
@@ -1180,10 +1052,9 @@ def _decode_fn(
                 arr = pa.ListArray.from_arrays(
                     pa.array(offsets.astype(np.int32), type=pa.int32()), flat
                 )
-                arr = _slice_ranges(arr, out_ranges)
             else:
-                arr = chunk_arr(col, kind, out_ranges)
-            out_arrays.append(arr if mask is None else arr.take(take_out))
+                arr = chunk_arr(col, kind)
+            out_arrays.append(arr if rows is None else arr.take(rows))
         return pa.Table.from_arrays(out_arrays, names=list(col_kinds))
 
     return dec
@@ -1216,16 +1087,6 @@ def _row_mask(arr: pa.Array, lo, hi) -> np.ndarray:
     else:
         m = pc.and_kleene(pc.greater_equal(arr, lo), pc.less_equal(arr, hi))
     return pc.fill_null(m, False).to_numpy(zero_copy_only=False)
-
-
-def _range_positions(ranges: list[tuple[int, int]], rows: np.ndarray) -> np.ndarray:
-    """Positions of the absolute ``rows`` (each inside one of the sorted,
-    disjoint ``ranges``) in the concatenation of those ranges."""
-    starts = np.array([s for s, _ in ranges], dtype=np.int64)
-    lens = np.array([e - s for s, e in ranges], dtype=np.int64)
-    offs = np.cumsum(lens) - lens
-    k = np.searchsorted(starts, rows, side="right") - 1
-    return offs[k] + rows - starts[k]
 
 
 def decode_df_pruned(
@@ -1610,14 +1471,15 @@ def decode_df_pruned_multi(
     combine: str = "and",
 ) -> DataFrame:
     """Multi-predicate pruning.  ``combine="and"``: a partition decodes
-    only when EVERY predicate admits it, and surviving chunks decode only
-    the INTERSECTION of each predicate's page row ranges — selectivities
-    multiply, which is exactly what makes pruning pay at 100x scale.
-    ``combine="or"``: a partition decodes when ANY predicate admits it,
-    and surviving chunks decode the UNION of every predicate's page row
-    ranges (one union group); null members contribute their per-page
-    null-count bounds to the same union, so a chunk admitted only by an
-    IS NULL member still page-skips its null-free pages.  Together:
+    only when EVERY predicate admits it, and surviving chunks keep only
+    the rows of pages that EVERY predicate's page stats admit (the row
+    masks AND) — selectivities multiply, which is exactly what makes
+    pruning pay at 100x scale.  ``combine="or"``: a partition decodes
+    when ANY predicate admits it, and surviving chunks keep the pages
+    ANY predicate admits (one union group, the masks OR); null members
+    contribute their per-page null-count bounds to the same union, so a
+    chunk admitted only by an IS NULL member still skips its null-free
+    pages.  Together:
     arbitrary AND-of-atoms and OR-of-atoms prunes (compose row-side for
     deeper nesting).
 
@@ -1634,8 +1496,8 @@ def decode_df_pruned_multi(
     range [v, v], IN-lists as the UNION of their values' ranges, and
     null predicates skip pages through the per-page null counts
     (null-free pages for IS NULL, all-null pages for IS NOT NULL).
-    Row level: inside surviving pages the same atoms are evaluated row by
-    row (late materialization, see _decode_fn).  Output is a SUPERSET of
+    Row level: the same atoms are evaluated row by row on their decoded
+    columns (late materialization, see _decode_fn).  Output is a SUPERSET of
     matching rows — exact unless a float predicate is involved; callers
     re-apply the exact row predicate, same contract as every other pruned
     decode."""
@@ -1751,7 +1613,6 @@ def roundtrip_filtered(
     col_kinds: dict[str, str],
     preds: list[tuple],
     combine: str = "and",
-    n_parts: int | None = None,
 ) -> DataFrame:
     """encode -> block files -> pruned decode -> exact predicate re-apply.
 
@@ -1773,9 +1634,7 @@ def roundtrip_filtered(
     preds = _normalize_preds(preds)
     in_schema = df.select(*list(col_kinds)).schema
     path = os.path.join(session_tmpdir("pps_rtf_"), "blocks")
-    encode_df(
-        df, key_col, col_kinds, n_parts, partitioning="range"
-    ).write.parquet(path)
+    encode_df(df, key_col, col_kinds, partitioning="range").write.parquet(path)
     decoded = decode_df_pruned_multi(
         df.sparkSession.read.parquet(path), key_col, col_kinds,
         _arrow_safe_schema(in_schema, col_kinds), preds, combine,

@@ -162,16 +162,18 @@ def test_str_dba_registry_roundtrip():
 
 
 def test_selector_picks_dba_on_prefix_heavy_not_on_random():
-    from parquet_python_spark.codecs.registry import select_str_codec
+    import pyarrow as pa
+
+    from parquet_python_spark.codecs.arrow_io import _select_str_codec_arrow
 
     urls = sorted(
         f"https://example.com/docs/{i // 100:03d}/page-{i:06d}.html"
         for i in range(4000)
     )
-    assert select_str_codec(urls) == "str_dba"
+    assert _select_str_codec_arrow(pa.array(urls)) == "str_dba"
     rng = np.random.default_rng(3)
     rand = ["".join(chr(int(c)) for c in rng.integers(33, 120, 30)) for _ in range(2000)]
-    assert select_str_codec(rand) != "str_dba"
+    assert _select_str_codec_arrow(pa.array(rand)) != "str_dba"
 
 
 def test_arrow_selector_picks_dba_and_roundtrips():

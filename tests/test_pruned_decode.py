@@ -21,6 +21,17 @@ def keyed_df(spark):
     )
 
 
+def _same_rows(mask, ranges, n: int) -> bool:
+    """True when a page parser's per-row mask keeps exactly the rows of
+    the ``(start, end)`` row ranges."""
+    import numpy as np
+
+    want = np.zeros(n, dtype=bool)
+    for s, e in ranges:
+        want[s:e] = True
+    return mask is not None and np.array_equal(mask, want)
+
+
 def test_blocks_carry_minmax_stats(spark, keyed_df):
     from parquet_python_spark.operators.generic_codec import encode_df
 
@@ -90,7 +101,7 @@ def test_roundtrip_filtered_end_to_end(spark, keyed_df):
 
     out = roundtrip_filtered(
         keyed_df, "k", {"k": "int", "v": "int", "s": "str"},
-        [("range", "k", 100, 250)], n_parts=16,
+        [("range", "k", 100, 250)],
     )
     got = sorted((r["k"], r["v"], r["s"]) for r in out.collect())
     exp = sorted(
@@ -107,8 +118,7 @@ def test_pruned_decode_rejects_non_numeric_pred(spark, keyed_df):
 
     with pytest.raises(ValueError, match="str bounds"):
         roundtrip_filtered(
-            keyed_df, "k", {"k": "int", "s": "str"}, [("range", "s", 0, 10)],
-            n_parts=4,
+            keyed_df, "k", {"k": "int", "s": "str"}, [("range", "s", 0, 10)]
         ).collect()
 
 
@@ -166,7 +176,7 @@ def test_bloom_pruned_equality_roundtrip(spark):
     value = int(li.select("l_orderkey").first()["l_orderkey"])
 
     got = roundtrip_filtered(
-        li, "l_orderkey", kinds, [("eq", "l_orderkey", value)], n_parts=8
+        li, "l_orderkey", kinds, [("eq", "l_orderkey", value)]
     )
     exp = li.select(*kinds).filter(F.col("l_orderkey") == value)
     a = sorted(tuple(r) for r in got.collect())
@@ -319,12 +329,8 @@ def test_filtered_blocks_cache_union_consumes_both(spark):
         F.col("id").alias("k"), (F.col("id") % 700).alias("v")
     )
     kinds = {"k": "int", "v": "int"}
-    rng_half = roundtrip_filtered(
-        df, "k", kinds, [("range", "k", 100, 200)], n_parts=8
-    )
-    eq_half = roundtrip_filtered(
-        df, "k", kinds, [("eq", "k", 15_000)], n_parts=8
-    )
+    rng_half = roundtrip_filtered(df, "k", kinds, [("range", "k", 100, 200)])
+    eq_half = roundtrip_filtered(df, "k", kinds, [("eq", "k", 15_000)])
     got = sorted(tuple(r) for r in rng_half.unionAll(eq_half).collect())
     exp = sorted(
         tuple(r)
@@ -352,9 +358,7 @@ def test_filtered_results_outlive_later_calls(spark):
             F.col("id").alias("k"), (F.col("id") % 13).alias("v")
         )
         lo, hi = 100 * i, 100 * i + 150
-        out = roundtrip_filtered(
-            df, "k", kinds, [("range", "k", lo, hi)], n_parts=4
-        )
+        out = roundtrip_filtered(df, "k", kinds, [("range", "k", lo, hi)])
         built.append((out, df.filter(F.col("k").between(lo, hi))))
     for out, exp in reversed(built):
         assert sorted(map(tuple, out.collect())) == sorted(
@@ -421,55 +425,18 @@ def test_page_stats_subrange_skip_and_exactness(spark):
     blocks.unpersist()
 
 
-def test_page_stats_fast_path_matches_full_decode():
-    """Payload-slice fast path (bitpack/FOR/plain) is value-identical to
-    decode-everything-then-slice on the same ranges."""
-    import json
-
-    import numpy as np
-    import pyarrow as pa
-
-    from parquet_python_spark.codecs.registry import decode_column, encode_column
-    from parquet_python_spark.operators.generic_codec import (
-        _decode_values_ranges,
-        _page_keep_ranges,
-        _page_stats_blob,
-    )
-
-    rng = np.random.default_rng(11)
-    n = 50_000
-    for codec in ("bitpack", "for", "plain32", "plain64"):
-        vals = np.sort(rng.integers(10, 2**20, n)).astype(
-            np.int32 if codec == "plain32" else np.int64
-        )
-        c, params, payload, _ = encode_column(vals, "int", codec=codec)
-        blob = _page_stats_blob(vals)
-        lo, hi = int(vals[n // 3]), int(vals[n // 2])
-        ranges = _page_keep_ranges(blob, n, lo, hi)
-        assert ranges, codec  # narrow predicate must skip pages
-        fast = _decode_values_ranges(
-            payload, n, n, c, json.dumps(params), "int", ranges
-        )
-        assert fast is not None, codec
-        full = np.asarray(decode_column(c, payload, n, dict(params), "int"))
-        exp = np.concatenate([full[s:e] for s, e in ranges])
-        assert (np.asarray(fast) == exp).all(), codec
-        # skipped something: fast output strictly smaller than the chunk
-        assert len(fast) < n, codec
-
-
 def test_page_stats_all_pages_survive_is_noop():
     import numpy as np
 
     from parquet_python_spark.operators.generic_codec import (
-        _page_keep_ranges,
+        _page_keep,
         _page_stats_blob,
     )
 
     vals = np.arange(10_000, dtype=np.int64)
     blob = _page_stats_blob(vals)
     # predicate covering everything -> None (decode untouched, zero overhead)
-    assert _page_keep_ranges(blob, 10_000, -5, 10**9) is None
+    assert _page_keep(blob, 10_000, -5, 10**9) is None
     # single-page chunks carry no page stats at all
     assert _page_stats_blob(np.arange(100)) is None
 
@@ -705,8 +672,7 @@ def test_float_int_routes_end_to_end(spark, tmp_path):
     two-decimal prices, plus -0.0, NaN, ±inf and nulls) encode through the
     integer routes, round-trip bit-identically, stay within the whole
     column's reference dictionary bytes, and a page-pruned price range
-    over an int_f64 chunk (which the payload-slice fast path declines, so
-    the chunk decodes fully) equals the pyarrow oracle."""
+    over a multi-page int_f64 chunk equals the pyarrow oracle."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -716,7 +682,6 @@ def test_float_int_routes_end_to_end(spark, tmp_path):
     from parquet_python_spark.operators.generic_codec import (
         PAGE_ROWS,
         _arrow_safe_schema,
-        _decode_values_ranges,
         _def_levels_blob,
         decode_df,
         decode_df_pruned,
@@ -777,15 +742,11 @@ def test_float_int_routes_end_to_end(spark, tmp_path):
 
     # one page of the price chunk holding k ~ 25 000
     lo, hi = 10_150.0, 10_160.0
-    prow = next(
-        r for r in rows
-        if r["column"] == "l_extendedprice" and r["stat_min"] is not None
+    assert any(
+        r["column"] == "l_extendedprice" and r["stat_min"] is not None
         and "e" in r["params"] and r["n_rows"] > PAGE_ROWS
+        for r in rows
     )
-    assert _decode_values_ranges(
-        prow["payload"], prow["n_rows"], prow["n_values"], prow["codec"],
-        prow["params"], "float64", [(0, PAGE_ROWS)],
-    ) is None
     dec = decode_df_pruned(
         blocks, "k", kinds, out_schema, "l_extendedprice", lo, hi
     ).toArrow()
@@ -816,9 +777,7 @@ def test_string_bloom_pruned_equality_roundtrip(spark):
     kinds = {"doc_id": "int", "text": "str", "lang": "str"}
     value = docs.select("text").first()["text"]
 
-    got = roundtrip_filtered(
-        docs, "doc_id", kinds, [("eq", "text", value)], n_parts=8
-    )
+    got = roundtrip_filtered(docs, "doc_id", kinds, [("eq", "text", value)])
     exp = docs.select(*kinds).filter(F.col("text") == value)
     a = sorted(tuple(r) for r in got.collect())
     b = sorted(tuple(r) for r in exp.collect())
@@ -953,11 +912,11 @@ def test_roundtrip_filtered_null_end_to_end(spark):
         .alias("t"),
     )
     kinds = {"k": "int", "t": "str"}
-    out = roundtrip_filtered(df, "k", kinds, [("isnull", "t")], n_parts=4)
+    out = roundtrip_filtered(df, "k", kinds, [("isnull", "t")])
     got = sorted(r["k"] for r in out.collect())
     exp = sorted(r["k"] for r in df.filter(F.col("t").isNull()).collect())
     assert got == exp
-    out2 = roundtrip_filtered(df, "k", kinds, [("notnull", "t")], n_parts=4)
+    out2 = roundtrip_filtered(df, "k", kinds, [("notnull", "t")])
     got2 = sorted((r["k"], r["t"]) for r in out2.collect())
     exp2 = sorted(
         (r["k"], r["t"]) for r in df.filter(F.col("t").isNotNull()).collect()
@@ -977,8 +936,8 @@ def test_str_page_stats_blob_semantics():
     from parquet_python_spark.operators.generic_codec import (
         PAGE_ROWS,
         STR_STAT_CHARS,
-        _page_keep_ranges,
-        _page_keep_ranges_str,
+        _page_keep,
+        _page_keep_str,
         _str_page_stats_blob,
     )
 
@@ -991,23 +950,63 @@ def test_str_page_stats_blob_semantics():
     assert _str_page_stats_blob(pa.array(vals[:100])) is None
     # narrow range inside page 1 -> exactly that page survives
     lo, hi = f"k{PAGE_ROWS + 10:08d}", f"k{PAGE_ROWS + 20:08d}"
-    assert _page_keep_ranges_str(blob, n, lo, hi) == [(PAGE_ROWS, 2 * PAGE_ROWS)]
+    assert _same_rows(
+        _page_keep_str(blob, n, lo, hi), [(PAGE_ROWS, 2 * PAGE_ROWS)], n
+    )
     # range covering everything -> None (no-op)
-    assert _page_keep_ranges_str(blob, n, "k", "l") is None
+    assert _page_keep_str(blob, n, "k", "l") is None
     # unbounded upper: a page whose truncated max can't increment keeps
     # every probe above its lower bound
     big = chr(0x10FFFF) * (STR_STAT_CHARS + 4)
     vals2 = [f"a{i:08d}" for i in range(PAGE_ROWS)] + [big] * PAGE_ROWS
     blob2 = _str_page_stats_blob(pa.array(vals2))
-    r = _page_keep_ranges_str(blob2, 2 * PAGE_ROWS, big, big + "x")
-    assert r == [(PAGE_ROWS, 2 * PAGE_ROWS)]
+    r = _page_keep_str(blob2, 2 * PAGE_ROWS, big, big + "x")
+    assert _same_rows(r, [(PAGE_ROWS, 2 * PAGE_ROWS)], 2 * PAGE_ROWS)
     # tag mismatch fails loudly in both directions
     with pytest.raises(ValueError, match="str parser"):
-        _page_keep_ranges_str(
+        _page_keep_str(
             int(PAGE_ROWS).to_bytes(4, "little") + b"\0" * 16, n, "a", "b"
         )
     with pytest.raises(ValueError, match="int parser"):
-        _page_keep_ranges(blob, n, 0, 10)
+        _page_keep(blob, n, 0, 10)
+
+
+def test_page_stats_blobs_corrupt_raise():
+    """Page-stats and page-null blobs sit outside the payload CRC: a
+    truncated blob or one whose header says zero rows per page fails
+    loudly in every parser instead of dropping pages."""
+    import numpy as np
+    import pyarrow as pa
+
+    from parquet_python_spark.operators.generic_codec import (
+        PAGE_ROWS,
+        _page_keep,
+        _page_keep_nulls,
+        _page_keep_str,
+        _page_nulls_blob,
+        _page_stats_blob,
+        _str_page_stats_blob,
+    )
+
+    n = 3 * PAGE_ROWS
+    int_blob = _page_stats_blob(np.arange(n))
+    str_blob = _str_page_stats_blob(pa.array([f"v{i:06d}" for i in range(n)]))
+    null_blob = _page_nulls_blob(np.arange(n) % 3 > 0)
+    probe = f"v{n - 1:06d}"  # a value of the last page
+    parsers = [
+        (int_blob, lambda b: _page_keep(b, n, 5000, 5000)),
+        (str_blob, lambda b: _page_keep_str(b, n, probe, probe)),
+        (null_blob, lambda b: _page_keep_nulls(b, n, True)),
+    ]
+    for blob, parse in parsers:
+        parse(blob)  # intact blobs parse
+        for cut in (1, 3, 8):
+            with pytest.raises(ValueError):
+                parse(blob[:-cut])
+        # the header with its page_rows cleared (a str blob keeps its tag)
+        head = int.from_bytes(blob[:4], "little") & ~PAGE_ROWS
+        with pytest.raises(ValueError):
+            parse(head.to_bytes(4, "little") + blob[4:])
 
 
 def test_string_page_stats_prune_and_exact(spark):
@@ -1270,20 +1269,6 @@ def test_in_list_prune_union_and_exact(spark):
     blocks.unpersist()
 
 
-def test_union_ranges_kernel():
-    from parquet_python_spark.operators.generic_codec import (
-        _intersect_ranges,
-        _union_ranges,
-    )
-
-    assert _union_ranges([(0, 5)], [(5, 10)]) == [(0, 10)]  # adjacent merge
-    assert _union_ranges([(0, 3), (8, 10)], [(2, 4)]) == [(0, 4), (8, 10)]
-    assert _union_ranges([], [(1, 2)]) == [(1, 2)]
-    assert _intersect_ranges([(0, 10)], [(5, 15)]) == [(5, 10)]
-    assert _intersect_ranges(None, [(1, 2)]) == [(1, 2)]
-    assert _intersect_ranges([(0, 2)], [(5, 6)]) == []
-
-
 def test_persisted_blocks_prune_pushes_to_scan(spark, tmp_path, monkeypatch):
     """The deployment shape: blocks persisted as a parquet table, pruned
     decodes reading it back.  On the bare scan the decode is file-direct:
@@ -1475,7 +1460,7 @@ def test_or_predicate_prune_union_and_exact(spark):
     out = roundtrip_filtered(
         df, "k", kinds,
         [("in", "k", (v for v in [5, 30_050])), ("eq", "k", 7)],
-        combine="or", n_parts=4,
+        combine="or",
     )
     assert sorted(r["k"] for r in out.collect()) == [5, 7, 30_050]
 
@@ -1484,9 +1469,9 @@ def test_or_predicate_prune_union_and_exact(spark):
 
 
 def test_prune_algebra_properties():
-    """Hypothesis: the page-range algebra and the zone-map classifiers
-    never produce a false negative (every matching row is inside the kept
-    ranges) under random values, nulls, bounds and range lists."""
+    """Hypothesis: the zone-map page classifiers never produce a false
+    negative (every matching row is inside the kept mask) under random
+    values, nulls and bounds."""
     import numpy as np
     import pyarrow as pa
     from hypothesis import given, settings
@@ -1494,49 +1479,16 @@ def test_prune_algebra_properties():
 
     from parquet_python_spark.operators.generic_codec import (
         PAGE_ROWS,
-        _intersect_ranges,
-        _page_keep_ranges,
+        _page_keep,
+        _page_keep_str,
         _page_stats_blob,
         _str_page_stats_blob,
-        _page_keep_ranges_str,
         _str_stats,
-        _union_ranges,
     )
 
     SET = settings(max_examples=60, deadline=None)
 
-    # --- sorted-disjoint range lists vs a set oracle
-    def ranges_strategy():
-        return st.lists(
-            st.tuples(
-                st.integers(0, 500), st.integers(1, 40)
-            ),
-            max_size=8,
-        ).map(
-            lambda raw: _canon([(s, s + ln) for s, ln in raw])
-        )
-
-    def _canon(rs):
-        out = []
-        for s, e in sorted(rs):
-            if out and s <= out[-1][1]:
-                out[-1] = (out[-1][0], max(out[-1][1], e))
-            else:
-                out.append((s, e))
-        return out
-
-    def to_set(rs):
-        return set().union(*[set(range(s, e)) for s, e in rs]) if rs else set()
-
-    @SET
-    @given(ranges_strategy(), ranges_strategy())
-    def check_algebra(a, b):
-        assert to_set(_union_ranges(a, b)) == to_set(a) | to_set(b)
-        assert to_set(_intersect_ranges(a, b)) == to_set(a) & to_set(b)
-
-    check_algebra()
-
-    # --- int page stats with nulls: kept ranges cover every matching row
+    # --- int page stats with nulls: the kept mask covers every matching row
     @SET
     @given(
         st.lists(
@@ -1554,12 +1506,11 @@ def test_prune_algebra_properties():
         blob = _page_stats_blob(vals, valid if not valid.all() else None)
         if blob is None:
             return  # single page: chunk stats cover it
-        kept = _page_keep_ranges(blob, len(vals), lo, hi)
+        kept = _page_keep(blob, len(vals), lo, hi)
         if kept is None:
             return  # everything kept
-        kept_rows = to_set(kept)
-        matches = np.flatnonzero(valid & (vals >= lo) & (vals <= hi))
-        assert set(matches.tolist()) <= kept_rows
+        matches = valid & (vals >= lo) & (vals <= hi)
+        assert not (matches & ~kept).any()
 
     check_int_pages()
 
@@ -1581,14 +1532,13 @@ def test_prune_algebra_properties():
         blob = _str_page_stats_blob(arr)
         if blob is None:
             return
-        kept = _page_keep_ranges_str(blob, len(vals), lo, hi)
+        kept = _page_keep_str(blob, len(vals), lo, hi)
         if kept is None:
             return
-        kept_rows = to_set(kept)
         matches = {
             i for i, v in enumerate(vals) if v is not None and lo <= v <= hi
         }
-        assert matches <= kept_rows
+        assert all(kept[i] for i in matches)
         # chunk-level bounds conservative too
         clo, chi = _str_stats(arr)
         if clo is not None and matches:
@@ -1971,7 +1921,7 @@ def test_page_null_counts_prune_and_exact(spark):
     from parquet_python_spark.operators.generic_codec import (
         PAGE_ROWS,
         _arrow_safe_schema,
-        _page_keep_ranges_nulls,
+        _page_keep_nulls,
         _page_nulls_blob,
         decode_df_pruned_multi,
         encode_df,
@@ -1983,11 +1933,14 @@ def test_page_null_counts_prune_and_exact(spark):
     valid[PAGE_ROWS + 10 : PAGE_ROWS + 50] = False  # some nulls in page 1
     valid[3 * PAGE_ROWS :] = False                  # last page all-null
     blob = _page_nulls_blob(valid)
-    assert _page_keep_ranges_nulls(blob, n, True) == [
-        (PAGE_ROWS, 2 * PAGE_ROWS),
-        (3 * PAGE_ROWS, n),
-    ]
-    assert _page_keep_ranges_nulls(blob, n, False) == [(0, 3 * PAGE_ROWS)]
+    assert _same_rows(
+        _page_keep_nulls(blob, n, True),
+        [(PAGE_ROWS, 2 * PAGE_ROWS), (3 * PAGE_ROWS, n)],
+        n,
+    )
+    assert _same_rows(
+        _page_keep_nulls(blob, n, False), [(0, 3 * PAGE_ROWS)], n
+    )
     assert _page_nulls_blob(valid[:100]) is None  # single page: no blob
 
     # Spark e2e: one 20k-row chunk whose nulls live in a single page
@@ -2284,7 +2237,7 @@ def test_nan_zone_maps_canonical_and_old_blocks_kept():
     from parquet_python_spark.operators.generic_codec import (
         _float_ordered_bits,
         _float_ordered_scalar,
-        _page_keep_ranges,
+        _page_keep,
         _page_stats_blob,
         _range_keep,
         PAGE_ROWS,
@@ -2323,8 +2276,10 @@ def test_nan_zone_maps_canonical_and_old_blocks_kept():
     blob = bytearray(_page_stats_blob(_float_ordered_bits(vals)))
     blob[4:12] = np.int64(old_image(neg_nan)).tobytes()  # page 0's minimum
     _, pages, _ = _range_keep("float64", meta, "f", 5.0, nan)
-    kept = [_page_keep_ranges(bytes(blob), len(vals), a, b) for _, a, b in pages]
-    assert kept == [[], [(0, PAGE_ROWS)]]
+    kept = [_page_keep(bytes(blob), len(vals), a, b) for _, a, b in pages]
+    assert len(kept) == 2
+    assert _same_rows(kept[0], [], len(vals))
+    assert _same_rows(kept[1], [(0, PAGE_ROWS)], len(vals))
 
 
 def test_sign_bit_nan_pruned_equals_spark_filter(spark, tmp_path):
@@ -2581,7 +2536,6 @@ def test_bloom_rejected_part_decodes_nothing(spark, tmp_path, monkeypatch):
         monkeypatch.setattr(gc, name, wrapped)
 
     spy("_decode_values")
-    spy("_decode_values_ranges")
     real_read = pq.read_table
 
     def read_table(path, columns=None, filters=None, **kwargs):
