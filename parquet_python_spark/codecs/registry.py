@@ -32,19 +32,12 @@ from .forpack import (
 )
 from .fsst import decode_fsst, encode_fsst, fsst_gain_sample
 from .plain import (
-    decode_plain_byte_array,
     decode_plain_int32,
     decode_plain_int64,
-    encode_plain_byte_array,
     encode_plain_int32,
     encode_plain_int64,
 )
-from .rle import (
-    decode_hybrid,
-    encode_hybrid,
-    encode_hybrid_params,
-    hybrid_size_estimate,
-)
+from .rle import decode_hybrid, encode_hybrid_params
 
 __all__ = ["encode_column", "decode_column", "chunk_stats", "select_codec"]
 

@@ -32,14 +32,12 @@ from .bitstream import (
     encode_varint,
     pack_bits_lsb,
     unpack_bits_lsb,
-    width_from_max_int,
 )
 
 __all__ = [
     "encode_hybrid",
     "encode_hybrid_params",
     "decode_hybrid",
-    "hybrid_size_estimate",
     "MIN_RLE_RUN",
 ]
 
@@ -289,20 +287,3 @@ def decode_hybrid(
         res = np.empty(n, dtype=dtype)
     return res[:p] if p < n else res
 
-
-def hybrid_size_estimate(vals: np.ndarray, width: int) -> int:
-    """Predicted encoded size in bytes (exact same segmentation as encode)."""
-    n = len(vals)
-    if n == 0:
-        return 0
-    if width == 0:
-        return len(encode_varint(n << 1)) + 1
-    boundaries = np.flatnonzero(vals[1:] != vals[:-1]) + 1
-    counts = np.diff(np.concatenate(([0], boundaries, [n])))
-    long_counts = counts[counts >= MIN_RLE_RUN]
-    n_long = int(long_counts.sum())
-    n_rle_runs = len(long_counts)
-    rle_bytes = n_rle_runs * (3 + (width + 7) // 8)  # ~3B varint upper bound
-    bp_values = n - n_long + 8 * n_rle_runs  # borrowed alignment upper bound
-    bp_bytes = (bp_values + 7) // 8 * width + 5 * (n_rle_runs + 1)
-    return rle_bytes + bp_bytes

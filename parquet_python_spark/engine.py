@@ -43,7 +43,6 @@ from urllib.parse import unquote, urlparse
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .codecs import (
@@ -484,12 +483,15 @@ def _encode_split_by_source(tbl, task_key, snapshot_id, with_ref_baseline):
 
 # --------------------------------------------------------------- decode
 
-def _decode_part_table(tbl) -> "pa.Table":
+def _decode_part_table(tbl, pred=None) -> "pa.Table":
     """Decode one partition's block rows back to token rows (bit-identical).
 
     Decodes each column payload with the vectorized kernels and re-splits
     the flat token vector on the n_tok offsets (Arrow list layout; the
     repetition-level concept the reference never implemented, SURVEY.md D18).
+    With ``pred`` = (column, lo, hi) only the matching rows are returned:
+    an ``n_tok`` in [lo, hi], or for ``tokens`` some token in [lo, hi] (a
+    row with no tokens never matches).
     """
     import pyarrow as pa
 
@@ -535,7 +537,7 @@ def _decode_part_table(tbl) -> "pa.Table":
     tokens = pa.ListArray.from_arrays(
         pa.array(offsets, type=pa.int32()), pa.array(flat, type=pa.int32())
     ).cast(pa.list_(pa.field("element", pa.int32(), nullable=False)))
-    return pa.table(
+    out = pa.table(
         {
             "doc_id": _str("doc_id"),
             "tokens": tokens,
@@ -543,6 +545,18 @@ def _decode_part_table(tbl) -> "pa.Table":
             "source": _str("source"),
         }
     )
+    if pred is None:
+        return out
+    column, lo, hi = pred
+    if column == "n_tok":
+        keep = (n_tok >= lo) & (n_tok <= hi)
+    else:
+        # hits[i] = in-range tokens among the first i: a row matches when
+        # its token run [offsets[r], offsets[r + 1]) adds at least one
+        hits = np.zeros(len(flat) + 1, dtype=np.int64)
+        np.cumsum((flat >= lo) & (flat <= hi), out=hits[1:])
+        keep = hits[offsets[1:]] > hits[offsets[:-1]]
+    return out.filter(keep)
 
 
 def local_path(uri: str) -> str:
@@ -821,41 +835,35 @@ def decode_blocks(blocks: DataFrame) -> DataFrame:
     return blocks.groupBy("part_id").applyInArrow(dec, schema=DECODED_SCHEMA)
 
 
-def _pruned_residual(decoded: DataFrame, column: str, lo: int, hi: int) -> DataFrame:
-    """Exact row-level predicate re-applied after the block-level prune
-    (block stats give a superset; this makes the result exact)."""
-    if column == "n_tok":
-        return decoded.filter(F.col("n_tok").between(lo, hi))
-    if column == "tokens":
-        # block semantics: skip blocks with no token in [lo, hi]; row
-        # semantics: keep rows containing at least one such token
-        return decoded.filter(
-            F.exists("tokens", lambda t: (t >= lo) & (t <= hi))
-        )
-    raise ValueError(f"no block stats for column {column!r}")
-
-
 def decode_blocks_files_pruned(
     spark: SparkSession, blocks_path: str, column: str, lo: int, hi: int
 ) -> DataFrame:
-    """Shuffle-free zone-map-pruned decode of a blocks directory.
+    """Shuffle-free zone-map-pruned decode of a blocks directory: exactly
+    the rows whose ``column`` matches — an ``n_tok`` in [lo, hi], or for
+    ``tokens`` some token in [lo, hi].
 
     The driver plans the keep set from each file's cached zone-map rows
     (_block_index), and tasks run only for files holding a kept part,
     each reading and decoding just those parts' rows: no payload byte of
-    a pruned part is read.  At 100 TB with a range-clustered layout that
-    is the difference between scanning the table and scanning the
-    matching slice.
+    a pruned part is read.  The decode task tests the rows
+    (_decode_part_table) and ships only the matching ones; no filter runs
+    after it.  At 100 TB with a range-clustered layout that is the
+    difference between scanning the table and scanning the matching
+    slice.
     """
-    decoded = _decode_kept_parts(
-        spark, blocks_path, lambda rows, _: _zone_map_keep(rows, column, lo, hi)
+    if column not in ("tokens", "n_tok"):
+        raise ValueError(f"no block stats for column {column!r}")
+    return _decode_kept_parts(
+        spark, blocks_path, lambda rows, _: _zone_map_keep(rows, column, lo, hi),
+        lambda rows: _decode_part_table(rows, (column, lo, hi)),
     )
-    return _pruned_residual(decoded, column, lo, hi)
 
 
-def _decode_kept_parts(spark: SparkSession, blocks_path: str, keep) -> DataFrame:
-    """Decode, per file of a blocks directory, only the parts
-    ``keep(index rows, part_ids)`` returns from the file's cached
+def _decode_kept_parts(
+    spark: SparkSession, blocks_path: str, keep, decode=_decode_part_table
+) -> DataFrame:
+    """Decode with ``decode``, per file of a blocks directory, only the
+    parts ``keep(index rows, part_ids)`` returns from the file's cached
     _block_index; a file keeping none starts no task.  Interrupted
     compactions are repaired first (decode_blocks_files)."""
     _repair_compaction(blocks_path, conservative=True)
@@ -864,7 +872,7 @@ def _decode_kept_parts(spark: SparkSession, blocks_path: str, keep) -> DataFrame
         kept = keep(*_block_index(path)[1:])
         if kept:
             plan.append((path, [("part_id", "in", kept)]))
-    return _decode_block_files(spark, plan)
+    return _decode_block_files(spark, plan, decode=decode)
 
 
 def _part_file_key(part_id: str) -> str:

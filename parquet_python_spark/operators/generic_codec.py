@@ -33,7 +33,6 @@ from __future__ import annotations
 import functools
 import math
 import numbers
-import operator
 import os
 import zlib
 
@@ -50,7 +49,6 @@ from ..codecs.arrow_io import (
     decode_str_column,
     encode_str_column,
     list_column_flat,
-    string_array_from_lens_blob,
 )
 from ..engine import _META_COLS, _block_files, _decode_block_files
 from ..engine import local_parquet_scan_files, map_tasks, part_runs
@@ -844,9 +842,7 @@ def _encode_plan(
                     else:
                         # null-bearing chunks keep page stats too: null
                         # ROW slots carry sentinels that never widen a
-                        # page's bounds (the payload-slice fast path stays
-                        # gated off; the full-decode + row-slice fallback
-                        # is null-exact)
+                        # page's bounds
                         valid = pc.is_valid(arr).to_numpy(
                             zero_copy_only=False
                         )
@@ -911,43 +907,35 @@ def decode_df(
     key_col: str,
     col_kinds: dict[str, str],
     out_schema: T.StructType,
-    prune: tuple | list[tuple] | None = None,
 ) -> DataFrame:
     """Inverse of :func:`encode_df`; returns rows bit-identical to input.
-
-    ``prune=(pred_col, lo, hi)`` — or a LIST of such tuples for a
-    conjunction — consults each pred_col's per-page zone maps
-    (page_stats) and keeps only the rows of pages that may intersect
-    every [lo, hi]; a part where no page survives decodes nothing —
-    the intra-chunk skip that keeps pruning selective as chunks grow
-    with scale.  The predicates are then evaluated row by row where that
-    equals Spark's filter (int/str bounds, null tests; see _decode_fn),
-    and only the matching rows are returned.  Output is a SUPERSET of
-    the matching rows — exact for int/str/null predicates, page-granular
-    for float ones (callers re-apply the exact predicate); columns stay
-    row-aligned because every column takes the same rows."""
-    dec = _decode_fn(col_kinds, out_schema, prune)
+    The pruned decodes (decode_df_pruned_multi and its wrappers) return
+    exactly the rows of a predicate instead."""
+    dec = _decode_fn(col_kinds, out_schema)
     return blocks.groupBy("part_id").applyInArrow(dec, schema=out_schema)
 
 
 def _decode_fn(
     col_kinds: dict[str, str],
     out_schema: T.StructType,
-    prune: tuple | list[tuple] | None = None,
+    prune: tuple | list | None = None,
 ):
     """Per-part block-rows -> decoded-rows function (the body of
     decode_df and of the pruned decodes, exposed so the fused round-trip
     can chain it directly onto the encode function inside one Python
     task).
 
-    With ``prune``, one boolean row mask selects the output.  It starts
-    from the page zone maps and null counts (AND across entries, OR
-    inside a union group); a part whose mask is all false returns before
-    any payload decodes.  Then late materialization: each entry whose
-    row test equals Spark's filter (_row_exact) is evaluated on its
-    decoded column and ANDed in.  Float predicates and union groups with
-    such a member stay page-granular.  Every output column decodes whole
-    and takes the mask's rows."""
+    ``prune`` is a ``(pred_col, lo, hi)`` tuple or a list of entries, each
+    a tuple or a list of tuples (a union group: IN-list, OR), as
+    _pred_keep emits them: float bounds are ordered bits, and
+    ``(pred_col, None, want_null)`` is IS [NOT] NULL.  With ``prune`` the
+    function returns exactly the matching rows, through one boolean row
+    mask.  It starts from the page zone maps and null counts (AND across
+    entries, OR inside a union group); a part whose mask is all false
+    returns before any payload decodes.  Then late materialization: every
+    entry is evaluated row by row on its decoded column (_row_mask) and
+    ANDed in.  Every output column decodes whole and takes the mask's
+    rows."""
 
     # arrow image of the output schema, for the all-pages-pruned early exit
     # (a zero-row table without touching any payload)
@@ -1012,21 +1000,15 @@ def _decode_fn(
             # skipping the whole part here is where page stats win most
             return empty_out
 
-        # late materialization: evaluate each prune entry row by row (AND
-        # across entries, OR inside a union group) wherever that equals
-        # Spark's filter
+        # late materialization: every prune entry is evaluated row by row on
+        # its decoded column (AND across entries, OR inside a union group)
         pred_arrs: dict[str, pa.Array] = {}
         for group in prunes:
-            if not group or not all(
-                t[0] in by_col and _row_exact(col_kinds.get(t[0]), t[1], t[2])
-                for t in group
-            ):
-                continue  # this entry keeps page granularity
             m = np.zeros(n_rows, dtype=bool)
             for pcol, lo, hi in group:
                 if pcol not in pred_arrs:
                     pred_arrs[pcol] = chunk_arr(pcol, col_kinds[pcol])
-                m |= _row_mask(pred_arrs[pcol], lo, hi)
+                m |= _row_mask(pred_arrs[pcol], col_kinds[pcol], lo, hi)
             mask = m if mask is None else mask & m
         rows = None if mask is None else pa.array(np.flatnonzero(mask))
         if rows is not None and not len(rows):
@@ -1060,30 +1042,23 @@ def _decode_fn(
     return dec
 
 
-def _row_exact(kind: str | None, lo, hi) -> bool:
-    """True when one prune tuple's row-level test (_row_mask) keeps exactly
-    the rows a Spark filter of the same predicate keeps: IS [NOT] NULL on
-    any scalar column, int bounds on an int/int96_ts column (int64 order)
-    and str bounds on a str column (UTF-8 byte order, which is Spark's
-    binary string order).  Float bounds arrive as ordered bits, whose
-    order differs from Spark's for NaN payloads, and an int column probed
-    with a float bound compares in double — both keep page granularity,
-    and the caller's re-filter decides."""
-    if lo is None:
-        return kind is not None and kind not in _LIST_KINDS
-    if kind == "str":
-        return isinstance(lo, str) and isinstance(hi, str)
-    return kind in ("int", "int96_ts") and all(
-        isinstance(b, int) and not isinstance(b, bool) for b in (lo, hi)
-    )
-
-
-def _row_mask(arr: pa.Array, lo, hi) -> np.ndarray:
-    """Rows of ``arr`` that satisfy one prune tuple: ``(col, None,
-    want_null)`` is IS NULL / IS NOT NULL, anything else lo <= v <= hi
-    (a null value never satisfies a bound)."""
+def _row_mask(arr: pa.Array, kind: str, lo, hi) -> np.ndarray:
+    """Rows of ``arr``, the decoded values of a ``kind`` column, that
+    satisfy one prune tuple as a Spark filter would: ``(col, None,
+    want_null)`` is IS NULL / IS NOT NULL, anything else lo <= v <= hi (a
+    null value never satisfies a bound).  Str values compare in UTF-8
+    byte order, Spark's string order; an int column with a float bound
+    compares in double, as Spark does.  A float column's bounds are
+    ordered bits (_range_keep), so its values compare as their
+    _float_ordered_bits images, which order as Spark does: every NaN
+    equal and above +inf, and -0.0 equal to 0.0 through the bounds'
+    ±0 widening."""
     if lo is None:
         m = arr.is_null() if hi else arr.is_valid()
+    elif kind.startswith("float"):
+        bits = _float_ordered_bits(arr.to_numpy(zero_copy_only=False))
+        valid = arr.is_valid().to_numpy(zero_copy_only=False)
+        return (bits >= lo) & (bits <= hi) & valid
     else:
         m = pc.and_kleene(pc.greater_equal(arr, lo), pc.less_equal(arr, hi))
     return pc.fill_null(m, False).to_numpy(zero_copy_only=False)
@@ -1106,8 +1081,8 @@ def decode_df_pruned(
     blocks, in no Spark job; one metadata read otherwise), and only the
     surviving parts are read and decoded (_decode_parts: file-direct,
     else a pushed ``part_id IN (...)`` filter), so non-qualifying
-    payloads are never shuffled or decoded.  Callers re-apply the exact
-    row predicate after decode (block stats are a superset filter).
+    payloads are never shuffled or decoded.  The decode tasks return
+    exactly the matching rows (_decode_fn).
 
     ``pred_col`` may be an int/int96_ts column (exact chunk bounds + the
     intra-chunk page skip), a float column with numeric bounds (exact
@@ -1267,7 +1242,9 @@ def _range_keep(
             ranges.append((-(2**63), _float_ordered_scalar(-np.inf) - 1))
     else:
         _check_int64((lo, hi))
-        ranges = [(lo, hi)]
+        # Spark compares an int column with a float bound in double, where
+        # NaN is above every value: v <= NaN always holds, v >= NaN never
+        ranges = [(lo, math.inf if isinstance(hi, float) and math.isnan(hi) else hi)]
     smin, smax = meta.column("stat_min"), meta.column("stat_max")
     overlap = _all(col_rows, functools.reduce(pc.or_kleene, [
         _all(pc.greater_equal(smax, a), pc.less_equal(smin, b)) for a, b in ranges
@@ -1395,7 +1372,7 @@ def _pred_keep(col_kinds: dict[str, str], meta: pa.Table, pred: tuple) -> tuple:
     row the predicate can match (range -> one tuple, eq/in -> one [v, v]
     per value, [] for the vacuous empty IN); null predicates bound pages
     with the sentinel (col, None, want_null), which routes to the
-    per-page null counts inside decode_df.  An eq/in keep set is the
+    per-page null counts inside _decode_fn.  An eq/in keep set is the
     parts the chunk statistics admit and, where ``meta`` has the
     ``bloom_ok`` column (_chunk_meta off the block index), whose Bloom
     filter may hold a probe of the column; on file-direct blocks the
@@ -1497,10 +1474,9 @@ def decode_df_pruned_multi(
     null predicates skip pages through the per-page null counts
     (null-free pages for IS NULL, all-null pages for IS NOT NULL).
     Row level: the same atoms are evaluated row by row on their decoded
-    columns (late materialization, see _decode_fn).  Output is a SUPERSET of
-    matching rows — exact unless a float predicate is involved; callers
-    re-apply the exact row predicate, same contract as every other pruned
-    decode."""
+    columns (late materialization, see _decode_fn), so the output is
+    exactly the matching rows, for every column kind; no caller filters
+    it again."""
     if combine not in ("and", "or"):
         raise ValueError(f"combine must be 'and' or 'or', got {combine!r}")
     preds = _normalize_preds(preds)
@@ -1542,8 +1518,9 @@ def decode_df_pruned_eq(
     (_bloom_admits), so a rejected part never enters the groupBy
     shuffle.  Bitsets — up to ~80 KB/chunk — never move to the driver
     at any chunk count, and no separate Python stage runs for them.
-    Callers re-apply the exact predicate after decode
-    (Bloom filters admit false positives, never false negatives).
+    Bloom filters admit false positives, never false negatives; the
+    decode tasks test the value row by row and return exactly the
+    matching rows.
 
     ``pred_col`` may be int/int96_ts (bloom over the values) or str
     (bloom over JVM-side xxhash64 of the values — the query literal is
@@ -1559,8 +1536,8 @@ def decode_df_pruned_eq(
 
 def _normalize_preds(preds: list[tuple]) -> list[tuple]:
     """Materialize IN-list values (a one-shot iterable read twice — once
-    for the prune, once for the exact row filter — would silently yield
-    an empty second read), turn numpy scalar bounds and values into
+    for the Bloom probes, once for the prune — would silently yield an
+    empty second read), turn numpy scalar bounds and values into
     Python numbers (_plain_number) and reject an empty conjunction."""
     if not preds:
         raise ValueError("preds must be non-empty")
@@ -1582,9 +1559,9 @@ def _plain_number(v):
 
 
 def _pred_row_expr(preds: list[tuple], combine: str = "and"):
-    """Exact row-level Column expression for a predicate conjunction
-    (or disjunction with ``combine="or"``) — the re-apply step after the
-    superset prune."""
+    """Row-level Column expression for a predicate conjunction (or
+    disjunction with ``combine="or"``): the plain Spark filter whose rows
+    every pruned decode returns."""
     e = None
     for p in preds:
         op, col = p[0], p[1]
@@ -1614,13 +1591,13 @@ def roundtrip_filtered(
     preds: list[tuple],
     combine: str = "and",
 ) -> DataFrame:
-    """encode -> block files -> pruned decode -> exact predicate re-apply.
+    """encode -> block files -> pruned decode: exactly the matching rows.
 
     ``preds`` and ``combine`` follow decode_df_pruned_multi (AND or OR of
-    range / eq / in / isnull / notnull atoms).  Row-level result is exact
-    (the prune is a superset; the final filter re-applies the predicate);
-    the prune is the perf win.  The input is range-partitioned on
-    ``key_col`` so the block stats are selective.
+    range / eq / in / isnull / notnull atoms), whose decode tasks return
+    only the rows a Spark filter of the predicate keeps; no filter runs
+    after them.  The input is range-partitioned on ``key_col`` so the
+    block stats are selective.
 
     The blocks are written once, when this is called, as parquet files in
     a fresh session.session_tmpdir, where they stay on the driver's local
@@ -1629,8 +1606,6 @@ def roundtrip_filtered(
     Every part lies in one file, so the pruned decode plans on the
     files' cached block index and reads only the kept parts, file-direct
     (engine._block_files), as it would over a persistent blocks table."""
-    # normalize BEFORE the double read (prune + row filter): a one-shot
-    # IN iterable consumed by the prune would leave the row filter empty
     preds = _normalize_preds(preds)
     in_schema = df.select(*list(col_kinds)).schema
     path = os.path.join(session_tmpdir("pps_rtf_"), "blocks")
@@ -1639,8 +1614,7 @@ def roundtrip_filtered(
         df.sparkSession.read.parquet(path), key_col, col_kinds,
         _arrow_safe_schema(in_schema, col_kinds), preds, combine,
     )
-    out = decoded.filter(_pred_row_expr(preds, combine))
-    return out.select(
+    return decoded.select(
         *[
             F.col(f.name).cast(_cast_target(f.dataType)).alias(f.name)
             for f in in_schema.fields
@@ -1661,7 +1635,7 @@ def count_filtered_meta(
     [stat_min, stat_max] lie fully inside [lo, hi] — and hold no nulls —
     contribute n_rows straight from the metadata: their payloads are
     never read.  Only BOUNDARY chunks (overlapping but not contained)
-    decode, page-pruned, and count the exact predicate.  At scale the
+    decode, and their decode tasks return exactly the matching rows.  At scale the
     contained set dominates for range predicates on clustered columns, so
     the count degenerates to a metadata aggregation.
 
@@ -1689,8 +1663,7 @@ def count_filtered_meta(
     boundary = _parts(meta, pc.and_kleene(overlap, pc.invert(contained)))
     if boundary:
         cnt += _aggregate(
-            _decode_col(blocks, pred_col, kind, boundary, [pages], files)
-            .filter((F.col(pred_col) >= lo) & (F.col(pred_col) <= hi)),
+            _decode_col(blocks, pred_col, kind, boundary, [pages], files),
             F.count(F.lit(1)).alias("n"),
         )["n"]
     return _literal_row(blocks, cnt=cnt)
@@ -1767,8 +1740,8 @@ def _decode_parts(
     column: str | None = None,
     probes: dict | None = None,
 ) -> DataFrame:
-    """Decode the chunk rows of ``parts`` (only ``column``'s when given),
-    page-pruned and late-materialized by ``prune`` (see _decode_fn).
+    """Decode the chunk rows of ``parts`` (only ``column``'s when given)
+    to exactly the rows ``prune`` matches (see _decode_fn).
     File-direct when _chunk_meta proved the layout (``files``): each file
     holding a kept part reads only those parts' rows and the columns
     _decode_fn reads (engine._decode_block_files), with no Spark scan or
@@ -1778,13 +1751,13 @@ def _decode_parts(
     ruled out reads no payload.  Other blocks DataFrames take a pushed
     ``part_id IN (...)`` filter and the groupBy shuffle; their Bloom test
     ran in the metadata read (_chunk_meta)."""
+    dec = _decode_fn(col_kinds, out_schema, prune)
     if files is None:
         # a literal IN-list that pushes to the blocks scan (no join)
         rows = blocks.filter(F.col("part_id").isin(sorted(parts)))
         if column is not None:
             rows = rows.filter(F.col("column") == column)
-        return decode_df(rows, None, col_kinds, out_schema, prune=prune)
-    dec = _decode_fn(col_kinds, out_schema, prune)
+        return rows.groupBy("part_id").applyInArrow(dec, schema=out_schema)
     names = out_schema.fieldNames()
     only_col = [] if column is None else [("column", "=", column)]
     plan = [
@@ -1832,8 +1805,8 @@ def minmax_filtered_meta(
     value present in the chunk and already inside the bounds (the
     symmetric argument gives stat_max as a max candidate when
     ``stat_max <= hi``).  Only chunks straddling a bound (some values
-    below lo or above hi) decode, page-pruned, in one exchange-free Spark
-    job (_aggregate) that runs when this function is CALLED, not when the
+    below lo or above hi) decode to exactly their in-range values, in one
+    exchange-free Spark job (_aggregate) that runs when this function is CALLED, not when the
     result is collected.  Returns a 1-row DataFrame ``(mn, mx)`` holding
     the already-computed answer as a literal row — SQL semantics: NULL
     when nothing matches.
@@ -1861,8 +1834,7 @@ def minmax_filtered_meta(
     straddle = _parts(meta, pc.and_kleene(overlap, pc.invert(contained)))
     if straddle:
         got = _aggregate(
-            _decode_col(blocks, pred_col, kind, straddle, [pages], files)
-            .filter((F.col(pred_col) >= lo) & (F.col(pred_col) <= hi)),
+            _decode_col(blocks, pred_col, kind, straddle, [pages], files),
             F.min(pred_col).alias("mn"),
             F.max(pred_col).alias("mx"),
         )

@@ -408,6 +408,49 @@ def test_decode_pruned_token_value_range(spark, tokens_df, clustered_blocks):
     assert got == want
 
 
+def test_decode_files_pruned_rows_exact_in_task(
+    spark, tokens_df, tmp_path, monkeypatch
+):
+    """The decode tasks return exactly the rows of a plain Spark filter of
+    the input, on token values and on n_tok, with no Filter after them in
+    the plan; a row with no tokens matches no token range.  A column
+    without block stats raises before any index or file is read."""
+    from parquet_python_spark import engine
+    from parquet_python_spark.engine import decode_blocks_files_pruned
+
+    source = tokens_df.first()["source"]
+    empty = spark.createDataFrame([("empty-0", [], 0, source)], tokens_df.schema)
+    inp = str(tmp_path / "inp")
+    tokens_df.unionByName(empty).coalesce(2).write.parquet(inp)
+    src = spark.read.parquet(inp)
+    blocks_dir = str(tmp_path / "blocks")
+    encode_table_files_native(spark, inp, blocks_dir, snapshot_id="t").count()
+
+    cases = [
+        ("tokens", 0, 3, F.exists("tokens", lambda t: (t >= 0) & (t <= 3))),
+        ("n_tok", 0, 20, F.col("n_tok").between(0, 20)),
+    ]
+    for column, lo, hi, cond in cases:
+        want = _as_sorted_rows(src.filter(cond))
+        dec = decode_blocks_files_pruned(spark, blocks_dir, column, lo, hi)
+        plan = dec._sc._jvm.PythonSQLUtils.explainString(
+            dec._jdf.queryExecution(), "formatted"
+        )
+        assert "Filter" not in plan, plan
+        got = _as_sorted_rows(dec)
+        assert got == want and 0 < len(want) < N_ROWS + 1
+        assert any(r[0] == "empty-0" for r in got) == (column == "n_tok")
+
+    def no_read(*args, **kwargs):
+        raise AssertionError("read before the column check")
+
+    monkeypatch.setattr(engine, "_block_index", no_read)
+    monkeypatch.setattr(engine, "list_input_files", no_read)
+    monkeypatch.setattr(engine, "_repair_compaction", no_read)
+    with pytest.raises(ValueError, match="no block stats"):
+        decode_blocks_files_pruned(spark, blocks_dir, "doc_id", 0, 1)
+
+
 def test_decode_pruned_empty_range(spark, clustered_blocks):
     from parquet_python_spark.engine import decode_blocks_files_pruned
 

@@ -2020,35 +2020,42 @@ def lm_blocks(spark, tmp_path_factory):
 
 @pytest.mark.parametrize("path", ["file_direct", "shuffle"])
 @pytest.mark.parametrize(
-    "preds,combine,exact",
+    "preds,combine",
     [
-        ([("range", "i", 100, 180)], "and", True),
-        ([("eq", "i", 77)], "and", True),
-        ([("in", "i", [3, 500, 999])], "and", True),
-        ([("eq", "s", "s123")], "and", True),
-        ([("in", "s", ["s007", "s300"])], "and", True),
-        ([("range", "s", "s100", "s149")], "and", True),
-        ([("isnull", "w")], "and", True),
-        ([("notnull", "w")], "and", True),
+        ([("range", "i", 100, 180)], "and"),
+        ([("eq", "i", 77)], "and"),
+        ([("in", "i", [3, 500, 999])], "and"),
+        ([("eq", "s", "s123")], "and"),
+        ([("in", "s", ["s007", "s300"])], "and"),
+        ([("range", "s", "s100", "s149")], "and"),
+        ([("isnull", "w")], "and"),
+        ([("notnull", "w")], "and"),
         (
             [("range", "k", 1_000, 1_100), ("eq", "i", 5), ("isnull", "w")],
             "or",
-            True,
         ),
-        ([("range", "f", -0.0, float("inf"))], "and", False),
+        ([("range", "f", -0.0, float("inf"))], "and"),
+        ([("range", "f", float("nan"), float("nan"))], "and"),
+        ([("range", "f", -1e9, 0.0)], "and"),
+        ([("range", "i", 99.5, 180.5)], "and"),
+        ([("range", "i", 990, float("nan"))], "and"),
     ],
     ids=[
         "int_range", "int_eq", "int_in", "str_eq", "str_in", "str_range",
-        "isnull", "notnull", "or", "float_range",
+        "isnull", "notnull", "or", "float_range", "float_nan_bounds",
+        "float_hi_zero", "int_float_bounds", "int_nan_hi",
     ],
 )
-def test_late_materialized_rows(spark, lm_blocks, preds, combine, exact, path):
-    """The pruned decode's output BEFORE the caller's re-filter is a
-    superset of a plain Spark filter, and for int/str/null predicates it
-    equals that filter row for row: the predicates ran at row level inside
-    the surviving pages.  Float predicates stay page-granular.  Both the
-    file-direct decode of a bare blocks scan and the groupBy decode of a
-    persisted blocks DataFrame."""
+def test_late_materialized_rows(spark, lm_blocks, preds, combine, path):
+    """The pruned decode's output equals a plain Spark filter row for row,
+    for every column kind: the predicates ran at row level inside the
+    surviving pages, and nothing filters after the decode.  Float bounds
+    follow Spark's order (NaN = NaN above +inf, -0.0 = 0.0), and an int
+    column compares with float bounds in double.  Both the file-direct
+    decode of a bare blocks scan and the groupBy decode of a persisted
+    blocks DataFrame.  The oracle scans the raw file with parquet filter
+    pushdown off: the pushed-down filter drops NaN rows for a NaN bound,
+    which Spark's own comparison keeps."""
     from parquet_python_spark.operators.generic_codec import (
         _arrow_safe_schema,
         _pred_row_expr,
@@ -2071,12 +2078,15 @@ def test_late_materialized_rows(spark, lm_blocks, preds, combine, exact, path):
     finally:
         blocks.unpersist()
     assert ("FlatMapGroupsInArrow" in p) == (path == "shuffle"), p
-    want = sorted(repr(r) for r in raw.filter(_pred_row_expr(preds, combine)).collect())
-    assert want and set(want) <= set(got)
-    if exact:
-        assert got == want
-    else:
-        assert len(got) > len(want)  # NaN rows ride along page-granular
+    key = "spark.sql.parquet.filterPushdown"
+    pushdown = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        want = raw.filter(_pred_row_expr(preds, combine)).collect()
+    finally:
+        spark.conf.set(key, pushdown)
+    want = sorted(repr(r) for r in want)
+    assert want and got == want
 
 
 def test_file_direct_gate_falls_back_when_parts_span_files(
