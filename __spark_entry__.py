@@ -287,7 +287,7 @@ def _rt_lineitem_pruned(spark, sf_dir):
     ).select(F.lit("eq").alias("mode"), "*")
     # mode='multi' (round 5): conjunctive pruning — keep sets intersect
     # across predicates (planned on the driver from one metadata read,
-    # applied as a pushed part_id filter), page ranges intersect inside
+    # applied as a pushed part_id filter), row masks intersect inside
     # surviving chunks; selectivities multiply
     multi = roundtrip_filtered(
         li, "l_orderkey", kinds,
@@ -298,7 +298,7 @@ def _rt_lineitem_pruned(spark, sf_dir):
         ],
     ).select(F.lit("multi").alias("mode"), "*")
     # mode='any' (round 5): disjunctive pruning — keep sets UNION on the
-    # driver, page ranges union; IN-list rides as per-value [v, v]
+    # driver, row masks union; IN-list rides as per-value [v, v]
     any_ = roundtrip_filtered(
         li, "l_orderkey", kinds,
         [

@@ -19,9 +19,11 @@ Column kinds:
     int96_ts — epoch-millis int64 via Impala int96 wire (D4)
     bool     — BooleanType, 1 bit/value LSB-first (D1 PLAIN boolean)
 
-Scale design: both stages are applyInArrow — partitions arrive as Arrow
-tables whose string/list columns are (offsets, data) buffer pairs, and the
-kernels encode/decode straight from those buffers with no per-row Python
+Scale design: encode_df and the DataFrame-in decoders run applyInArrow,
+and file-direct decodes and round-trips run mapInArrow tasks
+(engine.map_tasks).  Either way chunks arrive as Arrow tables whose
+string/list columns are (offsets, data) buffer pairs, and the kernels
+encode/decode straight from those buffers with no per-row Python
 (reference NEVER vectorizes — lists throughout, encoding.py:125-180; here
 it is mandatory).  Partition count follows data size (rows / ~TARGET_ROWS
 per part, floored at the cluster's default parallelism) instead of a fixed
@@ -50,7 +52,7 @@ from ..codecs.arrow_io import (
     encode_str_column,
     list_column_flat,
 )
-from ..engine import _META_COLS, _block_files, _decode_block_files
+from ..engine import _DECODE_COLS, _META_COLS, _block_files, _decode_block_files
 from ..engine import local_parquet_scan_files, map_tasks, part_runs
 from ..session import session_tmpdir
 
@@ -76,11 +78,6 @@ BLOCKS_SCHEMA = T.StructType(
         # range predicates (Parquet's own BloomFilter header analog,
         # parquet.thrift; the reference parses neither)
         T.StructField("bloom", T.BinaryType(), True),
-        # per-PAGE min/max inside the chunk (Parquet ColumnIndex analog):
-        # [4B <u32 page_rows][<q min,<q max per page].  Chunk-level stats
-        # lose selectivity exactly as chunks grow with scale; page stats
-        # keep only the pages of a surviving chunk that may match
-        T.StructField("page_stats", T.BinaryType(), True),
         # TRUNCATED string bounds for str columns (Parquet ColumnIndex
         # truncation semantics): stat_min_str is a prefix of the chunk min
         # (a prefix sorts <= the original — valid lower bound);
@@ -89,10 +86,6 @@ BLOCKS_SCHEMA = T.StructType(
         # Fixed 16-char cap keeps metadata rows small at any value width
         T.StructField("stat_min_str", T.StringType(), True),
         T.StructField("stat_max_str", T.StringType(), True),
-        # per-PAGE null counts ([4B u32 page_rows][u32 per page]) for
-        # null-bearing chunks: IS [NOT] NULL predicates skip pages with
-        # no nulls (resp. all-null pages) inside surviving chunks
-        T.StructField("page_nulls", T.BinaryType(), True),
         # per-chunk null count (Parquet Statistics.null_count analog —
         # parsed by the reference at parquet.thrift:198-206, never used):
         # drives IS NULL / IS NOT NULL chunk skipping in
@@ -115,10 +108,8 @@ _BLOCKS_ARROW = pa.schema(
         ("stat_min", pa.int64()),
         ("stat_max", pa.int64()),
         ("bloom", pa.binary()),
-        ("page_stats", pa.binary()),
         ("stat_min_str", pa.string()),
         ("stat_max_str", pa.string()),
-        ("page_nulls", pa.binary()),
         ("n_nulls", pa.int64()),
     ]
 )
@@ -158,8 +149,8 @@ def _float_ordered_bits(vals: np.ndarray) -> np.ndarray:
     """Total-order-preserving signed-int64 image of float64 values (the
     IEEE-754 radix-sort trick, adjusted for a SIGNED target: non-negative
     floats keep their bit pattern, negative floats flip all non-sign
-    bits).  Lets float columns share the int64 stat/page-stat machinery
-    with exact monotone semantics: -inf < -1 < -0.0 < +0.0 < 1 < +inf <
+    bits).  Lets float columns share the int64 chunk statistics with
+    exact monotone semantics: -inf < -1 < -0.0 < +0.0 < 1 < +inf <
     NaN — matching Spark's NaN-greatest float ordering.  Every NaN,
     whatever its sign bit and payload, maps to the image of the one
     canonical NaN (Spark orders all NaNs as equal)."""
@@ -183,189 +174,6 @@ _NUMERIC_NP = {
 
 # target rows per encode partition; partition count grows with data size
 TARGET_ROWS_PER_PART = 262_144
-
-# rows per page for the sub-chunk zone maps; each page-stats blob records
-# the value it was written with, and the readers use that one
-PAGE_ROWS = 4096
-
-
-def _page_stats_blob(
-    vals: np.ndarray, valid: np.ndarray | None = None
-) -> bytes | None:
-    """Per-page (min, max) over chunk-order values; None when the chunk is
-    a single page (chunk-level stats already cover it).  ``valid`` marks
-    present ROW slots for a null-bearing chunk: null slots carry
-    (+max, -min) sentinels so they never widen a page's bounds, and an
-    all-null page degenerates to min > max — unsatisfiable by any [lo, hi],
-    so it is skipped (a null never matches a range predicate)."""
-    n = len(vals)
-    if n <= PAGE_ROWS:
-        return None
-    vals = np.asarray(vals, dtype=np.int64)
-    if valid is None:
-        mins_src = maxs_src = vals
-    else:
-        mins_src = np.where(valid, vals, np.iinfo(np.int64).max)
-        maxs_src = np.where(valid, vals, np.iinfo(np.int64).min)
-    n_pages = -(-n // PAGE_ROWS)
-    mins = np.empty(n_pages, dtype=np.int64)
-    maxs = np.empty(n_pages, dtype=np.int64)
-    full = (n // PAGE_ROWS) * PAGE_ROWS
-    if full:
-        mins[: full // PAGE_ROWS] = mins_src[:full].reshape(-1, PAGE_ROWS).min(axis=1)
-        maxs[: full // PAGE_ROWS] = maxs_src[:full].reshape(-1, PAGE_ROWS).max(axis=1)
-    if full < n:
-        mins[-1] = mins_src[full:].min()
-        maxs[-1] = maxs_src[full:].max()
-    pairs = np.empty((n_pages, 2), dtype="<i8")
-    pairs[:, 0] = mins
-    pairs[:, 1] = maxs
-    return int(PAGE_ROWS).to_bytes(4, "little") + pairs.tobytes()
-
-
-# high bit of the leading page_rows word tags the STRING page-stats blob
-# format (variable-width truncated bounds) apart from the fixed int64-pair
-# format — a kind-mismatched parse must fail loudly, not fabricate ranges
-_PAGE_STATS_STR_TAG = 0x8000_0000
-
-
-def _page_nulls_blob(valid: np.ndarray) -> bytes | None:
-    """Per-page null counts over the chunk's row-aligned validity mask
-    ([4B u32 page_rows][u32 per page]); None for single-page chunks."""
-    n = len(valid)
-    if n <= PAGE_ROWS:
-        return None
-    inv = (~valid).astype(np.uint32)
-    n_pages = -(-n // PAGE_ROWS)
-    counts = np.zeros(n_pages, dtype="<u4")
-    full = (n // PAGE_ROWS) * PAGE_ROWS
-    if full:
-        counts[: full // PAGE_ROWS] = inv[:full].reshape(-1, PAGE_ROWS).sum(axis=1)
-    if full < n:
-        counts[-1] = inv[full:].sum()
-    return int(PAGE_ROWS).to_bytes(4, "little") + counts.tobytes()
-
-
-def _page_keep_nulls(
-    blob: bytes, n_rows: int, want_null: bool
-) -> np.ndarray | None:
-    """Per-row mask of the pages that MAY hold a matching row for IS NULL
-    (pages with any null) or IS NOT NULL (pages with any present value);
-    None = keep everything."""
-    page_rows = int.from_bytes(blob[:4], "little")
-    counts = np.frombuffer(blob, dtype="<u4", offset=4)
-    n_pages = len(counts)
-    if page_rows <= 0 or -(-n_rows // page_rows) != n_pages:
-        # page_nulls blobs are outside the payload CRC; a truncated blob
-        # must fail loudly, not silently treat missing pages as skippable
-        raise ValueError("page-nulls blob page count mismatch")
-    sizes = np.full(n_pages, page_rows, dtype=np.int64)
-    sizes[-1] = n_rows - (n_pages - 1) * page_rows
-    keep = counts > 0 if want_null else counts < sizes
-    return _page_rows_mask(keep, page_rows, n_rows)
-
-
-def _page_rows_mask(
-    keep: np.ndarray, page_rows: int, n_rows: int
-) -> np.ndarray | None:
-    """The per-page ``keep`` flags expanded to one flag per row; None when
-    every page is kept."""
-    if keep.all():
-        return None
-    return keep[np.arange(n_rows) // page_rows]
-
-
-def _str_page_stats_blob(arr: pa.Array) -> bytes | None:
-    """Per-page TRUNCATED string bounds inside a no-null string chunk
-    (ColumnIndex per-page analog of _str_stats; same truncation semantics
-    — prefix lower bound, successor upper bound, absent upper = unbounded).
-    Wire: [4B u32: page_rows | STR_TAG] then per page
-    [1B lo_len][lo utf8][1B hi_len or 0xFF = unbounded][hi utf8], except
-    an ALL-NULL page which is the single byte 0xFE (skippable: a null
-    never matches a range predicate).  Bound lengths fit 1 byte
-    (<= STR_STAT_CHARS chars -> <= 64 utf8 bytes).  Null slots never
-    widen a page's bounds (pc.min_max skips them inside _str_stats).
-    None when the chunk is a single page."""
-    n = len(arr)
-    if n <= PAGE_ROWS:
-        return None
-    out = bytearray(
-        int(PAGE_ROWS | _PAGE_STATS_STR_TAG).to_bytes(4, "little")
-    )
-    for s in range(0, n, PAGE_ROWS):
-        lo, hi = _str_stats(arr.slice(s, PAGE_ROWS))
-        if lo is None:  # all-null page
-            out.append(0xFE)
-            continue
-        lo_b = lo.encode("utf-8")
-        out.append(len(lo_b))
-        out += lo_b
-        if hi is None:
-            out.append(0xFF)
-        else:
-            hi_b = hi.encode("utf-8")
-            out.append(len(hi_b))
-            out += hi_b
-    return bytes(out)
-
-
-def _page_keep_str(
-    blob: bytes, n_rows: int, lo: str, hi: str
-) -> np.ndarray | None:
-    """String twin of _page_keep over the truncated per-page bounds
-    (bounds are conservative, so a surviving page MAY contain matches; a
-    skipped page CANNOT)."""
-    head = int.from_bytes(blob[:4], "little")
-    if not head & _PAGE_STATS_STR_TAG:
-        raise ValueError("int page-stats blob passed to the str parser")
-    page_rows = head & ~_PAGE_STATS_STR_TAG
-    if page_rows <= 0:
-        raise ValueError("str page-stats blob has no page_rows")
-
-    def take(pos: int, k: int) -> tuple[bytes, int]:
-        # str page-stats blobs are outside the payload CRC: a bound cut
-        # short must fail loudly, not compare as a shorter string
-        if pos + k > len(blob):
-            raise ValueError("str page-stats blob is truncated")
-        return blob[pos : pos + k], pos + k
-
-    keep_pages: list[bool] = []
-    pos = 4
-    while pos < len(blob):
-        nlo = blob[pos]
-        pos += 1
-        if nlo == 0xFE:  # all-null page: no value can match a range
-            keep_pages.append(False)
-            continue
-        p_lo, pos = take(pos, nlo)
-        (nhi,), pos = take(pos, 1)
-        p_hi = None
-        if nhi != 0xFF:
-            p_hi, pos = take(pos, nhi)
-        keep_pages.append(
-            (p_hi is None or p_hi.decode("utf-8") >= lo)
-            and p_lo.decode("utf-8") <= hi
-        )
-    if -(-n_rows // page_rows) != len(keep_pages):
-        raise ValueError("str page-stats blob page count mismatch")
-    return _page_rows_mask(np.array(keep_pages), page_rows, n_rows)
-
-
-def _page_keep(
-    blob: bytes, n_rows: int, lo: int, hi: int
-) -> np.ndarray | None:
-    """Per-row mask of the pages that MAY intersect [lo, hi]; None means
-    'keep everything' (every page survives)."""
-    page_rows = int.from_bytes(blob[:4], "little")
-    if page_rows & _PAGE_STATS_STR_TAG:
-        raise ValueError("str page-stats blob passed to the int parser")
-    stats = np.frombuffer(blob, dtype="<i8", offset=4).reshape(-1, 2)
-    if page_rows <= 0 or -(-n_rows // page_rows) != len(stats):
-        # page_stats blobs are outside the payload CRC; a truncated blob
-        # must fail loudly, not silently treat missing pages as skippable
-        raise ValueError("page-stats blob page count mismatch")
-    keep = (stats[:, 1] >= lo) & (stats[:, 0] <= hi)
-    return _page_rows_mask(keep, page_rows, n_rows)
 
 # ------------------------------------------------------- bloom filters
 # Double-hashing Bloom filter over a chunk's DISTINCT int values: h_i =
@@ -691,10 +499,10 @@ def _encode_plan(
 ) -> tuple:
     """(work DataFrame with part_id, per-group encode function) — the body
     of encode_df, exposed so the fused round-trip can run encode+decode in
-    ONE applyInArrow pass (no blocks exchange).  ``build_stats=False``
-    additionally skips every pruning artifact (chunk min/max, blooms,
-    page zone maps, null blobs): a fused round-trip discards the blocks
-    table immediately, so those bytes could never be consumed."""
+    ONE Python task (no blocks exchange).  ``build_stats=False``
+    additionally skips every pruning artifact (chunk min/max, string
+    bounds, blooms): a fused round-trip discards the blocks table
+    immediately, so those bytes could never be consumed."""
     forced_codecs = forced_codecs or {}
     cols = [key_col] + [c for c in col_kinds if c != key_col]
     if partitioning == "range":
@@ -771,8 +579,7 @@ def _encode_plan(
         rows = []
 
         def add(column, codec, params, payload, n_values, stats=(None, None),
-                bloom=None, page_stats=None, str_stats=(None, None),
-                n_nulls=0, page_nulls=None):
+                bloom=None, str_stats=(None, None), n_nulls=0):
             rows.append(
                 {
                     "part_id": part_id,
@@ -787,11 +594,9 @@ def _encode_plan(
                     "stat_min": stats[0],
                     "stat_max": stats[1],
                     "bloom": bloom,
-                    "page_stats": page_stats,
                     "stat_min_str": str_stats[0],
                     "stat_max_str": str_stats[1],
                     "n_nulls": n_nulls,
-                    "page_nulls": page_nulls,
                 }
             )
 
@@ -821,40 +626,14 @@ def _encode_plan(
                 stats = (None, None)
                 sstats = (None, None)
                 bloom = None
-                pstats = None
-                pnulls = (
-                    _page_nulls_blob(
-                        pc.is_valid(arr).to_numpy(zero_copy_only=False)
-                    )
-                    if (arr.null_count and build_stats)
-                    else None
-                )
                 if not build_stats:
                     pass  # fused round-trip: no pruning artifact is reachable
                 elif kind in ("int", "int96_ts"):
                     stats = int_stats(arr)
                     present = pc.drop_null(arr) if arr.null_count else arr
                     bloom = bloom_build(present.to_numpy(zero_copy_only=False))
-                    if arr.null_count == 0:
-                        pstats = _page_stats_blob(
-                            arr.to_numpy(zero_copy_only=False)
-                        )
-                    else:
-                        # null-bearing chunks keep page stats too: null
-                        # ROW slots carry sentinels that never widen a
-                        # page's bounds
-                        valid = pc.is_valid(arr).to_numpy(
-                            zero_copy_only=False
-                        )
-                        filled = pc.fill_null(arr, 0).to_numpy(
-                            zero_copy_only=False
-                        )
-                        pstats = _page_stats_blob(filled, valid)
                 elif kind == "str":
                     sstats = _str_stats(arr)
-                    # per-page truncated bounds; null slots never widen a
-                    # page's bounds, all-null pages are marked skippable
-                    pstats = _str_page_stats_blob(arr)
                     # bloom over the JVM-computed xxhash64 values
                     # (row-aligned; drop slots where the string is null)
                     hvals = combined_chunks(
@@ -865,38 +644,19 @@ def _encode_plan(
                             pc.is_valid(arr).to_numpy(zero_copy_only=False)
                         ]
                     bloom = bloom_build(hvals.astype(np.int64, copy=False))
-                elif kind in ("float64", "float32"):
+                elif kind in ("float64", "float32") and arr.null_count < len(arr):
                     # float zone maps ride the int64 stat columns through
                     # the order-preserving bits transform (exact monotone,
-                    # NaN sorts greatest — same as Spark)
-                    if len(arr) and arr.null_count < len(arr):
-                        if arr.null_count == 0:
-                            ob = _float_ordered_bits(
-                                arr.to_numpy(zero_copy_only=False).astype(
-                                    np.float64, copy=False
-                                )
-                            )
-                            stats = (int(ob.min()), int(ob.max()))
-                            pstats = _page_stats_blob(ob)
-                        else:
-                            # null slots surface as NaN in to_numpy — zero
-                            # them BEFORE the ordered-bits transform (NaN
-                            # maps greatest and would corrupt page maxima),
-                            # then sentinel-mask them out of the stats
-                            valid = pc.is_valid(arr).to_numpy(
-                                zero_copy_only=False
-                            )
-                            f = arr.to_numpy(zero_copy_only=False).astype(
-                                np.float64, copy=False
-                            )
-                            ob = _float_ordered_bits(np.where(valid, f, 0.0))
-                            stats = (
-                                int(ob[valid].min()), int(ob[valid].max())
-                            )
-                            pstats = _page_stats_blob(ob, valid)
+                    # NaN sorts greatest — same as Spark) over the present
+                    # values
+                    present = pc.drop_null(arr) if arr.null_count else arr
+                    ob = _float_ordered_bits(
+                        present.to_numpy(zero_copy_only=False)
+                    )
+                    stats = (int(ob.min()), int(ob.max()))
                 c, p, payload, nv = _encode_values(arr, kind, forced, page, outer)
-                add(col, c, p, payload, nv, stats, bloom, pstats, sstats,
-                    n_nulls=arr.null_count, page_nulls=pnulls)
+                add(col, c, p, payload, nv, stats, bloom, sstats,
+                    n_nulls=arr.null_count)
         return pa.Table.from_pylist(rows, schema=_BLOCKS_ARROW)
 
     return work, enc
@@ -930,15 +690,13 @@ def _decode_fn(
     _pred_keep emits them: float bounds are ordered bits, and
     ``(pred_col, None, want_null)`` is IS [NOT] NULL.  With ``prune`` the
     function returns exactly the matching rows, through one boolean row
-    mask.  It starts from the page zone maps and null counts (AND across
-    entries, OR inside a union group); a part whose mask is all false
-    returns before any payload decodes.  Then late materialization: every
-    entry is evaluated row by row on its decoded column (_row_mask) and
-    ANDed in.  Every output column decodes whole and takes the mask's
-    rows."""
+    mask (late materialization): every entry is evaluated row by row on
+    its decoded column (_row_mask), AND across entries and OR inside a
+    union group.  A part whose mask is all false returns before any other
+    column decodes; otherwise every output column decodes whole and takes
+    the mask's rows."""
 
-    # arrow image of the output schema, for the all-pages-pruned early exit
-    # (a zero-row table without touching any payload)
+    # arrow image of the output schema, for the no-matching-row early exit
     from pyspark.sql.pandas.types import to_arrow_schema
 
     empty_out = pa.Table.from_pylist([], schema=to_arrow_schema(out_schema))
@@ -953,25 +711,6 @@ def _decode_fn(
         by_col = {r["column"]: r for r in tbl.to_pylist()}
         n_rows = int(next(iter(by_col.values()))["n_rows"])
 
-        def page_keep(pcol, lo, hi) -> np.ndarray | None:
-            """Rows of the pages of ``pcol`` that may satisfy one prune
-            tuple; None = keep all."""
-            prow = by_col.get(pcol)
-            if prow is None:
-                return None
-            if lo is None:
-                # null-predicate page prune: hi is want_null (see
-                # _pred_keep); consults the per-page null counts
-                pnb = prow.get("page_nulls")
-                if not pnb:
-                    return None
-                return _page_keep_nulls(bytes(pnb), n_rows, bool(hi))
-            pstats = prow.get("page_stats")
-            if not pstats:
-                return None  # no page info: keep everything
-            keep_fn = _page_keep_str if isinstance(lo, str) else _page_keep
-            return keep_fn(bytes(pstats), n_rows, lo, hi)
-
         def chunk_arr(column, kind) -> pa.Array:
             row = by_col[column]
             payload = bytes(row["payload"])
@@ -982,26 +721,9 @@ def _decode_fn(
                 row["params"], kind,
             )
 
-        mask = None  # None = every row
-        for group in prunes:
-            # a union group (IN-list, OR) keeps a page if ANY member
-            # admits it; a member without page info keeps all
-            m = np.zeros(n_rows, dtype=bool)
-            for t in group:
-                k = page_keep(*t)
-                if k is None:
-                    break
-                m |= k
-            else:
-                mask = m if mask is None else mask & m
-        if mask is not None and not mask.any():
-            # chunk-level stats passed but EVERY page misses the predicate
-            # (bounds straddle a gap between pages): nothing to decode —
-            # skipping the whole part here is where page stats win most
-            return empty_out
-
         # late materialization: every prune entry is evaluated row by row on
         # its decoded column (AND across entries, OR inside a union group)
+        mask = None  # None = every row
         pred_arrs: dict[str, pa.Array] = {}
         for group in prunes:
             m = np.zeros(n_rows, dtype=bool)
@@ -1084,13 +806,13 @@ def decode_df_pruned(
     payloads are never shuffled or decoded.  The decode tasks return
     exactly the matching rows (_decode_fn).
 
-    ``pred_col`` may be an int/int96_ts column (exact chunk bounds + the
-    intra-chunk page skip), a float column with numeric bounds (exact
-    bounds through the order-preserving bits transform, page skip
-    included), or a str column with str bounds (TRUNCATED chunk bounds,
-    Parquet ColumnIndex truncation semantics — stat_min_str is a prefix
-    of the min, stat_max_str the truncated max's successor, NULL =
-    unbounded, so the filter stays conservative at any value width)."""
+    ``pred_col`` may be an int/int96_ts column (exact chunk bounds), a
+    float column with numeric bounds (exact bounds through the
+    order-preserving bits transform), or a str column with str bounds
+    (TRUNCATED chunk bounds, Parquet Statistics truncation semantics —
+    stat_min_str is a prefix of the min, stat_max_str the truncated max's
+    successor, NULL = unbounded, so the chunk filter stays conservative at
+    any value width)."""
     return decode_df_pruned_multi(
         blocks, key_col, col_kinds, out_schema,
         [("range", pred_col, lo, hi)],
@@ -1109,8 +831,8 @@ def _chunk_meta(
     DataFrames spend one Spark job, whose column filter pushes to the
     blocks scan, and which tests the probes there (_bloom_admits) into
     one more column, ``bloom_ok``, so Bloom-rejected parts never enter
-    the groupBy decode.  No payload, bitset or page blob reaches the
-    driver either way.
+    the groupBy decode.  No payload or bitset reaches the driver either
+    way.
 
     Loud-fails when a predicate column was never encoded into a
     NON-EMPTY blocks table: its keep set would otherwise be empty (an
@@ -1176,7 +898,7 @@ def _check_int64(values) -> None:
 def _range_keep(
     kind: str | None, meta: pa.Table, pred_col: str, lo, hi
 ) -> tuple:
-    """(overlap mask, page bound tuples — a union, see _pred_keep —,
+    """(overlap mask, row-predicate tuples — a union, see _pred_keep —,
     containment mask) over the ``meta`` rows for a range predicate — the
     kind dispatch shared by the pruned decodes AND the metadata
     aggregates, so the bound normalization (numpy scalars, ±0 widening,
@@ -1201,8 +923,6 @@ def _range_keep(
             pc.is_valid(smin), pc.greater_equal(smin, lo),
             pc.is_valid(smax), pc.less_equal(smax, hi),
         )
-        # surviving chunks additionally skip pages via the per-page
-        # truncated string bounds (str twin of the int page stats)
         return overlap, [(pred_col, lo, hi)], contained
     if kind in ("float64", "float32", "int", "int96_ts"):
         lo, hi = _plain_number(lo), _plain_number(hi)
@@ -1231,7 +951,7 @@ def _range_keep(
         # bound spans every image above +inf's: the canonical NaN's and
         # any positive NaN of blocks written before NaN was canonicalized.
         # Their sign-bit NaNs image below -inf's, so with hi NaN a second
-        # range keeps every chunk and page whose minimum lies there.
+        # range keeps every chunk whose minimum lies there.
         ranges = [(
             _float_ordered_scalar(np.inf) + 1 if math.isnan(lo)
             else _float_ordered_scalar(-0.0 if lo == 0 else lo),
@@ -1257,10 +977,10 @@ def _range_keep(
 
 
 def _bloom_probes(spark, col_kinds: dict[str, str], preds: list[tuple]) -> dict:
-    """{(col, v, v): int64 Bloom probe} for every eq/IN value — the page
-    bound tuple of the value (_pred_keep), tested against each chunk's
-    ``bloom`` cell before its part's payloads are read (_chunk_meta,
-    _decode_parts).  Validates kinds and values before any
+    """{(col, v, v): int64 Bloom probe} for every eq/IN value — the
+    row-predicate tuple of the value (_pred_keep), tested against each
+    chunk's ``bloom`` cell before its part's payloads are read
+    (_chunk_meta, _decode_parts).  Validates kinds and values before any
     read (SQL `IN (..., NULL)` is a common source of a bad value).  An
     int value probes as itself; a str value as the JVM's xxhash64 of it,
     the hash the encode built the filter over, from one VALUES query the
@@ -1359,20 +1079,20 @@ def _pred_keeps(
     probes=None,
 ) -> tuple[dict | None, list[tuple]]:
     """(the proven block files or None — see _chunk_meta; per predicate,
-    its keep part_id set and page bound tuples), planned on the driver
+    its keep part_id set and row-predicate tuples), planned on the driver
     from ONE metadata read."""
     files, meta = _chunk_meta(blocks, col_kinds, [p[1] for p in preds], probes)
     return files, [_pred_keep(col_kinds, meta, p) for p in preds]
 
 
 def _pred_keep(col_kinds: dict[str, str], meta: pa.Table, pred: tuple) -> tuple:
-    """(keep part_id set, page bound tuples) for one predicate.
+    """(keep part_id set, row-predicate tuples) for one predicate.
 
-    The page bounds are a list of (col, lo, hi) whose UNION covers every
-    row the predicate can match (range -> one tuple, eq/in -> one [v, v]
-    per value, [] for the vacuous empty IN); null predicates bound pages
-    with the sentinel (col, None, want_null), which routes to the
-    per-page null counts inside _decode_fn.  An eq/in keep set is the
+    The row-predicate tuples are a list of (col, lo, hi) whose UNION is
+    exactly the rows the predicate matches (range -> one tuple, eq/in ->
+    one [v, v] per value, [] for the vacuous empty IN); a null predicate
+    is the sentinel (col, None, want_null).  _decode_fn tests them row by
+    row (_row_mask).  An eq/in keep set is the
     parts the chunk statistics admit and, where ``meta`` has the
     ``bloom_ok`` column (_chunk_meta off the block index), whose Bloom
     filter may hold a probe of the column; on file-direct blocks the
@@ -1381,12 +1101,12 @@ def _pred_keep(col_kinds: dict[str, str], meta: pa.Table, pred: tuple) -> tuple:
     kind = col_kinds.get(pred_col)
     col_rows = pc.equal(meta.column("column"), pred_col)
     if op == "range":
-        overlap, pages, _ = _range_keep(kind, meta, pred_col, *pred[2:4])
-        return _parts(meta, overlap), pages
+        overlap, row_preds, _ = _range_keep(kind, meta, pred_col, *pred[2:4])
+        return _parts(meta, overlap), row_preds
     if op in ("eq", "in"):
         # eq is the single-value IN: both keep a partition when ANY
-        # probe value may be present (stats OR'd per value), and
-        # page-skip via the UNION of each value's degenerate range [v, v]
+        # probe value may be present (stats OR'd per value), and match
+        # rows through the UNION of each value's degenerate range [v, v]
         values = [pred[2]] if op == "eq" else pred[2]
         if not values:
             return set(), []  # x IN () is vacuously false: decode nothing
@@ -1449,16 +1169,12 @@ def decode_df_pruned_multi(
 ) -> DataFrame:
     """Multi-predicate pruning.  ``combine="and"``: a partition decodes
     only when EVERY predicate admits it, and surviving chunks keep only
-    the rows of pages that EVERY predicate's page stats admit (the row
-    masks AND) — selectivities multiply, which is exactly what makes
-    pruning pay at 100x scale.  ``combine="or"``: a partition decodes
-    when ANY predicate admits it, and surviving chunks keep the pages
-    ANY predicate admits (one union group, the masks OR); null members
-    contribute their per-page null-count bounds to the same union, so a
-    chunk admitted only by an IS NULL member still skips its null-free
-    pages.  Together:
-    arbitrary AND-of-atoms and OR-of-atoms prunes (compose row-side for
-    deeper nesting).
+    the rows EVERY predicate matches (the row masks AND) — selectivities
+    multiply, which is exactly what makes pruning pay at 100x scale.
+    ``combine="or"``: a partition decodes when ANY predicate admits it,
+    and surviving chunks keep the rows ANY predicate matches (one union
+    group, the masks OR).  Together: arbitrary AND-of-atoms and
+    OR-of-atoms prunes (compose row-side for deeper nesting).
 
     ``preds`` entries: ``("range", col, lo, hi)``, ``("eq", col, value)``,
     ``("in", col, [v1, ...])``, ``("isnull", col)``, ``("notnull", col)``.
@@ -1469,14 +1185,11 @@ def decode_df_pruned_multi(
     tested against the chunk's filter before its part's payloads are
     read: in that metadata read (_bloom_admits), or on file-direct
     blocks as the first read of the decode task (_decode_parts).
-    Page level: int/str equality rides the zone maps as the degenerate
-    range [v, v], IN-lists as the UNION of their values' ranges, and
-    null predicates skip pages through the per-page null counts
-    (null-free pages for IS NULL, all-null pages for IS NOT NULL).
     Row level: the same atoms are evaluated row by row on their decoded
-    columns (late materialization, see _decode_fn), so the output is
-    exactly the matching rows, for every column kind; no caller filters
-    it again."""
+    columns (late materialization, see _decode_fn) — equality as the
+    degenerate range [v, v], an IN-list as the UNION of its values'
+    ranges — so the output is exactly the matching rows, for every
+    column kind; no caller filters it again."""
     if combine not in ("and", "or"):
         raise ValueError(f"combine must be 'and' or 'or', got {combine!r}")
     preds = _normalize_preds(preds)
@@ -1484,16 +1197,16 @@ def decode_df_pruned_multi(
     files, planned = _pred_keeps(blocks, col_kinds, preds, probes)
     if combine == "and":
         keep = set.intersection(*(k for k, _ in planned))
-        page_prunes = [
-            pages[0] if len(pages) == 1 else pages
-            for _, pages in planned if pages
+        row_prunes = [
+            row_preds[0] if len(row_preds) == 1 else row_preds
+            for _, row_preds in planned if row_preds
         ]
     else:
         keep = set().union(*(k for k, _ in planned))
-        union_tuples = [t for _, pages in planned for t in pages]
-        page_prunes = [union_tuples] if union_tuples else []
+        union_tuples = [t for _, row_preds in planned for t in row_preds]
+        row_prunes = [union_tuples] if union_tuples else []
     return _decode_parts(
-        blocks, files, keep, col_kinds, out_schema, page_prunes or None,
+        blocks, files, keep, col_kinds, out_schema, row_prunes or None,
         probes=probes,
     )
 
@@ -1526,9 +1239,7 @@ def decode_df_pruned_eq(
     (bloom over JVM-side xxhash64 of the values — the query literal is
     hashed on the driver through the same Spark function, in a VALUES
     query that runs no job, so encode and probe agree bit-for-bit; the
-    truncated string zone maps additionally pre-filter).
-    Surviving chunks also page-skip via the zone maps (eq = the
-    degenerate range [v, v])."""
+    truncated string zone maps additionally pre-filter)."""
     return decode_df_pruned_multi(
         blocks, key_col, col_kinds, out_schema, [("eq", pred_col, value)]
     )
@@ -1635,9 +1346,10 @@ def count_filtered_meta(
     [stat_min, stat_max] lie fully inside [lo, hi] — and hold no nulls —
     contribute n_rows straight from the metadata: their payloads are
     never read.  Only BOUNDARY chunks (overlapping but not contained)
-    decode, and their decode tasks return exactly the matching rows.  At scale the
-    contained set dominates for range predicates on clustered columns, so
-    the count degenerates to a metadata aggregation.
+    decode, and their decode tasks return exactly the matching rows (the
+    row-predicate tuples of _range_keep).  At scale the contained set
+    dominates for range predicates on clustered columns, so the count
+    degenerates to a metadata aggregation.
 
     Soundness of containment per kind: int — exact bounds; float — the
     order-preserving bits transform is monotone and the ±0 outer widening
@@ -1657,13 +1369,13 @@ def count_filtered_meta(
     # ONE source of truth for the bound normalization (±0 widening,
     # truncated string semantics, bound validation): the same dispatch
     # every pruned decode uses
-    overlap, pages, contained = _range_keep(kind, meta, pred_col, lo, hi)
+    overlap, row_preds, contained = _range_keep(kind, meta, pred_col, lo, hi)
     contained = pc.and_kleene(contained, pc.equal(meta.column("n_nulls"), 0))
     cnt = pc.sum(pc.filter(meta.column("n_rows"), contained)).as_py() or 0
     boundary = _parts(meta, pc.and_kleene(overlap, pc.invert(contained)))
     if boundary:
         cnt += _aggregate(
-            _decode_col(blocks, pred_col, kind, boundary, [pages], files),
+            _decode_col(blocks, pred_col, kind, boundary, [row_preds], files),
             F.count(F.lit(1)).alias("n"),
         )["n"]
     return _literal_row(blocks, cnt=cnt)
@@ -1693,8 +1405,8 @@ def _decode_col(
     blocks: DataFrame, col: str, kind: str, parts: set[int], prune,
     files: dict | None,
 ) -> DataFrame:
-    """Decode only ``col``'s chunk rows of ``parts`` (page-pruned by
-    ``prune``; ``files`` as _chunk_meta proved them): the metadata
+    """Decode only ``col``'s chunk rows of ``parts`` to the rows ``prune``
+    matches (``files`` as _chunk_meta proved them): the metadata
     aggregates need nothing else, and the other columns' payloads would
     only be read to be dropped."""
     out_schema = T.StructType([T.StructField(col, _SCALAR_TYPES[kind], True)])
@@ -1716,12 +1428,9 @@ def _aggregate(decoded: DataFrame, *aggs) -> dict:
     return obs.get
 
 
-# the blocks columns _decode_fn reads: a file-direct task reads no other
-# (and the ``bloom`` cells first when the call has eq/IN probes)
-_DECODE_COLS = (
-    "part_id", "column", "codec", "params", "payload", "n_values", "n_rows",
-    "checksum", "page_stats", "page_nulls",
-)
+# the blocks columns _decode_fn reads, the same the tokens decoder reads: a
+# file-direct task reads no other (and the ``bloom`` cells first when the
+# call has eq/IN probes)
 _DECODE_SCHEMA = pa.schema([f for f in _BLOCKS_ARROW if f.name in _DECODE_COLS])
 # the columns a file-direct pruned call plans on or reads: the layout
 # proof (_chunk_meta) requires every one of them with its type
@@ -1806,10 +1515,10 @@ def minmax_filtered_meta(
     symmetric argument gives stat_max as a max candidate when
     ``stat_max <= hi``).  Only chunks straddling a bound (some values
     below lo or above hi) decode to exactly their in-range values, in one
-    exchange-free Spark job (_aggregate) that runs when this function is CALLED, not when the
-    result is collected.  Returns a 1-row DataFrame ``(mn, mx)`` holding
-    the already-computed answer as a literal row — SQL semantics: NULL
-    when nothing matches.
+    exchange-free Spark job (_aggregate) that runs when this function is
+    CALLED, not when the result is collected.  Returns a 1-row DataFrame
+    ``(mn, mx)`` holding the already-computed answer as a literal row —
+    SQL semantics: NULL when nothing matches.
 
     Int kinds only, loudly: float stats live in the order-preserving
     bits space and Spark has no longBitsToDouble to map a metadata
@@ -1823,18 +1532,18 @@ def minmax_filtered_meta(
             "metadata min/max needs an int or int96_ts column"
         )
     files, meta = _chunk_meta(blocks, col_kinds, [pred_col])
-    overlap, pages, contained = _range_keep(kind, meta, pred_col, lo, hi)
+    overlap, row_preds, contained = _range_keep(kind, meta, pred_col, lo, hi)
     smin, smax = meta.column("stat_min"), meta.column("stat_max")
     mn = pc.min(pc.filter(smin, _all(overlap, pc.greater_equal(smin, lo))))
     mx = pc.max(pc.filter(smax, _all(overlap, pc.less_equal(smax, hi))))
     mn, mx = mn.as_py(), mx.as_py()
     # chunks straddling a bound (overlapping but not contained — the SAME
-    # classifier count_filtered_meta uses) decode page-pruned for the
-    # exact extremes of their in-range values
+    # classifier count_filtered_meta uses) decode to their in-range
+    # values, whose extremes are exact
     straddle = _parts(meta, pc.and_kleene(overlap, pc.invert(contained)))
     if straddle:
         got = _aggregate(
-            _decode_col(blocks, pred_col, kind, straddle, [pages], files),
+            _decode_col(blocks, pred_col, kind, straddle, [row_preds], files),
             F.min(pred_col).alias("mn"),
             F.max(pred_col).alias("mx"),
         )
@@ -1862,9 +1571,9 @@ def topk_filtered_meta(
     chunks with stat_min <= B can contribute, so the rest never decode.
     Descending mirrors with stat_min / >=.  The walk is a cumulative sum
     over the metadata rows on the driver (one row per chunk); B reaches
-    the page prune as a literal, so BOUNDARY chunks page-skip everything
-    provably beyond it.  If the table holds fewer than k present values
-    there is no B and every chunk decodes (the correct degenerate).  Int
+    the decode tasks as a row predicate, so BOUNDARY chunks return only
+    their values not beyond it.  If the table holds fewer than k present
+    values there is no B and every chunk decodes (the correct degenerate).  Int
     kinds only (float stats live in ordered-bits space; string bounds
     are truncated, not attainable).  Ties at the k-th value are broken
     arbitrarily, exactly like Spark's own orderBy().limit()."""
@@ -1891,7 +1600,7 @@ def topk_filtered_meta(
         b = walk.column(edge)[int(reach[0])].as_py()
         cmp = pc.less_equal if ascending else pc.greater_equal
         keep = _parts(meta, cmp(meta.column(cmp_col), b))
-        # boundary chunks page-skip everything provably beyond B
+        # boundary chunks return only their values not beyond B
         prune = (col, -(2**63), b) if ascending else (col, b, 2**63 - 1)
     dec = _decode_col(blocks, col, kind, keep, prune, files)
     return (
@@ -2053,7 +1762,7 @@ def roundtrip(
     not shuffled, and not deserialized back.  The encode/decode kernels
     themselves are the unchanged encode_df/decode_df bodies, so output
     rows equal the decode_df(encode_df(...)) composition; pruning
-    artifacts (stats/blooms/page maps) are skipped because the in-worker
+    artifacts (stats/blooms) are skipped because the in-worker
     blocks are discarded immediately — nothing could ever read them
     (encode_df proper, and so roundtrip_filtered, still builds them all).
 

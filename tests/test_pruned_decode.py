@@ -21,15 +21,9 @@ def keyed_df(spark):
     )
 
 
-def _same_rows(mask, ranges, n: int) -> bool:
-    """True when a page parser's per-row mask keeps exactly the rows of
-    the ``(start, end)`` row ranges."""
-    import numpy as np
-
-    want = np.zeros(n, dtype=bool)
-    for s, e in ranges:
-        want[s:e] = True
-    return mask is not None and np.array_equal(mask, want)
+# the row step the multi-thousand-row inputs below are sized in: their
+# chunks span several such steps and their predicates fall inside one
+ROWS = 4096
 
 
 def test_blocks_carry_minmax_stats(spark, keyed_df):
@@ -370,17 +364,13 @@ def test_filtered_results_outlive_later_calls(spark):
         assert node not in plan
 
 
-# -------------------------------------------- page-level (sub-chunk) zone maps
+# ---------------------------------------------- rows inside large chunks
 
-def test_page_stats_subrange_skip_and_exactness(spark):
-    """Chunks bigger than PAGE_ROWS carry per-page min/max, and the pruned
-    decode skips intra-chunk sub-ranges: rows surfaced BEFORE the exact
-    filter stay well under the surviving chunk's row count, while the
-    filtered result is exact.  Covers both decode paths: `v` is forced to
-    bitpack (payload-slice fast path) and `w` carries nulls (full decode +
-    row slice fallback)."""
+def test_range_prune_in_large_chunk_exact(spark):
+    """A narrow range inside a ~10k-row surviving chunk returns exactly
+    the rows of a plain Spark filter, not the chunk: `v` is forced to
+    bitpack and `w` carries nulls."""
     from parquet_python_spark.operators.generic_codec import (
-        PAGE_ROWS,
         _arrow_safe_schema,
         decode_df_pruned,
         encode_df,
@@ -392,53 +382,22 @@ def test_page_stats_subrange_skip_and_exactness(spark):
         F.when(F.col("id") % 5 == 0, None).otherwise(F.col("id")).alias("w"),
     )
     kinds = {"k": "int", "v": "int", "w": "int"}
-    # 2 range parts -> ~10k-row chunks, ceil(10000/4096)=3 pages each
+    # 2 range parts -> ~10k-row chunks
     blocks = encode_df(
         df, "k", kinds, n_parts=2, partitioning="range",
         forced_codecs={"v": "bitpack"},
     ).cache()
-    krows = blocks.filter(F.col("column") == "k").collect()
-    assert all(r["page_stats"] is not None for r in krows)
-    # null-bearing columns keep page stats too (round 5): null row slots
-    # carry sentinels, so bounds stay exact over present values
-    wrows = blocks.filter(F.col("column") == "w").collect()
-    assert all(r["page_stats"] is not None for r in wrows)
 
     lo, hi = 5_000, 6_000
     out_schema = _arrow_safe_schema(df.select(*kinds).schema, kinds)
-    dec = decode_df_pruned(blocks, "k", kinds, out_schema, "k", lo, hi).cache()
-    pre_filter = dec.count()
-    # chunk-level pruning alone surfaces the whole surviving 10k chunk;
-    # page skip cuts that to the one intersecting page (+ boundary slack)
-    assert pre_filter <= 2 * PAGE_ROWS, pre_filter
-    assert pre_filter >= hi - lo + 1
-    got = sorted(
-        (r["k"], r["v"], r["w"])
-        for r in dec.filter((F.col("k") >= lo) & (F.col("k") <= hi)).collect()
-    )
+    dec = decode_df_pruned(blocks, "k", kinds, out_schema, "k", lo, hi)
+    got = sorted((r["k"], r["v"], r["w"]) for r in dec.collect())
     exp = sorted(
         (r["k"], r["v"], r["w"])
         for r in df.filter((F.col("k") >= lo) & (F.col("k") <= hi)).collect()
     )
-    assert got == exp
-    dec.unpersist()
+    assert got == exp and len(got) == hi - lo + 1
     blocks.unpersist()
-
-
-def test_page_stats_all_pages_survive_is_noop():
-    import numpy as np
-
-    from parquet_python_spark.operators.generic_codec import (
-        _page_keep,
-        _page_stats_blob,
-    )
-
-    vals = np.arange(10_000, dtype=np.int64)
-    blob = _page_stats_blob(vals)
-    # predicate covering everything -> None (decode untouched, zero overhead)
-    assert _page_keep(blob, 10_000, -5, 10**9) is None
-    # single-page chunks carry no page stats at all
-    assert _page_stats_blob(np.arange(100)) is None
 
 
 # ------------------------------------------------ string (truncated) zone maps
@@ -595,8 +554,7 @@ def test_float_ordered_bits_is_monotone():
 
 def test_float_zone_maps_prune_and_exact(spark):
     """decode_df_pruned on a float64 predicate: chunk skip via the
-    ordered-bits stats, page skip inside surviving chunks, exact result
-    after the caller's filter."""
+    ordered-bits stats, and exactly the rows of a plain Spark filter."""
     from parquet_python_spark.operators.generic_codec import (
         _arrow_safe_schema,
         decode_df_pruned,
@@ -613,21 +571,13 @@ def test_float_zone_maps_prune_and_exact(spark):
     ).cache()
     xrows = blocks.filter(F.col("column") == "x").collect()
     assert all(r["stat_min"] is not None for r in xrows)
-    # chunks are 5k rows -> 2 pages each; x is monotone in k so both
-    # levels of stats are selective
-    assert all(r["page_stats"] is not None for r in xrows)
-    lo, hi = -10.0, -5.0  # k in [4000, 4500]: one chunk, one page
+    # chunks are 5k rows; x is monotone in k, so the stats are selective
+    lo, hi = -10.0, -5.0  # k in [4000, 4500]: one chunk
     out_schema = _arrow_safe_schema(df.select(*kinds).schema, kinds)
-    dec = decode_df_pruned(blocks, "k", kinds, out_schema, "x", lo, hi).cache()
-    pre = dec.count()
-    assert pre <= 5_000, pre  # at most one surviving chunk's pages
-    got = sorted(
-        r["k"]
-        for r in dec.filter((F.col("x") >= lo) & (F.col("x") <= hi)).collect()
-    )
+    dec = decode_df_pruned(blocks, "k", kinds, out_schema, "x", lo, hi)
+    got = sorted(r["k"] for r in dec.collect())
     exp = list(range(4_000, 4_501))
     assert got == exp
-    dec.unpersist()
     blocks.unpersist()
 
 
@@ -671,8 +621,8 @@ def test_float_int_routes_end_to_end(spark, tmp_path):
     """Lineitem-shaped doubles (integer/100 discounts, integer quantities,
     two-decimal prices, plus -0.0, NaN, ±inf and nulls) encode through the
     integer routes, round-trip bit-identically, stay within the whole
-    column's reference dictionary bytes, and a page-pruned price range
-    over a multi-page int_f64 chunk equals the pyarrow oracle."""
+    column's reference dictionary bytes, and a pruned price range inside
+    a >ROWS-row int_f64 chunk equals the pyarrow oracle."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -680,7 +630,6 @@ def test_float_int_routes_end_to_end(spark, tmp_path):
 
     from parquet_python_spark.codecs import encode_dict
     from parquet_python_spark.operators.generic_codec import (
-        PAGE_ROWS,
         _arrow_safe_schema,
         _def_levels_blob,
         decode_df,
@@ -693,7 +642,7 @@ def test_float_int_routes_end_to_end(spark, tmp_path):
     k = np.arange(n)
     disc = rng.integers(0, 11, n) / 100.0
     qty = rng.integers(1, 51, n).astype(np.float64)
-    # monotone in k, so page zone maps prune inside a chunk
+    # monotone in k, so a narrow price range lies inside one chunk
     price = (90_000 + k * 37 + rng.integers(0, 37, n)) / 100.0
     # specials ride the low-cardinality columns' dict over the IEEE bits; a
     # price chunk holding them would keep plain_f64 (no exceptions stored)
@@ -740,23 +689,20 @@ def test_float_int_routes_end_to_end(spark, tmp_path):
     assert full.column("k").to_pylist() == k.tolist()
     bits_equal(full, tbl)
 
-    # one page of the price chunk holding k ~ 25 000
+    # a few rows of the price chunk holding k ~ 25 000
     lo, hi = 10_150.0, 10_160.0
     assert any(
         r["column"] == "l_extendedprice" and r["stat_min"] is not None
-        and "e" in r["params"] and r["n_rows"] > PAGE_ROWS
+        and "e" in r["params"] and r["n_rows"] > ROWS
         for r in rows
     )
     dec = decode_df_pruned(
         blocks, "k", kinds, out_schema, "l_extendedprice", lo, hi
     ).toArrow()
-    assert dec.num_rows < n // 4  # pages skipped inside the surviving chunk
-    x = dec.column("l_extendedprice")
-    got = dec.filter(pc.and_(pc.greater_equal(x, lo), pc.less_equal(x, hi)))
     xo = tbl.column("l_extendedprice")
     want = tbl.filter(pc.and_(pc.greater_equal(xo, lo), pc.less_equal(xo, hi)))
-    assert want.num_rows > 0
-    bits_equal(got.sort_by("k"), want)
+    assert want.num_rows > 0 and dec.num_rows == want.num_rows
+    bits_equal(dec.sort_by("k"), want)
     blocks.unpersist()
 
 
@@ -924,97 +870,13 @@ def test_roundtrip_filtered_null_end_to_end(spark):
     assert got2 == exp2
 
 
-# --------------------------------------------- string page-level zone maps
+# ------------------------------------------ string and nullable ranges
 
 
-def test_str_page_stats_blob_semantics():
-    """Kernel-level: per-page truncated bounds parse back and classify
-    pages correctly, including the unbounded-upper page and the format
-    tag that keeps int/str blobs from cross-parsing."""
-    import pyarrow as pa
-
+def test_string_range_in_large_chunk_exact(spark):
+    """Spark e2e: a narrow string range inside a ~10k-row string chunk
+    returns exactly the rows of a plain Spark filter."""
     from parquet_python_spark.operators.generic_codec import (
-        PAGE_ROWS,
-        STR_STAT_CHARS,
-        _page_keep,
-        _page_keep_str,
-        _str_page_stats_blob,
-    )
-
-    n = 3 * PAGE_ROWS + 100
-    vals = [f"k{i:08d}" for i in range(n)]  # sorted, < cap chars: exact bounds
-    arr = pa.array(vals)
-    blob = _str_page_stats_blob(arr)
-    assert blob is not None
-    # single-page chunk: no blob
-    assert _str_page_stats_blob(pa.array(vals[:100])) is None
-    # narrow range inside page 1 -> exactly that page survives
-    lo, hi = f"k{PAGE_ROWS + 10:08d}", f"k{PAGE_ROWS + 20:08d}"
-    assert _same_rows(
-        _page_keep_str(blob, n, lo, hi), [(PAGE_ROWS, 2 * PAGE_ROWS)], n
-    )
-    # range covering everything -> None (no-op)
-    assert _page_keep_str(blob, n, "k", "l") is None
-    # unbounded upper: a page whose truncated max can't increment keeps
-    # every probe above its lower bound
-    big = chr(0x10FFFF) * (STR_STAT_CHARS + 4)
-    vals2 = [f"a{i:08d}" for i in range(PAGE_ROWS)] + [big] * PAGE_ROWS
-    blob2 = _str_page_stats_blob(pa.array(vals2))
-    r = _page_keep_str(blob2, 2 * PAGE_ROWS, big, big + "x")
-    assert _same_rows(r, [(PAGE_ROWS, 2 * PAGE_ROWS)], 2 * PAGE_ROWS)
-    # tag mismatch fails loudly in both directions
-    with pytest.raises(ValueError, match="str parser"):
-        _page_keep_str(
-            int(PAGE_ROWS).to_bytes(4, "little") + b"\0" * 16, n, "a", "b"
-        )
-    with pytest.raises(ValueError, match="int parser"):
-        _page_keep(blob, n, 0, 10)
-
-
-def test_page_stats_blobs_corrupt_raise():
-    """Page-stats and page-null blobs sit outside the payload CRC: a
-    truncated blob or one whose header says zero rows per page fails
-    loudly in every parser instead of dropping pages."""
-    import numpy as np
-    import pyarrow as pa
-
-    from parquet_python_spark.operators.generic_codec import (
-        PAGE_ROWS,
-        _page_keep,
-        _page_keep_nulls,
-        _page_keep_str,
-        _page_nulls_blob,
-        _page_stats_blob,
-        _str_page_stats_blob,
-    )
-
-    n = 3 * PAGE_ROWS
-    int_blob = _page_stats_blob(np.arange(n))
-    str_blob = _str_page_stats_blob(pa.array([f"v{i:06d}" for i in range(n)]))
-    null_blob = _page_nulls_blob(np.arange(n) % 3 > 0)
-    probe = f"v{n - 1:06d}"  # a value of the last page
-    parsers = [
-        (int_blob, lambda b: _page_keep(b, n, 5000, 5000)),
-        (str_blob, lambda b: _page_keep_str(b, n, probe, probe)),
-        (null_blob, lambda b: _page_keep_nulls(b, n, True)),
-    ]
-    for blob, parse in parsers:
-        parse(blob)  # intact blobs parse
-        for cut in (1, 3, 8):
-            with pytest.raises(ValueError):
-                parse(blob[:-cut])
-        # the header with its page_rows cleared (a str blob keeps its tag)
-        head = int.from_bytes(blob[:4], "little") & ~PAGE_ROWS
-        with pytest.raises(ValueError):
-            parse(head.to_bytes(4, "little") + blob[4:])
-
-
-def test_string_page_stats_prune_and_exact(spark):
-    """Spark e2e: a >PAGE_ROWS string chunk skips intra-chunk pages on a
-    narrow string range — rows surfaced before the exact filter stay under
-    the surviving chunk's size — and the filtered result is exact."""
-    from parquet_python_spark.operators.generic_codec import (
-        PAGE_ROWS,
         _arrow_safe_schema,
         decode_df_pruned,
         encode_df,
@@ -1025,40 +887,30 @@ def test_string_page_stats_prune_and_exact(spark):
         F.concat(F.lit("d"), F.lpad(F.col("id").cast("string"), 8, "0")).alias("s"),
     )
     kinds = {"k": "int", "s": "str"}
-    # 2 range parts -> ~10k-row chunks, 3 pages each
+    # 2 range parts -> ~10k-row chunks
     blocks = encode_df(
         df, "k", kinds, n_parts=2, partitioning="range"
     ).cache()
-    srows = blocks.filter(F.col("column") == "s").collect()
-    assert all(r["page_stats"] is not None for r in srows)
     lo, hi = "d00005000", "d00006000"
     out_schema = _arrow_safe_schema(df.select(*kinds).schema, kinds)
-    dec = decode_df_pruned(blocks, "k", kinds, out_schema, "s", lo, hi).cache()
-    pre_filter = dec.count()
-    assert pre_filter <= 2 * PAGE_ROWS, pre_filter
-    assert pre_filter >= 1001
-    got = sorted(
-        (r["k"], r["s"])
-        for r in dec.filter((F.col("s") >= lo) & (F.col("s") <= hi)).collect()
-    )
+    dec = decode_df_pruned(blocks, "k", kinds, out_schema, "s", lo, hi)
+    got = sorted((r["k"], r["s"]) for r in dec.collect())
     exp = sorted(
         (r["k"], r["s"])
         for r in df.filter((F.col("s") >= lo) & (F.col("s") <= hi)).collect()
     )
-    assert got == exp
-    dec.unpersist()
+    assert got == exp and len(got) == 1001
     blocks.unpersist()
 
 
-def test_nullable_page_stats_prune_and_exact(spark):
-    """Round 5: null-bearing chunks keep page-granularity pruning for all
-    three stat kinds.  Null slots never widen page bounds (sentinel mask),
-    a float NaN *data* value is still honored as greatest, and an all-null
-    string page is skipped outright."""
+def test_nullable_ranges_in_large_chunks_exact(spark):
+    """Null-bearing ~10k-row chunks of all three stat kinds return exactly
+    the rows of a plain Spark filter for a narrow range: nulls never
+    match, a float NaN *data* value is honored as greatest, and a range
+    over an all-null stretch of a string chunk returns no row."""
     import math
 
     from parquet_python_spark.operators.generic_codec import (
-        PAGE_ROWS,
         _arrow_safe_schema,
         decode_df_pruned,
         encode_df,
@@ -1074,75 +926,54 @@ def test_nullable_page_stats_prune_and_exact(spark):
         .when(F.col("id") == 778, F.lit(float("nan")))
         .otherwise(F.col("id").cast("double"))
         .alias("f"),
-        # str: an entire aligned page range is all-null
+        # str: an entire aligned ROWS-row stretch is all-null
         F.when(
-            (F.col("id") >= PAGE_ROWS) & (F.col("id") < 2 * PAGE_ROWS), None
+            (F.col("id") >= ROWS) & (F.col("id") < 2 * ROWS), None
         )
         .otherwise(F.concat(F.lit("d"), F.lpad(F.col("id").cast("string"), 8, "0")))
         .alias("s"),
     )
     kinds = {"k": "int", "w": "int", "f": "float64", "s": "str"}
-    # 2 range parts -> ~10k-row chunks, 3 pages each
+    # 2 range parts -> ~10k-row chunks
     blocks = encode_df(df, "k", kinds, n_parts=2, partitioning="range").cache()
-    for c in ("w", "f", "s"):
-        rows = blocks.filter(F.col("column") == c).collect()
-        assert all(r["page_stats"] is not None for r in rows), c
 
     out_schema = _arrow_safe_schema(df.select(*kinds).schema, kinds)
-    # --- int nullable predicate: narrow range -> page skip + exact rows
-    dec = decode_df_pruned(blocks, "k", kinds, out_schema, "w", 5_000, 6_000).cache()
-    assert dec.count() <= 2 * PAGE_ROWS
-    got = sorted(
-        (r["k"], r["w"])
-        for r in dec.filter((F.col("w") >= 5_000) & (F.col("w") <= 6_000)).collect()
-    )
+    # --- int nullable predicate: narrow range -> exact rows
+    dec = decode_df_pruned(blocks, "k", kinds, out_schema, "w", 5_000, 6_000)
+    got = sorted((r["k"], r["w"]) for r in dec.collect())
     exp = sorted(
         (r["k"], r["w"])
         for r in df.filter((F.col("w") >= 5_000) & (F.col("w") <= 6_000)).collect()
     )
-    assert got == exp
-    dec.unpersist()
-    # --- float nullable predicate: exactness incl. null weave; the page
-    # holding the NaN data value survives a top-end range (NaN greatest)
+    assert got == exp and len(got) == 800
+    # --- float nullable predicate: exactness incl. null weave; the NaN
+    # data value matches a NaN range (NaN greatest)
     dec_f = decode_df_pruned(
         blocks, "k", kinds, out_schema, "f", 5_000.0, 6_000.0
-    ).cache()
-    assert dec_f.count() <= 2 * PAGE_ROWS
-    got_f = sorted(
-        (r["k"], r["f"])
-        for r in dec_f.filter((F.col("f") >= 5_000.0) & (F.col("f") <= 6_000.0)).collect()
     )
+    got_f = sorted((r["k"], r["f"]) for r in dec_f.collect())
     exp_f = sorted(
         (r["k"], r["f"])
         for r in df.filter((F.col("f") >= 5_000.0) & (F.col("f") <= 6_000.0)).collect()
     )
     assert got_f == exp_f
-    nan_page = decode_df_pruned(
+    nan_rows = decode_df_pruned(
         blocks, "k", kinds, out_schema, "f", float("nan"), float("nan")
-    )
-    assert any(
-        r["k"] == 778 and math.isnan(r["f"])
-        for r in nan_page.filter(F.isnan("f")).collect()
-    )
-    dec_f.unpersist()
-    # --- str: the all-null page is skipped for a range that targets it
-    lo_s = f"d{PAGE_ROWS + 10:08d}"
-    hi_s = f"d{PAGE_ROWS + 500:08d}"
-    dec_s = decode_df_pruned(blocks, "k", kinds, out_schema, "s", lo_s, hi_s).cache()
-    # every row in [PAGE_ROWS, 2*PAGE_ROWS) is null in s, so the only
-    # surviving rows come from boundary pages — and no matches exist
-    assert dec_s.filter((F.col("s") >= lo_s) & (F.col("s") <= hi_s)).count() == 0
-    assert dec_s.count() < n // 2  # skipped at least the all-null page
-    dec_s.unpersist()
+    ).collect()
+    assert [r["k"] for r in nan_rows] == [778] and math.isnan(nan_rows[0]["f"])
+    # --- str: a range that targets the all-null stretch matches nothing
+    lo_s = f"d{ROWS + 10:08d}"
+    hi_s = f"d{ROWS + 500:08d}"
+    dec_s = decode_df_pruned(blocks, "k", kinds, out_schema, "s", lo_s, hi_s)
+    assert dec_s.count() == 0
     blocks.unpersist()
 
 
 def test_multi_predicate_prune_conjunction(spark):
-    """Conjunctive pruning intersects keep sets and page ranges: a
-    (range AND eq AND notnull) conjunction decodes no more rows than the
-    tightest single predicate, and the exact filtered result matches."""
+    """Conjunctive pruning intersects keep sets and row masks: a
+    (range AND eq AND notnull) conjunction returns exactly the rows of the
+    plain Spark filter, fewer than the tightest single predicate."""
     from parquet_python_spark.operators.generic_codec import (
-        PAGE_ROWS,
         _arrow_safe_schema,
         decode_df_pruned,
         decode_df_pruned_multi,
@@ -1166,23 +997,21 @@ def test_multi_predicate_prune_conjunction(spark):
         ("eq", "v", 11),
         ("notnull", "t"),
     ]
-    dec = decode_df_pruned_multi(blocks, "k", kinds, out_schema, preds).cache()
-    pre = dec.count()
+    dec = decode_df_pruned_multi(blocks, "k", kinds, out_schema, preds)
     single = decode_df_pruned(
         blocks, "k", kinds, out_schema, "k", 5_000, 6_000
     ).count()
-    assert pre <= single <= 2 * PAGE_ROWS
+    assert single == 1_001
     exact = (
         (F.col("k") >= 5_000) & (F.col("k") <= 6_000)
         & (F.col("v") == 11) & F.col("t").isNotNull()
     )
-    got = sorted(tuple(r) for r in dec.filter(exact).collect())
+    got = sorted(tuple(r) for r in dec.collect())
     exp = sorted(tuple(r) for r in df.filter(exact).collect())
-    assert got == exp and len(got) > 0
-    dec.unpersist()
+    assert got == exp and 0 < len(got) < single
 
-    # two DISJOINT range predicates on the same column: page-range
-    # intersection goes empty -> zero rows decoded, still no error
+    # two DISJOINT range predicates on the same column: the row-mask
+    # intersection goes empty -> zero rows, still no error
     empty = decode_df_pruned_multi(
         blocks, "k", kinds, out_schema,
         [("range", "k", 100, 200), ("range", "k", 30_000, 30_100)],
@@ -1208,11 +1037,10 @@ def test_multi_predicate_prune_conjunction(spark):
 
 def test_in_list_prune_union_and_exact(spark):
     """IN-list pruning: chunk keep is any-of (stats OR'd, Bloom any-probe),
-    page skip is the UNION of each value's [v, v] range — two values in
-    distant pages decode ~2 pages, not the chunk; empty IN decodes
-    nothing; the union group intersects with other predicates."""
+    the row mask is the UNION of each value's [v, v] range — two distant
+    values of one chunk return those two rows, not the chunk; empty IN
+    decodes nothing; the union group intersects with other predicates."""
     from parquet_python_spark.operators.generic_codec import (
-        PAGE_ROWS,
         _arrow_safe_schema,
         decode_df_pruned_multi,
         encode_df,
@@ -1224,29 +1052,23 @@ def test_in_list_prune_union_and_exact(spark):
         F.concat(F.lit("t"), F.lpad(F.col("id").cast("string"), 8, "0")).alias("t"),
     )
     kinds = {"k": "int", "t": "str"}
-    # 2 range parts -> ~20k-row chunks, 5 pages each
+    # 2 range parts -> ~20k-row chunks
     blocks = encode_df(df, "k", kinds, n_parts=2, partitioning="range").cache()
     out_schema = _arrow_safe_schema(df.select(*kinds).schema, kinds)
 
-    # two int values in the SAME chunk but distant pages
+    # two int values in the SAME chunk, far apart
     vals = [100, 17_000]
     dec = decode_df_pruned_multi(
         blocks, "k", kinds, out_schema, [("in", "k", vals)]
-    ).cache()
-    assert dec.count() <= 2 * PAGE_ROWS  # union of two pages, not 20k rows
-    got = sorted(r["k"] for r in dec.filter(F.col("k").isin(vals)).collect())
-    assert got == vals
-    dec.unpersist()
+    )
+    assert sorted(r["k"] for r in dec.collect()) == vals  # not 20k rows
 
     # str IN-list: probes hashed JVM-side, same union semantics
     svals = ["t00000100", "t00017000", "zzz-not-there"]
     dec_s = decode_df_pruned_multi(
         blocks, "k", kinds, out_schema, [("in", "t", svals)]
-    ).cache()
-    assert dec_s.count() <= 2 * PAGE_ROWS
-    got_s = sorted(r["t"] for r in dec_s.filter(F.col("t").isin(svals)).collect())
-    assert got_s == ["t00000100", "t00017000"]
-    dec_s.unpersist()
+    )
+    assert sorted(r["t"] for r in dec_s.collect()) == ["t00000100", "t00017000"]
 
     # empty IN-list: vacuously false, zero rows, no error
     assert (
@@ -1260,12 +1082,8 @@ def test_in_list_prune_union_and_exact(spark):
     dec_i = decode_df_pruned_multi(
         blocks, "k", kinds, out_schema,
         [("in", "k", vals), ("range", "k", 0, 1_000)],
-    ).cache()
-    assert dec_i.count() <= PAGE_ROWS
-    assert sorted(
-        r["k"] for r in dec_i.filter(F.col("k").isin(vals)).collect()
-    ) == [100]
-    dec_i.unpersist()
+    )
+    assert [r["k"] for r in dec_i.collect()] == [100]
     blocks.unpersist()
 
 
@@ -1275,8 +1093,8 @@ def test_persisted_blocks_prune_pushes_to_scan(spark, tmp_path, monkeypatch):
     no exchange, no join, one task per file holding a kept part.  On a
     persisted (DataFrame-held) copy the driver-planned keep set reaches
     the cached scan as a pushed part_id filter, with no join.  Results
-    stay exact through the parquet round-trip (n_nulls/page_stats/str
-    bounds survive) on both."""
+    stay exact through the parquet round-trip (n_nulls/str bounds
+    survive) on both."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
@@ -1395,12 +1213,11 @@ def test_persisted_blocks_prune_pushes_to_scan(spark, tmp_path, monkeypatch):
 
 
 def test_or_predicate_prune_union_and_exact(spark):
-    """Disjunctive pruning: OR of two distant ranges decodes ~2 pages via
-    the union group; an OR containing a null predicate disables page
-    pruning but keeps chunk pruning; results are exact; generator IN
-    values survive the prune + row-filter double read."""
+    """Disjunctive pruning: OR of two distant ranges returns exactly their
+    rows via the union group; an OR containing a null predicate keeps
+    chunk pruning; results are exact; generator IN values survive the
+    Bloom-probe + prune double read."""
     from parquet_python_spark.operators.generic_codec import (
-        PAGE_ROWS,
         _arrow_safe_schema,
         decode_df_pruned_multi,
         encode_df,
@@ -1416,39 +1233,22 @@ def test_or_predicate_prune_union_and_exact(spark):
     blocks = encode_df(df, "k", kinds, n_parts=4, partitioning="range").cache()
     out_schema = _arrow_safe_schema(df.select(*kinds).schema, kinds)
 
-    # OR of two distant narrow ranges on k: union of ~2 pages
+    # OR of two distant narrow ranges on k: exactly their rows
     preds = [("range", "k", 100, 200), ("range", "k", 30_000, 30_100)]
     dec = decode_df_pruned_multi(
         blocks, "k", kinds, out_schema, preds, combine="or"
-    ).cache()
-    assert dec.count() <= 2 * PAGE_ROWS
-    got = sorted(
-        r["k"]
-        for r in dec.filter(
-            ((F.col("k") >= 100) & (F.col("k") <= 200))
-            | ((F.col("k") >= 30_000) & (F.col("k") <= 30_100))
-        ).collect()
     )
+    got = sorted(r["k"] for r in dec.collect())
     assert got == list(range(100, 201)) + list(range(30_000, 30_101))
-    dec.unpersist()
 
-    # OR with isnull: page pruning off (the null member has no page
-    # bound), chunk union still prunes — nulls live in the first part only
+    # OR with isnull: the chunk union still prunes — nulls live in the
+    # first part only — and the rows are exact
     preds2 = [("isnull", "w"), ("range", "k", 30_000, 30_100)]
     dec2 = decode_df_pruned_multi(
         blocks, "k", kinds, out_schema, preds2, combine="or"
-    ).cache()
-    pre2 = dec2.count()
-    assert pre2 < n  # chunk-level union still skipped non-matching parts
-    got2 = sorted(
-        r["k"]
-        for r in dec2.filter(
-            F.col("w").isNull()
-            | ((F.col("k") >= 30_000) & (F.col("k") <= 30_100))
-        ).collect()
     )
+    got2 = sorted(r["k"] for r in dec2.collect())
     assert got2 == list(range(2_000)) + list(range(30_000, 30_101))
-    dec2.unpersist()
     with pytest.raises(ValueError, match="combine"):
         decode_df_pruned_multi(
             blocks, "k", kinds, out_schema, preds, combine="xor"
@@ -1469,91 +1269,41 @@ def test_or_predicate_prune_union_and_exact(spark):
 
 
 def test_prune_algebra_properties():
-    """Hypothesis: the zone-map page classifiers never produce a false
-    negative (every matching row is inside the kept mask) under random
-    values, nulls and bounds."""
-    import numpy as np
+    """Hypothesis: the truncated chunk-level string bounds (_str_stats)
+    stay conservative under random values, nulls and widths: the lower
+    bound sorts at or below the minimum and every value sorts at or below
+    a finite upper bound."""
     import pyarrow as pa
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from parquet_python_spark.operators.generic_codec import (
-        PAGE_ROWS,
-        _page_keep,
-        _page_keep_str,
-        _page_stats_blob,
-        _str_page_stats_blob,
-        _str_stats,
-    )
+    from parquet_python_spark.operators.generic_codec import _str_stats
 
-    SET = settings(max_examples=60, deadline=None)
-
-    # --- int page stats with nulls: the kept mask covers every matching row
-    @SET
-    @given(
-        st.lists(
-            st.tuples(st.integers(-1000, 1000), st.booleans()),
-            min_size=1,
-            max_size=3 * PAGE_ROWS,
-        ),
-        st.integers(-1000, 1000),
-        st.integers(0, 400),
-    )
-    def check_int_pages(rows, lo, width):
-        hi = lo + width
-        vals = np.array([v for v, _ in rows], dtype=np.int64)
-        valid = np.array([ok for _, ok in rows], dtype=bool)
-        blob = _page_stats_blob(vals, valid if not valid.all() else None)
-        if blob is None:
-            return  # single page: chunk stats cover it
-        kept = _page_keep(blob, len(vals), lo, hi)
-        if kept is None:
-            return  # everything kept
-        matches = valid & (vals >= lo) & (vals <= hi)
-        assert not (matches & ~kept).any()
-
-    check_int_pages()
-
-    # --- str page stats: truncated bounds stay conservative
     text = st.text(
         alphabet=st.characters(min_codepoint=32, max_codepoint=0x2FF),
         max_size=24,
     )
 
-    @SET
-    @given(
-        st.lists(st.one_of(st.none(), text), min_size=1, max_size=2 * PAGE_ROWS),
-        text,
-        text,
-    )
-    def check_str_pages(vals, b1, b2):
-        lo, hi = min(b1, b2), max(b1, b2)
-        arr = pa.array(vals, type=pa.string())
-        blob = _str_page_stats_blob(arr)
-        if blob is None:
+    @settings(max_examples=60, deadline=None)
+    @given(st.lists(st.one_of(st.none(), text), min_size=1, max_size=2 * ROWS))
+    def check_str_stats(vals):
+        present = [v for v in vals if v is not None]
+        clo, chi = _str_stats(pa.array(vals, type=pa.string()))
+        if not present:
+            assert (clo, chi) == (None, None)
             return
-        kept = _page_keep_str(blob, len(vals), lo, hi)
-        if kept is None:
-            return
-        matches = {
-            i for i, v in enumerate(vals) if v is not None and lo <= v <= hi
-        }
-        assert all(kept[i] for i in matches)
-        # chunk-level bounds conservative too
-        clo, chi = _str_stats(arr)
-        if clo is not None and matches:
-            assert clo <= max(v for v in vals if v is not None)
-            if chi is not None:
-                assert all(v <= chi for v in vals if v is not None)
+        assert clo <= min(present)
+        if chi is not None:
+            assert all(v <= chi for v in present)
 
-    check_str_pages()
+    check_str_stats()
 
 
 def test_count_filtered_meta_exact_and_metadata_only(spark):
     """Metadata-first COUNT: fully-contained chunks contribute n_rows
     without decoding (evidence: the contained classifier claims chunks),
-    boundary chunks decode page-pruned; the total is exact for int, float
-    and str predicates, with and without nulls."""
+    boundary chunks decode to their matching rows; the total is exact for
+    int, float and str predicates, with and without nulls."""
     from parquet_python_spark.operators.generic_codec import (
         count_filtered_meta,
         encode_df,
@@ -1912,44 +1662,19 @@ def test_pruned_calls_spark_job_counts(spark, tmp_path):
     blocks.unpersist()
 
 
-def test_page_null_counts_prune_and_exact(spark):
-    """Per-page null counts: IS NULL skips null-free pages of surviving
-    chunks and IS NOT NULL skips all-null pages; results stay exact; the
-    kernel classifies pages correctly including the partial last page."""
-    import numpy as np
-
+def test_null_predicates_in_large_chunk_exact(spark):
+    """IS NULL / IS NOT NULL on one 20k-row chunk whose nulls fill a
+    200-row stretch return exactly the rows of a plain Spark filter."""
     from parquet_python_spark.operators.generic_codec import (
-        PAGE_ROWS,
         _arrow_safe_schema,
-        _page_keep_nulls,
-        _page_nulls_blob,
         decode_df_pruned_multi,
         encode_df,
     )
 
-    # kernel: nulls only inside page 1; partial all-null last page
-    n = 3 * PAGE_ROWS + 100
-    valid = np.ones(n, dtype=bool)
-    valid[PAGE_ROWS + 10 : PAGE_ROWS + 50] = False  # some nulls in page 1
-    valid[3 * PAGE_ROWS :] = False                  # last page all-null
-    blob = _page_nulls_blob(valid)
-    assert _same_rows(
-        _page_keep_nulls(blob, n, True),
-        [(PAGE_ROWS, 2 * PAGE_ROWS), (3 * PAGE_ROWS, n)],
-        n,
-    )
-    assert _same_rows(
-        _page_keep_nulls(blob, n, False), [(0, 3 * PAGE_ROWS)], n
-    )
-    assert _page_nulls_blob(valid[:100]) is None  # single page: no blob
-
-    # Spark e2e: one 20k-row chunk whose nulls live in a single page
-    n2 = 20_000
-    df = spark.range(n2).select(
+    n = 20_000
+    df = spark.range(n).select(
         F.col("id").alias("k"),
-        F.when(
-            (F.col("id") >= PAGE_ROWS) & (F.col("id") < PAGE_ROWS + 200), None
-        )
+        F.when((F.col("id") >= ROWS) & (F.col("id") < ROWS + 200), None)
         .otherwise(F.col("id"))
         .alias("w"),
     )
@@ -1958,17 +1683,84 @@ def test_page_null_counts_prune_and_exact(spark):
     out_schema = _arrow_safe_schema(df.select(*kinds).schema, kinds)
     dec = decode_df_pruned_multi(
         blocks, "k", kinds, out_schema, [("isnull", "w")]
-    ).cache()
-    # only the null-bearing page survives, not the whole 20k chunk
-    assert dec.count() <= PAGE_ROWS
-    got = sorted(r["k"] for r in dec.filter(F.col("w").isNull()).collect())
-    assert got == list(range(PAGE_ROWS, PAGE_ROWS + 200))
-    dec.unpersist()
-    # IS NOT NULL on the same chunk keeps everything (no all-null page)
+    )
+    assert sorted(r["k"] for r in dec.collect()) == list(range(ROWS, ROWS + 200))
     nn = decode_df_pruned_multi(
         blocks, "k", kinds, out_schema, [("notnull", "w")]
     )
-    assert nn.filter(F.col("w").isNotNull()).count() == n2 - 200
+    assert nn.count() == n - 200
+    blocks.unpersist()
+
+
+def test_blocks_with_page_index_cells_decode_exact(spark, tmp_path):
+    """Block files written while the format carried a per-page index
+    (``page_stats`` / ``page_nulls`` cells next to each chunk) still
+    decode, and the cells play no part: with junk in every one of them —
+    bytes no page-index parser accepts — range, eq and IS NULL lookups
+    over a >ROWS-row chunk return exactly the rows of a plain Spark
+    filter, file-direct and on a cached blocks DataFrame."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parquet_python_spark.operators.generic_codec import (
+        _arrow_safe_schema,
+        _pred_row_expr,
+        decode_df_pruned_multi,
+        encode_df,
+    )
+
+    n = 3 * ROWS + 500
+    df = spark.range(n).select(
+        F.col("id").alias("l_orderkey"),
+        (F.col("id") * 7 % 50 + 1).alias("l_partkey"),
+        (F.col("id") % 11 / 100.0).alias("l_discount"),
+        F.when(F.col("id") % 9 == 0, None)
+        .otherwise(F.concat(F.lit("c"), F.col("id").cast("string")))
+        .alias("l_comment"),
+    )
+    kinds = {
+        "l_orderkey": "int", "l_partkey": "int", "l_discount": "float64",
+        "l_comment": "str",
+    }
+    tbl = encode_df(
+        df, "l_orderkey", kinds, n_parts=2, partitioning="range"
+    ).toArrow()
+    assert max(tbl.column("n_rows").to_pylist()) > ROWS
+    junk = pa.array([b"junk-page-blob"] * tbl.num_rows, pa.binary())
+    for c in ("page_stats", "page_nulls"):
+        if c in tbl.column_names:
+            tbl = tbl.drop_columns([c])
+        tbl = tbl.append_column(c, junk)
+    path = tmp_path / "blocks"
+    path.mkdir()
+    pq.write_table(tbl, str(path / "part-0.parquet"))
+
+    out_schema = _arrow_safe_schema(df.select(*kinds).schema, kinds)
+    lookups = [
+        [("range", "l_orderkey", ROWS + 10, ROWS + 900)],
+        [("range", "l_discount", 0.03, 0.05)],
+        [("eq", "l_partkey", 8)],
+        [("eq", "l_comment", f"c{2 * ROWS + 1}")],
+        [("isnull", "l_comment")],
+    ]
+    wants = [
+        sorted(map(tuple, df.filter(_pred_row_expr(p)).collect()))
+        for p in lookups
+    ]
+    assert all(wants)
+    # the bare scan first: once the same scan is cached, Spark substitutes
+    # the cache for it
+    for grouped in (False, True):
+        blocks = spark.read.parquet(str(path))
+        if grouped:
+            blocks = blocks.cache()
+        for preds, want in zip(lookups, wants):
+            dec = decode_df_pruned_multi(
+                blocks, "l_orderkey", kinds, out_schema, preds
+            )
+            plan = dec._jdf.queryExecution().executedPlan().toString()
+            assert ("FlatMapGroupsInArrow" in plan) == grouped, plan
+            assert sorted(map(tuple, dec.collect())) == want, preds
     blocks.unpersist()
 
 
@@ -2049,7 +1841,7 @@ def lm_blocks(spark, tmp_path_factory):
 def test_late_materialized_rows(spark, lm_blocks, preds, combine, path):
     """The pruned decode's output equals a plain Spark filter row for row,
     for every column kind: the predicates ran at row level inside the
-    surviving pages, and nothing filters after the decode.  Float bounds
+    surviving chunks, and nothing filters after the decode.  Float bounds
     follow Spark's order (NaN = NaN above +inf, -0.0 = 0.0), and an int
     column compares with float bounds in double.  Both the file-direct
     decode of a bare blocks scan and the groupBy decode of a persisted
@@ -2239,18 +2031,15 @@ def _nan(bits: int) -> float:
 def test_nan_zone_maps_canonical_and_old_blocks_kept():
     """Every NaN, whatever its sign bit and payload, takes one stat image
     above +inf's.  Blocks written before that hold a sign-bit NaN's
-    image below -inf's: a range whose hi is NaN keeps such a chunk and
-    such a page, because Spark's filter keeps their NaN rows."""
+    image below -inf's: a range whose hi is NaN keeps such a chunk,
+    because Spark's filter keeps its NaN rows."""
     import numpy as np
     import pyarrow as pa
 
     from parquet_python_spark.operators.generic_codec import (
         _float_ordered_bits,
         _float_ordered_scalar,
-        _page_keep,
-        _page_stats_blob,
         _range_keep,
-        PAGE_ROWS,
     )
 
     nans = [_nan(b) for b in (0x7FF8_0000_0000_0000, 0xFFF8_0000_0000_0001,
@@ -2277,19 +2066,8 @@ def test_nan_zone_maps_canonical_and_old_blocks_kept():
         (-1.0, 1.5, [True, True]),
         (1.5, 3.0, [False, True]),
     ):
-        overlap, pages, _ = _range_keep("float64", meta, "f", lo, hi)
+        overlap, _, _ = _range_keep("float64", meta, "f", lo, hi)
         assert overlap.to_pylist() == want, (lo, hi)
-    # an old page holding [1.0, -NaN] survives a hi-NaN page prune, and the
-    # page of finite values above it does not
-    vals = np.full(2 * PAGE_ROWS, 3.0)
-    vals[0] = 1.0
-    blob = bytearray(_page_stats_blob(_float_ordered_bits(vals)))
-    blob[4:12] = np.int64(old_image(neg_nan)).tobytes()  # page 0's minimum
-    _, pages, _ = _range_keep("float64", meta, "f", 5.0, nan)
-    kept = [_page_keep(bytes(blob), len(vals), a, b) for _, a, b in pages]
-    assert len(kept) == 2
-    assert _same_rows(kept[0], [], len(vals))
-    assert _same_rows(kept[1], [(0, PAGE_ROWS)], len(vals))
 
 
 def test_sign_bit_nan_pruned_equals_spark_filter(spark, tmp_path):
@@ -2321,7 +2099,7 @@ def test_sign_bit_nan_pruned_equals_spark_filter(spark, tmp_path):
     bound = st.one_of(
         st.sampled_from(specials), st.floats(-100.0, 100.0, allow_nan=False)
     )
-    n = 9_000  # two parts of 4500 rows: two pages each
+    n = 9_000  # two parts of 4500 rows
     runs = itertools.count()
 
     @settings(max_examples=8, deadline=None)
