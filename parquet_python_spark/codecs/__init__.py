@@ -1,5 +1,6 @@
 """Numpy codec kernels: dict, RLE/bit-packed hybrid, FSST, bit-pack, FOR,
-delta, PLAIN — plus the per-chunk auto-selector.  See SURVEY.md §2.3."""
+DELTA_BINARY_PACKED, PLAIN — plus the per-chunk auto-selector.  See
+SURVEY.md §2.3."""
 
 from .bitstream import (  # noqa: F401
     decode_varint,
@@ -11,10 +12,8 @@ from .bitstream import (  # noqa: F401
 from .dictionary import decode_dict, encode_dict  # noqa: F401
 from .forpack import (  # noqa: F401
     decode_bitpack,
-    decode_delta,
     decode_for,
     encode_bitpack,
-    encode_delta,
     encode_for,
 )
 from .fsst import decode_fsst, encode_fsst  # noqa: F401

@@ -1,9 +1,9 @@
-"""Frame-of-reference, plain bit-packing, and delta codecs (numpy kernels).
+"""Frame-of-reference and plain bit-packing codecs (numpy kernels).
 
 These generalize the reference's bit-packed run (encoding.py:139-180) into
-standalone column codecs; FOR and DELTA have no reference counterpart
-(SURVEY.md §2.3 "New-engine codecs" — cf. FastLanes / Lemire & Boytsov,
-"Decoding billions of integers per second").
+standalone column codecs; FOR has no reference counterpart (SURVEY.md §2.3
+"New-engine codecs" — cf. FastLanes / Lemire & Boytsov, "Decoding billions
+of integers per second").  Delta coding is DELTA_BINARY_PACKED (delta_bp.py).
 
 Kernels are dtype-preserving (int32 stays int32 until the bit-packer's
 per-column word build) — minimizing memory traffic is what lets 32
@@ -14,7 +14,6 @@ the payload):
 
     bitpack : pack_bits_lsb(values, width)              params: width
     for     : pack_bits_lsb(values - ref, width)        params: ref, width
-    delta   : pack_bits_lsb(zigzag(diff(values)), width) params: first, width
 """
 
 from __future__ import annotations
@@ -28,8 +27,6 @@ __all__ = [
     "decode_bitpack",
     "encode_for",
     "decode_for",
-    "encode_delta",
-    "decode_delta",
 ]
 
 
@@ -78,32 +75,3 @@ def decode_for(data: bytes, n: int, params: dict, out_dtype=np.int64) -> np.ndar
     ):
         return unpack_bits_lsb(data, width, n, np.int32, offset=ref)
     return unpack_bits_lsb(data, width, n, offset=ref)
-
-
-def _zigzag(vals: np.ndarray) -> np.ndarray:
-    return (vals << 1) ^ (vals >> 63)
-
-
-def _unzigzag(vals: np.ndarray) -> np.ndarray:
-    return (vals >> 1) ^ -(vals & 1)
-
-
-def encode_delta(values: np.ndarray) -> tuple[bytes, dict]:
-    vals = np.ascontiguousarray(values, dtype=np.int64)
-    if len(vals) == 0:
-        return b"", {"first": 0, "width": 0}
-    first = int(vals[0])
-    zz = _zigzag(np.diff(vals))
-    width = width_from_max_int(int(zz.max(initial=0)))
-    return pack_bits_lsb(zz, width), {"first": first, "width": width}
-
-
-def decode_delta(data: bytes, n: int, params: dict) -> np.ndarray:
-    if n == 0:
-        return np.empty(0, dtype=np.int64)
-    deltas = _unzigzag(unpack_bits_lsb(data, params["width"], n - 1))
-    out = np.empty(n, dtype=np.int64)
-    out[0] = params["first"]
-    np.cumsum(deltas, out=out[1:])
-    out[1:] += params["first"]
-    return out

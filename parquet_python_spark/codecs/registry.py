@@ -3,8 +3,9 @@
 SURVEY.md §4: codec auto-selection is a physical-data decision made inside
 the encode kernel — sampled cardinality / run-count / value-range stats feed
 a bytes cost model that picks dict / RLE-hybrid / FSST / bit-pack / FOR /
-delta / PLAIN per column chunk.  The reference parses parquet Statistics but
-never consumes them (parquet.thrift:198-206); here they drive the choice.
+DELTA_BINARY_PACKED / PLAIN per column chunk.  The reference parses parquet
+Statistics but never consumes them (parquet.thrift:198-206); here they drive
+the choice.
 
 Public surface:
     encode_column(values, kind)  -> (codec_name, params_dict, payload_bytes)
@@ -24,10 +25,8 @@ from .delta_bp import decode_delta_bp, encode_delta_bp
 from .dictionary import decode_dict, dict_size_estimate, encode_dict
 from .forpack import (
     decode_bitpack,
-    decode_delta,
     decode_for,
     encode_bitpack,
-    encode_delta,
     encode_for,
 )
 from .fsst import decode_fsst, encode_fsst, fsst_gain_sample
@@ -173,9 +172,6 @@ def _enc_int(
     if codec == "for":
         payload, params = encode_for(vals)
         return params, payload
-    if codec == "delta":
-        payload, params = encode_delta(vals)
-        return params, payload
     if codec == "delta_bp":
         payload, params = encode_delta_bp(vals)
         return params, payload
@@ -226,8 +222,6 @@ def _dec_int(
         return decode_bitpack(data, n, params, out_dtype)
     if codec == "for":
         return decode_for(data, n, params, out_dtype)
-    if codec == "delta":
-        return decode_delta(data, n, params)
     if codec == "delta_bp":
         return decode_delta_bp(data, n, params)
     if codec == "rle":

@@ -19,7 +19,7 @@ Scale design notes (targets a 1000-executor cluster; local[32] here):
     a cached proof that each part lies in one file (_block_files) gates
     one read loop (_decode_block_files) over map_tasks' tasks.
   * Skew is bounded by task planning, not salting: a file larger than
-    max_task_bytes splits into row-group ranges (_plan_file_tasks), so a
+    _MAX_TASK_BYTES splits into row-group ranges (_plan_file_tasks), so a
     dominant source simply spans more tasks.
   * Checkpoint/resume: the block files are the commit record.  A task is
     done when its atomically renamed blk-<task key>.parquet exists or its
@@ -269,6 +269,14 @@ def _read_task_table(path: str, rg_start: int, rg_end: int):
     )
 
 
+# Input bytes per encode task: a larger file splits into row-group-range
+# tasks (_plan_file_tasks).  Task keys depend on it, so changing it
+# re-plans every larger file under new keys whose rows the old keys' block
+# files already hold: a blocks directory holding such files must then be
+# re-encoded from scratch, into an empty directory.
+_MAX_TASK_BYTES = 256 * 1024 * 1024
+
+
 def encode_table_files_native(
     spark: SparkSession,
     input_path: str,
@@ -276,7 +284,6 @@ def encode_table_files_native(
     snapshot_id: str = "",
     with_ref_baseline: bool = False,
     files: list[str] | None = None,
-    max_task_bytes: int = 256 * 1024 * 1024,
 ) -> DataFrame:
     """File-direct encode with WORKER-NATIVE block writes (encode_job's path).
 
@@ -298,18 +305,19 @@ def encode_table_files_native(
     finished.  Tasks whose output is committed — the blk file exists, or
     compact_blocks folded its rows into a cmp-* file — are skipped before
     any input is read: a re-run encodes only what is missing and never
-    writes a row twice, and a retried attempt overwrites in place.  The
-    caller snapshots blocks_dir (iceberg_lite.write_snapshot) to commit.
+    writes a row twice, and a retried attempt overwrites in place.  A file
+    plans the same task keys on every run (_MAX_TASK_BYTES is fixed), so
+    an encode never deletes or rewrites a committed blk-* or cmp-* file.
+    The caller snapshots blocks_dir (iceberg_lite.write_snapshot) to commit.
 
     Returns the blocks *metadata* DataFrame (all columns except payload) of
     the tasks this run encodes — consuming it drives the job.
     """
     files = files if files is not None else resolve_input_files(input_path)
     os.makedirs(blocks_dir, exist_ok=True)
-    tasks = _plan_file_tasks(files, max_task_bytes)
-    committed = _remove_stale_generations(blocks_dir, tasks)
+    committed = _compacted_task_keys(blocks_dir)
     tasks = [
-        t for t in tasks
+        t for t in _plan_file_tasks(files)
         if t[0] not in committed
         and not os.path.exists(os.path.join(blocks_dir, f"blk-{t[0]}.parquet"))
     ]
@@ -350,84 +358,29 @@ def encode_table_files_native(
     return map_tasks(spark, tasks, enc, meta_schema)
 
 
-def _remove_stale_generations(blocks_dir: str, tasks: list[tuple]) -> set[str]:
-    """Drop block files from an older task-boundary generation; return the
-    task keys whose rows the surviving cmp-* files hold (committed tasks).
-
-    Task keys embed max_task_bytes-dependent row-group boundaries
-    (fk vs fk.rgN); re-running encode with a different max_task_bytes
-    re-encodes under new keys while the old blk-<fk>*.parquet files remain,
-    and decode_current_blocks' file-key filter would double-count those
-    rows.  Driver-side (race-free: before any task runs): for every file
-    key in the CURRENT plan, delete blk files whose task key is not in the
-    plan.  Blocks of files no longer in the input are untouched (history).
-    One part_id-column read per cmp file; compaction keeps their count
-    small by construction, so this stays metadata-cheap."""
-    planned = {t[0] for t in tasks}
-    fks = {k.split(".")[0] for k in planned}
-    in_compacted: set[str] = set()
-    for name in os.listdir(blocks_dir):
-        if not name.endswith(".parquet"):
-            continue
-        if name.startswith("blk-"):
-            key = name[len("blk-") : -len(".parquet")]
-            if key.split(".")[0] in fks and key not in planned:
-                try:
-                    os.remove(os.path.join(blocks_dir, name))
-                except OSError:
-                    pass
-        elif name.startswith("cmp-"):
-            # compacted files hold many task keys: rewrite in place without
-            # the stale generation's rows (maintenance-path cost, driver-side)
-            in_compacted |= _rewrite_compacted_without_stale(
-                os.path.join(blocks_dir, name), fks, planned
-            )
-    return in_compacted
+def _compacted_task_keys(blocks_dir: str) -> set[str]:
+    """Task keys of the rows compact_blocks folded into cmp-* files, from
+    each file's cached _block_index (compaction keeps their count small,
+    so resume stays metadata-cheap)."""
+    return {
+        pid.rsplit("#", 1)[-1]
+        for name in os.listdir(blocks_dir)
+        if name.startswith("cmp-") and name.endswith(".parquet")
+        for pid in _block_index(os.path.join(blocks_dir, name))[2]
+    }
 
 
-def _rewrite_compacted_without_stale(
-    path: str, fks: set[str], planned: set[str]
-) -> set[str]:
-    """Rewrite one cmp file without its stale rows; return the task keys
-    of the rows it keeps."""
-    import pyarrow.parquet as pq
-
-    try:
-        pids = pq.read_table(path, columns=["part_id"], use_threads=False)
-    except OSError:
-        return set()
-    keys = [p.rsplit("#", 1)[-1] for p in pids.column("part_id").to_pylist()]
-    stale = np.array(
-        [k.split(".")[0] in fks and k not in planned for k in keys]
-    )
-    kept_keys = {k for k, s in zip(keys, stale) if not s}
-    if not stale.any():
-        return kept_keys
-    tbl = pq.read_table(path, use_threads=False)
-    kept = tbl.filter(pa.array(~stale))
-    if kept.num_rows == 0:
-        os.remove(path)
-        return kept_keys
-    # dot prefix: Spark's file index never lists the temp, so a crash
-    # before the rename cannot serve its rows next to the original's
-    tmp = os.path.join(
-        os.path.dirname(path), f".{os.path.basename(path)}.rewrite"
-    )
-    pq.write_table(kept, tmp, compression=_BLK_COMPRESSION)
-    os.rename(tmp, path)
-    return kept_keys
-
-
-def _plan_file_tasks(files: list[str], max_task_bytes: int) -> list[tuple]:
+def _plan_file_tasks(files: list[str]) -> list[tuple]:
     """One task per file; oversized files (skewed upstream writers) split
-    into row-group ranges of <= max_task_bytes each — bounded task size
+    into row-group ranges of <= _MAX_TASK_BYTES each — bounded task size
     without any shuffle.  (rg_start, rg_end) = (-1, -1) means whole file.
-    Task keys stay content-addressed: f"{file_key}.rg{start}"."""
+    Task keys stay content-addressed: f"{file_key}.rg{start}", so every
+    run plans the same keys for the same file."""
     tasks: list[tuple] = []
     for f in files:
         fk = file_key(f)
         size = os.stat(f).st_size
-        if size <= max_task_bytes:
+        if size <= _MAX_TASK_BYTES:
             tasks.append((fk, f, -1, -1))
             continue
         import pyarrow.parquet as pq
@@ -445,7 +398,7 @@ def _plan_file_tasks(files: list[str], max_task_bytes: int) -> list[tuple]:
                 rg_meta.column(j).total_compressed_size
                 for j in range(rg_meta.num_columns)
             )
-            if group and acc + rg_bytes > max_task_bytes:
+            if group and acc + rg_bytes > _MAX_TASK_BYTES:
                 tasks.append((f"{fk}.rg{group[0]}", f, group[0], group[-1] + 1))
                 group, acc = [], 0
             group.append(rg)
@@ -529,8 +482,8 @@ def _decode_part_table(tbl, pred=None) -> "pa.Table":
         # part; task planning bounds part size well below this, so reaching
         # here means a pathological input — fail loudly, never corrupt
         raise ValueError(
-            f"partition holds {total_tok} tokens (>= 2^31); "
-            "re-encode with a smaller max_task_bytes"
+            f"partition holds {total_tok} tokens (>= 2^31); rewrite the "
+            "input with smaller row groups and re-encode it"
         )
     offsets = np.zeros(n_rows + 1, dtype=np.int32)
     np.cumsum(n_tok, out=offsets[1:])
@@ -580,15 +533,23 @@ def local_parquet_scan_files(df: DataFrame) -> list[str] | None:
     be the LogicalRelation itself (any caller filter/projection/join/cache falls
     back), its file format exactly ParquetFileFormat (a subclass such as
     Delta's applies deletion vectors a raw pyarrow read would skip), and
-    every file local (local_path)."""
+    every file local (local_path).  When another DataFrame cached the same
+    scan, Spark's cache manager substitutes its InMemoryRelation into this
+    uncached one's optimized plan; the analyzed plan still holds the
+    relation, so the scan stays file-direct.  A DataFrame cached itself
+    falls back."""
     try:
-        plan = df._jdf.queryExecution().optimizedPlan()
+        qe = df._jdf.queryExecution()
+        plan = qe.optimizedPlan()
+        cached = plan.getClass().getSimpleName() == "InMemoryRelation"
+        if cached and not df.is_cached:
+            plan = qe.analyzed()
         if plan.getClass().getSimpleName() != "LogicalRelation":
             return None
         fmt = plan.relation().fileFormat().getClass().getSimpleName()
         if fmt != "ParquetFileFormat":
             return None
-        files = list(df.inputFiles())
+        files = list(plan.relation().inputFiles())
     except Exception:  # noqa: BLE001 - internal API drift: use the safe path
         return None
     if not files:
@@ -940,7 +901,7 @@ def compact_blocks(
     stat_min/stat_max zone maps ride along so pruned decode keeps working.
     decode_current_blocks keys on part_id VALUES, never on file names;
     resume finds a compacted task's key inside its cmp file
-    (_remove_stale_generations) and still skips it.
+    (_compacted_task_keys) and still skips it.
 
     Crash safety: each bin writes a ``.cmp-<id>.parquet.srcs.json`` sidecar
     listing its source files before renaming the compacted file visible,

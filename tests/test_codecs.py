@@ -24,10 +24,8 @@ from parquet_python_spark.codecs import (
 )
 from parquet_python_spark.codecs.forpack import (
     decode_bitpack,
-    decode_delta,
     decode_for,
     encode_bitpack,
-    encode_delta,
     encode_for,
 )
 
@@ -148,13 +146,6 @@ def test_for_negative_values():
     vals = np.array([-5, -1, 0, 3, -5, 100], dtype=np.int64)
     payload, params = encode_for(vals)
     np.testing.assert_array_equal(decode_for(payload, len(vals), params), vals)
-
-
-@pytest.mark.parametrize("name", list(_profiles()))
-def test_delta_roundtrip(name):
-    vals = _profiles()[name].astype(np.int64)
-    payload, params = encode_delta(vals)
-    np.testing.assert_array_equal(decode_delta(payload, len(vals), params), vals)
 
 
 def test_bitpack_roundtrip():

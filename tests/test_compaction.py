@@ -1,8 +1,8 @@
 """Blocks-directory compaction (the Iceberg "rewrite data files" analog):
 bin-packing, decode equivalence (per-file decode of a compacted
 directory included), zone-map preservation, crash repair,
-in-flight bins hidden from Spark, stale-generation rewrite inside
-compacted files, and resume over them."""
+in-flight bins hidden from Spark, files rewritten in place after
+compaction, and resume over them."""
 
 import json
 import os
@@ -142,9 +142,8 @@ def test_repair_rolls_back_invisible_bin(spark, blocks_dir):
 def test_stale_generation_rewritten_inside_compacted(spark, tmp_path):
     """After compaction, re-encoding an input file rewritten in place must
     not double-count.  The new mtime gives the file a new file key, so its
-    old rows inside the cmp file are history, not a stale generation: the
-    current view filters them out.  (The in-place rewrite of stale rows
-    is test_mixed_generation_cmp_keeps_one_generation.)"""
+    old rows inside the cmp file are history: the current view filters
+    them out."""
     import time as _time
 
     from parquet_python_spark.engine import decode_current_blocks, encode_job
@@ -176,66 +175,10 @@ def test_stale_generation_rewritten_inside_compacted(spark, tmp_path):
     assert "Exchange" not in cur._jdf.queryExecution().executedPlan().toString()
 
 
-def _two_file_input(spark, tmp_path):
-    """One input file of several row groups and one of a single row group:
-    a small max_task_bytes re-plans the first into row-group tasks (new
-    task keys) and leaves the second one whole-file task (same key)."""
-    import pyarrow.parquet as pq
-
-    src = str(tmp_path / "src")
-    generate_tokens_df(spark, N_ROWS, SEED).coalesce(1).write.parquet(src)
-    tbl = pq.read_table(src)
-    inp = tmp_path / "inp"
-    inp.mkdir()
-    half = N_ROWS // 2
-    pq.write_table(tbl.slice(0, half), str(inp / "a.parquet"), row_group_size=50)
-    pq.write_table(tbl.slice(half), str(inp / "b.parquet"))
-    return str(inp)
-
-
 def _visible_rows(spark, bdir):
     """Rows as every Spark reader of the blocks dir counts them."""
     blocks = spark.read.parquet(bdir).filter(F.col("column") == "doc_id")
     return int(blocks.agg(F.sum("n_rows")).collect()[0][0])
-
-
-def test_mixed_generation_cmp_keeps_one_generation(spark, tmp_path):
-    """A cmp file holding a stale generation (a.parquet's whole-file task)
-    next to a committed one (b.parquet's): the re-encode rewrites the stale
-    rows away and skips the committed task, so exactly one generation of
-    every row remains."""
-    inp = _two_file_input(spark, tmp_path)
-    bdir = str(tmp_path / "blocks")
-    encode_table_files_native(spark, inp, bdir, snapshot_id="t").count()
-    compact_blocks(spark, bdir, target_bytes=1 << 30)
-    encode_table_files_native(
-        spark, inp, bdir, snapshot_id="t", max_task_bytes=1
-    ).count()
-    assert _visible_rows(spark, bdir) == N_ROWS
-    assert _rows(decode_blocks_files(spark, bdir)) == _rows(spark.read.parquet(inp))
-
-
-def test_crashed_cmp_rewrite_stays_invisible(spark, tmp_path, monkeypatch):
-    """A crash between writing a cmp file's stale-free rewrite and renaming
-    it over the original must not leave a temp that Spark reads next to it."""
-    inp = _two_file_input(spark, tmp_path)
-    bdir = str(tmp_path / "blocks")
-    encode_table_files_native(spark, inp, bdir, snapshot_id="t").count()
-    compact_blocks(spark, bdir, target_bytes=1 << 30)
-    assert _visible_rows(spark, bdir) == N_ROWS
-
-    real_rename = os.rename
-
-    def crash_on_cmp(src, dst):
-        if os.path.basename(dst).startswith("cmp-"):
-            raise OSError("simulated crash before the cmp rename")
-        real_rename(src, dst)
-
-    monkeypatch.setattr(os, "rename", crash_on_cmp)
-    with pytest.raises(OSError, match="simulated crash"):
-        encode_table_files_native(spark, inp, bdir, snapshot_id="t", max_task_bytes=1)
-    monkeypatch.undo()
-    assert _visible_rows(spark, bdir) == N_ROWS
 
 
 def test_resume_after_compaction_skips_everything(spark, tmp_path):

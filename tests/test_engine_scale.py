@@ -1,5 +1,5 @@
-"""Scale-shape regression tests: narrow decode output, stale-generation
-cleanup, and rewrite detection."""
+"""Scale-shape regression tests: narrow decode output and rewrite
+detection."""
 
 from __future__ import annotations
 
@@ -78,27 +78,6 @@ def test_snapshot_changes_on_inplace_rewrite(tmp_path):
     os.utime(f, ns=(111, 222))  # rewrite in place: same name+size
     s2 = write_snapshot(str(t))
     assert s2 != s1
-
-
-def test_stale_generation_cleanup(tmp_path):
-    from parquet_python_spark.engine import _remove_stale_generations
-
-    blocks = tmp_path / "blocks"
-    blocks.mkdir()
-    # old generation: whole-file key fk1; new plan splits fk1 into rg tasks
-    (blocks / "blk-fk1.parquet").write_bytes(b"old")
-    (blocks / "blk-fk1.rg9.parquet").write_bytes(b"older-boundary")
-    (blocks / "blk-fk2.parquet").write_bytes(b"current")
-    (blocks / "blk-fk3.parquet").write_bytes(b"removed-file-history")
-    tasks = [
-        ("fk1.rg0", "/x", 0, 5),
-        ("fk1.rg5", "/x", 5, 10),
-        ("fk2", "/y", -1, -1),
-    ]
-    _remove_stale_generations(str(blocks), tasks)
-    left = sorted(os.listdir(blocks))
-    # fk1 whole-file + old rg9 gone; fk2 current kept; fk3 history kept
-    assert left == ["blk-fk2.parquet", "blk-fk3.parquet"]
 
 
 def _content_hash(spark, df):

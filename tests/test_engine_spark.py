@@ -297,26 +297,28 @@ def test_decode_detects_corruption(source_blocks):
     )
     with pytest.raises(Exception):
         decode_blocks(tampered).collect()
-def test_files_mode_splits_large_files_by_row_group(spark, tmp_path):
-    """Skew defense: a file bigger than max_task_bytes becomes several
+
+
+def test_files_mode_splits_large_files_by_row_group(spark, tmp_path, monkeypatch):
+    """Skew defense: a file bigger than _MAX_TASK_BYTES becomes several
     row-group-range tasks with content-addressed sub-keys."""
+    import parquet_python_spark.engine as engine
     from parquet_python_spark.engine import _plan_file_tasks, list_input_files
     from parquet_python_spark.tokengen import generate_tokens_df
 
+    monkeypatch.setattr(engine, "_MAX_TASK_BYTES", 96 * 1024)
     inp = str(tmp_path / "big")
     # one file, several small row groups
     (generate_tokens_df(spark, 600, 11, partitions=1)
         .coalesce(1).write.option("parquet.block.size", 64 * 1024).parquet(inp))
     files = list_input_files(inp)
     assert len(files) == 1
-    tasks = _plan_file_tasks(files, max_task_bytes=96 * 1024)
+    tasks = _plan_file_tasks(files)
     assert len(tasks) > 1
     assert all(t[0].count(".rg") == 1 for t in tasks)
 
     blocks_dir = str(tmp_path / "blocks")
-    encode_table_files_native(
-        spark, inp, blocks_dir, snapshot_id="t", max_task_bytes=96 * 1024
-    ).count()
+    encode_table_files_native(spark, inp, blocks_dir, snapshot_id="t").count()
     # every row-group-range task wrote its own block file
     assert len(list_input_files(blocks_dir)) == len(tasks)
     decoded = decode_blocks(spark.read.parquet(blocks_dir))

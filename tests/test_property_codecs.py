@@ -36,7 +36,7 @@ def test_int_roundtrip_auto(vals):
 
 
 @SET
-@given(small_nonneg, st.sampled_from(["plain64", "plain32", "bitpack", "for", "rle", "dict", "delta", "fsst"]))
+@given(small_nonneg, st.sampled_from(["plain64", "plain32", "bitpack", "for", "rle", "dict", "delta_bp", "fsst"]))
 def test_int_roundtrip_every_codec(vals, codec):
     arr = np.array(vals, dtype=np.int64)
     c, params, payload, _ = encode_column(arr, "int", codec=codec)

@@ -2448,3 +2448,46 @@ def test_file_direct_missing_pred_column_raises(spark, tmp_path):
         count_filtered_meta(blocks, wide, "zz", 0, 10)
     with pytest.raises(ValueError, match="no chunks"):
         count_null_meta(blocks, wide, "zz", True)
+
+
+def test_fresh_scan_beside_a_cached_one_stays_file_direct(spark, tmp_path):
+    """Once one DataFrame caches a blocks directory's scan, Spark's cache
+    manager substitutes that cache into every later bare scan of the
+    directory.  Such a fresh, uncached scan still decodes file-direct,
+    with exactly the rows of a Spark filter; the cached DataFrame itself
+    keeps the groupBy path.  A bare scan's file list is its inputFiles."""
+    from parquet_python_spark.engine import local_parquet_scan_files, local_path
+    from parquet_python_spark.operators.generic_codec import (
+        _arrow_safe_schema,
+        decode_df_pruned,
+        encode_df,
+    )
+
+    df = spark.range(20_000).select(
+        F.col("id").alias("k"), (F.col("id") * 7 % 1000).alias("v")
+    )
+    kinds = {"k": "int", "v": "int"}
+    path = str(tmp_path / "blocks")
+    encode_df(df, "k", kinds, n_parts=4, partitioning="range").write.parquet(path)
+    out_schema = _arrow_safe_schema(df.schema, kinds)
+    bare = spark.read.parquet(path)
+    assert local_parquet_scan_files(bare) == sorted(
+        local_path(f) for f in bare.inputFiles()
+    )
+    want = sorted(map(tuple, df.filter(F.col("k").between(5_000, 6_000)).collect()))
+
+    def lookup(blocks):
+        dec = decode_df_pruned(blocks, "k", kinds, out_schema, "k", 5_000, 6_000)
+        plan = dec._jdf.queryExecution().executedPlan().toString()
+        return "FlatMapGroupsInArrow" in plan, sorted(map(tuple, dec.collect()))
+
+    cached = spark.read.parquet(path).cache()
+    try:
+        cached.count()
+        fresh = spark.read.parquet(path)
+        optimized = fresh._jdf.queryExecution().optimizedPlan()
+        assert optimized.getClass().getSimpleName() == "InMemoryRelation"
+        assert lookup(fresh) == (False, want)
+        assert lookup(cached) == (True, want)
+    finally:
+        cached.unpersist()
