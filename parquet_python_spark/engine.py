@@ -17,7 +17,8 @@ Scale design notes (targets a 1000-executor cluster; local[32] here):
     is therefore a blk-* file or a cmp-* concatenation of them.
   * One file-direct reader for both block schemas (here and generic_codec):
     a cached proof that each part lies in one file (_block_files) gates
-    one read loop (_decode_block_files) over map_tasks' tasks.
+    one read loop (read_block_file), run in map_tasks' tasks
+    (_decode_block_files) or, for a small read, on the driver.
   * Skew is bounded by task planning, not salting: a file larger than
     _MAX_TASK_BYTES splits into row-group ranges (_plan_file_tasks), so a
     dominant source simply spans more tasks.
@@ -33,6 +34,7 @@ Scale design notes (targets a 1000-executor cluster; local[32] here):
 
 from __future__ import annotations
 
+import functools
 import gc
 import hashlib
 import json
@@ -711,6 +713,29 @@ _DECODE_COLS = (
 _DECODE_SCHEMA = pa.schema([f for f in _BLOCKS_ARROW_SCHEMA if f.name in _DECODE_COLS])
 
 
+def read_block_file(task, schema: pa.Schema, decode, narrow=None):
+    """The one file-direct read loop: the entry ``task`` = (path,
+    filters) reads with pyarrow only ``schema``'s columns of the rows
+    passing ``filters`` (every row when None: a pyarrow filter on part_id
+    reads only the kept parts); part_runs splits them, and ``decode``
+    turns each part's rows into an Arrow table whose record batches this
+    yields.  A part never spans
+    files (_block_files, or a blocks directory's writers), so each
+    decodes whole.  ``narrow``, when given, runs first as
+    ``narrow(path, filters)`` and returns the filters of the rows still
+    worth reading, or None to read nothing more of the file.  Runs in a
+    map_tasks task (_decode_block_files) or, for a small read, in the
+    driver process (generic_codec's metadata aggregates)."""
+    import pyarrow.parquet as pq
+
+    path, where = task
+    if narrow is not None and (where := narrow(path, where)) is None:
+        return
+    tbl = pq.read_table(path, columns=schema.names, filters=where, use_threads=False)
+    for _, rows in part_runs(tbl):
+        yield from decode(rows).to_batches()
+
+
 def _decode_block_files(
     spark: SparkSession,
     plan: list[tuple],
@@ -719,30 +744,14 @@ def _decode_block_files(
     out_schema=DECODED_SCHEMA,
     narrow=None,
 ) -> DataFrame:
-    """The one file-direct read loop, decoding tokens blocks by default:
-    each (path, filters) of ``plan`` reads with pyarrow only ``schema``'s
-    columns of the rows passing ``filters`` (every row when None: a
-    pyarrow filter on part_id reads only the kept parts); part_runs
-    splits them, and ``decode`` turns each part's rows into an Arrow
-    table of ``out_schema``.  A part never spans files (_block_files, or
-    a blocks directory's writers), so each decodes whole.  ``narrow``,
-    when given, runs first in the task as ``narrow(path, filters)`` and
-    returns the filters of the rows still worth reading, or None to read
-    nothing more of the file."""
-
-    def run(task):
-        import pyarrow.parquet as pq
-
-        path, where = task
-        if narrow is not None and (where := narrow(path, where)) is None:
-            return
-        tbl = pq.read_table(
-            path, columns=schema.names, filters=where, use_threads=False
-        )
-        for _, rows in part_runs(tbl):
-            yield from decode(rows).to_batches()
-
-    return map_tasks(spark, plan, run, out_schema)
+    """Every (path, filters) entry of ``plan`` read and decoded by
+    read_block_file (with ``schema``, ``decode`` and ``narrow``; tokens
+    blocks by default) in map_tasks' tasks, as one DataFrame of
+    ``out_schema``."""
+    read = functools.partial(
+        read_block_file, schema=schema, decode=decode, narrow=narrow
+    )
+    return map_tasks(spark, plan, read, out_schema)
 
 
 def _zone_map_keep(meta: pa.Table, column: str, lo: int, hi: int) -> list[str]:

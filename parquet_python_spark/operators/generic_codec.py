@@ -53,7 +53,7 @@ from ..codecs.arrow_io import (
     list_column_flat,
 )
 from ..engine import _DECODE_COLS, _META_COLS, _block_files, _decode_block_files
-from ..engine import local_parquet_scan_files, map_tasks, part_runs
+from ..engine import local_parquet_scan_files, map_tasks, part_runs, read_block_file
 from ..session import session_tmpdir
 
 BLOCKS_SCHEMA = T.StructType(
@@ -852,9 +852,11 @@ def _chunk_meta(
             .toArrow()
         )
     else:
+        # one contiguous table first: the column filter then runs once, not
+        # once per file's chunk
         meta = pa.concat_tables(
             [rows for _, rows in files.values()], promote_options="permissive"
-        )
+        ).combine_chunks()
         names = meta.column("column")
         meta = meta.filter(pc.is_in(names, pa.array(cols, names.type)))
     present = set(pc.unique(meta.column("column")).to_pylist())
@@ -1359,11 +1361,11 @@ def count_filtered_meta(
     sorts <= stat_max_str (truncated-successor), so stat_max_str <= hi
     proves containment; a NULL (unbounded) truncated upper bound never
     claims containment.  Returns a 1-row DataFrame (``cnt`` long) holding
-    the answer as a literal row: the driver sums the contained chunks,
-    and the boundary decode's count comes back from one exchange-free
-    Spark job (_aggregate).  That job runs when this function is CALLED,
-    not when the result is collected: the returned DataFrame is already
-    computed, unlike topk_filtered_meta's lazy plan."""
+    the answer as a literal row (_literal_row): the driver sums the
+    contained chunks and adds the boundary decode's row count.  That
+    decode runs when this function is CALLED, not when the result is
+    collected: in the driver process when it is small (_decode_col_local),
+    else in one exchange-free Spark job (_aggregate)."""
     kind = col_kinds.get(pred_col)
     files, meta = _chunk_meta(blocks, col_kinds, [pred_col])
     # ONE source of truth for the bound normalization (±0 widening,
@@ -1374,7 +1376,8 @@ def count_filtered_meta(
     cnt = pc.sum(pc.filter(meta.column("n_rows"), contained)).as_py() or 0
     boundary = _parts(meta, pc.and_kleene(overlap, pc.invert(contained)))
     if boundary:
-        cnt += _aggregate(
+        local = _decode_col_local(files, meta, pred_col, kind, boundary, [row_preds])
+        cnt += local.num_rows if local is not None else _aggregate(
             _decode_col(blocks, pred_col, kind, boundary, [row_preds], files),
             F.count(F.lit(1)).alias("n"),
         )["n"]
@@ -1383,7 +1386,8 @@ def count_filtered_meta(
 
 def _literal_row(blocks: DataFrame, **values: int | None) -> DataFrame:
     """A one-row DataFrame of long columns holding an answer the driver
-    already has from the metadata: an inline VALUES table is a local
+    already has, from the metadata and, for count and min/max, from a
+    boundary decode run at call time: an inline VALUES table is a local
     relation, so collecting it runs no Spark job."""
     cells = ", ".join(f"CAST(:{c} AS BIGINT)" for c in values)
     return blocks.sparkSession.sql(
@@ -1401,6 +1405,11 @@ _SCALAR_TYPES = {
 }
 
 
+def _col_schema(col: str, kind: str) -> T.StructType:
+    """The one-column output schema of a metadata aggregate's decode."""
+    return T.StructType([T.StructField(col, _SCALAR_TYPES[kind], True)])
+
+
 def _decode_col(
     blocks: DataFrame, col: str, kind: str, parts: set[int], prune,
     files: dict | None,
@@ -1409,10 +1418,53 @@ def _decode_col(
     matches (``files`` as _chunk_meta proved them): the metadata
     aggregates need nothing else, and the other columns' payloads would
     only be read to be dropped."""
-    out_schema = T.StructType([T.StructField(col, _SCALAR_TYPES[kind], True)])
     return _decode_parts(
-        blocks, files, parts, {col: kind}, out_schema, prune, column=col
+        blocks, files, parts, {col: kind}, _col_schema(col, kind), prune,
+        column=col,
     )
+
+
+# the most chunk rows a metadata aggregate decodes in the driver process
+# (_decode_col_local) rather than in a Spark job.  Both decode the same
+# rows with the same code; the job adds its fixed cost (about 0.1 s wall)
+# but decodes one file per core, so the budget bounds the driver path's
+# wall time (and its memory).  Crossover probe (4 vCPUs, one file per
+# part, median wall time of 9 calls after 2 warm-ups): int and float64
+# counts cross at 2-8M rows, a clustered str count over two boundary files
+# at about 350k rows, and a str count over four files (every core busy) at
+# about 130k rows.  2**18 keeps every int and float shape and a two-file
+# str boundary on the faster path, and costs the four-file str shape at
+# most about 0.07 s of wall time.
+_DRIVER_DECODE_MAX_ROWS = 1 << 18
+
+
+def _decode_col_local(
+    files: dict | None, meta: pa.Table, col: str, kind: str, parts: set[int],
+    prune,
+) -> pa.Table | None:
+    """_decode_col's rows as an Arrow table, decoded in the driver process
+    with no Spark job: the same plan (_file_plan), read loop
+    (engine.read_block_file) and decode function (_decode_fn) as its
+    tasks.  None, and the caller runs _decode_col's job instead, when the
+    blocks are not file-direct or ``parts`` hold more than
+    _DRIVER_DECODE_MAX_ROWS rows of ``col``, summed from ``meta`` (the
+    call's _chunk_meta rows of ``col``)."""
+    if files is None:
+        return None
+    pids = meta.column("part_id")
+    in_parts = pc.is_in(pids, pa.array(sorted(parts), pids.type))
+    n_rows = pc.sum(pc.filter(meta.column("n_rows"), in_parts)).as_py() or 0
+    if n_rows > _DRIVER_DECODE_MAX_ROWS:
+        return None
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    out_schema = _col_schema(col, kind)
+    dec = _decode_fn({col: kind}, out_schema, prune)
+    batches = [
+        b for task in _file_plan(files, parts, col)
+        for b in read_block_file(task, _DECODE_SCHEMA, dec)
+    ]
+    return pa.Table.from_batches(batches, to_arrow_schema(out_schema))
 
 
 def _aggregate(decoded: DataFrame, *aggs) -> dict:
@@ -1420,7 +1472,10 @@ def _aggregate(decoded: DataFrame, *aggs) -> dict:
     ``decoded``, in one Spark job with no exchange: the per-task partial
     aggregates merge through an Observation's accumulators, where a
     DataFrame ``agg`` would shuffle them to one partition (one more job
-    under adaptive execution)."""
+    under adaptive execution).  The metadata count and min/max take this
+    job for DataFrame-held blocks and for a boundary decode above
+    _DRIVER_DECODE_MAX_ROWS; smaller file-direct ones decode on the
+    driver (_decode_col_local)."""
     from pyspark.sql import Observation
 
     obs = Observation()
@@ -1437,6 +1492,19 @@ _DECODE_SCHEMA = pa.schema([f for f in _BLOCKS_ARROW if f.name in _DECODE_COLS])
 _PLAN_SCHEMA = pa.schema([
     f for f in _BLOCKS_ARROW if f.name in (*_DECODE_COLS, *_META_COLS, "bloom")
 ])
+
+
+def _file_plan(files: dict, parts: set[int], column: str | None) -> list[tuple]:
+    """The (path, filters) entries of a file-direct read of ``parts`` (only
+    ``column``'s chunk rows when given) from the layout ``files``
+    (_chunk_meta): one per file holding a kept part, whose pyarrow filters
+    read only those parts' rows."""
+    only_col = [] if column is None else [("column", "=", column)]
+    return [
+        (path, [("part_id", "in", kept)] + only_col)
+        for path, (pids, _) in files.items()
+        if (kept := sorted(parts.intersection(pids)))
+    ]
 
 
 def _decode_parts(
@@ -1468,12 +1536,6 @@ def _decode_parts(
             rows = rows.filter(F.col("column") == column)
         return rows.groupBy("part_id").applyInArrow(dec, schema=out_schema)
     names = out_schema.fieldNames()
-    only_col = [] if column is None else [("column", "=", column)]
-    plan = [
-        (path, [("part_id", "in", kept)] + only_col)
-        for path, (pids, _) in files.items()
-        if (kept := sorted(parts.intersection(pids)))
-    ]
     narrow = None
     if probes:
         probed = sorted({c for c, _, _ in probes})
@@ -1496,7 +1558,7 @@ def _decode_parts(
             return [("part_id", "in", kept), *where[1:]] if kept else None
 
     return _decode_block_files(
-        blocks.sparkSession, plan, _DECODE_SCHEMA,
+        blocks.sparkSession, _file_plan(files, parts, column), _DECODE_SCHEMA,
         lambda rows: dec(rows).select(names), out_schema, narrow,
     )
 
@@ -1514,11 +1576,12 @@ def minmax_filtered_meta(
     value present in the chunk and already inside the bounds (the
     symmetric argument gives stat_max as a max candidate when
     ``stat_max <= hi``).  Only chunks straddling a bound (some values
-    below lo or above hi) decode to exactly their in-range values, in one
-    exchange-free Spark job (_aggregate) that runs when this function is
-    CALLED, not when the result is collected.  Returns a 1-row DataFrame
-    ``(mn, mx)`` holding the already-computed answer as a literal row —
-    SQL semantics: NULL when nothing matches.
+    below lo or above hi) decode to exactly their in-range values, when
+    this function is CALLED, not when the result is collected: in the
+    driver process when the decode is small (_decode_col_local), else in
+    one exchange-free Spark job (_aggregate).  Returns a 1-row DataFrame
+    ``(mn, mx)`` holding the already-computed answer as a literal row
+    (_literal_row) — SQL semantics: NULL when nothing matches.
 
     Int kinds only, loudly: float stats live in the order-preserving
     bits space and Spark has no longBitsToDouble to map a metadata
@@ -1542,14 +1605,18 @@ def minmax_filtered_meta(
     # values, whose extremes are exact
     straddle = _parts(meta, pc.and_kleene(overlap, pc.invert(contained)))
     if straddle:
-        got = _aggregate(
-            _decode_col(blocks, pred_col, kind, straddle, [row_preds], files),
-            F.min(pred_col).alias("mn"),
-            F.max(pred_col).alias("mx"),
-        )
+        local = _decode_col_local(files, meta, pred_col, kind, straddle, [row_preds])
+        if local is not None:
+            got = pc.min_max(local.column(pred_col)).as_py()
+        else:
+            got = _aggregate(
+                _decode_col(blocks, pred_col, kind, straddle, [row_preds], files),
+                F.min(pred_col).alias("min"),
+                F.max(pred_col).alias("max"),
+            )
         # an empty side (None) never masks the other
-        mn = min((v for v in (mn, got["mn"]) if v is not None), default=None)
-        mx = max((v for v in (mx, got["mx"]) if v is not None), default=None)
+        mn = min((v for v in (mn, got["min"]) if v is not None), default=None)
+        mx = max((v for v in (mx, got["max"]) if v is not None), default=None)
     return _literal_row(blocks, mn=mn, mx=mx)
 
 
@@ -1576,7 +1643,13 @@ def topk_filtered_meta(
     values there is no B and every chunk decodes (the correct degenerate).  Int
     kinds only (float stats live in ordered-bits space; string bounds
     are truncated, not attainable).  Ties at the k-th value are broken
-    arbitrarily, exactly like Spark's own orderBy().limit()."""
+    arbitrarily, exactly like Spark's own orderBy().limit().
+
+    When the kept chunks are small (_decode_col_local) they decode when
+    this function is CALLED: the driver drops nulls, sorts and keeps k
+    values, returned as a local relation that collects with no Spark
+    job.  Otherwise the result is a lazy plan over
+    _decode_col's job, run when it is collected."""
     kind = col_kinds.get(col)
     if kind not in ("int", "int96_ts"):
         raise ValueError(
@@ -1602,6 +1675,17 @@ def topk_filtered_meta(
         keep = _parts(meta, cmp(meta.column(cmp_col), b))
         # boundary chunks return only their values not beyond B
         prune = (col, -(2**63), b) if ascending else (col, b, 2**63 - 1)
+    local = _decode_col_local(files, meta, col, kind, keep, prune)
+    if local is not None:
+        top = local.filter(pc.is_valid(local.column(col))).sort_by(
+            [(col, "ascending" if ascending else "descending")]
+        )
+        # createDataFrame keeps an Arrow table under Spark's
+        # arrow.localRelationThreshold (48 MB by default; these are at most
+        # _DRIVER_DECODE_MAX_ROWS longs) as a local relation
+        return blocks.sparkSession.createDataFrame(
+            top.slice(0, k), _col_schema(col, kind)
+        )
     dec = _decode_col(blocks, col, kind, keep, prune, files)
     return (
         dec.filter(F.col(col).isNotNull())

@@ -1107,7 +1107,7 @@ def test_persisted_blocks_prune_pushes_to_scan(spark, tmp_path, monkeypatch):
         encode_df,
     )
 
-    real_decode_col = gc._decode_col
+    real_decode_col, real_local = gc._decode_col, gc._decode_col_local
     df = spark.range(20_000).select(
         F.col("id").alias("k"),
         F.when(F.col("id") < 4_000, None).otherwise(F.col("id")).alias("w"),
@@ -1190,16 +1190,27 @@ def test_persisted_blocks_prune_pushes_to_scan(spark, tmp_path, monkeypatch):
 
         # metadata-first COUNT: exact; only the two boundary parts decode
         # (the two contained ones are answered from the metadata), and
-        # that decode reads only the predicate column's kept chunks
-        calls = []
+        # that decode reads only the predicate column's kept chunks.  On
+        # the bare scan that small decode runs in the driver process; the
+        # plan checks below force the Spark job (a budget of 0 rows)
+        calls, local_calls = [], []
 
         def recording_decode_col(*args):
             calls.append((args[3], real_decode_col(*args)))
             return calls[-1][1]
 
+        def recording_local(*args):
+            local_calls.append(args[4])
+            return real_local(*args)
+
         monkeypatch.setattr(gc, "_decode_col", recording_decode_col)
+        monkeypatch.setattr(gc, "_decode_col_local", recording_local)
         assert count_filtered_meta(blocks, kinds, "k", 2_500, 17_499).first()["cnt"] == 15_000
-        monkeypatch.setattr(gc, "_decode_col", real_decode_col)
+        if file_direct:
+            assert local_calls == [{0, 3}] and calls == []
+            monkeypatch.setattr(gc, "_DRIVER_DECODE_MAX_ROWS", 0)
+            assert count_filtered_meta(blocks, kinds, "k", 2_500, 17_499).first()["cnt"] == 15_000
+        monkeypatch.undo()
         assert [parts for parts, _ in calls] == [{0, 3}]
         p_c = plan(calls[0][1])
         assert "Join" not in p_c
@@ -1509,6 +1520,96 @@ def test_topk_filtered_meta_exact_and_pruned(spark):
     blocks.unpersist()
 
 
+def test_metadata_aggregates_driver_path_equals_job_path(
+    spark, tmp_path, monkeypatch
+):
+    """On file-direct blocks a small boundary decode of count, min/max and
+    top-k runs in the driver process; its answers equal the Spark job
+    path's (forced by a budget of 0 rows) and a plain Spark filter's, on
+    an int and an int96_ts column: both nullable, each with an all-null
+    chunk and ties; a boundary chunk where no row matches; predicates
+    with no boundary chunk; k beyond the present values; both orders."""
+    import pyarrow.parquet as pq
+
+    import parquet_python_spark.operators.generic_codec as gc
+
+    n, t0 = 8_000, 1_600_000_000_000
+    df = spark.range(n).select(
+        F.col("id").alias("k"),
+        # even values only, each about twice, in every part; part 1
+        # ([2000, 4000) under exact range bucketing) is all null
+        F.when((F.col("id") % 7 == 0) | F.col("id").between(2_000, 3_999), None)
+        .otherwise(F.col("id") * 37 % 3_001 * 2)
+        .alias("w"),
+        # clustered on the key, three rows per value; part 3 all null
+        F.when((F.col("id") % 5 == 0) | (F.col("id") >= 6_000), None)
+        .otherwise(F.lit(t0) + F.floor(F.col("id") / 3) * 1_000)
+        .alias("ts"),
+    )
+    kinds = {"k": "int", "w": "int", "ts": "int96_ts"}
+    path = str(tmp_path / "blocks")
+    gc.encode_df(df, "k", kinds, n_parts=4, partitioning="range").write.parquet(path)
+    blocks = spark.read.parquet(path)
+    meta = pq.read_table(path, columns=["column", "n_rows", "n_nulls"]).to_pylist()
+    for col in ("w", "ts"):
+        assert any(
+            r["column"] == col and r["n_nulls"] == r["n_rows"] > 0 for r in meta
+        ), col
+    present = {
+        col: sorted(r[col] for r in df.select(col).collect() if r[col] is not None)
+        for col in ("w", "ts")
+    }
+    ranges = {
+        # two boundary parts / one value no row holds (odd), inside every
+        # part's [min, max] / nothing overlaps / every present value
+        "w": [(1_001, 4_999), (2_001, 2_001), (-50, -10), (0, 6_000)],
+        # cuts parts 0 and 2 / strictly between two values of part 0 /
+        # nothing overlaps / every present value
+        "ts": [
+            (t0 + 500_000, t0 + 1_500_000), (t0 + 100_001, t0 + 100_999),
+            (0, t0 - 1), (t0, t0 + n * 1_000),
+        ],
+    }
+
+    job_calls = []
+    real_decode_col = gc._decode_col
+
+    def recording_decode_col(*args):
+        job_calls.append(args[3])
+        return real_decode_col(*args)
+
+    monkeypatch.setattr(gc, "_decode_col", recording_decode_col)
+
+    def answers():
+        out = []
+        for col, rs in ranges.items():
+            for lo, hi in rs:
+                out.append(gc.count_filtered_meta(blocks, kinds, col, lo, hi).first()["cnt"])
+                row = gc.minmax_filtered_meta(blocks, kinds, col, lo, hi).first()
+                out.append((row["mn"], row["mx"]))
+            for kk in (1, 5, 7, 999, n + 5):
+                for asc in (True, False):
+                    top = gc.topk_filtered_meta(blocks, kinds, col, kk, asc).collect()
+                    out.append([r[col] for r in top])
+        return out
+
+    driver = answers()
+    assert job_calls == []
+    monkeypatch.setattr(gc, "_DRIVER_DECODE_MAX_ROWS", 0)
+    job = answers()
+    assert job_calls
+    assert driver == job
+    # and both equal the plain Spark filter / sort
+    want = []
+    for col, rs in ranges.items():
+        for lo, hi in rs:
+            sel = [v for v in present[col] if lo <= v <= hi]
+            want += [len(sel), (min(sel, default=None), max(sel, default=None))]
+        for kk in (1, 5, 7, 999, n + 5):
+            want += [present[col][:kk], present[col][::-1][:kk]]
+    assert driver == want
+
+
 def test_pruned_decode_rejects_unencoded_and_str_bounds_on_int(spark):
     """The pruned decodes fail loudly on a predicate column with no chunk
     rows (an AND would return a definitive-looking empty result; an OR
@@ -1582,16 +1683,19 @@ def _jobs_of(spark, group, call):
     return len(tracker.getJobIdsForGroup(group)), result
 
 
-def test_pruned_calls_spark_job_counts(spark, tmp_path):
+def test_pruned_calls_spark_job_counts(spark, tmp_path, monkeypatch):
     """On file-direct blocks every pruned call plans from the cached
-    block index: a row lookup (range or eq), a top-k, and a count or
-    min/max with boundary chunks run exactly one Spark job, the
-    exchange-free decode; a count or min/max answered from metadata alone
-    and a null count run none.  Cached (DataFrame-held) blocks keep the
+    block index: a row lookup (range or eq) runs exactly one Spark job,
+    the exchange-free decode; a top-k, and a count or min/max with
+    boundary chunks, decode them in the driver process and run none, as
+    do a count or min/max answered from metadata alone and a null count.
+    With a driver-decode budget of 0 rows the top-k, count and min/max
+    run the one decode job instead.  Cached (DataFrame-held) blocks keep the
     Spark metadata read, one job, and the groupBy decode runs as two
     under adaptive execution (its shuffle stage, then its result): three
     jobs per decoding call, one per metadata-only call — at most: the
     split of the groupBy decode is adaptive execution's to make."""
+    import parquet_python_spark.operators.generic_codec as gc
     from parquet_python_spark.operators.generic_codec import (
         _arrow_safe_schema,
         count_filtered_meta,
@@ -1620,9 +1724,14 @@ def test_pruned_calls_spark_job_counts(spark, tmp_path):
             assert blocks.cache().count() == 12
         tag = "cached" if cached else "direct"
 
-        def jobs(name, want, call):
+        def jobs(name, want, call, decodes=None):
+            """``want``: the exact job count on file-direct blocks; on
+            cached ones at most 3 for a call that ``decodes`` (by default
+            one that runs a job on file-direct blocks), else 1."""
             n, result = _jobs_of(spark, f"{tag}-{name}", call)
-            assert (n <= (3 if want else 1)) if cached else n == want, (name, n)
+            if decodes is None:
+                decodes = want > 0
+            assert (n <= (3 if decodes else 1)) if cached else n == want, (name, n)
             return result
 
         rows = jobs("range", 1, lambda: decode_df_pruned(
@@ -1633,24 +1742,30 @@ def test_pruned_calls_spark_job_counts(spark, tmp_path):
             blocks, "k", kinds, out_schema, "v", 7
         ).filter(F.col("v") == 7).collect())
         assert len(rows) == 20
-        rows = jobs("topk", 1, lambda: topk_filtered_meta(
-            blocks, kinds, "k", 5, ascending=False
-        ).collect())
-        assert [r["k"] for r in rows] == [19_999, 19_998, 19_997, 19_996, 19_995]
-        # [2_500, 17_499] contains the two middle parts and cuts the outer two
-        cnt = jobs("count", 1, lambda: count_filtered_meta(
-            blocks, kinds, "k", 2_500, 17_499
-        ).first()["cnt"])
-        assert cnt == 15_000
+        for budget in (None, 0):
+            if budget is not None:
+                monkeypatch.setattr(gc, "_DRIVER_DECODE_MAX_ROWS", budget)
+            want, sfx = (0, "") if budget is None else (1, "-job")
+            rows = jobs("topk" + sfx, want, lambda: topk_filtered_meta(
+                blocks, kinds, "k", 5, ascending=False
+            ).collect(), decodes=True)
+            assert [r["k"] for r in rows] == [19_999, 19_998, 19_997, 19_996, 19_995]
+            # [2_500, 17_499] contains the two middle parts and cuts the
+            # outer two
+            cnt = jobs("count" + sfx, want, lambda: count_filtered_meta(
+                blocks, kinds, "k", 2_500, 17_499
+            ).first()["cnt"], decodes=True)
+            assert cnt == 15_000
+            row = jobs("minmax" + sfx, want, lambda: minmax_filtered_meta(
+                blocks, kinds, "k", 2_500, 17_499
+            ).first(), decodes=True)
+            assert (row["mn"], row["mx"]) == (2_500, 17_499)
+        monkeypatch.undo()
         # [0, 19_999] contains every part: no boundary chunk decodes
         cnt = jobs("count-meta", 0, lambda: count_filtered_meta(
             blocks, kinds, "k", 0, 19_999
         ).first()["cnt"])
         assert cnt == 20_000
-        row = jobs("minmax", 1, lambda: minmax_filtered_meta(
-            blocks, kinds, "k", 2_500, 17_499
-        ).first())
-        assert (row["mn"], row["mx"]) == (2_500, 17_499)
         row = jobs("minmax-meta", 0, lambda: minmax_filtered_meta(
             blocks, kinds, "k", 0, 19_999
         ).first())
