@@ -530,16 +530,17 @@ def local_parquet_scan_files(df: DataFrame) -> list[str] | None:
     """Sorted local paths of the files behind ``df`` when it is a bare,
     unfiltered scan of a plain parquet relation — else None.
 
-    The scan test of every file-direct reader (the block layout proof
-    _block_files and generic_codec's round-trip): the optimized plan must
-    be the LogicalRelation itself (any caller filter/projection/join/cache falls
-    back), its file format exactly ParquetFileFormat (a subclass such as
+    The scan test of every file-direct reader: the block layout proof
+    _block_files raises on None, and generic_codec's round-trip, whose
+    input is raw rows, keeps its scan-fed path.  The optimized plan must
+    be the LogicalRelation itself (no caller filter, projection, join or
+    cache), its file format exactly ParquetFileFormat (a subclass such as
     Delta's applies deletion vectors a raw pyarrow read would skip), and
     every file local (local_path).  When another DataFrame cached the same
     scan, Spark's cache manager substitutes its InMemoryRelation into this
     uncached one's optimized plan; the analyzed plan still holds the
     relation, so the scan stays file-direct.  A DataFrame cached itself
-    falls back."""
+    is not a bare scan."""
     try:
         qe = df._jdf.queryExecution()
         plan = qe.optimizedPlan()
@@ -669,39 +670,46 @@ def _block_index(path: str) -> tuple:
     return types, rows, pids
 
 
-def _block_files(blocks: DataFrame, schema: pa.Schema) -> dict | None:
-    """{file: (its part_ids, its _block_index rows)} when ``blocks`` is a
-    bare scan of local parquet files (local_parquet_scan_files) that all
-    carry ``schema``'s fields (the reader's columns) with its types, and
-    every part's rows lie in one file; else None.  The one gate of every
-    file-direct read of a blocks DataFrame, proved on the driver from the
-    cached _block_index whatever the writer or the file names; each file
-    is statted and looked up once, and callers plan on the rows returned.
-    The package's own decodes pass it a bare scan of the block files they
-    wrote (roundtrip_filtered) or plan by directory without it
-    (decode_blocks_files*, decode_current_blocks).  A caller-supplied
-    blocks DataFrame that is filtered, joined, cached or repartitioned
-    (parts span files), of the other block schema (the part_id types
-    differ), or over an interrupted compaction (a visible cmp-* file
-    next to one of its sources) takes the caller's groupBy decode, its
-    only path.  No file-count cap: at 4096 and 8192 one-part files
-    (4 vCPUs) the file-direct decode_blocks and one-part pruned lookup
-    cost less CPU than the groupBy path, cold and cached."""
-    files = local_parquet_scan_files(blocks)
-    if files is None:
-        return None
+# the one refusal of a blocks DataFrame no decoder reads (_block_files)
+_NOT_BLOCK_FILES = (
+    "blocks must be a bare spark.read.parquet scan of local block files of "
+    "this decoder's schema, each part's rows in one file: write the blocks "
+    "with .write.parquet(dir) and pass spark.read.parquet(dir) (for a "
+    "tokens blocks dir, decode_blocks_files(spark, dir), which first "
+    "repairs an interrupted compaction)"
+)
+
+
+def _block_files(blocks: DataFrame, schema: pa.Schema) -> dict:
+    """{file: (its part_ids, its _block_index rows)} of ``blocks``, a bare
+    scan of local parquet files (local_parquet_scan_files) that all carry
+    ``schema``'s fields (the reader's columns) with its types, and whose
+    every part's rows lie in one file.  The one gate of every decode of a
+    blocks DataFrame, proved on the driver from the cached _block_index
+    whatever the writer or the file names; each file is statted and
+    looked up once, and callers plan on the rows returned.  Any other
+    blocks DataFrame raises _NOT_BLOCK_FILES: one filtered, joined,
+    cached or repartitioned (parts span files), of the other block
+    schema (the part_id types differ), or over an interrupted compaction
+    (a visible cmp-* file next to one of its sources).  No file-count
+    cap: at 4096 and 8192 one-part files (4 vCPUs) the file-direct
+    decode_blocks and one-part pruned lookup cost less CPU than a
+    groupBy decode, cold and cached."""
+    paths = local_parquet_scan_files(blocks)
+    if paths is None:
+        raise ValueError(_NOT_BLOCK_FILES)
     owner, out = {}, {}
     try:
-        for path in files:
+        for path in paths:
             types, rows, pids = _block_index(path)
             if any(types.get(f.name) != f.type for f in schema):
-                return None
+                raise ValueError(_NOT_BLOCK_FILES)
             for pid in pids:
                 if owner.setdefault(pid, path) != path:
-                    return None  # this part spans files
+                    raise ValueError(_NOT_BLOCK_FILES)  # this part spans files
             out[path] = pids, rows
-    except (OSError, pa.ArrowException):
-        return None  # unreadable, non-parquet or non-block file
+    except (OSError, pa.ArrowException) as e:
+        raise ValueError(_NOT_BLOCK_FILES) from e  # unreadable or non-block file
     return out
 
 
@@ -781,28 +789,14 @@ def _zone_map_keep(meta: pa.Table, column: str, lo: int, hi: int) -> list[str]:
 def decode_blocks(blocks: DataFrame) -> DataFrame:
     """blocks DataFrame -> original tokens DataFrame (bit-identical rows).
 
-    File-direct when the one layout proof holds (_block_files: a bare
-    local scan of tokens block files whose parts each lie in one file,
-    whatever their names): read per file in map_tasks' tasks, the encoded
-    payloads never cross an exchange (measured ~2x at the 10x bench
-    scale; at 100 TB the saved payload shuffle is the job).  Any other
-    blocks DataFrame — cached, filtered or repartitioned by the caller;
-    no package caller passes one — groups by part_id (the blocks of one
-    partition reunite) and decodes via _decode_part_table, at the cost of
-    shuffling payloads.
-    """
+    ``blocks`` must pass the one layout proof (_block_files: a bare local
+    scan of tokens block files whose parts each lie in one file, whatever
+    their names), else this raises ValueError.  Each file is read and
+    decoded in map_tasks' tasks: the encoded payloads never cross an
+    exchange (measured ~2x against a groupBy decode at the 10x bench
+    scale; at 100 TB the saved payload shuffle is the job)."""
     files = _block_files(blocks, _DECODE_SCHEMA)
-    if files is not None:
-        return _decode_block_files(
-            blocks.sparkSession, [(path, None) for path in files]
-        )
-
-    def dec(tbl):
-        # (wrapper without annotations: applyInArrow's eval-type inference
-        # cannot resolve _decode_part_table's string return annotation)
-        return _decode_part_table(tbl)
-
-    return blocks.groupBy("part_id").applyInArrow(dec, schema=DECODED_SCHEMA)
+    return _decode_block_files(blocks.sparkSession, [(path, None) for path in files])
 
 
 def decode_blocks_files_pruned(
@@ -876,7 +870,7 @@ def decode_blocks_files(spark: SparkSession, blocks_path: str) -> DataFrame:
     Every encode task writes all column rows of its partitions contiguously
     into one parquet file, so a part never spans files: one decode task per
     file reads it with pyarrow and decodes part-by-part — the payload bytes
-    never cross an exchange (decode_blocks' groupBy shuffles the full
+    never cross an exchange (a groupBy decode would shuffle the full
     compressed payload; at 100 TB that shuffle IS the decode job's cost).
 
     Every directory-reading entry point repairs interrupted compactions

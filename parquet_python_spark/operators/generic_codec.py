@@ -19,15 +19,17 @@ Column kinds:
     int96_ts — epoch-millis int64 via Impala int96 wire (D4)
     bool     — BooleanType, 1 bit/value LSB-first (D1 PLAIN boolean)
 
-Scale design: encode_df and the DataFrame-in decoders run applyInArrow,
-and file-direct decodes and round-trips run mapInArrow tasks
-(engine.map_tasks).  Either way chunks arrive as Arrow tables whose
-string/list columns are (offsets, data) buffer pairs, and the kernels
-encode/decode straight from those buffers with no per-row Python
-(reference NEVER vectorizes — lists throughout, encoding.py:125-180; here
-it is mandatory).  Partition count follows data size (rows / ~TARGET_ROWS
-per part, floored at the cluster's default parallelism) instead of a fixed
-constant, so the same code holds at 100x the input.
+Scale design: encode_df runs applyInArrow over its groupBy("part_id"),
+and the decoders and round-trips run mapInArrow tasks (engine.map_tasks);
+a decoder reads block files only, and raises on a blocks DataFrame that
+is not a bare scan of them (engine._block_files).  Either way chunks
+arrive as Arrow tables whose string/list columns are (offsets, data)
+buffer pairs, and the kernels encode/decode straight from those buffers
+with no per-row Python (reference NEVER vectorizes — lists throughout,
+encoding.py:125-180; here it is mandatory).  Partition count follows data
+size (rows / ~TARGET_ROWS per part, floored at the cluster's default
+parallelism) instead of a fixed constant, so the same code holds at 100x
+the input.
 """
 
 from __future__ import annotations
@@ -669,10 +671,18 @@ def decode_df(
     out_schema: T.StructType,
 ) -> DataFrame:
     """Inverse of :func:`encode_df`; returns rows bit-identical to input.
-    The pruned decodes (decode_df_pruned_multi and its wrappers) return
+    ``blocks`` must be a bare scan of written block files, each part in
+    one file (engine._block_files), else this raises ValueError; each file
+    is read and decoded in one map_tasks task, with no exchange.  The
+    pruned decodes (decode_df_pruned_multi and its wrappers) return
     exactly the rows of a predicate instead."""
+    files = _block_files(blocks, _DECODE_SCHEMA)
     dec = _decode_fn(col_kinds, out_schema)
-    return blocks.groupBy("part_id").applyInArrow(dec, schema=out_schema)
+    names = out_schema.fieldNames()
+    return _decode_block_files(
+        blocks.sparkSession, [(path, None) for path in files], _DECODE_SCHEMA,
+        lambda rows: dec(rows).select(names), out_schema,
+    )
 
 
 def _decode_fn(
@@ -799,12 +809,12 @@ def decode_df_pruned(
     ``pred_col`` intersects [lo, hi] — min/max block skipping, the thing
     the reference parses from parquet Statistics but never does
     (parquet.thrift:198-206).  The driver plans the keep set from the
-    chunk statistics (_chunk_meta: the cached block index on file-direct
-    blocks, in no Spark job; one metadata read otherwise), and only the
-    surviving parts are read and decoded (_decode_parts: file-direct,
-    else a pushed ``part_id IN (...)`` filter), so non-qualifying
-    payloads are never shuffled or decoded.  The decode tasks return
-    exactly the matching rows (_decode_fn).
+    chunk statistics (_chunk_meta: the cached block index of the block
+    files, in no Spark job), and only the surviving parts are read and
+    decoded, file-direct (_decode_parts), so non-qualifying payloads are
+    never read.  The decode tasks return exactly the matching rows
+    (_decode_fn).  ``blocks`` that are not a bare scan of block files
+    raise ValueError (engine._block_files).
 
     ``pred_col`` may be an int/int96_ts column (exact chunk bounds), a
     float column with numeric bounds (exact bounds through the
@@ -820,55 +830,37 @@ def decode_df_pruned(
 
 
 def _chunk_meta(
-    blocks: DataFrame, col_kinds: dict[str, str], cols, probes=None
-) -> tuple[dict | None, pa.Table]:
-    """(the proven layout of file-direct blocks — engine._block_files —
-    else None; the chunk-statistics rows (_META_COLS) of ``cols`` as one
-    driver-side Arrow table) — a pruned call's one layout proof and its
-    plan source.  On file-direct blocks the rows are the block index rows
-    the proof returned, and no Spark job runs; the Bloom ``probes`` are
-    tested later, in the read task (_decode_parts).  Other blocks
-    DataFrames spend one Spark job, whose column filter pushes to the
-    blocks scan, and which tests the probes there (_bloom_admits) into
-    one more column, ``bloom_ok``, so Bloom-rejected parts never enter
-    the groupBy decode.  No payload or bitset reaches the driver either
-    way.
+    blocks: DataFrame, col_kinds: dict[str, str], cols
+) -> tuple[dict, pa.Table]:
+    """(the proven layout of the block files — engine._block_files, which
+    raises ValueError on any other blocks DataFrame —; the
+    chunk-statistics rows (_META_COLS) of ``cols`` as one driver-side
+    Arrow table) — a pruned call's one layout proof and its plan source.
+    The rows are the block index rows the proof returned, so no Spark job
+    runs; no payload or bitset reaches the driver.
 
     Loud-fails when a predicate column was never encoded into a
     NON-EMPTY blocks table: its keep set would otherwise be empty (an
     AND returns a definitive-looking empty result, an OR silently drops
     that member's rows, a metadata count returns 0).  An empty blocks
-    table (empty input) is legitimate; off the index, the emptiness probe
-    runs only when the metadata has no rows at all.  Unknown and list
-    kinds have no chunk rows under their own name and are not checked:
-    the predicate dispatch raises the precise kind error for those."""
+    table (empty input) is legitimate.  Unknown and list kinds have no
+    chunk rows under their own name and are not checked: the predicate
+    dispatch raises the precise kind error for those."""
     cols = sorted(set(cols))
     files = _block_files(blocks, _PLAN_SCHEMA)
-    if files is None:
-        bloom_ok = [_bloom_admits(probes).alias("bloom_ok")] if probes else []
-        meta = (
-            blocks.filter(F.col("column").isin(cols))
-            .select(*_META_COLS, *bloom_ok)
-            .toArrow()
-        )
-    else:
-        # one contiguous table first: the column filter then runs once, not
-        # once per file's chunk
-        meta = pa.concat_tables(
-            [rows for _, rows in files.values()], promote_options="permissive"
-        ).combine_chunks()
-        names = meta.column("column")
-        meta = meta.filter(pc.is_in(names, pa.array(cols, names.type)))
+    # one contiguous table first: the column filter then runs once, not
+    # once per file's chunk
+    meta = pa.concat_tables(
+        [rows for _, rows in files.values()], promote_options="permissive"
+    ).combine_chunks()
+    names = meta.column("column")
+    meta = meta.filter(pc.is_in(names, pa.array(cols, names.type)))
     present = set(pc.unique(meta.column("column")).to_pylist())
     missing = [
         c for c in cols
         if c not in present and col_kinds.get(c) not in (None, *_LIST_KINDS)
     ]
-    if missing and (
-        meta.num_rows
-        or (any(pids for pids, _ in files.values()) if files is not None
-            else not blocks.select("part_id").isEmpty())
-    ):
+    if missing and (meta.num_rows or any(pids for pids, _ in files.values())):
         raise ValueError(
             f"column {missing[0]!r} has no chunks in this blocks table "
             "(encoded with different col_kinds?)"
@@ -982,7 +974,7 @@ def _bloom_probes(spark, col_kinds: dict[str, str], preds: list[tuple]) -> dict:
     """{(col, v, v): int64 Bloom probe} for every eq/IN value — the
     row-predicate tuple of the value (_pred_keep), tested against each
     chunk's ``bloom`` cell before its part's payloads are read
-    (_chunk_meta, _decode_parts).  Validates kinds and values before any
+    (_decode_parts).  Validates kinds and values before any
     read (SQL `IN (..., NULL)` is a common source of a bad value).  An
     int value probes as itself; a str value as the JVM's xxhash64 of it,
     the hash the encode built the filter over, from one VALUES query the
@@ -1023,40 +1015,6 @@ def _bloom_probes(spark, col_kinds: dict[str, str], preds: list[tuple]) -> dict:
     return probes
 
 
-def _bloom_admits(probes: dict):
-    """The Spark column that tests each metadata row's ``bloom`` cell
-    against the probes (_bloom_probes) of the row's column: NULL on a
-    column without probes, else True when the filter may hold any of
-    them or the chunk has no filter.  It is bloom_might_contain in native
-    expressions over one array literal of each probe's bit positions
-    (_bloom_positions, mod 2^62: every bitset is smaller), so the test
-    runs in the metadata scan, in no Python stage, its plan the same size
-    for any number of probes, and no bitset leaves the scan.  A filter
-    built with more than _BLOOM_K hashes is tested on its first
-    _BLOOM_K: a conservative superset."""
-    bloom = F.col("bloom")
-    top = (F.length(bloom) - 2).cast("long")  # bitset bytes - 1: a 2^n - 1
-    k = F.conv(F.hex(F.substring(bloom, 1, 1)), 16, 10).cast("int")
-
-    def bit_set(idx):
-        pos = (F.shiftright(idx, 3).bitwiseAND(top) + 2).cast("int")
-        byte = F.conv(F.hex(F.substring(bloom, pos, 1)), 16, 10).cast("int")
-        return F.getbit(byte, idx.bitwiseAND(7).cast("int")) == 1
-
-    by_col: dict[str, list[list[int]]] = {}
-    for (col, _, _), h in probes.items():
-        by_col.setdefault(col, []).append(
-            [p % 2**62 for p in _bloom_positions(h, _BLOOM_K)]
-        )
-    test = F
-    for col, positions in by_col.items():
-        hit = F.exists(
-            F.lit(positions), lambda p: F.forall(F.slice(p, 1, k), bit_set)
-        )
-        test = test.when(F.col("column") == col, F.coalesce(hit, F.lit(True)))
-    return test
-
-
 def _bloom_rules_out(prune: list, probes: dict, blooms: dict) -> bool:
     """True when one part's Bloom cells (``blooms``: column -> bitset or
     None) rule out every row ``prune`` admits (the _decode_fn prune: AND
@@ -1077,13 +1035,12 @@ def _bloom_rules_out(prune: list, probes: dict, blooms: dict) -> bool:
 
 
 def _pred_keeps(
-    blocks: DataFrame, col_kinds: dict[str, str], preds: list[tuple],
-    probes=None,
-) -> tuple[dict | None, list[tuple]]:
-    """(the proven block files or None — see _chunk_meta; per predicate,
-    its keep part_id set and row-predicate tuples), planned on the driver
-    from ONE metadata read."""
-    files, meta = _chunk_meta(blocks, col_kinds, [p[1] for p in preds], probes)
+    blocks: DataFrame, col_kinds: dict[str, str], preds: list[tuple]
+) -> tuple[dict, list[tuple]]:
+    """(the proven block files — see _chunk_meta; per predicate, its keep
+    part_id set and row-predicate tuples), planned on the driver from the
+    block index."""
+    files, meta = _chunk_meta(blocks, col_kinds, [p[1] for p in preds])
     return files, [_pred_keep(col_kinds, meta, p) for p in preds]
 
 
@@ -1094,11 +1051,9 @@ def _pred_keep(col_kinds: dict[str, str], meta: pa.Table, pred: tuple) -> tuple:
     exactly the rows the predicate matches (range -> one tuple, eq/in ->
     one [v, v] per value, [] for the vacuous empty IN); a null predicate
     is the sentinel (col, None, want_null).  _decode_fn tests them row by
-    row (_row_mask).  An eq/in keep set is the
-    parts the chunk statistics admit and, where ``meta`` has the
-    ``bloom_ok`` column (_chunk_meta off the block index), whose Bloom
-    filter may hold a probe of the column; on file-direct blocks the
-    Bloom filters prune in the read task instead (_decode_parts)."""
+    row (_row_mask).  An eq/in keep set is the parts the chunk
+    statistics admit; the Bloom filters prune in the read task
+    (_decode_parts)."""
     op, pred_col = pred[0], pred[1]
     kind = col_kinds.get(pred_col)
     col_rows = pc.equal(meta.column("column"), pred_col)
@@ -1140,8 +1095,6 @@ def _pred_keep(col_kinds: dict[str, str], meta: pa.Table, pred: tuple) -> tuple:
                 for v in values
             ]
         stats = functools.reduce(pc.or_kleene, per_val)
-        if "bloom_ok" in meta.column_names:
-            stats = _all(stats, meta.column("bloom_ok"))
         return _parts(meta, _all(col_rows, stats)), [(pred_col, v, v) for v in values]
     if op in ("isnull", "notnull"):
         if kind is None or kind in _LIST_KINDS:
@@ -1180,13 +1133,12 @@ def decode_df_pruned_multi(
 
     ``preds`` entries: ``("range", col, lo, hi)``, ``("eq", col, value)``,
     ``("in", col, [v1, ...])``, ``("isnull", col)``, ``("notnull", col)``.
-    Chunk level: the chunk statistics (_chunk_meta: the block index on
-    file-direct blocks, else one metadata read) give each predicate's
-    keep set on the driver; the sets combine there and only the kept
-    parts decode (_decode_parts).  Each eq/in value's Bloom probe is
-    tested against the chunk's filter before its part's payloads are
-    read: in that metadata read (_bloom_admits), or on file-direct
-    blocks as the first read of the decode task (_decode_parts).
+    Chunk level: the chunk statistics (_chunk_meta: the block index of
+    the block files; any other blocks DataFrame raises ValueError) give
+    each predicate's keep set on the driver; the sets combine there and
+    only the kept parts decode (_decode_parts).  Each eq/in value's Bloom
+    probe is tested against the chunk's filter as the first read of the
+    decode task, before its part's payloads are read.
     Row level: the same atoms are evaluated row by row on their decoded
     columns (late materialization, see _decode_fn) — equality as the
     degenerate range [v, v], an IN-list as the UNION of its values'
@@ -1196,7 +1148,7 @@ def decode_df_pruned_multi(
         raise ValueError(f"combine must be 'and' or 'or', got {combine!r}")
     preds = _normalize_preds(preds)
     probes = _bloom_probes(blocks.sparkSession, col_kinds, preds)
-    files, planned = _pred_keeps(blocks, col_kinds, preds, probes)
+    files, planned = _pred_keeps(blocks, col_kinds, preds)
     if combine == "and":
         keep = set.intersection(*(k for k, _ in planned))
         row_prunes = [
@@ -1227,12 +1179,10 @@ def decode_df_pruned_eq(
     non-clustered column prunes nothing through min/max).
 
     Scale shape: the Bloom membership test runs where the bitsets are,
-    before a part's payloads are read — on file-direct blocks as the
-    decode task's first read, of the ``bloom`` cells alone; on other
-    blocks DataFrames inside the metadata read, as native expressions
-    (_bloom_admits), so a rejected part never enters the groupBy
-    shuffle.  Bitsets — up to ~80 KB/chunk — never move to the driver
-    at any chunk count, and no separate Python stage runs for them.
+    before a part's payloads are read — as the decode task's first read,
+    of the ``bloom`` cells alone.  Bitsets — up to ~80 KB/chunk — never
+    move to the driver at any chunk count, and no separate Python stage
+    runs for them.
     Bloom filters admit false positives, never false negatives; the
     decode tasks test the value row by row and return exactly the
     matching rows.
@@ -1412,7 +1362,7 @@ def _col_schema(col: str, kind: str) -> T.StructType:
 
 def _decode_col(
     blocks: DataFrame, col: str, kind: str, parts: set[int], prune,
-    files: dict | None,
+    files: dict,
 ) -> DataFrame:
     """Decode only ``col``'s chunk rows of ``parts`` to the rows ``prune``
     matches (``files`` as _chunk_meta proved them): the metadata
@@ -1439,18 +1389,15 @@ _DRIVER_DECODE_MAX_ROWS = 1 << 18
 
 
 def _decode_col_local(
-    files: dict | None, meta: pa.Table, col: str, kind: str, parts: set[int],
+    files: dict, meta: pa.Table, col: str, kind: str, parts: set[int],
     prune,
 ) -> pa.Table | None:
     """_decode_col's rows as an Arrow table, decoded in the driver process
     with no Spark job: the same plan (_file_plan), read loop
     (engine.read_block_file) and decode function (_decode_fn) as its
-    tasks.  None, and the caller runs _decode_col's job instead, when the
-    blocks are not file-direct or ``parts`` hold more than
-    _DRIVER_DECODE_MAX_ROWS rows of ``col``, summed from ``meta`` (the
-    call's _chunk_meta rows of ``col``)."""
-    if files is None:
-        return None
+    tasks.  None, and the caller runs _decode_col's job instead, when
+    ``parts`` hold more than _DRIVER_DECODE_MAX_ROWS rows of ``col``,
+    summed from ``meta`` (the call's _chunk_meta rows of ``col``)."""
     pids = meta.column("part_id")
     in_parts = pc.is_in(pids, pa.array(sorted(parts), pids.type))
     n_rows = pc.sum(pc.filter(meta.column("n_rows"), in_parts)).as_py() or 0
@@ -1473,9 +1420,8 @@ def _aggregate(decoded: DataFrame, *aggs) -> dict:
     aggregates merge through an Observation's accumulators, where a
     DataFrame ``agg`` would shuffle them to one partition (one more job
     under adaptive execution).  The metadata count and min/max take this
-    job for DataFrame-held blocks and for a boundary decode above
-    _DRIVER_DECODE_MAX_ROWS; smaller file-direct ones decode on the
-    driver (_decode_col_local)."""
+    job for a boundary decode above _DRIVER_DECODE_MAX_ROWS; smaller ones
+    decode on the driver (_decode_col_local)."""
     from pyspark.sql import Observation
 
     obs = Observation()
@@ -1484,11 +1430,11 @@ def _aggregate(decoded: DataFrame, *aggs) -> dict:
 
 
 # the blocks columns _decode_fn reads, the same the tokens decoder reads: a
-# file-direct task reads no other (and the ``bloom`` cells first when the
-# call has eq/IN probes)
+# decode task reads no other (and the ``bloom`` cells first when the call
+# has eq/IN probes), and decode_df's layout proof requires them
 _DECODE_SCHEMA = pa.schema([f for f in _BLOCKS_ARROW if f.name in _DECODE_COLS])
-# the columns a file-direct pruned call plans on or reads: the layout
-# proof (_chunk_meta) requires every one of them with its type
+# the columns a pruned call plans on or reads: its layout proof
+# (_chunk_meta) requires every one of them with its type
 _PLAN_SCHEMA = pa.schema([
     f for f in _BLOCKS_ARROW if f.name in (*_DECODE_COLS, *_META_COLS, "bloom")
 ])
@@ -1509,7 +1455,7 @@ def _file_plan(files: dict, parts: set[int], column: str | None) -> list[tuple]:
 
 def _decode_parts(
     blocks: DataFrame,
-    files: dict | None,
+    files: dict,
     parts: set[int],
     col_kinds: dict[str, str],
     out_schema: T.StructType,
@@ -1518,23 +1464,15 @@ def _decode_parts(
     probes: dict | None = None,
 ) -> DataFrame:
     """Decode the chunk rows of ``parts`` (only ``column``'s when given)
-    to exactly the rows ``prune`` matches (see _decode_fn).
-    File-direct when _chunk_meta proved the layout (``files``): each file
-    holding a kept part reads only those parts' rows and the columns
-    _decode_fn reads (engine._decode_block_files), with no Spark scan or
-    exchange.  With Bloom ``probes`` (_bloom_probes) the task first reads
-    only the parts' ``bloom`` cells of the probed columns and drops each
-    part they rule out (_bloom_rules_out), so a file whose every part is
-    ruled out reads no payload.  Other blocks DataFrames take a pushed
-    ``part_id IN (...)`` filter and the groupBy shuffle; their Bloom test
-    ran in the metadata read (_chunk_meta)."""
+    to exactly the rows ``prune`` matches (see _decode_fn), file-direct
+    over the layout _chunk_meta proved (``files``): each file holding a
+    kept part reads only those parts' rows and the columns _decode_fn
+    reads (engine._decode_block_files), with no Spark scan or exchange.
+    With Bloom ``probes`` (_bloom_probes) the task first reads only the
+    parts' ``bloom`` cells of the probed columns and drops each part they
+    rule out (_bloom_rules_out), so a file whose every part is ruled out
+    reads no payload."""
     dec = _decode_fn(col_kinds, out_schema, prune)
-    if files is None:
-        # a literal IN-list that pushes to the blocks scan (no join)
-        rows = blocks.filter(F.col("part_id").isin(sorted(parts)))
-        if column is not None:
-            rows = rows.filter(F.col("column") == column)
-        return rows.groupBy("part_id").applyInArrow(dec, schema=out_schema)
     names = out_schema.fieldNames()
     narrow = None
     if probes:

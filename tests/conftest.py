@@ -1,3 +1,5 @@
+import itertools
+
 import pytest
 
 
@@ -8,3 +10,18 @@ def spark():
     s = get_spark("pps-tests", cpus=8, shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def written(tmp_path):
+    """``written(blocks)``: the blocks DataFrame written as parquet files
+    under the test's tmp_path and read back as a bare scan, the only
+    blocks input the decoders accept."""
+    n = itertools.count()
+
+    def write(blocks):
+        path = str(tmp_path / f"written-{next(n)}")
+        blocks.write.parquet(path)
+        return blocks.sparkSession.read.parquet(path)
+
+    return write

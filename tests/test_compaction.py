@@ -406,22 +406,15 @@ def test_compact_preserves_chunk_stats_and_bloom(spark, tmp_path):
     assert got_eq == exp_eq and len(got_eq) == 1
 
 
-def _grouped(df) -> bool:
-    """True when ``df`` decodes through the groupBy shuffle."""
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-    return "FlatMapGroupsInArrow" in plan
-
-
 def test_decode_blocks_single_layout_gate(spark, blocks_dir, monkeypatch):
     """decode_blocks reads a bare scan file-direct exactly when the one
-    layout proof (engine._block_files) holds.  An in-flight bin (a
-    dangling sidecar, no cmp-* file) stays file-direct; a visible cmp-*
-    file next to one of its sources holds parts twice and falls back with
-    identical rows; a block file rewritten in place is indexed again; a
-    generic blocks directory falls back; past one file per core the file
-    tasks bundle."""
+    layout proof (engine._block_files) holds, and raises otherwise.  An
+    in-flight bin (a dangling sidecar, no cmp-* file) stays file-direct;
+    a visible cmp-* file next to one of its sources holds parts twice and
+    raises, while decode_blocks_files repairs the compaction first and
+    returns the input's rows; a block file rewritten in place is indexed
+    again; a generic blocks directory raises; past one file per core the
+    file tasks bundle."""
     import shutil
 
     import pyarrow as pa
@@ -439,37 +432,57 @@ def test_decode_blocks_single_layout_gate(spark, blocks_dir, monkeypatch):
     def frame():
         return decode_blocks(spark.read.parquet(bdir))
 
+    def file_direct(df) -> bool:
+        plan = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+        return "MapInArrow" in plan and "FlatMapGroupsInArrow" not in plan
+
+    refused = pytest.raises(ValueError, match=r"write\.parquet\(dir\)")
     sidecar = os.path.join(bdir, ".cmp-0123456789abcdef.parquet.srcs.json")
     with open(sidecar, "w") as f:
         json.dump([os.path.basename(p) for p in files[:2]], f)
-    assert not _grouped(frame()) and _rows(frame()) == want
+    assert file_direct(frame()) and _rows(frame()) == want
     os.remove(sidecar)
 
     # an interrupted compaction: the bin is visible, one source survives
-    saved = os.path.join(os.path.dirname(bdir), "saved.parquet")
-    shutil.copy2(files[1], saved)
+    saved = [os.path.join(os.path.dirname(bdir), f"saved{i}.parquet") for i in (0, 1)]
+    for src, dst in zip(files, saved):
+        shutil.copy2(src, dst)
     cmp = os.path.join(bdir, "cmp-0123456789abcdef.parquet")
     pq.write_table(pa.concat_tables([pq.read_table(p) for p in files[:2]]), cmp)
+    with open(sidecar, "w") as f:
+        json.dump([os.path.basename(p) for p in files[:2]], f)
     os.remove(files[1])
-    assert _grouped(frame()) and _rows(frame()) == want
+    with refused:
+        frame()
+    # the directory decode finishes the bin first: its surviving source
+    # and sidecar go, and the cmp-* file holds both sources' parts
+    assert _rows(decode_blocks_files(spark, bdir)) == want
+    assert not os.path.exists(files[0]) and not os.path.exists(sidecar)
+    assert file_direct(frame()) and _rows(frame()) == want
     os.remove(cmp)
-    shutil.copy2(saved, files[1])
-    assert not _grouped(frame())
+    for src, dst in zip(saved, files):
+        shutil.copy2(src, dst)
+    assert file_direct(frame()) and _rows(frame()) == want
 
     # rewritten in place: files[0] now also holds files[1]'s parts
     original = pq.read_table(files[0])
     pq.write_table(pa.concat_tables([original, pq.read_table(files[1])]), files[0])
-    assert _grouped(frame()) and _rows(frame()) == want
+    with refused:
+        frame()
     pq.write_table(original, files[0])
-    assert not _grouped(frame()) and _rows(frame()) == want
+    assert file_direct(frame()) and _rows(frame()) == want
 
     gdir = os.path.join(os.path.dirname(bdir), "generic")
     encode_df(
         spark.range(1_000).withColumnRenamed("id", "k"), "k", {"k": "int"}, n_parts=2
     ).write.parquet(gdir)
     generic = spark.read.parquet(gdir)
-    assert _block_files(generic, _DECODE_SCHEMA) is None
-    assert _grouped(decode_blocks(generic))
+    with refused:
+        _block_files(generic, _DECODE_SCHEMA)
+    with refused:
+        decode_blocks(generic)
 
     for cores in (4, 1):  # 8 files, one task per core
         monkeypatch.setattr(

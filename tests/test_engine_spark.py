@@ -107,15 +107,8 @@ def test_encode_files_and_decode_files_bit_identity(spark, tokens_df, tmp_path):
     blocks_dir = str(tmp_path / "fblocks")
     encode_table_files_native(spark, inp, blocks_dir, snapshot_id="t").count()
 
-    # general (shuffling) decode — a filtered scan is not a bare one — and
-    # the shuffle-free file decode agree
-    decoded_g = decode_blocks(
-        spark.read.parquet(blocks_dir).filter(F.col("n_rows") >= 0)
-    )
     decoded_f = decode_blocks_files(spark, blocks_dir)
-    want = _as_sorted_rows(spark.read.parquet(inp))
-    assert _as_sorted_rows(decoded_f) == want
-    assert _as_sorted_rows(decoded_g) == want
+    assert _as_sorted_rows(decoded_f) == _as_sorted_rows(spark.read.parquet(inp))
 
 
 def test_encode_job_resume(spark, tokens_df, tmp_path):
@@ -289,14 +282,35 @@ def test_encode_job_is_one_spark_job(spark, tokens_df, tmp_path):
     assert len(jobs_of("encode-resume")) == 0
 
 
-def test_decode_detects_corruption(source_blocks):
-    tampered = source_blocks.withColumn(
-        "payload",
-        F.when(F.col("column") == "tokens", F.concat(F.col("payload"), F.lit(b"x")))
-        .otherwise(F.col("payload")),
+def test_decode_detects_corruption(spark, source_blocks, tmp_path):
+    """A block file rewritten on disk with one tokens payload byte flipped
+    fails the decode's crc32 check."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from parquet_python_spark.engine import local_parquet_scan_files
+
+    bad = tmp_path / "bad"
+    bad.mkdir()
+    for f in local_parquet_scan_files(source_blocks):
+        shutil.copy(f, bad)
+    victim = str(next(bad.iterdir()))
+    tbl = pq.read_table(victim)
+    row = pc.index(tbl.column("column"), "tokens").as_py()
+    payloads = tbl.column("payload").to_pylist()
+    flipped = bytearray(payloads[row])
+    flipped[len(flipped) // 2] ^= 0xFF
+    payloads[row] = bytes(flipped)
+    tbl = tbl.set_column(
+        tbl.schema.get_field_index("payload"), "payload",
+        pa.array(payloads, type=tbl.schema.field("payload").type),
     )
-    with pytest.raises(Exception):
-        decode_blocks(tampered).collect()
+    pq.write_table(tbl, victim)
+    with pytest.raises(Exception, match="checksum mismatch"):
+        decode_blocks(spark.read.parquet(str(bad))).collect()
 
 
 def test_files_mode_splits_large_files_by_row_group(spark, tmp_path, monkeypatch):
@@ -375,19 +389,15 @@ def test_decode_pruned_ntok_exact_and_selective(spark, tokens_df, clustered_bloc
 
 
 def test_decode_files_pruned_matches_shuffled(spark, tokens_df, clustered_blocks):
-    """The per-file pruned decode returns the same rows as the grouped
-    (shuffle) decode of the whole blocks table, filtered afterwards."""
+    """The per-file pruned decode returns the same rows as the full decode
+    of the whole blocks table, filtered afterwards."""
     from parquet_python_spark.engine import decode_blocks_files_pruned
 
     _inp, blocks_dir = clustered_blocks
     lo, hi = 16, 32
     want = _as_sorted_rows(tokens_df.filter(F.col("n_tok").between(lo, hi)))
-    not_bare = spark.read.parquet(blocks_dir).filter(F.col("n_rows") >= 0)
-    shuffled = decode_blocks(not_bare)
-    assert "FlatMapGroupsInArrow" in (
-        shuffled._jdf.queryExecution().executedPlan().toString()
-    )
-    assert _as_sorted_rows(shuffled.filter(F.col("n_tok").between(lo, hi))) == want
+    full = decode_blocks(spark.read.parquet(blocks_dir))
+    assert _as_sorted_rows(full.filter(F.col("n_tok").between(lo, hi))) == want
     got = _as_sorted_rows(
         decode_blocks_files_pruned(spark, blocks_dir, "n_tok", lo, hi)
     )
@@ -464,11 +474,10 @@ def test_decode_pruned_empty_range(spark, clustered_blocks):
 
 
 def test_decode_blocks_fast_path_zero_payload_shuffle(spark, tokens_df, tmp_path):
-    """Round-6 optimization: decode_blocks over a bare scan of engine-written
-    blk files must take the shuffle-free per-file path (no
-    FlatMapGroupsInArrow / no payload exchange), produce rows identical to
-    the generic grouped path, and fall back to the grouped path for any
-    non-bare-scan input."""
+    """decode_blocks over a bare scan of engine-written blk files takes
+    the shuffle-free per-file path (no FlatMapGroupsInArrow / no payload
+    exchange) and returns the input's rows; any other input raises.  No
+    decoder in the package groups by part_id: only encode_df does."""
     inp = str(tmp_path / "tok")
     out = str(tmp_path / "enc")
     tokens_df.write.parquet(inp)
@@ -480,11 +489,30 @@ def test_decode_blocks_fast_path_zero_payload_shuffle(spark, tokens_df, tmp_path
     assert "FlatMapGroupsInArrow" not in fast_plan  # shuffle-free path taken
     assert "MapInArrow" in fast_plan
 
-    generic = decode_blocks(blocks.filter(F.col("n_rows") >= 0))  # not bare
-    generic_plan = generic._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInArrow" in generic_plan  # fallback engaged
+    assert _as_sorted_rows(fast) == _as_sorted_rows(spark.read.parquet(inp))
+    with pytest.raises(ValueError, match=r"write\.parquet\(dir\)"):
+        decode_blocks(blocks.filter(F.col("n_rows") >= 0))  # not bare
 
-    assert _as_sorted_rows(fast) == _as_sorted_rows(generic)
+    import ast
+    import pathlib
+
+    import parquet_python_spark
+
+    grouping = []
+    for path in pathlib.Path(parquet_python_spark.__file__).parent.rglob("*.py"):
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            grouping += [
+                (path.name, fn.name) for call in ast.walk(fn)
+                if isinstance(call, ast.Call)
+                and getattr(call.func, "attr", None) == "groupBy"
+                and any(
+                    isinstance(a, ast.Constant) and a.value == "part_id"
+                    for a in call.args
+                )
+            ]
+    assert grouping == [("generic_codec.py", "encode_df")], grouping
 
 
 def test_decode_blocks_fast_path_percent_decodes_paths(spark, tokens_df, tmp_path):

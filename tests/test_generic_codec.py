@@ -18,9 +18,10 @@ def _sorted(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def _composed(df, key_col, kinds, **encode_kw):
-    """The unfused decode_df(encode_df(...)) composition, cast back to the
-    input's Spark types like roundtrip's output."""
+def _composed(written, df, key_col, kinds, **encode_kw):
+    """The unfused decode_df(encode_df(...)) composition over the written
+    blocks, cast back to the input's Spark types like roundtrip's
+    output."""
     from parquet_python_spark.operators.generic_codec import (
         _arrow_safe_schema,
         decode_df,
@@ -29,7 +30,7 @@ def _composed(df, key_col, kinds, **encode_kw):
 
     in_schema = df.select(*list(kinds)).schema
     return decode_df(
-        encode_df(df, key_col, kinds, **encode_kw),
+        written(encode_df(df, key_col, kinds, **encode_kw)),
         key_col,
         kinds,
         _arrow_safe_schema(in_schema, kinds),
@@ -131,7 +132,7 @@ def test_embeddings_float_bit_exact(spark):
         assert np.array_equal(a[k], b[k])  # bit-exact, not approx
 
 
-def test_range_partitioning_wide_key_span(spark):
+def test_range_partitioning_wide_key_span(spark, written):
     """Hash-derived int64 keys spanning most of the int64 range: the exact
     integer bucketing formula would overflow (key-lo)*n_parts; the double
     fallback must keep part ids in [0, n_parts) and the round-trip exact."""
@@ -152,17 +153,18 @@ def test_range_partitioning_wide_key_span(spark):
     exp = _sorted(df)
     assert _sorted(rt) == exp
     composed = _composed(
-        df, "k", {"k": "int", "v": "int"}, n_parts=8, partitioning="range"
+        written, df, "k", {"k": "int", "v": "int"}, n_parts=8,
+        partitioning="range",
     )
     assert _sorted(composed) == exp
 
 
-def test_roundtrip_fused_single_exchange(spark):
+def test_roundtrip_fused_single_exchange(spark, written):
     """Round-6 optimization: roundtrip runs encode+decode in ONE fused
     python pass (MapInArrow) with no content-hash grouping — the unfused
     plan had two group-map nodes and two exchanges, shuffling every input
     row AND every encoded payload.  Rows must equal the unfused
-    encode_df->decode_df composition bit-for-bit.  (The only exchange the
+    encode_df -> write -> decode_df composition bit-for-bit.  (The only exchange the
     fused plan may carry is the conditional round-robin parallelism bump
     for few-split scans — never a hash partitioning.)"""
     li = _t(spark, "lineitem")
@@ -173,13 +175,11 @@ def test_roundtrip_fused_single_exchange(spark):
     assert "MapInArrow" in plan
     assert "hashpartitioning" not in plan
 
-    unfused = _composed(li, "l_orderkey", kinds)
-    unfused_plan = unfused._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInArrow" in unfused_plan
+    unfused = _composed(written, li, "l_orderkey", kinds)
     assert _sorted(fused) == _sorted(unfused)
 
 
-def test_roundtrip_file_direct_fast_path(spark):
+def test_roundtrip_file_direct_fast_path(spark, written):
     """Round-6 optimization: a bare local parquet scan round-trips via
     file-direct pyarrow reads (range dispatch, one task per row-group
     piece) — Spark's scan->Arrow conversion, which dominated the fused
@@ -201,7 +201,7 @@ def test_roundtrip_file_direct_fast_path(spark):
     assert "Scan parquet" not in plan
     assert "Exchange" not in plan
 
-    composed = _composed(li, "l_orderkey", kinds, n_parts=4)
+    composed = _composed(written, li, "l_orderkey", kinds, n_parts=4)
     assert _sorted(fast) == _sorted(composed)
 
 

@@ -162,9 +162,10 @@ def test_bson_to_json_udf(spark):
 
 # ---------------------------------------------- Spark-level flba/int96 rt
 
-def _composed(df, key_col, kinds, **encode_kw):
-    """The unfused decode_df(encode_df(...)) composition, in the decoder's
-    Arrow-widened types (the rows below compare Python values)."""
+def _composed(written, df, key_col, kinds, **encode_kw):
+    """The unfused decode_df(encode_df(...)) composition over the written
+    blocks, in the decoder's Arrow-widened types (the rows below compare
+    Python values)."""
     from parquet_python_spark.operators.generic_codec import (
         _arrow_safe_schema,
         decode_df,
@@ -173,11 +174,11 @@ def _composed(df, key_col, kinds, **encode_kw):
 
     schema = _arrow_safe_schema(df.select(*list(kinds)).schema, kinds)
     return decode_df(
-        encode_df(df, key_col, kinds, **encode_kw), key_col, kinds, schema
+        written(encode_df(df, key_col, kinds, **encode_kw)), key_col, kinds, schema
     )
 
 
-def test_generic_codec_flba_int96_roundtrip(spark):
+def test_generic_codec_flba_int96_roundtrip(spark, written):
     from pyspark.sql import functions as F
 
     from parquet_python_spark.operators.generic_codec import roundtrip
@@ -199,7 +200,7 @@ def test_generic_codec_flba_int96_roundtrip(spark):
 
     exp = rows(df)
     assert rows(roundtrip(df, "id", kinds)) == exp
-    assert rows(_composed(df, "id", kinds, n_parts=4)) == exp
+    assert rows(_composed(written, df, "id", kinds, n_parts=4)) == exp
 
 
 def test_arrow_kernel_null_edges():
@@ -231,7 +232,7 @@ def test_arrow_kernel_null_edges():
         assert got == exp
 
 
-def test_int_list_int32_roundtrip(spark):
+def test_int_list_int32_roundtrip(spark, written):
     """ArrayType(IntegerType) list columns survive the Arrow round-trip
     (regression: decode built list<int64> while the output schema kept the
     input's int32 element type, and applyInArrow rejects the mismatch)."""
@@ -255,7 +256,7 @@ def test_int_list_int32_roundtrip(spark):
 
     exp = rows(df)
     assert rows(roundtrip(df, "id", kinds)) == exp
-    assert rows(_composed(df, "id", kinds, n_parts=4)) == exp
+    assert rows(_composed(written, df, "id", kinds, n_parts=4)) == exp
 
 
 def test_flba_zero_width_and_unequal_widths():
@@ -412,7 +413,7 @@ def test_bool_kind_registry_roundtrip():
         assert np.array_equal(np.asarray(out), vals)
 
 
-def test_bool_generic_roundtrip_with_nulls(spark):
+def test_bool_generic_roundtrip_with_nulls(spark, written):
     from pyspark.sql import functions as F
 
     from parquet_python_spark.operators.generic_codec import roundtrip
@@ -431,7 +432,7 @@ def test_bool_generic_roundtrip_with_nulls(spark):
 
     exp = rows(df)
     assert rows(roundtrip(df, "id", kinds)) == exp
-    assert rows(_composed(df, "id", kinds, n_parts=4)) == exp
+    assert rows(_composed(written, df, "id", kinds, n_parts=4)) == exp
 
 
 # ----------------------------------------- DELTA_BINARY_PACKED (wire layout)

@@ -211,7 +211,7 @@ def test_dict_dlba_rejects_corrupt_wire():
 
 # ------------------------------------------------ Spark end-to-end (V2 pages)
 
-def test_encode_df_page_v2_outer_roundtrip(spark):
+def test_encode_df_page_v2_outer_roundtrip(spark, written):
     """Whole-table round trip with V2 pages + LZ4_RAW outer: bit-identical
     rows, and every params blob carries the V2 marker."""
     from pyspark.sql import functions as F
@@ -232,9 +232,9 @@ def test_encode_df_page_v2_outer_roundtrip(spark):
         .alias("s"),
     )
     kinds = {"k": "int", "v": "int", "s": "str"}
-    blocks = encode_df(
+    blocks = written(encode_df(
         df, "k", kinds, n_parts=4, page="v2", outer="lz4_raw"
-    ).cache()
+    ))
     assert all('"__page__":"v2"' in r["params"] for r in blocks.collect())
     out_schema = _arrow_safe_schema(df.select(*kinds).schema, kinds)
     got = sorted(
@@ -243,4 +243,3 @@ def test_encode_df_page_v2_outer_roundtrip(spark):
     )
     exp = sorted((r["k"], r["v"], r["s"]) for r in df.collect())
     assert got == exp
-    blocks.unpersist()

@@ -6,8 +6,6 @@ The reference parses parquet Statistics{min,max} but never consults them
 
 from __future__ import annotations
 
-import re
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -26,13 +24,13 @@ def keyed_df(spark):
 ROWS = 4096
 
 
-def test_blocks_carry_minmax_stats(spark, keyed_df):
+def test_blocks_carry_minmax_stats(spark, keyed_df, written):
     from parquet_python_spark.operators.generic_codec import encode_df
 
-    blocks = encode_df(
+    blocks = written(encode_df(
         keyed_df, "k", {"k": "int", "v": "int", "s": "str"},
         n_parts=8, partitioning="range",
-    ).cache()
+    ))
     stats = {
         (r["part_id"], r["column"]): (r["stat_min"], r["stat_max"])
         for r in blocks.collect()
@@ -48,10 +46,9 @@ def test_blocks_carry_minmax_stats(spark, keyed_df):
     k_ranges = sorted(v for (p, c), v in stats.items() if c == "k")
     for (lo1, hi1), (lo2, hi2) in zip(k_ranges, k_ranges[1:]):
         assert hi1 < lo2
-    blocks.unpersist()
 
 
-def test_pruned_decode_exact_and_selective(spark, keyed_df):
+def test_pruned_decode_exact_and_selective(spark, keyed_df, written):
     from parquet_python_spark.operators.generic_codec import (
         decode_df_pruned,
         encode_df,
@@ -59,9 +56,9 @@ def test_pruned_decode_exact_and_selective(spark, keyed_df):
     )
 
     kinds = {"k": "int", "v": "int", "s": "str"}
-    blocks = encode_df(
+    blocks = written(encode_df(
         keyed_df, "k", kinds, n_parts=16, partitioning="range"
-    ).cache()
+    ))
     lo, hi = 5_000, 6_000
     out_schema = _arrow_safe_schema(keyed_df.select(*kinds).schema, kinds)
     dec = decode_df_pruned(blocks, "k", kinds, out_schema, "k", lo, hi)
@@ -87,7 +84,6 @@ def test_pruned_decode_exact_and_selective(spark, keyed_df):
     total = blocks.filter(F.col("column") == "k").count()
     assert kept < total  # pruning actually skipped blocks
     assert decoded_parts < 20_000  # and decode touched a strict subset of rows
-    blocks.unpersist()
 
 
 def test_roundtrip_filtered_end_to_end(spark, keyed_df):
@@ -116,14 +112,27 @@ def test_pruned_decode_rejects_non_numeric_pred(spark, keyed_df):
         ).collect()
 
 
-def test_range_partitioning_empty_input(spark, keyed_df):
-    from parquet_python_spark.operators.generic_codec import encode_df
-
-    empty = keyed_df.filter("k < 0")
-    blocks = encode_df(
-        empty, "k", {"k": "int", "v": "int"}, n_parts=4, partitioning="range"
+def test_range_partitioning_empty_input(spark, keyed_df, written):
+    """Empty input encodes to no block row; written, the blocks table is
+    one empty part file, which every decoder reads: zero rows, and a
+    zero count from the metadata."""
+    from parquet_python_spark.operators.generic_codec import (
+        _arrow_safe_schema,
+        count_filtered_meta,
+        decode_df,
+        decode_df_pruned,
+        encode_df,
     )
+
+    kinds = {"k": "int", "v": "int"}
+    empty = keyed_df.filter("k < 0")
+    blocks = encode_df(empty, "k", kinds, n_parts=4, partitioning="range")
     assert blocks.count() == 0
+    blocks = written(blocks)
+    out_schema = _arrow_safe_schema(empty.select(*kinds).schema, kinds)
+    assert decode_df(blocks, "k", kinds, out_schema).count() == 0
+    assert decode_df_pruned(blocks, "k", kinds, out_schema, "k", 1, 5).count() == 0
+    assert count_filtered_meta(blocks, kinds, "k", 1, 5).first()["cnt"] == 0
 
 
 # ------------------------------------------------ bloom equality pruning
@@ -194,11 +203,9 @@ def test_bloom_pruned_equality_roundtrip(spark):
 
 def test_bloom_prune_is_executor_side(spark, tmp_path, monkeypatch):
     """The driver never holds Bloom bitsets: the metadata table of an eq
-    plan and of an IN plan holds no binary column.  On file-direct blocks
-    (the block index) it holds only the chunk statistics (_META_COLS),
-    no per-chunk hit column: the membership test runs in the read task.
-    On cached blocks (a Spark metadata read) it adds one boolean,
-    ``bloom_ok``, the membership test evaluated in that read."""
+    plan and of an IN plan (the block index) holds only the chunk
+    statistics (_META_COLS), no binary column and no per-chunk hit
+    column: the membership test runs in the read task."""
     import pyarrow as pa
 
     from parquet_python_spark.operators import generic_codec as gc
@@ -218,43 +225,35 @@ def test_bloom_prune_is_executor_side(spark, tmp_path, monkeypatch):
     real = gc._chunk_meta
     out_schema = gc._arrow_safe_schema(df.select(*kinds).schema, kinds)
     preds = [("in", "s", ["s1", "s2"]), ("in", "v", [3, 6])]
-    # file-direct first: once cached, Spark's cache serves every scan of
-    # the path, the bare one included
-    for cached in (False, True):
-        blocks = spark.read.parquet(path)
-        if cached:
-            blocks = blocks.cache()
-        seen = []
+    blocks = spark.read.parquet(path)
+    seen = []
 
-        def spy(*args, **kwargs):
-            seen.append(real(*args, **kwargs))
-            return seen[-1]
+    def spy(*args, **kwargs):
+        seen.append(real(*args, **kwargs))
+        return seen[-1]
 
-        monkeypatch.setattr(gc, "_chunk_meta", spy)
-        eq = gc.decode_df_pruned_eq(blocks, "k", kinds, out_schema, "v", 42)
-        multi = gc.decode_df_pruned_multi(blocks, "k", kinds, out_schema, preds)
-        monkeypatch.undo()
-        assert [f is None for f, _ in seen] == [cached] * 2
-        assert [m.num_rows for _, m in seen] == [4, 8]
-        for _, meta in seen:
-            verdict = ["bloom_ok"] if cached else []
-            assert meta.column_names == [*gc._META_COLS, *verdict]
-            assert not any(
-                pa.types.is_binary(t) or pa.types.is_large_binary(t)
-                or (pa.types.is_boolean(t) and not cached)
-                for t in meta.schema.types
-            ), meta.schema
-        for dec, row_pred in (
-            (eq, F.col("v") == 42),
-            (multi, gc._pred_row_expr(gc._normalize_preds(preds))),
-        ):
-            got = sorted(tuple(r) for r in dec.filter(row_pred).collect())
-            want = sorted(tuple(r) for r in df.filter(row_pred).collect())
-            assert got == want and got
-    blocks.unpersist()
+    monkeypatch.setattr(gc, "_chunk_meta", spy)
+    eq = gc.decode_df_pruned_eq(blocks, "k", kinds, out_schema, "v", 42)
+    multi = gc.decode_df_pruned_multi(blocks, "k", kinds, out_schema, preds)
+    monkeypatch.undo()
+    assert [m.num_rows for _, m in seen] == [4, 8]
+    for _, meta in seen:
+        assert meta.column_names == list(gc._META_COLS)
+        assert not any(
+            pa.types.is_binary(t) or pa.types.is_large_binary(t)
+            or pa.types.is_boolean(t)
+            for t in meta.schema.types
+        ), meta.schema
+    for dec, row_pred in (
+        (eq, F.col("v") == 42),
+        (multi, gc._pred_row_expr(gc._normalize_preds(preds))),
+    ):
+        got = sorted(tuple(r) for r in dec.filter(row_pred).collect())
+        want = sorted(tuple(r) for r in df.filter(row_pred).collect())
+        assert got == want and got
 
 
-def test_bloom_build_flag_off_and_conservative_decode(spark):
+def test_bloom_build_flag_off_and_conservative_decode(spark, written):
     """Chunks with more than BLOOM_MAX_CARD distinct values carry no
     bitset, and the eq prune degrades conservatively over them (keeps
     every stats-admitted partition, exact rows)."""
@@ -272,7 +271,7 @@ def test_bloom_build_flag_off_and_conservative_decode(spark):
         F.col("id").alias("k"), (F.col("id") * 3 % 500).alias("v")
     )
     kinds = {"k": "int", "v": "int"}
-    blocks = encode_df(df, "k", kinds, n_parts=2).cache()
+    blocks = written(encode_df(df, "k", kinds, n_parts=2))
     # hash layout: ~98k distinct keys per chunk, over the cap -> no bitset;
     # the 500-value column still gets one
     assert blocks.filter(
@@ -288,7 +287,6 @@ def test_bloom_build_flag_off_and_conservative_decode(spark):
     got = sorted(tuple(r) for r in dec.filter(F.col("k") == 1234).collect())
     exp = sorted(tuple(r) for r in df.filter(F.col("k") == 1234).collect())
     assert got == exp and len(got) == 1
-    blocks.unpersist()
 
 
 def test_bloom_build_shortcircuit_cases():
@@ -366,7 +364,7 @@ def test_filtered_results_outlive_later_calls(spark):
 
 # ---------------------------------------------- rows inside large chunks
 
-def test_range_prune_in_large_chunk_exact(spark):
+def test_range_prune_in_large_chunk_exact(spark, written):
     """A narrow range inside a ~10k-row surviving chunk returns exactly
     the rows of a plain Spark filter, not the chunk: `v` is forced to
     bitpack and `w` carries nulls."""
@@ -383,10 +381,10 @@ def test_range_prune_in_large_chunk_exact(spark):
     )
     kinds = {"k": "int", "v": "int", "w": "int"}
     # 2 range parts -> ~10k-row chunks
-    blocks = encode_df(
+    blocks = written(encode_df(
         df, "k", kinds, n_parts=2, partitioning="range",
         forced_codecs={"v": "bitpack"},
-    ).cache()
+    ))
 
     lo, hi = 5_000, 6_000
     out_schema = _arrow_safe_schema(df.select(*kinds).schema, kinds)
@@ -397,7 +395,6 @@ def test_range_prune_in_large_chunk_exact(spark):
         for r in df.filter((F.col("k") >= lo) & (F.col("k") <= hi)).collect()
     )
     assert got == exp and len(got) == hi - lo + 1
-    blocks.unpersist()
 
 
 # ------------------------------------------------ string (truncated) zone maps
@@ -436,7 +433,7 @@ def test_str_stats_truncation_semantics():
     assert _str_stats(pa.array([None], type=pa.string())) == (None, None)
 
 
-def test_string_zone_maps_prune_and_exact(spark):
+def test_string_zone_maps_prune_and_exact(spark, written):
     """decode_df_pruned on a str predicate: chunks whose truncated bounds
     miss the range are never decoded; the filtered result is exact."""
     from parquet_python_spark.operators.generic_codec import (
@@ -452,9 +449,9 @@ def test_string_zone_maps_prune_and_exact(spark):
         ).alias("s"),
     )
     kinds = {"k": "int", "s": "str"}
-    blocks = encode_df(
+    blocks = written(encode_df(
         df, "k", kinds, n_parts=8, partitioning="range"
-    ).cache()
+    ))
     srows = blocks.filter(F.col("column") == "s").collect()
     assert all(
         r["stat_min_str"] is not None and r["stat_max_str"] is not None
@@ -477,10 +474,9 @@ def test_string_zone_maps_prune_and_exact(spark):
     )
     assert got == exp and len(got) == 500
     dec.unpersist()
-    blocks.unpersist()
 
 
-def test_string_zone_maps_shared_prefix_is_conservative(spark):
+def test_string_zone_maps_shared_prefix_is_conservative(spark, written):
     """Keys sharing a >16-char prefix: truncated bounds collapse to the
     same (prefix, successor) window on every chunk — NOTHING prunes, and
     the result must still be exact (truncation never loses rows)."""
@@ -497,7 +493,7 @@ def test_string_zone_maps_shared_prefix_is_conservative(spark):
         ).alias("s"),
     )
     kinds = {"k": "int", "s": "str"}
-    blocks = encode_df(df, "k", kinds, n_parts=4, partitioning="range")
+    blocks = written(encode_df(df, "k", kinds, n_parts=4, partitioning="range"))
     lo = "p" * 20 + "000100"
     hi = "p" * 20 + "000199"
     out_schema = _arrow_safe_schema(df.select(*kinds).schema, kinds)
@@ -509,7 +505,7 @@ def test_string_zone_maps_shared_prefix_is_conservative(spark):
     assert got == list(range(100, 200))
 
 
-def test_string_pruning_rejects_bad_kinds(spark):
+def test_string_pruning_rejects_bad_kinds(spark, written):
     import pyarrow  # noqa: F401
 
     from parquet_python_spark.operators.generic_codec import (
@@ -523,7 +519,7 @@ def test_string_pruning_rejects_bad_kinds(spark):
         F.col("id").cast("string").alias("s"),
     )
     kinds = {"k": "int", "b": "bool", "s": "str"}
-    blocks = encode_df(df, "k", kinds, n_parts=2)
+    blocks = written(encode_df(df, "k", kinds, n_parts=2))
     out_schema = _arrow_safe_schema(df.select(*kinds).schema, kinds)
     with pytest.raises(ValueError, match="min/max pruning"):
         decode_df_pruned(blocks, "k", kinds, out_schema, "b", 1, 5)
@@ -552,7 +548,7 @@ def test_float_ordered_bits_is_monotone():
     assert ob[4] < ob[5]  # -0.0 below +0.0
 
 
-def test_float_zone_maps_prune_and_exact(spark):
+def test_float_zone_maps_prune_and_exact(spark, written):
     """decode_df_pruned on a float64 predicate: chunk skip via the
     ordered-bits stats, and exactly the rows of a plain Spark filter."""
     from parquet_python_spark.operators.generic_codec import (
@@ -566,9 +562,9 @@ def test_float_zone_maps_prune_and_exact(spark):
         (F.col("id").cast("double") / 100.0 - 50.0).alias("x"),
     )
     kinds = {"k": "int", "x": "float64"}
-    blocks = encode_df(
+    blocks = written(encode_df(
         df, "k", kinds, n_parts=4, partitioning="range"
-    ).cache()
+    ))
     xrows = blocks.filter(F.col("column") == "x").collect()
     assert all(r["stat_min"] is not None for r in xrows)
     # chunks are 5k rows; x is monotone in k, so the stats are selective
@@ -578,10 +574,9 @@ def test_float_zone_maps_prune_and_exact(spark):
     got = sorted(r["k"] for r in dec.collect())
     exp = list(range(4_000, 4_501))
     assert got == exp
-    blocks.unpersist()
 
 
-def test_float_zone_maps_negative_zero_boundary(spark):
+def test_float_zone_maps_negative_zero_boundary(spark, written):
     """-0.0 sorts below +0.0 in the bits transform but equals it in
     IEEE/Spark comparison: a chunk whose max is -0.0 must SURVIVE a
     lo=0.0 prune (the bounds widen across the ±0 pair)."""
@@ -601,9 +596,9 @@ def test_float_zone_maps_negative_zero_boundary(spark):
     )
     df = spark.createDataFrame(pdf)
     kinds = {"k": "int", "x": "float64"}
-    blocks = encode_df(
+    blocks = written(encode_df(
         df, "k", kinds, n_parts=2, partitioning="range"
-    ).cache()
+    ))
     # the low chunk's stats really are the ±0 edge case
     xr = sorted(
         (r["stat_min"], r["stat_max"])
@@ -614,10 +609,9 @@ def test_float_zone_maps_negative_zero_boundary(spark):
     dec = decode_df_pruned(blocks, "k", kinds, out_schema, "x", 0.0, 10.0)
     got = dec.filter((F.col("x") >= 0.0) & (F.col("x") <= 10.0)).count()
     assert got == 100  # -0.0 >= 0.0 is TRUE row-side: nothing may vanish
-    blocks.unpersist()
 
 
-def test_float_int_routes_end_to_end(spark, tmp_path):
+def test_float_int_routes_end_to_end(spark, tmp_path, written):
     """Lineitem-shaped doubles (integer/100 discounts, integer quantities,
     two-decimal prices, plus -0.0, NaN, ±inf and nulls) encode through the
     integer routes, round-trip bit-identically, stay within the whole
@@ -658,7 +652,7 @@ def test_float_int_routes_end_to_end(spark, tmp_path):
     pq.write_table(tbl, path)
     df = spark.read.parquet(path)
     kinds = {"k": "int"} | {c: "float64" for c in floats}
-    blocks = encode_df(df, "k", kinds, n_parts=4, partitioning="range").cache()
+    blocks = written(encode_df(df, "k", kinds, n_parts=4, partitioning="range"))
     out_schema = _arrow_safe_schema(df.schema, kinds)
 
     rows = blocks.filter(F.col("column").isin(floats)).collect()
@@ -703,7 +697,6 @@ def test_float_int_routes_end_to_end(spark, tmp_path):
     want = tbl.filter(pc.and_(pc.greater_equal(xo, lo), pc.less_equal(xo, hi)))
     assert want.num_rows > 0 and dec.num_rows == want.num_rows
     bits_equal(dec.sort_by("k"), want)
-    blocks.unpersist()
 
 
 # ------------------------------------------------ string bloom point lookups
@@ -751,7 +744,7 @@ def test_string_bloom_pruned_equality_roundtrip(spark):
     assert len(admitted) < len(meta), (len(admitted), len(meta))
 
 
-def test_string_bloom_eq_rejects_non_str_value(spark):
+def test_string_bloom_eq_rejects_non_str_value(spark, written):
     from parquet_python_spark.operators.generic_codec import (
         _arrow_safe_schema,
         decode_df_pruned_eq,
@@ -762,7 +755,7 @@ def test_string_bloom_eq_rejects_non_str_value(spark):
         F.col("id").alias("k"), F.col("id").cast("string").alias("s")
     )
     kinds = {"k": "int", "s": "str"}
-    blocks = encode_df(df, "k", kinds, n_parts=2)
+    blocks = written(encode_df(df, "k", kinds, n_parts=2))
     out_schema = _arrow_safe_schema(df.select(*kinds).schema, kinds)
     with pytest.raises(ValueError, match="str value"):
         decode_df_pruned_eq(blocks, "k", kinds, out_schema, "s", 7)
@@ -771,7 +764,7 @@ def test_string_bloom_eq_rejects_non_str_value(spark):
 # ------------------------------------------- null-count stats (IS NULL prune)
 
 
-def test_null_count_stats_and_pruned_decode(spark):
+def test_null_count_stats_and_pruned_decode(spark, written):
     """Chunks carry exact null counts, and decode_df_pruned_multi skips
     whole chunks for IS NULL / IS NOT NULL predicates — the
     Statistics.null_count consumption the reference never does.  Nulls
@@ -789,9 +782,9 @@ def test_null_count_stats_and_pruned_decode(spark):
         F.concat(F.lit("s"), F.col("id").cast("string")).alias("s"),
     )
     kinds = {"k": "int", "w": "int", "s": "str"}
-    blocks = encode_df(
+    blocks = written(encode_df(
         df, "k", kinds, n_parts=4, partitioning="range"
-    ).cache()
+    ))
     # exact per-chunk null counts, and they sum to the injected total
     wrows = blocks.filter(F.col("column") == "w").collect()
     assert sum(r["n_nulls"] for r in wrows) == 5_000
@@ -823,10 +816,9 @@ def test_null_count_stats_and_pruned_decode(spark):
     )
     assert got_nn == exp_nn
     dec_nn.unpersist()
-    blocks.unpersist()
 
 
-def test_null_pruning_rejects_list_kind(spark):
+def test_null_pruning_rejects_list_kind(spark, written):
     from parquet_python_spark.operators.generic_codec import (
         _arrow_safe_schema,
         decode_df_pruned_multi,
@@ -838,7 +830,7 @@ def test_null_pruning_rejects_list_kind(spark):
         F.array(F.col("id").cast("int")).alias("a"),
     )
     kinds = {"k": "int", "a": "int_list"}
-    blocks = encode_df(df, "k", kinds, n_parts=2)
+    blocks = written(encode_df(df, "k", kinds, n_parts=2))
     out_schema = _arrow_safe_schema(df.select(*kinds).schema, kinds)
     with pytest.raises(ValueError, match="scalar column"):
         decode_df_pruned_multi(blocks, "k", kinds, out_schema, [("isnull", "a")])
@@ -873,7 +865,7 @@ def test_roundtrip_filtered_null_end_to_end(spark):
 # ------------------------------------------ string and nullable ranges
 
 
-def test_string_range_in_large_chunk_exact(spark):
+def test_string_range_in_large_chunk_exact(spark, written):
     """Spark e2e: a narrow string range inside a ~10k-row string chunk
     returns exactly the rows of a plain Spark filter."""
     from parquet_python_spark.operators.generic_codec import (
@@ -888,9 +880,9 @@ def test_string_range_in_large_chunk_exact(spark):
     )
     kinds = {"k": "int", "s": "str"}
     # 2 range parts -> ~10k-row chunks
-    blocks = encode_df(
+    blocks = written(encode_df(
         df, "k", kinds, n_parts=2, partitioning="range"
-    ).cache()
+    ))
     lo, hi = "d00005000", "d00006000"
     out_schema = _arrow_safe_schema(df.select(*kinds).schema, kinds)
     dec = decode_df_pruned(blocks, "k", kinds, out_schema, "s", lo, hi)
@@ -900,10 +892,9 @@ def test_string_range_in_large_chunk_exact(spark):
         for r in df.filter((F.col("s") >= lo) & (F.col("s") <= hi)).collect()
     )
     assert got == exp and len(got) == 1001
-    blocks.unpersist()
 
 
-def test_nullable_ranges_in_large_chunks_exact(spark):
+def test_nullable_ranges_in_large_chunks_exact(spark, written):
     """Null-bearing ~10k-row chunks of all three stat kinds return exactly
     the rows of a plain Spark filter for a narrow range: nulls never
     match, a float NaN *data* value is honored as greatest, and a range
@@ -935,7 +926,7 @@ def test_nullable_ranges_in_large_chunks_exact(spark):
     )
     kinds = {"k": "int", "w": "int", "f": "float64", "s": "str"}
     # 2 range parts -> ~10k-row chunks
-    blocks = encode_df(df, "k", kinds, n_parts=2, partitioning="range").cache()
+    blocks = written(encode_df(df, "k", kinds, n_parts=2, partitioning="range"))
 
     out_schema = _arrow_safe_schema(df.select(*kinds).schema, kinds)
     # --- int nullable predicate: narrow range -> exact rows
@@ -966,10 +957,9 @@ def test_nullable_ranges_in_large_chunks_exact(spark):
     hi_s = f"d{ROWS + 500:08d}"
     dec_s = decode_df_pruned(blocks, "k", kinds, out_schema, "s", lo_s, hi_s)
     assert dec_s.count() == 0
-    blocks.unpersist()
 
 
-def test_multi_predicate_prune_conjunction(spark):
+def test_multi_predicate_prune_conjunction(spark, written):
     """Conjunctive pruning intersects keep sets and row masks: a
     (range AND eq AND notnull) conjunction returns exactly the rows of the
     plain Spark filter, fewer than the tightest single predicate."""
@@ -989,7 +979,7 @@ def test_multi_predicate_prune_conjunction(spark):
         .alias("t"),
     )
     kinds = {"k": "int", "v": "int", "t": "str"}
-    blocks = encode_df(df, "k", kinds, n_parts=4, partitioning="range").cache()
+    blocks = written(encode_df(df, "k", kinds, n_parts=4, partitioning="range"))
     out_schema = _arrow_safe_schema(df.select(*kinds).schema, kinds)
 
     preds = [
@@ -1032,10 +1022,9 @@ def test_multi_predicate_prune_conjunction(spark):
         decode_df_pruned_multi(
             blocks, "k", kinds, out_schema, [("like", "t", "x%")]
         )
-    blocks.unpersist()
 
 
-def test_in_list_prune_union_and_exact(spark):
+def test_in_list_prune_union_and_exact(spark, written):
     """IN-list pruning: chunk keep is any-of (stats OR'd, Bloom any-probe),
     the row mask is the UNION of each value's [v, v] range — two distant
     values of one chunk return those two rows, not the chunk; empty IN
@@ -1053,7 +1042,7 @@ def test_in_list_prune_union_and_exact(spark):
     )
     kinds = {"k": "int", "t": "str"}
     # 2 range parts -> ~20k-row chunks
-    blocks = encode_df(df, "k", kinds, n_parts=2, partitioning="range").cache()
+    blocks = written(encode_df(df, "k", kinds, n_parts=2, partitioning="range"))
     out_schema = _arrow_safe_schema(df.select(*kinds).schema, kinds)
 
     # two int values in the SAME chunk, far apart
@@ -1084,17 +1073,13 @@ def test_in_list_prune_union_and_exact(spark):
         [("in", "k", vals), ("range", "k", 0, 1_000)],
     )
     assert [r["k"] for r in dec_i.collect()] == [100]
-    blocks.unpersist()
 
 
 def test_persisted_blocks_prune_pushes_to_scan(spark, tmp_path, monkeypatch):
     """The deployment shape: blocks persisted as a parquet table, pruned
-    decodes reading it back.  On the bare scan the decode is file-direct:
-    no exchange, no join, one task per file holding a kept part.  On a
-    persisted (DataFrame-held) copy the driver-planned keep set reaches
-    the cached scan as a pushed part_id filter, with no join.  Results
-    stay exact through the parquet round-trip (n_nulls/str bounds
-    survive) on both."""
+    decodes reading it back file-direct: no exchange, no join, one task
+    per file holding a kept part.  Results stay exact through the parquet
+    round-trip (n_nulls/str bounds survive)."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
@@ -1134,96 +1119,74 @@ def test_persisted_blocks_prune_pushes_to_scan(spark, tmp_path, monkeypatch):
             d._jdf.queryExecution(), "formatted"
         )
 
-    def pushed(p):
-        return re.search(
-            r"InMemoryTableScan\nOutput[^\n]*\n"
-            r"Arguments: [^\n]*\], \[[^\n]*part_id#\d+ (=|IN|INSET) ",
-            p,
-        )
+    blocks = spark.read.parquet(path)
+    # range prune
+    dec = decode_df_pruned(blocks, "k", kinds, out_schema, "k", 5_000, 6_000)
+    p = plan(dec)
+    assert "Join" not in p
+    assert "Exchange" not in p and "FlatMapGroupsInArrow" not in p, p
+    for lo, hi in ((5_000, 6_000), (0, 19_999)):
+        n_tasks = decode_df_pruned(
+            blocks, "k", kinds, out_schema, "k", lo, hi
+        ).rdd.getNumPartitions()
+        assert n_tasks == files_holding(kept_parts(lo, hi)) >= 1
+    got = sorted(r["k"] for r in dec.filter(F.col("k").between(5_000, 6_000)).collect())
+    assert got == list(range(5_000, 6_001))
 
-    # file-direct first: once persisted, Spark's cache serves every scan of
-    # the path, the bare one included
-    for file_direct in (True, False):
-        blocks = spark.read.parquet(path)
-        if not file_direct:
-            blocks = blocks.persist()
-        # range prune
-        dec = decode_df_pruned(blocks, "k", kinds, out_schema, "k", 5_000, 6_000)
-        p = plan(dec)
-        assert "Join" not in p
-        if file_direct:
-            assert "Exchange" not in p and "FlatMapGroupsInArrow" not in p, p
-            for lo, hi in ((5_000, 6_000), (0, 19_999)):
-                n_tasks = decode_df_pruned(
-                    blocks, "k", kinds, out_schema, "k", lo, hi
-                ).rdd.getNumPartitions()
-                assert n_tasks == files_holding(kept_parts(lo, hi)) >= 1
-        else:
-            assert pushed(p), p
-        got = sorted(
-            r["k"] for r in dec.filter((F.col("k") >= 5_000) & (F.col("k") <= 6_000)).collect()
-        )
-        assert got == list(range(5_000, 6_001))
+    # null prune: the null-count keep set takes the same path
+    dec_n = decode_df_pruned_multi(
+        blocks, "k", kinds, out_schema, [("isnull", "w")]
+    )
+    p_n = plan(dec_n)
+    assert "Join" not in p_n and "Exchange" not in p_n, p_n
+    got_n = sorted(r["k"] for r in dec_n.filter(F.col("w").isNull()).collect())
+    assert got_n == list(range(4_000))
 
-        # null prune: the null-count keep set takes the same path
-        dec_n = decode_df_pruned_multi(
-            blocks, "k", kinds, out_schema, [("isnull", "w")]
-        )
-        p_n = plan(dec_n)
-        assert "Join" not in p_n
-        assert ("Exchange" not in p_n) if file_direct else pushed(p_n), p_n
-        got_n = sorted(r["k"] for r in dec_n.filter(F.col("w").isNull()).collect())
-        assert got_n == list(range(4_000))
+    # conjunction over the persisted table stays exact
+    dec_m = decode_df_pruned_multi(
+        blocks, "k", kinds, out_schema,
+        [("range", "k", 5_000, 6_000), ("notnull", "w")],
+    )
+    got_m = sorted(
+        tuple(r)
+        for r in dec_m.filter(
+            (F.col("k") >= 5_000) & (F.col("k") <= 6_000) & F.col("w").isNotNull()
+        ).collect()
+    )
+    assert got_m == [(i, i) for i in range(5_000, 6_001)]
 
-        # conjunction over the persisted table stays exact
-        dec_m = decode_df_pruned_multi(
-            blocks, "k", kinds, out_schema,
-            [("range", "k", 5_000, 6_000), ("notnull", "w")],
-        )
-        got_m = sorted(
-            tuple(r)
-            for r in dec_m.filter(
-                (F.col("k") >= 5_000) & (F.col("k") <= 6_000) & F.col("w").isNotNull()
-            ).collect()
-        )
-        assert got_m == [(i, i) for i in range(5_000, 6_001)]
+    # metadata-first COUNT: exact; only the two boundary parts decode
+    # (the two contained ones are answered from the metadata), and that
+    # decode reads only the predicate column's kept chunks.  That small
+    # decode runs in the driver process; the plan checks below force the
+    # Spark job (a budget of 0 rows)
+    calls, local_calls = [], []
 
-        # metadata-first COUNT: exact; only the two boundary parts decode
-        # (the two contained ones are answered from the metadata), and
-        # that decode reads only the predicate column's kept chunks.  On
-        # the bare scan that small decode runs in the driver process; the
-        # plan checks below force the Spark job (a budget of 0 rows)
-        calls, local_calls = [], []
+    def recording_decode_col(*args):
+        calls.append((args[3], real_decode_col(*args)))
+        return calls[-1][1]
 
-        def recording_decode_col(*args):
-            calls.append((args[3], real_decode_col(*args)))
-            return calls[-1][1]
+    def recording_local(*args):
+        local_calls.append(args[4])
+        return real_local(*args)
 
-        def recording_local(*args):
-            local_calls.append(args[4])
-            return real_local(*args)
+    monkeypatch.setattr(gc, "_decode_col", recording_decode_col)
+    monkeypatch.setattr(gc, "_decode_col_local", recording_local)
+    def count():
+        return count_filtered_meta(blocks, kinds, "k", 2_500, 17_499).first()["cnt"]
 
-        monkeypatch.setattr(gc, "_decode_col", recording_decode_col)
-        monkeypatch.setattr(gc, "_decode_col_local", recording_local)
-        assert count_filtered_meta(blocks, kinds, "k", 2_500, 17_499).first()["cnt"] == 15_000
-        if file_direct:
-            assert local_calls == [{0, 3}] and calls == []
-            monkeypatch.setattr(gc, "_DRIVER_DECODE_MAX_ROWS", 0)
-            assert count_filtered_meta(blocks, kinds, "k", 2_500, 17_499).first()["cnt"] == 15_000
-        monkeypatch.undo()
-        assert [parts for parts, _ in calls] == [{0, 3}]
-        p_c = plan(calls[0][1])
-        assert "Join" not in p_c
-        if file_direct:
-            assert "Exchange" not in p_c, p_c
-            assert calls[0][1].rdd.getNumPartitions() == files_holding({0, 3})
-        else:
-            assert re.search(r"part_id#\d+ IN \(0,3\)", p_c), p_c
-            assert pushed(p_c) and re.search(r"\(column#\d+ = k\)", p_c), p_c
-    blocks.unpersist()
+    assert count() == 15_000
+    assert local_calls == [{0, 3}] and calls == []
+    monkeypatch.setattr(gc, "_DRIVER_DECODE_MAX_ROWS", 0)
+    assert count() == 15_000
+    monkeypatch.undo()
+    assert [parts for parts, _ in calls] == [{0, 3}]
+    p_c = plan(calls[0][1])
+    assert "Join" not in p_c and "Exchange" not in p_c, p_c
+    assert calls[0][1].rdd.getNumPartitions() == files_holding({0, 3})
 
 
-def test_or_predicate_prune_union_and_exact(spark):
+def test_or_predicate_prune_union_and_exact(spark, written):
     """Disjunctive pruning: OR of two distant ranges returns exactly their
     rows via the union group; an OR containing a null predicate keeps
     chunk pruning; results are exact; generator IN values survive the
@@ -1241,7 +1204,7 @@ def test_or_predicate_prune_union_and_exact(spark):
         F.when(F.col("id") < 2_000, None).otherwise(F.col("id")).alias("w"),
     )
     kinds = {"k": "int", "w": "int"}
-    blocks = encode_df(df, "k", kinds, n_parts=4, partitioning="range").cache()
+    blocks = written(encode_df(df, "k", kinds, n_parts=4, partitioning="range"))
     out_schema = _arrow_safe_schema(df.select(*kinds).schema, kinds)
 
     # OR of two distant narrow ranges on k: exactly their rows
@@ -1264,7 +1227,6 @@ def test_or_predicate_prune_union_and_exact(spark):
         decode_df_pruned_multi(
             blocks, "k", kinds, out_schema, preds, combine="xor"
         )
-    blocks.unpersist()
 
     # end-to-end wrapper with a GENERATOR In member: normalize-first means
     # the prune and the exact row filter see the same values
@@ -1310,7 +1272,7 @@ def test_prune_algebra_properties():
     check_str_stats()
 
 
-def test_count_filtered_meta_exact_and_metadata_only(spark):
+def test_count_filtered_meta_exact_and_metadata_only(spark, written):
     """Metadata-first COUNT: fully-contained chunks contribute n_rows
     without decoding (evidence: the contained classifier claims chunks),
     boundary chunks decode to their matching rows; the total is exact for
@@ -1328,7 +1290,7 @@ def test_count_filtered_meta_exact_and_metadata_only(spark):
         F.when(F.col("id") % 9 == 0, None).otherwise(F.col("id")).alias("w"),
     )
     kinds = {"k": "int", "f": "float64", "t": "str", "w": "int"}
-    blocks = encode_df(df, "k", kinds, n_parts=8, partitioning="range").cache()
+    blocks = written(encode_df(df, "k", kinds, n_parts=8, partitioning="range"))
 
     # predicate spanning several whole chunks + two boundary halves
     lo, hi = 7_500, 32_499
@@ -1362,10 +1324,9 @@ def test_count_filtered_meta_exact_and_metadata_only(spark):
     # a column that was never encoded fails loudly, not cnt=0
     with pytest.raises(ValueError, match="no chunks"):
         count_filtered_meta(blocks, {**kinds, "zz": "int"}, "zz", 0, 1)
-    blocks.unpersist()
 
 
-def test_count_null_meta_zero_decode(spark):
+def test_count_null_meta_zero_decode(spark, written):
     """IS [NOT] NULL counting is pure metadata: exact at any selectivity,
     and structurally payload-free (no decode function in its source)."""
     import inspect
@@ -1380,7 +1341,7 @@ def test_count_null_meta_zero_decode(spark):
         F.when(F.col("id") % 4 == 0, None).otherwise(F.col("id")).alias("w"),
     )
     kinds = {"k": "int", "w": "int"}
-    blocks = encode_df(df, "k", kinds, n_parts=4, partitioning="range").cache()
+    blocks = written(encode_df(df, "k", kinds, n_parts=4, partitioning="range"))
     assert count_null_meta(blocks, kinds, "w", True).first()["cnt"] == 2_500
     assert count_null_meta(blocks, kinds, "w", False).first()["cnt"] == 7_500
     assert count_null_meta(blocks, kinds, "k", True).first()["cnt"] == 0
@@ -1399,10 +1360,9 @@ def test_count_null_meta_zero_decode(spark):
         count_null_meta(blocks, {"a": "int_list"}, "a", True)
     with pytest.raises(ValueError, match="no chunks"):
         count_null_meta(blocks, {"zz": "int"}, "zz", True)
-    blocks.unpersist()
 
 
-def test_minmax_filtered_meta_exact(spark):
+def test_minmax_filtered_meta_exact(spark, written):
     """Metadata-first MIN/MAX: candidates come from chunk stats without
     decoding; straddling chunks decode; results match the row-level truth
     across boundary shapes, nulls, and the empty predicate."""
@@ -1417,7 +1377,7 @@ def test_minmax_filtered_meta_exact(spark):
         F.when(F.col("id") % 5 == 0, None).otherwise(F.col("id") * 3).alias("w"),
     )
     kinds = {"k": "int", "w": "int"}
-    blocks = encode_df(df, "k", kinds, n_parts=8, partitioning="range").cache()
+    blocks = written(encode_df(df, "k", kinds, n_parts=8, partitioning="range"))
 
     for col in ("k", "w"):
         for lo, hi in [
@@ -1453,10 +1413,9 @@ def test_minmax_filtered_meta_exact(spark):
     assert meta.num_rows == 8 and not pc.any(straddle).as_py()
     with pytest.raises(ValueError, match="metadata min/max"):
         minmax_filtered_meta(blocks, {"k": "float64"}, "k", 0, 1)
-    blocks.unpersist()
 
 
-def test_topk_filtered_meta_exact_and_pruned(spark):
+def test_topk_filtered_meta_exact_and_pruned(spark, written):
     """Zone-map top-k pushdown: exact value multisets both directions,
     under nulls, ties, k > table, and hash layout; and the keep set is a
     strict subset of chunks under range partitioning."""
@@ -1475,9 +1434,9 @@ def test_topk_filtered_meta_exact_and_pruned(spark):
     )
     kinds = {"k": "int", "v": "int"}
     for part_mode in ("range", "hash"):
-        blocks = encode_df(
+        blocks = written(encode_df(
             df, "k", kinds, n_parts=8, partitioning=part_mode
-        ).cache()
+        ))
         for col in ("k", "v"):
             for asc in (True, False):
                 for kk in (5, 1_000):
@@ -1503,11 +1462,10 @@ def test_topk_filtered_meta_exact_and_pruned(spark):
             for r in topk_filtered_meta(blocks, kinds, "k", n + 5).collect()
         )
         assert got_all == list(range(n))
-        blocks.unpersist()
 
     # prune evidence under range layout: top-5 on the key decodes a
     # strict subset of chunks (bound B lands in the first chunk)
-    blocks = encode_df(df, "k", kinds, n_parts=8, partitioning="range").cache()
+    blocks = written(encode_df(df, "k", kinds, n_parts=8, partitioning="range"))
     meta = blocks.filter(F.col("column") == "k").collect()
     by_edge = sorted(meta, key=lambda r: r["stat_max"])
     b = by_edge[0]["stat_max"]  # first chunk already holds >= 5 values
@@ -1517,7 +1475,6 @@ def test_topk_filtered_meta_exact_and_pruned(spark):
         topk_filtered_meta(blocks, {"k": "float64"}, "k", 5)
     with pytest.raises(ValueError, match="positive"):
         topk_filtered_meta(blocks, kinds, "k", 0)
-    blocks.unpersist()
 
 
 def test_metadata_aggregates_driver_path_equals_job_path(
@@ -1610,7 +1567,7 @@ def test_metadata_aggregates_driver_path_equals_job_path(
     assert driver == want
 
 
-def test_pruned_decode_rejects_unencoded_and_str_bounds_on_int(spark):
+def test_pruned_decode_rejects_unencoded_and_str_bounds_on_int(spark, written):
     """The pruned decodes fail loudly on a predicate column with no chunk
     rows (an AND would return a definitive-looking empty result; an OR
     would silently drop that member's rows), and int columns reject
@@ -1625,7 +1582,7 @@ def test_pruned_decode_rejects_unencoded_and_str_bounds_on_int(spark):
 
     df = spark.range(100).select(F.col("id").alias("k"))
     kinds = {"k": "int"}
-    blocks = encode_df(df, "k", kinds, n_parts=2)
+    blocks = written(encode_df(df, "k", kinds, n_parts=2))
     out_schema = _arrow_safe_schema(df.select("k").schema, kinds)
     wide = {"k": "int", "zz": "int"}
     with pytest.raises(ValueError, match="no chunks"):
@@ -1684,17 +1641,12 @@ def _jobs_of(spark, group, call):
 
 
 def test_pruned_calls_spark_job_counts(spark, tmp_path, monkeypatch):
-    """On file-direct blocks every pruned call plans from the cached
-    block index: a row lookup (range or eq) runs exactly one Spark job,
-    the exchange-free decode; a top-k, and a count or min/max with
-    boundary chunks, decode them in the driver process and run none, as
-    do a count or min/max answered from metadata alone and a null count.
-    With a driver-decode budget of 0 rows the top-k, count and min/max
-    run the one decode job instead.  Cached (DataFrame-held) blocks keep the
-    Spark metadata read, one job, and the groupBy decode runs as two
-    under adaptive execution (its shuffle stage, then its result): three
-    jobs per decoding call, one per metadata-only call — at most: the
-    split of the groupBy decode is adaptive execution's to make."""
+    """Every pruned call plans from the cached block index: a row lookup
+    (range or eq) runs exactly one Spark job, the exchange-free decode; a
+    top-k, and a count or min/max with boundary chunks, decode them in
+    the driver process and run none, as do a count or min/max answered
+    from metadata alone and a null count.  With a driver-decode budget of
+    0 rows the top-k, count and min/max run the one decode job instead."""
     import parquet_python_spark.operators.generic_codec as gc
     from parquet_python_spark.operators.generic_codec import (
         _arrow_safe_schema,
@@ -1716,68 +1668,56 @@ def test_pruned_calls_spark_job_counts(spark, tmp_path, monkeypatch):
     path = str(tmp_path / "blocks")
     encode_df(df, "k", kinds, n_parts=4, partitioning="range").write.parquet(path)
     out_schema = _arrow_safe_schema(df.select(*kinds).schema, kinds)
-    # file-direct first: once cached, Spark's cache serves every scan of
-    # the path, the bare one included
-    for cached in (False, True):
-        blocks = spark.read.parquet(path)
-        if cached:
-            assert blocks.cache().count() == 12
-        tag = "cached" if cached else "direct"
+    blocks = spark.read.parquet(path)
 
-        def jobs(name, want, call, decodes=None):
-            """``want``: the exact job count on file-direct blocks; on
-            cached ones at most 3 for a call that ``decodes`` (by default
-            one that runs a job on file-direct blocks), else 1."""
-            n, result = _jobs_of(spark, f"{tag}-{name}", call)
-            if decodes is None:
-                decodes = want > 0
-            assert (n <= (3 if decodes else 1)) if cached else n == want, (name, n)
-            return result
+    def jobs(name, want, call):
+        n, result = _jobs_of(spark, name, call)
+        assert n == want, (name, n)
+        return result
 
-        rows = jobs("range", 1, lambda: decode_df_pruned(
-            blocks, "k", kinds, out_schema, "k", 5_000, 6_000
-        ).filter(F.col("k").between(5_000, 6_000)).collect())
-        assert len(rows) == 1_001
-        rows = jobs("eq", 1, lambda: decode_df_pruned_eq(
-            blocks, "k", kinds, out_schema, "v", 7
-        ).filter(F.col("v") == 7).collect())
-        assert len(rows) == 20
-        for budget in (None, 0):
-            if budget is not None:
-                monkeypatch.setattr(gc, "_DRIVER_DECODE_MAX_ROWS", budget)
-            want, sfx = (0, "") if budget is None else (1, "-job")
-            rows = jobs("topk" + sfx, want, lambda: topk_filtered_meta(
-                blocks, kinds, "k", 5, ascending=False
-            ).collect(), decodes=True)
-            assert [r["k"] for r in rows] == [19_999, 19_998, 19_997, 19_996, 19_995]
-            # [2_500, 17_499] contains the two middle parts and cuts the
-            # outer two
-            cnt = jobs("count" + sfx, want, lambda: count_filtered_meta(
-                blocks, kinds, "k", 2_500, 17_499
-            ).first()["cnt"], decodes=True)
-            assert cnt == 15_000
-            row = jobs("minmax" + sfx, want, lambda: minmax_filtered_meta(
-                blocks, kinds, "k", 2_500, 17_499
-            ).first(), decodes=True)
-            assert (row["mn"], row["mx"]) == (2_500, 17_499)
-        monkeypatch.undo()
-        # [0, 19_999] contains every part: no boundary chunk decodes
-        cnt = jobs("count-meta", 0, lambda: count_filtered_meta(
-            blocks, kinds, "k", 0, 19_999
+    rows = jobs("range", 1, lambda: decode_df_pruned(
+        blocks, "k", kinds, out_schema, "k", 5_000, 6_000
+    ).filter(F.col("k").between(5_000, 6_000)).collect())
+    assert len(rows) == 1_001
+    rows = jobs("eq", 1, lambda: decode_df_pruned_eq(
+        blocks, "k", kinds, out_schema, "v", 7
+    ).filter(F.col("v") == 7).collect())
+    assert len(rows) == 20
+    for budget in (None, 0):
+        if budget is not None:
+            monkeypatch.setattr(gc, "_DRIVER_DECODE_MAX_ROWS", budget)
+        want, sfx = (0, "") if budget is None else (1, "-job")
+        rows = jobs("topk" + sfx, want, lambda: topk_filtered_meta(
+            blocks, kinds, "k", 5, ascending=False
+        ).collect())
+        assert [r["k"] for r in rows] == [19_999, 19_998, 19_997, 19_996, 19_995]
+        # [2_500, 17_499] contains the two middle parts and cuts the
+        # outer two
+        cnt = jobs("count" + sfx, want, lambda: count_filtered_meta(
+            blocks, kinds, "k", 2_500, 17_499
         ).first()["cnt"])
-        assert cnt == 20_000
-        row = jobs("minmax-meta", 0, lambda: minmax_filtered_meta(
-            blocks, kinds, "k", 0, 19_999
+        assert cnt == 15_000
+        row = jobs("minmax" + sfx, want, lambda: minmax_filtered_meta(
+            blocks, kinds, "k", 2_500, 17_499
         ).first())
-        assert (row["mn"], row["mx"]) == (0, 19_999)
-        cnt = jobs("nulls", 0, lambda: count_null_meta(
-            blocks, kinds, "w", True
-        ).first()["cnt"])
-        assert cnt == 6_667
-    blocks.unpersist()
+        assert (row["mn"], row["mx"]) == (2_500, 17_499)
+    monkeypatch.undo()
+    # [0, 19_999] contains every part: no boundary chunk decodes
+    cnt = jobs("count-meta", 0, lambda: count_filtered_meta(
+        blocks, kinds, "k", 0, 19_999
+    ).first()["cnt"])
+    assert cnt == 20_000
+    row = jobs("minmax-meta", 0, lambda: minmax_filtered_meta(
+        blocks, kinds, "k", 0, 19_999
+    ).first())
+    assert (row["mn"], row["mx"]) == (0, 19_999)
+    cnt = jobs("nulls", 0, lambda: count_null_meta(
+        blocks, kinds, "w", True
+    ).first()["cnt"])
+    assert cnt == 6_667
 
 
-def test_null_predicates_in_large_chunk_exact(spark):
+def test_null_predicates_in_large_chunk_exact(spark, written):
     """IS NULL / IS NOT NULL on one 20k-row chunk whose nulls fill a
     200-row stretch return exactly the rows of a plain Spark filter."""
     from parquet_python_spark.operators.generic_codec import (
@@ -1794,7 +1734,7 @@ def test_null_predicates_in_large_chunk_exact(spark):
         .alias("w"),
     )
     kinds = {"k": "int", "w": "int"}
-    blocks = encode_df(df, "k", kinds, n_parts=1, partitioning="range").cache()
+    blocks = written(encode_df(df, "k", kinds, n_parts=1, partitioning="range"))
     out_schema = _arrow_safe_schema(df.select(*kinds).schema, kinds)
     dec = decode_df_pruned_multi(
         blocks, "k", kinds, out_schema, [("isnull", "w")]
@@ -1804,7 +1744,6 @@ def test_null_predicates_in_large_chunk_exact(spark):
         blocks, "k", kinds, out_schema, [("notnull", "w")]
     )
     assert nn.count() == n - 200
-    blocks.unpersist()
 
 
 def test_blocks_with_page_index_cells_decode_exact(spark, tmp_path):
@@ -1813,7 +1752,7 @@ def test_blocks_with_page_index_cells_decode_exact(spark, tmp_path):
     decode, and the cells play no part: with junk in every one of them —
     bytes no page-index parser accepts — range, eq and IS NULL lookups
     over a >ROWS-row chunk return exactly the rows of a plain Spark
-    filter, file-direct and on a cached blocks DataFrame."""
+    filter."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -1863,20 +1802,12 @@ def test_blocks_with_page_index_cells_decode_exact(spark, tmp_path):
         for p in lookups
     ]
     assert all(wants)
-    # the bare scan first: once the same scan is cached, Spark substitutes
-    # the cache for it
-    for grouped in (False, True):
-        blocks = spark.read.parquet(str(path))
-        if grouped:
-            blocks = blocks.cache()
-        for preds, want in zip(lookups, wants):
-            dec = decode_df_pruned_multi(
-                blocks, "l_orderkey", kinds, out_schema, preds
-            )
-            plan = dec._jdf.queryExecution().executedPlan().toString()
-            assert ("FlatMapGroupsInArrow" in plan) == grouped, plan
-            assert sorted(map(tuple, dec.collect())) == want, preds
-    blocks.unpersist()
+    blocks = spark.read.parquet(str(path))
+    for preds, want in zip(lookups, wants):
+        dec = decode_df_pruned_multi(
+            blocks, "l_orderkey", kinds, out_schema, preds
+        )
+        assert sorted(map(tuple, dec.collect())) == want, preds
 
 
 _LM_KINDS = {"k": "int", "i": "int", "s": "str", "w": "int", "f": "float64"}
@@ -1887,8 +1818,10 @@ def lm_blocks(spark, tmp_path_factory):
     """Four-part range-clustered blocks over unclustered int/str columns,
     a null-bearing int column and a float column holding NaN payloads of
     both signs, ±0.0 and ±inf; (raw DataFrame, blocks path, the same
-    blocks written with .repartition(3) so every part spans files, and
-    written as one file whose rows interleave the parts)."""
+    blocks written with .repartition(3) so every part spans files,
+    written as one file whose rows interleave the parts, and the spread
+    blocks shuffled by .repartition("part_id") and written again, so each
+    part lies in one file again)."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -1922,7 +1855,13 @@ def lm_blocks(spark, tmp_path_factory):
     blocks.coalesce(1).sortWithinPartitions("column").write.parquet(
         str(base / "mixed")
     )
-    return raw, str(base / "blocks"), str(base / "spread"), str(base / "mixed")
+    spark.read.parquet(str(base / "spread")).repartition("part_id").write.parquet(
+        str(base / "shuffled")
+    )
+    return (
+        raw, str(base / "blocks"), str(base / "spread"), str(base / "mixed"),
+        str(base / "shuffled"),
+    )
 
 
 @pytest.mark.parametrize("path", ["file_direct", "shuffle"])
@@ -1958,33 +1897,28 @@ def test_late_materialized_rows(spark, lm_blocks, preds, combine, path):
     for every column kind: the predicates ran at row level inside the
     surviving chunks, and nothing filters after the decode.  Float bounds
     follow Spark's order (NaN = NaN above +inf, -0.0 = 0.0), and an int
-    column compares with float bounds in double.  Both the file-direct
-    decode of a bare blocks scan and the groupBy decode of a persisted
-    blocks DataFrame.  The oracle scans the raw file with parquet filter
-    pushdown off: the pushed-down filter drops NaN rows for a NaN bound,
-    which Spark's own comparison keeps."""
+    column compares with float bounds in double.  ``path`` "file_direct"
+    decodes the blocks as encode_df's write left them; "shuffle" decodes
+    them after a .repartition("part_id") shuffle and a second write, the
+    remedy for blocks whose parts span files, whose files interleave the
+    parts in shuffle order.  The oracle scans the raw file with parquet
+    filter pushdown off: the pushed-down filter drops NaN rows for a NaN
+    bound, which Spark's own comparison keeps."""
     from parquet_python_spark.operators.generic_codec import (
         _arrow_safe_schema,
         _pred_row_expr,
         decode_df_pruned_multi,
     )
 
-    raw, blocks_path = lm_blocks[:2]
-    blocks = spark.read.parquet(blocks_path)
-    if path == "shuffle":
-        blocks = blocks.persist()
+    raw = lm_blocks[0]
+    blocks = spark.read.parquet(lm_blocks[1 if path == "file_direct" else 4])
     out_schema = _arrow_safe_schema(raw.select(*_LM_KINDS).schema, _LM_KINDS)
-    try:
-        dec = decode_df_pruned_multi(
-            blocks, "k", _LM_KINDS, out_schema, preds, combine
-        )
-        p = dec._sc._jvm.PythonSQLUtils.explainString(
-            dec._jdf.queryExecution(), "formatted"
-        )
-        got = sorted(repr(r) for r in dec.collect())
-    finally:
-        blocks.unpersist()
-    assert ("FlatMapGroupsInArrow" in p) == (path == "shuffle"), p
+    dec = decode_df_pruned_multi(blocks, "k", _LM_KINDS, out_schema, preds, combine)
+    p = dec._sc._jvm.PythonSQLUtils.explainString(
+        dec._jdf.queryExecution(), "formatted"
+    )
+    assert "FlatMapGroupsInArrow" not in p and "Exchange" not in p, p
+    got = sorted(repr(r) for r in dec.collect())
     key = "spark.sql.parquet.filterPushdown"
     pushdown = spark.conf.get(key)
     spark.conf.set(key, "false")
@@ -2000,13 +1934,12 @@ def test_file_direct_gate_falls_back_when_parts_span_files(
     spark, lm_blocks, tmp_path, monkeypatch
 ):
     """Blocks whose parts span files (written after .repartition(3)) fail
-    the driver's one-file proof and take the groupBy decode; the rows
-    equal the file-direct decode of the same blocks, as do those of a
-    file-direct decode of one file whose rows interleave the parts and
-    of two files holding parts {0, 2} and {1, 3}.  Each file's part_ids
-    are read once per file version: a repeated proof reads no file, a
-    file rewritten in place is read again.  Bundled file tasks return
-    the same rows."""
+    the driver's one-file proof, which raises ValueError naming the
+    remedy.  The file-direct decode of one file whose rows interleave the
+    parts, and of two files holding parts {0, 2} and {1, 3}, return the
+    rows of the clustered blocks.  Each file's part_ids are read once per
+    file version: a repeated proof reads no file, a file rewritten in
+    place is read again.  Bundled file tasks return the same rows."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -2020,11 +1953,9 @@ def test_file_direct_gate_falls_back_when_parts_span_files(
 
     def _part_files(blocks):
         files = _block_files(blocks, _DECODE_SCHEMA)
-        return None if files is None else {
-            p: sorted(pids) for p, (pids, _) in files.items()
-        }
+        return {p: sorted(pids) for p, (pids, _) in files.items()}
 
-    raw, blocks_path, spread_path, mixed_path = lm_blocks
+    raw, blocks_path, spread_path, mixed_path = lm_blocks[:4]
     tbl = pq.read_table(blocks_path)
     pid_type = tbl.schema.field("part_id").type
     two = tmp_path / "two_files"
@@ -2035,15 +1966,14 @@ def test_file_direct_gate_falls_back_when_parts_span_files(
             keep = pc.is_in(tbl.column("part_id"), pa.array(pids, pid_type))
             pq.write_table(tbl.filter(keep), str(two / f"{name}.parquet"))
         by_file = _part_files(spark.read.parquet(str(two)))
-        if by_file is not None:
-            return {p.rsplit("/", 1)[-1]: ps for p, ps in by_file.items()}
+        return {p.rsplit("/", 1)[-1]: ps for p, ps in by_file.items()}
 
     clustered = spark.read.parquet(blocks_path)
     spread = spark.read.parquet(spread_path)
     mixed = spark.read.parquet(mixed_path)
-    assert _part_files(clustered) is not None
-    assert _part_files(mixed) is not None
-    assert _part_files(spread) is None
+    assert _part_files(clustered) and _part_files(mixed)
+    with pytest.raises(ValueError, match=r"write\.parquet\(dir\)"):
+        _part_files(spread)
     reads = []
     real_read = pq.ParquetFile.read
 
@@ -2052,7 +1982,7 @@ def test_file_direct_gate_falls_back_when_parts_span_files(
         return real_read(self, *args, **kwargs)
 
     monkeypatch.setattr(pq.ParquetFile, "read", counting_read)
-    assert _part_files(clustered) is not None
+    assert _part_files(clustered)
     assert not reads  # cached per file version
     assert write_two([0, 1], [2, 3]) == {"a.parquet": [0, 1], "b.parquet": [2, 3]}
     # rewritten in place: the cached part_ids of the old files go stale
@@ -2064,15 +1994,12 @@ def test_file_direct_gate_falls_back_when_parts_span_files(
 
     def rows(blocks):
         dec = decode_df_pruned_multi(blocks, "k", _LM_KINDS, out_schema, preds)
-        p = dec._sc._jvm.PythonSQLUtils.explainString(
-            dec._jdf.queryExecution(), "formatted"
-        )
-        return "FlatMapGroupsInArrow" in p, sorted(repr(r) for r in dec.collect())
+        return sorted(repr(r) for r in dec.collect())
 
-    (grouped_c, got_c), (grouped_s, got_s) = rows(clustered), rows(spread)
-    (grouped_m, got_m), (grouped_o, got_o) = rows(mixed), rows(odd_even)
-    assert not grouped_c and grouped_s and not grouped_m and not grouped_o
-    assert got_c and got_s == got_c and got_m == got_c and got_o == got_c
+    got_c = rows(clustered)
+    assert got_c and rows(mixed) == got_c and rows(odd_even) == got_c
+    with pytest.raises(ValueError, match=r"write\.parquet\(dir\)"):
+        rows(spread)
 
     # past one file task per core, files share a task
     from pyspark import SparkContext
@@ -2086,8 +2013,7 @@ def test_file_direct_gate_falls_back_when_parts_span_files(
 
 def test_pruned_decode_detects_corrupt_payload(spark, lm_blocks, tmp_path):
     """One flipped payload byte in a block file makes a pruned decode of
-    that chunk fail its crc32 check, on the file-direct and the groupBy
-    path alike."""
+    that chunk fail its crc32 check."""
     import shutil
 
     import pyarrow as pa
@@ -2118,23 +2044,12 @@ def test_pruned_decode_detects_corrupt_payload(spark, lm_blocks, tmp_path):
     pq.write_table(tbl, victim)
     k_lo = pid * 6_000  # range partitioning: part p holds keys [6000p, 6000p + 6000)
     out_schema = _arrow_safe_schema(raw.select(*_LM_KINDS).schema, _LM_KINDS)
-    for file_direct in (True, False):
-        blocks = spark.read.parquet(bad)
-        if not file_direct:
-            blocks = blocks.persist()
-        dec = decode_df_pruned_multi(
-            blocks, "k", _LM_KINDS, out_schema,
-            [("range", "k", k_lo + 10, k_lo + 20)],
-        )
-        p = dec._sc._jvm.PythonSQLUtils.explainString(
-            dec._jdf.queryExecution(), "formatted"
-        )
-        assert ("FlatMapGroupsInArrow" in p) != file_direct, p
-        try:
-            with pytest.raises(Exception, match="checksum mismatch in i"):
-                dec.collect()
-        finally:
-            blocks.unpersist()
+    dec = decode_df_pruned_multi(
+        spark.read.parquet(bad), "k", _LM_KINDS, out_schema,
+        [("range", "k", k_lo + 10, k_lo + 20)],
+    )
+    with pytest.raises(Exception, match="checksum mismatch in i"):
+        dec.collect()
 
 
 def _nan(bits: int) -> float:
@@ -2188,8 +2103,8 @@ def test_nan_zone_maps_canonical_and_old_blocks_kept():
 def test_sign_bit_nan_pruned_equals_spark_filter(spark, tmp_path):
     """Hypothesis: float columns holding NaNs of both signs and several
     payloads (plus ±0.0 and ±inf) return, through a pruned decode and the
-    exact re-filter, the rows of a plain Spark filter — file-direct and on
-    the groupBy path, for bounds that may themselves be NaN, ±inf or ±0."""
+    exact re-filter, the rows of a plain Spark filter, for bounds that
+    may themselves be NaN, ±inf or ±0."""
     import itertools
 
     import numpy as np
@@ -2254,20 +2169,10 @@ def test_sign_bit_nan_pruned_equals_spark_filter(spark, tmp_path):
         finally:
             spark.conf.set(push, prev)
         out_schema = _arrow_safe_schema(raw.schema, kinds)
-        for file_direct in (True, False):
-            blocks = spark.read.parquet(str(base / "blocks"))
-            if not file_direct:
-                blocks = blocks.persist()
-            dec = decode_df_pruned_multi(blocks, "k", kinds, out_schema, preds)
-            p = dec._sc._jvm.PythonSQLUtils.explainString(
-                dec._jdf.queryExecution(), "formatted"
-            )
-            try:
-                assert ("FlatMapGroupsInArrow" in p) != file_direct, p
-                got = sorted(r.k for r in dec.filter(_pred_row_expr(preds)).collect())
-            finally:
-                blocks.unpersist()
-            assert got == want, (file_direct, lo, hi)
+        blocks = spark.read.parquet(str(base / "blocks"))
+        dec = decode_df_pruned_multi(blocks, "k", kinds, out_schema, preds)
+        got = sorted(r.k for r in dec.filter(_pred_row_expr(preds)).collect())
+        assert got == want, (lo, hi)
 
     check()
 
@@ -2358,7 +2263,7 @@ def test_block_index_replans_rewritten_file(spark, tmp_path):
         n, (files, planned) = _jobs_of(
             spark, f"replan-{base}", lambda: _pred_keeps(blocks, kinds, pred)
         )
-        assert files is not None and n == 0
+        assert files and n == 0
         assert planned[0][0] == want_keep
         got = sorted(
             tuple(r)
@@ -2380,9 +2285,8 @@ def test_bloom_rejected_part_decodes_nothing(spark, tmp_path, monkeypatch):
     read loop run in this process): the task reads the parts' ``bloom``
     cells first, so a file whose every part is ruled out reads no
     payload, and a file holding a ruled-out and an admitted part reads
-    the admitted part's rows only.  groupBy path (cached blocks): the
-    metadata read's Bloom test keeps the ruled-out part out of the
-    decode's input.  The admitted part yields the matching row."""
+    the admitted part's rows only.  The admitted part yields the matching
+    row."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -2462,28 +2366,10 @@ def test_bloom_rejected_part_decodes_nothing(spark, tmp_path, monkeypatch):
         want_reads = [[("part_id", "in", [first])]] if want else []
         assert payload_reads == want_reads, reads
     monkeypatch.undo()
-
-    # groupBy path: the decode's input is the planned keep set
-    planned = []
-    real_parts = gc._decode_parts
-
-    def capture(blocks, files, parts, *args, **kwargs):
-        planned.append(parts)
-        return real_parts(blocks, files, parts, *args, **kwargs)
-
-    monkeypatch.setattr(gc, "_decode_parts", capture)
-    cached = spark.read.parquet(path).cache()
-    for v, want in ((none_v, set()), (one_v, {first})):
-        planned.clear()
-        plan = gc.decode_df_pruned_eq(cached, "k", kinds, out_schema, "v", v)
-        assert "FlatMapGroupsInArrow" in plan._sc._jvm.PythonSQLUtils.explainString(
-            plan._jdf.queryExecution(), "formatted"
-        )
-        assert planned == [want]
-        got = [tuple(r) for r in plan.filter(F.col("v") == v).collect()]
-        assert got == [tuple(r) for r in df.filter(F.col("v") == v).collect()]
-        assert len(got) == len(want)
-    cached.unpersist()
+    got = gc.decode_df_pruned_eq(direct, "k", kinds, out_schema, "v", one_v)
+    assert [tuple(r) for r in got.collect()] == [
+        tuple(r) for r in df.filter(F.col("v") == one_v).collect()
+    ]
 
 
 def test_str_bloom_probes_hash_in_no_job(spark, tmp_path):
@@ -2549,7 +2435,7 @@ def test_file_direct_missing_pred_column_raises(spark, tmp_path):
     path = str(tmp_path / "blocks")
     encode_df(df, "k", kinds, n_parts=2).write.parquet(path)
     blocks = spark.read.parquet(path)
-    assert _block_files(blocks, _PLAN_SCHEMA) is not None
+    assert _block_files(blocks, _PLAN_SCHEMA)
     out_schema = _arrow_safe_schema(df.schema, kinds)
     wide = {"k": "int", "zz": "int"}
     with pytest.raises(ValueError, match="no chunks"):
@@ -2570,7 +2456,8 @@ def test_fresh_scan_beside_a_cached_one_stays_file_direct(spark, tmp_path):
     manager substitutes that cache into every later bare scan of the
     directory.  Such a fresh, uncached scan still decodes file-direct,
     with exactly the rows of a Spark filter; the cached DataFrame itself
-    keeps the groupBy path.  A bare scan's file list is its inputFiles."""
+    is no bare scan, and a decode of it raises.  A bare scan's file list
+    is its inputFiles."""
     from parquet_python_spark.engine import local_parquet_scan_files, local_path
     from parquet_python_spark.operators.generic_codec import (
         _arrow_safe_schema,
@@ -2603,6 +2490,81 @@ def test_fresh_scan_beside_a_cached_one_stays_file_direct(spark, tmp_path):
         optimized = fresh._jdf.queryExecution().optimizedPlan()
         assert optimized.getClass().getSimpleName() == "InMemoryRelation"
         assert lookup(fresh) == (False, want)
-        assert lookup(cached) == (True, want)
+        with pytest.raises(ValueError, match=r"write\.parquet\(dir\)"):
+            lookup(cached)
     finally:
         cached.unpersist()
+
+
+@pytest.fixture(scope="module")
+def tokens_blocks(spark, tmp_path_factory):
+    """(a tokens blocks dir, the same blocks written after .repartition(3)
+    so every part spans files)."""
+    from parquet_python_spark.engine import encode_table_files_native
+    from parquet_python_spark.tokengen import generate_tokens_df
+
+    base = tmp_path_factory.mktemp("tokens_blocks")
+    generate_tokens_df(spark, 200, 7, partitions=2).write.parquet(str(base / "inp"))
+    encode_table_files_native(
+        spark, str(base / "inp"), str(base / "blocks"), snapshot_id="t"
+    ).count()
+    spark.read.parquet(str(base / "blocks")).repartition(3).write.parquet(
+        str(base / "spread")
+    )
+    return str(base / "blocks"), str(base / "spread")
+
+
+_DECODERS = {
+    "decode_blocks": lambda e, g, b, s: e.decode_blocks(b),
+    "decode_df": lambda e, g, b, s: g.decode_df(b, "k", _LM_KINDS, s),
+    "decode_df_pruned_multi": lambda e, g, b, s: g.decode_df_pruned_multi(
+        b, "k", _LM_KINDS, s, [("range", "k", 0, 10)]
+    ),
+    "count_filtered_meta": lambda e, g, b, s: g.count_filtered_meta(
+        b, _LM_KINDS, "k", 0, 10
+    ),
+    "minmax_filtered_meta": lambda e, g, b, s: g.minmax_filtered_meta(
+        b, _LM_KINDS, "k", 0, 10
+    ),
+    "topk_filtered_meta": lambda e, g, b, s: g.topk_filtered_meta(
+        b, _LM_KINDS, "k", 3
+    ),
+    "count_null_meta": lambda e, g, b, s: g.count_null_meta(
+        b, _LM_KINDS, "w", True
+    ),
+}
+
+
+@pytest.mark.parametrize("decoder", list(_DECODERS))
+@pytest.mark.parametrize(
+    "shape", ["filtered", "cached", "parts_span_files", "other_schema"]
+)
+def test_dataframe_held_blocks_raise(spark, lm_blocks, tokens_blocks, decoder, shape):
+    """Every public decoder reads block files or raises: a filtered scan,
+    a cached scan, blocks whose parts span files and blocks of the other
+    schema (tokens blocks handed to a generic decoder, generic ones to
+    decode_blocks) raise the one ValueError, which names the remedy."""
+    import re
+
+    from parquet_python_spark import engine
+    from parquet_python_spark.operators import generic_codec as gc
+
+    own, spread = (
+        tokens_blocks if decoder == "decode_blocks" else lm_blocks[1:3]
+    )
+    other = lm_blocks[1] if decoder == "decode_blocks" else tokens_blocks[0]
+    blocks = spark.read.parquet(
+        {"parts_span_files": spread, "other_schema": other}.get(shape, own)
+    )
+    if shape == "filtered":
+        blocks = blocks.filter(F.col("n_rows") >= 0)
+    elif shape == "cached":
+        blocks = blocks.cache()
+    out_schema = gc._arrow_safe_schema(
+        lm_blocks[0].select(*_LM_KINDS).schema, _LM_KINDS
+    )
+    try:
+        with pytest.raises(ValueError, match=re.escape(engine._NOT_BLOCK_FILES)):
+            _DECODERS[decoder](engine, gc, blocks, out_schema)
+    finally:
+        blocks.unpersist()
