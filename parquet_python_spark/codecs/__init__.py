@@ -1,6 +1,11 @@
 """Numpy codec kernels: dict, RLE/bit-packed hybrid, FSST, bit-pack, FOR,
 DELTA_BINARY_PACKED, PLAIN — plus the per-chunk auto-selector.  See
-SURVEY.md §2.3."""
+SURVEY.md §2.3.
+
+One entry point per job: ``encode_column`` / ``decode_column`` (registry)
+for int, bool, float, flba and int96 chunks; ``arrow_io.encode_str_column``
+/ ``decode_str_column`` for strings.  Page framing and outer compression
+are the page layer's (operators/generic_codec._encode_values)."""
 
 from .bitstream import (  # noqa: F401
     decode_varint,

@@ -13,14 +13,16 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
+from .dba import dba_gain_sample, decode_dba, encode_dba
+from .delta_bp import decode_delta_bp, encode_delta_bp
 from .dictionary import (
     decode_dict_dlba_parts,
     decode_dict_parts,
     encode_dict_dlba_wire,
     encode_dict_wire,
 )
-from .fsst import fsst_gain_sample
-from .registry import dec_str_lens_blob, enc_str_lens_blob
+from .forpack import decode_for, encode_for
+from .fsst import decode_fsst, encode_fsst, fsst_gain_sample
 
 __all__ = [
     "combined_chunks",
@@ -100,14 +102,81 @@ def _select_str_codec_arrow(arr) -> str:
     if len(blob) > 256:
         stream = np.frombuffer(blob, dtype=np.uint8).astype(np.int64)
         fsst_g = fsst_gain_sample(stream)
-    from .dba import dba_gain_sample
-
     dba_g = dba_gain_sample(lens, blob) if len(blob) else 0.0
     if dba_g > 0.3 and dba_g >= 0.6 * fsst_g:
         return "str_dba"
     if fsst_g > 0.5:
         return "str_fsst"
     return "str_plain"
+
+
+def enc_str_lens_blob(lens: np.ndarray, blob: bytes, codec: str) -> tuple[dict, bytes]:
+    """Core string encoding over Arrow-native (lengths, byte blob) layout.
+
+    Lengths take the smaller of frame-of-reference and DELTA_BINARY_PACKED
+    (recorded in params["lens_codec"]); codec "str_dlba" pins the
+    delta_bp-lengths + raw-bytes layout — the Parquet
+    DELTA_LENGTH_BYTE_ARRAY wire shape (public spec, Encodings.md: lengths
+    as DELTA_BINARY_PACKED, then the concatenated byte data); codec
+    "str_dba" is the Parquet DELTA_BYTE_ARRAY prefix-compressed wire
+    (prefix lengths as delta_bp + suffixes as DLBA — see codecs/dba.py)."""
+    if codec == "str_dba":
+        return encode_dba(lens, blob)
+    if codec == "str_dlba":
+        len_payload, len_params = encode_delta_bp(lens)
+        lens_codec = "dbp"
+        body_src = "str_plain"
+    else:
+        for_payload, for_params = encode_for(lens)
+        dbp_payload, dbp_params = encode_delta_bp(lens)
+        if len(dbp_payload) < len(for_payload):
+            len_payload, len_params, lens_codec = dbp_payload, dbp_params, "dbp"
+        else:
+            len_payload, len_params, lens_codec = for_payload, for_params, "for"
+        body_src = codec
+    if body_src == "str_plain":
+        body = blob
+        body_params: dict = {}
+    elif body_src == "str_fsst":
+        stream = np.frombuffer(blob, dtype=np.uint8).astype(np.int64)
+        body, body_params = encode_fsst(stream, 256)
+    else:
+        raise KeyError(f"unknown str codec {codec}")
+    payload = b"".join(
+        [
+            int(len(len_payload)).to_bytes(4, "little"),
+            len_payload,
+            int(len(blob)).to_bytes(8, "little"),
+            body,
+        ]
+    )
+    return (
+        {"lens": len_params, "body": body_params, "lens_codec": lens_codec},
+        payload,
+    )
+
+
+def dec_str_lens_blob(data: bytes, n: int, codec: str, params: dict):
+    """Inverse of :func:`enc_str_lens_blob`; returns (lens, blob)."""
+    if codec == "str_dba":
+        return decode_dba(data, n)
+    mv = memoryview(data)
+    len_sz = int.from_bytes(mv[0:4], "little")
+    if params.get("lens_codec", "for") == "dbp":
+        lens = decode_delta_bp(bytes(mv[4 : 4 + len_sz]), n, params["lens"])
+    else:
+        lens = decode_for(mv[4 : 4 + len_sz], n, params["lens"])
+    pos = 4 + len_sz
+    blob_n = int.from_bytes(mv[pos : pos + 8], "little")
+    pos += 8
+    if codec in ("str_plain", "str_dlba"):
+        blob = bytes(mv[pos:])[:blob_n]
+    elif codec == "str_fsst":
+        stream = decode_fsst(bytes(mv[pos:]), blob_n, params["body"])
+        blob = stream.astype(np.uint8).tobytes()
+    else:
+        raise KeyError(f"unknown str codec {codec}")
+    return lens, blob
 
 
 def encode_str_column(arr, codec: str | None = None):

@@ -76,26 +76,14 @@ def pack_bits_lsb(values: np.ndarray, width: int) -> bytes:
     vals = np.asarray(values)
     if vals.dtype.kind not in "iu":
         vals = vals.astype(np.int64)
-    if width > 57:
-        # rare fallback: explicit (n, width) bit matrix.  Zero-pad the tail
-        # to a full 8-value group (callers like FOR/bitpack hand over raw
-        # counts; the reference's group grammar zero-fills and truncates on
-        # decode, __init__.py:366-368, so padded zeros are wire-legal)
-        if n % 8:
-            vals = np.concatenate(
-                [vals, np.zeros(8 - n % 8, dtype=vals.dtype)]
-            )
-        v64 = np.ascontiguousarray(vals, dtype=np.uint64)
-        shifts = np.arange(width, dtype=np.uint64)
-        bits = ((v64[:, None] >> shifts) & np.uint64(1)).astype(np.uint8)
-        return np.packbits(bits.ravel(), bitorder="little").tobytes()
-    # Main path: 64-value superblocks.  64 values at `width` bits occupy
-    # exactly `width` little-endian uint64 words — a fully CONTIGUOUS block,
-    # so the byte stream is one sequential tobytes (memcpy) with no strided
-    # gather and no per-group byte slicing.  The bit stream is identical to
-    # eight consecutive 8-value groups (continuous LSB-first), so the wire
-    # format the reference reads is unchanged.  Minimizing memory passes is
-    # what lets 32 concurrent workers scale on one box.
+    # One kernel for every width 1-64: 64-value superblocks.  64 values at
+    # `width` bits occupy exactly `width` little-endian uint64 words — a
+    # fully CONTIGUOUS block, so the byte stream is one sequential tobytes
+    # (memcpy) with no strided gather and no per-group byte slicing.  The
+    # bit stream is identical to eight consecutive 8-value groups
+    # (continuous LSB-first), so the wire format the reference reads is
+    # unchanged.  Minimizing memory passes is what lets 32 concurrent
+    # workers scale on one box.
     full64 = n - (n % 64)
     parts = []
     if full64:
@@ -197,18 +185,11 @@ def unpack_bits_lsb(
         return np.full(count, offset, dtype=final) if offset \
             else np.zeros(count, dtype=final)
     raw = np.frombuffer(data, dtype=np.uint8) if not isinstance(data, np.ndarray) else data
-    if width > 57:
-        bits = np.unpackbits(raw, bitorder="little", count=count * width)
-        weights = (np.int64(1) << np.arange(width, dtype=np.int64))
-        idx = bits.reshape(count, width).astype(np.int64) @ weights
-        if table is not None:
-            return table[idx]
-        return idx + offset if offset else idx
-    # Main path mirrors the 64-value superblock packing: `width` uint64
-    # words per 64 values, read as a zero-copy VIEW of the input bytes (no
-    # pad-to-word-block copy pass); values extract with vector shifts
-    # straight into the result buffer.  Only the <64-value tail pays the
-    # padded 8-value-group path.
+    # Mirrors the 64-value superblock packing, every width 1-64: `width`
+    # uint64 words per 64 values, read as a zero-copy VIEW of the input
+    # bytes (no pad-to-word-block copy pass); values extract with vector
+    # shifts straight into the result buffer.  Only the <64-value tail pays
+    # the padded 8-value-group path.
     mask = np.uint64((1 << width) - 1)
     off_u = np.uint64(offset & ((1 << 64) - 1)) if offset else None
     groups64 = count // 64

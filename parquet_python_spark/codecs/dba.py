@@ -3,7 +3,7 @@ spec, parquet-format Encodings.md; format enum parquet.thrift:297-300
 family).  Implemented by neither the reference (jcrobak/parquet-python)
 nor any earlier round of this engine; completes the string-wire family
 whose two halves shipped in round 3 (DELTA_BINARY_PACKED in delta_bp.py,
-DELTA_LENGTH_BYTE_ARRAY in registry.enc_str_lens_blob).
+DELTA_LENGTH_BYTE_ARRAY in arrow_io.enc_str_lens_blob).
 
 Wire layout (the spec's composition, with explicit section framing since
 this engine carries no thrift page headers):

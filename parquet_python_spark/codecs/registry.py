@@ -8,10 +8,18 @@ Statistics but never consumes them (parquet.thrift:198-206); here they drive
 the choice.
 
 Public surface:
-    encode_column(values, kind)  -> (codec_name, params_dict, payload_bytes)
+    encode_column(values, kind, codec=None)
+                                 -> (codec_name, params_dict, payload_bytes,
+                                     stats); kinds int, bool, float32,
+                                     float64, flba, int96_ts
     decode_column(codec, payload, n, params, kind) -> values
     chunk_stats(values)          -> dict of selector stats (also exported to
                                     the metrics/lineage table)
+    wrap_outer / unwrap_outer, frame_page_v2 / parse_page_v2
+                                 -> page compression and DATA_PAGE_V2
+                                    framing, applied by
+                                    operators/generic_codec._encode_values
+Strings encode in arrow_io (encode_str_column / decode_str_column).
 """
 
 from __future__ import annotations
@@ -238,132 +246,6 @@ def _dec_int(
     raise KeyError(f"unknown int codec {codec}")
 
 
-# ----------------------------------------------------------------- strings
-
-def enc_str_lens_blob(lens: np.ndarray, blob: bytes, codec: str) -> tuple[dict, bytes]:
-    """Core string encoding over Arrow-native (lengths, byte blob) layout.
-
-    Lengths take the smaller of frame-of-reference and DELTA_BINARY_PACKED
-    (recorded in params["lens_codec"]); codec "str_dlba" pins the
-    delta_bp-lengths + raw-bytes layout — the Parquet
-    DELTA_LENGTH_BYTE_ARRAY wire shape (public spec, Encodings.md: lengths
-    as DELTA_BINARY_PACKED, then the concatenated byte data); codec
-    "str_dba" is the Parquet DELTA_BYTE_ARRAY prefix-compressed wire
-    (prefix lengths as delta_bp + suffixes as DLBA — see codecs/dba.py)."""
-    if codec == "str_dba":
-        from .dba import encode_dba
-
-        return encode_dba(lens, blob)
-    if codec == "str_dlba":
-        len_payload, len_params = encode_delta_bp(lens)
-        lens_codec = "dbp"
-        body_src = "str_plain"
-    else:
-        for_payload, for_params = encode_for(lens)
-        dbp_payload, dbp_params = encode_delta_bp(lens)
-        if len(dbp_payload) < len(for_payload):
-            len_payload, len_params, lens_codec = dbp_payload, dbp_params, "dbp"
-        else:
-            len_payload, len_params, lens_codec = for_payload, for_params, "for"
-        body_src = codec
-    if body_src == "str_plain":
-        body = blob
-        body_params: dict = {}
-    elif body_src == "str_fsst":
-        stream = np.frombuffer(blob, dtype=np.uint8).astype(np.int64)
-        body, body_params = encode_fsst(stream, 256)
-    else:
-        raise KeyError(f"unknown str codec {codec}")
-    payload = b"".join(
-        [
-            int(len(len_payload)).to_bytes(4, "little"),
-            len_payload,
-            int(len(blob)).to_bytes(8, "little"),
-            body,
-        ]
-    )
-    return (
-        {"lens": len_params, "body": body_params, "lens_codec": lens_codec},
-        payload,
-    )
-
-
-def dec_str_lens_blob(data: bytes, n: int, codec: str, params: dict):
-    """Inverse of :func:`enc_str_lens_blob`; returns (lens, blob)."""
-    if codec == "str_dba":
-        from .dba import decode_dba
-
-        return decode_dba(data, n)
-    mv = memoryview(data)
-    len_sz = int.from_bytes(mv[0:4], "little")
-    if params.get("lens_codec", "for") == "dbp":
-        lens = decode_delta_bp(bytes(mv[4 : 4 + len_sz]), n, params["lens"])
-    else:
-        lens = decode_for(mv[4 : 4 + len_sz], n, params["lens"])
-    pos = 4 + len_sz
-    blob_n = int.from_bytes(mv[pos : pos + 8], "little")
-    pos += 8
-    if codec in ("str_plain", "str_dlba"):
-        blob = bytes(mv[pos:])[:blob_n]
-    elif codec == "str_fsst":
-        stream = decode_fsst(bytes(mv[pos:]), blob_n, params["body"])
-        blob = stream.astype(np.uint8).tobytes()
-    else:
-        raise KeyError(f"unknown str codec {codec}")
-    return lens, blob
-
-
-def _enc_str(values, codec: str | None) -> tuple[str, dict, bytes]:
-    """String-column codecs (non-Spark kernel API).  values: sequence of
-    str/bytes.  Routed through the SAME zero-copy Arrow adapters the Spark
-    hot path uses (arrow_io.encode_str_column) — one pa.array conversion,
-    then buffer-level encode; no Python-level per-value loop anywhere.
-    ``codec=None`` selects there (_select_str_codec_arrow); returns the
-    codec the payload was written with."""
-    import pyarrow as pa
-
-    from .arrow_io import encode_str_column
-
-    vals = list(values)
-    # normalize when ANY element is bytes-like (mixed str/bytes input is
-    # part of this API's contract; sniffing only vals[0] would crash on it)
-    if any(isinstance(v, (bytes, bytearray, memoryview)) for v in vals):
-        arr = pa.array(
-            [v.encode() if isinstance(v, str) else bytes(v) for v in vals],
-            type=pa.binary(),
-        )
-    else:
-        arr = pa.array(vals, type=pa.utf8())
-    return encode_str_column(arr, codec)
-
-
-def _dec_str(data: bytes, n: int, codec: str, params: dict) -> list[bytes]:
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    if codec == "dict":
-        # binary (not utf8) dictionary expansion: this API must round-trip
-        # arbitrary bytes, not just valid utf-8 text
-        from .dictionary import decode_dict_parts
-
-        uniques, indices = decode_dict_parts(data, n, "byte_array")
-        dict_arr = pa.array(list(uniques), type=pa.binary())
-        return pc.take(dict_arr, pa.array(indices, type=pa.int64())).to_pylist()
-    if codec == "dict_dlba":
-        from .arrow_io import string_array_from_lens_blob
-        from .dictionary import decode_dict_dlba_parts
-
-        (u_lens, u_blob), indices = decode_dict_dlba_parts(data, n)
-        dict_arr = string_array_from_lens_blob(u_lens, u_blob, binary=True)
-        return pc.take(dict_arr, pa.array(indices, type=pa.int64())).to_pylist()
-    from .arrow_io import string_array_from_lens_blob
-
-    lens, blob = dec_str_lens_blob(data, n, codec, params)
-    # binary (arbitrary bytes) + large-offset promotion for >=2 GiB blobs
-    arr = string_array_from_lens_blob(lens, blob, binary=True, allow_large=True)
-    return arr.to_pylist()
-
-
 # -------------------------------------------------- outer (page) compression
 
 def wrap_outer(payload: bytes, params: dict, outer: str | None) -> bytes:
@@ -488,48 +370,6 @@ def parse_page_v2(buf: bytes) -> tuple[bytes | None, bytes, int, int]:
 
 # ------------------------------------------------------------- public API
 
-def encode_column(values, kind: str = "int", codec: str | None = None, outer: str | None = None):
-    """Encode one column chunk; returns (codec, params, payload, stats).
-
-    ``outer`` optionally wraps the encoded payload in a general-purpose
-    compressor (see wrap_outer) — the reference's page-compression layer."""
-    codec, params, payload, stats = _encode_column_inner(values, kind, codec, outer)
-    if outer:
-        payload = wrap_outer(payload, params, outer)
-    return codec, params, payload, stats
-
-
-def _trial_compress_len(buf: bytes, outer: str) -> int:
-    """Compressed size of ``buf`` under the ACTUAL outer codec (snappy and
-    zstd have very different BSS win margins than deflate, so a zlib proxy
-    can mispredict the PLAIN-vs-BSS trial for them).  gzip bodies ARE
-    deflate streams, so zlib-1 is the exact proxy for both zlib and gzip."""
-    if outer in ("snappy", "zstd", "lz4_raw", "brotli"):
-        import pyarrow as pa
-
-        return len(pa.Codec(outer).compress(buf))
-    import zlib
-
-    return len(zlib.compress(buf, 1))
-
-
-def _select_float_codec(vals: np.ndarray, itemsize: int, outer: str | None) -> str:
-    """PLAIN vs BYTE_STREAM_SPLIT for float chunks under an outer codec.
-    BSS is byte-identical in size to PLAIN on its own — it only pays off
-    under an outer compressor — so the selection is a TRIAL: compress both
-    layouts of a sample with the actual outer codec and keep BSS only when
-    it shrinks the wrapped bytes.  Without an outer codec the answer is
-    PLAIN (the integer routes of _float_int_route are tried first)."""
-    if not outer or len(vals) == 0:
-        return "plain"
-    from .plain import encode_bss
-
-    sample = np.ascontiguousarray(vals[: min(len(vals), 16384)])
-    plain_c = _trial_compress_len(sample.tobytes(), outer)
-    bss_c = _trial_compress_len(encode_bss(sample, itemsize), outer)
-    return "bss" if bss_c < plain_c * 0.98 else "plain"
-
-
 _DEC_MAX_E = 10
 _DEC_SAMPLE = 1024
 
@@ -602,7 +442,10 @@ def _float_int_route(vals: np.ndarray) -> tuple[dict, bytes] | None:
     return best
 
 
-def _encode_column_inner(values, kind: str, codec: str | None, outer: str | None = None):
+def encode_column(values, kind: str = "int", codec: str | None = None):
+    """Encode one column chunk; returns (codec, params, payload, stats).
+    Strings encode in arrow_io.encode_str_column; page framing and outer
+    compression belong to operators/generic_codec._encode_values."""
     if kind == "int":
         # dtype-preserving: int32 inputs stay int32 through the kernels
         # (halves memory traffic — the scaling bottleneck at 32 workers)
@@ -614,10 +457,6 @@ def _encode_column_inner(values, kind: str, codec: str | None, outer: str | None
             params, payload = _enc_int(vals, codec)
         else:
             codec, params, payload = _enc_selected(vals, select_codec(stats, kind))
-        return codec, params, payload, stats
-    if kind == "str":
-        codec, params, payload = _enc_str(values, codec)
-        stats = {"n": len(values)}
         return codec, params, payload, stats
     if kind == "bool":
         # D1 PLAIN boolean (reference encoding.py:28-33): 1 bit per value,
@@ -632,12 +471,11 @@ def _encode_column_inner(values, kind: str, codec: str | None, outer: str | None
         vals = np.asarray(values, dtype=bool)
         return "plain_bool", {}, encode_plain_boolean(vals), {"n": len(vals)}
     if kind in ("float32", "float64"):
-        # Without a forced or outer codec: the integer routes of
-        # _float_int_route (dictionary over the IEEE bits, or an exact
-        # decimal image), kept only when they beat PLAIN.  Otherwise PLAIN
-        # or BYTE_STREAM_SPLIT (Parquet's float encoding — streams of byte
-        # k across all values; wins only under an outer codec, so that
-        # selection is trial-based in _select_float_codec).
+        # Without a forced codec: the integer routes of _float_int_route
+        # (dictionary over the IEEE bits, or an exact decimal image), kept
+        # only when they beat PLAIN.  Otherwise PLAIN, or BYTE_STREAM_SPLIT
+        # (Parquet's float encoding — streams of byte k across all values)
+        # when forced: it is PLAIN's size and pays only under an outer codec.
         from .plain import (
             encode_bss,
             encode_plain_double,
@@ -649,11 +487,11 @@ def _encode_column_inner(values, kind: str, codec: str | None, outer: str | None
             values, dtype="<f4" if itemsize == 4 else "<f8"
         )
         suffix = "f32" if itemsize == 4 else "f64"
-        if codec is None and not outer and len(vals):
+        if codec is None and len(vals):
             routed = _float_int_route(vals)
             if routed is not None:
                 return f"int_{suffix}", routed[0], routed[1], {"n": len(vals)}
-        want = codec or _select_float_codec(vals, itemsize, outer)
+        want = codec or "plain"
         if want in (f"bss_{suffix}", "bss"):
             return f"bss_{suffix}", {}, encode_bss(vals, itemsize), {"n": len(vals)}
         if want not in (f"plain_{suffix}", "plain"):
@@ -692,11 +530,8 @@ def decode_column(
     codec: str, payload: bytes, n: int, params: dict, kind: str = "int",
     prefer32: bool = False,
 ):
-    payload = unwrap_outer(payload, params)
     if kind == "int":
         return _dec_int(payload, n, codec, params, prefer32)
-    if kind == "str":
-        return _dec_str(payload, n, codec, params)
     if kind == "bool":
         from .plain import decode_plain_boolean
 

@@ -99,7 +99,7 @@ def _encode_rle2(run_values: np.ndarray, counts: np.ndarray, width: int) -> byte
     return B.tobytes()
 
 
-def _decode_rle2(data, width: int, n: int | None, dtype, table=None) -> np.ndarray:
+def _decode_rle2(data, width: int, n: int, dtype, table=None) -> np.ndarray:
     wb = (width + 7) // 8
     rec = 2 + wb
     raw = (
@@ -118,7 +118,7 @@ def _decode_rle2(data, width: int, n: int | None, dtype, table=None) -> np.ndarr
     if table is not None:
         values = table[values]  # gather per RUN (R values), before expand
     res = np.repeat(values, counts.astype(np.int64))
-    return res[:n] if n is not None and len(res) > n else res
+    return res[:n] if len(res) > n else res
 
 
 def _encode_hybrid_impl(values: np.ndarray, width: int) -> tuple[bytes, bool]:
@@ -192,18 +192,18 @@ def encode_hybrid_params(values: np.ndarray, width: int) -> tuple[dict, bytes]:
 def decode_hybrid(
     data: bytes,
     width: int,
-    n: int | None = None,
+    n: int,
     out_dtype=np.int64,
     hdr2: bool = False,
     table: np.ndarray | None = None,
 ) -> np.ndarray:
-    """Decode a raw hybrid run stream; truncate to ``n`` values when given.
+    """Decode the first ``n`` values of a raw hybrid run stream.
 
     Mirrors the reference's loop (encoding.py:231-236) with bulk numpy run
     expansion; the final-bit-packed-run zero overflow is cut by ``n``
-    (reference: __init__.py:366-368).  When ``n`` is known the runs expand
-    directly into one preallocated result (no per-run temporaries, no final
-    concatenate pass) — the decode path's memory traffic is the 32-worker
+    (reference: __init__.py:366-368).  The runs expand directly into one
+    preallocated result (no per-run temporaries, no final concatenate
+    pass) — the decode path's memory traffic is the 32-worker
     scaling bottleneck.  out_dtype=np.int32 (valid when width <= 31) halves
     that traffic again.
 
@@ -223,32 +223,6 @@ def decode_hybrid(
         )
     pos = 0
     total = len(data)
-    if n is None:
-        # unknown length: accumulate chunks (cold path — engine callers
-        # always know n from the blocks metadata)
-        chunks: list[np.ndarray] = []
-        while pos < total:
-            header, pos = decode_varint(data, pos)
-            if header & 1:
-                groups = header >> 1
-                nbytes = groups * width
-                chunks.append(
-                    unpack_bits_lsb(
-                        np.frombuffer(data, dtype=np.uint8, count=nbytes, offset=pos),
-                        width, groups * 8, dtype, table=table,
-                    )
-                )
-                pos += nbytes
-            else:
-                count = header >> 1
-                nbytes = (width + 7) // 8
-                raw = data[pos : pos + nbytes].ljust(4, b"\x00")
-                value = int.from_bytes(raw, "little", signed=True)
-                pos += nbytes
-                fill = table[value] if table is not None else value
-                chunks.append(np.full(count, fill, dtype=dtype))
-        return np.concatenate(chunks) if chunks else np.empty(0, dtype=dtype)
-
     res = None
     p = 0
     while pos < total and p < n:

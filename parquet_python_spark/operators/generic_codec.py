@@ -329,8 +329,9 @@ def _encode_values(
             params["__nulls__"] = True
         if outer:
             # V1 semantics: the WHOLE page (levels + data) compresses as
-            # one unit.  Separate param keys from the data-section wrap so
-            # decode_column's own unwrap_outer never double-unwraps.
+            # one unit, recorded under the page keys __pouter__ /
+            # __pouter_raw__ that _decode_values unwraps before it splits
+            # off the levels.
             from ..codecs.registry import wrap_outer
 
             tmp: dict = {}
@@ -360,10 +361,7 @@ def _decode_values(
             raise ValueError(
                 "page_v2: header counts disagree with block metadata"
             )
-        if params.get("outer"):
-            payload = unwrap_outer(payload, params)
-            params.pop("outer", None)
-            params.pop("outer_raw", None)
+        payload = unwrap_outer(payload, params)
         if def_blob is not None:
             valid = _decode_def_levels(def_blob, n_rows)
     else:
@@ -1219,32 +1217,6 @@ def _plain_number(v):
     if isinstance(v, (bool, np.bool_)) or not isinstance(v, numbers.Real):
         return v
     return int(v) if isinstance(v, numbers.Integral) else float(v)
-
-
-def _pred_row_expr(preds: list[tuple], combine: str = "and"):
-    """Row-level Column expression for a predicate conjunction (or
-    disjunction with ``combine="or"``): the plain Spark filter whose rows
-    every pruned decode returns."""
-    e = None
-    for p in preds:
-        op, col = p[0], p[1]
-        if op == "range":
-            c = (F.col(col) >= p[2]) & (F.col(col) <= p[3])
-        elif op == "eq":
-            c = F.col(col) == p[2]
-        elif op == "in":
-            c = F.col(col).isin(list(p[2])) if p[2] else F.lit(False)
-        elif op == "isnull":
-            c = F.col(col).isNull()
-        elif op == "notnull":
-            c = F.col(col).isNotNull()
-        else:
-            raise ValueError(f"unknown predicate op {op!r}")
-        if e is None:
-            e = c
-        else:
-            e = (e & c) if combine == "and" else (e | c)
-    return e
 
 
 def roundtrip_filtered(

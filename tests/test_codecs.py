@@ -4,6 +4,7 @@ reference-semantics oracle (bit-identity gate, SURVEY.md §5)."""
 from io import BytesIO
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -19,8 +20,14 @@ from parquet_python_spark.codecs import (
     encode_fsst,
     encode_hybrid,
     chunk_stats,
+    pack_bits_lsb,
     select_codec,
+    unpack_bits_lsb,
     width_from_max_int,
+)
+from parquet_python_spark.codecs.arrow_io import (
+    decode_str_column,
+    encode_str_column,
 )
 from parquet_python_spark.codecs.forpack import (
     decode_bitpack,
@@ -28,6 +35,8 @@ from parquet_python_spark.codecs.forpack import (
     encode_bitpack,
     encode_for,
 )
+from parquet_python_spark.codecs.plain import encode_plain_int64
+from parquet_python_spark.codecs.registry import unwrap_outer, wrap_outer
 
 RNG = np.random.default_rng(42)
 
@@ -154,6 +163,31 @@ def test_bitpack_roundtrip():
     np.testing.assert_array_equal(decode_bitpack(payload, len(vals), params), vals)
 
 
+@pytest.mark.parametrize("count", [1, 7, 8, 63, 64, 65, 200])
+@pytest.mark.parametrize("width", [32, *range(57, 65)])
+def test_pack_bits_wide_widths_reference_oracle(width, count):
+    """Widths above 31 (FOR / DELTA_BINARY_PACKED territory) take the same
+    superblock kernel as narrow ones: the packed bytes read back through
+    the reference's bit-packed-run reader, and unpack inverts them with
+    and without the fused frame-of-reference offset."""
+    rng = np.random.default_rng(width * 1000 + count)
+    top = np.uint64((1 << width) - 1)
+    vals = rng.integers(0, top, count, dtype=np.uint64, endpoint=True)
+    vals[0] = top
+    packed = pack_bits_lsb(vals, width)
+    groups = -(-count // 8)
+    assert len(packed) == groups * width
+    got = ref.read_bitpacked(BytesIO(packed), (groups << 1) | 1, width)
+    assert got[:count] == [int(v) for v in vals]
+    assert got[count:] == [0] * (groups * 8 - count)
+    out = unpack_bits_lsb(packed, width, count)
+    np.testing.assert_array_equal(out.view(np.uint64), vals)
+    offset = -(1 << 40) + 7
+    out = unpack_bits_lsb(packed, width, count, offset=offset)
+    want = vals + np.uint64(offset & ((1 << 64) - 1))  # wraps mod 2^64
+    np.testing.assert_array_equal(out.view(np.uint64), want)
+
+
 # ----------------------------------------------------------------- FSST
 
 def test_fsst_roundtrip_texty():
@@ -225,9 +259,11 @@ def test_encode_column_roundtrip_and_size(name):
 
 def test_encode_column_strings():
     vals = ["alpha", "beta", "alpha", "gamma"] * 100
-    codec, params, payload, _ = encode_column(vals, "str")
-    got = decode_column(codec, payload, len(vals), params, "str")
-    assert [g.decode() for g in got] == vals
+    codec, params, payload = encode_str_column(pa.array(vals))
+    got = decode_str_column(codec, payload, len(vals), params)
+    assert got.to_pylist() == vals
+    with pytest.raises(KeyError, match="unknown kind str"):
+        encode_column(vals, "str")
 
 
 def test_size_gate_vs_reference_rle_dict():
@@ -248,25 +284,21 @@ def test_size_gate_vs_reference_rle_dict():
 
 def test_outer_compression_wrap_roundtrip():
     """D20 parity: optional page-level compression wraps the encoded payload
-    (applied only when it shrinks; decode is transparent)."""
-    import numpy as np
-
-    from parquet_python_spark.codecs import decode_column, encode_column
-
+    (applied only when it shrinks; unwrap is transparent)."""
     vals = np.zeros(10_000, dtype=np.int64) + 5
-    c, p, blob, _ = encode_column(vals, "int", codec="plain64", outer="zlib")
+    page = encode_plain_int64(vals)
+    p: dict = {}
+    blob = wrap_outer(page, p, "zlib")
     assert p.get("outer") == "zlib" and len(blob) < 8 * len(vals)
-    out = decode_column(c, blob, len(vals), p, "int")
-    assert np.array_equal(np.asarray(out), vals)
+    assert unwrap_outer(blob, p) == page
 
     # incompressible payload: wrap is a no-op and params stay clean
     rng = np.random.default_rng(1)
-    rand = rng.integers(0, 1 << 62, 5_000).astype(np.int64)
-    c, p, blob, _ = encode_column(rand, "int", codec="plain64", outer="zlib")
+    rand = encode_plain_int64(rng.integers(0, 1 << 62, 5_000).astype(np.int64))
+    p = {}
+    assert wrap_outer(rand, p, "zlib") == rand
     assert "outer" not in p
-    assert np.array_equal(
-        np.asarray(decode_column(c, blob, len(rand), p, "int")), rand
-    )
+    assert unwrap_outer(rand, p) == rand
 
 
 def test_outer_gzip_roundtrip_and_reference_format():
@@ -275,41 +307,33 @@ def test_outer_gzip_roundtrip_and_reference_format():
     (/root/reference/parquet/__init__.py:230-233), and deterministic."""
     import gzip as _gzip
 
-    import numpy as np
-
-    from parquet_python_spark.codecs import decode_column, encode_column
-
     vals = np.repeat(np.arange(64, dtype=np.int64), 200)
-    c, p, blob, _ = encode_column(vals, "int", codec="plain64", outer="gzip")
+    page = encode_plain_int64(vals)
+    p: dict = {}
+    blob = wrap_outer(page, p, "gzip")
     assert p.get("outer") == "gzip"
     # reference-side consumption: plain gzip.decompress must yield the body
     body = _gzip.decompress(blob)
     assert len(body) == 8 * len(vals)
-    out = decode_column(c, blob, len(vals), p, "int")
-    np.testing.assert_array_equal(out, vals)
+    assert unwrap_outer(blob, p) == page
     # determinism (mtime=0): re-encode produces identical bytes
-    _, _, blob2, _ = encode_column(vals, "int", codec="plain64", outer="gzip")
-    assert blob2 == blob
+    assert wrap_outer(page, {}, "gzip") == blob
 
 
 def test_outer_snappy_zstd_roundtrip():
     """D20 SNAPPY parity (reference __init__.py:228-229) via pyarrow's
     bundled raw-snappy codec, plus zstd as the modern extra."""
-    import numpy as np
-    import pyarrow as pa
-
-    from parquet_python_spark.codecs import decode_column, encode_column
-
     vals = np.repeat(np.arange(32, dtype=np.int64), 300)
+    page = encode_plain_int64(vals)
     for outer in ("snappy", "zstd"):
-        c, p, blob, _ = encode_column(vals, "int", codec="plain64", outer=outer)
+        p: dict = {}
+        blob = wrap_outer(page, p, outer)
         assert p.get("outer") == outer and p["outer_raw"] == 8 * len(vals)
         # raw snappy is what python-snappy/the reference would consume
         if outer == "snappy":
             raw = bytes(pa.Codec("snappy").decompress(blob, p["outer_raw"]))
             assert len(raw) == 8 * len(vals)
-        out = decode_column(c, blob, len(vals), p, "int")
-        np.testing.assert_array_equal(out, vals)
+        assert unwrap_outer(blob, p) == page
 
 
 # ----------------------------------------------- fixed-stride RLE fast path

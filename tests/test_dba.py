@@ -152,13 +152,18 @@ def test_dba_rejects_corrupt_sections():
 # -------------------------------------------------- registry + selectors
 
 def test_str_dba_registry_roundtrip():
-    from parquet_python_spark.codecs import decode_column, encode_column
+    import pyarrow as pa
+
+    from parquet_python_spark.codecs.arrow_io import (
+        decode_str_column,
+        encode_str_column,
+    )
 
     vals = sorted(f"/data/shard-{i // 50:04d}/file-{i:07d}.parquet" for i in range(4000))
-    c, p, blob, _ = encode_column(vals, "str", codec="str_dba")
+    c, p, blob = encode_str_column(pa.array(vals), codec="str_dba")
     assert c == "str_dba"
-    out = decode_column(c, blob, len(vals), p, "str")
-    assert [v.decode() for v in out] == vals
+    out = decode_str_column(c, blob, len(vals), p)
+    assert out.to_pylist() == vals
 
 
 def test_selector_picks_dba_on_prefix_heavy_not_on_random():
@@ -239,8 +244,8 @@ def test_dict_auto_page_form_picks_dlba_and_roundtrips():
     assert decode_str_column(c3, pl3, len(vals), p3).to_pylist() == vals
 
 
-def test_dict_dlba_registry_dec_str():
-    from parquet_python_spark.codecs.registry import _dec_str
+def test_dict_dlba_decode_str_column():
+    from parquet_python_spark.codecs.arrow_io import decode_str_column
     from parquet_python_spark.codecs.dictionary import encode_dict_dlba_wire
 
     uniq = [b"aa", b"bbbb", b"c"]
@@ -250,7 +255,8 @@ def test_dict_dlba_registry_dec_str():
         np.array([2, 4, 1], dtype=np.int64),
         b"aabbbbc",
     )
-    assert _dec_str(wire, 5, "dict_dlba", {}) == [b"c", b"aa", b"bbbb", b"bbbb", b"aa"]
+    out = decode_str_column("dict_dlba", wire, 5, {})
+    assert out.to_pylist() == ["c", "aa", "bbbb", "bbbb", "aa"]
 
 
 # --------------------------------------- decode_plain_byte_array (folded)

@@ -36,8 +36,6 @@ def test_decode_hybrid_int32_and_prealloc():
     out32 = decode_hybrid(blob, 7, len(vals), np.int32)
     assert out32.dtype == np.int32
     np.testing.assert_array_equal(out32, vals)
-    out_nolen = decode_hybrid(blob, 7)
-    np.testing.assert_array_equal(out_nolen[: len(vals)], vals)
 
 
 def test_decode_column_prefer32():

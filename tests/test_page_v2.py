@@ -63,19 +63,6 @@ def test_outer_lz4raw_brotli_roundtrip(outer):
     assert "outer" not in p2
 
 
-@pytest.mark.parametrize("outer", ["lz4_raw", "brotli"])
-def test_bss_trial_under_new_outer_codecs(outer):
-    """_select_float_codec's PLAIN-vs-BSS trial must run under the ACTUAL
-    outer codec for the new pair too (r3 advice, extended)."""
-    from parquet_python_spark.codecs.registry import encode_column, decode_column
-
-    # slowly-varying doubles: classic BSS win under any byte-level codec
-    vals = (np.arange(20_000, dtype=np.float64) * 1e-6 + 3.0)
-    codec, params, payload, _ = encode_column(vals, "float64", outer=outer)
-    out = decode_column(codec, payload, len(vals), params, "float64")
-    assert np.asarray(out).tobytes() == vals.tobytes()  # bit-exact
-
-
 # ----------------------------------------------- generic codec page shapes
 
 _KIND_ARRS = {

@@ -10,10 +10,12 @@ payloads, -0.0, ±inf, subnormals) compared byte for byte.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from parquet_python_spark.codecs import decode_column, encode_column
+from parquet_python_spark.codecs.arrow_io import decode_str_column, encode_str_column
 
 SET = settings(max_examples=60, deadline=None)
 
@@ -62,9 +64,9 @@ def test_runny_rle_roundtrip(vals):
        st.sampled_from(["str_plain", "str_fsst", "dict", "str_dlba",
                         "str_dba", "dict_dlba"]))
 def test_str_roundtrip(strings, codec):
-    c, params, payload, _ = encode_column(strings, "str", codec=codec)
-    out = decode_column(c, payload, len(strings), params, "str")
-    assert [b.decode() for b in out] == strings
+    c, params, payload = encode_str_column(pa.array(strings, type=pa.utf8()), codec)
+    out = decode_str_column(c, payload, len(strings), params)
+    assert out.to_pylist() == strings
 
 
 @given(st.lists(st.binary(max_size=200), min_size=0, max_size=300))

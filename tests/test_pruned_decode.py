@@ -201,7 +201,7 @@ def test_bloom_pruned_equality_roundtrip(spark):
     assert len(admitted) < len(meta), (len(admitted), len(meta))
 
 
-def test_bloom_prune_is_executor_side(spark, tmp_path, monkeypatch):
+def test_bloom_prune_is_executor_side(spark, tmp_path, monkeypatch, pred_row_expr):
     """The driver never holds Bloom bitsets: the metadata table of an eq
     plan and of an IN plan (the block index) holds only the chunk
     statistics (_META_COLS), no binary column and no per-chunk hit
@@ -246,7 +246,7 @@ def test_bloom_prune_is_executor_side(spark, tmp_path, monkeypatch):
         ), meta.schema
     for dec, row_pred in (
         (eq, F.col("v") == 42),
-        (multi, gc._pred_row_expr(gc._normalize_preds(preds))),
+        (multi, pred_row_expr(gc._normalize_preds(preds))),
     ):
         got = sorted(tuple(r) for r in dec.filter(row_pred).collect())
         want = sorted(tuple(r) for r in df.filter(row_pred).collect())
@@ -1746,7 +1746,7 @@ def test_null_predicates_in_large_chunk_exact(spark, written):
     assert nn.count() == n - 200
 
 
-def test_blocks_with_page_index_cells_decode_exact(spark, tmp_path):
+def test_blocks_with_page_index_cells_decode_exact(spark, tmp_path, pred_row_expr):
     """Block files written while the format carried a per-page index
     (``page_stats`` / ``page_nulls`` cells next to each chunk) still
     decode, and the cells play no part: with junk in every one of them —
@@ -1758,7 +1758,6 @@ def test_blocks_with_page_index_cells_decode_exact(spark, tmp_path):
 
     from parquet_python_spark.operators.generic_codec import (
         _arrow_safe_schema,
-        _pred_row_expr,
         decode_df_pruned_multi,
         encode_df,
     )
@@ -1798,7 +1797,7 @@ def test_blocks_with_page_index_cells_decode_exact(spark, tmp_path):
         [("isnull", "l_comment")],
     ]
     wants = [
-        sorted(map(tuple, df.filter(_pred_row_expr(p)).collect()))
+        sorted(map(tuple, df.filter(pred_row_expr(p)).collect()))
         for p in lookups
     ]
     assert all(wants)
@@ -1892,7 +1891,7 @@ def lm_blocks(spark, tmp_path_factory):
         "float_hi_zero", "int_float_bounds", "int_nan_hi",
     ],
 )
-def test_late_materialized_rows(spark, lm_blocks, preds, combine, path):
+def test_late_materialized_rows(spark, lm_blocks, preds, combine, path, pred_row_expr):
     """The pruned decode's output equals a plain Spark filter row for row,
     for every column kind: the predicates ran at row level inside the
     surviving chunks, and nothing filters after the decode.  Float bounds
@@ -1906,7 +1905,6 @@ def test_late_materialized_rows(spark, lm_blocks, preds, combine, path):
     bound, which Spark's own comparison keeps."""
     from parquet_python_spark.operators.generic_codec import (
         _arrow_safe_schema,
-        _pred_row_expr,
         decode_df_pruned_multi,
     )
 
@@ -1923,7 +1921,7 @@ def test_late_materialized_rows(spark, lm_blocks, preds, combine, path):
     pushdown = spark.conf.get(key)
     spark.conf.set(key, "false")
     try:
-        want = raw.filter(_pred_row_expr(preds, combine)).collect()
+        want = raw.filter(pred_row_expr(preds, combine)).collect()
     finally:
         spark.conf.set(key, pushdown)
     want = sorted(repr(r) for r in want)
@@ -2100,7 +2098,7 @@ def test_nan_zone_maps_canonical_and_old_blocks_kept():
         assert overlap.to_pylist() == want, (lo, hi)
 
 
-def test_sign_bit_nan_pruned_equals_spark_filter(spark, tmp_path):
+def test_sign_bit_nan_pruned_equals_spark_filter(spark, tmp_path, pred_row_expr):
     """Hypothesis: float columns holding NaNs of both signs and several
     payloads (plus ±0.0 and ±inf) return, through a pruned decode and the
     exact re-filter, the rows of a plain Spark filter, for bounds that
@@ -2115,7 +2113,6 @@ def test_sign_bit_nan_pruned_equals_spark_filter(spark, tmp_path):
 
     from parquet_python_spark.operators.generic_codec import (
         _arrow_safe_schema,
-        _pred_row_expr,
         decode_df_pruned_multi,
         encode_df,
     )
@@ -2165,19 +2162,19 @@ def test_sign_bit_nan_pruned_equals_spark_filter(spark, tmp_path):
         prev = spark.conf.get(push)
         spark.conf.set(push, "false")
         try:
-            want = sorted(r.k for r in raw.filter(_pred_row_expr(preds)).collect())
+            want = sorted(r.k for r in raw.filter(pred_row_expr(preds)).collect())
         finally:
             spark.conf.set(push, prev)
         out_schema = _arrow_safe_schema(raw.schema, kinds)
         blocks = spark.read.parquet(str(base / "blocks"))
         dec = decode_df_pruned_multi(blocks, "k", kinds, out_schema, preds)
-        got = sorted(r.k for r in dec.filter(_pred_row_expr(preds)).collect())
+        got = sorted(r.k for r in dec.filter(pred_row_expr(preds)).collect())
         assert got == want, (lo, hi)
 
     check()
 
 
-def test_numpy_scalar_bounds_match_python(spark, lm_blocks):
+def test_numpy_scalar_bounds_match_python(spark, lm_blocks, pred_row_expr):
     """numpy int64/int32/float64 bounds and eq/IN values prune and answer
     exactly as the same Python numbers do; bool-like values stay
     rejected."""
@@ -2185,7 +2182,6 @@ def test_numpy_scalar_bounds_match_python(spark, lm_blocks):
 
     from parquet_python_spark.operators.generic_codec import (
         _arrow_safe_schema,
-        _pred_row_expr,
         count_filtered_meta,
         decode_df_pruned_multi,
     )
@@ -2196,7 +2192,7 @@ def test_numpy_scalar_bounds_match_python(spark, lm_blocks):
 
     def rows(preds):
         dec = decode_df_pruned_multi(blocks, "k", _LM_KINDS, out_schema, preds)
-        return sorted(repr(r) for r in dec.filter(_pred_row_expr(preds)).collect())
+        return sorted(repr(r) for r in dec.filter(pred_row_expr(preds)).collect())
 
     cases = [
         ([("range", "i", 100, 180)], [("range", "i", np.int64(100), np.int64(180))]),
@@ -2372,7 +2368,7 @@ def test_bloom_rejected_part_decodes_nothing(spark, tmp_path, monkeypatch):
     ]
 
 
-def test_str_bloom_probes_hash_in_no_job(spark, tmp_path):
+def test_str_bloom_probes_hash_in_no_job(spark, tmp_path, pred_row_expr):
     """Str eq/IN probes are hashed on the driver through one VALUES
     query that runs no Spark job, to the same xxhash64 the encode built
     the filters over; a str eq and IN lookup on file-direct blocks then
@@ -2380,7 +2376,6 @@ def test_str_bloom_probes_hash_in_no_job(spark, tmp_path):
     from parquet_python_spark.operators.generic_codec import (
         _arrow_safe_schema,
         _bloom_probes,
-        _pred_row_expr,
         decode_df_pruned_multi,
         encode_df,
     )
@@ -2410,7 +2405,7 @@ def test_str_bloom_probes_hash_in_no_job(spark, tmp_path):
                 blocks, "k", kinds, out_schema, lookup, combine
             ).collect()
         ))
-        expr = _pred_row_expr(lookup, combine)
+        expr = pred_row_expr(lookup, combine)
         assert n == 1 and got
         assert got == sorted(tuple(r) for r in df.filter(expr).collect())
 
