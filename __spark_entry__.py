@@ -237,10 +237,11 @@ def _rt_region_nation_supplier(spark, sf_dir):
 def _rt_documents_nulls(spark, sf_dir):
     # definition-level null weave (reference __init__.py:295-317,336-338):
     # inject a deterministic null pattern, round-trip it bit-identically.
-    # mode='all' forces DATA_PAGE_V2 framing + LZ4_RAW page compression
-    # (both beyond the reference, which reads V1 pages only and raises on
-    # lz4, __init__.py:234-236,273-378): levels stay uncompressed ahead of
-    # the data section with num_rows/num_nulls in the page header.
+    # mode='all' compresses pages with LZ4_RAW, which writes them in the
+    # DATA_PAGE_V2 framing (both beyond the reference, which reads V1 pages
+    # only and raises on lz4, __init__.py:234-236,273-378): levels stay
+    # uncompressed ahead of the data section with num_rows/num_nulls in the
+    # page header.
     # mode='notnull'/'null' (round 5) exercise null-count chunk skipping:
     # per-chunk Statistics.null_count (parsed by the reference at
     # parquet.thrift:198-206, never consumed) prunes IS [NOT] NULL
@@ -256,7 +257,7 @@ def _rt_documents_nulls(spark, sf_dir):
         F.when(F.col("doc_id") % 11 == 0, F.lit(None)).otherwise(F.col("n_chars")).alias("chars_n"),
     )
     kinds = {"doc_id": "int", "lang_n": "str", "chars_n": "int"}
-    full = roundtrip(docs, "doc_id", kinds, page="v2", outer="lz4_raw").select(
+    full = roundtrip(docs, "doc_id", kinds, outer="lz4_raw").select(
         F.lit("all").alias("mode"), "*"
     )
     nn = roundtrip_filtered(

@@ -221,7 +221,7 @@ def encode_str_column(arr, codec: str | None = None):
 def decode_str_column(codec: str, payload: bytes, n: int, params: dict) -> pa.Array:
     """payload -> pa string array (dictionary expansion stays in C++)."""
     if codec == "dict":
-        uniques, indices = decode_dict_parts(payload, n, "byte_array")
+        uniques, indices = decode_dict_parts(payload, n)
         dict_arr = pa.array([u.decode() for u in uniques], type=pa.utf8())
         return pc.take(dict_arr, pa.array(indices, type=pa.int64()))
     if codec == "dict_dlba":

@@ -10,18 +10,18 @@ DictionaryPageHeader.num_values field (we carry no thrift framing); the
 index section is byte-identical to a reference PLAIN_DICTIONARY data page
 body, so tests decode it with parquet_python_spark.reference_decoder.
 
-Encode: pandas.factorize (first-occurrence order) + hybrid of codes.
-Decode: numpy fancy indexing (dictionary.take(indices)).
+Integers encode with pyarrow's dictionary_encode (first-occurrence order)
++ hybrid of codes and decode with the fused unpack+gather.  Strings take
+arrow_io.encode_str_column / decode_str_column, which assemble and parse
+the same wire through encode_dict_wire / decode_dict_parts.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from .bitstream import width_from_max_int
 from .plain import (
-    decode_plain_byte_array,
     decode_plain_int32,
     decode_plain_int64,
     encode_plain_byte_array,
@@ -43,27 +43,18 @@ _PLAIN_ENC = {
     "int64": encode_plain_int64,
     "byte_array": encode_plain_byte_array,
 }
-_PLAIN_DEC = {
-    "int32": decode_plain_int32,
-    "int64": decode_plain_int64,
-    "byte_array": decode_plain_byte_array,
-}
+_PLAIN_DEC = {"int32": decode_plain_int32, "int64": decode_plain_int64}
 
 
 def encode_dict(values, physical_type: str = "int32") -> bytes:
-    """Dictionary-encode ``values`` (numpy array or list of bytes)."""
-    if physical_type in ("int32", "int64"):
-        # pyarrow's C++ hash kernel: ~30x pandas.factorize on int columns
-        # (both produce first-occurrence order, so the wire is unchanged)
-        import pyarrow as pa
+    """Dictionary-encode an int32/int64 numpy array."""
+    import pyarrow as pa
 
-        d = pa.array(np.asarray(values)).dictionary_encode()
-        codes = d.indices.to_numpy()
-        uniques = d.dictionary.to_numpy()
-    else:
-        codes, uniques = pd.factorize(np.asarray(values), use_na_sentinel=False)
-        uniques = list(uniques)
-    return encode_dict_wire(codes, uniques, physical_type)
+    # pyarrow's C++ hash kernel: first-occurrence order
+    d = pa.array(np.asarray(values)).dictionary_encode()
+    return encode_dict_wire(
+        d.indices.to_numpy(), d.dictionary.to_numpy(), physical_type
+    )
 
 
 def encode_dict_wire(codes: np.ndarray, uniques, physical_type: str = "int32") -> bytes:
@@ -84,65 +75,38 @@ def encode_dict_wire(codes: np.ndarray, uniques, physical_type: str = "int32") -
     )
 
 
-def decode_dict_parts(data: bytes, n: int, physical_type: str = "int32"):
-    """Parse the wire format into (uniques, indices) without gathering —
-    callers can expand with pyarrow take() or numpy fancy indexing."""
+def decode_dict_parts(data: bytes, n: int):
+    """Parse a byte_array wire into (uniques, indices) without gathering —
+    callers expand with pyarrow take()."""
     n_dict = int.from_bytes(data[:4], "little", signed=True)
-    if physical_type == "byte_array":
-        mv = memoryview(data)
-        pos = 4
-        uniques = []
-        for _ in range(n_dict):
-            ln = int.from_bytes(mv[pos : pos + 4], "little", signed=True)
-            uniques.append(bytes(mv[pos + 4 : pos + 4 + ln]))
-            pos += 4 + ln
-        body_start = pos
-    else:
-        itemsize = 4 if physical_type == "int32" else 8
-        body_start = 4 + n_dict * itemsize
-        uniques = _PLAIN_DEC[physical_type](data[4:body_start], n_dict)
-    width = data[body_start]
+    mv = memoryview(data)
+    pos = 4
+    uniques = []
+    for _ in range(n_dict):
+        ln = int.from_bytes(mv[pos : pos + 4], "little", signed=True)
+        uniques.append(bytes(mv[pos + 4 : pos + 4 + ln]))
+        pos += 4 + ln
+    width = data[pos]
     # int32 indices when width allows: halves the unpack output traffic
     # (indices are always < |dict| <= 2^31)
     indices = decode_hybrid(
-        data[body_start + 1 :], width, n,
-        np.int32 if width <= 31 else np.int64,
+        data[pos + 1 :], width, n, np.int32 if width <= 31 else np.int64
     )
     return uniques, indices
 
 
 def decode_dict(data: bytes, n: int, physical_type: str = "int32"):
-    """Vectorized inverse of :func:`encode_dict`.
+    """Vectorized inverse of :func:`encode_dict` (int32/int64).
 
-    Integer types decode with the FUSED unpack+gather (decode_hybrid's
-    ``table``): dictionary values land in the output inside the unpack
-    kernel's cache-blocked loop — no intermediate index buffer is ever
-    written or re-read (the extra 8 B/value of traffic was the dominant
-    term of the 8->32 decode scaling wall)."""
+    Decodes with the FUSED unpack+gather (decode_hybrid's ``table``):
+    dictionary values land in the output inside the unpack kernel's
+    cache-blocked loop — no intermediate index buffer is ever written or
+    re-read (the extra 8 B/value of traffic was the dominant term of the
+    8->32 decode scaling wall)."""
     n_dict = int.from_bytes(data[:4], "little", signed=True)
-    fo_pos = 4
-    if physical_type == "byte_array":
-        # walk the PLAIN byte-array page to find its end
-        mv = memoryview(data)
-        pos = fo_pos
-        offsets = []
-        for _ in range(n_dict):
-            ln = int.from_bytes(mv[pos : pos + 4], "little", signed=True)
-            offsets.append((pos + 4, ln))
-            pos += 4 + ln
-        uniques = np.array(
-            [bytes(mv[o : o + ln]) for o, ln in offsets], dtype=object
-        )
-        body_start = pos
-        width = data[body_start]
-        indices = decode_hybrid(
-            data[body_start + 1 :], width, n,
-            np.int32 if width <= 31 else np.int64,
-        )
-        return uniques[indices]
     itemsize = 4 if physical_type == "int32" else 8
-    body_start = fo_pos + n_dict * itemsize
-    uniques = np.asarray(_PLAIN_DEC[physical_type](data[fo_pos:body_start], n_dict))
+    body_start = 4 + n_dict * itemsize
+    uniques = np.asarray(_PLAIN_DEC[physical_type](data[4:body_start], n_dict))
     width = data[body_start]
     return decode_hybrid(data[body_start + 1 :], width, n, table=uniques)
 

@@ -16,8 +16,10 @@ Public surface:
     chunk_stats(values)          -> dict of selector stats (also exported to
                                     the metrics/lineage table)
     wrap_outer / unwrap_outer, frame_page_v2 / parse_page_v2
-                                 -> page compression and DATA_PAGE_V2
-                                    framing, applied by
+                                 -> page compression (the Parquet page
+                                    codecs via pyarrow) and the
+                                    DATA_PAGE_V2 framing every compressed
+                                    page gets, applied by
                                     operators/generic_codec._encode_values
 Strings encode in arrow_io (encode_str_column / decode_str_column).
 """
@@ -248,70 +250,45 @@ def _dec_int(
 
 # -------------------------------------------------- outer (page) compression
 
-def wrap_outer(payload: bytes, params: dict, outer: str | None) -> bytes:
-    """Optional whole-payload compression — parity with the reference's page
-    decompress (D20: SNAPPY/GZIP at /root/reference/parquet/__init__.py:223-250).
-    Orthogonal to the lightweight encodings; applied only when it shrinks
-    (and never relied on by the <=-reference-size gate).  "gzip" matches the
-    reference's GZIP member format (gzip.GzipFile) byte-compatibly;
-    "snappy" covers the reference's other page codec via pyarrow's bundled
-    raw-snappy; "zlib" is the raw-deflate variant and "zstd" the modern
-    extra."""
-    if not outer:
-        return payload
-    if outer == "zlib":
-        import zlib
+_OUTER_CODECS = ("gzip", "snappy", "zstd", "lz4_raw", "brotli")
 
-        compressed = zlib.compress(payload, 1)
-    elif outer == "gzip":
-        import gzip
 
-        # mtime=0: deterministic output (checkpoint/resume reruns must be
-        # byte-identical)
-        compressed = gzip.compress(payload, compresslevel=1, mtime=0)
-    elif outer in ("snappy", "zstd", "lz4_raw", "brotli"):
-        # reference SNAPPY slot (D20, __init__.py:228-229) via pyarrow's
-        # bundled codec (raw snappy format, same as python-snappy); zstd,
-        # LZ4_RAW and BROTLI are the modern-writer extras the reference
-        # raises on (__init__.py:234-236) — all four need the raw size
-        # back at decompress (raw block formats carry no length framing).
-        import pyarrow as pa
-
-        compressed = bytes(pa.Codec(outer).compress(payload))
-        if len(compressed) < len(payload):
-            params["outer"] = outer
-            params["outer_raw"] = len(payload)
-            return compressed
-        return payload
-    else:
+def wrap_outer(payload: bytes, params: dict, outer: str) -> bytes:
+    """Compress a page's data section with one of the Parquet page codecs
+    ``gzip``, ``snappy``, ``zstd``, ``lz4_raw`` or ``brotli`` through
+    pyarrow's bundled codecs; any other name raises KeyError.  Orthogonal
+    to the lightweight encodings; applied only when it shrinks (and never
+    relied on by the <=-reference-size gate), recording ``outer`` and the
+    raw size ``outer_raw`` that decompression needs.  gzip and snappy are
+    the reference's page codecs (D20, /root/reference/parquet/
+    __init__.py:223-250): gzip output is a gzip member (mtime 0, so
+    reruns are byte-identical) that gzip.decompress reads, and snappy is
+    the raw format python-snappy reads."""
+    if outer not in _OUTER_CODECS:
         raise KeyError(f"unknown outer codec {outer}")
-    if len(compressed) < len(payload):
-        params["outer"] = outer
-        return compressed
-    return payload
+    import pyarrow as pa
+
+    compressed = bytes(pa.Codec(outer).compress(payload))
+    if len(compressed) >= len(payload):
+        return payload
+    params["outer"] = outer
+    params["outer_raw"] = len(payload)
+    return compressed
 
 
 def unwrap_outer(payload: bytes, params: dict) -> bytes:
     outer = params.get("outer")
     if not outer:
         return payload
-    if outer == "zlib":
-        import zlib
+    if outer not in _OUTER_CODECS:
+        raise KeyError(f"unknown outer codec {outer}")
+    import pyarrow as pa
 
-        return zlib.decompress(payload)
-    if outer == "gzip":
-        import gzip
-
-        return gzip.decompress(payload)
-    if outer in ("snappy", "zstd", "lz4_raw", "brotli"):
-        import pyarrow as pa
-
-        return bytes(
-            pa.Codec(outer).decompress(
-                payload, decompressed_size=int(params["outer_raw"])
-            )
+    return bytes(
+        pa.Codec(outer).decompress(
+            payload, decompressed_size=int(params["outer_raw"])
         )
-    raise KeyError(f"unknown outer codec {outer}")
+    )
 
 
 # ----------------------------------------------------- DATA_PAGE_V2 framing

@@ -46,6 +46,7 @@ from urllib.parse import unquote, urlparse
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .codecs import (
     decode_column,
@@ -83,24 +84,7 @@ BLOCKS_SCHEMA = T.StructType(
 import pyarrow as pa  # noqa: E402  (workers import lazily via kernels)
 
 _BLOCKS_ARROW_SCHEMA = pa.schema(
-    [
-        ("part_id", pa.string()),
-        ("source", pa.string()),
-        ("column", pa.string()),
-        ("codec", pa.string()),
-        ("params", pa.string()),
-        ("payload", pa.binary()),
-        ("n_values", pa.int64()),
-        ("n_rows", pa.int64()),
-        ("raw_bytes", pa.int64()),
-        ("enc_bytes", pa.int64()),
-        ("ref_dict_bytes", pa.int64()),
-        ("checksum", pa.int64()),
-        ("snapshot_id", pa.string()),
-        ("encode_ms", pa.float64()),
-        ("stat_min", pa.int64()),
-        ("stat_max", pa.int64()),
-    ]
+    [f.with_nullable(True) for f in to_arrow_schema(BLOCKS_SCHEMA)]
 )
 
 # blk/cmp parquet compression: payload is already entropy-coded by the

@@ -46,6 +46,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..codecs import decode_column, encode_column, params_from_json, params_to_json
 from ..codecs.arrow_io import (
@@ -97,23 +98,7 @@ BLOCKS_SCHEMA = T.StructType(
 )
 
 _BLOCKS_ARROW = pa.schema(
-    [
-        ("part_id", pa.int32()),
-        ("column", pa.string()),
-        ("codec", pa.string()),
-        ("params", pa.string()),
-        ("payload", pa.binary()),
-        ("n_values", pa.int64()),
-        ("n_rows", pa.int64()),
-        ("enc_bytes", pa.int64()),
-        ("checksum", pa.int64()),
-        ("stat_min", pa.int64()),
-        ("stat_max", pa.int64()),
-        ("bloom", pa.binary()),
-        ("stat_min_str", pa.string()),
-        ("stat_max_str", pa.string()),
-        ("n_nulls", pa.int64()),
-    ]
+    [f.with_nullable(True) for f in to_arrow_schema(BLOCKS_SCHEMA)]
 )
 
 # character cap for truncated string zone-map bounds
@@ -263,21 +248,17 @@ def _decode_def_levels(blob: bytes, n_rows: int) -> np.ndarray:
 
 
 def _encode_values(
-    arr: pa.Array,
-    kind: str,
-    forced: str | None,
-    page: str = "v1",
-    outer: str | None = None,
+    arr: pa.Array, kind: str, forced: str | None, outer: str | None = None
 ):
     """Encode the non-null values of an Arrow array; returns
     (codec, params_json, payload, n_values).
 
-    page="v1" (default): the reference's DATA_PAGE shape — validity stream
-    length-prefixed INSIDE the payload; an ``outer`` codec wraps the whole
-    page (levels included), exactly V1's compressed-page semantics.
-    page="v2": DATA_PAGE_V2 shape (registry.frame_page_v2) — levels stay
-    uncompressed ahead of the data section, num_rows/num_nulls in the
-    header, and ``outer`` compresses ONLY the data section."""
+    The outer codec decides the page shape.  ``outer=None``: the
+    reference's DATA_PAGE shape — validity stream length-prefixed INSIDE
+    the payload.  A set ``outer`` (registry.wrap_outer): the DATA_PAGE_V2
+    shape (registry.frame_page_v2) — levels stay uncompressed ahead of the
+    data section, num_rows/num_nulls in the header, and ``outer``
+    compresses ONLY the data section."""
     n = len(arr)
     has_nulls = arr.null_count > 0
     present = pc.drop_null(arr) if has_nulls else arr
@@ -308,38 +289,21 @@ def _encode_values(
         codec, params, payload, _ = encode_column(vals, kind, codec=forced)
 
     params = dict(params)
-    if page == "v2":
+    def_blob = None
+    if has_nulls:
+        valid = pc.is_valid(arr).to_numpy(zero_copy_only=False)
+        def_blob = _def_levels_blob(valid)
+    if outer:
         from ..codecs.registry import frame_page_v2, wrap_outer
 
-        def_blob = None
-        if has_nulls:
-            valid = pc.is_valid(arr).to_numpy(zero_copy_only=False)
-            def_blob = _def_levels_blob(valid)
-        if outer:
-            payload = wrap_outer(payload, params, outer)
+        payload = wrap_outer(payload, params, outer)
         payload = frame_page_v2(def_blob, payload, n, n - len(present))
         params["__page__"] = "v2"
-    else:
-        if has_nulls:
-            valid = pc.is_valid(arr).to_numpy(zero_copy_only=False)
-            def_blob = _def_levels_blob(valid)
-            payload = b"".join(
-                [int(len(def_blob)).to_bytes(4, "little"), def_blob, payload]
-            )
-            params["__nulls__"] = True
-        if outer:
-            # V1 semantics: the WHOLE page (levels + data) compresses as
-            # one unit, recorded under the page keys __pouter__ /
-            # __pouter_raw__ that _decode_values unwraps before it splits
-            # off the levels.
-            from ..codecs.registry import wrap_outer
-
-            tmp: dict = {}
-            payload = wrap_outer(payload, tmp, outer)
-            if "outer" in tmp:
-                params["__pouter__"] = tmp["outer"]
-                if "outer_raw" in tmp:
-                    params["__pouter_raw__"] = tmp["outer_raw"]
+    elif has_nulls:
+        payload = b"".join(
+            [int(len(def_blob)).to_bytes(4, "little"), def_blob, payload]
+        )
+        params["__nulls__"] = True
     return codec, params_to_json(params), payload, len(present)
 
 
@@ -349,9 +313,13 @@ def _decode_values(
 ) -> pa.Array:
     """Inverse of _encode_values: decode payload -> typed Arrow array with
     nulls re-woven from the validity stream (reference __init__.py:336-338).
-    Handles both page shapes: V1 (validity prefixed inside the payload,
-    whole-page outer wrap) and V2 (registry.parse_page_v2 framing)."""
+    Handles both page shapes: V1 (validity prefixed inside the payload)
+    and V2 (registry.parse_page_v2 framing, outer-compressed data)."""
     params = params_from_json(params_json)
+    if "__pouter__" in params:
+        # a whole-page outer wrap: no page shape this module writes, and
+        # never to be misread as an uncompressed V1 page
+        raise ValueError("unsupported whole-page outer compression (__pouter__)")
     valid = None
     if params.pop("__page__", None) == "v2":
         from ..codecs.registry import parse_page_v2, unwrap_outer
@@ -364,21 +332,11 @@ def _decode_values(
         payload = unwrap_outer(payload, params)
         if def_blob is not None:
             valid = _decode_def_levels(def_blob, n_rows)
-    else:
-        pouter = params.pop("__pouter__", None)
-        if pouter:
-            from ..codecs.registry import unwrap_outer
-
-            tmp = {"outer": pouter}
-            raw = params.pop("__pouter_raw__", None)
-            if raw is not None:
-                tmp["outer_raw"] = raw
-            payload = unwrap_outer(payload, tmp)
-        if params.pop("__nulls__", False):
-            mv = memoryview(payload)
-            def_sz = int.from_bytes(mv[0:4], "little")
-            valid = _decode_def_levels(bytes(mv[4 : 4 + def_sz]), n_rows)
-            payload = bytes(mv[4 + def_sz :])
+    elif params.pop("__nulls__", False):
+        mv = memoryview(payload)
+        def_sz = int.from_bytes(mv[0:4], "little")
+        valid = _decode_def_levels(bytes(mv[4 : 4 + def_sz]), n_rows)
+        payload = bytes(mv[4 + def_sz :])
 
     if kind == "str":
         arr = decode_str_column(codec, payload, n_values, params)
@@ -433,15 +391,15 @@ def encode_df(
     n_parts: int | None = None,
     forced_codecs: dict[str, str] | None = None,
     partitioning: str = "hash",
-    page: str = "v1",
     outer: str | None = None,
 ) -> DataFrame:
     """Encode ``col_kinds`` columns of ``df`` into a blocks DataFrame.
 
-    page="v1" | "v2" selects the data-page framing (see _encode_values:
-    V2 keeps levels uncompressed ahead of the data section with
-    num_rows/num_nulls in the header); ``outer`` optionally wraps pages in
-    a general-purpose codec (zlib/gzip/snappy/zstd/lz4_raw/brotli).
+    ``outer`` optionally compresses each page's data section with a
+    Parquet page codec (gzip/snappy/zstd/lz4_raw/brotli) and so selects
+    the DATA_PAGE_V2 framing, levels uncompressed ahead of the data with
+    num_rows/num_nulls in the header; without it pages keep the
+    reference's V1 shape (see _encode_values).
 
     partitioning="hash" (default): content-addressed crc32 of the key mod
     n_parts — deterministic at any parallelism, robust to any key type.
@@ -451,8 +409,7 @@ def encode_df(
     the data; n_parts scales with the row count unless pinned.
     """
     work, enc = _encode_plan(
-        df, key_col, col_kinds, n_parts, forced_codecs, partitioning,
-        page, outer,
+        df, key_col, col_kinds, n_parts, forced_codecs, partitioning, outer
     )
 
     def enc_group(tbl: pa.Table) -> pa.Table:
@@ -493,7 +450,6 @@ def _encode_plan(
     n_parts: int | None = None,
     forced_codecs: dict[str, str] | None = None,
     partitioning: str = "hash",
-    page: str = "v1",
     outer: str | None = None,
     build_stats: bool = True,
 ) -> tuple:
@@ -615,11 +571,11 @@ def _encode_plan(
                 elem_kind = _LIST_KINDS[kind]
                 flat, lens = list_column_flat(arr)
                 c, p, payload, nv = _encode_values(
-                    pa.array(lens), "int", None, page, outer
+                    pa.array(lens), "int", None, outer
                 )
                 add(col + ".lens", c, p, payload, nv)
                 c, p, payload, nv = _encode_values(
-                    pa.array(np.asarray(flat)), elem_kind, forced, page, outer
+                    pa.array(np.asarray(flat)), elem_kind, forced, outer
                 )
                 add(col + ".vals", c, p, payload, nv)
             else:
@@ -654,7 +610,7 @@ def _encode_plan(
                         present.to_numpy(zero_copy_only=False)
                     )
                     stats = (int(ob.min()), int(ob.max()))
-                c, p, payload, nv = _encode_values(arr, kind, forced, page, outer)
+                c, p, payload, nv = _encode_values(arr, kind, forced, outer)
                 add(col, c, p, payload, nv, stats, bloom, sstats,
                     n_nulls=arr.null_count)
         return pa.Table.from_pylist(rows, schema=_BLOCKS_ARROW)
@@ -705,8 +661,6 @@ def _decode_fn(
     the mask's rows."""
 
     # arrow image of the output schema, for the no-matching-row early exit
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     empty_out = pa.Table.from_pylist([], schema=to_arrow_schema(out_schema))
     if prune is None:
         prune = []
@@ -1375,8 +1329,6 @@ def _decode_col_local(
     n_rows = pc.sum(pc.filter(meta.column("n_rows"), in_parts)).as_py() or 0
     if n_rows > _DRIVER_DECODE_MAX_ROWS:
         return None
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     out_schema = _col_schema(col, kind)
     dec = _decode_fn({col: kind}, out_schema, prune)
     batches = [
@@ -1743,12 +1695,11 @@ def roundtrip(
     key_col: str,
     col_kinds: dict[str, str],
     forced_codecs: dict[str, str] | None = None,
-    page: str = "v1",
     outer: str | None = None,
 ) -> DataFrame:
     """encode -> blocks -> decode; output schema mirrors the selected input
-    columns (Spark types preserved via cast at the end).  ``page``/``outer``
-    select the data-page framing and page compression (see encode_df).
+    columns (Spark types preserved via cast at the end).  ``outer`` selects
+    the page compression and with it the page shape (see encode_df).
 
     FUSED execution (round 6): encode and decode of one chunk run in a
     single python call, so the blocks table never exists outside the
@@ -1788,7 +1739,7 @@ def roundtrip(
     dec = _decode_fn(col_kinds, out_schema)
     _, enc = _encode_plan(
         df, key_col, col_kinds, None, forced_codecs,
-        partitioning="none", page=page, outer=outer, build_stats=False,
+        partitioning="none", outer=outer, build_stats=False,
     )
     # enc sorts each chunk by key_col, so the key must ride along even
     # when the caller did not ask for it in the output columns

@@ -131,15 +131,16 @@ def test_dict_roundtrip_double_reference_oracle():
 
 
 def test_dict_roundtrip_strings():
-    vals = np.array([b"ab", b"", b"ab", b"xyz", b"\xf0\x9f\x98\x80"] * 50, dtype=object)
-    blob = encode_dict(vals, "byte_array")
-    got = decode_dict(blob, len(vals), "byte_array")
-    assert list(got) == list(vals)
+    vals = ["ab", "", "ab", "xyz", "\U0001f600"] * 50
+    codec, params, blob = encode_str_column(pa.array(vals), "dict")
+    assert codec == "dict"
+    got = decode_str_column(codec, blob, len(vals), params)
+    assert got.to_pylist() == vals
     fo = BytesIO(blob)
     n_dict = int.from_bytes(fo.read(4), "little")
     dict_vals = ref.read_plain_dictionary_values(fo, n_dict, "byte_array")
     idx = ref.read_dictionary_indices_page(fo.read(), len(vals))
-    assert [dict_vals[i] for i in idx] == list(vals)
+    assert [dict_vals[i] for i in idx] == [v.encode() for v in vals]
 
 
 # ---------------------------------------------------------- FOR/delta/bp
@@ -288,17 +289,20 @@ def test_outer_compression_wrap_roundtrip():
     vals = np.zeros(10_000, dtype=np.int64) + 5
     page = encode_plain_int64(vals)
     p: dict = {}
-    blob = wrap_outer(page, p, "zlib")
-    assert p.get("outer") == "zlib" and len(blob) < 8 * len(vals)
+    blob = wrap_outer(page, p, "zstd")
+    assert p.get("outer") == "zstd" and len(blob) < 8 * len(vals)
     assert unwrap_outer(blob, p) == page
 
     # incompressible payload: wrap is a no-op and params stay clean
     rng = np.random.default_rng(1)
     rand = encode_plain_int64(rng.integers(0, 1 << 62, 5_000).astype(np.int64))
     p = {}
-    assert wrap_outer(rand, p, "zlib") == rand
+    assert wrap_outer(rand, p, "zstd") == rand
     assert "outer" not in p
     assert unwrap_outer(rand, p) == rand
+    # only the Parquet page codecs: zlib is not one
+    with pytest.raises(KeyError):
+        wrap_outer(page, {}, "zlib")
 
 
 def test_outer_gzip_roundtrip_and_reference_format():
@@ -311,7 +315,7 @@ def test_outer_gzip_roundtrip_and_reference_format():
     page = encode_plain_int64(vals)
     p: dict = {}
     blob = wrap_outer(page, p, "gzip")
-    assert p.get("outer") == "gzip"
+    assert p.get("outer") == "gzip" and p["outer_raw"] == 8 * len(vals)
     # reference-side consumption: plain gzip.decompress must yield the body
     body = _gzip.decompress(blob)
     assert len(body) == 8 * len(vals)

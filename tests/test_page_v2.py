@@ -3,7 +3,8 @@
 The reference reads V1 data pages only (/root/reference/parquet/__init__.py:
 273-378) and raises on any outer codec beyond snappy/gzip (__init__.py:
 234-236); these cover the modern-writer page shape and codecs on top of the
-same engine kernels.
+same engine kernels.  The outer codec decides the page shape: pages without
+one keep the reference's V1 shape, pages with one are V2.
 """
 
 from __future__ import annotations
@@ -65,6 +66,8 @@ def test_outer_lz4raw_brotli_roundtrip(outer):
 
 # ----------------------------------------------- generic codec page shapes
 
+_OUTERS = [None, "gzip", "snappy", "zstd", "lz4_raw", "brotli"]
+
 _KIND_ARRS = {
     "int": pa.array([5, None, -3, None, 2**40] * 60, type=pa.int64()),
     "str": pa.array(["alpha", None, "", "beta-beta"] * 75),
@@ -74,42 +77,30 @@ _KIND_ARRS = {
 
 
 @pytest.mark.parametrize("kind", list(_KIND_ARRS))
-@pytest.mark.parametrize("outer", [None, "zstd", "lz4_raw", "brotli"])
+@pytest.mark.parametrize("outer", _OUTERS)
 def test_encode_values_page_v2_roundtrip(kind, outer):
+    """The outer codec decides the page shape: none keeps the reference's
+    V1 page, any outer codec writes the V2 frame."""
     from parquet_python_spark.operators.generic_codec import (
         _decode_values,
         _encode_values,
     )
 
     arr = _KIND_ARRS[kind]
-    c, pj, payload, nv = _encode_values(arr, kind, None, page="v2", outer=outer)
+    c, pj, payload, nv = _encode_values(arr, kind, None, outer=outer)
     params = json.loads(pj)
-    assert params["__page__"] == "v2"
     out = _decode_values(payload, len(arr), nv, c, pj, kind)
     assert out.equals(arr)
+    if outer is None:
+        assert "__page__" not in params and params.get("__nulls__") is True
+        return
+    assert params["__page__"] == "v2"
     # V2 contract: levels + header readable WITHOUT the data codec
     from parquet_python_spark.codecs.registry import parse_page_v2
 
     def_blob, _data, n_rows, n_nulls = parse_page_v2(payload)
     assert n_rows == len(arr) and n_nulls == arr.null_count
     assert (def_blob is not None) == (arr.null_count > 0)
-
-
-@pytest.mark.parametrize("outer", ["zstd", "lz4_raw", "brotli"])
-def test_encode_values_page_v1_whole_page_outer(outer):
-    """V1 semantics: the outer codec wraps levels AND data as one unit
-    (separate __pouter__ params so decode never double-unwraps)."""
-    from parquet_python_spark.operators.generic_codec import (
-        _decode_values,
-        _encode_values,
-    )
-
-    arr = pa.array(([1, 2, 3, None] * 200), type=pa.int64())
-    c, pj, payload, nv = _encode_values(arr, "int", None, page="v1", outer=outer)
-    params = json.loads(pj)
-    assert params.get("__pouter__") == outer
-    out = _decode_values(payload, len(arr), nv, c, pj, "int")
-    assert out.equals(arr)
 
 
 def test_page_v2_header_mismatch_is_loud():
@@ -119,9 +110,28 @@ def test_page_v2_header_mismatch_is_loud():
     )
 
     arr = pa.array([1, None, 3] * 100, type=pa.int64())
-    c, pj, payload, nv = _encode_values(arr, "int", None, page="v2")
+    c, pj, payload, nv = _encode_values(arr, "int", None, outer="lz4_raw")
     with pytest.raises(ValueError, match="disagree"):
         _decode_values(payload, len(arr) + 1, nv, c, pj, "int")
+
+
+def test_whole_page_outer_params_rejected():
+    """A V1 page compressed as a whole (params key ``__pouter__``) is no
+    shape the page layer writes; decoding one raises rather than reading
+    the compressed bytes as an uncompressed V1 page."""
+    from parquet_python_spark.codecs.registry import wrap_outer
+    from parquet_python_spark.operators.generic_codec import (
+        _decode_values,
+        _encode_values,
+    )
+
+    arr = pa.array([1, 2, 3, None] * 200, type=pa.int64())
+    c, pj, payload, nv = _encode_values(arr, "int", None)
+    params = json.loads(pj)
+    wrapped = wrap_outer(payload, {}, "zstd")
+    params.update({"__pouter__": "zstd", "__pouter_raw__": len(payload)})
+    with pytest.raises(ValueError, match="__pouter__"):
+        _decode_values(wrapped, len(arr), nv, c, json.dumps(params), "int")
 
 
 @settings(max_examples=40, deadline=None)
@@ -130,19 +140,18 @@ def test_page_v2_header_mismatch_is_loud():
         st.one_of(st.none(), st.integers(-(2**50), 2**50)),
         min_size=0, max_size=400,
     ),
-    page=st.sampled_from(["v1", "v2"]),
-    outer=st.sampled_from([None, "zstd", "lz4_raw", "brotli"]),
+    outer=st.sampled_from(_OUTERS),
 )
-def test_property_null_heavy_pages(vals, page, outer):
+def test_property_null_heavy_pages(vals, outer):
     """Null-heavy / all-null / empty chunks round-trip under both page
-    shapes and every outer codec (the verdict's property-test ask)."""
+    shapes (V1 without an outer codec, V2 under each of them)."""
     from parquet_python_spark.operators.generic_codec import (
         _decode_values,
         _encode_values,
     )
 
     arr = pa.array(vals, type=pa.int64())
-    c, pj, payload, nv = _encode_values(arr, "int", None, page=page, outer=outer)
+    c, pj, payload, nv = _encode_values(arr, "int", None, outer=outer)
     assert nv == len(arr) - arr.null_count
     out = _decode_values(payload, len(arr), nv, c, pj, "int")
     assert out.equals(arr)
@@ -198,9 +207,9 @@ def test_dict_dlba_rejects_corrupt_wire():
 
 # ------------------------------------------------ Spark end-to-end (V2 pages)
 
-def test_encode_df_page_v2_outer_roundtrip(spark, written):
-    """Whole-table round trip with V2 pages + LZ4_RAW outer: bit-identical
-    rows, and every params blob carries the V2 marker."""
+def _encode_df_roundtrip(spark, written, outer):
+    """Whole-table round trip of a null-bearing int/str table; returns the
+    blocks' params strings after asserting bit-identical rows."""
     from pyspark.sql import functions as F
 
     from parquet_python_spark.operators.generic_codec import (
@@ -219,10 +228,7 @@ def test_encode_df_page_v2_outer_roundtrip(spark, written):
         .alias("s"),
     )
     kinds = {"k": "int", "v": "int", "s": "str"}
-    blocks = written(encode_df(
-        df, "k", kinds, n_parts=4, page="v2", outer="lz4_raw"
-    ))
-    assert all('"__page__":"v2"' in r["params"] for r in blocks.collect())
+    blocks = written(encode_df(df, "k", kinds, n_parts=4, outer=outer))
     out_schema = _arrow_safe_schema(df.select(*kinds).schema, kinds)
     got = sorted(
         (r["k"], r["v"], r["s"])
@@ -230,3 +236,16 @@ def test_encode_df_page_v2_outer_roundtrip(spark, written):
     )
     exp = sorted((r["k"], r["v"], r["s"]) for r in df.collect())
     assert got == exp
+    return [r["params"] for r in blocks.select("params").collect()]
+
+
+def test_encode_df_page_v2_outer_roundtrip(spark, written):
+    """With LZ4_RAW page compression every block is a V2 page."""
+    params = _encode_df_roundtrip(spark, written, "lz4_raw")
+    assert params and all('"__page__":"v2"' in p for p in params)
+
+
+def test_encode_df_no_outer_writes_v1_pages(spark, written):
+    """Without an outer codec no block is a V2 page."""
+    params = _encode_df_roundtrip(spark, written, None)
+    assert params and not any("__page__" in p for p in params)
