@@ -54,7 +54,15 @@ _SAMPLE = 65536
 
 
 def chunk_stats(values: np.ndarray) -> dict:
-    """Sampled per-chunk statistics driving the codec selector."""
+    """Sampled per-chunk statistics driving the codec selector.
+
+    One pass per statistic over the first ``_SAMPLE`` values: distinct
+    counts come from ``np.bincount`` when the sample's value span is under
+    four times its length (the same counts as a sort-based ``np.unique``,
+    without the sort), and from ``np.unique`` otherwise.  ``pair_dup`` is
+    computed only where :func:`select_codec` reads it (the fsst branch's
+    guards, and a distinct count that leaves it able to exceed 0.45); it
+    is 0.0 elsewhere, which selects exactly the same codec."""
     vals = np.asarray(values)
     if vals.dtype.kind not in "iu":
         vals = vals.astype(np.int64)
@@ -65,44 +73,78 @@ def chunk_stats(values: np.ndarray) -> dict:
             "card_est": 0, "pair_dup": 0.0,
         }
     sample = vals[:_SAMPLE]
-    _, cnts = np.unique(sample, return_counts=True)
-    card_sample = len(cnts)
+    vmin, vmax = int(vals.min()), int(vals.max())
+    smin, smax = (
+        (int(sample.min()), int(sample.max())) if n > len(sample) else (vmin, vmax)
+    )
+    dense = smax - smin < 4 * len(sample)
+    if dense:
+        # offsets from the sample minimum, exact for every integer dtype:
+        # the wrapped int64 difference of two values less than a span
+        # apart is the true one
+        off = np.subtract(
+            sample, sample.dtype.type(smin), dtype=np.intp, casting="unsafe"
+        )
+        bins = np.bincount(off)
+        card_sample = int(np.count_nonzero(bins))
+    else:
+        _, cnts = np.unique(sample, return_counts=True)
+        card_sample = len(cnts)
     if n > len(sample):
         # Chao1 richness estimator: s + f1^2/(2*f2) — corrects the severe
         # undercount of plain sample-distinct on high-cardinality data
         # (uniform 2^17-range data would otherwise look dict-friendly)
-        f1 = int((cnts == 1).sum())
-        f2 = int((cnts == 2).sum())
+        f1 = int(np.count_nonzero(bins == 1)) if dense else int((cnts == 1).sum())
+        f2 = int(np.count_nonzero(bins == 2)) if dense else int((cnts == 2).sum())
         chao = card_sample + (f1 * f1) / (2 * f2) if f2 else card_sample * 2
         card_est = int(min(n, max(card_sample, chao)))
     else:
         card_est = card_sample
     # run structure measured on the sample, scaled to n (selector only needs
-    # the cost ranking; the encoder itself re-segments exactly)
-    boundaries = np.flatnonzero(sample[1:] != sample[:-1]) + 1
-    counts = np.diff(np.concatenate(([0], boundaries, [len(sample)])))
+    # the cost ranking; the encoder itself re-segments exactly).  A run of
+    # L equal values is L-1 consecutive equal neighbour pairs, which are
+    # few except on run-heavy data.
     from .rle import MIN_RLE_RUN
 
-    long_mask = counts >= MIN_RLE_RUN
+    eq = np.flatnonzero(sample[1:] == sample[:-1])
+    breaks = np.flatnonzero(np.diff(eq) != 1) + 1
+    run_pairs = np.diff(np.concatenate(([0], breaks, [len(eq)])))
+    long_pairs = run_pairs[run_pairs >= MIN_RLE_RUN - 1]
     scale = n / len(sample)
+    n_runs = max(1, int((len(sample) - len(eq)) * scale))
     # delta width estimate for DELTA_BINARY_PACKED: bits to hold the
     # sampled (delta - min_delta) range.  Python-int span guard first —
-    # an int64 np.diff would silently wrap on a > 2^62 value span.
-    vmin, vmax = int(vals.min()), int(vals.max())
+    # an int64 difference would silently wrap on a > 2^62 value span.
     if len(sample) >= 2 and vmax - vmin < 2**62:
-        d = np.diff(sample.astype(np.int64))
+        d = np.subtract(sample[1:], sample[:-1], dtype=np.int64, casting="unsafe")
         delta_w = width_from_max_int(int(d.max()) - int(d.min()))
     else:
         delta_w = 99  # delta_bp not applicable
+    # the fsst branch's guards in select_codec; the sample's distinct pairs
+    # number at least card_sample - 1 (every value but the last starts one)
+    pair_dup = 0.0
+    if (
+        vmin >= 0
+        and vmax < 2**24
+        and card_est > 16
+        and n / n_runs < 4
+        and 1.0 - (card_sample - 1) / (len(sample) - 1) > 0.45
+    ):
+        # rank-remapped ids keep the pair table dense (card^2 entries)
+        if dense:
+            rank = np.zeros(len(bins), dtype=np.int32)
+            rank[np.flatnonzero(bins)] = np.arange(card_sample)
+            sample = rank[off]
+        pair_dup = fsst_gain_sample(sample)
     return {
         "n": n,
         "min": vmin,
         "max": vmax,
-        "n_runs": max(1, int(len(counts) * scale)),
-        "n_long_runs": int(long_mask.sum() * scale),
-        "n_long_vals": int(counts[long_mask].sum() * scale),
+        "n_runs": n_runs,
+        "n_long_runs": int(len(long_pairs) * scale),
+        "n_long_vals": int((long_pairs.sum() + len(long_pairs)) * scale),
         "card_est": card_est,
-        "pair_dup": fsst_gain_sample(sample),
+        "pair_dup": pair_dup,
         "delta_w": delta_w,
     }
 
@@ -167,11 +209,12 @@ def select_codec(stats: dict, kind: str = "int") -> str:
 # ---------------------------------------------------------------- integers
 
 def _enc_int(
-    vals: np.ndarray, codec: str, dict_ptype: str | None = None
+    vals: np.ndarray, codec: str, stats: dict, dict_ptype: str | None = None
 ) -> tuple[dict, bytes]:
-    """dict_ptype pins the dictionary entry width (the float bits route
-    keeps 8-byte entries so its dict page is PLAIN DOUBLE byte for byte);
-    default: int32 when every value fits."""
+    """``stats`` is chunk_stats(vals), whose exact min/max the kernels
+    reuse.  dict_ptype pins the dictionary entry width (the float bits
+    route keeps 8-byte entries so its dict page is PLAIN DOUBLE byte for
+    byte); default: int32 when every value fits."""
     if codec == "plain64":
         return {}, encode_plain_int64(vals)
     if codec == "plain32":
@@ -186,33 +229,32 @@ def _enc_int(
         payload, params = encode_delta_bp(vals)
         return params, payload
     if codec == "rle":
-        w = width_from_max_int(int(np.max(vals, initial=0)))
-        return encode_hybrid_params(vals, w)
+        return encode_hybrid_params(vals, width_from_max_int(max(stats["max"], 0)))
     if codec == "dict":
-        fits32 = len(vals) == 0 or (vals.min() >= -(2**31) and vals.max() < 2**31)
+        fits32 = -(2**31) <= stats["min"] and stats["max"] < 2**31
         ptype = dict_ptype or ("int32" if fits32 else "int64")
         return {"ptype": ptype}, encode_dict(
             vals.astype(np.int32) if ptype == "int32" else vals, ptype
         )
     if codec == "fsst":
-        alphabet = int(np.max(vals, initial=0)) + 1
-        payload, params = encode_fsst(vals, alphabet)
+        payload, params = encode_fsst(vals, max(stats["max"], 0) + 1)
         return params, payload
     raise KeyError(f"unknown int codec {codec}")
 
 
 def _enc_selected(
-    vals: np.ndarray, codec: str, dict_ptype: str | None = None
+    vals: np.ndarray, codec: str, stats: dict, dict_ptype: str | None = None
 ) -> tuple[str, dict, bytes]:
     """_enc_int for a codec the selector chose -> (codec, params, payload).
-    An fsst encode whose training found no symbol is bitpack plus a
-    header, with a slower decode, so it is stored as bitpack instead
-    (the selector's fsst estimate assumes symbol hits that uniform data
-    does not have)."""
-    params, payload = _enc_int(vals, codec, dict_ptype)
-    if codec == "fsst" and params["n_sym"] == 0:
+    An fsst payload that is not smaller than bitpack's exact size,
+    ceil(n/8) * width(max) bytes, is stored as bitpack instead: bitpack
+    decodes faster, and the selector's fsst estimate assumes symbol hits
+    that a table trained on uniform data (none, or a few) does not get."""
+    params, payload = _enc_int(vals, codec, stats, dict_ptype)
+    bitpack_size = (len(vals) + 7) // 8 * width_from_max_int(max(stats["max"], 0))
+    if codec == "fsst" and len(payload) >= bitpack_size:
         codec = "bitpack"
-        params, payload = _enc_int(vals, codec)
+        params, payload = _enc_int(vals, codec, stats)
     return codec, params, payload
 
 
@@ -408,10 +450,11 @@ def _float_int_route(vals: np.ndarray) -> tuple[dict, bytes] | None:
         images.append(({"e": dec[0]}, dec[1], None))
     best = None
     for extra, ints, dict_ptype in images:
-        c = select_codec(chunk_stats(ints))
+        stats = chunk_stats(ints)
+        c = select_codec(stats)
         if c in ("plain64", "plain32"):
             continue
-        c, p, payload = _enc_selected(ints, c, dict_ptype)
+        c, p, payload = _enc_selected(ints, c, stats, dict_ptype)
         if best is None or len(payload) < len(best[1]):
             best = ({"int_codec": c, "int_params": p, **extra}, payload)
     if best is None or len(best[1]) >= vals.nbytes:
@@ -431,9 +474,11 @@ def encode_column(values, kind: str = "int", codec: str | None = None):
             vals = vals.astype(np.int64)
         stats = chunk_stats(vals)
         if codec:  # a forced codec is stored as asked, fsst included
-            params, payload = _enc_int(vals, codec)
+            params, payload = _enc_int(vals, codec, stats)
         else:
-            codec, params, payload = _enc_selected(vals, select_codec(stats, kind))
+            codec, params, payload = _enc_selected(
+                vals, select_codec(stats, kind), stats
+            )
         return codec, params, payload, stats
     if kind == "bool":
         # D1 PLAIN boolean (reference encoding.py:28-33): 1 bit per value,

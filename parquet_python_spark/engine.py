@@ -185,16 +185,14 @@ def _encode_partition_table(
         )
 
     for col, vals in (("tokens", flat), ("n_tok", n_tok)):
-        codec, params, payload, _stats = encode_column(vals, "int")
+        codec, params, payload, cstats = encode_column(vals, "int")
         ref_bytes = None
         if with_ref_baseline and col == "tokens":
             # honest <=-size gate: the reference's own RLE/dict wire format
             # on the same values (dict page + hybrid indices, SURVEY.md D15/D16)
             ref_bytes = len(encode_dict(np.asarray(vals, dtype=np.int32), "int32"))
-        # zone-map stats: one vectorized min/max pass (~0.5% of encode cost)
-        stats = (
-            (int(vals.min()), int(vals.max())) if len(vals) else (None, None)
-        )
+        # zone-map stats: the selector's exact min/max
+        stats = (cstats["min"], cstats["max"]) if len(vals) else (None, None)
         add(col, codec, params, payload, len(vals), 4 * len(vals), ref_bytes, stats)
 
     for col in ("doc_id", "source"):

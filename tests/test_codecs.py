@@ -6,10 +6,11 @@ from io import BytesIO
 import numpy as np
 import pyarrow as pa
 import pytest
-from hypothesis import given, settings
+from hypothesis import assume, example, given, settings
 from hypothesis import strategies as st
 
 from parquet_python_spark import reference_decoder as ref
+from parquet_python_spark import tokengen
 from parquet_python_spark.codecs import (
     decode_column,
     decode_dict,
@@ -25,6 +26,7 @@ from parquet_python_spark.codecs import (
     unpack_bits_lsb,
     width_from_max_int,
 )
+from parquet_python_spark.codecs import fsst as fsst_mod
 from parquet_python_spark.codecs.arrow_io import (
     decode_str_column,
     encode_str_column,
@@ -36,7 +38,8 @@ from parquet_python_spark.codecs.forpack import (
     encode_for,
 )
 from parquet_python_spark.codecs.plain import encode_plain_int64
-from parquet_python_spark.codecs.registry import unwrap_outer, wrap_outer
+from parquet_python_spark.codecs.registry import _SAMPLE, unwrap_outer, wrap_outer
+from parquet_python_spark.codecs.rle import MIN_RLE_RUN
 
 RNG = np.random.default_rng(42)
 
@@ -164,13 +167,15 @@ def test_bitpack_roundtrip():
     np.testing.assert_array_equal(decode_bitpack(payload, len(vals), params), vals)
 
 
-@pytest.mark.parametrize("count", [1, 7, 8, 63, 64, 65, 200])
-@pytest.mark.parametrize("width", [32, *range(57, 65)])
+@pytest.mark.parametrize("count", [1, 7, 8, 63, 64, 65, 200, 4099, 70000])
+@pytest.mark.parametrize("width", range(1, 65))
 def test_pack_bits_wide_widths_reference_oracle(width, count):
-    """Widths above 31 (FOR / DELTA_BINARY_PACKED territory) take the same
-    superblock kernel as narrow ones: the packed bytes read back through
-    the reference's bit-packed-run reader, and unpack inverts them with
-    and without the fused frame-of-reference offset."""
+    """Every width 1-64 takes the one superblock kernel, at counts around
+    the 8-value group, the 64-value superblock and the packing chunk
+    (70000 values span three chunks): the packed bytes read back through
+    the reference's bit-packed-run reader, int32 input packs the same
+    bytes as uint64, and unpack inverts them with and without the fused
+    frame-of-reference offset."""
     rng = np.random.default_rng(width * 1000 + count)
     top = np.uint64((1 << width) - 1)
     vals = rng.integers(0, top, count, dtype=np.uint64, endpoint=True)
@@ -178,8 +183,17 @@ def test_pack_bits_wide_widths_reference_oracle(width, count):
     packed = pack_bits_lsb(vals, width)
     groups = -(-count // 8)
     assert len(packed) == groups * width
-    got = ref.read_bitpacked(BytesIO(packed), (groups << 1) | 1, width)
-    assert got[:count] == [int(v) for v in vals]
+    if width <= 31:
+        assert pack_bits_lsb(vals.astype(np.int32), width) == packed
+    # the reference reads runs of whole 8-value groups, so a long stream
+    # reads as consecutive runs of 64 groups (its big-int reader is
+    # quadratic in the run length)
+    got = []
+    for g in range(0, groups, 64):
+        run = min(64, groups - g)
+        chunk = packed[g * width : (g + run) * width]
+        got += ref.read_bitpacked(BytesIO(chunk), (run << 1) | 1, width)
+    assert got[:count] == vals.tolist()
     assert got[count:] == [0] * (groups * 8 - count)
     out = unpack_bits_lsb(packed, width, count)
     np.testing.assert_array_equal(out.view(np.uint64), vals)
@@ -235,6 +249,90 @@ def test_fsst_without_symbols_is_stored_as_bitpack():
     )
 
 
+def _texty_tokens(n_min: int) -> np.ndarray:
+    """tokengen's texty rows (seed 11) concatenated to >= n_min tokens."""
+    parts, total, row = [], 0, 0
+    while total < n_min:
+        parts.append(tokengen._gen_tokens("texty", row, 11))
+        total += len(parts[-1])
+        row += 1
+    return np.concatenate(parts)
+
+
+def test_fsst_texty_trains_on_small_sample():
+    """A ~60k-token texty stream is 7x the training sample: it still
+    trains a full table, compresses to under 0.6 of its bitpack size
+    (0.54 measured) and round-trips exactly."""
+    vals = _texty_tokens(60_000)
+    alphabet = int(vals.max()) + 1
+    payload, params = encode_fsst(vals, alphabet)
+    assert params["n_sym"] > 0
+    bitpack = (len(vals) + 7) // 8 * width_from_max_int(alphabet - 1)
+    assert len(payload) <= 0.6 * bitpack
+    np.testing.assert_array_equal(decode_fsst(payload, len(vals), params), vals)
+    assert encode_column(vals, "int")[0] == "fsst"
+
+
+def test_fsst_chunk_shorter_than_sample():
+    """A chunk shorter than the training sample trains on all of it."""
+    vals = _texty_tokens(3000)[:3000]
+    payload, params = encode_fsst(vals, int(vals.max()) + 1)
+    assert params["n_sym"] > 0
+    np.testing.assert_array_equal(decode_fsst(payload, len(vals), params), vals)
+
+
+@given(
+    motifs=st.lists(
+        st.lists(st.integers(0, 7), min_size=2, max_size=9), min_size=1, max_size=4
+    ),
+    picks=st.lists(st.integers(0, 3), min_size=20, max_size=400),
+    sample_size=st.sampled_from([2, 16, 64, 8192]),
+)
+@settings(max_examples=80, deadline=None)
+def test_fsst_roundtrip_motif_streams(motifs, picks, sample_size):
+    """Streams of repeated short motifs over a small alphabet (runs like
+    3 3 3 and overlapping pairs like 1 2 1 2 arise) train symbols on
+    samples of any size and still decode exactly, whatever the greedy
+    parse did on the rest."""
+    vals = np.array(
+        [x for p in picks for x in motifs[p % len(motifs)]], dtype=np.int64
+    )
+    payload, params = encode_fsst(vals, 8, sample_size=sample_size)
+    np.testing.assert_array_equal(decode_fsst(payload, len(vals), params), vals)
+
+
+def test_fsst_apply_resolves_overlaps_leftmost():
+    """Overlapping matches keep the leftmost: with merges (1,2) -> A,
+    (2,1) -> B and (3,3) -> C, the stream 1 2 1 2 1 3 3 3 parses as
+    A A 1 C 3, and the table expands it back."""
+    merges = [(1, 2), (2, 1), (3, 3)]
+    stream = np.array([1, 2, 1, 2, 1, 3, 3, 3], dtype=np.int32)
+    got = fsst_mod._apply_merges(stream, merges, 8)
+    np.testing.assert_array_equal(got, [8, 8, 1, 10, 3])
+    table = fsst_mod._expand_table(merges, 8)
+    back = [x for c in got for x in (table[c - 8] if c >= 8 else (c,))]
+    assert back == stream.tolist()
+
+
+def test_fsst_losing_to_bitpack_is_stored_as_bitpack():
+    """Uniform 0..63 with a planted pair every 20 values: the selector
+    picks fsst and training finds the planted pair, but one symbol widens
+    every code from 6 to 7 bits for a 5% hit rate, so the fsst payload is
+    larger than bitpack's ceil(n/8) * 6 bytes and the chunk is stored as
+    bitpack; a forced fsst is still stored as asked."""
+    vals = np.random.default_rng(3).integers(0, 64, 75_000)
+    vals[::20], vals[1::20] = 5, 9
+    assert select_codec(chunk_stats(vals)) == "fsst"
+    codec, params, payload, _ = encode_column(vals, "int", "fsst")
+    assert codec == "fsst" and params["n_sym"] >= 1
+    assert len(payload) >= (len(vals) + 7) // 8 * 6
+    codec, params, payload, _ = encode_column(vals, "int")
+    assert codec == "bitpack" and len(payload) == (len(vals) + 7) // 8 * 6
+    np.testing.assert_array_equal(
+        decode_column(codec, payload, len(vals), params, "int"), vals
+    )
+
+
 # --------------------------------------------------------------- selector
 
 def test_selector_picks_expected_codecs():
@@ -245,6 +343,85 @@ def test_selector_picks_expected_codecs():
     assert picks["narrow"] in ("for", "dict")
     assert picks["random"] in ("bitpack", "for")
     assert picks["texty"] in ("fsst", "dict")
+
+
+def _sorted_chunk_stats(vals: np.ndarray) -> dict:
+    """The selector statistics computed the straightforward way: sort-based
+    distinct and pair counts on the sample, run lengths from every
+    boundary, pair_dup always."""
+    n = len(vals)
+    if n == 0:
+        return {"n": 0, "min": 0, "max": 0, "n_runs": 0, "card_est": 0, "pair_dup": 0.0}
+    sample = vals[:_SAMPLE]
+    _, cnts = np.unique(sample, return_counts=True)
+    card_est = len(cnts)
+    if n > len(sample):
+        f1, f2 = int((cnts == 1).sum()), int((cnts == 2).sum())
+        chao = len(cnts) + (f1 * f1) / (2 * f2) if f2 else len(cnts) * 2
+        card_est = int(min(n, max(len(cnts), chao)))
+    bounds = np.flatnonzero(sample[1:] != sample[:-1]) + 1
+    runs = np.diff(np.concatenate(([0], bounds, [len(sample)])))
+    long_runs = runs[runs >= MIN_RLE_RUN]
+    scale = n / len(sample)
+    vmin, vmax = int(vals.min()), int(vals.max())
+    delta_w = 99
+    if len(sample) >= 2 and vmax - vmin < 2**62:
+        d = np.diff(sample.astype(np.int64))
+        delta_w = width_from_max_int(int(d.max()) - int(d.min()))
+    pair_dup = 0.0
+    if len(sample) >= 2:
+        pairs = sample[:-1].astype(np.int64) * (1 << 32) + sample[1:]
+        pair_dup = 1.0 - len(np.unique(pairs)) / len(pairs)
+    return {
+        "n": n, "min": vmin, "max": vmax,
+        "n_runs": max(1, int(len(runs) * scale)),
+        "n_long_runs": int(len(long_runs) * scale),
+        "n_long_vals": int(long_runs.sum() * scale),
+        "card_est": card_est, "pair_dup": pair_dup, "delta_w": delta_w,
+    }
+
+
+@given(
+    shape=st.sampled_from(["uniform", "motif", "repeats", "runs", "const"]),
+    n=st.sampled_from([0, 1, 2, 3, 40, 5000, _SAMPLE - 1, _SAMPLE, _SAMPLE + 1, 90_000]),
+    lo=st.sampled_from([0, 7, -5, -(2**31), 2**20, -(2**61)]),
+    span=st.sampled_from([1, 2, 50, 4096, 2**17, 2**20 + 3, 2**40, 2**62 + 1]),
+    int64=st.booleans(),
+    seed=st.integers(0, 2**32 - 1),
+)
+# pair_dup ~0.50 under a distinct-count bound of ~0.505: fsst wins only if
+# chunk_stats computes pair_dup where the bound leaves it able to pass 0.45
+@example(shape="repeats", n=5000, lo=0, span=2**17, int64=False, seed=1)
+@settings(max_examples=150, deadline=None)
+def test_chunk_stats_selects_like_sorted_stats(shape, n, lo, span, int64, seed):
+    """chunk_stats (bincount counts, pair_dup only where the fsst branch
+    can read it) selects the same codec as the sort-based statistics, and
+    every statistic but pair_dup is equal; where the selector can read
+    pair_dup, it is equal too."""
+    dtype = np.int64 if int64 else np.int32
+    hi = lo + span - 1
+    assume(np.iinfo(dtype).min <= lo and hi <= np.iinfo(dtype).max)
+    rng = np.random.default_rng(seed)
+    if shape == "uniform":
+        vals = rng.integers(lo, hi, n, endpoint=True)
+    elif shape == "motif":  # low-cardinality motif stream (texty-like)
+        motifs = rng.integers(lo, hi, (8, 6), endpoint=True)
+        vals = motifs[rng.integers(0, 8, n // 6 + 1)].ravel()[:n]
+    elif shape == "repeats":  # half the sample distinct, half its pairs repeats
+        block = rng.integers(lo, hi, n // 2 + 1, endpoint=True)
+        vals = np.tile(block, 3)[:n]
+    elif shape == "runs":
+        vals = np.repeat(rng.integers(lo, hi, n // 20 + 1, endpoint=True), 20)[:n]
+    else:
+        vals = np.full(n, hi)
+    vals = vals.astype(dtype)
+    got, want = chunk_stats(vals), _sorted_chunk_stats(vals)
+    assert select_codec(got) == select_codec(want)
+    assert {k: v for k, v in got.items() if k != "pair_dup"} == {
+        k: v for k, v in want.items() if k != "pair_dup"
+    }
+    if got["pair_dup"]:
+        assert got["pair_dup"] == want["pair_dup"]
 
 
 @pytest.mark.parametrize("name", list(_profiles()))
