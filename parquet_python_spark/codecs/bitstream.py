@@ -82,15 +82,18 @@ def pack_bits_lsb(values: np.ndarray, width: int) -> bytes:
     # values at `width` bits occupy exactly `width` little-endian uint64
     # words, and that bit stream is eight consecutive 8-value groups
     # (continuous LSB-first), so the wire format the reference reads is
-    # unchanged.  Per chunk of superblock rows, each value is shifted to
-    # its bit offset inside its first word, and the values starting in one
-    # word are summed by one np.add.reduceat (their bits never overlap,
-    # so add == OR); the columns that cross into the next word add their
-    # high bits there with one gathered OR.  A partial last superblock is
-    # zero-padded, and its first ceil(count/8)*width bytes are exactly the
-    # padded 8-value groups.  A call costs ~10-20 us of array ops at any
-    # width, so the many small packs (delta_bp miniblocks) stay cheap.
-    starts, shift, cross, cross_dst, cross_shift = _superblock_plan(width)
+    # unchanged.  Per chunk of superblock rows, runs of g adjacent values
+    # are first joined into one field of g*width <= 64 bits (one matmul
+    # with the weights 2^(i*width); the bits never overlap, so the sum is
+    # the OR), with g as large as fits, so at most two fields start in a
+    # word; each field is then shifted to its offset in its first word,
+    # the fields that cross a word also right-shifted into the next, and
+    # every word is the OR of at most three gathered columns of those.
+    # A partial last superblock is zero-padded, and its first
+    # ceil(count/8)*width bytes are exactly the padded 8-value groups.  A
+    # call costs ~10-20 us of array ops at any width, so the many small
+    # packs (delta_bp miniblocks) stay cheap.
+    weights, lo_shift, hi_shift, gathers = _superblock_plan(width)
     full = n - n % 64
     blocks = [vals[s : min(s + _PACK_CHUNK, full)] for s in range(0, full, _PACK_CHUNK)]
     if n % 64:
@@ -100,33 +103,53 @@ def pack_bits_lsb(values: np.ndarray, width: int) -> bytes:
     W = np.empty((-(-n // 64), width), dtype=np.uint64)
     row = 0
     for b in blocks:
-        t = b.reshape(-1, 64).astype(np.uint64)
-        Wc = W[row : row + len(t)]
-        row += len(t)
-        spill = t[:, cross] >> cross_shift
-        t <<= shift
-        np.add.reduceat(t, starts, axis=1, out=Wc)
-        Wc[:, cross_dst] |= spill
+        f = b.reshape(-1, 64).astype(np.uint64)
+        if len(weights) > 1:
+            f = np.matmul(f.reshape(len(f), -1, len(weights)), weights)
+        rows, c = f.shape
+        # [fields at their offsets | crossing fields' high bits | zeros]
+        parts = np.empty((rows, 2 * c + 1), dtype=np.uint64)
+        np.left_shift(f, lo_shift, out=parts[:, :c])
+        np.right_shift(f, hi_shift, out=parts[:, c : 2 * c])
+        parts[:, -1] = 0
+        Wc = W[row : row + rows]
+        row += rows
+        np.take(parts, gathers[0], axis=1, out=Wc, mode="clip")
+        for g in gathers[1:]:
+            Wc |= np.take(parts, g, axis=1, mode="clip")
     return W.reshape(-1).view(np.uint8)[: (n + 7) // 8 * width].tobytes()
 
 
-# values per packing chunk: 512 superblock rows keep the shifted values
-# (256 KB) and their words L2-resident (the fastest of 8k-128k values
-# per chunk at widths 5-50 on 0.06-3.2M values)
+# values per packing chunk: 512 superblock rows keep a chunk's fields and
+# words L2-resident (the fastest of 8k-128k values per chunk at widths
+# 5-63 on 0.06-3.2M values)
 _PACK_CHUNK = 32768
 
 
 @functools.lru_cache(maxsize=None)
 def _superblock_plan(width: int):
-    """Where each of a superblock's 64 values lands at ``width`` bits:
-    the first column of every word (reduceat segment starts), each
-    column's shift inside its first word, and the columns that cross a
-    word boundary with their next word and right shift."""
-    bit = np.arange(64) * width
-    word, shift = bit >> 6, (bit & 63).astype(np.uint64)
-    starts = np.flatnonzero(np.diff(word, prepend=-1))
-    cross = np.flatnonzero((bit & 63) + width > 64)
-    return starts, shift, cross, word[cross] + 1, np.uint64(64) - shift[cross]
+    """How a superblock's 64 values at ``width`` bits become its words:
+    the weights that join g adjacent values into one field (g a power of
+    two, the largest with g*width <= 64), each field's shift inside its
+    first word and right shift into the next, and per word the column of
+    the [low | high | zero] parts array that each of its (at most three)
+    contributions sits in."""
+    g = 1 << (64 // width).bit_length() - 1
+    fw, c = g * width, 64 // g
+    weights = np.uint64(1) << (np.arange(g, dtype=np.uint64) * np.uint64(width))
+    bit = np.arange(c) * fw
+    word, lo = bit >> 6, bit & 63
+    contrib = [[] for _ in range(width)]
+    for j in range(c):
+        contrib[word[j]].append(j)
+        if lo[j] + fw > 64:  # crosses into the next word
+            contrib[word[j] + 1].append(c + j)
+    gathers = np.full((max(map(len, contrib)), width), 2 * c)
+    for k, cols in enumerate(contrib):
+        gathers[: len(cols), k] = cols
+    # the high parts of fields that do not cross (right shift by 64) are
+    # never gathered
+    return weights, lo.astype(np.uint64), (64 - lo).astype(np.uint64), gathers
 
 
 def _cache_chunk(width: int) -> int:

@@ -6,10 +6,11 @@ variable-length symbols (here: n-grams of the base alphabet) replaces
 frequent subsequences with single codes.  Symbol-table *construction* uses
 iterative pair-merge rounds (the bottom-up variant also used by BPE), fully
 vectorized in numpy; no per-row Python anywhere.  As in the paper, the
-table is trained on a small sample (the first 8,192 values; FSST uses
-~16 KB of its input), and a pair becomes a symbol only when it is
-significantly more frequent than independent neighbours would make it, so
-uniform data trains no table at all (train_merges).
+table is trained on a small sample (the first 8,192 token ids, or the
+paper's 16 KB of a string column's bytes), and a pair becomes a symbol
+only when its count is significantly above what independent neighbours
+or a 0.1% share of the sample would give it, so uniform data over a
+large alphabet trains no table at all (train_merges).
 
 The reference (jcrobak/parquet-python) has no counterpart — this codec is
 mandated by the north rule (BASELINE.json) for 'texty' token streams and
@@ -59,18 +60,20 @@ def train_merges(
     the non-overlapping occurrences of a batch of the most frequent ones
     (one vectorized pass).  A pair qualifies when it occurs at least
     ``min_count`` times, fits the expansion budget (``MAX_SYMBOL_LEN``),
-    and is significant: more frequent than its unigram frequencies
-    predict for independent neighbours.  Training stops when no pair
+    and is significantly frequent (below).  Training stops when no pair
     qualifies or the code space (``max_symbols``) is exhausted.
 
-    Significance: a pair with count c where independence predicts
-    E = count(a) * count(b) / len must have a Chernoff-bound tail
-    exp(-(c ln(c/E) - c + E)) below e^-5 / D over the round's D distinct
-    pairs.  Uniform data then trains no symbol at any sample size, where
-    a floor set as a share of the sample shrinks with it (at an 8k
-    sample, uniform values 1..50 have E ~ 3.3 and the busiest of their
-    ~2,400 pairs 11, while a 0.1% floor of 8 trains 34 symbols), and
-    real motifs exceed their prediction by orders of magnitude.
+    Significance: a pair with count c must exceed E, the smaller of what
+    independent neighbours predict (count(a) * count(b) / len) and a
+    0.1% share of the sample (len / 1024), with a one-sided Chernoff
+    tail exp(-(c ln(c/E) - c + E)) below e^-5 / D over the round's D
+    distinct pairs.  So a motif qualifies by beating independence, and a
+    pair of a small alphabet (digits, hex) by its share alone, but
+    sampling noise does not: a bare 0.1% floor shrinks with the sample,
+    and at 8k uniform values 1..50 (each pair ~3.3 expected, the busiest
+    of ~2,400 at 11) clear a floor of 8 and train 34 symbols, where this
+    test trains none at any sample size.  A pair rarer than both
+    predictions never qualifies, however far below them it lies.
 
     Training runs on rank-remapped ids (one sort up front), so the
     unigram counts are one bincount per round whatever the alphabet.
@@ -86,10 +89,11 @@ def train_merges(
         vals, cnts = np.unique(keys, return_counts=True)
         a, b = np.divmod(vals, n_ids)
         uni = np.bincount(seq, minlength=n_ids)
-        expected = uni[a] * uni[b] / len(seq)
+        expected = np.minimum(uni[a] * uni[b] / len(seq), len(seq) / 1024)
         surprise = cnts * np.log(cnts / expected) - cnts + expected
         ok = (
             (cnts >= min_count)
+            & (cnts > expected)
             & (lens[a] + lens[b] <= MAX_SYMBOL_LEN)
             & (surprise >= np.log(len(vals)) + 5)
         )
@@ -220,8 +224,9 @@ def encode_fsst(
     (Boncz, Neumann, Leis, VLDB 2020), which trains on a ~16 KB sample of
     the input: 8,192 values train in a fifth of the time of 65,536 on the
     texty token chunks, for ~4% more texty bytes (~0.2% of the tokens
-    table).  train_merges' significance floor keeps a small sample of
-    uniform data from training symbols."""
+    table); string columns pass the paper's 16,384 bytes.
+    train_merges' significance floor keeps a small sample of uniform
+    data from training symbols."""
     # int32 through the apply passes (codes stay < alphabet + 256 << 2^31):
     # halves the memory traffic of the merge loop, the encode hot spot.
     dtype = np.int32 if alphabet + max_symbols < 2**31 else np.int64

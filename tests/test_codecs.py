@@ -28,6 +28,7 @@ from parquet_python_spark.codecs import (
 )
 from parquet_python_spark.codecs import fsst as fsst_mod
 from parquet_python_spark.codecs.arrow_io import (
+    _select_str_codec_arrow,
     decode_str_column,
     encode_str_column,
 )
@@ -331,6 +332,50 @@ def test_fsst_losing_to_bitpack_is_stored_as_bitpack():
     np.testing.assert_array_equal(
         decode_column(codec, payload, len(vals), params, "int"), vals
     )
+
+
+
+def test_fsst_pair_rarer_than_predicted_trains_no_symbol():
+    """A and B are each a quarter of a 65,536-value stream (A x B y, with
+    x, y from 10,000 noise values) but A is followed by B only 6 times:
+    independence predicts 4,096 and a 0.1% share 64, so the pair lies
+    far below both, which is no reason to merge it; no other pair is
+    frequent either, and nothing trains."""
+    rng = np.random.default_rng(4)
+    vals = rng.integers(2, 10_002, 65_536)
+    vals[0::4], vals[2::4] = 0, 1
+    vals[[4 * i + 1 for i in range(100, 700, 100)]] = 1  # A B six times
+    assert fsst_mod.train_merges(vals, 10_002) == []
+
+
+def test_fsst_small_alphabet_bytes_train_symbols():
+    """Random 12-digit strings: no byte pair beats independence, but
+    each of the 100 pairs is a 1% share of the sample, so the table
+    trains and the column compresses (0.66 of its bytes measured)."""
+    rng = np.random.default_rng(3)
+    strs = ["".join(rng.choice(list("0123456789"), 12)) for _ in range(6000)]
+    arr = pa.array(strs)
+    codec, params, payload = encode_str_column(arr)
+    assert codec == "str_fsst" and params["body"]["n_sym"] > 0
+    assert len(payload) <= 0.75 * 12 * len(strs)
+    assert decode_str_column(codec, payload, len(arr), params).equals(arr)
+
+
+def test_str_fsst_losing_to_plain_is_stored_plain():
+    """Random 12-character alphanumeric strings: the selector picks
+    str_fsst (3,844 byte pairs repeat in a 12 KB sample), but no pair is
+    frequent, so the table is empty and its body would be the bytes plus
+    a header; the column is stored str_plain, and a forced str_fsst is
+    still stored as asked."""
+    rng = np.random.default_rng(3)
+    alnum = list("abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789")
+    arr = pa.array(["".join(rng.choice(alnum, 12)) for _ in range(3000)])
+    assert _select_str_codec_arrow(arr) == "str_fsst"
+    for forced, want in ((None, "str_plain"), ("str_fsst", "str_fsst")):
+        codec, params, payload = encode_str_column(arr, forced)
+        assert codec == want
+        assert decode_str_column(codec, payload, len(arr), params).equals(arr)
+    assert len(encode_str_column(arr)[2]) < len(encode_str_column(arr, "str_fsst")[2])
 
 
 # --------------------------------------------------------------- selector
