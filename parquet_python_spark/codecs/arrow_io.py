@@ -228,18 +228,24 @@ def encode_str_column(arr, codec: str | None = None):
     return codec, params, payload
 
 
-def decode_str_column(codec: str, payload: bytes, n: int, params: dict) -> pa.Array:
-    """payload -> pa string array (dictionary expansion stays in C++)."""
+def decode_str_column(
+    codec: str, payload: bytes, n: int, params: dict, positions=None
+) -> pa.Array:
+    """payload -> pa string array (dictionary expansion stays in C++).
+    ``positions``: only the strings at those positions — a dictionary
+    looks up just their indices; every other layout decodes whole and
+    takes them (each value's bytes start where the previous one ends)."""
     if codec == "dict":
-        uniques, indices = decode_dict_parts(payload, n)
+        uniques, indices = decode_dict_parts(payload, n, positions)
         dict_arr = pa.array([u.decode() for u in uniques], type=pa.utf8())
         return pc.take(dict_arr, pa.array(indices, type=pa.int64()))
     if codec == "dict_dlba":
-        (u_lens, u_blob), indices = decode_dict_dlba_parts(payload, n)
+        (u_lens, u_blob), indices = decode_dict_dlba_parts(payload, n, positions)
         dict_arr = string_array_from_lens_blob(u_lens, u_blob)
         return pc.take(dict_arr, pa.array(indices, type=pa.int64()))
     lens, blob = dec_str_lens_blob(payload, n, codec, params)
-    return string_array_from_lens_blob(lens, blob)
+    arr = string_array_from_lens_blob(lens, blob)
+    return arr if positions is None else arr.take(pa.array(positions, type=pa.int64()))
 
 
 def list_column_flat(arr) -> tuple[np.ndarray, np.ndarray]:

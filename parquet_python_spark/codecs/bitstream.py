@@ -19,6 +19,7 @@ __all__ = [
     "width_from_max_int",
     "pack_bits_lsb",
     "unpack_bits_lsb",
+    "gather_bits_lsb",
 ]
 
 
@@ -271,3 +272,35 @@ def _unpack_groups8(
             v = v | (W[:, k + 1] << np.uint64(64 - shift))
         out[:, j] = v & mask
     return out.reshape(-1)[:count]
+
+
+def gather_bits_lsb(
+    data: bytes | np.ndarray, width: int, bit_offsets: np.ndarray
+) -> np.ndarray:
+    """The ``width``-bit values that start at ``bit_offsets`` of an
+    LSB-first bit stream (pack_bits_lsb's layout: value i of a packed run
+    starting at byte b starts at bit 8*b + i*width), as uint64 — random
+    access with no unpack of the values in between.  A value spans at
+    most nine bytes: each is the little-endian word at its first byte,
+    shifted down, OR the ninth byte's bits when shift + width > 64.  The
+    stream is copied once, zero-padded, so the words past its end read
+    as the packer's zero padding."""
+    offs = np.asarray(bit_offsets, dtype=np.int64)
+    if width == 0 or not len(offs):
+        return np.zeros(len(offs), dtype=np.uint64)
+    raw = np.frombuffer(data, dtype=np.uint8) if not isinstance(data, np.ndarray) else data
+    first = offs >> 3
+    # zero bytes past the stream's end read as padding, as in the unpack
+    pad = np.zeros(len(raw) + 16, dtype=np.uint8)
+    pad[: len(raw)] = raw
+    # the little-endian word at every byte offset: an unaligned view
+    words = np.ndarray((len(raw) + 8,), dtype="<u8", buffer=pad, strides=(1,))
+    shift = (offs & 7).astype(np.uint64)
+    v = words[first] >> shift
+    cross = shift + np.uint64(width) > np.uint64(64)
+    if cross.any():
+        nxt = pad[first[cross] + 8].astype(np.uint64)
+        v[cross] |= nxt << (np.uint64(64) - shift[cross])
+    if width < 64:
+        v &= np.uint64((1 << width) - 1)
+    return v

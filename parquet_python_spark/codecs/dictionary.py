@@ -75,9 +75,10 @@ def encode_dict_wire(codes: np.ndarray, uniques, physical_type: str = "int32") -
     )
 
 
-def decode_dict_parts(data: bytes, n: int):
+def decode_dict_parts(data: bytes, n: int, positions=None):
     """Parse a byte_array wire into (uniques, indices) without gathering —
-    callers expand with pyarrow take()."""
+    callers expand with pyarrow take().  ``positions``: only the indices
+    at those value positions (decode_hybrid)."""
     n_dict = int.from_bytes(data[:4], "little", signed=True)
     mv = memoryview(data)
     pos = 4
@@ -90,13 +91,16 @@ def decode_dict_parts(data: bytes, n: int):
     # int32 indices when width allows: halves the unpack output traffic
     # (indices are always < |dict| <= 2^31)
     indices = decode_hybrid(
-        data[pos + 1 :], width, n, np.int32 if width <= 31 else np.int64
+        data[pos + 1 :], width, n, np.int32 if width <= 31 else np.int64,
+        positions=positions,
     )
     return uniques, indices
 
 
-def decode_dict(data: bytes, n: int, physical_type: str = "int32"):
-    """Vectorized inverse of :func:`encode_dict` (int32/int64).
+def decode_dict(data: bytes, n: int, physical_type: str = "int32", positions=None):
+    """Vectorized inverse of :func:`encode_dict` (int32/int64); with
+    ``positions``, only the values at those positions: their indices are
+    read from the index stream and looked up (decode_hybrid).
 
     Decodes with the FUSED unpack+gather (decode_hybrid's ``table``):
     dictionary values land in the output inside the unpack kernel's
@@ -108,7 +112,9 @@ def decode_dict(data: bytes, n: int, physical_type: str = "int32"):
     body_start = 4 + n_dict * itemsize
     uniques = np.asarray(_PLAIN_DEC[physical_type](data[4:body_start], n_dict))
     width = data[body_start]
-    return decode_hybrid(data[body_start + 1 :], width, n, table=uniques)
+    return decode_hybrid(
+        data[body_start + 1 :], width, n, table=uniques, positions=positions
+    )
 
 
 def encode_dict_dlba_wire(
@@ -148,9 +154,10 @@ def encode_dict_dlba_wire(
     )
 
 
-def decode_dict_dlba_parts(data: bytes, n: int):
+def decode_dict_dlba_parts(data: bytes, n: int, positions=None):
     """Parse the dict-of-DLBA wire into ((uniq_lens, uniq_blob), indices)
-    without expanding — callers gather with pyarrow take().
+    without expanding — callers gather with pyarrow take().  ``positions``
+    as in decode_dict_parts.
 
     Loud-fails on corrupt/foreign wire (mirrors decode_dba's checks):
     negative dictionary count, negative lengths, a lengths-sum that does
@@ -183,7 +190,8 @@ def decode_dict_dlba_parts(data: bytes, n: int):
     if width > max(width_from_max_int(max(n_dict - 1, 0)), 1):
         raise ValueError("dict_dlba: index width exceeds dictionary size")
     indices = decode_hybrid(
-        data[pos + 1 :], width, n, np.int32 if width <= 31 else np.int64
+        data[pos + 1 :], width, n, np.int32 if width <= 31 else np.int64,
+        positions=positions,
     )
     return (lens, blob), indices
 

@@ -12,7 +12,9 @@ Public surface:
                                  -> (codec_name, params_dict, payload_bytes,
                                      stats); kinds int, bool, float32,
                                      float64, flba, int96_ts
-    decode_column(codec, payload, n, params, kind) -> values
+    decode_column(codec, payload, n, params, kind, positions=None)
+                                 -> values (only those at ``positions``
+                                    when given)
     chunk_stats(values)          -> dict of selector stats (also exported to
                                     the metrics/lineage table)
     wrap_outer / unwrap_outer, frame_page_v2 / parse_page_v2
@@ -30,7 +32,7 @@ import json
 
 import numpy as np
 
-from .bitstream import width_from_max_int
+from .bitstream import gather_bits_lsb, width_from_max_int
 from .delta_bp import decode_delta_bp, encode_delta_bp
 from .dictionary import decode_dict, dict_size_estimate, encode_dict
 from .forpack import (
@@ -259,11 +261,29 @@ def _enc_selected(
 
 
 def _dec_int(
-    data: bytes, n: int, codec: str, params: dict, prefer32: bool = False
+    data: bytes, n: int, codec: str, params: dict, prefer32: bool = False,
+    positions: np.ndarray | None = None,
 ) -> np.ndarray:
     """prefer32: return int32 when the codec can produce it without an
     extra pass (token columns are int32 — the wide int64 default doubles
-    every downstream memory touch, the 32-worker scaling bottleneck)."""
+    every downstream memory touch, the 32-worker scaling bottleneck).
+
+    ``positions``: only the values at those indices (the gathers return
+    int64 whatever prefer32 says).  bitpack and FOR gather them straight
+    from the bit stream, rle and dict walk their hybrid runs
+    (rle.decode_hybrid); delta_bp and fsst, whose values each depend on
+    the ones before, decode whole and take, as do the plain codecs, whose
+    whole decode is a zero-copy view."""
+    if positions is not None:
+        positions = np.asarray(positions, dtype=np.int64)
+        if codec in ("bitpack", "for"):
+            width = params["width"]
+            vals = gather_bits_lsb(data, width, positions * width)
+            if codec == "for":  # the unpack's wrapping add of the reference
+                vals += np.uint64(params["ref"] % 2**64)
+            return vals.view(np.int64)
+        if codec not in ("rle", "dict"):
+            return _dec_int(data, n, codec, params)[positions]
     if codec == "plain64":
         return np.asarray(decode_plain_int64(data, n), dtype=np.int64)
     if codec == "plain32":
@@ -278,10 +298,11 @@ def _dec_int(
         return decode_delta_bp(data, n, params)
     if codec == "rle":
         return decode_hybrid(
-            data, params["width"], n, out_dtype, hdr2=params.get("hdr2", False)
+            data, params["width"], n, out_dtype, hdr2=params.get("hdr2", False),
+            positions=positions,
         )
     if codec == "dict":
-        vals = decode_dict(data, n, params.get("ptype", "int32"))
+        vals = decode_dict(data, n, params.get("ptype", "int32"), positions)
         if prefer32 and vals.dtype == np.int32:
             return vals
         return np.asarray(vals, dtype=np.int64)
@@ -550,39 +571,51 @@ def encode_column(values, kind: str = "int", codec: str | None = None):
 
 def decode_column(
     codec: str, payload: bytes, n: int, params: dict, kind: str = "int",
-    prefer32: bool = False,
+    prefer32: bool = False, positions: np.ndarray | None = None,
 ):
+    """The ``n`` values of one chunk, or with ``positions`` (indices below
+    ``n``) only the values at those indices, equal to the whole decode
+    taken there.  Layouts with random access read just those values:
+    bit-packed and FOR ints and the int images of float chunks, dict and
+    rle runs (_dec_int), and fixed-width plain and flba values.  The rest
+    decode whole and take."""
+    def at(vals):
+        return vals if positions is None else vals[positions]
+
     if kind == "int":
-        return _dec_int(payload, n, codec, params, prefer32)
+        return _dec_int(payload, n, codec, params, prefer32, positions)
     if kind == "bool":
         from .plain import decode_plain_boolean
 
-        return np.asarray(decode_plain_boolean(payload, n), dtype=bool)
+        return at(np.asarray(decode_plain_boolean(payload, n), dtype=bool))
     if kind in ("float32", "float64"):
         from .plain import decode_bss, decode_plain_double, decode_plain_float
 
         itemsize = 4 if kind == "float32" else 8
         suffix = "f32" if itemsize == 4 else "f64"
         if codec == f"int_{suffix}":
-            ints = _dec_int(payload, n, params["int_codec"], params["int_params"])
+            ints = _dec_int(
+                payload, n, params["int_codec"], params["int_params"],
+                positions=positions,
+            )
             dtype = np.float32 if itemsize == 4 else np.float64
             if "e" in params:
                 return _from_decimal(ints, params["e"], dtype)
             return ints.astype(_bits_dtype(dtype), copy=False).view(dtype)
         if codec == f"bss_{suffix}":
-            return decode_bss(payload, n, itemsize)
+            return at(decode_bss(payload, n, itemsize))
         dec = decode_plain_float if itemsize == 4 else decode_plain_double
-        return np.asarray(dec(payload, n))
+        return at(np.asarray(dec(payload, n)))
     if kind == "flba":
         from .plain import decode_plain_flba, flba_matrix_to_bytes_list
 
         return flba_matrix_to_bytes_list(
-            decode_plain_flba(payload, n, int(params["width"]))
+            at(decode_plain_flba(payload, n, int(params["width"])))
         )
     if kind == "int96_ts":
         from .plain import epoch_millis_from_int96
 
-        return epoch_millis_from_int96(payload, n)
+        return at(epoch_millis_from_int96(payload, n))
     raise KeyError(f"unknown kind {kind}")
 
 

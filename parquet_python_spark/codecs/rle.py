@@ -30,6 +30,7 @@ import numpy as np
 from .bitstream import (
     decode_varint,
     encode_varint,
+    gather_bits_lsb,
     pack_bits_lsb,
     unpack_bits_lsb,
 )
@@ -196,6 +197,7 @@ def decode_hybrid(
     out_dtype=np.int64,
     hdr2: bool = False,
     table: np.ndarray | None = None,
+    positions: np.ndarray | None = None,
 ) -> np.ndarray:
     """Decode the first ``n`` values of a raw hybrid run stream.
 
@@ -212,10 +214,18 @@ def decode_hybrid(
     runs gather once per run; bit-packed runs gather inside
     unpack_bits_lsb's cache-blocked loop).  Kills the intermediate index
     buffer a decode-then-gather would write and re-read.
+
+    ``positions``: only the values at those indices (each < n), in the
+    same dtype: the runs are walked without expanding them, an RLE run
+    gives its value and a bit-packed run's values are read straight from
+    its bits (bitstream.gather_bits_lsb).
     """
     small = np.dtype(out_dtype).itemsize == 4 and width <= 31
     dtype = table.dtype if table is not None else (np.int32 if small else np.int64)
     idx_dtype = np.int32 if width <= 31 else np.int64
+    if positions is not None:
+        vals = _hybrid_at(data, width, n, hdr2, np.asarray(positions, dtype=np.int64))
+        return table[vals] if table is not None else vals.astype(dtype, copy=False)
     if hdr2:
         # fixed-stride layout (see _encode_rle2): one reshape + one repeat
         return _decode_rle2(
@@ -261,3 +271,40 @@ def decode_hybrid(
         res = np.empty(n, dtype=dtype)
     return res[:p] if p < n else res
 
+
+def _hybrid_at(data, width: int, n: int, hdr2: bool, positions: np.ndarray) -> np.ndarray:
+    """decode_hybrid's values at ``positions``, as int64.  One pass over
+    the run headers records each run's first value index and either its
+    RLE value or the byte offset of its bit-packed payload; each position
+    then finds its run (searchsorted) and reads one value.  The
+    fixed-stride layout expands whole: its runs are long by selection."""
+    if hdr2:  # one vectorized parse of the fixed-stride runs
+        return _decode_rle2(data, width, n, np.int64)[positions]
+    raw = np.frombuffer(data, dtype=np.uint8) if not isinstance(data, np.ndarray) else data
+    starts, offsets, values = [], [], []
+    pos = p = 0
+    while pos < len(raw) and p < n:
+        header, pos = decode_varint(data, pos)
+        starts.append(p)
+        if header & 1:
+            offsets.append(pos)
+            values.append(0)
+            p += (header >> 1) * 8
+            pos += (header >> 1) * width
+        else:
+            nbytes = (width + 7) // 8
+            offsets.append(-1)
+            values.append(int.from_bytes(
+                bytes(raw[pos : pos + nbytes]).ljust(4, b"\x00"), "little", signed=True
+            ))
+            p += header >> 1
+            pos += nbytes
+    run = np.searchsorted(np.array(starts, dtype=np.int64), positions, "right") - 1
+    out = np.array(values, dtype=np.int64)[run]
+    off = np.array(offsets, dtype=np.int64)[run]
+    packed = off >= 0
+    if packed.any():
+        first = np.array(starts, dtype=np.int64)[run[packed]]
+        bits = off[packed] * 8 + (positions[packed] - first) * width
+        out[packed] = gather_bits_lsb(raw, width, bits).view(np.int64)
+    return out

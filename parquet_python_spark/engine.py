@@ -34,7 +34,6 @@ Scale design notes (targets a 1000-executor cluster; local[32] here):
 
 from __future__ import annotations
 
-import functools
 import gc
 import hashlib
 import json
@@ -707,15 +706,14 @@ def read_block_file(task, schema: pa.Schema, decode, narrow=None):
     """The one file-direct read loop: the entry ``task`` = (path,
     filters) reads with pyarrow only ``schema``'s columns of the rows
     passing ``filters`` (every row when None: a pyarrow filter on part_id
-    reads only the kept parts); part_runs splits them, and ``decode``
-    turns each part's rows into an Arrow table whose record batches this
-    yields.  A part never spans
+    reads only the kept parts); part_runs splits them, and this yields
+    ``decode`` of each part's rows.  A part never spans
     files (_block_files, or a blocks directory's writers), so each
     decodes whole.  ``narrow``, when given, runs first as
     ``narrow(path, filters)`` and returns the filters of the rows still
     worth reading, or None to read nothing more of the file.  Runs in a
     map_tasks task (_decode_block_files) or, for a small read, in the
-    driver process (generic_codec's metadata aggregates)."""
+    driver process (generic_codec._decode_parts)."""
     import pyarrow.parquet as pq
 
     path, where = task
@@ -723,7 +721,7 @@ def read_block_file(task, schema: pa.Schema, decode, narrow=None):
         return
     tbl = pq.read_table(path, columns=schema.names, filters=where, use_threads=False)
     for _, rows in part_runs(tbl):
-        yield from decode(rows).to_batches()
+        yield decode(rows)
 
 
 def _decode_block_files(
@@ -738,9 +736,11 @@ def _decode_block_files(
     read_block_file (with ``schema``, ``decode`` and ``narrow``; tokens
     blocks by default) in map_tasks' tasks, as one DataFrame of
     ``out_schema``."""
-    read = functools.partial(
-        read_block_file, schema=schema, decode=decode, narrow=narrow
-    )
+
+    def read(task):
+        for decoded in read_block_file(task, schema, decode, narrow):
+            yield from decoded.to_batches()
+
     return map_tasks(spark, plan, read, out_schema)
 
 

@@ -309,12 +309,17 @@ def _encode_values(
 
 def _decode_values(
     payload: bytes, n_rows: int, n_values: int, codec: str, params_json: str,
-    kind: str,
+    kind: str, rows: np.ndarray | None = None,
 ) -> pa.Array:
     """Inverse of _encode_values: decode payload -> typed Arrow array with
     nulls re-woven from the validity stream (reference __init__.py:336-338).
     Handles both page shapes: V1 (validity prefixed inside the payload)
-    and V2 (registry.parse_page_v2 framing, outer-compressed data)."""
+    and V2 (registry.parse_page_v2 framing, outer-compressed data).
+
+    ``rows`` (ascending row positions): only those rows, equal to the
+    whole decode taken there.  They map to value positions through the
+    validity stream, and the codecs read just those values where their
+    layout allows (registry.decode_column, arrow_io.decode_str_column)."""
     params = params_from_json(params_json)
     if "__pouter__" in params:
         # a whole-page outer wrap: no page shape this module writes, and
@@ -338,14 +343,22 @@ def _decode_values(
         valid = _decode_def_levels(bytes(mv[4 : 4 + def_sz]), n_rows)
         payload = bytes(mv[4 + def_sz :])
 
+    positions = rows
+    if rows is not None and valid is not None:
+        # a present row's value position is the count of present rows
+        # before it
+        positions = (np.cumsum(valid, dtype=np.int64) - 1)[rows[valid[rows]]]
+        valid = valid[rows]
     if kind == "str":
-        arr = decode_str_column(codec, payload, n_values, params)
-    elif kind == "flba":
-        vals = decode_column(codec, payload, n_values, params, "flba")
-        arr = pa.array(vals, type=pa.binary())
+        arr = decode_str_column(codec, payload, n_values, params, positions)
     else:
-        vals = decode_column(codec, payload, n_values, params, kind)
-        arr = pa.array(np.asarray(vals))
+        vals = decode_column(
+            codec, payload, n_values, params, kind, positions=positions
+        )
+        arr = (
+            pa.array(vals, type=pa.binary()) if kind == "flba"
+            else pa.array(np.asarray(vals))
+        )
 
     if valid is None:
         return arr
@@ -657,73 +670,110 @@ def _decode_fn(
     mask (late materialization): every entry is evaluated row by row on
     its decoded column (_row_mask), AND across entries and OR inside a
     union group.  A part whose mask is all false returns before any other
-    column decodes; otherwise every output column decodes whole and takes
-    the mask's rows."""
+    column decodes; otherwise every other output column decodes only the
+    mask's rows (_decode_values' ``rows``).
+
+    The two halves are also exposed as ``dec.select(tbl)`` (the predicate
+    columns decoded and the row positions kept: None = every row) and
+    ``dec.gather(selected)`` (the output table), so a caller can count the
+    kept rows of every part before gathering any (_decode_parts)."""
 
     # arrow image of the output schema, for the no-matching-row early exit
     empty_out = pa.Table.from_pylist([], schema=to_arrow_schema(out_schema))
-    if prune is None:
-        prune = []
-    elif isinstance(prune, tuple):
-        prune = [prune]
-    # every entry as a group of tuples, ORed: a bare tuple is a group of one
-    prunes = [e if isinstance(e, list) else [e] for e in prune]
+    prunes = _prune_groups(prune)
 
-    def dec(tbl: pa.Table) -> pa.Table:
+    def select(tbl: pa.Table) -> tuple:
+        """(chunk rows by column, n_rows, decoded predicate columns, kept
+        row positions or None for every row)."""
         by_col = {r["column"]: r for r in tbl.to_pylist()}
         n_rows = int(next(iter(by_col.values()))["n_rows"])
-
-        def chunk_arr(column, kind) -> pa.Array:
-            row = by_col[column]
-            payload = bytes(row["payload"])
-            if zlib.crc32(payload) != int(row["checksum"]):
-                raise ValueError(f"checksum mismatch in {column}")
-            return _decode_values(
-                payload, n_rows, int(row["n_values"]), row["codec"],
-                row["params"], kind,
-            )
-
-        # late materialization: every prune entry is evaluated row by row on
-        # its decoded column (AND across entries, OR inside a union group)
+        # late materialization: every prune entry is evaluated row by row
+        # on its decoded column (AND across entries, OR inside a group)
         mask = None  # None = every row
         pred_arrs: dict[str, pa.Array] = {}
         for group in prunes:
             m = np.zeros(n_rows, dtype=bool)
             for pcol, lo, hi in group:
                 if pcol not in pred_arrs:
-                    pred_arrs[pcol] = chunk_arr(pcol, col_kinds[pcol])
+                    pred_arrs[pcol] = _chunk_arr(
+                        by_col[pcol], n_rows, col_kinds[pcol]
+                    )
                 m |= _row_mask(pred_arrs[pcol], col_kinds[pcol], lo, hi)
             mask = m if mask is None else mask & m
-        rows = None if mask is None else pa.array(np.flatnonzero(mask))
+        rows = None if mask is None or mask.all() else np.flatnonzero(mask)
+        return by_col, n_rows, pred_arrs, rows
+
+    def gather(selected: tuple) -> pa.Table:
+        by_col, n_rows, pred_arrs, rows = selected
         if rows is not None and not len(rows):
             return empty_out
-
         out_arrays = []
         for col, kind in col_kinds.items():
             if col in pred_arrs:
                 arr = pred_arrs[col]
+                arr = arr if rows is None else arr.take(pa.array(rows))
             elif kind in _LIST_KINDS:
-                # lens and flat values assemble into one list array before
-                # any row is taken, so they stay consistent
-                lens = chunk_arr(col + ".lens", "int")
-                lens = lens.to_numpy(zero_copy_only=False)
-                flat = chunk_arr(col + ".vals", _LIST_KINDS[kind])
-                offsets = np.zeros(n_rows + 1, dtype=np.int64)
-                np.cumsum(lens, out=offsets[1:])
-                if offsets[-1] >= 2**31:
-                    raise ValueError(
-                        "list partition exceeds int32 offset range; "
-                        "increase n_parts"
-                    )
-                arr = pa.ListArray.from_arrays(
-                    pa.array(offsets.astype(np.int32), type=pa.int32()), flat
-                )
+                arr = _list_arr(by_col, col, kind, n_rows, rows)
             else:
-                arr = chunk_arr(col, kind)
-            out_arrays.append(arr if rows is None else arr.take(rows))
+                arr = _chunk_arr(by_col[col], n_rows, kind, rows)
+            out_arrays.append(arr)
         return pa.Table.from_arrays(out_arrays, names=list(col_kinds))
 
+    def dec(tbl: pa.Table) -> pa.Table:
+        return gather(select(tbl))
+
+    dec.select, dec.gather = select, gather
     return dec
+
+
+def _prune_groups(prune) -> list[list[tuple]]:
+    """_decode_fn's ``prune`` as a list of entries, each a group of
+    tuples ORed: a bare tuple is a group of one."""
+    if prune is None:
+        return []
+    if isinstance(prune, tuple):
+        prune = [prune]
+    return [e if isinstance(e, list) else [e] for e in prune]
+
+
+def _chunk_arr(row: dict, n_rows: int, kind: str, rows=None) -> pa.Array:
+    """One chunk's values (only ``rows`` when given), its checksum
+    verified first."""
+    payload = bytes(row["payload"])
+    if zlib.crc32(payload) != int(row["checksum"]):
+        raise ValueError(f"checksum mismatch in {row['column']}")
+    return _decode_values(
+        payload, n_rows, int(row["n_values"]), row["codec"], row["params"],
+        kind, rows,
+    )
+
+
+def _list_arr(by_col: dict, col: str, kind: str, n_rows: int, rows) -> pa.Array:
+    """A list column from its lens and flat values chunks (only ``rows``
+    when given): the lens decode whole, for the offsets, and the flat
+    values at the kept rows' element positions only."""
+    lens = _chunk_arr(by_col[col + ".lens"], n_rows, "int")
+    lens = lens.to_numpy(zero_copy_only=False)
+    offsets = np.zeros(n_rows + 1, dtype=np.int64)
+    np.cumsum(lens, out=offsets[1:])
+    elems = None
+    if rows is not None:
+        lens = lens[rows]
+        starts = offsets[rows]
+        offsets = np.zeros(len(rows) + 1, dtype=np.int64)
+        np.cumsum(lens, out=offsets[1:])
+        # each kept row's elements: its start, then consecutive
+        elems = np.repeat(starts - offsets[:-1], lens) + np.arange(offsets[-1])
+    if offsets[-1] >= 2**31:
+        raise ValueError(
+            "list partition exceeds int32 offset range; increase n_parts"
+        )
+    # the flat chunk's rows are its elements (never null), not the part's
+    vals = by_col[col + ".vals"]
+    flat = _chunk_arr(vals, int(vals["n_values"]), _LIST_KINDS[kind], elems)
+    return pa.ListArray.from_arrays(
+        pa.array(offsets.astype(np.int32), type=pa.int32()), flat
+    )
 
 
 def _row_mask(arr: pa.Array, kind: str, lo, hi) -> np.ndarray:
@@ -764,8 +814,10 @@ def decode_df_pruned(
     chunk statistics (_chunk_meta: the cached block index of the block
     files, in no Spark job), and only the surviving parts are read and
     decoded, file-direct (_decode_parts), so non-qualifying payloads are
-    never read.  The decode tasks return exactly the matching rows
-    (_decode_fn).  ``blocks`` that are not a bare scan of block files
+    never read.  The decode returns exactly the matching rows
+    (_decode_fn): for a small lookup in the driver process when this
+    function is CALLED, else in a Spark job when the result is collected
+    (_decode_parts).  ``blocks`` that are not a bare scan of block files
     raise ValueError (engine._block_files).
 
     ``pred_col`` may be an int/int96_ts column (exact chunk bounds), a
@@ -1095,7 +1147,12 @@ def decode_df_pruned_multi(
     columns (late materialization, see _decode_fn) — equality as the
     degenerate range [v, v], an IN-list as the UNION of its values'
     ranges — so the output is exactly the matching rows, for every
-    column kind; no caller filters it again."""
+    column kind; no caller filters it again.
+
+    A small lookup is answered in the driver process (_decode_parts):
+    its rows decode when this function is CALLED, and the result is a
+    local relation of them.  Any other lookup returns the lazy plan of
+    one exchange-free Spark job, which decodes when it is collected."""
     if combine not in ("and", "or"):
         raise ValueError(f"combine must be 'and' or 'or', got {combine!r}")
     preds = _normalize_preds(preds)
@@ -1111,10 +1168,13 @@ def decode_df_pruned_multi(
         keep = set().union(*(k for k, _ in planned))
         union_tuples = [t for _, row_preds in planned for t in row_preds]
         row_prunes = [union_tuples] if union_tuples else []
-    return _decode_parts(
+    out = _decode_parts(
         blocks, files, keep, col_kinds, out_schema, row_prunes or None,
         probes=probes,
     )
+    if isinstance(out, DataFrame):
+        return out
+    return blocks.sparkSession.createDataFrame(out, out_schema)
 
 
 def decode_df_pruned_eq(
@@ -1131,13 +1191,16 @@ def decode_df_pruned_eq(
     non-clustered column prunes nothing through min/max).
 
     Scale shape: the Bloom membership test runs where the bitsets are,
-    before a part's payloads are read — as the decode task's first read,
-    of the ``bloom`` cells alone.  Bitsets — up to ~80 KB/chunk — never
-    move to the driver at any chunk count, and no separate Python stage
-    runs for them.
+    before a part's payloads are read — as the decode's first read, of
+    the ``bloom`` cells alone, in the driver process or in the job's
+    task (_decode_parts).  Bitsets never travel between processes, and
+    no separate Python stage runs for them.
     Bloom filters admit false positives, never false negatives; the
-    decode tasks test the value row by row and return exactly the
-    matching rows.
+    decode tests the value row by row and returns exactly the matching
+    rows.  A lookup answered on the driver (few kept rows, few
+    matches — the common case) decodes when this function is called
+    and returns a local relation; otherwise the rows decode in one
+    Spark job when the result is collected.
 
     ``pred_col`` may be int/int96_ts (bloom over the values) or str
     (bloom over JVM-side xxhash64 of the values — the query literal is
@@ -1190,11 +1253,13 @@ def roundtrip_filtered(
 
     The blocks are written once, when this is called, as parquet files in
     a fresh session.session_tmpdir, where they stay on the driver's local
-    disk until the driver process exits: the returned DataFrame reads
-    them whenever it is collected, however many calls came after it.
-    Every part lies in one file, so the pruned decode plans on the
-    files' cached block index and reads only the kept parts, file-direct
-    (engine._block_files), as it would over a persistent blocks table."""
+    disk until the driver process exits: a returned job plan reads them
+    whenever it is collected, however many calls came after it.  Every
+    part lies in one file, so the pruned decode plans on the files'
+    cached block index and reads only the kept parts, file-direct
+    (engine._block_files), as it would over a persistent blocks table.
+    A small lookup decodes on the driver when this is called, and the
+    result is a local relation (decode_df_pruned_multi)."""
     preds = _normalize_preds(preds)
     in_schema = df.select(*list(col_kinds)).schema
     path = os.path.join(session_tmpdir("pps_rtf_"), "blocks")
@@ -1240,7 +1305,7 @@ def count_filtered_meta(
     the answer as a literal row (_literal_row): the driver sums the
     contained chunks and adds the boundary decode's row count.  That
     decode runs when this function is CALLED, not when the result is
-    collected: in the driver process when it is small (_decode_col_local),
+    collected: in the driver process when it is small (_decode_parts),
     else in one exchange-free Spark job (_aggregate)."""
     kind = col_kinds.get(pred_col)
     files, meta = _chunk_meta(blocks, col_kinds, [pred_col])
@@ -1252,11 +1317,11 @@ def count_filtered_meta(
     cnt = pc.sum(pc.filter(meta.column("n_rows"), contained)).as_py() or 0
     boundary = _parts(meta, pc.and_kleene(overlap, pc.invert(contained)))
     if boundary:
-        local = _decode_col_local(files, meta, pred_col, kind, boundary, [row_preds])
-        cnt += local.num_rows if local is not None else _aggregate(
-            _decode_col(blocks, pred_col, kind, boundary, [row_preds], files),
-            F.count(F.lit(1)).alias("n"),
-        )["n"]
+        got = _decode_col(blocks, files, pred_col, kind, boundary, [row_preds])
+        cnt += (
+            _aggregate(got, F.count(F.lit(1)).alias("n"))["n"]
+            if isinstance(got, DataFrame) else got.num_rows
+        )
     return _literal_row(blocks, cnt=cnt)
 
 
@@ -1287,55 +1352,18 @@ def _col_schema(col: str, kind: str) -> T.StructType:
 
 
 def _decode_col(
-    blocks: DataFrame, col: str, kind: str, parts: set[int], prune,
-    files: dict,
-) -> DataFrame:
+    blocks: DataFrame, files: dict, col: str, kind: str, parts: set[int],
+    prune,
+) -> pa.Table | DataFrame:
     """Decode only ``col``'s chunk rows of ``parts`` to the rows ``prune``
     matches (``files`` as _chunk_meta proved them): the metadata
     aggregates need nothing else, and the other columns' payloads would
-    only be read to be dropped."""
+    only be read to be dropped.  An Arrow table when decoded on the
+    driver, else the job's DataFrame (_decode_parts)."""
     return _decode_parts(
         blocks, files, parts, {col: kind}, _col_schema(col, kind), prune,
         column=col,
     )
-
-
-# the most chunk rows a metadata aggregate decodes in the driver process
-# (_decode_col_local) rather than in a Spark job.  Both decode the same
-# rows with the same code; the job adds its fixed cost (about 0.1 s wall)
-# but decodes one file per core, so the budget bounds the driver path's
-# wall time (and its memory).  Crossover probe (4 vCPUs, one file per
-# part, median wall time of 9 calls after 2 warm-ups): int and float64
-# counts cross at 2-8M rows, a clustered str count over two boundary files
-# at about 350k rows, and a str count over four files (every core busy) at
-# about 130k rows.  2**18 keeps every int and float shape and a two-file
-# str boundary on the faster path, and costs the four-file str shape at
-# most about 0.07 s of wall time.
-_DRIVER_DECODE_MAX_ROWS = 1 << 18
-
-
-def _decode_col_local(
-    files: dict, meta: pa.Table, col: str, kind: str, parts: set[int],
-    prune,
-) -> pa.Table | None:
-    """_decode_col's rows as an Arrow table, decoded in the driver process
-    with no Spark job: the same plan (_file_plan), read loop
-    (engine.read_block_file) and decode function (_decode_fn) as its
-    tasks.  None, and the caller runs _decode_col's job instead, when
-    ``parts`` hold more than _DRIVER_DECODE_MAX_ROWS rows of ``col``,
-    summed from ``meta`` (the call's _chunk_meta rows of ``col``)."""
-    pids = meta.column("part_id")
-    in_parts = pc.is_in(pids, pa.array(sorted(parts), pids.type))
-    n_rows = pc.sum(pc.filter(meta.column("n_rows"), in_parts)).as_py() or 0
-    if n_rows > _DRIVER_DECODE_MAX_ROWS:
-        return None
-    out_schema = _col_schema(col, kind)
-    dec = _decode_fn({col: kind}, out_schema, prune)
-    batches = [
-        b for task in _file_plan(files, parts, col)
-        for b in read_block_file(task, _DECODE_SCHEMA, dec)
-    ]
-    return pa.Table.from_batches(batches, to_arrow_schema(out_schema))
 
 
 def _aggregate(decoded: DataFrame, *aggs) -> dict:
@@ -1344,8 +1372,7 @@ def _aggregate(decoded: DataFrame, *aggs) -> dict:
     aggregates merge through an Observation's accumulators, where a
     DataFrame ``agg`` would shuffle them to one partition (one more job
     under adaptive execution).  The metadata count and min/max take this
-    job for a boundary decode above _DRIVER_DECODE_MAX_ROWS; smaller ones
-    decode on the driver (_decode_col_local)."""
+    job for a boundary decode too large for the driver (_decode_parts)."""
     from pyspark.sql import Observation
 
     obs = Observation()
@@ -1377,6 +1404,25 @@ def _file_plan(files: dict, parts: set[int], column: str | None) -> list[tuple]:
     ]
 
 
+# The driver-or-job rule of every pruned read (_decode_parts).  A read
+# decodes in the driver process when the columns it decodes whole (the
+# predicate columns; every output column without a predicate) hold at
+# most _DRIVER_DECODE_BUDGET kept rows, each weighted by its kind's decode
+# cost against an int row (_ROW_WEIGHT; one core decodes bitpacked or
+# float ints at 5-20 ns a row, dictionary strings at ~9 and fsst or plain
+# strings at 0.2-0.7 us), and when the rows it keeps times the columns it
+# gathers at them is at most _DRIVER_GATHER_MAX_CELLS: first as the int
+# chunk statistics predict those rows (_kept_guess: a 1% key range
+# predicts its ~6k rows and takes the job without a driver decode), then
+# as decoded.  A local relation's cost grows with its cells: 6k rows x 10
+# columns cost as much as the one-task job (0.06-0.08 CPU-s, 4 vCPUs), a
+# few dozen rows about 0.015.  The budget holds 2^20 int rows, about
+# 5-20 ms of one core, where the job's fixed cost is ~0.1 s of wall time.
+_DRIVER_DECODE_BUDGET = 1 << 20
+_ROW_WEIGHT = {"str": 32}
+_DRIVER_GATHER_MAX_CELLS = 1 << 14
+
+
 def _decode_parts(
     blocks: DataFrame,
     files: dict,
@@ -1386,16 +1432,27 @@ def _decode_parts(
     prune,
     column: str | None = None,
     probes: dict | None = None,
-) -> DataFrame:
+) -> pa.Table | DataFrame:
     """Decode the chunk rows of ``parts`` (only ``column``'s when given)
     to exactly the rows ``prune`` matches (see _decode_fn), file-direct
     over the layout _chunk_meta proved (``files``): each file holding a
     kept part reads only those parts' rows and the columns _decode_fn
-    reads (engine._decode_block_files), with no Spark scan or exchange.
-    With Bloom ``probes`` (_bloom_probes) the task first reads only the
+    reads (engine.read_block_file), with no Spark scan or exchange.
+    With Bloom ``probes`` (_bloom_probes) the read first reads only the
     parts' ``bloom`` cells of the probed columns and drops each part they
     rule out (_bloom_rules_out), so a file whose every part is ruled out
-    reads no payload."""
+    reads no payload.
+
+    The one chooser between the driver process and a Spark job, for the
+    row lookups and the metadata aggregates alike (rule above
+    _DRIVER_DECODE_BUDGET).  On the driver the same plan (_file_plan),
+    read loop and decode function as the job's tasks run when this is
+    CALLED: every kept part's predicate columns decode first, and only
+    when their kept rows are few do the other columns decode, at those
+    rows; the result is an Arrow table.  A read whose chunk statistics
+    already predict too many kept rows skips the driver decode.
+    Otherwise the result is the lazy plan of one map_tasks job
+    (engine._decode_block_files), which decodes when it is collected."""
     dec = _decode_fn(col_kinds, out_schema, prune)
     names = out_schema.fieldNames()
     narrow = None
@@ -1419,9 +1476,62 @@ def _decode_parts(
             kept = [p for p in where[0][2] if p not in out]
             return [("part_id", "in", kept), *where[1:]] if kept else None
 
+    plan = _file_plan(files, parts, column)
+    # the columns decoded whole (the predicate columns, else every one):
+    # their kept chunks' block index rows
+    groups = _prune_groups(prune)
+    whole = {t[0] for group in groups for t in group} or set(col_kinds)
+    chunks = {
+        (r["part_id"], r["column"]): r
+        for path, _ in plan for r in files[path][1].to_pylist()
+        if r["column"] in whole and r["part_id"] in parts
+    }
+    weighted = sum(
+        r["n_rows"] * _ROW_WEIGHT.get(col_kinds[c], 1) for (_, c), r in chunks.items()
+    )
+    gathered = len(col_kinds) - len(whole)
+    if weighted <= _DRIVER_DECODE_BUDGET and (
+        gathered * _kept_guess(chunks, groups, col_kinds) <= _DRIVER_GATHER_MAX_CELLS
+    ):
+        selected = [
+            sel for task in plan
+            for sel in read_block_file(task, _DECODE_SCHEMA, dec.select, narrow)
+        ]
+        kept = sum(n if r is None else len(r) for _, n, _, r in selected)
+        if kept * gathered <= _DRIVER_GATHER_MAX_CELLS:
+            return pa.concat_tables(
+                [dec.gather(sel).select(names) for sel in selected]
+                + [to_arrow_schema(out_schema).empty_table()],
+                promote_options="permissive",
+            )
     return _decode_block_files(
-        blocks.sparkSession, _file_plan(files, parts, column), _DECODE_SCHEMA,
+        blocks.sparkSession, plan, _DECODE_SCHEMA,
         lambda rows: dec(rows).select(names), out_schema, narrow,
+    )
+
+
+def _kept_guess(chunks: dict, groups: list, col_kinds: dict[str, str]) -> float:
+    """The rows the prune ``groups`` (_prune_groups) keep in ``chunks``
+    ({(part_id, column): block index row}) as the int chunk statistics
+    predict them, each chunk's present values spread evenly over
+    [stat_min, stat_max]; any other prune tuple predicts none.  It spares
+    the driver a decode whose kept rows would pass the gather cap."""
+
+    def guess(r, col, lo, hi) -> float:
+        if r is None or lo is None or r["stat_min"] is None:
+            return 0.0
+        if col_kinds[col] not in ("int", "int96_ts"):
+            return 0.0
+        span = r["stat_max"] - r["stat_min"] + 1
+        overlap = min(hi, r["stat_max"]) - max(lo, r["stat_min"]) + 1
+        return (r["n_rows"] - r["n_nulls"]) * max(0, overlap) / span
+
+    return sum(
+        min((
+            sum(guess(chunks.get((pid, c)), c, lo, hi) for c, lo, hi in g)
+            for g in groups
+        ), default=0.0)
+        for pid in {pid for pid, _ in chunks}
     )
 
 
@@ -1440,7 +1550,7 @@ def minmax_filtered_meta(
     ``stat_max <= hi``).  Only chunks straddling a bound (some values
     below lo or above hi) decode to exactly their in-range values, when
     this function is CALLED, not when the result is collected: in the
-    driver process when the decode is small (_decode_col_local), else in
+    driver process when the decode is small (_decode_parts), else in
     one exchange-free Spark job (_aggregate).  Returns a 1-row DataFrame
     ``(mn, mx)`` holding the already-computed answer as a literal row
     (_literal_row) — SQL semantics: NULL when nothing matches.
@@ -1467,15 +1577,11 @@ def minmax_filtered_meta(
     # values, whose extremes are exact
     straddle = _parts(meta, pc.and_kleene(overlap, pc.invert(contained)))
     if straddle:
-        local = _decode_col_local(files, meta, pred_col, kind, straddle, [row_preds])
-        if local is not None:
-            got = pc.min_max(local.column(pred_col)).as_py()
-        else:
-            got = _aggregate(
-                _decode_col(blocks, pred_col, kind, straddle, [row_preds], files),
-                F.min(pred_col).alias("min"),
-                F.max(pred_col).alias("max"),
-            )
+        got = _decode_col(blocks, files, pred_col, kind, straddle, [row_preds])
+        got = (
+            _aggregate(got, F.min(pred_col).alias("min"), F.max(pred_col).alias("max"))
+            if isinstance(got, DataFrame) else pc.min_max(got.column(pred_col)).as_py()
+        )
         # an empty side (None) never masks the other
         mn = min((v for v in (mn, got["min"]) if v is not None), default=None)
         mx = max((v for v in (mx, got["max"]) if v is not None), default=None)
@@ -1507,7 +1613,7 @@ def topk_filtered_meta(
     are truncated, not attainable).  Ties at the k-th value are broken
     arbitrarily, exactly like Spark's own orderBy().limit().
 
-    When the kept chunks are small (_decode_col_local) they decode when
+    When the kept chunks are small (_decode_parts) they decode when
     this function is CALLED: the driver drops nulls, sorts and keeps k
     values, returned as a local relation that collects with no Spark
     job.  Otherwise the result is a lazy plan over
@@ -1537,23 +1643,18 @@ def topk_filtered_meta(
         keep = _parts(meta, cmp(meta.column(cmp_col), b))
         # boundary chunks return only their values not beyond B
         prune = (col, -(2**63), b) if ascending else (col, b, 2**63 - 1)
-    local = _decode_col_local(files, meta, col, kind, keep, prune)
-    if local is not None:
-        top = local.filter(pc.is_valid(local.column(col))).sort_by(
-            [(col, "ascending" if ascending else "descending")]
+    dec = _decode_col(blocks, files, col, kind, keep, prune)
+    if isinstance(dec, DataFrame):
+        return (
+            dec.filter(F.col(col).isNotNull())
+            .orderBy(F.col(col).asc() if ascending else F.col(col).desc())
+            .limit(k)
         )
-        # createDataFrame keeps an Arrow table under Spark's
-        # arrow.localRelationThreshold (48 MB by default; these are at most
-        # _DRIVER_DECODE_MAX_ROWS longs) as a local relation
-        return blocks.sparkSession.createDataFrame(
-            top.slice(0, k), _col_schema(col, kind)
-        )
-    dec = _decode_col(blocks, col, kind, keep, prune, files)
-    return (
-        dec.filter(F.col(col).isNotNull())
-        .orderBy(F.col(col).asc() if ascending else F.col(col).desc())
-        .limit(k)
+    top = dec.filter(pc.is_valid(dec.column(col))).sort_by(
+        [(col, "ascending" if ascending else "descending")]
     )
+    # createDataFrame of an Arrow table is a local relation
+    return blocks.sparkSession.createDataFrame(top.slice(0, k), _col_schema(col, kind))
 
 
 def count_null_meta(

@@ -141,14 +141,3 @@ def frame_sample(media: DataFrame, every_n_bytes: int = 64, frame_len: int = 16)
 
     return media.mapInPandas(sample, schema=FRAMES_SCHEMA)
 
-
-def resize_stub(media: DataFrame, width: int = 224, height: int = 224) -> DataFrame:
-    """Resize plumbing: pass-through transform that records the target shape
-    (real path: decode -> resize -> re-encode inside the same mapInPandas)."""
-    return media.select(
-        "doc_id",
-        "media_type",
-        "payload",
-        F.lit(width).alias("target_w"),
-        F.lit(height).alias("target_h"),
-    )

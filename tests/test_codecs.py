@@ -32,6 +32,7 @@ from parquet_python_spark.codecs.arrow_io import (
     decode_str_column,
     encode_str_column,
 )
+from parquet_python_spark.codecs.bitstream import gather_bits_lsb
 from parquet_python_spark.codecs.forpack import (
     decode_bitpack,
     decode_for,
@@ -176,7 +177,8 @@ def test_pack_bits_wide_widths_reference_oracle(width, count):
     (70000 values span three chunks): the packed bytes read back through
     the reference's bit-packed-run reader, int32 input packs the same
     bytes as uint64, and unpack inverts them with and without the fused
-    frame-of-reference offset."""
+    frame-of-reference offset.  gather_bits_lsb reads the values at any
+    positions, the first and last included, without unpacking."""
     rng = np.random.default_rng(width * 1000 + count)
     top = np.uint64((1 << width) - 1)
     vals = rng.integers(0, top, count, dtype=np.uint64, endpoint=True)
@@ -202,6 +204,8 @@ def test_pack_bits_wide_widths_reference_oracle(width, count):
     out = unpack_bits_lsb(packed, width, count, offset=offset)
     want = vals + np.uint64(offset & ((1 << 64) - 1))  # wraps mod 2^64
     np.testing.assert_array_equal(out.view(np.uint64), want)
+    pos = np.unique(np.r_[rng.integers(0, count, 50), 0, count - 1])
+    np.testing.assert_array_equal(gather_bits_lsb(packed, width, pos * width), vals[pos])
 
 
 # ----------------------------------------------------------------- FSST
@@ -585,6 +589,12 @@ def test_rle2_fast_path_selected_and_exact():
     np.testing.assert_array_equal(decode_hybrid(blob, w, len(vals)), vals)
     got = ref.read_rle_bit_packed_hybrid(BytesIO(blob), w, len(blob)) or []
     assert got[: len(vals)] == list(vals)
+    # the values at some positions, through either parse
+    pos = np.unique(np.r_[np.arange(0, len(vals), 997), len(vals) - 1])
+    for hdr2 in (True, False):
+        np.testing.assert_array_equal(
+            decode_hybrid(blob, w, len(vals), hdr2=hdr2, positions=pos), vals[pos]
+        )
 
 
 def test_rle2_long_run_split():

@@ -208,8 +208,10 @@ def test_dict_dlba_rejects_corrupt_wire():
 # ------------------------------------------------ Spark end-to-end (V2 pages)
 
 def _encode_df_roundtrip(spark, written, outer):
-    """Whole-table round trip of a null-bearing int/str table; returns the
-    blocks' params strings after asserting bit-identical rows."""
+    """Whole-table round trip of a null-bearing int/str table with an int
+    list column (whose flat values chunk holds more values than the part
+    has rows); returns the blocks' params strings after asserting
+    bit-identical rows."""
     from pyspark.sql import functions as F
 
     from parquet_python_spark.operators.generic_codec import (
@@ -226,15 +228,16 @@ def _encode_df_roundtrip(spark, written, outer):
         F.when(F.col("id") % 3 == 0, None)
         .otherwise(F.concat(F.lit("s"), F.col("id").cast("string")))
         .alias("s"),
+        F.sequence(F.lit(0), F.col("id") % 4).alias("l"),
     )
-    kinds = {"k": "int", "v": "int", "s": "str"}
+    kinds = {"k": "int", "v": "int", "s": "str", "l": "int_list"}
     blocks = written(encode_df(df, "k", kinds, n_parts=4, outer=outer))
     out_schema = _arrow_safe_schema(df.select(*kinds).schema, kinds)
     got = sorted(
-        (r["k"], r["v"], r["s"])
+        (r["k"], r["v"], r["s"], r["l"])
         for r in decode_df(blocks, "k", kinds, out_schema).collect()
     )
-    exp = sorted((r["k"], r["v"], r["s"]) for r in df.collect())
+    exp = sorted((r["k"], r["v"], r["s"], r["l"]) for r in df.collect())
     assert got == exp
     return [r["params"] for r in blocks.select("params").collect()]
 
@@ -249,3 +252,123 @@ def test_encode_df_no_outer_writes_v1_pages(spark, written):
     """Without an outer codec no block is a V2 page."""
     params = _encode_df_roundtrip(spark, written, None)
     assert params and not any("__page__" in p for p in params)
+
+
+# ----------------------------------------------- positions decode
+
+_NAN_BITS = [0x7FF8000000000000, 0x7FF0000000000123, 0xFFF8000000000001]
+_POS_CODECS = {
+    "int": [None, "plain64", "plain32", "bitpack", "for", "delta_bp", "rle",
+            "dict", "fsst"],
+    "float64": [None, "plain", "bss"],
+    "float32": [None, "plain", "bss"],
+    "str": [None, "dict", "dict_dlba", "str_plain", "str_dlba", "str_dba",
+            "str_fsst"],
+    "flba": [None],
+    "int96_ts": [None],
+    "bool": [None],
+}
+
+
+def _pos_values(kind: str, shape: str, n: int, rng) -> pa.Array:
+    """``n`` values of ``kind`` in one of four shapes, each steering the
+    selector to other codecs: few distinct values, long runs, a wide or
+    sorted span (62-bit spans: FOR values that cross words), or the
+    kind's hard values (NaN payloads and -0.0, negative ints, empty
+    strings)."""
+    card = {"few": 5, "runs": 3, "wide": 1 << 20, "odd": 1 << 12}[shape]
+    ints = rng.integers(0, card, n)
+    if shape == "runs":
+        ints = np.repeat(ints, 40)[:n]
+    if shape == "wide":
+        ints = np.sort(ints)
+    if kind == "int" and shape == "wide":
+        ints = np.sort(rng.integers(-(2**61), 2**61, n))
+    if kind == "int" and shape == "odd":
+        ints = ints - 3_000  # a negative frame of reference
+    if kind in ("int", "int96_ts"):
+        return pa.array(ints, type=pa.int64())
+    if kind == "bool":
+        return pa.array(ints % 2 == 1)
+    if kind.startswith("float"):
+        vals = ints / 100.0 if shape != "odd" else rng.normal(size=n)
+        if shape == "odd" and n:
+            bits = vals.view(np.uint64)
+            bits[::5] = np.array(_NAN_BITS, dtype=np.uint64)[ints[::5] % 3]
+            vals[1::7] = -0.0
+        with np.errstate(invalid="ignore"):  # float32 NaN payloads
+            return pa.array(vals.astype(kind))
+    if kind == "flba":
+        return pa.array([int(v).to_bytes(4, "little") for v in ints], pa.binary())
+    words = ["", "a", "alpha", "beta-beta", "zz"]
+    return pa.array([
+        words[v % 5] if shape != "wide" else f"key-{v:07d}" for v in ints
+    ], pa.utf8())
+
+
+def _bits_equal(got: pa.Array, want: pa.Array) -> bool:
+    """Equal arrays, floats compared by their bits (NaN payloads, -0.0)."""
+    if pa.types.is_floating(want.type):
+        ints = pa.int32() if want.type == pa.float32() else pa.int64()
+        return got.type == want.type and got.view(ints).equals(want.view(ints))
+    return got.equals(want)
+
+
+@settings(max_examples=400, deadline=None)
+@given(
+    kind=st.sampled_from(list(_POS_CODECS)),
+    codec_i=st.integers(0, 8),
+    shape=st.sampled_from(["few", "runs", "wide", "odd"]),
+    n=st.sampled_from([0, 1, 7, 64, 65, 300, 2_000]),
+    null_frac=st.sampled_from([0.0, 0.0, 0.3, 1.0]),
+    outer=st.sampled_from(_OUTERS),
+    which=st.sampled_from(["empty", "all", "ends", "some", "one"]),
+    seed=st.integers(0, 2**16),
+)
+def test_property_positions_decode_equals_whole_take(
+    kind, codec_i, shape, n, null_frac, outer, which, seed
+):
+    """For every codec a column can get and every page shape (V1 with and
+    without nulls, V2 under each outer codec), the positions decode
+    (_decode_values' ``rows``) equals the whole decode taken at those
+    rows: empty, all, first and last, one, or a random subset of them,
+    zero-row chunks included, floats compared by bits.  Without nulls or
+    an outer codec the payload is the codec's own, so the codec-level
+    positions decode (registry.decode_column / decode_str_column, which
+    gather at any density) is checked against the whole decode too."""
+    from parquet_python_spark.codecs import decode_column
+    from parquet_python_spark.codecs.arrow_io import decode_str_column
+    from parquet_python_spark.operators.generic_codec import (
+        _decode_values,
+        _encode_values,
+    )
+
+    rng = np.random.default_rng(seed)
+    forced = _POS_CODECS[kind][codec_i % len(_POS_CODECS[kind])]
+    arr = _pos_values(kind, shape, n, rng)
+    if null_frac:
+        arr = pa.array(arr.to_pylist(), arr.type, mask=rng.random(n) < null_frac)
+    if forced in ("bitpack", "rle", "fsst", "plain32") and shape in ("wide", "odd"):
+        arr = pa.array(np.arange(n) % 1000, pa.int64())  # in those codecs' range
+    c, pj, payload, nv = _encode_values(arr, kind, forced, outer=outer)
+    rows = {
+        "empty": np.zeros(0, dtype=np.int64),
+        "all": np.arange(n),
+        "ends": np.unique([0, n - 1]) if n else np.zeros(0, dtype=np.int64),
+        "one": rng.integers(0, n, min(n, 1)),
+        "some": np.sort(rng.choice(n, size=n // 3, replace=False)),
+    }[which].astype(np.int64)
+    whole = _decode_values(payload, n, nv, c, pj, kind)
+    assert _bits_equal(whole, arr)
+    got = _decode_values(payload, n, nv, c, pj, kind, rows)
+    assert _bits_equal(got, whole.take(pa.array(rows))), (c, which)
+    if outer is None and not arr.null_count:
+        params = json.loads(pj)
+        if kind == "str":
+            at = decode_str_column(c, payload, nv, params, rows)
+        else:
+            vals = decode_column(c, payload, nv, params, kind, positions=rows)
+            at = pa.array(vals, pa.binary()) if kind == "flba" else pa.array(
+                np.asarray(vals), whole.type
+            )
+        assert _bits_equal(at, whole.take(pa.array(rows))), (c, which)

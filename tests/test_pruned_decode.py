@@ -333,14 +333,19 @@ def test_filtered_blocks_cache_union_consumes_both(spark):
     assert got == exp
 
 
-def test_filtered_results_outlive_later_calls(spark):
+def test_filtered_results_outlive_later_calls(spark, monkeypatch):
     """Each roundtrip_filtered call's blocks stay on disk until the driver
     exits: eight results (more than the six the old persisted-blocks
     registry kept) are built before any is collected, then collected
     newest first, and each equals a plain Spark filter.  The returned
     plan reads the block files directly: no group-by decode, exchange or
-    cached-blocks scan."""
+    cached-blocks scan.  These are lazy job plans (a driver-decode budget
+    of 0 rows): a lookup answered on the driver reads its files when it
+    is called."""
+    import parquet_python_spark.operators.generic_codec as gc
     from parquet_python_spark.operators.generic_codec import roundtrip_filtered
+
+    monkeypatch.setattr(gc, "_DRIVER_DECODE_BUDGET", 0)
 
     kinds = {"k": "int", "v": "int"}
     built = []
@@ -1080,6 +1085,7 @@ def test_persisted_blocks_prune_pushes_to_scan(spark, tmp_path, monkeypatch):
     decodes reading it back file-direct: no exchange, no join, one task
     per file holding a kept part.  Results stay exact through the parquet
     round-trip (n_nulls/str bounds survive)."""
+    import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
@@ -1092,7 +1098,7 @@ def test_persisted_blocks_prune_pushes_to_scan(spark, tmp_path, monkeypatch):
         encode_df,
     )
 
-    real_decode_col, real_local = gc._decode_col, gc._decode_col_local
+    real_decode_col = gc._decode_col
     df = spark.range(20_000).select(
         F.col("id").alias("k"),
         F.when(F.col("id") < 4_000, None).otherwise(F.col("id")).alias("w"),
@@ -1120,6 +1126,9 @@ def test_persisted_blocks_prune_pushes_to_scan(spark, tmp_path, monkeypatch):
         )
 
     blocks = spark.read.parquet(path)
+    # the lookups' plan checks need their Spark job: a driver-decode
+    # budget of 0 rows
+    monkeypatch.setattr(gc, "_DRIVER_DECODE_BUDGET", 0)
     # range prune
     dec = decode_df_pruned(blocks, "k", kinds, out_schema, "k", 5_000, 6_000)
     p = plan(dec)
@@ -1154,30 +1163,27 @@ def test_persisted_blocks_prune_pushes_to_scan(spark, tmp_path, monkeypatch):
         ).collect()
     )
     assert got_m == [(i, i) for i in range(5_000, 6_001)]
+    monkeypatch.undo()
 
     # metadata-first COUNT: exact; only the two boundary parts decode
     # (the two contained ones are answered from the metadata), and that
     # decode reads only the predicate column's kept chunks.  That small
-    # decode runs in the driver process; the plan checks below force the
-    # Spark job (a budget of 0 rows)
-    calls, local_calls = [], []
+    # decode runs in the driver process (an Arrow table); the plan checks
+    # below force the Spark job (a budget of 0 rows)
+    calls = []
 
     def recording_decode_col(*args):
-        calls.append((args[3], real_decode_col(*args)))
+        calls.append((args[4], real_decode_col(*args)))
         return calls[-1][1]
 
-    def recording_local(*args):
-        local_calls.append(args[4])
-        return real_local(*args)
-
     monkeypatch.setattr(gc, "_decode_col", recording_decode_col)
-    monkeypatch.setattr(gc, "_decode_col_local", recording_local)
     def count():
         return count_filtered_meta(blocks, kinds, "k", 2_500, 17_499).first()["cnt"]
 
     assert count() == 15_000
-    assert local_calls == [{0, 3}] and calls == []
-    monkeypatch.setattr(gc, "_DRIVER_DECODE_MAX_ROWS", 0)
+    assert [parts for parts, _ in calls] == [{0, 3}]
+    assert isinstance(calls.pop()[1], pa.Table)
+    monkeypatch.setattr(gc, "_DRIVER_DECODE_BUDGET", 0)
     assert count() == 15_000
     monkeypatch.undo()
     assert [parts for parts, _ in calls] == [{0, 3}]
@@ -1487,6 +1493,7 @@ def test_metadata_aggregates_driver_path_equals_job_path(
     chunk and ties; a boundary chunk where no row matches; predicates
     with no boundary chunk; k beyond the present values; both orders."""
     import pyarrow.parquet as pq
+    from pyspark.sql import DataFrame
 
     import parquet_python_spark.operators.generic_codec as gc
 
@@ -1532,8 +1539,10 @@ def test_metadata_aggregates_driver_path_equals_job_path(
     real_decode_col = gc._decode_col
 
     def recording_decode_col(*args):
-        job_calls.append(args[3])
-        return real_decode_col(*args)
+        out = real_decode_col(*args)
+        if isinstance(out, DataFrame):  # the Spark job, not the driver
+            job_calls.append(args[4])
+        return out
 
     monkeypatch.setattr(gc, "_decode_col", recording_decode_col)
 
@@ -1552,7 +1561,7 @@ def test_metadata_aggregates_driver_path_equals_job_path(
 
     driver = answers()
     assert job_calls == []
-    monkeypatch.setattr(gc, "_DRIVER_DECODE_MAX_ROWS", 0)
+    monkeypatch.setattr(gc, "_DRIVER_DECODE_BUDGET", 0)
     job = answers()
     assert job_calls
     assert driver == job
@@ -1642,11 +1651,12 @@ def _jobs_of(spark, group, call):
 
 def test_pruned_calls_spark_job_counts(spark, tmp_path, monkeypatch):
     """Every pruned call plans from the cached block index: a row lookup
-    (range or eq) runs exactly one Spark job, the exchange-free decode; a
-    top-k, and a count or min/max with boundary chunks, decode them in
-    the driver process and run none, as do a count or min/max answered
-    from metadata alone and a null count.  With a driver-decode budget of
-    0 rows the top-k, count and min/max run the one decode job instead."""
+    (range or eq) with few matching rows, a top-k, and a count or min/max
+    with boundary chunks decode in the driver process and run no Spark
+    job, as do a count or min/max answered from metadata alone and a null
+    count.  With a driver-decode budget of 0 rows each of them runs
+    exactly one Spark job, the exchange-free decode; so does a range
+    lookup whose matching rows are too many to gather on the driver."""
     import parquet_python_spark.operators.generic_codec as gc
     from parquet_python_spark.operators.generic_codec import (
         _arrow_safe_schema,
@@ -1675,18 +1685,23 @@ def test_pruned_calls_spark_job_counts(spark, tmp_path, monkeypatch):
         assert n == want, (name, n)
         return result
 
-    rows = jobs("range", 1, lambda: decode_df_pruned(
-        blocks, "k", kinds, out_schema, "k", 5_000, 6_000
-    ).filter(F.col("k").between(5_000, 6_000)).collect())
-    assert len(rows) == 1_001
-    rows = jobs("eq", 1, lambda: decode_df_pruned_eq(
-        blocks, "k", kinds, out_schema, "v", 7
-    ).filter(F.col("v") == 7).collect())
-    assert len(rows) == 20
+    # 12_000 rows x 2 gathered columns: past the driver's gather cap
+    rows = jobs("range-wide", 1, lambda: decode_df_pruned(
+        blocks, "k", kinds, out_schema, "k", 2_000, 13_999
+    ).filter(F.col("k").between(2_000, 13_999)).collect())
+    assert len(rows) == 12_000
     for budget in (None, 0):
         if budget is not None:
-            monkeypatch.setattr(gc, "_DRIVER_DECODE_MAX_ROWS", budget)
+            monkeypatch.setattr(gc, "_DRIVER_DECODE_BUDGET", budget)
         want, sfx = (0, "") if budget is None else (1, "-job")
+        rows = jobs("range" + sfx, want, lambda: decode_df_pruned(
+            blocks, "k", kinds, out_schema, "k", 5_000, 6_000
+        ).filter(F.col("k").between(5_000, 6_000)).collect())
+        assert len(rows) == 1_001
+        rows = jobs("eq" + sfx, want, lambda: decode_df_pruned_eq(
+            blocks, "k", kinds, out_schema, "v", 7
+        ).filter(F.col("v") == 7).collect())
+        assert len(rows) == 20
         rows = jobs("topk" + sfx, want, lambda: topk_filtered_meta(
             blocks, kinds, "k", 5, ascending=False
         ).collect())
@@ -1715,6 +1730,100 @@ def test_pruned_calls_spark_job_counts(spark, tmp_path, monkeypatch):
         blocks, kinds, "w", True
     ).first()["cnt"])
     assert cnt == 6_667
+
+
+def test_driver_lookup_equals_job_and_filter(spark, tmp_path, monkeypatch):
+    """One rule chooses the driver process or the Spark job for every
+    pruned read.  An eq lookup with few matching rows is answered on the
+    driver (no job): on blocks with nulls, a str column, float NaN
+    payloads and ±0.0, and an int list column, its rows equal the job
+    path's (a driver-decode budget of 0 rows) and a plain Spark filter's,
+    floats compared by bits.  A lookup whose matching rows times gathered
+    columns pass the gather cap runs the one map_tasks job: an int key
+    range as its chunk statistics predict, a float range (no prediction)
+    once the driver has decoded its predicate column and counted the
+    rows.  The budget weighs rows by
+    kind: a str count whose boundary rows are far under the budget as
+    int rows but over it as str rows runs the job, and the int count
+    over the same parts runs none."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import parquet_python_spark.operators.generic_codec as gc
+
+    n = 80_000
+    ids = np.arange(n)
+    f = ids / 100.0
+    f[ids % 5 == 0] = np.nan
+    bits = f.view(np.uint64)
+    bits[ids % 15 == 0] = 0xFFF8000000000001  # NaN payloads, sign set
+    bits[ids % 25 == 0] = 0x7FF0000000000123
+    f[ids % 5 == 1] = -0.0
+    f[ids % 5 == 2] = 0.0
+    raw = pa.table({
+        "k": ids,
+        "v": ids * 7919 % 8_000,  # 10 rows per value, over both parts
+        "s": pa.array([f"s{i:06d}" for i in ids], mask=ids % 7 == 0),
+        "f": pa.array(f, mask=ids % 11 == 0),
+        "w": pa.array(ids % 97, mask=ids % 13 == 0),
+        "l": pa.array([list(range(i % 4)) for i in ids]),
+    })
+    pq.write_table(raw, str(tmp_path / "raw.parquet"))
+    df = spark.read.parquet(str(tmp_path / "raw.parquet"))
+    kinds = {
+        "k": "int", "v": "int", "s": "str", "f": "float64", "w": "int",
+        "l": "int_list",
+    }
+    path = str(tmp_path / "blocks")
+    gc.encode_df(df, "k", kinds, n_parts=2, partitioning="range").write.parquet(path)
+    blocks = spark.read.parquet(path)
+    out_schema = gc._arrow_safe_schema(df.schema, kinds)
+
+    def arrow(d):
+        t = d.toArrow().sort_by("k").combine_chunks()
+        i = t.schema.get_field_index("f")
+        return t.set_column(i, "f", t.column(i).chunk(0).view(pa.int64()))
+
+    def lookup(v):
+        return gc.decode_df_pruned_eq(blocks, "k", kinds, out_schema, "v", v)
+
+    for v in (0, 4_321, 7_999):
+        jobs, driver = _jobs_of(spark, f"eq-driver-{v}", lambda: lookup(v).collect())
+        assert jobs == 0 and len(driver) == 10
+        got = arrow(lookup(v))
+        assert got.equals(arrow(df.filter(F.col("v") == v).select(*kinds)))
+        monkeypatch.setattr(gc, "_DRIVER_DECODE_BUDGET", 0)
+        jobs, _ = _jobs_of(spark, f"eq-job-{v}", lambda: lookup(v).collect())
+        assert jobs == 1 and arrow(lookup(v)).equals(got)
+        monkeypatch.undo()
+
+    # 8_001 rows x 5 gathered columns: past the cap
+    wide = gc.decode_df_pruned(
+        blocks, "k", kinds, out_schema, "k", 1_000, 9_000
+    )
+    jobs, rows = _jobs_of(spark, "range-over-cap", wide.collect)
+    assert jobs == 1 and len(rows) == 8_001
+    assert arrow(wide).equals(arrow(df.filter(F.col("k").between(1_000, 9_000)).select(*kinds)))
+    wide_f = gc.decode_df_pruned(blocks, "k", kinds, out_schema, "f", 0.0, 500.0)
+    jobs, rows = _jobs_of(spark, "float-range-over-cap", wide_f.collect)
+    assert jobs == 1 and len(rows) > 20_000
+    assert arrow(wide_f).equals(
+        arrow(df.filter(F.col("f").between(0.0, 500.0)).select(*kinds))
+    )
+
+    # both parts are boundary parts: 80k rows, far under the budget as
+    # int rows, over it as str rows
+    assert n * gc._ROW_WEIGHT["str"] > gc._DRIVER_DECODE_BUDGET >= n
+    jobs, cnt = _jobs_of(spark, "count-str", lambda: gc.count_filtered_meta(
+        blocks, kinds, "s", "s010000", "s070000"
+    ).first()["cnt"])
+    assert jobs == 1
+    assert cnt == df.filter(F.col("s").between("s010000", "s070000")).count()
+    jobs, cnt = _jobs_of(spark, "count-int", lambda: gc.count_filtered_meta(
+        blocks, kinds, "k", 10_000, 70_000
+    ).first()["cnt"])
+    assert jobs == 0 and cnt == 60_001
 
 
 def test_null_predicates_in_large_chunk_exact(spark, written):
@@ -1942,6 +2051,7 @@ def test_file_direct_gate_falls_back_when_parts_span_files(
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
+    import parquet_python_spark.operators.generic_codec as gc
     from parquet_python_spark.engine import _block_files
     from parquet_python_spark.operators.generic_codec import (
         _DECODE_SCHEMA,
@@ -2003,16 +2113,22 @@ def test_file_direct_gate_falls_back_when_parts_span_files(
     from pyspark import SparkContext
 
     monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda sc: 1))
+    monkeypatch.setattr(gc, "_DRIVER_DECODE_BUDGET", 0)  # the Spark job
     # both files hold a kept part: two tasks unbundled
     dec = decode_df_pruned_multi(odd_even, "k", _LM_KINDS, out_schema, preds)
     assert dec.rdd.getNumPartitions() == 1
     assert sorted(repr(r) for r in dec.collect()) == got_c
 
 
-def test_pruned_decode_detects_corrupt_payload(spark, lm_blocks, tmp_path):
+def test_pruned_decode_detects_corrupt_payload(
+    spark, lm_blocks, tmp_path, monkeypatch
+):
     """One flipped payload byte in a block file makes a pruned decode of
-    that chunk fail its crc32 check."""
+    that chunk fail its crc32 check, on the driver (when called) and in
+    the Spark job (when collected)."""
     import shutil
+
+    import parquet_python_spark.operators.generic_codec as gc
 
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -2042,12 +2158,14 @@ def test_pruned_decode_detects_corrupt_payload(spark, lm_blocks, tmp_path):
     pq.write_table(tbl, victim)
     k_lo = pid * 6_000  # range partitioning: part p holds keys [6000p, 6000p + 6000)
     out_schema = _arrow_safe_schema(raw.select(*_LM_KINDS).schema, _LM_KINDS)
-    dec = decode_df_pruned_multi(
-        spark.read.parquet(bad), "k", _LM_KINDS, out_schema,
-        [("range", "k", k_lo + 10, k_lo + 20)],
-    )
-    with pytest.raises(Exception, match="checksum mismatch in i"):
-        dec.collect()
+    for budget in (None, 0):
+        if budget is not None:
+            monkeypatch.setattr(gc, "_DRIVER_DECODE_BUDGET", budget)
+        with pytest.raises(Exception, match="checksum mismatch in i"):
+            decode_df_pruned_multi(
+                spark.read.parquet(bad), "k", _LM_KINDS, out_schema,
+                [("range", "k", k_lo + 10, k_lo + 20)],
+            ).collect()
 
 
 def _nan(bits: int) -> float:
@@ -2287,6 +2405,8 @@ def test_bloom_rejected_part_decodes_nothing(spark, tmp_path, monkeypatch):
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     import parquet_python_spark.engine as engine
     from parquet_python_spark.operators import generic_codec as gc
 
@@ -2346,21 +2466,30 @@ def test_bloom_rejected_part_decodes_nothing(spark, tmp_path, monkeypatch):
         return real_read(path, columns=columns, filters=filters, **kwargs)
 
     def in_process(spark_, tasks, run_task, schema):
-        tbls = [pa.Table.from_batches([b]) for t in tasks for b in run_task(t)]
-        return sum(t.num_rows for t in tbls)
+        batches = [b for t in tasks for b in run_task(t)]
+        return spark_.createDataFrame(
+            pa.Table.from_batches(batches, to_arrow_schema(schema)), schema
+        )
 
     monkeypatch.setattr(pq, "read_table", read_table)
     monkeypatch.setattr(engine, "map_tasks", in_process)
     direct = spark.read.parquet(path)
-    for v, want in ((none_v, 0), (one_v, 1)):
-        decoded.clear()
-        reads.clear()
-        n = gc.decode_df_pruned_eq(direct, "k", kinds, out_schema, "v", v)
-        assert n == want and bool(decoded) == bool(want), (v, n, decoded)
-        assert reads[0][0] == ("part_id", "column", "bloom"), reads
-        payload_reads = [f for cols, f in reads if "payload" in cols]
-        want_reads = [[("part_id", "in", [first])]] if want else []
-        assert payload_reads == want_reads, reads
+    # on the driver, then in the job's task (a driver budget of 0 rows)
+    for budget in (None, 0):
+        if budget is not None:
+            monkeypatch.setattr(gc, "_DRIVER_DECODE_BUDGET", budget)
+        for v, want in ((none_v, 0), (one_v, 1)):
+            decoded.clear()
+            reads.clear()
+            out = gc.decode_df_pruned_eq(direct, "k", kinds, out_schema, "v", v)
+            reads_at_call = list(reads)
+            n = out.count()
+            assert reads == reads_at_call  # decoded when called
+            assert n == want and bool(decoded) == bool(want), (v, n, decoded)
+            assert reads[0][0] == ("part_id", "column", "bloom"), reads
+            payload_reads = [f for cols, f in reads if "payload" in cols]
+            want_reads = [[("part_id", "in", [first])]] if want else []
+            assert payload_reads == want_reads, reads
     monkeypatch.undo()
     got = gc.decode_df_pruned_eq(direct, "k", kinds, out_schema, "v", one_v)
     assert [tuple(r) for r in got.collect()] == [
@@ -2368,11 +2497,15 @@ def test_bloom_rejected_part_decodes_nothing(spark, tmp_path, monkeypatch):
     ]
 
 
-def test_str_bloom_probes_hash_in_no_job(spark, tmp_path, pred_row_expr):
+def test_str_bloom_probes_hash_in_no_job(
+    spark, tmp_path, pred_row_expr, monkeypatch
+):
     """Str eq/IN probes are hashed on the driver through one VALUES
     query that runs no Spark job, to the same xxhash64 the encode built
     the filters over; a str eq and IN lookup on file-direct blocks then
-    runs one job and equals a plain Spark filter."""
+    equals a plain Spark filter, answered on the driver with no job, or
+    in one job with a driver-decode budget of 0 rows."""
+    import parquet_python_spark.operators.generic_codec as gc
     from parquet_python_spark.operators.generic_codec import (
         _arrow_safe_schema,
         _bloom_probes,
@@ -2399,15 +2532,18 @@ def test_str_bloom_probes_hash_in_no_job(spark, tmp_path, pred_row_expr):
         for v in ("s17", "s3", "zz")
     }
     assert probes == {("s", v, v): h for v, h in want.items()}
-    for lookup, combine in ((preds[:1], "and"), (preds, "or")):
-        n, got = _jobs_of(spark, f"str-lookup-{combine}", lambda: sorted(
-            tuple(r) for r in decode_df_pruned_multi(
-                blocks, "k", kinds, out_schema, lookup, combine
-            ).collect()
-        ))
-        expr = pred_row_expr(lookup, combine)
-        assert n == 1 and got
-        assert got == sorted(tuple(r) for r in df.filter(expr).collect())
+    for budget in (None, 0):
+        if budget is not None:
+            monkeypatch.setattr(gc, "_DRIVER_DECODE_BUDGET", budget)
+        for lookup, combine in ((preds[:1], "and"), (preds, "or")):
+            n, got = _jobs_of(spark, f"str-lookup-{combine}-{budget}", lambda: sorted(
+                tuple(r) for r in decode_df_pruned_multi(
+                    blocks, "k", kinds, out_schema, lookup, combine
+                ).collect()
+            ))
+            expr = pred_row_expr(lookup, combine)
+            assert n == (budget == 0) and got
+            assert got == sorted(tuple(r) for r in df.filter(expr).collect())
 
 
 def test_file_direct_missing_pred_column_raises(spark, tmp_path):

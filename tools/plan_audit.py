@@ -24,38 +24,46 @@ def _plan(df) -> str:
 
 
 def _recording_block_reads(build):
-    """Build a query while recording the (path, filters) plan handed to
-    every file-direct block read (engine._decode_block_files) it starts,
-    and the DataFrame each read returns: (query, [(plan, decode df)])."""
-    from parquet_python_spark import engine
+    """Build a query while recording every pruned block read it starts,
+    at the one chooser of the driver process or a Spark job
+    (generic_codec._decode_parts), whichever decodes it: the read's
+    (path, filters) plan (generic_codec._file_plan) and what the chooser
+    returned, an Arrow table decoded on the driver or the job's
+    DataFrame: (query, [(plan, result)])."""
     from parquet_python_spark.operators import generic_codec
 
-    reads = []
-    real = engine._decode_block_files
+    reads, plans = [], []
+    real_parts, real_plan = generic_codec._decode_parts, generic_codec._file_plan
 
-    def spy(spark, plan, *args, **kwargs):
-        out = real(spark, plan, *args, **kwargs)
-        reads.append((list(plan), out))
+    def file_plan(*args, **kwargs):
+        plans.append(real_plan(*args, **kwargs))
+        return plans[-1]
+
+    def decode_parts(*args, **kwargs):
+        out = real_parts(*args, **kwargs)
+        reads.append((plans.pop(), out))
         return out
 
-    engine._decode_block_files = generic_codec._decode_block_files = spy
+    generic_codec._decode_parts, generic_codec._file_plan = decode_parts, file_plan
     try:
         return build(), reads
     finally:
-        engine._decode_block_files = generic_codec._decode_block_files = real
+        generic_codec._decode_parts, generic_codec._file_plan = real_parts, real_plan
 
 
 def _file_direct_prune(reads, n_reads: int) -> tuple[bool, str, list]:
     """(ok, one summary line per read, [(kept, encoded) part_id sets per
-    read]): the query started ``n_reads`` file-direct block reads; every
-    entry of each read reads through a driver-planned, non-empty
-    ``part_id in [...]`` filter; and no decode plan shuffles, joins,
-    groups or scans cached blocks."""
+    read]): the query started ``n_reads`` pruned block reads; every entry
+    of each read reads through a driver-planned, non-empty ``part_id in
+    [...]`` filter; and no decode job shuffles, joins, groups or scans
+    cached blocks (a read decoded on the driver runs no job)."""
+    from pyspark.sql import DataFrame
+
     from parquet_python_spark.engine import _block_index, list_input_files
 
     ok = len(reads) == n_reads
     lines, parts = [], []
-    for i, (plan, df) in enumerate(reads):
+    for i, (plan, out) in enumerate(reads):
         kept: set = set()
         for _, where in plan:
             head = (where or [None])[0]
@@ -69,7 +77,8 @@ def _file_direct_prune(reads, n_reads: int) -> tuple[bool, str, list]:
             for pid in _block_index(f)[2]
         }
         parts.append((kept, encoded))
-        p = _plan(df)
+        job = isinstance(out, DataFrame)
+        p = _plan(out) if job else ""
         ok = ok and bool(plan) and not any(
             n in p for n in (
                 "Exchange", "Join", "FlatMapGroupsInArrow", "InMemoryTableScan"
@@ -77,8 +86,9 @@ def _file_direct_prune(reads, n_reads: int) -> tuple[bool, str, list]:
         )
         filters = "; ".join(str(where) for _, where in plan)
         lines.append(
-            f"block read {i}: {len(plan)} file(s), parts kept {len(kept)} "
-            f"of {len(encoded)}: {filters}"
+            f"block read {i} ({'Spark job' if job else 'driver process'}): "
+            f"{len(plan)} file(s), parts kept {len(kept)} of {len(encoded)}: "
+            f"{filters}"
         )
     return ok, "\n".join(lines), parts
 
@@ -285,8 +295,9 @@ def main() -> None:
 
     # 22. range + bloom point-lookup prune on block files: each of the
     # four round-trips reads only the parts the driver kept (a strict
-    # subset of those encoded) through a part_id filter on the files, and
-    # no decode shuffles, joins, groups or scans cached blocks
+    # subset of those encoded) through a part_id filter on the files,
+    # whether it decodes in the driver process or in a Spark job, and no
+    # decode job shuffles, joins, groups or scans cached blocks
     q, reads = _recording_block_reads(
         lambda: qs["rt_lineitem_pruned"](spark, sf_dir)
     )
@@ -322,7 +333,8 @@ def main() -> None:
 
     # 24. null-count prune (IS NULL / IS NOT NULL chunk skipping): same
     # shape as the stats prune — the keep set planned from the chunk null
-    # counts reaches each block file read as a part_id filter
+    # counts reaches each block file read, on the driver or in a job, as a
+    # part_id filter
     q, reads = _recording_block_reads(
         lambda: qs["rt_documents_nulls"](spark, sf_dir)
     )
