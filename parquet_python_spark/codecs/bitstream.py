@@ -198,8 +198,8 @@ def unpack_bits_lsb(
     # Mirrors the 64-value superblock packing, every width 1-64: `width`
     # uint64 words per 64 values, read as a zero-copy VIEW of the input
     # bytes (no pad-to-word-block copy pass); values extract with vector
-    # shifts straight into the result buffer.  Only the <64-value tail pays
-    # the padded 8-value-group path.
+    # shifts straight into the result buffer.  The <64-value tail is read
+    # at its bit offsets (gather_bits_lsb).
     mask = np.uint64((1 << width) - 1)
     off_u = np.uint64(offset & ((1 << 64) - 1)) if offset else None
     groups64 = count // 64
@@ -234,13 +234,10 @@ def unpack_bits_lsb(
                     oc[:, j] = v & mask  # store downcasts to narrow buffer
     tail_count = count - groups64 * 64
     if tail_count:
-        # tail's narrow-buffer flag: for the fused-gather path the buffer
-        # holds INDICES, so key it to the pack width, not the table value
-        # dtype (an int32 table with width > 31 must not truncate indices
-        # — unreachable while dict widths are <= 31, but latent otherwise)
-        tail = _unpack_groups8(
-            raw[need64:], width, tail_count, mask,
-            (width <= 31) if table is not None else final.itemsize == 4,
+        tail_bytes = (tail_count * width + 7) // 8
+        tail = gather_bits_lsb(
+            raw[need64 : need64 + tail_bytes], width,
+            np.arange(tail_count, dtype=np.int64) * width,
         )
         if table is not None:
             tail = table[tail]
@@ -248,30 +245,6 @@ def unpack_bits_lsb(
             tail = tail + off_u
         res[groups64 * 64 :] = tail
     return res if table is not None else res.view(final)
-
-
-def _unpack_groups8(
-    raw: np.ndarray, width: int, count: int, mask: np.uint64, small: bool
-) -> np.ndarray:
-    """Unpack < 64 values: pad each width-byte 8-value group to its word
-    block, then extract with vector shifts."""
-    groups = (count + 7) // 8
-    need = groups * width
-    if len(raw) < need:
-        raw = np.concatenate([raw, np.zeros(need - len(raw), dtype=np.uint8)])
-    n_words = (8 * width + 63) // 64
-    block = np.zeros((groups, n_words * 8), dtype=np.uint8)
-    block[:, :width] = raw[:need].reshape(groups, width)
-    W = block.view(np.uint64)
-    out = np.empty((groups, 8), dtype=np.uint32 if small else np.uint64)
-    for j in range(8):
-        bitpos = j * width
-        k, shift = bitpos >> 6, bitpos & 63
-        v = W[:, k] >> np.uint64(shift)
-        if shift and shift + width > 64:
-            v = v | (W[:, k + 1] << np.uint64(64 - shift))
-        out[:, j] = v & mask
-    return out.reshape(-1)[:count]
 
 
 def gather_bits_lsb(

@@ -577,6 +577,36 @@ def map_tasks(spark: SparkSession, tasks: list, run_task, schema) -> DataFrame:
     return out if tasks else out.limit(0)
 
 
+def _with_min_parallelism(df: DataFrame) -> DataFrame:
+    """Round-robin repartition up to the cluster's default parallelism when
+    the input yields FAR fewer splits (guide §2.5 input skew: one small or
+    unsplittable file serializes CPU-heavy per-row work on a handful of
+    tasks — measured ~2x on the single-file bench tables).  The threshold
+    is a quarter of the core count, not "any shortfall": the repartition
+    ships the full row payload, and the A/B measurement shows that cost
+    already exceeds the extra-parallelism gain once the scan supplies a
+    third of the cores (10-split input on 32 cores: +12% with the bump).
+    Scale-safe by construction: at real data sizes splits >> cores and
+    this is a no-op; the condition, not a constant, decides.
+
+    Only exchange-free plans are probed: an input that already shuffled
+    runs at the shuffle partition count (>= cores here), so the bump would
+    buy nothing — and under AQE, touching df.rdd on such a plan would
+    eagerly EXECUTE its shuffle stages at plan-build time just to read a
+    partition count, doubling the upstream work."""
+    sc = df.sparkSession.sparkContext
+    target = sc.defaultParallelism
+    try:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    except Exception:  # noqa: BLE001 - internal API drift: skip the bump
+        return df
+    if "Exchange" in plan:
+        return df
+    if df.rdd.getNumPartitions() * 4 <= target:
+        return df.repartition(target)
+    return df
+
+
 _HEAP_FROZEN = False
 
 
@@ -629,8 +659,8 @@ def _block_index(path: str) -> tuple:
     one block file, read once per file version (mtime, size): one row per
     chunk holding the _META_COLS the file has, about the cost of the
     footer read.  The layout proof (_block_files), the tokens zone-map
-    prune (_zone_map_keep) and every generic_codec pruned call on
-    file-direct blocks plan from these rows."""
+    prune (decode_blocks_files_pruned) and every generic_codec pruned call
+    on file-direct blocks plan from these rows."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
@@ -744,30 +774,6 @@ def _decode_block_files(
     return map_tasks(spark, plan, read, out_schema)
 
 
-def _zone_map_keep(meta: pa.Table, column: str, lo: int, hi: int) -> list[str]:
-    """Sorted part_ids of the blocks metadata ``meta`` (part_id, column,
-    stat_min, stat_max) that may hold a ``column`` value in [lo, hi]:
-    parts whose stats range intersects it, plus legacy parts with no
-    stats row for ``column``."""
-    import pyarrow.compute as pc
-
-    pids = meta.column("part_id")
-    with_stats = pc.and_(
-        pc.equal(meta.column("column"), column),
-        pc.is_valid(meta.column("stat_min")),
-    )
-    hit = pc.and_(
-        with_stats,
-        pc.and_(
-            pc.greater_equal(meta.column("stat_max"), lo),
-            pc.less_equal(meta.column("stat_min"), hi),
-        ),
-    )
-    keep = set(pc.filter(pids, hit).to_pylist())
-    legacy = set(pids.to_pylist()) - set(pc.filter(pids, with_stats).to_pylist())
-    return sorted(keep | legacy)
-
-
 def decode_blocks(blocks: DataFrame) -> DataFrame:
     """blocks DataFrame -> original tokens DataFrame (bit-identical rows).
 
@@ -789,7 +795,11 @@ def decode_blocks_files_pruned(
     ``tokens`` some token in [lo, hi].
 
     The driver plans the keep set from each file's cached zone-map rows
-    (_block_index), and tasks run only for files holding a kept part,
+    (_block_index) with the generic reader's int classifier
+    (generic_codec._range_keep: a bound that is not a number, or an int
+    outside int64, raises before any file is read; a part with no tokens
+    has no tokens statistics and is never kept, as none of its rows could
+    match), and tasks run only for files holding a kept part,
     each reading and decoding just those parts' rows: no payload byte of
     a pruned part is read.  The decode task tests the rows
     (_decode_part_table) and ships only the matching ones; no filter runs
@@ -799,8 +809,14 @@ def decode_blocks_files_pruned(
     """
     if column not in ("tokens", "n_tok"):
         raise ValueError(f"no block stats for column {column!r}")
+    from .operators.generic_codec import _parts, _range_keep
+
+    def keep(rows, _):
+        return sorted(_parts(rows, _range_keep("int", rows, column, lo, hi)[0]))
+
+    keep(_BLOCKS_ARROW_SCHEMA.empty_table(), None)  # bad bounds raise here
     return _decode_kept_parts(
-        spark, blocks_path, lambda rows, _: _zone_map_keep(rows, column, lo, hi),
+        spark, blocks_path, keep,
         lambda rows: _decode_part_table(rows, (column, lo, hi)),
     )
 

@@ -57,6 +57,7 @@ from ..codecs.arrow_io import (
 )
 from ..engine import _DECODE_COLS, _META_COLS, _block_files, _decode_block_files
 from ..engine import local_parquet_scan_files, map_tasks, part_runs, read_block_file
+from ..engine import _with_min_parallelism
 from ..session import session_tmpdir
 
 BLOCKS_SCHEMA = T.StructType(
@@ -421,58 +422,6 @@ def encode_df(
     (decode_df_pruned skips whole blocks).  Both are deterministic given
     the data; n_parts scales with the row count unless pinned.
     """
-    work, enc = _encode_plan(
-        df, key_col, col_kinds, n_parts, forced_codecs, partitioning, outer
-    )
-
-    def enc_group(tbl: pa.Table) -> pa.Table:
-        # single-arg wrapper: applyInArrow treats a two-arg function as
-        # (key, table), but enc's second arg is the fused-path part_id
-        return enc(tbl)
-
-    return work.groupBy("part_id").applyInArrow(enc_group, schema=BLOCKS_SCHEMA)
-
-
-def _is_sorted_by(tbl: pa.Table, key_col: str) -> bool:
-    """True when the chunk is already ascending-sorted on ``key_col`` (no
-    nulls): sort_by is stable, so its result on such input is the identity
-    permutation and the O(n log n) sort can be skipped — byte-identical
-    blocks either way.  Engine-written tables and most scan splits arrive
-    key-sorted, making this the common case; the check is one vectorized
-    comparison pass (~1% of the sort it replaces)."""
-    col = tbl.column(key_col)
-    if col.null_count:
-        return False  # sort_by moves nulls to the end: let it
-    if len(col) < 2:
-        return True
-    try:
-        arr = combined_chunks(col)
-        return bool(
-            pc.all(
-                pc.greater_equal(arr.slice(1), arr.slice(0, len(arr) - 1))
-            ).as_py()
-        )
-    except pa.ArrowException:  # non-comparable key type: let sort_by decide
-        return False
-
-
-def _encode_plan(
-    df: DataFrame,
-    key_col: str,
-    col_kinds: dict[str, str],
-    n_parts: int | None = None,
-    forced_codecs: dict[str, str] | None = None,
-    partitioning: str = "hash",
-    outer: str | None = None,
-    build_stats: bool = True,
-) -> tuple:
-    """(work DataFrame with part_id, per-group encode function) — the body
-    of encode_df, exposed so the fused round-trip can run encode+decode in
-    ONE Python task (no blocks exchange).  ``build_stats=False``
-    additionally skips every pruning artifact (chunk min/max, string
-    bounds, blooms): a fused round-trip discards the blocks table
-    immediately, so those bytes could never be consumed."""
-    forced_codecs = forced_codecs or {}
     cols = [key_col] + [c for c in col_kinds if c != key_col]
     if partitioning == "range":
         # one combined pass for bounds AND the row count plan_n_parts
@@ -521,29 +470,62 @@ def _encode_plan(
             F.crc32(F.coalesce(F.col(key_col).cast("string"), F.lit(""))),
             F.lit(n_parts),
         ).cast("int")
-    elif partitioning == "none":
-        # zero-shuffle mode (fused roundtrip): the caller supplies part ids
-        # to enc() directly, no part assignment column, no row-count job
-        part_expr = None
     else:
         raise ValueError(f"unknown partitioning {partitioning!r}")
-    work = df.select(*cols)
-    if part_expr is not None:
-        work = work.withColumn("part_id", part_expr)
+    work = df.select(*cols).withColumn("part_id", part_expr)
     # string blooms: hash JVM-side (xxhash64, vectorized in codegen) so the
     # encode UDF never runs per-row Python over string bytes; the hidden
     # column rides next to its string column and is dropped from the blocks
-    str_bloom_cols = (
-        [c for c, k in col_kinds.items() if k == "str"] if build_stats else []
+    for c, kind in col_kinds.items():
+        if kind == "str":
+            work = work.withColumn(f"__bh_{c}", F.xxhash64(F.col(c)))
+    enc = _chunk_encoder(key_col, col_kinds, forced_codecs, outer)
+    return work.groupBy("part_id").applyInArrow(
+        lambda key, tbl: enc(tbl, key[0].as_py()), schema=BLOCKS_SCHEMA
     )
-    for c in str_bloom_cols:
-        work = work.withColumn(f"__bh_{c}", F.xxhash64(F.col(c)))
 
-    def enc(tbl: pa.Table, part_id: int | None = None) -> pa.Table:
+
+def _is_sorted_by(tbl: pa.Table, key_col: str) -> bool:
+    """True when the chunk is already ascending-sorted on ``key_col`` (no
+    nulls): sort_by is stable, so its result on such input is the identity
+    permutation and the O(n log n) sort can be skipped — byte-identical
+    blocks either way.  Engine-written tables and most scan splits arrive
+    key-sorted, making this the common case; the check is one vectorized
+    comparison pass (~1% of the sort it replaces)."""
+    col = tbl.column(key_col)
+    if col.null_count:
+        return False  # sort_by moves nulls to the end: let it
+    if len(col) < 2:
+        return True
+    try:
+        arr = combined_chunks(col)
+        return bool(
+            pc.all(
+                pc.greater_equal(arr.slice(1), arr.slice(0, len(arr) - 1))
+            ).as_py()
+        )
+    except pa.ArrowException:  # non-comparable key type: let sort_by decide
+        return False
+
+
+def _chunk_encoder(
+    key_col: str,
+    col_kinds: dict[str, str],
+    forced_codecs: dict[str, str] | None = None,
+    outer: str | None = None,
+    build_stats: bool = True,
+):
+    """``enc(tbl, part_id)``: one chunk of rows -> its blocks table, the
+    one chunk encoder of encode_df (per part_id group) and of the fused
+    round-trip (per chunk, encode and decode in one Python task).
+    ``build_stats=False`` skips every pruning artifact (chunk min/max,
+    string bounds, blooms): a fused round-trip discards the blocks table
+    immediately, so those bytes could never be consumed."""
+    forced_codecs = forced_codecs or {}
+
+    def enc(tbl: pa.Table, part_id: int) -> pa.Table:
         if not _is_sorted_by(tbl, key_col):
             tbl = tbl.sort_by(key_col)
-        if part_id is None:
-            part_id = tbl.column("part_id")[0].as_py()
         n_rows = tbl.num_rows
         rows = []
 
@@ -628,7 +610,7 @@ def _encode_plan(
                     n_nulls=arr.null_count)
         return pa.Table.from_pylist(rows, schema=_BLOCKS_ARROW)
 
-    return work, enc
+    return enc
 
 
 def decode_df(
@@ -898,9 +880,10 @@ def _range_keep(
 ) -> tuple:
     """(overlap mask, row-predicate tuples — a union, see _pred_keep —,
     containment mask) over the ``meta`` rows for a range predicate — the
-    kind dispatch shared by the pruned decodes AND the metadata
-    aggregates, so the bound normalization (numpy scalars, ±0 widening,
-    NaN bounds, truncated string semantics) lives in exactly one place.
+    kind dispatch shared by the pruned decodes, the metadata count and
+    the tokens zone-map prune (engine.decode_blocks_files_pruned), so the
+    bound normalization (numpy scalars, ±0 widening, NaN bounds, truncated
+    string semantics) lives in exactly one place.
     Containment = every present value provably in [lo, hi] (an unbounded
     truncated string upper never claims it)."""
     col_rows = pc.equal(meta.column("column"), pred_col)
@@ -1327,8 +1310,8 @@ def count_filtered_meta(
 
 def _literal_row(blocks: DataFrame, **values: int | None) -> DataFrame:
     """A one-row DataFrame of long columns holding an answer the driver
-    already has, from the metadata and, for count and min/max, from a
-    boundary decode run at call time: an inline VALUES table is a local
+    already has, from the metadata and from a boundary decode run at
+    call time (count_filtered_meta): an inline VALUES table is a local
     relation, so collecting it runs no Spark job."""
     cells = ", ".join(f"CAST(:{c} AS BIGINT)" for c in values)
     return blocks.sparkSession.sql(
@@ -1371,8 +1354,8 @@ def _aggregate(decoded: DataFrame, *aggs) -> dict:
     ``decoded``, in one Spark job with no exchange: the per-task partial
     aggregates merge through an Observation's accumulators, where a
     DataFrame ``agg`` would shuffle them to one partition (one more job
-    under adaptive execution).  The metadata count and min/max take this
-    job for a boundary decode too large for the driver (_decode_parts)."""
+    under adaptive execution).  count_filtered_meta takes this job for a
+    boundary decode too large for the driver (_decode_parts)."""
     from pyspark.sql import Observation
 
     obs = Observation()
@@ -1535,59 +1518,6 @@ def _kept_guess(chunks: dict, groups: list, col_kinds: dict[str, str]) -> float:
     )
 
 
-def minmax_filtered_meta(
-    blocks: DataFrame,
-    col_kinds: dict[str, str],
-    pred_col: str,
-    lo: int,
-    hi: int,
-) -> DataFrame:
-    """MIN(pred_col), MAX(pred_col) WHERE pred_col BETWEEN lo AND hi,
-    metadata-first: a chunk with ``stat_min >= lo`` contributes its exact
-    stat_min as a min candidate WITHOUT decoding — stat_min is a real
-    value present in the chunk and already inside the bounds (the
-    symmetric argument gives stat_max as a max candidate when
-    ``stat_max <= hi``).  Only chunks straddling a bound (some values
-    below lo or above hi) decode to exactly their in-range values, when
-    this function is CALLED, not when the result is collected: in the
-    driver process when the decode is small (_decode_parts), else in
-    one exchange-free Spark job (_aggregate).  Returns a 1-row DataFrame
-    ``(mn, mx)`` holding the already-computed answer as a literal row
-    (_literal_row) — SQL semantics: NULL when nothing matches.
-
-    Int kinds only, loudly: float stats live in the order-preserving
-    bits space and Spark has no longBitsToDouble to map a metadata
-    winner back; truncated string bounds are prefixes/successors, not
-    attainable values.  Both take the decode path via roundtrip_filtered
-    instead."""
-    kind = col_kinds.get(pred_col)
-    if kind not in ("int", "int96_ts"):
-        raise ValueError(
-            f"pred_col {pred_col!r} has kind {kind!r}; "
-            "metadata min/max needs an int or int96_ts column"
-        )
-    files, meta = _chunk_meta(blocks, col_kinds, [pred_col])
-    overlap, row_preds, contained = _range_keep(kind, meta, pred_col, lo, hi)
-    smin, smax = meta.column("stat_min"), meta.column("stat_max")
-    mn = pc.min(pc.filter(smin, _all(overlap, pc.greater_equal(smin, lo))))
-    mx = pc.max(pc.filter(smax, _all(overlap, pc.less_equal(smax, hi))))
-    mn, mx = mn.as_py(), mx.as_py()
-    # chunks straddling a bound (overlapping but not contained — the SAME
-    # classifier count_filtered_meta uses) decode to their in-range
-    # values, whose extremes are exact
-    straddle = _parts(meta, pc.and_kleene(overlap, pc.invert(contained)))
-    if straddle:
-        got = _decode_col(blocks, files, pred_col, kind, straddle, [row_preds])
-        got = (
-            _aggregate(got, F.min(pred_col).alias("min"), F.max(pred_col).alias("max"))
-            if isinstance(got, DataFrame) else pc.min_max(got.column(pred_col)).as_py()
-        )
-        # an empty side (None) never masks the other
-        mn = min((v for v in (mn, got["min"]) if v is not None), default=None)
-        mx = max((v for v in (mx, got["max"]) if v is not None), default=None)
-    return _literal_row(blocks, mn=mn, mx=mx)
-
-
 def topk_filtered_meta(
     blocks: DataFrame,
     col_kinds: dict[str, str],
@@ -1655,29 +1585,6 @@ def topk_filtered_meta(
     )
     # createDataFrame of an Arrow table is a local relation
     return blocks.sparkSession.createDataFrame(top.slice(0, k), _col_schema(col, kind))
-
-
-def count_null_meta(
-    blocks: DataFrame,
-    col_kinds: dict[str, str],
-    pred_col: str,
-    want_null: bool,
-) -> DataFrame:
-    """COUNT(*) WHERE pred_col IS [NOT] NULL from metadata ALONE: the
-    per-chunk null counts are exact, so the answer is sum(n_nulls) (or
-    sum(n_rows - n_nulls)) over the column's chunk rows — zero payloads
-    read at ANY selectivity, the degenerate-best case of statistics-only
-    evaluation.  Returns a 1-row DataFrame (``cnt`` long)."""
-    kind = col_kinds.get(pred_col)
-    if kind is None or kind in _LIST_KINDS:
-        raise ValueError(
-            f"pred_col {pred_col!r} has kind {kind!r}; "
-            "null counting needs a scalar column"
-        )
-    _, meta = _chunk_meta(blocks, col_kinds, [pred_col])
-    nulls = pc.sum(meta.column("n_nulls")).as_py() or 0
-    rows = pc.sum(meta.column("n_rows")).as_py() or 0
-    return _literal_row(blocks, cnt=nulls if want_null else rows - nulls)
 
 
 # file-direct fast-path bounds: footers are read on the driver (one open per
@@ -1838,10 +1745,7 @@ def roundtrip(
     in_schema = df.select(*cols).schema
     out_schema = _arrow_safe_schema(in_schema, col_kinds)
     dec = _decode_fn(col_kinds, out_schema)
-    _, enc = _encode_plan(
-        df, key_col, col_kinds, None, forced_codecs,
-        partitioning="none", outer=outer, build_stats=False,
-    )
+    enc = _chunk_encoder(key_col, col_kinds, forced_codecs, outer, build_stats=False)
     # enc sorts each chunk by key_col, so the key must ride along even
     # when the caller did not ask for it in the output columns
     sel = ([key_col] if key_col not in col_kinds else []) + cols
@@ -1871,11 +1775,9 @@ def roundtrip(
         decoded = map_tasks(df.sparkSession, tasks, rt_files, out_schema)
     else:
         # few-split scans would serialize the whole encode on a handful
-        # of tasks; the shared conditional bump (pipeline_ops)
-        # round-robins up to the core count only when the scan supplies
-        # under a quarter of it — a no-op at real data sizes
-        from .pipeline_ops import _with_min_parallelism
-
+        # of tasks; the shared conditional bump (engine) round-robins up
+        # to the core count only when the scan supplies under a quarter of
+        # it — a no-op at real data sizes
         df = _with_min_parallelism(df)
 
         def enc_dec_stream(batches):

@@ -15,35 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-
-def _with_min_parallelism(df: DataFrame) -> DataFrame:
-    """Round-robin repartition up to the cluster's default parallelism when
-    the input yields FAR fewer splits (guide §2.5 input skew: one small or
-    unsplittable file serializes CPU-heavy per-row work on a handful of
-    tasks — measured ~2x on the single-file bench tables).  The threshold
-    is a quarter of the core count, not "any shortfall": the repartition
-    ships the full row payload, and the A/B measurement shows that cost
-    already exceeds the extra-parallelism gain once the scan supplies a
-    third of the cores (10-split input on 32 cores: +12% with the bump).
-    Scale-safe by construction: at real data sizes splits >> cores and
-    this is a no-op; the condition, not a constant, decides.
-
-    Only exchange-free plans are probed: an input that already shuffled
-    runs at the shuffle partition count (>= cores here), so the bump would
-    buy nothing — and under AQE, touching df.rdd on such a plan would
-    eagerly EXECUTE its shuffle stages at plan-build time just to read a
-    partition count, doubling the upstream work (round-6 review)."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    try:
-        plan = df._jdf.queryExecution().executedPlan().toString()
-    except Exception:  # noqa: BLE001 - internal API drift: skip the bump
-        return df
-    if "Exchange" in plan:
-        return df
-    if df.rdd.getNumPartitions() * 4 <= target:
-        return df.repartition(target)
-    return df
+from ..engine import _with_min_parallelism
 
 
 # ------------------------------------------------------------ exact dedup
@@ -1484,88 +1456,6 @@ def ann_ivf_oracle_sql(
         f"ORDER BY list_cosine_similarity(a.embedding, qv.v) DESC, a.vec_id "
         f"LIMIT {k}"
     )
-
-
-def ann_index_write(
-    emb: DataFrame, path: str, n_planes: int = 8
-) -> None:
-    """Materialize the LSH index: one pass computes each vector's bucket
-    (exact-integer ternary planes, seed 42 — the same family
-    ann_lsh_bucketed_topk uses) and writes the table PARTITIONED BY bucket.
-
-    This is the persisted-index half of the ANN story: the one-shot
-    operators recompute buckets per query (full-scan assignment pass);
-    repeated queries against a stored index skip that entirely — the
-    bucket partition column turns the probe set into PartitionFilters, so
-    non-probed buckets are never even listed, let alone read (asserted on
-    the physical plan in tests/test_pipeline_extras.py).
-    ann_ivf_index_write below is the same pattern for the IVF family."""
-    first = emb.select(F.size("embedding").alias("d")).first()
-    dim = int(first["d"]) if first else 0
-    planes = _rademacher_planes(n_planes, dim, seed=42)
-    q = _quantize_expr()
-    emb.withColumn("bucket", _bucket_expr(q, planes)).write.mode(
-        "overwrite"
-    ).partitionBy("bucket").parquet(path)
-
-
-def ann_ivf_index_write(
-    emb: DataFrame,
-    path: str,
-    n_clusters: int = 16,
-    centroids: np.ndarray | None = None,
-) -> np.ndarray:
-    """Materialize the IVF index (the twin ann_index_write's docstring
-    promises): assign every vector to its integer-grid cluster ONCE and
-    write the table PARTITIONED BY cluster.  Returns the (quantized)
-    centroid matrix — the query-time half needs only this tiny array, not
-    the table.  Repeated queries then prune to the probed clusters via
-    PartitionFilters: non-probed clusters are never listed, let alone
-    scanned or assigned."""
-    if centroids is None:
-        centroids = train_ivf_centroids(emb, n_clusters)
-    cq = quantize_centroids(np.asarray(centroids, dtype=np.float64))
-    assign = _ivf_assign_udf(cq)
-    emb.withColumn("cluster", assign(F.col("embedding"))).write.mode(
-        "overwrite"
-    ).partitionBy("cluster").parquet(path)
-    return cq
-
-
-def ann_ivf_topk_indexed(
-    spark,
-    path: str,
-    cq: np.ndarray,
-    query_vec: list[float],
-    k: int = 10,
-    n_probe: int = 4,
-) -> DataFrame:
-    """Top-k against a persisted ann_ivf_index_write index: the probe set
-    comes from the centroid matrix alone (driver-side, exact int64), and
-    the scan prunes to those cluster partitions — no assignment UDF over
-    the table, no full scan, zero Python in the plan."""
-    probes = ivf_probes(cq, query_vec, n_probe)
-    idx = spark.read.parquet(path)
-    candidates = idx.filter(F.col("cluster").isin(probes)).drop("cluster")
-    return ann_brute_force_topk(candidates, query_vec, k)
-
-
-def ann_lsh_topk_indexed(
-    spark, path: str, query_vec: list[float], k: int = 10, n_planes: int = 8
-) -> DataFrame:
-    """Top-k against a persisted ann_index_write index: the probe set
-    (query bucket + Hamming<=1 neighbors) is computed driver-side from the
-    query vector alone, and the scan prunes to those partitions — no
-    bucket UDF/expression over the table, no full scan."""
-    planes = _rademacher_planes(n_planes, len(query_vec), seed=42)
-    qint = _quantize_np(query_vec)
-    q_bucket = int(
-        (((planes @ qint) >= 0).astype(np.int64) << np.arange(n_planes)).sum()
-    )
-    wanted = [q_bucket] + [q_bucket ^ (1 << i) for i in range(n_planes)]
-    idx = spark.read.parquet(path)
-    candidates = idx.filter(F.col("bucket").isin(wanted)).drop("bucket")
-    return ann_brute_force_topk(candidates, query_vec, k)
 
 
 def ann_lsh_bucketed_topk(

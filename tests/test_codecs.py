@@ -177,8 +177,10 @@ def test_pack_bits_wide_widths_reference_oracle(width, count):
     (70000 values span three chunks): the packed bytes read back through
     the reference's bit-packed-run reader, int32 input packs the same
     bytes as uint64, and unpack inverts them with and without the fused
-    frame-of-reference offset.  gather_bits_lsb reads the values at any
-    positions, the first and last included, without unpacking."""
+    frame-of-reference offset, into int32 at widths <= 31 and through a
+    fused table gather at widths <= 12 (the <64-value tail included).
+    gather_bits_lsb reads the values at any positions, the first and last
+    included, without unpacking."""
     rng = np.random.default_rng(width * 1000 + count)
     top = np.uint64((1 << width) - 1)
     vals = rng.integers(0, top, count, dtype=np.uint64, endpoint=True)
@@ -204,6 +206,14 @@ def test_pack_bits_wide_widths_reference_oracle(width, count):
     out = unpack_bits_lsb(packed, width, count, offset=offset)
     want = vals + np.uint64(offset & ((1 << 64) - 1))  # wraps mod 2^64
     np.testing.assert_array_equal(out.view(np.uint64), want)
+    if width <= 31:
+        out = unpack_bits_lsb(packed, width, count, out_dtype=np.int32)
+        assert out.dtype == np.int32
+        np.testing.assert_array_equal(out, vals.astype(np.int32))
+    if width <= 12:
+        table = np.arange(1 << width, dtype=np.int64) * 3 - 5
+        out = unpack_bits_lsb(packed, width, count, table=table)
+        np.testing.assert_array_equal(out, table[vals])
     pos = np.unique(np.r_[rng.integers(0, count, 50), 0, count - 1])
     np.testing.assert_array_equal(gather_bits_lsb(packed, width, pos * width), vals[pos])
 

@@ -425,18 +425,32 @@ def test_decode_files_pruned_rows_exact_in_task(
 ):
     """The decode tasks return exactly the rows of a plain Spark filter of
     the input, on token values and on n_tok, with no Filter after them in
-    the plan; a row with no tokens matches no token range.  A column
-    without block stats raises before any index or file is read."""
+    the plan; a row with no tokens matches no token range, and neither
+    does a part whose rows all have none (it has no tokens statistics).
+    A column without block stats, a bound that is not a number and an int
+    bound outside int64 raise before any index or file is read."""
+    import pyarrow.parquet as pq
+
     from parquet_python_spark import engine
     from parquet_python_spark.engine import decode_blocks_files_pruned
 
     source = tokens_df.first()["source"]
-    empty = spark.createDataFrame([("empty-0", [], 0, source)], tokens_df.schema)
+    # "empty-1" is the one row of its source: a part with zero tokens
+    empty = spark.createDataFrame(
+        [("empty-0", [], 0, source), ("empty-1", [], 0, "zz-no-tokens")],
+        tokens_df.schema,
+    )
+    empties = {"empty-0", "empty-1"}
     inp = str(tmp_path / "inp")
     tokens_df.unionByName(empty).coalesce(2).write.parquet(inp)
     src = spark.read.parquet(inp)
     blocks_dir = str(tmp_path / "blocks")
     encode_table_files_native(spark, inp, blocks_dir, snapshot_id="t").count()
+    meta = pq.read_table(blocks_dir, columns=["part_id", "column", "stat_min"])
+    assert [
+        r["stat_min"] for r in meta.to_pylist()
+        if r["column"] == "tokens" and r["part_id"].startswith("zz-no-tokens#")
+    ] == [None]
 
     cases = [
         ("tokens", 0, 3, F.exists("tokens", lambda t: (t >= 0) & (t <= 3))),
@@ -450,8 +464,10 @@ def test_decode_files_pruned_rows_exact_in_task(
         )
         assert "Filter" not in plan, plan
         got = _as_sorted_rows(dec)
-        assert got == want and 0 < len(want) < N_ROWS + 1
-        assert any(r[0] == "empty-0" for r in got) == (column == "n_tok")
+        assert got == want and 0 < len(want) < N_ROWS + 2
+        assert {r[0] for r in got} & empties == (
+            empties if column == "n_tok" else set()
+        )
 
     def no_read(*args, **kwargs):
         raise AssertionError("read before the column check")
@@ -461,6 +477,10 @@ def test_decode_files_pruned_rows_exact_in_task(
     monkeypatch.setattr(engine, "_repair_compaction", no_read)
     with pytest.raises(ValueError, match="no block stats"):
         decode_blocks_files_pruned(spark, blocks_dir, "doc_id", 0, 1)
+    with pytest.raises(ValueError, match="numeric bounds"):
+        decode_blocks_files_pruned(spark, blocks_dir, "tokens", "0", "9")
+    with pytest.raises(ValueError, match="outside the int64 range"):
+        decode_blocks_files_pruned(spark, blocks_dir, "n_tok", 0, 2**63)
 
 
 def test_decode_pruned_empty_range(spark, clustered_blocks):

@@ -320,10 +320,7 @@ def test_encode_sort_skip_byte_identical(spark):
 
     li = _t(spark, "lineitem")
     kinds = {"l_orderkey": "int", "l_partkey": "int", "l_quantity": "float64"}
-    _, enc = gc._encode_plan(
-        li, "l_orderkey", kinds, None, None,
-        partitioning="none", build_stats=False,
-    )
+    enc = gc._chunk_encoder("l_orderkey", kinds, build_stats=False)
     pdf = li.select(*kinds).toPandas()
     t_sorted = pa.Table.from_pandas(
         pdf.sort_values("l_orderkey", kind="mergesort"), preserve_index=False

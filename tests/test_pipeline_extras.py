@@ -242,77 +242,6 @@ def test_stratified_sample_null_key(spark):
     assert a == b
 
 
-def test_ann_indexed_matches_and_prunes(spark, tmp_path):
-    """Persisted LSH index: same top-k as the one-shot operator, and the
-    second query's plan prunes on the bucket PARTITION column (no
-    full-table bucket computation — PartitionFilters carries the probe
-    set)."""
-    from parquet_python_spark.operators.pipeline_ops import (
-        ann_index_write,
-        ann_lsh_bucketed_topk,
-        ann_lsh_topk_indexed,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    qvec = [float(x) for x in emb.orderBy("vec_id").limit(1).collect()[0]["embedding"]]
-    path = str(tmp_path / "ann_idx")
-    ann_index_write(emb, path, n_planes=8)
-
-    direct = [
-        r["vec_id"]
-        for r in ann_lsh_bucketed_topk(emb, qvec, k=10).select("vec_id").collect()
-    ]
-    indexed_df = ann_lsh_topk_indexed(spark, path, qvec, k=10)
-    indexed = [r["vec_id"] for r in indexed_df.select("vec_id").collect()]
-    assert indexed == direct
-
-    plan = indexed_df._sc._jvm.PythonSQLUtils.explainString(
-        indexed_df._jdf.queryExecution(), "formatted"
-    )
-    assert "PartitionFilters" in plan and "bucket" in plan
-    # the probe filter prunes at the scan: no Python eval, and the scan's
-    # partition filter carries the bucket IN-list (full-table assignment
-    # pass eliminated)
-    assert "EvalPython" not in plan
-    assert "bucket#" in plan or "bucket IN" in plan
-
-
-def test_ann_ivf_indexed_matches_and_prunes(spark, tmp_path):
-    """Persisted IVF index (round 4, parity with the LSH index): same
-    top-k as the one-shot ann_ivf_topk, probe set pruned at the scan via
-    the cluster PARTITION column, zero Python in the query-time plan."""
-    from parquet_python_spark.operators.pipeline_ops import (
-        ann_ivf_index_write,
-        ann_ivf_topk,
-        ann_ivf_topk_indexed,
-        train_ivf_centroids,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    qvec = [float(x) for x in emb.orderBy("vec_id").limit(1).collect()[0]["embedding"]]
-    path = str(tmp_path / "ivf_idx")
-    centroids = train_ivf_centroids(emb, n_clusters=16)
-    cq = ann_ivf_index_write(emb, path, centroids=centroids)
-
-    direct = [
-        r["vec_id"]
-        for r in ann_ivf_topk(emb, qvec, k=10, centroids=centroids)
-        .select("vec_id")
-        .collect()
-    ]
-    indexed_df = ann_ivf_topk_indexed(spark, path, cq, qvec, k=10)
-    indexed = [r["vec_id"] for r in indexed_df.select("vec_id").collect()]
-    assert indexed == direct and len(indexed) == 10
-
-    plan = indexed_df._sc._jvm.PythonSQLUtils.explainString(
-        indexed_df._jdf.queryExecution(), "formatted"
-    )
-    # probes land in PartitionFilters (non-probed clusters never listed);
-    # the assignment UDF is gone from the query-time plan entirely
-    assert "PartitionFilters" in plan and "cluster" in plan
-    assert "EvalPython" not in plan
-
-
 def test_gopher_quality_exact_python_oracle(spark):
     """gopher_quality vs an exact per-doc python re-derivation, including
     the top-2-gram tie-break (max count, then lexicographically largest

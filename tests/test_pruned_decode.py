@@ -1332,95 +1332,6 @@ def test_count_filtered_meta_exact_and_metadata_only(spark, written):
         count_filtered_meta(blocks, {**kinds, "zz": "int"}, "zz", 0, 1)
 
 
-def test_count_null_meta_zero_decode(spark, written):
-    """IS [NOT] NULL counting is pure metadata: exact at any selectivity,
-    and structurally payload-free (no decode function in its source)."""
-    import inspect
-
-    from parquet_python_spark.operators.generic_codec import (
-        count_null_meta,
-        encode_df,
-    )
-
-    df = spark.range(10_000).select(
-        F.col("id").alias("k"),
-        F.when(F.col("id") % 4 == 0, None).otherwise(F.col("id")).alias("w"),
-    )
-    kinds = {"k": "int", "w": "int"}
-    blocks = written(encode_df(df, "k", kinds, n_parts=4, partitioning="range"))
-    assert count_null_meta(blocks, kinds, "w", True).first()["cnt"] == 2_500
-    assert count_null_meta(blocks, kinds, "w", False).first()["cnt"] == 7_500
-    assert count_null_meta(blocks, kinds, "k", True).first()["cnt"] == 0
-    import ast
-
-    # structurally payload-free: no decode call anywhere in the function
-    # body (docstring text excluded)
-    tree = ast.parse(inspect.getsource(count_null_meta))
-    calls = {
-        n.func.id if isinstance(n.func, ast.Name) else getattr(n.func, "attr", "")
-        for n in ast.walk(tree)
-        if isinstance(n, ast.Call)
-    }
-    assert not any("decode" in c or "payload" in c for c in calls), calls
-    with pytest.raises(ValueError, match="scalar column"):
-        count_null_meta(blocks, {"a": "int_list"}, "a", True)
-    with pytest.raises(ValueError, match="no chunks"):
-        count_null_meta(blocks, {"zz": "int"}, "zz", True)
-
-
-def test_minmax_filtered_meta_exact(spark, written):
-    """Metadata-first MIN/MAX: candidates come from chunk stats without
-    decoding; straddling chunks decode; results match the row-level truth
-    across boundary shapes, nulls, and the empty predicate."""
-    from parquet_python_spark.operators.generic_codec import (
-        encode_df,
-        minmax_filtered_meta,
-    )
-
-    n = 40_000
-    df = spark.range(n).select(
-        (F.col("id") * 3).alias("k"),  # stride-3 values: bounds often miss
-        F.when(F.col("id") % 5 == 0, None).otherwise(F.col("id") * 3).alias("w"),
-    )
-    kinds = {"k": "int", "w": "int"}
-    blocks = written(encode_df(df, "k", kinds, n_parts=8, partitioning="range"))
-
-    for col in ("k", "w"):
-        for lo, hi in [
-            (7_501, 62_499),   # straddles two chunks, bounds off-stride
-            (0, 10**9),        # contains everything (pure metadata)
-            (29_999, 30_001),  # single matching value
-            (-50, -10),        # empty
-            (7_500, 7_500),    # point hit on a value
-        ]:
-            got = minmax_filtered_meta(blocks, kinds, col, lo, hi).first()
-            exp = (
-                df.filter((F.col(col) >= lo) & (F.col(col) <= hi))
-                .agg(F.min(col).alias("mn"), F.max(col).alias("mx"))
-                .first()
-            )
-            assert (got["mn"], got["mx"]) == (exp["mn"], exp["mx"]), (
-                col, lo, hi, got, exp,
-            )
-    # metadata evidence: for the all-containing predicate the STRADDLE
-    # set (the function's decode branch) is empty — the same classifier
-    # the function uses, so a regression that decodes contained chunks
-    # would surface here
-    import pyarrow.compute as pc
-
-    from parquet_python_spark.operators.generic_codec import (
-        _chunk_meta,
-        _range_keep,
-    )
-
-    _, meta = _chunk_meta(blocks, kinds, ["k"])
-    overlap, _, contained = _range_keep("int", meta, "k", 0, 10**9)
-    straddle = pc.and_kleene(overlap, pc.invert(contained))
-    assert meta.num_rows == 8 and not pc.any(straddle).as_py()
-    with pytest.raises(ValueError, match="metadata min/max"):
-        minmax_filtered_meta(blocks, {"k": "float64"}, "k", 0, 1)
-
-
 def test_topk_filtered_meta_exact_and_pruned(spark, written):
     """Zone-map top-k pushdown: exact value multisets both directions,
     under nulls, ties, k > table, and hash layout; and the keep set is a
@@ -1486,8 +1397,8 @@ def test_topk_filtered_meta_exact_and_pruned(spark, written):
 def test_metadata_aggregates_driver_path_equals_job_path(
     spark, tmp_path, monkeypatch
 ):
-    """On file-direct blocks a small boundary decode of count, min/max and
-    top-k runs in the driver process; its answers equal the Spark job
+    """On file-direct blocks a small boundary decode of count and top-k
+    runs in the driver process; its answers equal the Spark job
     path's (forced by a budget of 0 rows) and a plain Spark filter's, on
     an int and an int96_ts column: both nullable, each with an all-null
     chunk and ties; a boundary chunk where no row matches; predicates
@@ -1551,8 +1462,6 @@ def test_metadata_aggregates_driver_path_equals_job_path(
         for col, rs in ranges.items():
             for lo, hi in rs:
                 out.append(gc.count_filtered_meta(blocks, kinds, col, lo, hi).first()["cnt"])
-                row = gc.minmax_filtered_meta(blocks, kinds, col, lo, hi).first()
-                out.append((row["mn"], row["mx"]))
             for kk in (1, 5, 7, 999, n + 5):
                 for asc in (True, False):
                     top = gc.topk_filtered_meta(blocks, kinds, col, kk, asc).collect()
@@ -1569,8 +1478,7 @@ def test_metadata_aggregates_driver_path_equals_job_path(
     want = []
     for col, rs in ranges.items():
         for lo, hi in rs:
-            sel = [v for v in present[col] if lo <= v <= hi]
-            want += [len(sel), (min(sel, default=None), max(sel, default=None))]
+            want.append(sum(lo <= v <= hi for v in present[col]))
         for kk in (1, 5, 7, 999, n + 5):
             want += [present[col][:kk], present[col][::-1][:kk]]
     assert driver == want
@@ -1651,21 +1559,19 @@ def _jobs_of(spark, group, call):
 
 def test_pruned_calls_spark_job_counts(spark, tmp_path, monkeypatch):
     """Every pruned call plans from the cached block index: a row lookup
-    (range or eq) with few matching rows, a top-k, and a count or min/max
-    with boundary chunks decode in the driver process and run no Spark
-    job, as do a count or min/max answered from metadata alone and a null
-    count.  With a driver-decode budget of 0 rows each of them runs
+    (range or eq) with few matching rows, a top-k, and a count with
+    boundary chunks decode in the driver process and run no Spark job, as
+    does a count answered from metadata alone.  With a driver-decode
+    budget of 0 rows each of them runs
     exactly one Spark job, the exchange-free decode; so does a range
     lookup whose matching rows are too many to gather on the driver."""
     import parquet_python_spark.operators.generic_codec as gc
     from parquet_python_spark.operators.generic_codec import (
         _arrow_safe_schema,
         count_filtered_meta,
-        count_null_meta,
         decode_df_pruned,
         decode_df_pruned_eq,
         encode_df,
-        minmax_filtered_meta,
         topk_filtered_meta,
     )
 
@@ -1712,24 +1618,12 @@ def test_pruned_calls_spark_job_counts(spark, tmp_path, monkeypatch):
             blocks, kinds, "k", 2_500, 17_499
         ).first()["cnt"])
         assert cnt == 15_000
-        row = jobs("minmax" + sfx, want, lambda: minmax_filtered_meta(
-            blocks, kinds, "k", 2_500, 17_499
-        ).first())
-        assert (row["mn"], row["mx"]) == (2_500, 17_499)
     monkeypatch.undo()
     # [0, 19_999] contains every part: no boundary chunk decodes
     cnt = jobs("count-meta", 0, lambda: count_filtered_meta(
         blocks, kinds, "k", 0, 19_999
     ).first()["cnt"])
     assert cnt == 20_000
-    row = jobs("minmax-meta", 0, lambda: minmax_filtered_meta(
-        blocks, kinds, "k", 0, 19_999
-    ).first())
-    assert (row["mn"], row["mx"]) == (0, 19_999)
-    cnt = jobs("nulls", 0, lambda: count_null_meta(
-        blocks, kinds, "w", True
-    ).first()["cnt"])
-    assert cnt == 6_667
 
 
 def test_driver_lookup_equals_job_and_filter(spark, tmp_path, monkeypatch):
@@ -2555,7 +2449,6 @@ def test_file_direct_missing_pred_column_raises(spark, tmp_path):
         _block_files,
         _PLAN_SCHEMA,
         count_filtered_meta,
-        count_null_meta,
         decode_df_pruned,
         decode_df_pruned_multi,
         encode_df,
@@ -2578,8 +2471,6 @@ def test_file_direct_missing_pred_column_raises(spark, tmp_path):
         )
     with pytest.raises(ValueError, match="no chunks"):
         count_filtered_meta(blocks, wide, "zz", 0, 10)
-    with pytest.raises(ValueError, match="no chunks"):
-        count_null_meta(blocks, wide, "zz", True)
 
 
 def test_fresh_scan_beside_a_cached_one_stays_file_direct(spark, tmp_path):
@@ -2654,14 +2545,8 @@ _DECODERS = {
     "count_filtered_meta": lambda e, g, b, s: g.count_filtered_meta(
         b, _LM_KINDS, "k", 0, 10
     ),
-    "minmax_filtered_meta": lambda e, g, b, s: g.minmax_filtered_meta(
-        b, _LM_KINDS, "k", 0, 10
-    ),
     "topk_filtered_meta": lambda e, g, b, s: g.topk_filtered_meta(
         b, _LM_KINDS, "k", 3
-    ),
-    "count_null_meta": lambda e, g, b, s: g.count_null_meta(
-        b, _LM_KINDS, "w", True
     ),
 }
 
