@@ -58,29 +58,19 @@ def string_array_lens_blob(arr) -> tuple[np.ndarray, bytes]:
     return lens, blob
 
 
-def string_array_from_lens_blob(
-    lens: np.ndarray, blob: bytes, binary: bool = False, allow_large: bool = False
-) -> pa.Array:
+def string_array_from_lens_blob(lens: np.ndarray, blob: bytes) -> pa.Array:
     n = len(lens)
     # int64 cumsum first: a >=2 GiB blob must NOT silently wrap int32
     # offsets into corrupt strings
     offsets64 = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(lens, out=offsets64[1:])
     if offsets64[-1] >= 2**31:
-        if not allow_large:
-            raise ValueError(
-                "string chunk exceeds int32 offset range; increase n_parts"
-            )
-        return pa.Array.from_buffers(
-            pa.large_binary() if binary else pa.large_utf8(),
-            n,
-            [None, pa.py_buffer(offsets64.tobytes()), pa.py_buffer(blob)],
+        raise ValueError(
+            "string chunk exceeds int32 offset range; increase n_parts"
         )
     offsets = offsets64.astype(np.int32)
     return pa.Array.from_buffers(
-        pa.binary() if binary else pa.utf8(),
-        n,
-        [None, pa.py_buffer(offsets.tobytes()), pa.py_buffer(blob)],
+        pa.utf8(), n, [None, pa.py_buffer(offsets.tobytes()), pa.py_buffer(blob)]
     )
 
 

@@ -29,9 +29,9 @@ Both directions are vectorized, no per-value Python on any sized input:
 * decode: byte j of value i comes from the suffix of the latest row k <= i
   with prefix[k] <= j, so per front column j the source row is
   np.maximum.accumulate(where(prefix <= j, row, 0)) — one gather per
-  column, looped over max(prefix) columns (<= 64 for our own wire).
-  Foreign wire with a pathological front (> _DEC_VEC_CAP) falls back to an
-  exact per-row loop, loudly documented as the non-hot path.
+  column, looped over max(prefix) columns in blocks of PREFIX_CAP, so
+  the temporaries stay (n, 64) whatever the front width (one block for
+  our own wire).
 """
 
 from __future__ import annotations
@@ -49,14 +49,11 @@ __all__ = [
 ]
 
 PREFIX_CAP = 64
-_DEC_VEC_CAP = 512  # widest front the vectorized decoder materializes
 
 
-def common_prefix_lens(
-    lens: np.ndarray, blob: bytes | np.ndarray, cap: int = PREFIX_CAP
-) -> np.ndarray:
+def common_prefix_lens(lens: np.ndarray, blob: bytes | np.ndarray) -> np.ndarray:
     """Per-value common-prefix length vs the previous value, capped at
-    ``cap`` bytes; element 0 is always 0.  One (n, cap) matrix compare."""
+    PREFIX_CAP bytes; element 0 is always 0.  One (n, cap) matrix compare."""
     lens = np.asarray(lens, dtype=np.int64)
     n = len(lens)
     out = np.zeros(n, dtype=np.int64)
@@ -73,7 +70,7 @@ def common_prefix_lens(
     # length — for short-string corpora (ids, brands, paths) this shrinks
     # the matrix to a fraction of the 64-byte worst case, and the matrix
     # is THE cost of this scan (measured 5x on 18-byte ids)
-    cap = int(min(cap, int(lens.max())))
+    cap = int(min(PREFIX_CAP, int(lens.max())))
     if cap == 0:
         return out
     starts = np.zeros(n, dtype=np.int64)
@@ -184,19 +181,6 @@ def decode_dba(data: bytes, n: int) -> tuple[np.ndarray, bytes]:
     np.cumsum(out_lens[:-1], out=out_starts[1:])
     total = int(out_lens.sum())
     out = np.empty(total, dtype=np.uint8)
-    if pmax > _DEC_VEC_CAP:
-        # exact fallback for foreign wire with a pathologically wide front
-        # (this encoder caps prefixes at PREFIX_CAP=64, so its own wire
-        # never lands here) — per-row, correct, not a hot path
-        sb = sbuf.tobytes()
-        prev = b""
-        at = 0
-        for i in range(n):
-            v = prev[: prefix[i]] + sb[s_starts[i] : s_starts[i] + int(slens[i])]
-            out[at : at + len(v)] = np.frombuffer(v, dtype=np.uint8)
-            at += len(v)
-            prev = v
-        return out_lens, out.tobytes()
     # vectorized front reconstruction: for each front column j the byte of
     # row i comes from the suffix of src = the latest row k <= i with
     # prefix[k] <= j (row 0 qualifies for every j since prefix[0] = 0).
@@ -217,7 +201,7 @@ def decode_dba(data: bytes, n: int) -> tuple[np.ndarray, bytes]:
         np.clip(byte_idx, 0, max_idx, out=byte_idx)
         # scatter INSIDE the block so every temporary stays (n, w<=64) —
         # a whole-front (n, pmax) mask/target pair would defeat the block
-        # bounding for foreign wide-front wire (pmax up to _DEC_VEC_CAP)
+        # bounding for foreign wide-front wire
         mask_blk = pos_blk[None, :] < prefix[:, None]
         tgt_blk = out_starts[:, None] + pos_blk[None, :]
         out[tgt_blk[mask_blk]] = sbuf_safe[byte_idx][mask_blk]

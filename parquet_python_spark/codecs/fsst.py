@@ -46,22 +46,18 @@ __all__ = ["encode_fsst", "decode_fsst", "train_merges", "fsst_gain_sample"]
 
 MAX_SYMBOLS = 255
 MAX_SYMBOL_LEN = 8
+_MIN_COUNT = 4  # fewest occurrences a trained pair needs
 
 
-def train_merges(
-    sample: np.ndarray,
-    alphabet: int,
-    max_symbols: int = MAX_SYMBOLS,
-    min_count: int = 4,
-) -> list[tuple[int, int]]:
+def train_merges(sample: np.ndarray, alphabet: int) -> list[tuple[int, int]]:
     """Learn an ordered list of pair merges (a, b) -> new code on a sample.
 
     Each round counts the adjacent pairs of the current stream and merges
     the non-overlapping occurrences of a batch of the most frequent ones
     (one vectorized pass).  A pair qualifies when it occurs at least
-    ``min_count`` times, fits the expansion budget (``MAX_SYMBOL_LEN``),
+    ``_MIN_COUNT`` times, fits the expansion budget (``MAX_SYMBOL_LEN``),
     and is significantly frequent (below).  Training stops when no pair
-    qualifies or the code space (``max_symbols``) is exhausted.
+    qualifies or the code space (``MAX_SYMBOLS``) is exhausted.
 
     Significance: a pair with count c must exceed E, the smaller of what
     independent neighbours predict (count(a) * count(b) / len) and a
@@ -80,11 +76,11 @@ def train_merges(
     """
     base, seq = np.unique(np.asarray(sample), return_inverse=True)
     card = len(base)
-    n_ids = card + max_symbols
+    n_ids = card + MAX_SYMBOLS
     seq = seq.astype(np.int32 if n_ids < 2**31 else np.int64)
     lens = np.ones(n_ids, dtype=np.int64)  # expansion length per id
     merges: list[tuple[int, int]] = []
-    while len(merges) < max_symbols and len(seq) >= 2:
+    while len(merges) < MAX_SYMBOLS and len(seq) >= 2:
         keys = seq[:-1].astype(np.int64) * n_ids + seq[1:]
         vals, cnts = np.unique(keys, return_counts=True)
         a, b = np.divmod(vals, n_ids)
@@ -92,7 +88,7 @@ def train_merges(
         expected = np.minimum(uni[a] * uni[b] / len(seq), len(seq) / 1024)
         surprise = cnts * np.log(cnts / expected) - cnts + expected
         ok = (
-            (cnts >= min_count)
+            (cnts >= _MIN_COUNT)
             & (cnts > expected)
             & (lens[a] + lens[b] <= MAX_SYMBOL_LEN)
             & (surprise >= np.log(len(vals)) + 5)
@@ -106,7 +102,7 @@ def train_merges(
         batch: list[tuple[int, int]] = []
         used: set[int] = set()
         for x, y in zip(a[cand].tolist(), b[cand].tolist()):
-            if len(batch) >= 32 or len(merges) + len(batch) >= max_symbols:
+            if len(batch) >= 32 or len(merges) + len(batch) >= MAX_SYMBOLS:
                 break
             if x in used or y in used:
                 continue
@@ -119,7 +115,7 @@ def train_merges(
         for i, (x, y) in enumerate(batch):
             lens[first + i] = lens[x] + lens[y]
         merges.extend(batch)
-    code = np.concatenate([base.astype(np.int64), alphabet + np.arange(max_symbols)])
+    code = np.concatenate([base.astype(np.int64), alphabet + np.arange(MAX_SYMBOLS)])
     return [(int(code[x]), int(code[y])) for x, y in merges]
 
 
@@ -215,7 +211,6 @@ def encode_fsst(
     values: np.ndarray,
     alphabet: int,
     sample_size: int = 8192,
-    max_symbols: int = MAX_SYMBOLS,
 ) -> tuple[bytes, dict]:
     """Train a symbol table on the first ``sample_size`` values, apply it
     to the whole stream, and return (payload, params).
@@ -229,9 +224,9 @@ def encode_fsst(
     data from training symbols."""
     # int32 through the apply passes (codes stay < alphabet + 256 << 2^31):
     # halves the memory traffic of the merge loop, the encode hot spot.
-    dtype = np.int32 if alphabet + max_symbols < 2**31 else np.int64
+    dtype = np.int32 if alphabet + MAX_SYMBOLS < 2**31 else np.int64
     vals = np.ascontiguousarray(values, dtype=dtype)
-    merges = train_merges(vals[:sample_size], alphabet, max_symbols=max_symbols)
+    merges = train_merges(vals[:sample_size], alphabet)
     table = _expand_table(merges, alphabet)
     stream = _apply_merges(vals, merges, alphabet)
 

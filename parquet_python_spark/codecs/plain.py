@@ -18,13 +18,10 @@ __all__ = [
     "encode_plain_double",
     "decode_plain_double",
     "encode_plain_byte_array",
-    "decode_plain_byte_array",
     "encode_plain_boolean",
     "decode_plain_boolean",
     "encode_plain_flba",
     "decode_plain_flba",
-    "encode_plain_int96",
-    "decode_plain_int96",
     "int96_from_epoch_millis",
     "epoch_millis_from_int96",
 ]
@@ -134,34 +131,7 @@ def flba_matrix_to_bytes_list(mat: np.ndarray) -> list[bytes]:
 
 
 _INT96_DT = np.dtype([("q", "<i8"), ("i", "<i4")])
-
-
-def encode_plain_int96(values) -> bytes:
-    """PLAIN int96 (D4, reference encoding.py:51-54): 12 bytes per value as
-    (<q, <i) pairs; logical value = q << 32 | i.  `values` is a sequence of
-    python ints (possibly > 2^63 — the legacy Impala timestamp range).
-    Round-trips exactly for values whose low word has bit 31 clear (always
-    true for Impala timestamps, whose low word is a julian day number)."""
-    out = np.empty(len(values), dtype=_INT96_DT)
-    for k, v in enumerate(values):  # python ints: arbitrary precision path
-        v = int(v)
-        lo = v & 0xFFFFFFFF
-        out[k]["i"] = lo if lo < 2**31 else lo - 2**32
-        out[k]["q"] = v >> 32
-    return out.tobytes()
-
-
-def decode_plain_int96(data: bytes, count: int) -> list[int]:
-    """Exact reference semantics: [q << 32 | i for (q, i) in pairs], with i
-    read signed (reference struct '<qi').  Returns python ints (values
-    exceed int64); legacy-compat path, not a hot path — the engine's
-    timestamp mapping below is the vectorized one."""
-    rec = np.frombuffer(data, dtype=_INT96_DT, count=count)
-    return [int(q) << 32 | int(i) for q, i in zip(rec["q"], rec["i"])]
-
-
 _JULIAN_EPOCH = 2440588  # julian day number of 1970-01-01
-_NANOS_PER_DAY = 86_400_000_000_000
 
 
 def int96_from_epoch_millis(millis: np.ndarray) -> bytes:
@@ -181,40 +151,6 @@ def epoch_millis_from_int96(data: bytes, count: int) -> np.ndarray:
     rec = np.frombuffer(data, dtype=_INT96_DT, count=count)
     days = rec["i"].astype(np.int64) - _JULIAN_EPOCH
     return days * 86_400_000 + rec["q"] // 1_000_000
-
-
-def decode_plain_byte_array(data: bytes, count: int) -> list[bytes]:
-    """Inverse of encode_plain_byte_array; returns a list of bytes objects.
-
-    The length scan is inherently sequential (each record's position
-    depends on the previous record's length — self-delimiting wire), but
-    it touches only 4-byte ints; the payload extraction is one ragged
-    gather (dba._ragged_gather, the shared repeat+arange kernel) and the
-    values materialize through the same Arrow buffer constructor as the
-    Spark hot path (arrow_io), not per-value slicing.  Non-hot
-    regardless: the Spark path stores strings in the lens+blob layout
-    and never parses this interleaved wire."""
-    if count == 0:
-        return []
-    from .arrow_io import string_array_from_lens_blob
-    from .dba import _ragged_gather
-
-    mv = memoryview(data)
-    lens = np.empty(count, dtype=np.int64)
-    pos = 0
-    for k in range(count):  # sequential scan: wire is self-delimiting
-        n = int.from_bytes(mv[pos : pos + 4], "little", signed=True)
-        lens[k] = n
-        pos += 4 + n
-    total = pos
-    starts = np.zeros(count, dtype=np.int64)
-    np.cumsum(lens[:-1] + 4, out=starts[1:])
-    raw = np.frombuffer(mv, dtype=np.uint8, count=total)
-    blob = _ragged_gather(raw, starts + 4, lens)
-    arr = string_array_from_lens_blob(
-        lens, blob.tobytes(), binary=True, allow_large=True
-    )
-    return arr.to_pylist()
 
 
 # ------------------------------------------------- BYTE_STREAM_SPLIT (BSS)

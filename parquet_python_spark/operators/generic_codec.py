@@ -162,6 +162,9 @@ _NUMERIC_NP = {
 
 # target rows per encode partition; partition count grows with data size
 TARGET_ROWS_PER_PART = 262_144
+# the Spark key types encode_df range-partitions on (and the int types
+# the decoders widen to long)
+_INT_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 
 # ------------------------------------------------------- bloom filters
 # Double-hashing Bloom filter over a chunk's DISTINCT int values: h_i =
@@ -368,110 +371,69 @@ def _decode_values(
     return pc.take(arr, pa.array(idx, mask=~valid))
 
 
-def plan_n_parts(
-    df: DataFrame, n_parts: int | None, known_rows: int | None = None
-) -> int:
-    """Derive encode parallelism from data size: ~TARGET_ROWS_PER_PART rows
-    per partition, floored at the cluster's default parallelism (never a
-    fixed constant — the round-1 hard ceiling at scale).
-
-    Pass ``known_rows`` when a caller already has the count from another
-    aggregate — df.count() is metadata-only for raw parquet scans but
-    executes the full upstream plan for derived inputs (hash-partitioned
-    encode_df over a derived DataFrame therefore pays one counting pass;
-    pass n_parts explicitly to skip it — range mode folds the count into
-    its bounds aggregate).  Catalyst's own row-count statistic is used
-    when the optimizer can prove it (e.g. with CBO stats), avoiding the
-    pass entirely."""
-    if n_parts is not None:
-        return n_parts
-    if known_rows is None:
-        try:  # free when Catalyst already knows the cardinality
-            rc = df._jdf.queryExecution().optimizedPlan().stats().rowCount()
-            if rc.isDefined():
-                known_rows = int(str(rc.get()))
-        except Exception:  # noqa: BLE001 - stats API absent/changed
-            pass
-    rows = known_rows if known_rows is not None else df.count()
-    spark = df.sparkSession
-    floor = spark.sparkContext.defaultParallelism
-    return int(max(floor, min(65536, -(-rows // TARGET_ROWS_PER_PART))))
-
-
 def encode_df(
     df: DataFrame,
     key_col: str,
     col_kinds: dict[str, str],
     n_parts: int | None = None,
-    forced_codecs: dict[str, str] | None = None,
-    partitioning: str = "hash",
-    outer: str | None = None,
+    partitioning: str = "range",
 ) -> DataFrame:
     """Encode ``col_kinds`` columns of ``df`` into a blocks DataFrame.
 
-    ``outer`` optionally compresses each page's data section with a
-    Parquet page codec (gzip/snappy/zstd/lz4_raw/brotli) and so selects
-    the DATA_PAGE_V2 framing, levels uncompressed ahead of the data with
-    num_rows/num_nulls in the header; without it pages keep the
-    reference's V1 shape (see _encode_values).
-
-    partitioning="hash" (default): content-addressed crc32 of the key mod
-    n_parts — deterministic at any parallelism, robust to any key type.
-    partitioning="range": numeric keys bucketed by value range — the
+    Rows are bucketed by value range of the integral key ``key_col``: the
     clustered-table layout that makes per-block min/max stats selective
-    (decode_df_pruned skips whole blocks).  Both are deterministic given
-    the data; n_parts scales with the row count unless pinned.
+    (the pruned decodes skip whole blocks), deterministic given the data.
+    ``n_parts`` defaults to ~TARGET_ROWS_PER_PART rows per part, floored
+    at the cluster's default parallelism; one aggregate gives both the
+    key bounds and that row count.  ``partitioning`` accepts "range" only.
     """
-    cols = [key_col] + [c for c in col_kinds if c != key_col]
-    if partitioning == "range":
-        # one combined pass for bounds AND the row count plan_n_parts
-        # needs — a separate count() would execute the upstream plan twice
-        # for derived (non-scan) inputs
-        bounds = df.agg(
-            F.min(key_col).alias("lo"),
-            F.max(key_col).alias("hi"),
-            F.count(F.lit(1)).alias("n"),
-        ).collect()[0]
-        n_parts = plan_n_parts(df, n_parts, known_rows=int(bounds["n"]))
-        if bounds["lo"] is None:  # empty input: single (empty) partition
-            part_expr = F.lit(0)
-        else:
-            lo, hi = int(bounds["lo"]), int(bounds["hi"])
-            span = max(hi - lo + 1, 1)
-            if span <= (2**62) // max(n_parts, 1):
-                # exact integer bucketing
-                part_expr = F.least(
-                    F.lit(n_parts - 1),
-                    (
-                        (F.col(key_col).cast("long") - F.lit(lo))
-                        * n_parts / F.lit(span)
-                    ).cast("int"),
-                )
-            else:
-                # wide key ranges (e.g. hash-derived int64 keys): the exact
-                # formula would overflow (key-lo)*n_parts past int64 and
-                # wrap part ids negative (or throw under ANSI).  Bucket on
-                # the double fraction instead — monotonic and
-                # deterministic; the slight boundary fuzz only shifts
-                # rows between ADJACENT buckets, which zone-map pruning
-                # tolerates (stats stay exact per block)
-                frac = (
-                    F.col(key_col).cast("double") - F.lit(float(lo))
-                ) / F.lit(float(span))
-                part_expr = F.greatest(
-                    F.lit(0),
-                    F.least(
-                        F.lit(n_parts - 1), (frac * n_parts).cast("int")
-                    ),
-                )
-    elif partitioning == "hash":
-        n_parts = plan_n_parts(df, n_parts)
-        part_expr = F.pmod(
-            F.crc32(F.coalesce(F.col(key_col).cast("string"), F.lit(""))),
-            F.lit(n_parts),
-        ).cast("int")
-    else:
+    if partitioning != "range":
         raise ValueError(f"unknown partitioning {partitioning!r}")
+    key_type = df.schema[key_col].dataType
+    if not isinstance(key_type, _INT_TYPES):
+        raise ValueError(
+            f"encode_df: key column {key_col!r} is {key_type.simpleString()};"
+            " range partitioning needs a byte, short, int or long key"
+        )
+    cols = [key_col] + [c for c in col_kinds if c != key_col]
+    bounds = df.agg(
+        F.min(key_col).alias("lo"),
+        F.max(key_col).alias("hi"),
+        F.count(F.lit(1)).alias("n"),
+    ).collect()[0]
+    if n_parts is None:
+        floor = df.sparkSession.sparkContext.defaultParallelism
+        rows = int(bounds["n"])
+        n_parts = int(max(floor, min(65536, -(-rows // TARGET_ROWS_PER_PART))))
+    if bounds["lo"] is None:  # empty input: single (empty) partition
+        part_expr = F.lit(0)
+    else:
+        lo, hi = int(bounds["lo"]), int(bounds["hi"])
+        span = max(hi - lo + 1, 1)
+        if span <= (2**62) // max(n_parts, 1):
+            # exact integer bucketing
+            part_expr = F.least(
+                F.lit(n_parts - 1),
+                (
+                    (F.col(key_col).cast("long") - F.lit(lo))
+                    * n_parts / F.lit(span)
+                ).cast("int"),
+            )
+        else:
+            # wide key ranges (e.g. hash-derived int64 keys): the exact
+            # formula would overflow (key-lo)*n_parts past int64 and wrap
+            # part ids negative (or throw under ANSI).  Bucket on the
+            # double fraction instead — monotonic and deterministic; the
+            # slight boundary fuzz only shifts rows between ADJACENT
+            # buckets, which zone-map pruning tolerates (stats stay exact
+            # per block)
+            frac = (
+                F.col(key_col).cast("double") - F.lit(float(lo))
+            ) / F.lit(float(span))
+            part_expr = F.greatest(
+                F.lit(0),
+                F.least(F.lit(n_parts - 1), (frac * n_parts).cast("int")),
+            )
     work = df.select(*cols).withColumn("part_id", part_expr)
     # string blooms: hash JVM-side (xxhash64, vectorized in codegen) so the
     # encode UDF never runs per-row Python over string bytes; the hidden
@@ -479,7 +441,7 @@ def encode_df(
     for c, kind in col_kinds.items():
         if kind == "str":
             work = work.withColumn(f"__bh_{c}", F.xxhash64(F.col(c)))
-    enc = _chunk_encoder(key_col, col_kinds, forced_codecs, outer)
+    enc = _chunk_encoder(key_col, col_kinds)
     return work.groupBy("part_id").applyInArrow(
         lambda key, tbl: enc(tbl, key[0].as_py()), schema=BLOCKS_SCHEMA
     )
@@ -613,36 +575,14 @@ def _chunk_encoder(
     return enc
 
 
-def decode_df(
-    blocks: DataFrame,
-    key_col: str,
-    col_kinds: dict[str, str],
-    out_schema: T.StructType,
-) -> DataFrame:
-    """Inverse of :func:`encode_df`; returns rows bit-identical to input.
-    ``blocks`` must be a bare scan of written block files, each part in
-    one file (engine._block_files), else this raises ValueError; each file
-    is read and decoded in one map_tasks task, with no exchange.  The
-    pruned decodes (decode_df_pruned_multi and its wrappers) return
-    exactly the rows of a predicate instead."""
-    files = _block_files(blocks, _DECODE_SCHEMA)
-    dec = _decode_fn(col_kinds, out_schema)
-    names = out_schema.fieldNames()
-    return _decode_block_files(
-        blocks.sparkSession, [(path, None) for path in files], _DECODE_SCHEMA,
-        lambda rows: dec(rows).select(names), out_schema,
-    )
-
-
 def _decode_fn(
     col_kinds: dict[str, str],
     out_schema: T.StructType,
     prune: tuple | list | None = None,
 ):
-    """Per-part block-rows -> decoded-rows function (the body of
-    decode_df and of the pruned decodes, exposed so the fused round-trip
-    can chain it directly onto the encode function inside one Python
-    task).
+    """Per-part block-rows -> decoded-rows function (the body of the
+    pruned decodes, exposed so the fused round-trip can chain it directly
+    onto the encode function inside one Python task).
 
     ``prune`` is a ``(pred_col, lo, hi)`` tuple or a list of entries, each
     a tuple or a list of tuples (a union group: IN-list, OR), as
@@ -1246,7 +1186,7 @@ def roundtrip_filtered(
     preds = _normalize_preds(preds)
     in_schema = df.select(*list(col_kinds)).schema
     path = os.path.join(session_tmpdir("pps_rtf_"), "blocks")
-    encode_df(df, key_col, col_kinds, partitioning="range").write.parquet(path)
+    encode_df(df, key_col, col_kinds).write.parquet(path)
     decoded = decode_df_pruned_multi(
         df.sparkSession.read.parquet(path), key_col, col_kinds,
         _arrow_safe_schema(in_schema, col_kinds), preds, combine,
@@ -1365,7 +1305,7 @@ def _aggregate(decoded: DataFrame, *aggs) -> dict:
 
 # the blocks columns _decode_fn reads, the same the tokens decoder reads: a
 # decode task reads no other (and the ``bloom`` cells first when the call
-# has eq/IN probes), and decode_df's layout proof requires them
+# has eq/IN probes)
 _DECODE_SCHEMA = pa.schema([f for f in _BLOCKS_ARROW if f.name in _DECODE_COLS])
 # the columns a pruned call plans on or reads: its layout proof
 # (_chunk_meta) requires every one of them with its type
@@ -1706,18 +1646,23 @@ def roundtrip(
     outer: str | None = None,
 ) -> DataFrame:
     """encode -> blocks -> decode; output schema mirrors the selected input
-    columns (Spark types preserved via cast at the end).  ``outer`` selects
-    the page compression and with it the page shape (see encode_df).
+    columns (Spark types preserved via cast at the end).  ``forced_codecs``
+    pins a column's codec; ``outer`` compresses each page's data section
+    with a Parquet page codec (gzip/snappy/zstd/lz4_raw/brotli) and so
+    selects the DATA_PAGE_V2 framing, levels uncompressed ahead of the
+    data with num_rows/num_nulls in the header; without it pages keep the
+    reference's V1 shape (see _encode_values).
 
     FUSED execution (round 6): encode and decode of one chunk run in a
     single python call, so the blocks table never exists outside the
     python worker — the encoded payloads are not serialized to the JVM,
-    not shuffled, and not deserialized back.  The encode/decode kernels
-    themselves are the unchanged encode_df/decode_df bodies, so output
-    rows equal the decode_df(encode_df(...)) composition; pruning
-    artifacts (stats/blooms) are skipped because the in-worker
-    blocks are discarded immediately — nothing could ever read them
-    (encode_df proper, and so roundtrip_filtered, still builds them all).
+    not shuffled, and not deserialized back.  The kernels are the chunk
+    encoder of encode_df and the decode body of the pruned decodes
+    (_decode_fn), so output rows equal the rows a full decode of written
+    encode_df blocks returns; pruning artifacts (stats/blooms) are
+    skipped because the in-worker blocks are discarded immediately —
+    nothing could ever read them (encode_df proper, and so
+    roundtrip_filtered, still builds them all).
 
     ZERO-shuffle execution (round 6): chunk assignment is unobservable in
     a round-trip's output, so co-locating rows by content hash (a full
@@ -1830,15 +1775,14 @@ def _arrow_safe_schema(
     produces list<int64>; applyInArrow rejects schema mismatches rather
     than coercing); float32 lists stay float32 — what the Arrow kernels
     naturally produce before the final cast."""
-    int_types = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
     fields = []
     for f in schema.fields:
         dt = f.dataType
-        if isinstance(dt, int_types):
+        if isinstance(dt, _INT_TYPES):
             dt = T.LongType()
         elif isinstance(dt, T.ArrayType):
             elem = (
-                T.LongType() if isinstance(dt.elementType, int_types)
+                T.LongType() if isinstance(dt.elementType, _INT_TYPES)
                 else dt.elementType
             )
             # decoded Arrow lists carry nullable items; the roundtrip's

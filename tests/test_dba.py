@@ -100,12 +100,13 @@ def test_dba_roundtrip_random_binary():
 
 
 def test_dba_foreign_wide_front_fallback():
-    """Hand-built wire whose prefix exceeds _DEC_VEC_CAP (our encoder never
-    emits this — PREFIX_CAP=64) must decode exactly via the fallback."""
+    """Hand-built wire with a 600-byte prefix (our encoder never emits
+    this — PREFIX_CAP=64) must decode exactly: the column-blocked decode
+    loop takes any front width."""
     from parquet_python_spark.codecs.delta_bp import encode_delta_bp
-    from parquet_python_spark.codecs.dba import _DEC_VEC_CAP, decode_dba
+    from parquet_python_spark.codecs.dba import decode_dba
 
-    wide = _DEC_VEC_CAP + 88
+    wide = 600
     a = b"A" * (wide + 10)
     b2 = a[:wide] + b"ZZZ"
     prefix = np.array([0, wide], dtype=np.int64)
@@ -259,20 +260,21 @@ def test_dict_dlba_decode_str_column():
     assert out.to_pylist() == ["c", "aa", "bbbb", "bbbb", "aa"]
 
 
-# --------------------------------------- decode_plain_byte_array (folded)
+# ----------------------------------------------- PLAIN byte array wire
 
 def test_decode_plain_byte_array_arrow_fold():
-    """The last per-value Python loop was folded onto the Arrow adapters;
-    values must round-trip exactly, including empties and long blobs."""
-    from parquet_python_spark.codecs.plain import (
-        decode_plain_byte_array,
-        encode_plain_byte_array,
-    )
+    """The vectorized PLAIN byte-array encoder (one interleaved scatter)
+    writes the reference's wire: the reference reader returns the values
+    exactly, including empties and long blobs."""
+    import io
+
+    from parquet_python_spark.codecs.plain import encode_plain_byte_array
+    from parquet_python_spark.reference_decoder import read_plain_byte_array
 
     vals = [b"", b"hello", bytes(300), b"x" * 7, "héllo".encode()]
     payload = encode_plain_byte_array(vals)
-    assert decode_plain_byte_array(payload, len(vals)) == vals
-    assert decode_plain_byte_array(b"", 0) == []
+    assert read_plain_byte_array(io.BytesIO(payload), len(vals)) == vals
+    assert encode_plain_byte_array([]) == b""
 
 
 def test_dba_gain_sample_signal():
@@ -290,7 +292,7 @@ def test_dba_gain_sample_signal():
 def test_dba_block_boundary_foreign_chains():
     """Foreign wire whose fronts straddle the decoder's column-block
     boundaries (w=64): prefix chains crossing 64/128 and a deep ~480-byte
-    chain — all inside the vectorized path (pmax <= _DEC_VEC_CAP)."""
+    chain."""
     from parquet_python_spark.codecs.delta_bp import encode_delta_bp
     from parquet_python_spark.codecs.dba import decode_dba
 
@@ -347,13 +349,9 @@ def test_dba_rejects_chain_inconsistent_and_short_blob():
     # blob shorter than the suffix lengths claim
     with pytest.raises(ValueError, match="blob size"):
         decode_dba(wire([0, 1], [2, 3], b"abc"), 2)
-    # same corruption classes must raise on the wide-front fallback path
-    from parquet_python_spark.codecs.dba import _DEC_VEC_CAP
-
+    # ... and on a front wider than any our encoder writes
     with pytest.raises(ValueError, match="previous value"):
-        decode_dba(
-            wire([0, _DEC_VEC_CAP + 10], [2, 1], b"abZ"), 2
-        )
+        decode_dba(wire([0, 600], [2, 1], b"abZ"), 2)
 
 
 def test_common_prefix_lens_int64_gate():

@@ -19,21 +19,22 @@ def _sorted(df):
 
 
 def _composed(written, df, key_col, kinds, **encode_kw):
-    """The unfused decode_df(encode_df(...)) composition over the written
-    blocks, cast back to the input's Spark types like roundtrip's
-    output."""
+    """The unfused composition: encode_df blocks, written, decoded whole
+    (every row of a key with no nulls), cast back to the input's Spark
+    types like roundtrip's output."""
     from parquet_python_spark.operators.generic_codec import (
         _arrow_safe_schema,
-        decode_df,
+        decode_df_pruned_multi,
         encode_df,
     )
 
     in_schema = df.select(*list(kinds)).schema
-    return decode_df(
+    return decode_df_pruned_multi(
         written(encode_df(df, key_col, kinds, **encode_kw)),
         key_col,
         kinds,
         _arrow_safe_schema(in_schema, kinds),
+        [("notnull", key_col)],
     ).select(
         *[F.col(f.name).cast(f.dataType).alias(f.name) for f in in_schema.fields]
     )
@@ -152,11 +153,32 @@ def test_range_partitioning_wide_key_span(spark, written):
     rt = roundtrip(df, "k", {"k": "int", "v": "int"})
     exp = _sorted(df)
     assert _sorted(rt) == exp
-    composed = _composed(
-        written, df, "k", {"k": "int", "v": "int"}, n_parts=8,
-        partitioning="range",
-    )
+    composed = _composed(written, df, "k", {"k": "int", "v": "int"}, n_parts=8)
     assert _sorted(composed) == exp
+
+
+@pytest.mark.parametrize("key_type", ["string", "double"])
+def test_encode_df_rejects_a_key_it_cannot_range_partition(spark, key_type):
+    """encode_df range-partitions on integral keys only: a string key (even
+    of numeric strings) or a double key raises a ValueError naming the
+    column before any Spark job runs; so does any other layout."""
+    from parquet_python_spark.operators.generic_codec import encode_df
+
+    sc = spark.sparkContext
+    df = spark.range(10).select(
+        F.col("id").cast(key_type).alias("key"), F.col("id").alias("v")
+    )
+    kinds = {"key": "int", "v": "int"}
+    sc.setJobGroup("encode_df_key_check", "encode_df key check")
+    try:
+        with pytest.raises(ValueError, match="'key'"):
+            encode_df(df, "key", kinds, n_parts=2)
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("encode_df_key_check") == []
+    with pytest.raises(ValueError, match="partitioning 'hash'"):
+        encode_df(df.select(F.col("v").alias("key"), "v"), "key", kinds,
+                  partitioning="hash")
 
 
 def test_roundtrip_fused_single_exchange(spark, written):
@@ -164,7 +186,7 @@ def test_roundtrip_fused_single_exchange(spark, written):
     python pass (MapInArrow) with no content-hash grouping — the unfused
     plan had two group-map nodes and two exchanges, shuffling every input
     row AND every encoded payload.  Rows must equal the unfused
-    encode_df -> write -> decode_df composition bit-for-bit.  (The only exchange the
+    encode_df -> write -> decode composition bit-for-bit.  (The only exchange the
     fused plan may carry is the conditional round-robin parallelism bump
     for few-split scans — never a hash partitioning.)"""
     li = _t(spark, "lineitem")
@@ -184,7 +206,7 @@ def test_roundtrip_file_direct_fast_path(spark, written):
     file-direct pyarrow reads (range dispatch, one task per row-group
     piece) — Spark's scan->Arrow conversion, which dominated the fused
     path, is gone from the plan entirely.  Rows must equal the unfused
-    encode_df->decode_df composition bit-for-bit."""
+    encode_df -> write -> decode composition bit-for-bit."""
     from parquet_python_spark.operators.generic_codec import (
         _bare_local_parquet_units,
     )

@@ -58,24 +58,34 @@ def test_flba_empty():
 # ---------------------------------------------------------------- int96 D4
 
 def test_int96_reference_golden():
-    """Byte-for-byte parity with the reference decoder formula: build the
-    stream with struct '<qi' exactly as the reference reads it."""
-    from parquet_python_spark.codecs.plain import decode_plain_int96
+    """Byte-for-byte parity with the reference's int96 layout: the stream
+    is built with struct '<qi' exactly as the reference reads it
+    (encoding.py:54), q the nanoseconds of the day and i the julian day,
+    and every golden pair that is a valid Impala timestamp (0 <= q < one
+    day; the reference's (-3, 7) is not) reads as its epoch millis."""
+    from parquet_python_spark.codecs.plain import epoch_millis_from_int96
 
-    pairs = [(0, 0), (1, 5), (2**40, 123456), (-3, 7), (86399999999999, 2440588)]
+    pairs = [(0, 0), (1, 5), (2**40, 123456), (86399999999999, 2440588)]
     data = b"".join(struct.pack("<qi", q, i) for q, i in pairs)
-    expected = [q << 32 | i for q, i in pairs]  # encoding.py:54 verbatim
-    assert decode_plain_int96(data, len(pairs)) == expected
+    expected = [(i - 2440588) * 86_400_000 + q // 1_000_000 for q, i in pairs]
+    assert epoch_millis_from_int96(data, len(pairs)).tolist() == expected
 
 
 def test_int96_encode_decode_roundtrip():
+    """The golden pairs' epoch millis encode to the reference layout (the
+    time of day truncated to whole milliseconds) and decode back."""
     from parquet_python_spark.codecs.plain import (
-        decode_plain_int96,
-        encode_plain_int96,
+        epoch_millis_from_int96,
+        int96_from_epoch_millis,
     )
 
-    vals = [0, 5, 1 << 62, (86399999999999 << 32) | 2440588]
-    assert decode_plain_int96(encode_plain_int96(vals), len(vals)) == vals
+    pairs = [(0, 0), (1, 5), (2**40, 123456), (86399999999999, 2440588)]
+    millis = [(i - 2440588) * 86_400_000 + q // 1_000_000 for q, i in pairs]
+    data = int96_from_epoch_millis(np.array(millis))
+    assert data == b"".join(
+        struct.pack("<qi", q - q % 1_000_000, i) for q, i in pairs
+    )
+    assert epoch_millis_from_int96(data, len(millis)).tolist() == millis
 
 
 def test_int96_epoch_millis_vectorized():
@@ -163,18 +173,19 @@ def test_bson_to_json_udf(spark):
 # ---------------------------------------------- Spark-level flba/int96 rt
 
 def _composed(written, df, key_col, kinds, **encode_kw):
-    """The unfused decode_df(encode_df(...)) composition over the written
-    blocks, in the decoder's Arrow-widened types (the rows below compare
-    Python values)."""
+    """The unfused composition: encode_df blocks, written, decoded whole
+    (every row of a key with no nulls), in the decoder's Arrow-widened
+    types (the rows below compare Python values)."""
     from parquet_python_spark.operators.generic_codec import (
         _arrow_safe_schema,
-        decode_df,
+        decode_df_pruned_multi,
         encode_df,
     )
 
     schema = _arrow_safe_schema(df.select(*list(kinds)).schema, kinds)
-    return decode_df(
-        written(encode_df(df, key_col, kinds, **encode_kw)), key_col, kinds, schema
+    return decode_df_pruned_multi(
+        written(encode_df(df, key_col, kinds, **encode_kw)), key_col, kinds,
+        schema, [("notnull", key_col)],
     )
 
 

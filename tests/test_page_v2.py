@@ -207,17 +207,17 @@ def test_dict_dlba_rejects_corrupt_wire():
 
 # ------------------------------------------------ Spark end-to-end (V2 pages)
 
-def _encode_df_roundtrip(spark, written, outer):
+def _encode_df_roundtrip(spark, outer):
     """Whole-table round trip of a null-bearing int/str table with an int
     list column (whose flat values chunk holds more values than the part
-    has rows); returns the blocks' params strings after asserting
+    has rows), through roundtrip(outer=); returns the params strings of
+    the same table's blocks from the chunk encoder after asserting
     bit-identical rows."""
     from pyspark.sql import functions as F
 
     from parquet_python_spark.operators.generic_codec import (
-        _arrow_safe_schema,
-        decode_df,
-        encode_df,
+        _chunk_encoder,
+        roundtrip,
     )
 
     df = spark.range(8_000).select(
@@ -231,26 +231,25 @@ def _encode_df_roundtrip(spark, written, outer):
         F.sequence(F.lit(0), F.col("id") % 4).alias("l"),
     )
     kinds = {"k": "int", "v": "int", "s": "str", "l": "int_list"}
-    blocks = written(encode_df(df, "k", kinds, n_parts=4, outer=outer))
-    out_schema = _arrow_safe_schema(df.select(*kinds).schema, kinds)
     got = sorted(
         (r["k"], r["v"], r["s"], r["l"])
-        for r in decode_df(blocks, "k", kinds, out_schema).collect()
+        for r in roundtrip(df, "k", kinds, outer=outer).collect()
     )
     exp = sorted((r["k"], r["v"], r["s"], r["l"]) for r in df.collect())
     assert got == exp
-    return [r["params"] for r in blocks.select("params").collect()]
+    enc = _chunk_encoder("k", kinds, None, outer, build_stats=False)
+    return enc(df.toArrow(), 0).column("params").to_pylist()
 
 
-def test_encode_df_page_v2_outer_roundtrip(spark, written):
+def test_encode_df_page_v2_outer_roundtrip(spark):
     """With LZ4_RAW page compression every block is a V2 page."""
-    params = _encode_df_roundtrip(spark, written, "lz4_raw")
+    params = _encode_df_roundtrip(spark, "lz4_raw")
     assert params and all('"__page__":"v2"' in p for p in params)
 
 
-def test_encode_df_no_outer_writes_v1_pages(spark, written):
+def test_encode_df_no_outer_writes_v1_pages(spark):
     """Without an outer codec no block is a V2 page."""
-    params = _encode_df_roundtrip(spark, written, None)
+    params = _encode_df_roundtrip(spark, None)
     assert params and not any("__page__" in p for p in params)
 
 

@@ -119,8 +119,8 @@ def test_range_partitioning_empty_input(spark, keyed_df, written):
     from parquet_python_spark.operators.generic_codec import (
         _arrow_safe_schema,
         count_filtered_meta,
-        decode_df,
         decode_df_pruned,
+        decode_df_pruned_multi,
         encode_df,
     )
 
@@ -130,7 +130,9 @@ def test_range_partitioning_empty_input(spark, keyed_df, written):
     assert blocks.count() == 0
     blocks = written(blocks)
     out_schema = _arrow_safe_schema(empty.select(*kinds).schema, kinds)
-    assert decode_df(blocks, "k", kinds, out_schema).count() == 0
+    assert decode_df_pruned_multi(
+        blocks, "k", kinds, out_schema, [("notnull", "k")]
+    ).count() == 0
     assert decode_df_pruned(blocks, "k", kinds, out_schema, "k", 1, 5).count() == 0
     assert count_filtered_meta(blocks, kinds, "k", 1, 5).first()["cnt"] == 0
 
@@ -171,11 +173,10 @@ def test_bloom_pruned_equality_roundtrip(spark):
 
     li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     kinds = {"l_orderkey": "int", "l_partkey": "int", "l_linenumber": "int"}
-    # point lookup on the (hash-)partitioning key: the value lives in
-    # exactly one partition, but min/max stats span everything under hash
-    # layout — ONLY the bloom filter can prune here.  (A low-cardinality
-    # column like l_partkey appears in every partition at this sf; the
-    # filter correctly admits all of them — nothing to prune.)
+    # point lookup on the (range-)partitioning key: the value lives in
+    # exactly one partition, and the zone maps and Bloom filters together
+    # admit fewer partitions than exist (test_bloom_rejected_part_decodes_nothing
+    # covers the filters on their own).
     value = int(li.select("l_orderkey").first()["l_orderkey"])
 
     got = roundtrip_filtered(
@@ -267,25 +268,30 @@ def test_bloom_build_flag_off_and_conservative_decode(spark, written):
         encode_df,
     )
 
-    df = spark.range(3 * BLOOM_MAX_CARD).select(
-        F.col("id").alias("k"), (F.col("id") * 3 % 500).alias("v")
+    n = 3 * BLOOM_MAX_CARD
+    df = spark.range(n).select(
+        F.col("id").alias("k"),
+        (F.col("id") * 3 % 500).alias("v"),
+        # a permutation of [0, n) (40_507 is prime to n): each range part
+        # of k holds values from the whole span
+        (F.col("id") * 40_507 % n).alias("u"),
     )
-    kinds = {"k": "int", "v": "int"}
+    kinds = {"k": "int", "v": "int", "u": "int"}
     blocks = written(encode_df(df, "k", kinds, n_parts=2))
-    # hash layout: ~98k distinct keys per chunk, over the cap -> no bitset;
+    # ~98k distinct k and u values per chunk, over the cap -> no bitset;
     # the 500-value column still gets one
     assert blocks.filter(
-        (F.col("column") == "k") & F.col("bloom").isNotNull()
+        F.col("column").isin("k", "u") & F.col("bloom").isNotNull()
     ).count() == 0
     assert blocks.filter(
         (F.col("column") == "v") & F.col("bloom").isNotNull()
     ).count() == 2
-    # both chunks span the key range, and no bitset can rule either out
-    assert _pred_keeps(blocks, kinds, [("eq", "k", 1234)])[1][0][0] == {0, 1}
+    # both chunks span u's range, and no bitset can rule either out
+    assert _pred_keeps(blocks, kinds, [("eq", "u", 1234)])[1][0][0] == {0, 1}
     out_schema = _arrow_safe_schema(df.select(*kinds).schema, kinds)
-    dec = decode_df_pruned_eq(blocks, "k", kinds, out_schema, "k", 1234)
-    got = sorted(tuple(r) for r in dec.filter(F.col("k") == 1234).collect())
-    exp = sorted(tuple(r) for r in df.filter(F.col("k") == 1234).collect())
+    dec = decode_df_pruned_eq(blocks, "k", kinds, out_schema, "u", 1234)
+    got = sorted(tuple(r) for r in dec.filter(F.col("u") == 1234).collect())
+    exp = sorted(tuple(r) for r in df.filter(F.col("u") == 1234).collect())
     assert got == exp and len(got) == 1
 
 
@@ -371,8 +377,9 @@ def test_filtered_results_outlive_later_calls(spark, monkeypatch):
 
 def test_range_prune_in_large_chunk_exact(spark, written):
     """A narrow range inside a ~10k-row surviving chunk returns exactly
-    the rows of a plain Spark filter, not the chunk: `v` is forced to
-    bitpack and `w` carries nulls."""
+    the rows of a plain Spark filter, not the chunk: `v` (~10k distinct
+    values over [0, 2^17) per chunk) selects bitpack and `w` carries
+    nulls."""
     from parquet_python_spark.operators.generic_codec import (
         _arrow_safe_schema,
         decode_df_pruned,
@@ -381,15 +388,16 @@ def test_range_prune_in_large_chunk_exact(spark, written):
 
     df = spark.range(20_000).select(
         F.col("id").alias("k"),
-        (F.col("id") * 7 % 1000).alias("v"),
+        (F.col("id") * 40_503 % (1 << 17)).alias("v"),
         F.when(F.col("id") % 5 == 0, None).otherwise(F.col("id")).alias("w"),
     )
     kinds = {"k": "int", "v": "int", "w": "int"}
     # 2 range parts -> ~10k-row chunks
-    blocks = written(encode_df(
-        df, "k", kinds, n_parts=2, partitioning="range",
-        forced_codecs={"v": "bitpack"},
-    ))
+    blocks = written(encode_df(df, "k", kinds, n_parts=2, partitioning="range"))
+    v_codecs = {
+        r["codec"] for r in blocks.filter(F.col("column") == "v").collect()
+    }
+    assert v_codecs == {"bitpack"}
 
     lo, hi = 5_000, 6_000
     out_schema = _arrow_safe_schema(df.select(*kinds).schema, kinds)
@@ -631,8 +639,8 @@ def test_float_int_routes_end_to_end(spark, tmp_path, written):
     from parquet_python_spark.operators.generic_codec import (
         _arrow_safe_schema,
         _def_levels_blob,
-        decode_df,
         decode_df_pruned,
+        decode_df_pruned_multi,
         encode_df,
     )
 
@@ -684,7 +692,9 @@ def test_float_int_routes_end_to_end(spark, tmp_path, written):
                 w.to_numpy(zero_copy_only=False)[gv].view(np.int64),
             ), c
 
-    full = decode_df(blocks, "k", kinds, out_schema).toArrow().sort_by("k")
+    full = decode_df_pruned_multi(
+        blocks, "k", kinds, out_schema, [("notnull", "k")]
+    ).toArrow().sort_by("k")
     assert full.column("k").to_pylist() == k.tolist()
     bits_equal(full, tbl)
 
@@ -1334,8 +1344,8 @@ def test_count_filtered_meta_exact_and_metadata_only(spark, written):
 
 def test_topk_filtered_meta_exact_and_pruned(spark, written):
     """Zone-map top-k pushdown: exact value multisets both directions,
-    under nulls, ties, k > table, and hash layout; and the keep set is a
-    strict subset of chunks under range partitioning."""
+    under nulls, ties and k > table; and the keep set is a strict subset
+    of chunks under range partitioning."""
     from parquet_python_spark.operators.generic_codec import (
         encode_df,
         topk_filtered_meta,
@@ -1350,39 +1360,32 @@ def test_topk_filtered_meta_exact_and_pruned(spark, written):
         .alias("v"),
     )
     kinds = {"k": "int", "v": "int"}
-    for part_mode in ("range", "hash"):
-        blocks = written(encode_df(
-            df, "k", kinds, n_parts=8, partitioning=part_mode
-        ))
-        for col in ("k", "v"):
-            for asc in (True, False):
-                for kk in (5, 1_000):
-                    got = sorted(
-                        r[col]
-                        for r in topk_filtered_meta(
-                            blocks, kinds, col, kk, ascending=asc
-                        ).collect()
-                    )
-                    exp = sorted(
-                        r[col]
-                        for r in df.filter(F.col(col).isNotNull())
-                        .orderBy(
-                            F.col(col).asc() if asc else F.col(col).desc()
-                        )
-                        .limit(kk)
-                        .collect()
-                    )
-                    assert got == exp, (part_mode, col, asc, kk)
-        # k beyond the table: every present value, still exact
-        got_all = sorted(
-            r["k"]
-            for r in topk_filtered_meta(blocks, kinds, "k", n + 5).collect()
-        )
-        assert got_all == list(range(n))
-
-    # prune evidence under range layout: top-5 on the key decodes a
-    # strict subset of chunks (bound B lands in the first chunk)
     blocks = written(encode_df(df, "k", kinds, n_parts=8, partitioning="range"))
+    for col in ("k", "v"):
+        for asc in (True, False):
+            for kk in (5, 1_000):
+                got = sorted(
+                    r[col]
+                    for r in topk_filtered_meta(
+                        blocks, kinds, col, kk, ascending=asc
+                    ).collect()
+                )
+                exp = sorted(
+                    r[col]
+                    for r in df.filter(F.col(col).isNotNull())
+                    .orderBy(F.col(col).asc() if asc else F.col(col).desc())
+                    .limit(kk)
+                    .collect()
+                )
+                assert got == exp, (col, asc, kk)
+    # k beyond the table: every present value, still exact
+    got_all = sorted(
+        r["k"] for r in topk_filtered_meta(blocks, kinds, "k", n + 5).collect()
+    )
+    assert got_all == list(range(n))
+
+    # prune evidence: top-5 on the key decodes a strict subset of chunks
+    # (bound B lands in the first chunk)
     meta = blocks.filter(F.col("column") == "k").collect()
     by_edge = sorted(meta, key=lambda r: r["stat_max"])
     b = by_edge[0]["stat_max"]  # first chunk already holds >= 5 values
@@ -2538,7 +2541,6 @@ def tokens_blocks(spark, tmp_path_factory):
 
 _DECODERS = {
     "decode_blocks": lambda e, g, b, s: e.decode_blocks(b),
-    "decode_df": lambda e, g, b, s: g.decode_df(b, "k", _LM_KINDS, s),
     "decode_df_pruned_multi": lambda e, g, b, s: g.decode_df_pruned_multi(
         b, "k", _LM_KINDS, s, [("range", "k", 0, 10)]
     ),
