@@ -153,6 +153,13 @@ def _superblock_plan(width: int):
     return weights, lo.astype(np.uint64), (64 - lo).astype(np.uint64), gathers
 
 
+# values from which unpack_bits_lsb runs its 64-pass column loop, whose
+# cost is nearly flat below 16k values: one gather_bits_lsb over every
+# value's bit offset is 2-16x faster at 64-12k values, about even at 16k
+# and 2x slower at 32k (widths 2-64, 4 vCPUs)
+_UNPACK_LOOP_MIN = 1 << 14
+
+
 def _cache_chunk(width: int) -> int:
     """Superblock rows per cache-blocked unpack pass: ~1.5 MB working set
     (8*width B of words + ~256 B of values per row)."""
@@ -198,11 +205,12 @@ def unpack_bits_lsb(
     # Mirrors the 64-value superblock packing, every width 1-64: `width`
     # uint64 words per 64 values, read as a zero-copy VIEW of the input
     # bytes (no pad-to-word-block copy pass); values extract with vector
-    # shifts straight into the result buffer.  The <64-value tail is read
-    # at its bit offsets (gather_bits_lsb).
+    # shifts straight into the result buffer.  The <64-value tail, and a
+    # run of fewer than _UNPACK_LOOP_MIN values whole, is read at its bit
+    # offsets (gather_bits_lsb).
     mask = np.uint64((1 << width) - 1)
     off_u = np.uint64(offset & ((1 << 64) - 1)) if offset else None
-    groups64 = count // 64
+    groups64 = count // 64 if count >= _UNPACK_LOOP_MIN else 0
     need64 = groups64 * width * 8
     if table is not None:
         res = np.empty(count, dtype=final)

@@ -18,7 +18,9 @@ Scale design notes (targets a 1000-executor cluster; local[32] here):
   * One file-direct reader for both block schemas (here and generic_codec):
     a cached proof that each part lies in one file (_block_files) gates
     one read loop (read_block_file), run in map_tasks' tasks
-    (_decode_block_files) or, for a small read, on the driver.
+    (_decode_block_files) or, for a small read, on the driver, and one
+    decode function (generic_codec._decode_fn) turns each part's block
+    rows into output rows.
   * Skew is bounded by task planning, not salting: a file larger than
     _MAX_TASK_BYTES splits into row-group ranges (_plan_file_tasks), so a
     dominant source simply spans more tasks.
@@ -47,13 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from .codecs import (
-    decode_column,
-    encode_column,
-    encode_dict,
-    params_from_json,
-    params_to_json,
-)
+from .codecs import encode_column, encode_dict, params_to_json
 
 BLOCKS_SCHEMA = T.StructType(
     [
@@ -122,9 +118,6 @@ METRICS_SCHEMA = pa.schema(
 
 
 # --------------------------------------------------------------- encode
-
-_COLUMNS = ("tokens", "n_tok", "doc_id", "source")
-
 
 def _encode_partition_table(
     tbl: "pa.Table",
@@ -419,80 +412,17 @@ def _encode_split_by_source(tbl, task_key, snapshot_id, with_ref_baseline):
 
 # --------------------------------------------------------------- decode
 
-def _decode_part_table(tbl, pred=None) -> "pa.Table":
-    """Decode one partition's block rows back to token rows (bit-identical).
+def _tokens_decode(prune=None):
+    """The decode of tokens block rows to DECODED_SCHEMA rows (only those
+    ``prune`` matches when given): generic_codec._decode_fn, whose tokens
+    list takes its lengths from the n_tok chunk and its values from the
+    tokens chunk."""
+    from .operators.generic_codec import _decode_fn
 
-    Decodes each column payload with the vectorized kernels and re-splits
-    the flat token vector on the n_tok offsets (Arrow list layout; the
-    repetition-level concept the reference never implemented, SURVEY.md D18).
-    With ``pred`` = (column, lo, hi) only the matching rows are returned:
-    an ``n_tok`` in [lo, hi], or for ``tokens`` some token in [lo, hi] (a
-    row with no tokens never matches).
-    """
-    import pyarrow as pa
-
-    from .codecs.arrow_io import decode_str_column
-
-    rows = tbl.to_pylist()  # 4 small rows (payload bytes ride along)
-    by_col = {r["column"]: r for r in rows}
-    n_rows = int(by_col["doc_id"]["n_rows"])
-    for col in _COLUMNS:
-        row = by_col[col]
-        if zlib.crc32(row["payload"]) != int(row["checksum"]):
-            raise ValueError(f"checksum mismatch for {row['part_id']}/{col}")
-
-    def _int(col, prefer32=False):
-        r = by_col[col]
-        return decode_column(
-            r["codec"], r["payload"], int(r["n_values"]),
-            params_from_json(r["params"]), "int", prefer32=prefer32,
-        )
-
-    def _str(col):
-        r = by_col[col]
-        return decode_str_column(
-            r["codec"], r["payload"], int(r["n_values"]),
-            params_from_json(r["params"]),
-        )
-
-    n_tok = _int("n_tok")
-    # prefer32: the kernels emit int32 directly (tokens ARE int32) — no
-    # widen-to-int64-then-astype double pass; asarray is a no-op then
-    flat = np.asarray(_int("tokens", prefer32=True), dtype=np.int32)
-    total_tok = int(np.asarray(n_tok, dtype=np.int64).sum())
-    if total_tok >= 2**31:
-        # int32 list offsets would wrap silently past 2^31 tokens in one
-        # part; task planning bounds part size well below this, so reaching
-        # here means a pathological input — fail loudly, never corrupt
-        raise ValueError(
-            f"partition holds {total_tok} tokens (>= 2^31); rewrite the "
-            "input with smaller row groups and re-encode it"
-        )
-    offsets = np.zeros(n_rows + 1, dtype=np.int32)
-    np.cumsum(n_tok, out=offsets[1:])
-    tokens = pa.ListArray.from_arrays(
-        pa.array(offsets, type=pa.int32()), pa.array(flat, type=pa.int32())
-    ).cast(pa.list_(pa.field("element", pa.int32(), nullable=False)))
-    out = pa.table(
-        {
-            "doc_id": _str("doc_id"),
-            "tokens": tokens,
-            "n_tok": pa.array(n_tok.astype(np.int32), type=pa.int32()),
-            "source": _str("source"),
-        }
+    kinds = {"doc_id": "str", "tokens": "int_list", "n_tok": "int", "source": "str"}
+    return _decode_fn(
+        kinds, DECODED_SCHEMA, prune, _lists={"tokens": ("n_tok", "tokens")}
     )
-    if pred is None:
-        return out
-    column, lo, hi = pred
-    if column == "n_tok":
-        keep = (n_tok >= lo) & (n_tok <= hi)
-    else:
-        # hits[i] = in-range tokens among the first i: a row matches when
-        # its token run [offsets[r], offsets[r + 1]) adds at least one
-        hits = np.zeros(len(flat) + 1, dtype=np.int64)
-        np.cumsum((flat >= lo) & (flat <= hi), out=hits[1:])
-        keep = hits[offsets[1:]] > hits[offsets[:-1]]
-    return out.filter(keep)
 
 
 def local_path(uri: str) -> str:
@@ -724,7 +654,7 @@ def _block_files(blocks: DataFrame, schema: pa.Schema) -> dict:
     return out
 
 
-# the blocks columns _decode_part_table reads
+# the blocks columns generic_codec._decode_fn reads, in both block schemas
 _DECODE_COLS = (
     "part_id", "column", "codec", "params", "payload", "n_values", "n_rows",
     "checksum",
@@ -758,14 +688,15 @@ def _decode_block_files(
     spark: SparkSession,
     plan: list[tuple],
     schema: pa.Schema = _DECODE_SCHEMA,
-    decode=_decode_part_table,
+    decode=None,
     out_schema=DECODED_SCHEMA,
     narrow=None,
 ) -> DataFrame:
     """Every (path, filters) entry of ``plan`` read and decoded by
     read_block_file (with ``schema``, ``decode`` and ``narrow``; tokens
-    blocks by default) in map_tasks' tasks, as one DataFrame of
-    ``out_schema``."""
+    blocks by default, through _tokens_decode) in map_tasks' tasks, as one
+    DataFrame of ``out_schema``."""
+    decode = decode or _tokens_decode()
 
     def read(task):
         for decoded in read_block_file(task, schema, decode, narrow):
@@ -801,8 +732,9 @@ def decode_blocks_files_pruned(
     has no tokens statistics and is never kept, as none of its rows could
     match), and tasks run only for files holding a kept part,
     each reading and decoding just those parts' rows: no payload byte of
-    a pruned part is read.  The decode task tests the rows
-    (_decode_part_table) and ships only the matching ones; no filter runs
+    a pruned part is read.  The decode task tests the rows with the same
+    classifier's row tuples (generic_codec._decode_fn, through
+    _tokens_decode) and ships only the matching ones; no filter runs
     after it.  At 100 TB with a range-clustered layout that is the
     difference between scanning the table and scanning the matching
     slice.
@@ -814,27 +746,26 @@ def decode_blocks_files_pruned(
     def keep(rows, _):
         return sorted(_parts(rows, _range_keep("int", rows, column, lo, hi)[0]))
 
-    keep(_BLOCKS_ARROW_SCHEMA.empty_table(), None)  # bad bounds raise here
-    return _decode_kept_parts(
-        spark, blocks_path, keep,
-        lambda rows: _decode_part_table(rows, (column, lo, hi)),
-    )
+    # bad bounds raise here, before any file is read
+    prune = _range_keep("int", _BLOCKS_ARROW_SCHEMA.empty_table(), column, lo, hi)[1]
+    return _decode_kept_parts(spark, blocks_path, keep, prune)
 
 
 def _decode_kept_parts(
-    spark: SparkSession, blocks_path: str, keep, decode=_decode_part_table
+    spark: SparkSession, blocks_path: str, keep, prune=None
 ) -> DataFrame:
-    """Decode with ``decode``, per file of a blocks directory, only the
-    parts ``keep(index rows, part_ids)`` returns from the file's cached
-    _block_index; a file keeping none starts no task.  Interrupted
-    compactions are repaired first (decode_blocks_files)."""
+    """Decode, per file of a blocks directory, only the parts
+    ``keep(index rows, part_ids)`` returns from the file's cached
+    _block_index, to the rows ``prune`` matches (_tokens_decode); a file
+    keeping none starts no task.  Interrupted compactions are repaired
+    first (decode_blocks_files)."""
     _repair_compaction(blocks_path, conservative=True)
     plan = []
     for path in list_input_files(blocks_path):
         kept = keep(*_block_index(path)[1:])
         if kept:
             plan.append((path, [("part_id", "in", kept)]))
-    return _decode_block_files(spark, plan, decode=decode)
+    return _decode_block_files(spark, plan, decode=_tokens_decode(prune))
 
 
 def _part_file_key(part_id: str) -> str:

@@ -22,7 +22,9 @@ Column kinds:
 Scale design: encode_df runs applyInArrow over its groupBy("part_id"),
 and the decoders and round-trips run mapInArrow tasks (engine.map_tasks);
 a decoder reads block files only, and raises on a blocks DataFrame that
-is not a bare scan of them (engine._block_files).  Either way chunks
+is not a bare scan of them (engine._block_files).  One decode function,
+_decode_fn, turns a part's block rows into output rows for both block
+schemas: engine's tokens readers decode through it too.  Either way chunks
 arrive as Arrow tables whose string/list columns are (offsets, data)
 buffer pairs, and the kernels encode/decode straight from those buffers
 with no per-row Python (reference NEVER vectorizes — lists throughout,
@@ -38,6 +40,7 @@ import functools
 import math
 import numbers
 import os
+import shutil
 import zlib
 
 import numpy as np
@@ -313,7 +316,7 @@ def _encode_values(
 
 def _decode_values(
     payload: bytes, n_rows: int, n_values: int, codec: str, params_json: str,
-    kind: str, rows: np.ndarray | None = None,
+    kind: str, rows: np.ndarray | None = None, prefer32: bool = False,
 ) -> pa.Array:
     """Inverse of _encode_values: decode payload -> typed Arrow array with
     nulls re-woven from the validity stream (reference __init__.py:336-338).
@@ -323,7 +326,9 @@ def _decode_values(
     ``rows`` (ascending row positions): only those rows, equal to the
     whole decode taken there.  They map to value positions through the
     validity stream, and the codecs read just those values where their
-    layout allows (registry.decode_column, arrow_io.decode_str_column)."""
+    layout allows (registry.decode_column, arrow_io.decode_str_column).
+    ``prefer32``: an int chunk decodes at int32 where its codec can
+    (decode_column), else at int64."""
     params = params_from_json(params_json)
     if "__pouter__" in params:
         # a whole-page outer wrap: no page shape this module writes, and
@@ -357,7 +362,7 @@ def _decode_values(
         arr = decode_str_column(codec, payload, n_values, params, positions)
     else:
         vals = decode_column(
-            codec, payload, n_values, params, kind, positions=positions
+            codec, payload, n_values, params, kind, prefer32, positions
         )
         arr = (
             pa.array(vals, type=pa.binary()) if kind == "flba"
@@ -579,10 +584,22 @@ def _decode_fn(
     col_kinds: dict[str, str],
     out_schema: T.StructType,
     prune: tuple | list | None = None,
+    _lists: dict[str, tuple[str, str]] | None = None,
 ):
-    """Per-part block-rows -> decoded-rows function (the body of the
-    pruned decodes, exposed so the fused round-trip can chain it directly
-    onto the encode function inside one Python task).
+    """Per-part block-rows -> decoded-rows function: the one decode of
+    both block schemas (the tokens readers of engine, the pruned decodes
+    here), exposed so the fused round-trip can chain it directly onto the
+    encode function inside one Python task.
+
+    The output holds ``out_schema``'s columns, in its order and with its
+    Arrow types: an int column or list element that it declares
+    IntegerType decodes at int32 (decode_column's ``prefer32``; a kernel
+    that returns only int64 is cast), any other at int64.  A list column
+    takes its lengths and flat values from two chunks, ``<col>.lens`` and
+    ``<col>.vals``, or the (lengths column, values column) that
+    ``_lists`` names for it (tokens blocks: ``("n_tok", "tokens")``).  A
+    chunk decodes whole at most once per part, so a lengths chunk that is
+    also an output column serves both.
 
     ``prune`` is a ``(pred_col, lo, hi)`` tuple or a list of entries, each
     a tuple or a list of tuples (a union group: IN-list, OR), as
@@ -590,56 +607,69 @@ def _decode_fn(
     ``(pred_col, None, want_null)`` is IS [NOT] NULL.  With ``prune`` the
     function returns exactly the matching rows, through one boolean row
     mask (late materialization): every entry is evaluated row by row on
-    its decoded column (_row_mask), AND across entries and OR inside a
-    union group.  A part whose mask is all false returns before any other
-    column decodes; otherwise every other output column decodes only the
-    mask's rows (_decode_values' ``rows``).
+    its decoded column (_row_mask; on a list column, some element in
+    [lo, hi]), AND across entries and OR inside a union group.  A part
+    whose mask is all false returns before any other column decodes;
+    otherwise every other output column decodes only the mask's rows
+    (_decode_values' ``rows``).
 
     The two halves are also exposed as ``dec.select(tbl)`` (the predicate
     columns decoded and the row positions kept: None = every row) and
     ``dec.gather(selected)`` (the output table), so a caller can count the
     kept rows of every part before gathering any (_decode_parts)."""
-
-    # arrow image of the output schema, for the no-matching-row early exit
-    empty_out = pa.Table.from_pylist([], schema=to_arrow_schema(out_schema))
+    arrow_out = to_arrow_schema(out_schema)
+    empty_out = arrow_out.empty_table()
     prunes = _prune_groups(prune)
+    lists = {c: (f"{c}.lens", f"{c}.vals") for c in col_kinds} | (_lists or {})
+    int32 = {
+        f.name for f in out_schema.fields
+        if isinstance(getattr(f.dataType, "elementType", f.dataType), T.IntegerType)
+    }
+
+    def arr(part: tuple, col: str, rows=None) -> pa.Array:
+        """``col``'s values in ``part`` (only ``rows`` when given); a whole
+        decode is kept in the part's cache.  A chunk no kind names is a
+        list's lengths: ints."""
+        by_col, n_rows, whole = part
+        if col in whole:
+            return whole[col] if rows is None else whole[col].take(pa.array(rows))
+        kind = col_kinds.get(col, "int")
+        if kind in _LIST_KINDS:
+            lens_col, vals_col = lists[col]
+            lens = arr(part, lens_col).to_numpy(zero_copy_only=False)
+            out = _list_arr(
+                lens, by_col[vals_col], _LIST_KINDS[kind], rows, col in int32
+            )
+        else:
+            out = _chunk_arr(by_col[col], n_rows, kind, rows, col in int32)
+        if rows is None:
+            whole[col] = out
+        return out
 
     def select(tbl: pa.Table) -> tuple:
-        """(chunk rows by column, n_rows, decoded predicate columns, kept
-        row positions or None for every row)."""
+        """(chunk rows by column, n_rows, the part's whole decodes — the
+        predicate columns —, kept row positions or None for every row)."""
         by_col = {r["column"]: r for r in tbl.to_pylist()}
-        n_rows = int(next(iter(by_col.values()))["n_rows"])
+        part = (by_col, int(next(iter(by_col.values()))["n_rows"]), {})
         # late materialization: every prune entry is evaluated row by row
         # on its decoded column (AND across entries, OR inside a group)
         mask = None  # None = every row
-        pred_arrs: dict[str, pa.Array] = {}
         for group in prunes:
-            m = np.zeros(n_rows, dtype=bool)
+            m = np.zeros(part[1], dtype=bool)
             for pcol, lo, hi in group:
-                if pcol not in pred_arrs:
-                    pred_arrs[pcol] = _chunk_arr(
-                        by_col[pcol], n_rows, col_kinds[pcol]
-                    )
-                m |= _row_mask(pred_arrs[pcol], col_kinds[pcol], lo, hi)
+                m |= _row_mask(arr(part, pcol), col_kinds[pcol], lo, hi)
             mask = m if mask is None else mask & m
         rows = None if mask is None or mask.all() else np.flatnonzero(mask)
-        return by_col, n_rows, pred_arrs, rows
+        return (*part, rows)
 
     def gather(selected: tuple) -> pa.Table:
-        by_col, n_rows, pred_arrs, rows = selected
+        *part, rows = selected
         if rows is not None and not len(rows):
             return empty_out
-        out_arrays = []
-        for col, kind in col_kinds.items():
-            if col in pred_arrs:
-                arr = pred_arrs[col]
-                arr = arr if rows is None else arr.take(pa.array(rows))
-            elif kind in _LIST_KINDS:
-                arr = _list_arr(by_col, col, kind, n_rows, rows)
-            else:
-                arr = _chunk_arr(by_col[col], n_rows, kind, rows)
-            out_arrays.append(arr)
-        return pa.Table.from_arrays(out_arrays, names=list(col_kinds))
+        return pa.Table.from_arrays(
+            [arr(part, f.name, rows).cast(f.type) for f in arrow_out],
+            schema=arrow_out,
+        )
 
     def dec(tbl: pa.Table) -> pa.Table:
         return gather(select(tbl))
@@ -658,7 +688,9 @@ def _prune_groups(prune) -> list[list[tuple]]:
     return [e if isinstance(e, list) else [e] for e in prune]
 
 
-def _chunk_arr(row: dict, n_rows: int, kind: str, rows=None) -> pa.Array:
+def _chunk_arr(
+    row: dict, n_rows: int, kind: str, rows=None, prefer32: bool = False
+) -> pa.Array:
     """One chunk's values (only ``rows`` when given), its checksum
     verified first."""
     payload = bytes(row["payload"])
@@ -666,17 +698,17 @@ def _chunk_arr(row: dict, n_rows: int, kind: str, rows=None) -> pa.Array:
         raise ValueError(f"checksum mismatch in {row['column']}")
     return _decode_values(
         payload, n_rows, int(row["n_values"]), row["codec"], row["params"],
-        kind, rows,
+        kind, rows, prefer32,
     )
 
 
-def _list_arr(by_col: dict, col: str, kind: str, n_rows: int, rows) -> pa.Array:
-    """A list column from its lens and flat values chunks (only ``rows``
-    when given): the lens decode whole, for the offsets, and the flat
-    values at the kept rows' element positions only."""
-    lens = _chunk_arr(by_col[col + ".lens"], n_rows, "int")
-    lens = lens.to_numpy(zero_copy_only=False)
-    offsets = np.zeros(n_rows + 1, dtype=np.int64)
+def _list_arr(
+    lens: np.ndarray, vals: dict, kind: str, rows, prefer32: bool
+) -> pa.Array:
+    """A list column from its per-row lengths ``lens`` and the chunk row
+    ``vals`` of its flat values (only ``rows`` when given): the values
+    decode at the kept rows' element positions only."""
+    offsets = np.zeros(len(lens) + 1, dtype=np.int64)
     np.cumsum(lens, out=offsets[1:])
     elems = None
     if rows is not None:
@@ -687,12 +719,13 @@ def _list_arr(by_col: dict, col: str, kind: str, n_rows: int, rows) -> pa.Array:
         # each kept row's elements: its start, then consecutive
         elems = np.repeat(starts - offsets[:-1], lens) + np.arange(offsets[-1])
     if offsets[-1] >= 2**31:
+        # int32 list offsets would wrap: fail loudly, never corrupt
         raise ValueError(
-            "list partition exceeds int32 offset range; increase n_parts"
+            f"list partition holds {offsets[-1]} elements (>= 2^31); "
+            "encode it in smaller parts"
         )
     # the flat chunk's rows are its elements (never null), not the part's
-    vals = by_col[col + ".vals"]
-    flat = _chunk_arr(vals, int(vals["n_values"]), _LIST_KINDS[kind], elems)
+    flat = _chunk_arr(vals, int(vals["n_values"]), kind, elems, prefer32)
     return pa.ListArray.from_arrays(
         pa.array(offsets.astype(np.int32), type=pa.int32()), flat
     )
@@ -701,7 +734,8 @@ def _list_arr(by_col: dict, col: str, kind: str, n_rows: int, rows) -> pa.Array:
 def _row_mask(arr: pa.Array, kind: str, lo, hi) -> np.ndarray:
     """Rows of ``arr``, the decoded values of a ``kind`` column, that
     satisfy one prune tuple as a Spark filter would: ``(col, None,
-    want_null)`` is IS NULL / IS NOT NULL, anything else lo <= v <= hi (a
+    want_null)`` is IS NULL / IS NOT NULL, a list row some element with
+    lo <= v <= hi (an empty list never), anything else lo <= v <= hi (a
     null value never satisfies a bound).  Str values compare in UTF-8
     byte order, Spark's string order; an int column with a float bound
     compares in double, as Spark does.  A float column's bounds are
@@ -709,6 +743,14 @@ def _row_mask(arr: pa.Array, kind: str, lo, hi) -> np.ndarray:
     _float_ordered_bits images, which order as Spark does: every NaN
     equal and above +inf, and -0.0 equal to 0.0 through the bounds'
     ±0 widening."""
+    if kind in _LIST_KINDS:
+        # hits[i] = in-range elements among the first i: a row matches
+        # when its run [offsets[r], offsets[r + 1]) adds at least one
+        vals = arr.values.to_numpy(zero_copy_only=False)
+        offsets = arr.offsets.to_numpy(zero_copy_only=False)
+        hits = np.zeros(len(vals) + 1, dtype=np.int64)
+        np.cumsum((vals >= lo) & (vals <= hi), out=hits[1:])
+        return hits[offsets[1:]] > hits[offsets[:-1]]
     if lo is None:
         m = arr.is_null() if hi else arr.is_valid()
     elif kind.startswith("float"):
@@ -1175,22 +1217,27 @@ def roundtrip_filtered(
     block stats are selective.
 
     The blocks are written once, when this is called, as parquet files in
-    a fresh session.session_tmpdir, where they stay on the driver's local
-    disk until the driver process exits: a returned job plan reads them
-    whenever it is collected, however many calls came after it.  Every
-    part lies in one file, so the pruned decode plans on the files'
-    cached block index and reads only the kept parts, file-direct
-    (engine._block_files), as it would over a persistent blocks table.
-    A small lookup decodes on the driver when this is called, and the
-    result is a local relation (decode_df_pruned_multi)."""
+    a fresh session.session_tmpdir.  Every part lies in one file, so the
+    pruned decode plans on the files' cached block index and reads only
+    the kept parts, file-direct (engine._block_files), as it would over a
+    persistent blocks table.  A small lookup decodes on the driver when
+    this is called (decode_df_pruned_multi): the result is a local
+    relation that reads no file, and the directory is removed before
+    this returns.  Any other result is a job plan that reads the blocks
+    whenever it is collected, however many calls came after it, so its
+    directory stays on the driver's local disk until the driver process
+    exits."""
     preds = _normalize_preds(preds)
     in_schema = df.select(*list(col_kinds)).schema
-    path = os.path.join(session_tmpdir("pps_rtf_"), "blocks")
+    tmp = session_tmpdir("pps_rtf_")
+    path = os.path.join(tmp, "blocks")
     encode_df(df, key_col, col_kinds).write.parquet(path)
     decoded = decode_df_pruned_multi(
         df.sparkSession.read.parquet(path), key_col, col_kinds,
         _arrow_safe_schema(in_schema, col_kinds), preds, combine,
     )
+    if decoded.isLocal():
+        shutil.rmtree(tmp)
     return decoded.select(
         *[
             F.col(f.name).cast(_cast_target(f.dataType)).alias(f.name)
@@ -1303,9 +1350,9 @@ def _aggregate(decoded: DataFrame, *aggs) -> dict:
     return obs.get
 
 
-# the blocks columns _decode_fn reads, the same the tokens decoder reads: a
-# decode task reads no other (and the ``bloom`` cells first when the call
-# has eq/IN probes)
+# the blocks columns _decode_fn reads (engine._DECODE_COLS), the same in
+# both block schemas: a decode task reads no other (and the ``bloom`` cells
+# first when the call has eq/IN probes)
 _DECODE_SCHEMA = pa.schema([f for f in _BLOCKS_ARROW if f.name in _DECODE_COLS])
 # the columns a pruned call plans on or reads: its layout proof
 # (_chunk_meta) requires every one of them with its type
@@ -1377,7 +1424,6 @@ def _decode_parts(
     Otherwise the result is the lazy plan of one map_tasks job
     (engine._decode_block_files), which decodes when it is collected."""
     dec = _decode_fn(col_kinds, out_schema, prune)
-    names = out_schema.fieldNames()
     narrow = None
     if probes:
         probed = sorted({c for c, _, _ in probes})
@@ -1423,13 +1469,11 @@ def _decode_parts(
         kept = sum(n if r is None else len(r) for _, n, _, r in selected)
         if kept * gathered <= _DRIVER_GATHER_MAX_CELLS:
             return pa.concat_tables(
-                [dec.gather(sel).select(names) for sel in selected]
-                + [to_arrow_schema(out_schema).empty_table()],
-                promote_options="permissive",
+                [dec.gather(sel) for sel in selected]
+                + [to_arrow_schema(out_schema).empty_table()]
             )
     return _decode_block_files(
-        blocks.sparkSession, plan, _DECODE_SCHEMA,
-        lambda rows: dec(rows).select(names), out_schema, narrow,
+        blocks.sparkSession, plan, _DECODE_SCHEMA, dec, out_schema, narrow
     )
 
 

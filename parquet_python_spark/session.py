@@ -36,9 +36,10 @@ def session_tmpdir(prefix: str) -> str:
     driver process exits (atexit removes it), so a lazy DataFrame
     returned over its files can still read them whenever the caller
     collects.  generic_codec.roundtrip_filtered writes each call's blocks
-    into one, and the blocks stay on disk until the driver exits; the
-    engine round-trips of ``__spark_entry__`` write their inputs and
-    blocks into them instead of collecting to the driver."""
+    into one, which it removes itself when its result is a local relation
+    that reads no file; the engine round-trips of ``__spark_entry__``
+    write their inputs and blocks into them instead of collecting to the
+    driver."""
     import atexit
     import shutil
     import tempfile

@@ -218,6 +218,42 @@ def test_pack_bits_wide_widths_reference_oracle(width, count):
     np.testing.assert_array_equal(gather_bits_lsb(packed, width, pos * width), vals[pos])
 
 
+@pytest.mark.parametrize("width", range(1, 65))
+def test_small_unpack_gather_equals_column_loop(width, monkeypatch):
+    """A run of fewer than _UNPACK_LOOP_MIN values unpacks with one gather
+    over its bit offsets; its output equals the 64-pass column loop's
+    (forced with a threshold of 0) at counts around the 8- and 64-value
+    groups, a delta_bp miniblock length stream (562), the threshold and
+    well above it, plain, through a table and with an offset, into int32
+    and int64."""
+    from parquet_python_spark.codecs import bitstream
+
+    cross = bitstream._UNPACK_LOOP_MIN
+    rng = np.random.default_rng(width)
+    table_len = min(1 << width, 4096)
+    tables = [
+        rng.integers(-(2**62), 2**62, table_len).astype(dt)
+        for dt in (np.int32, np.int64)
+    ]
+    offset = -(1 << 40) + 7
+    for count in (1, 7, 63, 64, 65, 562, cross - 1, cross, cross + 1, 40000):
+        top = (1 << width) - 1
+        vals = rng.integers(0, top, count, dtype=np.uint64, endpoint=True)
+        packed = pack_bits_lsb(vals, width)
+        small = pack_bits_lsb(vals % np.uint64(table_len), width)
+        calls = [
+            (packed, dict(out_dtype=dt, offset=off))
+            for dt in (np.int32, np.int64) for off in (0, offset)
+        ] + [(small, dict(table=t)) for t in tables]
+        for blob, kw in calls:
+            got = unpack_bits_lsb(blob, width, count, **kw)
+            with monkeypatch.context() as m:
+                m.setattr(bitstream, "_UNPACK_LOOP_MIN", 0)
+                want = unpack_bits_lsb(blob, width, count, **kw)
+            assert got.dtype == want.dtype, (count, kw)
+            np.testing.assert_array_equal(got, want, err_msg=f"{count} {kw}")
+
+
 # ----------------------------------------------------------------- FSST
 
 def test_fsst_roundtrip_texty():

@@ -6,6 +6,7 @@ correctness gates)."""
 import os
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -39,6 +40,18 @@ def source_blocks(spark, tokens_df, tmp_path_factory):
         spark, inp, blocks_dir, snapshot_id="t", with_ref_baseline=True
     ).count()
     return spark.read.parquet(blocks_dir)
+
+
+def _set_cells(tbl, i, **values):
+    """``tbl`` with row ``i``'s cells of the named columns replaced."""
+    for name, value in values.items():
+        col = tbl.column(name).to_pylist()
+        col[i] = value
+        tbl = tbl.set_column(
+            tbl.schema.get_field_index(name), name,
+            pa.array(col, type=tbl.schema.field(name).type),
+        )
+    return tbl
 
 
 def _as_sorted_rows(df):
@@ -283,34 +296,28 @@ def test_encode_job_is_one_spark_job(spark, tokens_df, tmp_path):
 
 
 def test_decode_detects_corruption(spark, source_blocks, tmp_path):
-    """A block file rewritten on disk with one tokens payload byte flipped
-    fails the decode's crc32 check."""
+    """A block file rewritten on disk with one payload byte flipped, of a
+    tokens chunk or of a doc_id chunk, fails the decode's crc32 check."""
     import shutil
 
-    import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     from parquet_python_spark.engine import local_parquet_scan_files
 
-    bad = tmp_path / "bad"
-    bad.mkdir()
-    for f in local_parquet_scan_files(source_blocks):
-        shutil.copy(f, bad)
-    victim = str(next(bad.iterdir()))
-    tbl = pq.read_table(victim)
-    row = pc.index(tbl.column("column"), "tokens").as_py()
-    payloads = tbl.column("payload").to_pylist()
-    flipped = bytearray(payloads[row])
-    flipped[len(flipped) // 2] ^= 0xFF
-    payloads[row] = bytes(flipped)
-    tbl = tbl.set_column(
-        tbl.schema.get_field_index("payload"), "payload",
-        pa.array(payloads, type=tbl.schema.field("payload").type),
-    )
-    pq.write_table(tbl, victim)
-    with pytest.raises(Exception, match="checksum mismatch"):
-        decode_blocks(spark.read.parquet(str(bad))).collect()
+    for column in ("tokens", "doc_id"):
+        bad = tmp_path / f"bad-{column}"
+        bad.mkdir()
+        for f in local_parquet_scan_files(source_blocks):
+            shutil.copy(f, bad)
+        victim = str(next(bad.iterdir()))
+        tbl = pq.read_table(victim)
+        row = pc.index(tbl.column("column"), column).as_py()
+        flipped = bytearray(tbl.column("payload")[row].as_py())
+        flipped[len(flipped) // 2] ^= 0xFF
+        pq.write_table(_set_cells(tbl, row, payload=bytes(flipped)), victim)
+        with pytest.raises(Exception, match="checksum mismatch"):
+            decode_blocks(spark.read.parquet(str(bad))).collect()
 
 
 def test_files_mode_splits_large_files_by_row_group(spark, tmp_path, monkeypatch):
@@ -590,3 +597,156 @@ def test_map_tasks_freezes_each_worker_heap_once(spark):
         ran |= {pid for pid, _ in got}
     assert frozen  # workers are reused across jobs
     assert gc.get_freeze_count() == 0
+
+
+# ------------------------------------------- the tokens readers' edge cases
+
+# one part per source: rows with no tokens beside others, a one-row part,
+# and a part whose tokens zone map [10, 1000] spans the window [400, 600]
+# that none of its rows meets (its decode takes the all-false early exit)
+_EDGE_ROWS = [
+    ("e0", [], 0, "edge-empty"),
+    ("e1", [7, 8], 2, "edge-empty"),
+    ("e2", [], 0, "edge-empty"),
+    ("o0", [500, 501, 502], 3, "edge-one"),
+    ("g0", [10, 1000], 2, "edge-gap"),
+    ("g1", [20, 990], 2, "edge-gap"),
+    ("g2", [30], 1, "edge-gap"),
+]
+_EDGE_WINDOWS = [
+    ("n_tok", 0, 0),  # the empty lists only
+    ("n_tok", 2, 3),
+    ("tokens", 7, 8),
+    ("tokens", 400, 600),  # kept edge-gap part with no matching row
+    ("tokens", 10**8, 10**8 + 5),  # a window no part meets
+]
+
+
+@pytest.fixture(scope="module")
+def edge_dirs(spark, tokens_df, tmp_path_factory):
+    """(input dir, blocks dir, compacted copy of the blocks dir): the edge
+    rows and the generated table as two input files, encoded by
+    encode_job into two blk-* files that compact_blocks folds into one
+    cmp-* file in the copy."""
+    import shutil
+
+    from parquet_python_spark.engine import compact_blocks
+
+    base = tmp_path_factory.mktemp("edges")
+    inp = str(base / "inp")
+    spark.createDataFrame(_EDGE_ROWS, tokens_df.schema).coalesce(1).write.parquet(inp)
+    tokens_df.coalesce(1).write.mode("append").parquet(inp)
+    encode_job(spark, inp, str(base / "out"))
+    blocks = str(base / "out" / "blocks")
+    compacted = str(base / "compacted")
+    shutil.copytree(blocks, compacted)
+    assert compact_blocks(spark, compacted) == {"bins": 1, "files_removed": 2}
+    assert [n for n in os.listdir(compacted) if n.endswith(".parquet")][0].startswith("cmp-")
+    return inp, blocks, compacted
+
+
+@pytest.mark.parametrize("layout", ["blk", "cmp"])
+def test_tokens_readers_edge_cases(spark, edge_dirs, layout):
+    """All four tokens readers return exactly the rows of a Spark filter of
+    the input, typed as DECODED_SCHEMA, over blk-* and compacted cmp-*
+    block files: rows with no tokens, a one-row part, an n_tok window, a
+    token window that a part's zone map keeps but none of its rows meets,
+    and a token window no part meets."""
+    from parquet_python_spark.engine import (
+        DECODED_SCHEMA,
+        decode_blocks_files,
+        decode_blocks_files_pruned,
+        decode_current_blocks,
+    )
+
+    inp, blk, cmp = edge_dirs
+    blocks = blk if layout == "blk" else cmp
+    src = spark.read.parquet(inp)
+    full = _as_sorted_rows(src)
+    for dec in (
+        decode_blocks(spark.read.parquet(blocks)),
+        decode_blocks_files(spark, blocks),
+        decode_current_blocks(spark, inp, blocks),
+    ):
+        assert dec.schema == DECODED_SCHEMA
+        assert _as_sorted_rows(dec) == full
+    for column, lo, hi in _EDGE_WINDOWS:
+        cond = (
+            F.col("n_tok").between(lo, hi) if column == "n_tok"
+            else F.exists("tokens", lambda t: (t >= lo) & (t <= hi))
+        )
+        dec = decode_blocks_files_pruned(spark, blocks, column, lo, hi)
+        assert dec.schema == DECODED_SCHEMA
+        got = _as_sorted_rows(dec)
+        assert got == _as_sorted_rows(src.filter(cond)), (column, lo, hi)
+        if (column, lo) == ("n_tok", 0):
+            assert {r[0] for r in got} == {"e0", "e2"}
+        if (column, lo) == ("tokens", 400):
+            ids = {r[0] for r in got}
+            assert "o0" in ids and not ids & {"g0", "g1", "g2"}
+        if lo == 10**8:
+            assert got == []
+
+
+def test_tokens_decode_kept_part_without_match_exits_early(edge_dirs):
+    """The edge-gap part's tokens zone map keeps the window [400, 600] and
+    none of its rows meets it: the decode of its block rows returns an
+    empty table of DECODED_SCHEMA's Arrow types without decoding any other
+    column, so a corrupt doc_id payload there goes unread."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from parquet_python_spark.engine import (
+        _DECODE_SCHEMA,
+        DECODED_SCHEMA,
+        _tokens_decode,
+        list_input_files,
+    )
+
+    _, blocks, _ = edge_dirs
+    rows = pa.concat_tables(
+        pq.read_table(f, columns=_DECODE_SCHEMA.names + ["stat_min", "stat_max"])
+        for f in list_input_files(blocks)
+    )
+    rows = rows.filter(pc.starts_with(rows.column("part_id"), "edge-gap#"))
+    stats = rows.filter(pc.equal(rows.column("column"), "tokens")).to_pylist()
+    assert [(r["stat_min"], r["stat_max"]) for r in stats] == [(10, 1000)]
+    doc = pc.index(rows.column("column"), "doc_id").as_py()
+    flipped = bytes(b ^ 0xFF for b in rows.column("payload")[doc].as_py())
+    rows = _set_cells(rows, doc, payload=flipped).select(_DECODE_SCHEMA.names)
+    out = _tokens_decode([("tokens", 400, 600)])(rows)
+    assert out.num_rows == 0 and out.schema == to_arrow_schema(DECODED_SCHEMA)
+    with pytest.raises(ValueError, match="checksum mismatch in doc_id"):
+        _tokens_decode()(rows)
+
+
+def test_tokens_decode_refuses_a_part_past_int32_offsets():
+    """A part whose n_tok chunk sums to 2^31 tokens or more raises before
+    its tokens chunk decodes: int32 list offsets would wrap."""
+    import zlib
+
+    import pyarrow.compute as pc
+
+    from parquet_python_spark.codecs import encode_column, params_to_json
+    from parquet_python_spark.engine import (
+        _DECODE_SCHEMA,
+        _encode_partition_table,
+        _tokens_decode,
+    )
+
+    tbl = pa.table({
+        "doc_id": ["a", "b"],
+        "tokens": pa.array([[1], [2]], type=pa.list_(pa.int32())),
+        "n_tok": pa.array([1, 1], type=pa.int32()),
+        "source": ["s", "s"],
+    })
+    rows = _encode_partition_table(tbl, "t", False, "s#x").select(_DECODE_SCHEMA.names)
+    codec, params, payload, _ = encode_column(np.array([2**31 - 1, 1]), "int")
+    rows = _set_cells(
+        rows, pc.index(rows.column("column"), "n_tok").as_py(),
+        codec=codec, params=params_to_json(params), payload=payload,
+        checksum=zlib.crc32(payload),
+    )
+    with pytest.raises(ValueError, match="2\\^31"):
+        _tokens_decode()(rows)

@@ -6,6 +6,8 @@ The reference parses parquet Statistics{min,max} but never consults them
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -371,6 +373,47 @@ def test_filtered_results_outlive_later_calls(spark, monkeypatch):
     assert "MapInArrow" in plan and "Scan parquet" not in plan
     for node in ("FlatMapGroupsInArrow", "Exchange", "InMemoryTableScan"):
         assert node not in plan
+
+
+def test_filtered_driver_answers_leave_no_block_dir(spark, monkeypatch):
+    """A roundtrip_filtered call answered on the driver returns a local
+    relation that reads no file, and removes its block directory before
+    returning: five identical small calls leave no pps_rtf_* directory.
+    A call that takes the job path (a driver-decode budget of 0 rows)
+    keeps its directory, and after five later calls its result still
+    collects the rows of a plain Spark filter."""
+    import glob
+    import tempfile
+
+    import parquet_python_spark.operators.generic_codec as gc
+    from parquet_python_spark.operators.generic_codec import roundtrip_filtered
+
+    def block_dirs():
+        return set(glob.glob(os.path.join(tempfile.gettempdir(), "pps_rtf_*")))
+
+    df = spark.range(3_000).select(
+        F.col("id").alias("k"), (F.col("id") % 17).alias("v")
+    )
+    kinds = {"k": "int", "v": "int"}
+    preds = [("eq", "k", 1_234)]
+    exp = sorted(map(tuple, df.filter(F.col("k") == 1_234).collect()))
+
+    with monkeypatch.context() as m:
+        m.setattr(gc, "_DRIVER_DECODE_BUDGET", 0)
+        before = block_dirs()
+        job = roundtrip_filtered(df, "k", kinds, preds)
+        (job_dir,) = block_dirs() - before
+    assert "MapInArrow" in job._jdf.queryExecution().executedPlan().toString()
+
+    before = block_dirs()
+    for _ in range(5):
+        out = roundtrip_filtered(df, "k", kinds, preds)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "MapInArrow" not in plan, plan
+        assert sorted(map(tuple, out.collect())) == exp
+    assert block_dirs() == before
+    assert os.path.isdir(job_dir)
+    assert sorted(map(tuple, job.collect())) == exp
 
 
 # ---------------------------------------------- rows inside large chunks

@@ -2,7 +2,8 @@
 only tests reach.
 
 Scope: every top-level function and class of ``engine.py``,
-``operators/generic_codec.py`` and ``codecs/*.py``, checked against the
+``operators/generic_codec.py``, ``codecs/*.py``, ``tokengen.py``,
+``session.py`` and ``_daemon.py``, checked against the
 non-test source (the package, ``jobs/``, ``perfbench/``, ``tools/`` and
 ``__spark_entry__.py``).  Both rules read the AST, so docstrings,
 comments and ``__all__`` strings name nothing:
@@ -30,6 +31,9 @@ CORE = [
     PKG / "engine.py",
     PKG / "operators" / "generic_codec.py",
     *sorted((PKG / "codecs").glob("*.py")),
+    PKG / "tokengen.py",
+    PKG / "session.py",
+    PKG / "_daemon.py",
 ]
 
 
